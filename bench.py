@@ -193,14 +193,19 @@ def main() -> None:
     # median marks a throttled measurement window (r8's 0.132 s vs the
     # 0.018-0.024 s history was the tell) — flag it IN the artifact so a
     # bad window can never again read as a code regression. History =
-    # spark_sched_floor_sec of the committed driver BENCH_r*.json files.
+    # spark_sched_floor_sec of the committed BENCH_r*.json files
+    # recorded on the same core count as this run (a floor measured on
+    # another local[N], like the 8-core companions, is another series).
     floor_hist: list[float] = []
     try:
         import glob
         here = os.path.dirname(os.path.abspath(__file__))
-        for fp in sorted(glob.glob(os.path.join(here, "BENCH_r0*.json"))):
+        cpus = spark.sparkContext.defaultParallelism
+        for fp in sorted(glob.glob(os.path.join(here, "BENCH_r*.json"))):
             with open(fp) as fh:
                 doc = json.load(fh)
+            if doc.get("cpus") != cpus:
+                continue
             parsed = doc.get("parsed") or doc
             v = parsed.get("spark_sched_floor_sec")
             if isinstance(v, (int, float)):

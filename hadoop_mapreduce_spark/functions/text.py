@@ -11,6 +11,10 @@ exactly (reference WordCount.java:76-79):
     empty tokens.
 
 Everything here stays inside whole-stage codegen (no Python UDFs).
+
+The DuckDB twins (``NORMALIZE_SQL``, ``TOKS_SQL`` and the whitespace
+helpers) sit beside the Spark forms so the registry's oracles tokenize
+exactly as the operators do.
 """
 
 from __future__ import annotations
@@ -20,6 +24,27 @@ from pyspark.sql import functions as F
 
 # the reference's normalisation regex, verbatim (WordCount.java:76)
 _NORMALIZE_RE = r"[^a-zA-Z0-9\s]+"
+
+# DuckDB twins. Java's \s (the Spark side's) includes \x0B; RE2's does
+# not, so every SQL form spells the Java class out (found by
+# tests/test_differential_fuzz.py on a \x0B document).
+_WS_CLASS = r"\t\n\x0B\f\r "
+_WS_SQL = f"[{_WS_CLASS}]+"
+NORMALIZE_SQL = f"lower(regexp_replace(text, '[^a-zA-Z0-9{_WS_CLASS}]+', '', 'g'))"
+
+
+def split_ws_sql(expr: str) -> str:
+    """DuckDB: split ``expr`` on runs of Java whitespace."""
+    return f"string_split_regex({expr}, '{_WS_SQL}')"
+
+
+def collapse_ws_sql(expr: str) -> str:
+    """DuckDB: replace each run of Java whitespace in ``expr`` by a space."""
+    return f"regexp_replace({expr}, '{_WS_SQL}', ' ', 'g')"
+
+
+# DuckDB twin of tokenize(normalize_text(text)): a list of non-empty tokens
+TOKS_SQL = f"list_filter({split_ws_sql(NORMALIZE_SQL)}, t -> t <> '')"
 
 
 def normalize_text(col: Column | str) -> Column:

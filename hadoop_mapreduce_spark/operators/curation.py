@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hadoop_mapreduce_spark.functions.portable import h60
 from hadoop_mapreduce_spark.functions.timeutil import wall_epoch_us
 from hadoop_mapreduce_spark.sources.tables import load_table
 
@@ -96,10 +97,7 @@ def dataset_split(spark: SparkSession, sf_dir: str,
     assignments. Returns per-split document and token counts.
     """
     docs = _t(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("long") % 100
-    )
+    bucket = h60(F.col("doc_id").cast("string")) % 100
     split = (
         F.when(bucket < val_pct, F.lit("val"))
         .when(bucket < val_pct + test_pct, F.lit("test"))
@@ -156,8 +154,8 @@ def seq_packing(spark: SparkSession, sf_dir: str,
     sized = docs.select(
         "source",
         "doc_id",
-        (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
-                16, 10).cast("long") % n_buckets).cast("int").alias("bucket"),
+        (h60(F.col("doc_id").cast("string")) % n_buckets).cast("int")
+        .alias("bucket"),
         F.least(
             F.size(F.split(F.trim("text"), r"\s+")).cast("long"),
             F.lit(max_tokens),
@@ -271,6 +269,8 @@ def split_leakage_guard(spark: SparkSession, sf_dir: str,
     engines).
     """
     from hadoop_mapreduce_spark.operators.dedup import (
+        _drop_view,
+        _temp_views,
         connected_components_star,
         minhash_pairs_unsorted,
     )
@@ -302,12 +302,8 @@ def split_leakage_guard(spark: SparkSession, sf_dir: str,
     # star CC, not label propagation: O(log n) rounds vs O(diameter) —
     # both produce min-reachable component ids (property-tested equal)
     comp = connected_components_star(docs, pairs, edges_canonical=True)  # (doc_id, comp)
-
-    def bucket(col):
-        return (
-            F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10)
-            .cast("long") % 10
-        )
+    naive = h60(F.col("doc_id").cast("string")) % 10
+    grouped = h60(F.col("comp").cast("string")) % 10
 
     # Persisted: the audit references the assignment THREE times (both
     # endpoints of every pair + the doc-level counts agg) and comp's
@@ -316,11 +312,9 @@ def split_leakage_guard(spark: SparkSession, sf_dir: str,
     # cache of one (doc_id, 2 splits, comp) row per doc.
     assigned = scoped_persist(comp.select(
         "doc_id",
-        F.when(bucket(F.col("doc_id")) < 8, "train")
-        .when(bucket(F.col("doc_id")) < 9, "val")
+        F.when(naive < 8, "train").when(naive < 9, "val")
         .otherwise("test").alias("naive_split"),
-        F.when(bucket(F.col("comp")) < 8, "train")
-        .when(bucket(F.col("comp")) < 9, "val")
+        F.when(grouped < 8, "train").when(grouped < 9, "val")
         .otherwise("test").alias("grouped_split"),
         "comp",
     ))
@@ -339,8 +333,8 @@ def split_leakage_guard(spark: SparkSession, sf_dir: str,
     # unchanged: the old counts aggregate already paid countDistinct's
     # Expand over the corpus-sized assignment; the union only adds the
     # tiny pair rows to that stream.
-    va = f"__slg_assigned_{id(assigned) & 0xffff:x}"
-    vp = f"__slg_pairs_{id(pairs) & 0xffff:x}"
+    n = next(_temp_views)
+    va, vp = f"__slg_assigned_{n}", f"__slg_pairs_{n}"
     assigned.createOrReplaceTempView(va)
     pairs.createOrReplaceTempView(vp)
     out = spark.sql(f"""
@@ -372,11 +366,10 @@ def split_leakage_guard(spark: SparkSession, sf_dir: str,
                    0L) AS grouped_leak_pairs
         FROM u
     """)
-    for v in (va, vp):
-        try:
-            spark.catalog.dropTempView(v)
-        except Exception:  # noqa: BLE001 — view is a naming handle only
-            pass
+    # spark.sql analysed the plan eagerly, so the views can go before
+    # the action; under Spark Connect (lazy analysis) they could not.
+    _drop_view(spark, va)
+    _drop_view(spark, vp)
     return out
 
 
@@ -409,10 +402,7 @@ def memorization_novelty(spark: SparkSession, sf_dir: str, n: int = 5,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("long") % 100
-    )
+    bucket = h60(F.col("doc_id").cast("string")) % 100
     split = (
         F.when(bucket < val_pct, F.lit("val"))
         .when(bucket < val_pct + test_pct, F.lit("test"))
@@ -623,8 +613,7 @@ def logreg_train_hashed(labeled: DataFrame, dim: int = 64,
         tok_counts
         .select(
             "doc_id", "c",
-            (F.conv(F.substring(F.md5("tk"), 1, 15), 16, 10)
-             .cast("long") % dim).alias("b"))
+            (h60("tk") % dim).alias("b"))
         .groupBy("doc_id", "b").agg(F.sum("c").alias("cb"))
         .join(ydocs.select("doc_id", "n"), "doc_id")
         .select("doc_id", "b", (F.col("cb") / F.col("n")).alias("x")))
@@ -1057,8 +1046,8 @@ def packing_boundary_audit(spark: SparkSession, sf_dir: str,
     sized = docs.select(
         "source",
         "doc_id",
-        (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
-                16, 10).cast("long") % n_buckets).cast("int").alias("bucket"),
+        (h60(F.col("doc_id").cast("string")) % n_buckets).cast("int")
+        .alias("bucket"),
         F.least(
             F.size(F.split(F.trim("text"), r"\s+")).cast("long"),
             F.lit(max_tokens),
@@ -1234,9 +1223,7 @@ def bootstrap_ci_quality(spark: SparkSession, sf_dir: str,
         F.explode(F.array(*[F.lit(b) for b in range(n_boot)])).alias("b"),
     ).withColumn(
         "u",
-        F.conv(F.substring(F.md5(F.concat_ws(":", F.col("b"),
-                                             F.col("doc_id"))), 1, 15),
-               16, 10).cast("long"),
+        h60(F.concat_ws(":", F.col("b"), F.col("doc_id"))),
     ).withColumn(
         "w",
         sum((F.col("u") >= F.lit(t)).cast("long") for t in _POISSON_T),
@@ -1821,8 +1808,7 @@ def experiment_srm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     and every downstream metric is garbage) and the 2x2 conversion
     chi-square (is the observed lift distinguishable from noise).
 
-    Exactness: assignment is md5-60bit(user_id) % 2 (the dataset_split
-    convention — deterministic, identical on both engines); both
+    Exactness: assignment is h60(user_id) % 2; both
     chi-squares are exact-integer micro-units, the 2x2 statistic
     N*(ad-bc)^2 / (row and column margins) carried in DECIMAL(38,0)
     (HUGEINT on the oracle) because (ad-bc)^2 alone overflows int64.
@@ -1832,9 +1818,7 @@ def experiment_srm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast. Events never shuffle twice.
     """
     ev = load_table(spark, sf_dir, "events")
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    h = h60(F.col("user_id").cast("string"))
     per_user = ev.groupBy("user_id").agg(
         F.max((F.col("event_type") == "purchase").cast("long"))
         .alias("conv"))
@@ -1906,9 +1890,7 @@ def kfold_strata_audit(spark: SparkSession, sf_dir: str,
     the rollup run on |strata| * k metadata-sized rows.
     """
     docs = load_table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    h = h60(F.col("doc_id").cast("string"))
     counts = (
         docs.select("lang", "source",
                     F.pmod(h, F.lit(n_folds)).alias("fold"))
@@ -1971,9 +1953,7 @@ def experiment_peeking_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     day = (wall_epoch_us("ts") / F.lit(86_400_000_000)).cast("long")
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    h = h60(F.col("user_id").cast("string"))
     per_user = (
         ev.select("user_id", day.alias("day"), "event_type")
         .groupBy("user_id")
@@ -2072,9 +2052,7 @@ def ab_cuped_adjustment(spark: SparkSession, sf_dir: str,
     """
     ev = load_table(spark, sf_dir, "events")
     day = (wall_epoch_us("ts") / F.lit(86_400_000_000)).cast("long")
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    h = h60(F.col("user_id").cast("string"))
     v_us = F.round(F.col("value") * 1e6).cast("long")
     base = ev.select("user_id", day.alias("day"), v_us.alias("v"))
     d0 = base.agg(F.min("day").alias("d0"))

@@ -32,22 +32,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hadoop_mapreduce_spark.functions.portable import h60
 from hadoop_mapreduce_spark.functions.text import (
     ngrams_from_tokens,
     normalize_text,
     tokenize,
 )
 from hadoop_mapreduce_spark.sources.tables import load_table
-
-
-def _md5_bucket(col, mod: int):
-    """Engine-portable deterministic bucket in [0, mod): first 15 hex
-    chars of md5 (< 2^60, fits a signed long on both engines) mod n.
-    Matches curation.dataset_split's oracle convention exactly."""
-    return (
-        F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10)
-        .cast("long") % mod
-    )
 
 
 def decontaminate_ngram(spark: SparkSession, sf_dir: str,
@@ -272,7 +263,7 @@ def dsir_log_weights_from_tokens(toks: DataFrame, bench_mod: int = 20,
     # token strings they replace.
     tok = scoped_persist(toks.select(
         "doc_id", "source", F.explode("t").alias("w"),
-    ).select("doc_id", "source", _md5_bucket(F.col("w"), n_buckets).alias("f")))
+    ).select("doc_id", "source", (h60("w") % n_buckets).alias("f")))
     is_bench = F.col("doc_id") % bench_mod == 0
     # model counts: one uniform feature-keyed aggregation each; both
     # collapse to <= n_buckets rows before any join
@@ -377,7 +368,7 @@ def domain_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(idx < 15, F.lit(25))
         .otherwise(F.lit(10))
     )
-    kept = _md5_bucket(F.col("doc_id"), 100) < rate
+    kept = h60(F.col("doc_id").cast("string")) % 100 < rate
     return (
         docs.select(
             "source", "n_chars",
@@ -457,7 +448,7 @@ def global_shuffle_order(spark: SparkSession, sf_dir: str,
     keyed = docs.select(
         "doc_id",
         F.md5(F.col("doc_id").cast("string")).alias("k"),
-        _md5_bucket(F.col("doc_id"), n_shards).alias("shard"),
+        (h60(F.col("doc_id").cast("string")) % n_shards).alias("shard"),
     )
     w = Window.partitionBy("shard").orderBy("k")
     return (
@@ -497,7 +488,7 @@ def shard_order_runs_audit(spark: SparkSession, sf_dir: str,
     keyed = docs.select(
         "doc_id", "source",
         F.md5(F.col("doc_id").cast("string")).alias("k"),
-        _md5_bucket(F.col("doc_id"), n_shards).alias("shard"),
+        (h60(F.col("doc_id").cast("string")) % n_shards).alias("shard"),
     )
     w = Window.partitionBy("shard").orderBy("k", "doc_id")
     obs = (
@@ -635,10 +626,9 @@ def sample_weighted(spark: SparkSession, sf_dir: str,
     token volume; every pretraining-mix recipe weights by tokens).
 
     Determinism and engine portability: u is derived from the doc's own
-    key — u = (md5(doc_id) first-15-hex mod 2^20 + 0.5) / 2^20 — the
-    registry's md5-bucket convention (never engine-native hashes), so
-    any engine re-derives the same draw and adding data never reshuffles
-    existing keys. The selection key is ln(u)/w (monotone in u^(1/w),
+    key — u = (h60(doc_id) mod 2^20 + 0.5) / 2^20, never an
+    engine-native hash — so any engine re-derives the same draw and
+    adding data never reshuffles existing keys. The selection key is ln(u)/w (monotone in u^(1/w),
     avoids pow), ROUNDED to 8 dp before ranking with a doc_id tie-break:
     both engines' ln() agree to ~1 ulp and the rounding collapses that
     below the comparison, the same convention as dsir_importance_sample.
@@ -652,8 +642,8 @@ def sample_weighted(spark: SparkSession, sf_dir: str,
     docs = load_table(spark, sf_dir, "documents")
     w = F.size(tokenize(normalize_text(F.col("text")))).cast("double")
     u = (
-        (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
-                16, 10).cast("long") % (1 << 20)).cast("double") + 0.5
+        (h60(F.col("doc_id").cast("string")) % (1 << 20)).cast("double")
+        + 0.5
     ) / float(1 << 20)
     key = F.round(F.log(u) / w, 8)
     return (

@@ -30,20 +30,19 @@ anywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hadoop_mapreduce_spark.functions.portable import h60
 from hadoop_mapreduce_spark.sources.tables import load_table
 
-# 60-bit hashes: 15 hex chars always fit a signed int64 in every engine.
-_HEX_LEN = 15
-
-# Session-scoped temp-view names for the star-CC per-round SQL builds —
-# a counter (not a fixed name) so two CC invocations in one session can
-# never collide on the handle.
+# Session-scoped temp-view names for operators that build SQL over a
+# view handle (star-CC rounds, the leakage-guard audit) — a counter, not
+# a fixed name or an id(), so two invocations in one session can never
+# collide on the handle.
 import itertools as _itertools
 
-_cc_star_views = _itertools.count()
+_temp_views = _itertools.count()
 
 
 def _drop_view(spark: SparkSession, name: str) -> None:
@@ -52,15 +51,6 @@ def _drop_view(spark: SparkSession, name: str) -> None:
         spark.catalog.dropTempView(name)
     except Exception:  # noqa: BLE001 — cleanup must never mask results
         pass
-
-
-def _h60(col: Column, seed: int | None = None) -> Column:
-    """Deterministic 60-bit hash of a string column (md5-derived).
-
-    seed=None hashes the value directly; an integer seed prefixes the
-    value so hash families {h_i} are independent."""
-    keyed = col if seed is None else F.concat(F.lit(f"{seed}:"), col)
-    return F.conv(F.substring(F.md5(keyed), 1, _HEX_LEN), 16, 10).cast("long")
 
 
 # --------------------------------------------------------------------------
@@ -454,7 +444,7 @@ def simhash_fingerprints(docs: DataFrame, id_col: str = "doc_id",
 
     toks = F.array_distinct(tokenize(normalize_text(F.col(text_col))))
     th = docs.select(F.col(id_col).alias("id"), F.explode(toks).alias("tk")).select(
-        "id", _h60(F.col("tk")).alias("h")
+        "id", h60(F.col("tk")).alias("h")
     )
     # Whole-expression SQL strings: one py4j round-trip per aggregate
     # instead of 4-5 per Column-API node (a 60-term Column-API chain
@@ -1070,7 +1060,7 @@ def connected_components_star(nodes: DataFrame, edges: DataFrame,
     # parse produces the IDENTICAL plan (same window-min passes, same
     # single end-of-round distinct, same one-aggregation stop test) in
     # one py4j call.
-    view = f"__cc_star_{next(_cc_star_views)}"
+    view = f"__cc_star_{next(_temp_views)}"
     # --- large-star over the symmetric neighbourhood: every node u
     #     attaches its strictly-larger neighbours v to
     #     m(u) = min(Γ(u) ∪ {u}); no mid-round distinct — duplicate
@@ -1455,7 +1445,7 @@ def dedup_span_chunks(spark: SparkSession, sf_dir: str,
             )
         ).alias("chunk_idx", "chunk"),
     ).select(
-        "doc_id", "chunk_idx", "chunk", _h60(F.col("chunk")).alias("h"))
+        "doc_id", "chunk_idx", "chunk", h60(F.col("chunk")).alias("h"))
     w = Window.partitionBy("h").orderBy("doc_id", "chunk_idx")
     # flag winners instead of filtering them: every chunk row then flows
     # into ONE doc-keyed aggregate that counts totals, counts keepers,
@@ -1871,7 +1861,7 @@ def _cw_pair_base(spark: SparkSession, sf_dir: str,
             F.sequence(F.lit(1), F.size("__t") - F.lit(shingle_k - 1)),
             lambda i: F.concat_ws(" ", F.slice("__t", i, shingle_k)),
         )).alias("s"),
-    ).select("id", _h60(F.col("s")).alias("hs")).distinct()
+    ).select("id", h60(F.col("s")).alias("hs")).distinct()
     P = MINHASH_CW_MOD
     u = F.col("hs") % F.lit(P)
     mins = [F.min((F.lit(a) * u + F.lit(b)) % F.lit(P)).alias(f"m{i}")
@@ -2333,9 +2323,9 @@ def minhash_bbit_estimate(spark: SparkSession, sf_dir: str,
     signature store (`minhash_accuracy_audit` audits full-width
     signatures; this is the compressed regime).
 
-    Engine-portable by construction: the base hash is the repo's 60-bit
-    md5 prefix reduced to 30 bits, the 32-function family is integer
-    universal hashing ((x·A_i + B_i) mod 2^31−1, constants above) —
+    Engine-portable by construction: the base hash is h60 reduced to 30
+    bits, the 32-function family is integer universal hashing
+    ((x·A_i + B_i) mod 2^31−1, constants above) —
     ONE md5 per shingle, no engine-native hash — so signatures,
     collision counts, and both ratio columns are bit-identical BIGINTs.
     The estimator numerator clamps at 0 BEFORE the integer division
@@ -2359,8 +2349,7 @@ def minhash_bbit_estimate(spark: SparkSession, sf_dir: str,
         .groupBy(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    hv30 = (F.conv(F.substring(F.md5("s"), 1, 15), 16, 10)
-            .cast("long") % F.lit(1 << 30)).alias("x")
+    hv30 = (h60("s") % F.lit(1 << 30)).alias("x")
     hashed = sh.select("id", hv30)
     mask = (1 << b) - 1
     # ALL 32 per-function mins in ONE aggregation (the
@@ -2572,9 +2561,10 @@ def dedup_containment_prefix(spark: SparkSession, sf_dir: str,
 
 def hash_width_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Governance of the engine's own 60-bit md5-prefix hash convention
-    (`_h60`): over the corpus's distinct token-3-shingles, count the
-    actual hash collisions at prefix widths 60/40/32/20 bits against
-    the birthday-bound expectation n(n-1)/2^(b+1) — the measurement
+    (`functions.portable.h60`): over the corpus's distinct
+    token-3-shingles, count the actual hash collisions at prefix widths
+    60/40/32/20 bits against the birthday-bound expectation
+    n(n-1)/2^(b+1) — the measurement
     that justifies (or retires) a hash width before a petabyte dedup
     run bets its candidate generation on it. A width whose measured
     collisions track the birthday term is healthy; excess collisions

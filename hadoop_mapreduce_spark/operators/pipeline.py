@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoop_mapreduce_spark.functions.portable import h60
 from hadoop_mapreduce_spark.functions.text import normalize_text, tokenize
 from hadoop_mapreduce_spark.operators.dedup import dedup_ngram_jaccard
 from hadoop_mapreduce_spark.operators.textstats import text_quality
@@ -118,18 +119,11 @@ def pipeline_pretrain(spark: SparkSession, sf_dir: str,
         F.when(idx < 5, F.lit(100)).when(idx < 10, F.lit(50))
         .when(idx < 15, F.lit(25)).otherwise(F.lit(10))
     )
-    mix_bucket = (
-        F.conv(F.substring(
-            F.md5(F.concat(F.lit("mix:"), F.col("doc_id").cast("string"))),
-            1, 15), 16, 10).cast("long") % 100
-    )
+    mix_bucket = h60(F.col("doc_id").cast("string"), seed="mix") % 100
     d3 = d2.where(mix_bucket < rate)
 
     # 5. split + ledger
-    split_bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
-               16, 10).cast("long") % 100
-    )
+    split_bucket = h60(F.col("doc_id").cast("string")) % 100
     split = (
         F.when(split_bucket < 10, F.lit("val"))
         .when(split_bucket < 20, F.lit("test"))
@@ -267,8 +261,7 @@ def pipeline_pretrain_scale(spark: SparkSession, sf_dir: str,
                 f" s -> concat_ws(' ', slice(t, s, {chunk_tokens})))"
             )).alias("chunk_idx", "chunk"))
         .select("doc_id", "source", "chunk_idx", "chunk",
-                F.conv(F.substring(F.md5("chunk"), 1, 15), 16, 10)
-                .cast("long").alias("h"))
+                h60("chunk").alias("h"))
     )
     w = Window.partitionBy("h").orderBy("doc_id", "chunk_idx")
     rebuilt = (

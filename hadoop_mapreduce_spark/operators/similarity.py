@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hadoop_mapreduce_spark.functions.portable import h60
 from hadoop_mapreduce_spark.functions.vectors import cosine_similarity, dot, l2_norm, l2_sq_dist
 from hadoop_mapreduce_spark.sources.tables import load_table
 
@@ -325,9 +326,7 @@ def _portable_kmeans_assign(emb: DataFrame, n_lists: int = 16,
                " x -> CAST(CAST(floor(x * 1000000.0 + 0.5) AS BIGINT)"
                " AS DOUBLE))").alias("e"),
     )
-    h = F.conv(
-        F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    h = h60(F.col("vec_id").cast("string"))
     centroids = (
         q.withColumn("b", F.pmod(h, F.lit(n_lists)))
         .groupBy("b")

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hadoop_mapreduce_spark.functions.portable import h60
+
 
 def _salt_of(*cols: Column | str, n_salts: int) -> Column:
     """Deterministic salt in [0, n_salts) from row content — xxhash64 so
@@ -179,8 +181,7 @@ def join_skew_audit(spark, sf_dir: str, n_parts: int = 32) -> DataFrame:
         keys = ev.groupBy(F.col(col).cast("string").alias("k")).agg(
             F.count(F.lit(1)).alias("c"))
         parts = keys.select(
-            (F.conv(F.substring(F.md5("k"), 1, 15), 16, 10).cast("long")
-             % n_parts).alias("partition_id"),
+            (h60("k") % n_parts).alias("partition_id"),
             "c",
         ).groupBy("partition_id").agg(
             F.count(F.lit(1)).alias("n_keys"),
@@ -286,17 +287,15 @@ def partition_skew_plan(spark, sf_dir: str, n_parts: int = 32):
     per-BUCKET — the post-hash view the shuffle actually schedules, so
     it also catches hash-collision pileups that per-key counts miss.
 
-    Portable + exact: bucket = md5-60bit(user_id) % n_parts (identical
-    integers on both engines), loads and factors in integer micro-units.
+    Portable + exact: bucket = h60(user_id) % n_parts, loads and factors
+    in integer micro-units.
     Scale: one groupBy(user_id) partial-agg pass, one n_parts-bounded
     rollup — metadata-sized output regardless of corpus size.
     """
     from hadoop_mapreduce_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events")
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    h = h60(F.col("user_id").cast("string"))
     per_key = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
     per_bucket = (
         per_key.select(F.pmod(h, F.lit(n_parts)).alias("bucket"), "c")

@@ -12,6 +12,13 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hadoop_mapreduce_spark.functions.portable import (
+    h60,
+    hll_estimate,
+    hll_estimate_col,
+    hll_partials,
+    hll_rho,
+)
 from hadoop_mapreduce_spark.functions.text import normalize_text, tokenize
 from hadoop_mapreduce_spark.sources.tables import load_table
 
@@ -164,9 +171,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str, kgram: int = 8) -> DataFra
     ).select(
         "doc_id",
         "content_md5",
-        F.conv(F.substring(F.md5(F.substring("compact", F.col("i"), F.lit(kgram))), 1, 15), 16, 10)
-        .cast("long")
-        .alias("h"),
+        h60(F.substring("compact", F.col("i"), F.lit(kgram))).alias("h"),
     )
     return (
         kg.groupBy("doc_id", "content_md5")
@@ -220,9 +225,8 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str, depth: int = 4,
     overcounts on collision, never undercounts).  The top-k candidates
     come from the distinct-term side joined against the sketch.
 
-    Hash-paired since r7: the row-d cell index is md5-derived
-    (conv(md5("d:term")[0:15]) % width — the repo's engine-portable
-    bucket convention), so the DuckDB oracle rebuilds the IDENTICAL
+    Hash-paired since r7: the row-d cell index is h60("d:term") % width
+    (functions/portable.py), so the DuckDB oracle rebuilds the IDENTICAL
     sketch and the estimates — integer counts — hash-match exactly.
     (The previous xxhash64 cells were JVM-only, which is what kept this
     rows-only; md5 costs ~2x per occurrence but the sketch aggregation,
@@ -231,9 +235,7 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str, depth: int = 4,
     docs = load_table(spark, sf_dir, "documents")
 
     def cell(d):
-        return (F.conv(F.substring(F.md5(
-            F.concat_ws(":", F.lit(str(d)), F.col("term"))), 1, 15), 16, 10)
-            .cast("long") % width)
+        return h60(F.concat_ws(":", F.lit(str(d)), F.col("term"))) % width
 
     toks = docs.select(F.explode(_tokens("text")).alias("term"))
     cells = toks.select(
@@ -466,8 +468,7 @@ def doc_hash_embedding(spark: SparkSession, sf_dir: str,
     tok = docs.select("doc_id", F.explode(_tokens("text")).alias("tk"))
     bucketed = tok.select(
         "doc_id",
-        (F.conv(F.substring(F.md5("tk"), 1, 15), 16, 10)
-         .cast("long") % dim).alias("b"),
+        (h60("tk") % dim).alias("b"),
     )
     cells = bucketed.groupBy("doc_id", "b").agg(
         F.count(F.lit(1)).alias("v"))
@@ -1040,19 +1041,6 @@ def kneser_ney_quality(spark: SparkSession, sf_dir: str,
     )
 
 
-# HLL constants shared by hll_portable_union and its DuckDB oracle.
-# The estimator is evaluated from EXACT integers (register sums scaled
-# by 2^49) so the only floating-point steps are one division, one ln,
-# and the final half-up rounding — identical in any IEEE-754 engine.
-# ALPHA_SCALED = alpha_m * m^2 * 2^49 for m=4096, precomputed ONCE in
-# Python and embedded as the same literal on both engines so no engine
-# re-derives it with its own operation order.
-HLL_P = 12
-HLL_M = 1 << HLL_P                    # 4096 buckets
-HLL_POW49 = 1 << 49                   # 2^49 — the register scale
-HLL_ALPHA_SCALED = 6.810691763087074e+21  # 0.7213/(1+1.079/m) * m^2 * 2^49
-
-
 def hll_portable_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine-portable HyperLogLog: distinct-token estimates per source
     plus a '__all__' row whose sketch is the UNION (bucket-wise register
@@ -1063,13 +1051,8 @@ def hll_portable_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-derived integer arithmetic, so the DuckDB oracle rebuilds the
     bit-identical registers and the estimates match exactly.
 
-    Register construction: h = 60-bit md5 prefix; bucket = h mod 2^12;
-    rho = leading-zero count of the remaining 48 bits + 1 (via
-    length(bin(v)), identical in Spark and DuckDB); register = max rho.
-    Estimation avoids order-dependent float sums: sum(2^-r) is computed
-    as the EXACT BIGINT sum(2^(49-r)) (max 4096*2^49 = 2^61, no
-    overflow), and linear counting applies below 2.5m when empty
-    buckets exist — both branches are single float ops over exact ints.
+    Registers and estimator are the portable HLL of
+    functions/portable.py.
 
     100 TB shape: one token-keyed exchange produces (source, bucket,
     max rho) — 4096 rows per source regardless of data size; the union
@@ -1087,33 +1070,17 @@ def hll_portable_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collapses the token shuffle map-side.
     tok = docs.select("source", F.explode(_tokens("text")).alias("tk")) \
         .distinct()
-    hv = F.conv(F.substring(F.md5("tk"), 1, 15), 16, 10).cast("long")
-    rb = tok.select("source", hv.alias("hv")).select(
-        "source",
-        (F.col("hv") % HLL_M).alias("bucket"),
-        F.expr(f"CASE WHEN hv div {HLL_M} = 0 THEN 49 "
-               f"ELSE 49 - length(bin(hv div {HLL_M})) END").alias("rho"),
-    )
+    rb = hll_rho(tok, ["source"], "tk")
     regs = rb.groupBy("source", "bucket").agg(F.max("rho").alias("r"))
     uregs = (regs.groupBy("bucket").agg(F.max("r").alias("r"))
              .select(F.lit("__all__").alias("source"), "bucket", "r"))
     allregs = regs.unionByName(uregs)
-    est = allregs.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_hit"),
-        F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), CAST(49 - r AS INT))"))
-        .alias("s_part"),
-    )
-    s_scaled = (F.col("s_part")
-                + (F.lit(HLL_M) - F.col("n_hit")) * F.lit(HLL_POW49))
-    raw = F.lit(HLL_ALPHA_SCALED) / s_scaled.cast("double")
-    v_empty = F.lit(HLL_M) - F.col("n_hit")
-    lc = F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / v_empty.cast("double"))
-    est_val = F.when((v_empty > 0) & (raw <= F.lit(2.5 * HLL_M)), lc).otherwise(raw)
+    est = allregs.groupBy("source").agg(*hll_partials(F.lit(1)))
     return (
         est.select(
             "source",
             F.col("n_hit").cast("long").alias("n_buckets_hit"),
-            F.floor(est_val + F.lit(0.5)).cast("long").alias("est_distinct"),
+            hll_estimate_col().alias("est_distinct"),
         )
         .orderBy("source")
     )
@@ -1995,9 +1962,7 @@ def vocab_growth_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     from exact BIGINT totals, the only float, 6-dp floored.
     """
     docs = load_table(spark, sf_dir, "documents")
-    bucket = (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")),
-                                 1, 15), 16, 10)
-              .cast("long") % 16)
+    bucket = h60(F.col("doc_id").cast("string")) % 16
     toks = tokenize(normalize_text(F.col("text")))
     base = docs.select(bucket.alias("b"), toks.alias("t"))
     per_bucket = base.groupBy("b").agg(
@@ -2561,10 +2526,9 @@ def hll_intersection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     compound; small true intersections can even go negative) instead
     of assuming it away.
 
-    Registers, estimator and the e6 integer conventions are byte-
-    identical to `hll_portable_union` (60-bit md5, exact 2^(49-r)
-    partials, linear counting under 2.5m), so the DuckDB oracle
-    replays everything exactly.
+    Registers and estimator are the portable HLL of
+    functions/portable.py, so the DuckDB oracle replays everything
+    exactly.
     """
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("source", F.explode(_tokens("text")).alias("tk")) \
@@ -2581,35 +2545,10 @@ def hll_intersection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.col("b.source").alias("s2"))
         .agg(F.count(F.lit(1)).cast("long").alias("exact_common"))
     )
-    hv = F.conv(F.substring(F.md5("tk"), 1, 15), 16, 10).cast("long")
-    rb = tok.select("source", hv.alias("hv")).select(
-        "source",
-        (F.col("hv") % HLL_M).alias("bucket"),
-        F.expr(f"CASE WHEN hv div {HLL_M} = 0 THEN 49 "
-               f"ELSE 49 - length(bin(hv div {HLL_M})) END").alias("rho"),
-    )
-    regs = scoped_persist(
-        rb.groupBy("source", "bucket").agg(F.max("rho").alias("r")))
-
-    def estimate(grouped: DataFrame, keys: list) -> DataFrame:
-        est = grouped.groupBy(*keys).agg(
-            F.count("r").alias("n_hit"),
-            F.sum(F.expr(
-                "shiftleft(CAST(1 AS BIGINT), CAST(49 - r AS INT))"))
-            .alias("s_part"),
-        )
-        s_scaled = (F.col("s_part")
-                    + (F.lit(HLL_M) - F.col("n_hit")) * F.lit(HLL_POW49))
-        raw = F.lit(HLL_ALPHA_SCALED) / s_scaled.cast("double")
-        v_empty = F.lit(HLL_M) - F.col("n_hit")
-        lc = (F.lit(float(HLL_M))
-              * F.log(F.lit(float(HLL_M)) / v_empty.cast("double")))
-        ev = F.when((v_empty > 0) & (raw <= F.lit(2.5 * HLL_M)), lc) \
-            .otherwise(raw)
-        return est.select(
-            *keys, F.floor(ev + F.lit(0.5)).cast("long").alias("est"))
-
-    singles = estimate(regs.select("source", "r"), ["source"])
+    regs = scoped_persist(hll_rho(tok, ["source"], "tk")
+                          .groupBy("source", "bucket")
+                          .agg(F.max("rho").alias("r")))
+    singles = hll_estimate(regs.select("source", "r"), ["source"])
     # union registers per pair: stamp each side's registers with the
     # pair key, then one bucket-wise max — buckets hit by either side
     # survive, the full-outer semantics without a full-outer join
@@ -2626,7 +2565,7 @@ def hll_intersection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s1", "s2", "bucket", "r")
     pair_regs = side1.unionByName(side2) \
         .groupBy("s1", "s2", "bucket").agg(F.max("r").alias("r"))
-    unions = estimate(pair_regs.select("s1", "s2", "r"), ["s1", "s2"])
+    unions = hll_estimate(pair_regs.select("s1", "s2", "r"), ["s1", "s2"])
     e1 = singles.select(F.col("source").alias("s1"),
                         F.col("est").alias("est_a"))
     e2 = singles.select(F.col("source").alias("s2"),
@@ -2659,7 +2598,7 @@ def ivm_hll_registers(spark: SparkSession, sf_dir: str,
     the base / delta / merged estimates AND the full-recompute
     estimate side by side, so merged == full is WITNESSED in the
     output (and hash-checked by the oracle), not asserted in prose.
-    The register math is `hll_portable_union`'s, byte-identical.
+    The register math is the portable HLL of functions/portable.py.
 
     Scale: base and delta each one (source, user) distinct exchange
     over THEIR OWN rows; the merge and all four estimates run on
@@ -2680,36 +2619,10 @@ def ivm_hll_registers(spark: SparkSession, sf_dir: str,
     )
     du = scoped_persist(
         tagged.select("source", "user_id", "is_delta").distinct())
-    hv = F.conv(F.substring(F.md5(F.col("user_id").cast("string")),
-                            1, 15), 16, 10).cast("long")
-    rb = du.select("source", "is_delta", hv.alias("hv")).select(
-        "source", "is_delta",
-        (F.col("hv") % HLL_M).alias("bucket"),
-        F.expr(f"CASE WHEN hv div {HLL_M} = 0 THEN 49 "
-               f"ELSE 49 - length(bin(hv div {HLL_M})) END").alias("rho"),
-    )
+    rb = hll_rho(du, ["source", "is_delta"], F.col("user_id").cast("string"))
     part = scoped_persist(
         rb.groupBy("source", "is_delta", "bucket")
         .agg(F.max("rho").alias("r")))
-
-    def est_of(df: DataFrame, label: str) -> DataFrame:
-        g = df.groupBy("source").agg(
-            F.count("r").alias("n_hit"),
-            F.sum(F.expr(
-                "shiftleft(CAST(1 AS BIGINT), CAST(49 - r AS INT))"))
-            .alias("s_part"),
-        )
-        s_scaled = (F.col("s_part")
-                    + (F.lit(HLL_M) - F.col("n_hit")) * F.lit(HLL_POW49))
-        raw = F.lit(HLL_ALPHA_SCALED) / s_scaled.cast("double")
-        v_empty = F.lit(HLL_M) - F.col("n_hit")
-        lc = (F.lit(float(HLL_M))
-              * F.log(F.lit(float(HLL_M)) / v_empty.cast("double")))
-        ev_ = F.when((v_empty > 0) & (raw <= F.lit(2.5 * HLL_M)), lc) \
-            .otherwise(raw)
-        return g.select(
-            "source",
-            F.floor(ev_ + F.lit(0.5)).cast("long").alias(label))
 
     base = part.where(~F.col("is_delta")).select("source", "bucket", "r")
     delta = part.where(F.col("is_delta")).select("source", "bucket", "r")
@@ -2724,10 +2637,10 @@ def ivm_hll_registers(spark: SparkSession, sf_dir: str,
     )
     return (
         counts
-        .join(est_of(base, "est_base"), "source", "left")
-        .join(est_of(delta, "est_delta"), "source", "left")
-        .join(est_of(merged, "est_merged"), "source")
-        .join(est_of(full, "est_full_recompute"), "source")
+        .join(hll_estimate(base, ["source"], "est_base"), "source", "left")
+        .join(hll_estimate(delta, ["source"], "est_delta"), "source", "left")
+        .join(hll_estimate(merged, ["source"], "est_merged"), "source")
+        .join(hll_estimate(full, ["source"], "est_full_recompute"), "source")
         .select(
             "source", "n_base_keys", "n_delta_keys",
             F.coalesce("est_base", F.lit(0)).alias("est_base"),

@@ -2532,11 +2532,9 @@ def rolling_distinct_users_hll(spark: SparkSession, sf_dir: str,
     keys for EVERY output day (7x read amplification, one giant
     distinct per day), while the sketch algebra here reduces each day
     ONCE to a 4096-register table and slides the window over registers
-    (bucket-wise max — the HLL union) at metadata cost. The register
-    math (60-bit md5 prefix, bucket = low 12 bits, rho = leading-zero
-    rank of the high 48, exact-BIGINT 2^(49-r) partials, linear
-    counting below 2.5m) is byte-identical to `hll_portable_union`
-    (textstats.py) so the DuckDB oracle replays it exactly.
+    (bucket-wise max — the HLL union) at metadata cost. Registers and
+    estimator are the portable HLL of functions/portable.py, so the
+    DuckDB oracle replays them exactly.
 
     The day axis is session-timezone-proof integer arithmetic
     (epoch_us // 86.4e9, the repo convention); the rolling merge is a
@@ -2552,10 +2550,11 @@ def rolling_distinct_users_hll(spark: SparkSession, sf_dir: str,
     collapses map-side), one register rollup to n_days x 4096 rows,
     then windows over register/calendar-sized relations only.
     """
-    from hadoop_mapreduce_spark.operators.textstats import (
-        HLL_ALPHA_SCALED,
+    from hadoop_mapreduce_spark.functions.portable import (
         HLL_M,
-        HLL_POW49,
+        hll_estimate_col,
+        hll_partials,
+        hll_rho,
     )
     from hadoop_mapreduce_spark.session import scoped_persist
 
@@ -2570,14 +2569,7 @@ def rolling_distinct_users_hll(spark: SparkSession, sf_dir: str,
 
     exact = du.groupBy("day").agg(
         F.count(F.lit(1)).cast("long").alias("exact_day_distinct"))
-    hv = F.conv(F.substring(F.md5(F.col("user_id").cast("string")),
-                            1, 15), 16, 10).cast("long")
-    rb = du.select("day", hv.alias("hv")).select(
-        "day",
-        (F.col("hv") % HLL_M).alias("bucket"),
-        F.expr(f"CASE WHEN hv div {HLL_M} = 0 THEN 49 "
-               f"ELSE 49 - length(bin(hv div {HLL_M})) END").alias("rho"),
-    )
+    rb = hll_rho(du, ["day"], F.col("user_id").cast("string"))
     regs = rb.groupBy("day", "bucket").agg(F.max("rho").alias("r"))
 
     days = du.select("day").distinct()
@@ -2598,19 +2590,7 @@ def rolling_distinct_users_hll(spark: SparkSession, sf_dir: str,
             Window.partitionBy("bucket").orderBy("day")
             .rangeBetween(-(window_days - 1), 0)).alias("r"),
     )
-    est = rolled.groupBy("day").agg(
-        F.count("r").alias("n_hit"),
-        F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), CAST(49 - r AS INT))"))
-        .alias("s_part"),
-    )
-    s_scaled = (F.col("s_part")
-                + (F.lit(HLL_M) - F.col("n_hit")) * F.lit(HLL_POW49))
-    raw = F.lit(HLL_ALPHA_SCALED) / s_scaled.cast("double")
-    v_empty = F.lit(HLL_M) - F.col("n_hit")
-    lc = (F.lit(float(HLL_M))
-          * F.log(F.lit(float(HLL_M)) / v_empty.cast("double")))
-    est_val = F.when((v_empty > 0) & (raw <= F.lit(2.5 * HLL_M)), lc) \
-        .otherwise(raw)
+    est = rolled.groupBy("day").agg(*hll_partials())
     return (
         est.join(wd, "day").join(exact, "day")
         .select(
@@ -2618,8 +2598,7 @@ def rolling_distinct_users_hll(spark: SparkSession, sf_dir: str,
                        F.col("day").cast("int")).cast("string").alias("day"),
             "n_days_window",
             F.col("n_hit").cast("long").alias("n_buckets_hit"),
-            F.floor(est_val + F.lit(0.5)).cast("long")
-            .alias("est_rolling_distinct"),
+            hll_estimate_col().alias("est_rolling_distinct"),
             "exact_day_distinct",
         )
         .orderBy("day")

@@ -14,9 +14,19 @@ bit-comparable:
     digit except on exact half boundaries;
   * all hash functions are md5/sha2-derived (engine-portable), never
     engine-native hashes;
+  * the portable kernels — the 60-bit md5 hash ``h60``, the portable
+    HyperLogLog registers and estimator — live once, in their Spark
+    form and their SQL twin, in ``functions/portable.py``; the
+    tokenizer's twin (``TOKS_SQL``) sits beside the Spark tokenizer in
+    ``functions/text.py``. Oracles interpolate the SQL twins;
   * approximate operators (HLL, IVF-ANN) are registered without an
     oracle → the driver records a rows-only check, as the contract
     allows for non-SQL-expressible ops.
+
+Output contract change: ``events_hierarchical_rollup`` emits the
+integer epoch bucket ``bucket_id`` (complete hours or days since
+1970-01-01 00:00, by ``resolution``) where it once emitted a rendered
+``bucket`` string.
 """
 
 from __future__ import annotations
@@ -41,6 +51,18 @@ from hadoop_mapreduce_spark.operators import (
     textstats,
     timeseries,
     udfs,
+)
+from hadoop_mapreduce_spark.functions.portable import (
+    h60_sql,
+    hll_estimate_sql,
+    hll_partials_sql,
+    hll_rho_sql,
+)
+from hadoop_mapreduce_spark.functions.text import (
+    NORMALIZE_SQL,
+    TOKS_SQL,
+    collapse_ws_sql,
+    split_ws_sql,
 )
 from hadoop_mapreduce_spark.operators.ngram import ngram_count, ngram_topk
 from hadoop_mapreduce_spark.sources.tables import load_table
@@ -489,18 +511,8 @@ QUERIES: dict[str, QueryFn] = {
 # DuckDB oracle SQL (keys must match QUERIES; omissions → rows-only check)
 # ---------------------------------------------------------------------------
 
-# ORACLE whitespace rule: Java's \s (the reference normalizer's,
-# and therefore the Spark side's) includes \x0B; RE2's does not —
-# every oracle regex spells the Java class [\t\n\x0B\f\r ]
-# explicitly (found by tests/test_differential_fuzz.py on a \x0B
-# document; the BPE_RE twin had the same fix in r7).
-_TOKS = (
-    r"list_filter(string_split_regex(lower(regexp_replace(text, '[^a-zA-Z0-9\t\n\x0B\f\r ]+', '', 'g')), '[\t\n\x0B\f\r ]+'),"
-    r" t -> t <> '')"
-)
-
 _NGRAM3 = f"""
-WITH toks AS (SELECT {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT {TOKS_SQL} AS t FROM documents),
 grams AS (
   SELECT array_to_string(t[i:i+2], ' ') AS ngram
   FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i) g
@@ -509,7 +521,7 @@ SELECT ngram, count(*) AS cnt FROM grams GROUP BY ngram
 """
 
 _SHINGLES = f"""
-toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
 sh AS (
   SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
   FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i) g
@@ -796,7 +808,7 @@ ORDER BY l_returnflag, l_linestatus
 """,
     "pipeline_curation": rf"""
 WITH t0 AS (
-  SELECT doc_id, text, source, {_TOKS} AS t,
+  SELECT doc_id, text, source, {TOKS_SQL} AS t,
     length(text) AS nc,
     length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g')) AS np
   FROM documents
@@ -816,7 +828,7 @@ q AS (
 d0 AS (SELECT doc_id, text, source, t FROM q WHERE quality >= 0.6),
 keep AS (SELECT min(doc_id) AS doc_id FROM d0 GROUP BY sha256(text)),
 d1 AS (SELECT d0.* FROM d0 JOIN keep USING (doc_id)),
-toks_all AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+toks_all AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
 sh_all AS (
   SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
   FROM toks_all, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i) g
@@ -861,15 +873,13 @@ SELECT src AS doc_id, min(node)::BIGINT AS component
 FROM reach GROUP BY src ORDER BY doc_id
 """,
     "dedup_ngram_jaccard": f"WITH {_SHINGLES} ORDER BY id1, id2",
-    "dedup_simhash": r"""
+    "dedup_simhash": rf"""
 WITH toks AS (
-  SELECT doc_id, list_distinct(list_filter(
-    string_split_regex(lower(regexp_replace(text, '[^a-zA-Z0-9\t\n\x0B\f\r ]+', '', 'g')), '[\t\n\x0B\f\r ]+'),
-    t -> t <> '')) AS t
+  SELECT doc_id, list_distinct({TOKS_SQL}) AS t
   FROM documents
 ),
 tok AS (SELECT doc_id, unnest(t) AS tk FROM toks WHERE len(t) > 0),
-th AS (SELECT doc_id, ('0x' || substr(md5(tk), 1, 15))::UBIGINT::BIGINT AS h FROM tok),
+th AS (SELECT doc_id, {h60_sql("tk")} AS h FROM tok),
 bits AS (
   SELECT doc_id, i, CASE WHEN (h >> i) & 1 = 1 THEN 1 ELSE -1 END AS v
   FROM th, LATERAL (SELECT unnest(generate_series(0, 59)) AS i) g
@@ -903,7 +913,7 @@ GROUP BY label ORDER BY label
 """,
     "text_quality": rf"""
 WITH t0 AS (
-  SELECT doc_id, text, {_TOKS} AS t,
+  SELECT doc_id, text, {TOKS_SQL} AS t,
     length(text) AS nc,
     length(text) - length(regexp_replace(text, '[^\w\t\n\x0B\f\r ]', '', 'g')) AS np
   FROM documents
@@ -929,7 +939,7 @@ FROM t1 ORDER BY doc_id
 """,
     "token_count": rf"""
 WITH per_doc AS (
-  SELECT source, len({_TOKS})::BIGINT AS ws_tokens,
+  SELECT source, len({TOKS_SQL})::BIGINT AS ws_tokens,
     len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 \t\n\x0B\f\r]'))::BIGINT AS bpe_tokens
   FROM documents
 )
@@ -940,7 +950,7 @@ SELECT source, count(*) AS n_docs,
 FROM per_doc GROUP BY source ORDER BY source
 """,
     "language_id": rf"""
-WITH t0 AS (SELECT doc_id, lang, {_TOKS} AS t FROM documents),
+WITH t0 AS (SELECT doc_id, lang, {TOKS_SQL} AS t FROM documents),
 hits AS (
   SELECT doc_id, lang,
     len(list_intersect(t, ['the','and','of','to','a','in','is','it','you','that'])) AS h_en,
@@ -962,7 +972,7 @@ SELECT lang, pred_lang, count(*) AS n FROM pred GROUP BY lang, pred_lang
 ORDER BY lang, pred_lang
 """,
     "tfidf_top_terms": f"""
-WITH toks AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
+WITH toks AS (SELECT doc_id, unnest({TOKS_SQL}) AS term FROM documents),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
 df AS (SELECT term, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1),
 n AS (SELECT count(*) AS n FROM documents),
@@ -978,15 +988,15 @@ ranked AS (
 SELECT doc_id, term, tf::BIGINT AS tf, round(score, 6) AS tfidf, rnk::BIGINT AS rnk
 FROM ranked WHERE rnk <= 5 ORDER BY doc_id, rnk
 """,
-    "doc_fingerprint": r"""
+    "doc_fingerprint": rf"""
 WITH c AS (
   SELECT doc_id,
-    regexp_replace(lower(regexp_replace(text, '[^a-zA-Z0-9\t\n\x0B\f\r ]+', '', 'g')), '[\t\n\x0B\f\r ]+', ' ', 'g') AS compact
+    {collapse_ws_sql(NORMALIZE_SQL)} AS compact
   FROM documents
 ),
 kg AS (
   SELECT doc_id, compact,
-    min(('0x' || substr(md5(substr(compact, i, 8)), 1, 15))::UBIGINT::BIGINT) AS min_kgram_hash
+    min({h60_sql("substr(compact, i, 8)")}) AS min_kgram_hash
   FROM c, LATERAL (SELECT unnest(generate_series(1, greatest(length(compact) - 7, 1))) AS i) g
   GROUP BY doc_id, compact
 )
@@ -1360,7 +1370,7 @@ SELECT 'hour' AS resolution, bucket_id, event_type, n,
   (sm // n)::BIGINT AS avg_value_micros
 FROM hourly
 UNION ALL
-SELECT 'day', day_id, event_type, sum(n), (sum(sm) // 10000)::BIGINT,
+SELECT 'day', day_id, event_type, sum(n)::BIGINT, (sum(sm) // 10000)::BIGINT,
   (sum(sm) // sum(n))::BIGINT
 FROM hourly GROUP BY day_id, event_type
 ORDER BY resolution, bucket_id, event_type
@@ -1448,11 +1458,9 @@ SELECT term, count(*)::BIGINT AS cnt
 FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z]{8,}')) AS term FROM documents)
 GROUP BY term HAVING count(*) >= 3 ORDER BY cnt DESC, term
 """,
-    "doc_chunking": r"""
+    "doc_chunking": rf"""
 WITH toks AS (
-  SELECT doc_id, list_filter(
-    string_split_regex(lower(regexp_replace(text, '[^a-zA-Z0-9\t\n\x0B\f\r ]+', '', 'g')), '[\t\n\x0B\f\r ]+'),
-    t -> t <> '') AS t
+  SELECT doc_id, {TOKS_SQL} AS t
   FROM documents
 ),
 nz AS (SELECT doc_id, t FROM toks WHERE len(t) > 0),
@@ -1467,26 +1475,29 @@ SELECT doc_id, (ord - 1)::BIGINT AS chunk_idx,
   len(t[s:s+31])::BIGINT AS chunk_len
 FROM st ORDER BY doc_id, chunk_idx
 """,
-    "text_scrub": r"""
-WITH s AS (
-  SELECT doc_id,
-    trim(regexp_replace(regexp_replace(regexp_replace(text,
-      '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '<EMAIL>', 'g'),
-      'https?://[^\s]+', '<URL>', 'g'),
-      '[\t\n\x0B\f\r ]+', ' ', 'g')) AS clean,
-    len(regexp_extract_all(text, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}')) AS ne,
-    len(regexp_extract_all(text, 'https?://[^\s]+')) AS nu
+    "text_scrub": rf"""
+WITH m AS (
+  SELECT doc_id, text,
+    regexp_replace(regexp_replace(text,
+      '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{{2,}}', '<EMAIL>', 'g'),
+      'https?://[^\s]+', '<URL>', 'g') AS masked
   FROM documents
+),
+s AS (
+  SELECT doc_id, trim({collapse_ws_sql("masked")}) AS clean,
+    len(regexp_extract_all(text, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{{2,}}')) AS ne,
+    len(regexp_extract_all(text, 'https?://[^\s]+')) AS nu
+  FROM m
 )
 SELECT doc_id, length(clean)::BIGINT AS clean_len,
   ne::BIGINT AS n_emails_masked, nu::BIGINT AS n_urls_masked,
   substr(clean, 1, 80) AS clean_prefix
 FROM s ORDER BY doc_id
 """,
-    "dataset_split": r"""
+    "dataset_split": rf"""
 WITH b AS (
-  SELECT ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT % 100 AS bucket,
-         len(string_split_regex(trim(text), '[\t\n\x0B\f\r ]+'))::BIGINT AS n_tokens
+  SELECT {h60_sql("doc_id::VARCHAR")} % 100 AS bucket,
+         len({split_ws_sql("trim(text)")})::BIGINT AS n_tokens
   FROM documents
 )
 SELECT CASE WHEN bucket < 10 THEN 'val'
@@ -1584,7 +1595,7 @@ SELECT custkey, version::BIGINT AS version, valid_from, valid_to, balance
 FROM v WHERE version <= 3 ORDER BY custkey, version
 """,
     "decontaminate_ngram": f"""
-WITH toks AS (SELECT doc_id, source, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, source, {TOKS_SQL} AS t FROM documents),
 grams AS (
   SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') AS g
   FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-3)) AS i) x
@@ -1602,7 +1613,7 @@ FROM train t LEFT JOIN hits h ON t.doc_id = h.doc_id
 GROUP BY t.source ORDER BY t.source
 """,
     "decontaminate_fuzzy": f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
 sh AS (
   SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
   FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i) g
@@ -1663,7 +1674,7 @@ FROM m WHERE rn = 1 AND n_members >= 2 ORDER BY component
 """,
     "pipeline_target_select": f"""
 WITH RECURSIVE
-toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
 sh AS (
   SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
   FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i) g
@@ -1714,7 +1725,7 @@ dup_dropped AS (SELECT doc_id FROM ranked WHERE nm >= 2 AND rn > 1),
 tok0 AS (SELECT doc_id, unnest(t) AS w FROM toks),
 tokf AS (
   SELECT doc_id,
-    ('0x' || substr(md5(w), 1, 15))::UBIGINT::BIGINT % 10000 AS f
+    {h60_sql("w")} % 10000 AS f
   FROM tok0
 ),
 ct AS (SELECT f, count(*) AS ct FROM tokf WHERE doc_id % 20 = 0 GROUP BY f),
@@ -1752,7 +1763,7 @@ SELECT source, count(*)::BIGINT AS n_train_docs,
 FROM flags GROUP BY source ORDER BY source
 """,
     "dedup_repeated_spans": f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
 w AS (
   SELECT doc_id, i AS p, array_to_string(t[i:i+7], ' ') AS s
   FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-7)) AS i) g
@@ -1780,10 +1791,10 @@ FROM isl GROUP BY doc_id, island ORDER BY doc_id, span_start
 """,
     "dsir_importance_sample": f"""
 WITH tok0 AS (SELECT doc_id, source, unnest(t) AS w
-              FROM (SELECT doc_id, source, {_TOKS} AS t FROM documents)),
+              FROM (SELECT doc_id, source, {TOKS_SQL} AS t FROM documents)),
 tok AS (
   SELECT doc_id, source,
-    ('0x' || substr(md5(w), 1, 15))::UBIGINT::BIGINT % 10000 AS f
+    {h60_sql("w")} % 10000 AS f
   FROM tok0
 ),
 ct AS (SELECT f, count(*) AS ct FROM tok WHERE doc_id % 20 = 0 GROUP BY f),
@@ -1810,7 +1821,7 @@ SELECT source, count(*)::BIGINT AS n_train_docs,
 FROM lw GROUP BY source ORDER BY source
 """,
     "quality_repetition": f"""
-WITH toks AS (SELECT doc_id, source, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, source, {TOKS_SQL} AS t FROM documents),
 tok AS (SELECT doc_id, source, unnest(t) AS w FROM toks),
 cnt AS (SELECT doc_id, source, w, count(*) AS c FROM tok GROUP BY 1, 2, 3),
 m AS (
@@ -1831,11 +1842,11 @@ SELECT source, count(*)::BIGINT AS n_docs,
   round(avg(distinct_frac), 4) AS avg_distinct_frac
 FROM d GROUP BY source ORDER BY source
 """,
-    "domain_mixture_sample": r"""
+    "domain_mixture_sample": rf"""
 WITH s AS (
   SELECT source, n_chars,
     try_cast(regexp_extract(source, '([0-9]+)', 1) AS INT) AS idx,
-    ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT % 100 AS b
+    {h60_sql("doc_id::VARCHAR")} % 100 AS b
   FROM documents
 ),
 d AS (
@@ -1876,10 +1887,10 @@ SELECT label, count(*)::BIGINT AS n_vecs,
   round(avg(mse), 8) AS avg_mse
 FROM e GROUP BY label ORDER BY label
 """,
-    "global_shuffle_order": """
+    "global_shuffle_order": f"""
 WITH k AS (
   SELECT doc_id, md5(doc_id::VARCHAR) AS k,
-    ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT % 8 AS shard
+    {h60_sql("doc_id::VARCHAR")} % 8 AS shard
   FROM documents
 )
 SELECT shard, pos, doc_id FROM (
@@ -1901,7 +1912,7 @@ ORACLE["dedup_components_star"] = ORACLE["dedup_connected_components"]
 # expressions so the compound result stays hash-checkable end to end.
 ORACLE["pipeline_pretrain"] = rf"""
 WITH t0 AS (
-  SELECT doc_id, text, source, {_TOKS} AS t,
+  SELECT doc_id, text, source, {TOKS_SQL} AS t,
     length(text) AS nc,
     length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g')) AS np
   FROM documents
@@ -1921,7 +1932,7 @@ q AS (
 d0 AS (SELECT doc_id, text, source, t FROM q WHERE quality >= 0.6),
 keep AS (SELECT min(doc_id) AS doc_id FROM d0 GROUP BY sha256(text)),
 d1 AS (SELECT d0.* FROM d0 JOIN keep USING (doc_id)),
-toks_all AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+toks_all AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
 grams AS (
   SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') AS g
   FROM toks_all, LATERAL (SELECT unnest(generate_series(1, len(t)-3)) AS i) x
@@ -1937,9 +1948,9 @@ d2 AS (
 ),
 d3 AS (
   SELECT *,
-    ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT % 100 AS sb
+    {h60_sql("doc_id::VARCHAR")} % 100 AS sb
   FROM d2
-  WHERE ('0x' || substr(md5('mix:' || doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT % 100
+  WHERE {h60_sql("'mix:' || doc_id::VARCHAR")} % 100
       < (CASE WHEN try_cast(regexp_extract(source, '([0-9]+)', 1) AS INT) < 5 THEN 100
               WHEN try_cast(regexp_extract(source, '([0-9]+)', 1) AS INT) < 10 THEN 50
               WHEN try_cast(regexp_extract(source, '([0-9]+)', 1) AS INT) < 15 THEN 25
@@ -1955,7 +1966,7 @@ FROM d3 GROUP BY 1 ORDER BY 1
 # summed tf-idf with the smoothed idf tfidf_top_terms uses; ties on
 # score are broken by doc_id so the emitted order is total.
 ORACLE["keyword_search"] = f"""
-WITH toks AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
+WITH toks AS (SELECT doc_id, unnest({TOKS_SQL}) AS term FROM documents),
 qt AS (SELECT * FROM toks WHERE term IN ('spark', 'window', 'join')),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM qt GROUP BY 1, 2),
 df AS (SELECT term, count(DISTINCT doc_id) AS df FROM qt GROUP BY 1),
@@ -1974,7 +1985,7 @@ ORDER BY score DESC, doc_id LIMIT 20
 # Repeated-long-n-gram rate: distinct 8-grams per doc, corpus frequency
 # via a window over the gram key (one exchange), per-source rollup.
 ORACLE["dup_ngram_rate"] = rf"""
-WITH toks AS (SELECT doc_id, source, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, source, {TOKS_SQL} AS t FROM documents),
 g AS (
   SELECT DISTINCT doc_id, source, array_to_string(t[i:i+7], ' ') AS g
   FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-7)) AS i) x
@@ -2015,7 +2026,7 @@ ORDER BY source, rk
 ORACLE["token_zipf_slope"] = rf"""
 WITH c AS (
   SELECT tk, count(*) AS c
-  FROM (SELECT unnest({_TOKS}) AS tk FROM documents) GROUP BY tk
+  FROM (SELECT unnest({TOKS_SQL}) AS tk FROM documents) GROUP BY tk
 ),
 r AS (SELECT c, row_number() OVER (ORDER BY c DESC, tk) AS r FROM c)
 SELECT round(regr_slope(ln(c), ln(r)), 6) AS zipf_slope,
@@ -2081,7 +2092,7 @@ FROM names GROUP BY lower(name) ORDER BY rep
 # DuckDB raises on 1<<63). Hash-comparable because every hash is
 # md5-derived, never engine-native.
 ORACLE["bloom_decontaminate"] = f"""
-WITH toks AS (SELECT doc_id, source, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, source, {TOKS_SQL} AS t FROM documents),
 grams AS (
   SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') AS g
   FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-3)) AS i) x
@@ -2122,7 +2133,7 @@ GROUP BY t.source ORDER BY t.source
 # dedupe key = 60-bit md5 of the chunk (same hash both engines, so the
 # rebuilt-text fingerprints are bit-comparable).
 ORACLE["dedup_span_chunks"] = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
 chunks AS (
   SELECT doc_id, i AS chunk_idx, array_to_string(t[s:s+7], ' ') AS chunk
   FROM (SELECT doc_id, t FROM toks WHERE len(t) > 0),
@@ -2131,7 +2142,7 @@ chunks AS (
 ),
 hashed AS (
   SELECT doc_id, chunk_idx, chunk,
-    ('0x' || substr(md5(chunk), 1, 15))::UBIGINT::BIGINT AS h
+    {h60_sql("chunk")} AS h
   FROM chunks
 ),
 kept AS (
@@ -2160,7 +2171,7 @@ ORDER BY t.doc_id
 # mirrors operators/textstats.py::unigram_logprob_quality exactly.
 ORACLE["unigram_logprob_quality"] = f"""
 WITH tok AS (
-  SELECT doc_id, source, unnest({_TOKS}) AS tk FROM documents
+  SELECT doc_id, source, unnest({TOKS_SQL}) AS tk FROM documents
 ),
 vocab AS (SELECT tk, count(*) AS c FROM tok GROUP BY tk),
 per_doc AS (
@@ -2223,11 +2234,11 @@ reach(src, node) AS (
 comp AS (SELECT src AS doc_id, min(node) AS comp FROM reach GROUP BY src),
 assigned AS (
   SELECT doc_id, comp,
-    CASE WHEN ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT % 10 < 8 THEN 'train'
-         WHEN ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT % 10 < 9 THEN 'val'
+    CASE WHEN {h60_sql("doc_id::VARCHAR")} % 10 < 8 THEN 'train'
+         WHEN {h60_sql("doc_id::VARCHAR")} % 10 < 9 THEN 'val'
          ELSE 'test' END AS naive_split,
-    CASE WHEN ('0x' || substr(md5(comp::VARCHAR), 1, 15))::UBIGINT::BIGINT % 10 < 8 THEN 'train'
-         WHEN ('0x' || substr(md5(comp::VARCHAR), 1, 15))::UBIGINT::BIGINT % 10 < 9 THEN 'val'
+    CASE WHEN {h60_sql("comp::VARCHAR")} % 10 < 8 THEN 'train'
+         WHEN {h60_sql("comp::VARCHAR")} % 10 < 9 THEN 'val'
          ELSE 'test' END AS grouped_split
   FROM comp
 ),
@@ -2272,7 +2283,7 @@ FROM b ORDER BY doc_id
 # -> Bloom decontamination ON THE REBUILT TEXT -> per-source ledger.
 # Every hash is md5-derived, so the chain is hash-comparable end to end.
 ORACLE["pipeline_pretrain_scale"] = f"""
-WITH toks AS (SELECT doc_id, source, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, source, {TOKS_SQL} AS t FROM documents),
 tok AS (SELECT doc_id, source, unnest(t) AS tk FROM toks WHERE doc_id % 20 <> 0),
 vocab AS (SELECT tk, count(*) AS c FROM tok GROUP BY tk),
 total AS (SELECT sum(c) AS n_total FROM vocab),
@@ -2290,7 +2301,7 @@ chunks AS (
                     unnest(generate_series(0, (len(t.t)-1)//8)) AS i) x
   WHERE len(t.t) > 0
 ),
-hashed AS (SELECT *, ('0x' || substr(md5(chunk), 1, 15))::UBIGINT::BIGINT AS h FROM chunks),
+hashed AS (SELECT *, {h60_sql("chunk")} AS h FROM chunks),
 keptc AS (SELECT *, row_number() OVER (PARTITION BY h ORDER BY doc_id, chunk_idx) AS rn FROM hashed),
 rebuilt AS (
   SELECT doc_id, source, sum((rn = 1)::BIGINT) AS n_kept,
@@ -2359,9 +2370,9 @@ ORDER BY i.source
 # Feature-hashing document vectors: md5-bucket counts, portable on both
 # engines; argmax tie-break = lowest bucket on both sides.
 ORACLE["doc_hash_embedding"] = f"""
-WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS tk FROM documents),
+WITH tok AS (SELECT doc_id, unnest({TOKS_SQL}) AS tk FROM documents),
 cells AS (
-  SELECT doc_id, ('0x' || substr(md5(tk), 1, 15))::UBIGINT::BIGINT % 32 AS b,
+  SELECT doc_id, {h60_sql("tk")} % 32 AS b,
          count(*) AS v
   FROM tok GROUP BY 1, 2
 ),
@@ -2595,7 +2606,7 @@ ORDER BY event_type, hour
 # tokenizer macro, ln ratio of joint to independent unigram estimates,
 # 6 dp rounding both engines, full-key ordering so LIMIT is stable.
 ORACLE["bigram_pmi_collocations"] = f"""
-WITH toks AS (SELECT {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT {TOKS_SQL} AS t FROM documents),
 uc AS (SELECT w, count(*) AS cw FROM (SELECT unnest(t) AS w FROM toks) GROUP BY w),
 big AS (
   SELECT t[i] AS w1, t[i+1] AS w2
@@ -2618,7 +2629,7 @@ ORDER BY pmi DESC, w1, w2 LIMIT 50
 # the doc score is rounded to 6 dp before the top-k ordering (doc_id
 # tie-break) — mirrors operators/textstats.py::bigram_lm_quality.
 ORACLE["bigram_lm_quality"] = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
 tt AS (SELECT doc_id, t FROM toks WHERE len(t) >= 2),
 big AS (
   SELECT doc_id, t[i] || ' ' || t[i+1] AS bg
@@ -2694,7 +2705,7 @@ ORDER BY doc_a, doc_b
 # score rounded to 6 dp before the top-k ordering (doc_id tie-break) —
 # mirrors operators/textstats.py::bm25_search (k1=1.2, b=0.75).
 ORACLE["bm25_search"] = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
 dl AS (SELECT doc_id, len(t) AS dl FROM toks),
 st AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
 qt AS (
@@ -2719,7 +2730,7 @@ FROM sc ORDER BY round(score, 6) DESC, doc_id LIMIT 20
 # counts; Pielou evenness H/ln(d), defined 0 for single-token docs —
 # mirrors operators/textstats.py::token_entropy_quality.
 ORACLE["token_entropy_quality"] = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
 cnt AS (
   SELECT doc_id, w, count(*) AS c
   FROM (SELECT doc_id, unnest(t) AS w FROM toks) GROUP BY doc_id, w
@@ -2757,7 +2768,7 @@ def _jsd_pair_select(a: str, b: str) -> str:
 
 
 ORACLE["jsd_lang_divergence"] = f"""
-WITH toks AS (SELECT lang, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT lang, {TOKS_SQL} AS t FROM documents),
 wide AS (
   SELECT w AS t,
          {", ".join(f"count(*) FILTER (lang = '{l}') AS c_{l}"
@@ -2870,8 +2881,8 @@ ORDER BY doc_id
 ORACLE["sample_weighted"] = f"""
 WITH d AS (
   SELECT doc_id, source,
-    len({_TOKS})::BIGINT AS n_tokens,
-    ((('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT % 1048576)
+    len({TOKS_SQL})::BIGINT AS n_tokens,
+    (({h60_sql("doc_id::VARCHAR")} % 1048576)
       + 0.5) / 1048576.0 AS u
   FROM documents
 )
@@ -2945,7 +2956,7 @@ GROUP BY 1 ORDER BY bucket
 # --- round-6 fourth wave: tokenizer training / index build / memorization ---
 
 ORACLE["bpe_merge_step"] = f"""
-WITH toks AS (SELECT {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT {TOKS_SQL} AS t FROM documents),
 words AS (
   SELECT w, count(*)::BIGINT AS wc
   FROM toks, LATERAL (SELECT unnest(t) AS w) x
@@ -2960,7 +2971,7 @@ ORDER BY cnt DESC, pair LIMIT 50
 """
 
 ORACLE["inverted_index_topk"] = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
 tf AS (
   SELECT term, doc_id, count(*)::BIGINT AS tf
   FROM toks, LATERAL (SELECT unnest(t) AS term) x
@@ -2982,12 +2993,12 @@ ORDER BY df DESC, tf_total DESC, term LIMIT 100
 ORACLE["memorization_novelty"] = f"""
 WITH toks AS (
   SELECT doc_id,
-    CASE WHEN ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT
+    CASE WHEN {h60_sql("doc_id::VARCHAR")}
               % 100 < 10 THEN 'val'
-         WHEN ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT
+         WHEN {h60_sql("doc_id::VARCHAR")}
               % 100 < 20 THEN 'test'
          ELSE 'train' END AS split,
-    {_TOKS} AS t
+    {TOKS_SQL} AS t
   FROM documents),
 grams AS (
   SELECT DISTINCT doc_id, split, array_to_string(t[i:i+4], ' ') AS g
@@ -3003,10 +3014,10 @@ FROM val_g v LEFT JOIN train_g tg ON v.g = tg.g
 GROUP BY v.doc_id ORDER BY v.doc_id
 """
 
-ORACLE["mixture_temperature_weights"] = r"""
+ORACLE["mixture_temperature_weights"] = rf"""
 WITH per_src AS (
   SELECT source, count(*)::BIGINT AS n_docs,
-         sum(len(string_split_regex(trim(text), '[\t\n\x0B\f\r ]+')))::BIGINT AS n_tokens
+         sum(len({split_ws_sql("trim(text)")}))::BIGINT AS n_tokens
   FROM documents GROUP BY source
 ),
 sh AS (
@@ -3026,10 +3037,10 @@ SELECT source, n_docs, n_tokens,
 FROM sc ORDER BY source
 """
 
-ORACLE["quantile_normalize_quality"] = r"""
+ORACLE["quantile_normalize_quality"] = rf"""
 WITH base AS (
   SELECT doc_id, source,
-    len(string_split_regex(trim(text), '[\t\n\x0B\f\r ]+'))::BIGINT * 1000 / n_chars AS raw
+    len({split_ws_sql("trim(text)")})::BIGINT * 1000 / n_chars AS raw
   FROM documents
 ),
 ranked AS (
@@ -3080,9 +3091,9 @@ LEFT JOIN ov ON ov.qid = f.qid
 ORDER BY f.qid
 """
 
-ORACLE["padding_waste_audit"] = r"""
+ORACLE["padding_waste_audit"] = rf"""
 WITH base AS (
-  SELECT doc_id, len(string_split_regex(trim(text), '[\t\n\x0B\f\r ]+'))::BIGINT AS n,
+  SELECT doc_id, len({split_ws_sql("trim(text)")})::BIGINT AS n,
          md5(doc_id::VARCHAR) AS shuf
   FROM documents
 ),
@@ -3133,9 +3144,9 @@ FROM lineitem WHERE l_quantity < 25
 GROUP BY l_returnflag ORDER BY l_returnflag
 """
 
-ORACLE["context_window_stats"] = r"""
+ORACLE["context_window_stats"] = rf"""
 WITH per AS (
-  SELECT len(string_split_regex(trim(text), '[\t\n\x0B\f\r ]+'))::BIGINT AS n, b.budget
+  SELECT len({split_ws_sql("trim(text)")})::BIGINT AS n, b.budget
   FROM documents, (SELECT unnest([128, 512, 2048]) AS budget) b
 )
 SELECT budget::BIGINT AS budget, count(*)::BIGINT AS n_docs,
@@ -3148,7 +3159,7 @@ FROM per GROUP BY budget ORDER BY budget
 
 ORACLE["tokenizer_fertility"] = f"""
 WITH per AS (
-  SELECT lang, len({_TOKS})::BIGINT AS ws,
+  SELECT lang, len({TOKS_SQL})::BIGINT AS ws,
     len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 \\t\\n\\x0B\\f\\r]'))::BIGINT
       AS bpe
   FROM documents
@@ -3159,7 +3170,7 @@ FROM per GROUP BY lang ORDER BY lang
 """
 
 ORACLE["source_overlap_matrix"] = f"""
-WITH toks AS (SELECT source, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT source, {TOKS_SQL} AS t FROM documents),
 grams AS (
   SELECT DISTINCT source, array_to_string(t[i:i+7], ' ') AS g
   FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 7)) AS i) x
@@ -3283,81 +3294,9 @@ FROM sel ORDER BY qid, rank
 """
 
 # --------------------------------------------------------------------------
-# r8 driver window: the driver records the FIRST 50 registry entries per
-# round. Composition (VERDICT r7 item 4 — finish driver-witnessing the
-# registry): (a) the seven queries whose implementation changed this
-# round, led by events_hierarchical_rollup (r07's only red cell — the
-# NTZ load contract fix) and embedding_kmeans_stats (newly hash-paired);
-# (b) 43 of the 68 never-driver-witnessed keys, heaviest families first
-# (kneser_ney_quality, gopher_dup_ngrams, winnowing_neardup_pairs per
-# the verdict), including the five timezone-leak queries tz_parity.py
-# caught (events_dow_hour_profile, event_pair_itemsets,
-# active_user_ratios, orders_interarrival_profile, session_concurrency)
-# and asof_join_nearest (also tz-edited). The remaining 25
-# never-witnessed keys fit one more window and queue for r9:
-# orders_abc_pareto, label_propagation_communities, sax_motifs, dedup_chain_audit, vocab_growth_heaps, embedding_outlier_scores, order_status_flow, events_pattern_match,
-# readability_scores, events_acf, compression_ratio_quality, shard_layout_plan, hll_portable_union, ccnet_perplexity_buckets, vocab_coverage_curve, embedding_centroid_drift, char_trigram_langid,
-# minhash_accuracy_audit, quantile_histogram_portable, events_ewma_daily, salted_aggregate_events, join_skew_audit, video_meta, dedup_cluster_size_histogram, embedding_dim_stats,
-# benford_audit (displaced late-r8 by semdedup_ivf, whose implementation
-# changed to the hash-paired portable form this round — group (a) rule).
-# Pure reordering — no key or implementation changes here.
-_WINDOW_R8 = [
-    "events_hierarchical_rollup",
-    "embedding_kmeans_stats",
-    "semdedup_ivf",
-    "dow_profile_stability",
-    "embedding_anisotropy_audit",
-    "quality_decile_lift",
-    "cross_source_duplication_matrix",
-    "events_lttb_downsample",
-    "kneser_ney_quality",
-    "gopher_dup_ngrams",
-    "winnowing_neardup_pairs",
-    "winnowing_fingerprint",
-    "asof_join_nearest",
-    "events_dow_hour_profile",
-    "event_pair_itemsets",
-    "active_user_ratios",
-    "orders_interarrival_profile",
-    "session_concurrency",
-    "dedup_containment_prefix",
-    "skipgram_cooccurrence",
-    "rrf_quality_fusion",
-    "quality_threshold_sweep",
-    "stopword_discovery",
-    "source_concentration_audit",
-    "token_budget_fill",
-    "curriculum_interleave",
-    "source_novelty_attribution",
-    "quality_signal_correlation",
-    "ngram_diversity_audit",
-    "dataset_card",
-    "badwords_filter",
-    "lang_source_chisq",
-    "neardup_label_conflict",
-    "lsh_band_tuning",
-    "packing_boundary_audit",
-    "preference_pair_build",
-    "ks_drift_quality",
-    "session_gap_sweep",
-    "dedup_threshold_sweep",
-    "customer_rfm_segments",
-    "watermark_lateness_audit",
-    "join_cardinality_audit",
-    "fightin_words",
-    "events_cusum_changepoint",
-    "kwic_concordance",
-    "ivm_orders_agg",
-    "orders_cohort_ltv",
-    "conversion_attribution",
-    "user_active_streaks",
-    "pii_redact_audit",
-]
-assert len(_WINDOW_R8) == 50 and len(set(_WINDOW_R8)) == 50
-
-# --------------------------------------------------------------------------
-# r9 driver window (supersedes _WINDOW_R8 in the dict order below; the
-# r8 list is kept for the audit trail). Composition:
+# Correctness window: the round's gate records the FIRST 50 registry
+# entries, so this list sets the head of the dict order below.
+# Composition (r9):
 # (a) queries whose implementation changed THIS round — the rollup
 #     (r7/r8's standing driver-red cell, rewritten to integer epoch
 #     arithmetic on both engines; VERDICT r8 item 1 orders it kept in
@@ -3367,8 +3306,8 @@ assert len(_WINDOW_R8) == 50 and len(set(_WINDOW_R8)) == 50
 #     frozen (keyphrase_rake, token_context_diversity) plus
 #     dedup_minhash_lsh, whose shared pair-builder changed in r8 —
 #     none driver-witnessed at their current implementation;
-# (b) ALL 26 remaining never-driver-witnessed keys (the r8 queue above)
-#     — this completes driver witnessing of the full registry;
+# (b) ALL 26 remaining never-witnessed keys — this completes
+#     witnessing of the full registry;
 # (c) fill to 50 with re-witnesses: the date_trunc-rendering timeseries
 #     family (same-signature audit as the rollup fix — OPTIMIZATION_r09
 #     item 1) and stable graded headliners.
@@ -3440,11 +3379,11 @@ QUERIES = {k: QUERIES[k] for k in _WINDOW_R9} | {
 # integers on both engines.
 ORACLE["heavy_hitters_cms"] = f"""
 WITH toks AS (
-  SELECT unnest({_TOKS}) AS term FROM documents
+  SELECT unnest({TOKS_SQL}) AS term FROM documents
 ),
 ds AS (SELECT unnest([0, 1, 2, 3]) AS d),
 sketch AS (
-  SELECT d, ('0x' || substr(md5(d::VARCHAR || ':' || term), 1, 15))::UBIGINT::BIGINT % 256 AS c,
+  SELECT d, {h60_sql("d::VARCHAR || ':' || term")} % 256 AS c,
          count(*) AS cnt
   FROM toks CROSS JOIN ds GROUP BY 1, 2
 ),
@@ -3453,7 +3392,7 @@ est AS (
   SELECT t.term, min(s.cnt)::BIGINT AS est
   FROM terms t CROSS JOIN ds
   JOIN sketch s ON s.d = ds.d
-   AND s.c = ('0x' || substr(md5(ds.d::VARCHAR || ':' || t.term), 1, 15))::UBIGINT::BIGINT % 256
+   AND s.c = {h60_sql("ds.d::VARCHAR || ':' || t.term")} % 256
   GROUP BY t.term
 )
 SELECT term, est FROM est ORDER BY est DESC, term LIMIT 20
@@ -3481,7 +3420,7 @@ FROM b ORDER BY doc_id
 # fraction (token-unit, integer micro-units, truncating int division).
 ORACLE["gopher_dup_ngrams"] = f"""
 WITH toks AS (
-  SELECT doc_id, source, {_TOKS} AS t FROM documents
+  SELECT doc_id, source, {TOKS_SQL} AS t FROM documents
 ),
 tt AS (SELECT doc_id, source, t FROM toks WHERE len(t) >= 5),
 nt AS (SELECT doc_id, source, len(t)::BIGINT AS n_tokens FROM tt),
@@ -3515,7 +3454,7 @@ FROM per_doc GROUP BY source ORDER BY source
 # integer counts; the doc score is emitted in integer micro-units.
 ORACLE["kneser_ney_quality"] = f"""
 WITH toks AS (
-  SELECT doc_id, {_TOKS} AS t FROM documents
+  SELECT doc_id, {TOKS_SQL} AS t FROM documents
 ),
 tt AS (SELECT doc_id, t FROM toks WHERE len(t) >= 2),
 per_doc AS (
@@ -3590,11 +3529,11 @@ FROM cells GROUP BY dim ORDER BY dim
 # runs as a lockstep recursive CTE (one doc per (source, bucket) group
 # per iteration, bins' remaining capacities carried as a list, first
 # fitting index via list_position; recursion depth = largest group).
-ORACLE["seq_packing"] = """
+ORACLE["seq_packing"] = f"""
 WITH RECURSIVE
 sized AS (
   SELECT source, doc_id,
-    (('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT % 8)::INT
+    ({h60_sql("doc_id::VARCHAR")} % 8)::INT
       AS bucket,
     least(len(string_split_regex(trim(text), '[\\t\\n\\x0B\\f\\r ]+')), 512)::BIGINT AS t
   FROM documents
@@ -3645,47 +3584,26 @@ FROM events e LEFT JOIN LATERAL (
 ORDER BY event_id
 """
 
-# r7b: hll_portable_union — the hash-paired HLL twin. The oracle
-# rebuilds the identical md5-derived registers (bucket = h mod 2^12,
-# rho via length(bin(...))), sums 2^(49-r) as exact integers, and
-# applies the same single-division estimator with the SAME embedded
-# alpha*m^2*2^49 literal (never re-derived per engine). DuckDB's
-# sum(BIGINT) widens to HUGEINT; the cast to DOUBLE rounds the same
-# exact integer to the same nearest double as Spark's BIGINT cast.
+# r7b: hll_portable_union — the hash-paired HLL twin: the portable HLL
+# registers and estimator in their SQL form. DuckDB's sum(BIGINT)
+# widens to HUGEINT; the cast to DOUBLE rounds the same exact integer
+# to the same nearest double as Spark's BIGINT cast.
 ORACLE["hll_portable_union"] = f"""
-WITH occ AS (SELECT source, unnest({_TOKS}) AS tk FROM documents),
+WITH occ AS (SELECT source, unnest({TOKS_SQL}) AS tk FROM documents),
 toks AS (SELECT DISTINCT source, tk FROM occ),
-h AS (SELECT source,
-        ('0x' || substr(md5(tk), 1, 15))::UBIGINT::BIGINT AS hv
-      FROM toks),
-rb AS (
-  SELECT source, hv % 4096 AS bucket,
-    CASE WHEN hv // 4096 = 0 THEN 49
-         ELSE 49 - length(bin(hv // 4096)) END AS rho
-  FROM h
-),
+h AS (SELECT source, {h60_sql("tk")} AS hv FROM toks),
+rb AS (SELECT source, {hll_rho_sql()} FROM h),
 regs AS (SELECT source, bucket, max(rho) AS r FROM rb GROUP BY 1, 2),
 uregs AS (SELECT '__all__' AS source, bucket, max(r) AS r
           FROM regs GROUP BY 2),
 allregs AS (SELECT * FROM regs UNION ALL SELECT * FROM uregs),
 est AS (
-  SELECT source, count(*) AS n_hit,
-    sum(1::BIGINT << (49 - r)) AS s_part
+  SELECT source, {hll_partials_sql("*")}
   FROM allregs GROUP BY source
-),
-fin AS (
-  SELECT source, n_hit,
-    (s_part + (4096 - n_hit) * 562949953421312)::DOUBLE AS s_scaled,
-    (4096 - n_hit) AS v_empty
-  FROM est
 )
 SELECT source, n_hit::BIGINT AS n_buckets_hit,
-  floor(CASE WHEN v_empty > 0
-              AND 6.810691763087074e+21 / s_scaled <= 10240.0
-        THEN 4096.0 * ln(4096.0 / v_empty)
-        ELSE 6.810691763087074e+21 / s_scaled END + 0.5)::BIGINT
-    AS est_distinct
-FROM fin ORDER BY source
+  {hll_estimate_sql()} AS est_distinct
+FROM est ORDER BY source
 """
 
 # r7b: winnowing_fingerprint — Schleimer et al. winnowing with the
@@ -3693,11 +3611,11 @@ FROM fin ORDER BY source
 # (h*2^24 + (2^24-1-i)); the oracle replays the identical window min
 # over the identical 31-bit Karp-Rabin k-gram hashes (the hash the
 # paper rolls; exact-integer Horner shared via textstats._kr_expr).
-ORACLE["winnowing_fingerprint"] = r"""
+ORACLE["winnowing_fingerprint"] = rf"""
 WITH c AS (
   SELECT doc_id,
     list_transform(string_split(
-      regexp_replace(lower(regexp_replace(text, '[^a-zA-Z0-9\t\n\x0B\f\r ]+', '', 'g')), '[\t\n\x0B\f\r ]+', ' ', 'g'),
+      {collapse_ws_sql(NORMALIZE_SQL)},
       ''), x -> ascii(x)) AS cs
   FROM documents
 ),
@@ -3735,7 +3653,7 @@ FROM fps GROUP BY doc_id ORDER BY doc_id
 # ntile ordering and the per-bucket averages are integer-deterministic.
 ORACLE["ccnet_perplexity_buckets"] = f"""
 WITH tok AS (
-  SELECT doc_id, lang, unnest({_TOKS}) AS tk FROM documents
+  SELECT doc_id, lang, unnest({TOKS_SQL}) AS tk FROM documents
 ),
 vocab AS (SELECT tk, count(*) AS c FROM tok GROUP BY tk),
 per_doc AS (
@@ -3760,7 +3678,7 @@ FROM bucketed GROUP BY lang, b ORDER BY lang, bucket
 # r7b: vocab_coverage_curve — deterministic (count DESC, token ASC)
 # rank, coverage = exact-BIGINT ratio.
 ORACLE["vocab_coverage_curve"] = f"""
-WITH tok AS (SELECT unnest({_TOKS}) AS tk FROM documents),
+WITH tok AS (SELECT unnest({TOKS_SQL}) AS tk FROM documents),
 vocab AS (SELECT tk, count(*) AS c FROM tok GROUP BY tk),
 ranked AS (
   SELECT c, row_number() OVER (ORDER BY c DESC, tk) AS rnk FROM vocab
@@ -3814,11 +3732,11 @@ FROM stats, gn ORDER BY label
 # ASC rank), accumulates dot/||profile||^2 in HUGEINT (Spark:
 # DECIMAL(38,0)), and resolves the per-doc argmax with the same
 # (score DESC, lang ASC) row_number.
-ORACLE["char_trigram_langid"] = r"""
+ORACLE["char_trigram_langid"] = rf"""
 WITH base AS (
   SELECT doc_id, lang,
     list_transform(string_split(
-      regexp_replace(lower(text), '[\t\n\x0B\f\r ]+', ' ', 'g'),
+      {collapse_ws_sql("lower(text)")},
       ''), x -> ascii(x)) AS cs
   FROM documents
 ),
@@ -3872,11 +3790,11 @@ GROUP BY 1, 2 ORDER BY lang, pred_lang
 # thresholds compared in pure integers; decile = one float op over
 # exact ints.
 ORACLE["minhash_accuracy_audit"] = f"""
-WITH toks AS (SELECT doc_id AS id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id AS id, {TOKS_SQL} AS t FROM documents),
 tt AS (SELECT id, t FROM toks WHERE len(t) >= 3),
 sh AS (
   SELECT DISTINCT id,
-    ('0x' || substr(md5(array_to_string(t[i:i+2], ' ')), 1, 15))::UBIGINT::BIGINT AS hs
+    {h60_sql("array_to_string(t[i:i+2], ' ')")} AS hs
   FROM tt, LATERAL (SELECT unnest(generate_series(1, len(t) - 2)) AS i) g
 ),
 cw AS (SELECT * FROM (VALUES (0, 188173298, 62257558), (1, 1614569235, 1541888525), (2, 1123302577, 1183693761), (3, 941201756, 612741583), (4, 1915815023, 145743895), (5, 1042332867, 1469431003), (6, 1586907769, 1724705301), (7, 1367643000, 567634413), (8, 1182429425, 1450717929), (9, 1840887320, 92282879), (10, 2033346063, 1574816040), (11, 1426551802, 1173352586), (12, 2087082879, 168846213), (13, 1825997516, 891168106), (14, 124724675, 334069097), (15, 1102350415, 1146895919)) t(i, a, b)),
@@ -4007,11 +3925,11 @@ FROM events GROUP BY event_type ORDER BY event_type
 # same Karp-Rabin winnowing selections; boilerplate fingerprints
 # (df > 256) culled before pairing, thresholds and containment in
 # pure integers.
-ORACLE["winnowing_neardup_pairs"] = r"""
+ORACLE["winnowing_neardup_pairs"] = rf"""
 WITH c AS (
   SELECT doc_id,
     list_transform(string_split(
-      regexp_replace(lower(regexp_replace(text, '[^a-zA-Z0-9\t\n\x0B\f\r ]+', '', 'g')), '[\t\n\x0B\f\r ]+', ' ', 'g'),
+      {collapse_ws_sql(NORMALIZE_SQL)},
       ''), x -> ascii(x)) AS cs
   FROM documents
 ),
@@ -4135,7 +4053,7 @@ ORDER BY event_type, rank
 # (offset d × start position i); N12 counts ALL in-window pair slots
 # (pre-min_count), matching the Spark side's totals derivation.
 ORACLE["skipgram_cooccurrence"] = f"""
-WITH toks AS (SELECT {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT {TOKS_SQL} AS t FROM documents),
 pr AS (
   SELECT least(t[i], t[i+d]) AS w1, greatest(t[i], t[i+d]) AS w2
   FROM toks,
@@ -4160,7 +4078,7 @@ ORDER BY pmi DESC, w1, w2 LIMIT 50
 # ratio), per-source windows, integer-division RRF (1e12 // (60+rank))
 # so the fused score is bit-identical across engines.
 ORACLE["rrf_quality_fusion"] = f"""
-WITH toks AS (SELECT doc_id, source, n_chars, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, source, n_chars, {TOKS_SQL} AS t FROM documents),
 st AS (
   SELECT doc_id, source, n_chars,
     CASE WHEN len(t) > 0
@@ -4203,7 +4121,7 @@ ORDER BY source, fused_rank
 # retained, exact-integer fractions. Grid = 8 literal thresholds
 # exploded per doc; one scan, one exchange.
 ORACLE["quality_threshold_sweep"] = f"""
-WITH toks AS (SELECT source, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT source, {TOKS_SQL} AS t FROM documents),
 st AS (
   SELECT source, len(t)::BIGINT AS n_tok,
     CASE WHEN len(t) > 0
@@ -4237,7 +4155,7 @@ FROM agg ORDER BY threshold, source
 # frequency with exact-integer df fraction; the two-level
 # (lang,doc,term) -> (lang,term) aggregation mirrored in SQL.
 ORACLE["stopword_discovery"] = f"""
-WITH toks AS (SELECT lang, doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT lang, doc_id, {TOKS_SQL} AS t FROM documents),
 pd AS (
   SELECT lang, doc_id, w, count(*) AS c
   FROM (SELECT lang, doc_id, unnest(t) AS w FROM toks)
@@ -4264,7 +4182,7 @@ ORDER BY lang, rank
 # divisions (Spark side uses decimal(38,0) `div`); entropy is the one
 # 6-dp smooth float.
 ORACLE["source_concentration_audit"] = f"""
-WITH toks AS (SELECT source, lang, len({_TOKS}) AS n_tok FROM documents),
+WITH toks AS (SELECT source, lang, len({TOKS_SQL}) AS n_tok FROM documents),
 base AS (SELECT source, lang, count(*) AS n_docs, sum(n_tok) AS t
          FROM toks GROUP BY source, lang),
 gs AS (SELECT source AS grp, sum(n_docs) AS n_docs, sum(t) AS t
@@ -4308,7 +4226,7 @@ FROM (SELECT * FROM a_s UNION ALL SELECT * FROM a_l) ORDER BY axis
 ORACLE["token_budget_fill"] = f"""
 WITH sized AS (
   SELECT source, doc_id, md5(doc_id::VARCHAR) AS h,
-         len({_TOKS}) AS n_tok
+         len({TOKS_SQL}) AS n_tok
   FROM documents
 ),
 tot AS (SELECT (sum(n_tok) // 5) // count(DISTINCT source) AS budget
@@ -4335,7 +4253,7 @@ FROM run GROUP BY source ORDER BY source
 # source training order; position = (q_rank-1)*n_sources + src_idx,
 # all exact integers.
 ORACLE["curriculum_interleave"] = f"""
-WITH toks AS (SELECT doc_id, source, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, source, {TOKS_SQL} AS t FROM documents),
 st AS (
   SELECT doc_id, source,
     CASE WHEN len(t) > 0
@@ -4364,7 +4282,7 @@ ORDER BY position LIMIT 100
 # first source (alphabetical rank) that contributes them; per-source
 # novel/distinct gram counts with floor-divided novelty fraction.
 ORACLE["source_novelty_attribution"] = f"""
-WITH toks AS (SELECT source, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT source, {TOKS_SQL} AS t FROM documents),
 srcs AS (
   SELECT source, row_number() OVER (ORDER BY source) AS src_rank
   FROM (SELECT DISTINCT source FROM documents)
@@ -4397,7 +4315,7 @@ FROM per ORDER BY src_rank
 # rank Spearman between n_chars and the distinct-token ratio; 6-dp
 # smooth-function rounding, ranks use the portable doc_id tie-break.
 ORACLE["quality_signal_correlation"] = f"""
-WITH toks AS (SELECT doc_id, source, n_chars, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, source, n_chars, {TOKS_SQL} AS t FROM documents),
 st AS (
   SELECT doc_id, source, n_chars,
     CASE WHEN len(t) > 0
@@ -4420,7 +4338,7 @@ FROM rk GROUP BY source ORDER BY source
 # exact integer micro-unit ratios; the three gram windows replayed via
 # generate_series slices over the same token arrays.
 ORACLE["ngram_diversity_audit"] = f"""
-WITH toks AS (SELECT source, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT source, {TOKS_SQL} AS t FROM documents),
 tn AS (
   SELECT source, t, n
   FROM toks CROSS JOIN (SELECT unnest([1, 2, 3]) AS n) ns
@@ -4441,7 +4359,7 @@ FROM pg GROUP BY source, n ORDER BY source, n
 # TTR, dominant language) with floor-div micro-unit ratios and the
 # (count desc, lang asc) dominant-language tie-break mirrored.
 ORACLE["dataset_card"] = f"""
-WITH toks AS (SELECT source, lang, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT source, lang, {TOKS_SQL} AS t FROM documents),
 sized AS (SELECT source, lang, len(t) AS n_tok, t FROM toks),
 vol AS (
   SELECT source, count(*) AS n_docs, count(DISTINCT lang) AS n_langs,
@@ -4480,7 +4398,7 @@ ORDER BY vol.source
 # r7d: badwords_filter — C4-style blocklist audit; literal-list
 # membership on both engines, threshold in integer micro-units.
 ORACLE["badwords_filter"] = f"""
-WITH toks AS (SELECT source, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT source, {TOKS_SQL} AS t FROM documents),
 pd AS (
   SELECT source, len(t) AS n_tok,
     len(list_filter(t, x -> list_contains(['slow', 'dup', 'leak'], x)))
@@ -4595,11 +4513,11 @@ ORDER BY ag.component
 # as minhash_accuracy_audit; powers evaluated by REPEATED SQUARING so
 # no pow()/libm enters the hash (see the operator docstring).
 ORACLE["lsh_band_tuning"] = f"""
-WITH toks AS (SELECT doc_id AS id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id AS id, {TOKS_SQL} AS t FROM documents),
 tt AS (SELECT id, t FROM toks WHERE len(t) >= 3),
 sh AS (
   SELECT DISTINCT id,
-    ('0x' || substr(md5(array_to_string(t[i:i+2], ' ')), 1, 15))::UBIGINT::BIGINT AS hs
+    {h60_sql("array_to_string(t[i:i+2], ' ')")} AS hs
   FROM tt, LATERAL (SELECT unnest(generate_series(1, len(t) - 2)) AS i) g
 ),
 cw AS (SELECT * FROM (VALUES (0, 188173298, 62257558), (1, 1614569235, 1541888525), (2, 1123302577, 1183693761), (3, 941201756, 612741583), (4, 1915815023, 145743895), (5, 1042332867, 1469431003), (6, 1586907769, 1724705301), (7, 1367643000, 567634413), (8, 1182429425, 1450717929), (9, 1840887320, 92282879), (10, 2033346063, 1574816040), (11, 1426551802, 1173352586), (12, 2087082879, 168846213), (13, 1825997516, 891168106), (14, 124724675, 334069097), (15, 1102350415, 1146895919)) t(i, a, b)),
@@ -4664,11 +4582,11 @@ FROM x11 ORDER BY bands, jbucket
 # r7d: packing_boundary_audit — cross-document attention mass of the
 # first-fit packing plan; same lockstep recursive-CTE packer as
 # seq_packing, rolled up with the all-integer (S^2 - ssq)/2 identity.
-ORACLE["packing_boundary_audit"] = """
+ORACLE["packing_boundary_audit"] = f"""
 WITH RECURSIVE
 sized AS (
   SELECT source, doc_id,
-    (('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT % 8)::INT
+    ({h60_sql("doc_id::VARCHAR")} % 8)::INT
       AS bucket,
     least(len(string_split_regex(trim(text), '[\\t\\n\\x0B\\f\\r ]+')), 512)::BIGINT AS t
   FROM documents
@@ -4711,7 +4629,7 @@ FROM per_pack GROUP BY source ORDER BY source
 # r7e: preference_pair_build — extreme-rank DPO pair construction per
 # source; both rank windows and the strict-margin filter mirrored.
 ORACLE["preference_pair_build"] = f"""
-WITH toks AS (SELECT source, doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT source, doc_id, {TOKS_SQL} AS t FROM documents),
 scored AS (
   SELECT source, doc_id,
     CASE WHEN len(t) > 0
@@ -4743,7 +4661,7 @@ ORDER BY b.source, pair_rank
 
 # r7e: join_skew_audit — hash-partition load table for the two event
 # join-key axes; portable md5 partition assignment mirrored.
-ORACLE["join_skew_audit"] = """
+ORACLE["join_skew_audit"] = f"""
 WITH ax AS (
   SELECT 'event_type' AS axis, event_type::VARCHAR AS k FROM events
   UNION ALL
@@ -4752,7 +4670,7 @@ WITH ax AS (
 keys AS (SELECT axis, k, count(*) AS c FROM ax GROUP BY axis, k),
 parts AS (
   SELECT axis,
-    ('0x' || substr(md5(k), 1, 15))::UBIGINT::BIGINT % 32 AS partition_id,
+    {h60_sql("k")} % 32 AS partition_id,
     count(*) AS n_keys, sum(c) AS n_rows, max(c) AS max_key_rows
   FROM keys GROUP BY 1, 2
 ),
@@ -4769,7 +4687,7 @@ ORDER BY p.axis, partition_id
 # aggregate, replayed as a lockstep recursive CTE carrying shard loads.
 ORACLE["shard_layout_plan"] = f"""
 WITH RECURSIVE
-toks AS (SELECT source, len({_TOKS}) AS n_tok FROM documents),
+toks AS (SELECT source, len({TOKS_SQL}) AS n_tok FROM documents),
 m AS (
   SELECT source, sum(n_tok) AS tokens, count(*) AS n_docs
   FROM toks GROUP BY source
@@ -4799,7 +4717,7 @@ FROM ff ORDER BY source
 # per-source mean quality; integer CDF thresholds and order-statistic
 # bounds mirrored exactly (see the operator docstring).
 ORACLE["bootstrap_ci_quality"] = f"""
-WITH toks AS (SELECT source, doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT source, doc_id, {TOKS_SQL} AS t FROM documents),
 scored AS (
   SELECT source, doc_id,
     CASE WHEN len(t) > 0
@@ -4811,8 +4729,7 @@ pt AS (SELECT source, sum(q_e6) // count(*) AS point_e6
        FROM scored GROUP BY source),
 reps AS (
   SELECT source, doc_id, q_e6, b,
-    ('0x' || substr(md5(b::VARCHAR || ':' || doc_id::VARCHAR), 1, 15))
-      ::UBIGINT::BIGINT AS u
+    {h60_sql("b::VARCHAR || ':' || doc_id::VARCHAR")} AS u
   FROM scored CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS b) bs
 ),
 wt AS (
@@ -4851,7 +4768,7 @@ ORDER BY pt.source
 # r7f: ks_drift_quality — exact KS statistic per source vs rest via
 # integer cross-multiplication on the (source x distinct-score) grid.
 ORACLE["ks_drift_quality"] = f"""
-WITH toks AS (SELECT source, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT source, {TOKS_SQL} AS t FROM documents),
 scored AS (
   SELECT source,
     CASE WHEN len(t) > 0
@@ -4917,11 +4834,11 @@ FROM cnt CROSS JOIN base ORDER BY gap_minutes
 # r7f: dedup_threshold_sweep — removal-volume curve per Jaccard cutoff
 # over the shared CW pair base; integer threshold comparisons.
 ORACLE["dedup_threshold_sweep"] = f"""
-WITH toks AS (SELECT doc_id AS id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id AS id, {TOKS_SQL} AS t FROM documents),
 tt AS (SELECT id, t FROM toks WHERE len(t) >= 3),
 sh AS (
   SELECT DISTINCT id,
-    ('0x' || substr(md5(array_to_string(t[i:i+2], ' ')), 1, 15))::UBIGINT::BIGINT AS hs
+    {h60_sql("array_to_string(t[i:i+2], ' ')")} AS hs
   FROM tt, LATERAL (SELECT unnest(generate_series(1, len(t) - 2)) AS i) g
 ),
 cw AS (SELECT * FROM (VALUES (0, 188173298, 62257558), (1, 1614569235, 1541888525), (2, 1123302577, 1183693761), (3, 941201756, 612741583), (4, 1915815023, 145743895), (5, 1042332867, 1469431003), (6, 1586907769, 1724705301), (7, 1367643000, 567634413), (8, 1182429425, 1450717929), (9, 1840887320, 92282879), (10, 2033346063, 1574816040), (11, 1426551802, 1173352586), (12, 2087082879, 168846213), (13, 1825997516, 891168106), (14, 124724675, 334069097), (15, 1102350415, 1146895919)) t(i, a, b)),
@@ -5123,7 +5040,7 @@ ORDER BY s.join_name
 # r7h: fightin_words — Monroe et al. prior-smoothed log-odds z per
 # source; rank on the 6-dp-rounded z (term asc ties), formulas mirrored.
 ORACLE["fightin_words"] = f"""
-WITH toks AS (SELECT source, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT source, {TOKS_SQL} AS t FROM documents),
 counts AS (
   SELECT source, w, count(*) AS y_iw
   FROM (SELECT source, unnest(t) AS w FROM toks) GROUP BY source, w
@@ -5198,7 +5115,7 @@ FROM cu ORDER BY event_type, day
 # r7i: kwic_concordance — keyword-in-context page for 'spark', width 3;
 # 1-based DuckDB slices mirrored to Spark's slice() bounds, 0-based pos.
 ORACLE["kwic_concordance"] = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
 hits AS (
   SELECT doc_id, t, p
   FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t))) AS p) g
@@ -5542,7 +5459,7 @@ SELECT source, n_docs, words, syllables, polysyllables, sentences,
   CASE WHEN words > 0 THEN (polysyllables * 1000000 // words) END
     AS poly_rate_e6
 FROM g ORDER BY source
-""".replace("{toks}", _TOKS)
+""".replace("{toks}", TOKS_SQL)
 
 # r7l: benford_audit — shares/counts exact integers; the Benford
 # expectation and chi2 contribution are the only floats (per-digit
@@ -5718,9 +5635,9 @@ GROUP BY 1 ORDER BY 1
 # docs in some global order"; totals exact BIGINT, beta the one float.
 ORACLE["vocab_growth_heaps"] = f"""
 WITH base AS (
-  SELECT ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT % 16
+  SELECT {h60_sql("doc_id::VARCHAR")} % 16
            AS b,
-         {_TOKS} AS t
+         {TOKS_SQL} AS t
   FROM documents
 ),
 per_bucket AS (
@@ -5902,7 +5819,7 @@ FROM agg"""
 ORACLE["quality_filter_agreement"] = (
     f"""
 WITH base0 AS (
-  SELECT {_TOKS} AS t FROM documents
+  SELECT {TOKS_SQL} AS t FROM documents
 ),
 base AS (
   SELECT len(t) AS n,
@@ -5942,7 +5859,7 @@ agg AS (
 ORACLE["skyline_quality_frontier"] = f"""
 WITH scored AS (
   SELECT doc_id, source, n_chars::BIGINT AS n_chars,
-         len(list_distinct({_TOKS}))::BIGINT AS distinct_tokens
+         len(list_distinct({TOKS_SQL}))::BIGINT AS distinct_tokens
   FROM documents
 )
 SELECT s.doc_id, s.source, s.n_chars, s.distinct_tokens
@@ -5960,7 +5877,7 @@ ORDER BY s.n_chars DESC, s.doc_id
 # every window runs on a bounded grid.
 ORACLE["auc_roc_langid"] = f"""
 WITH base AS (
-  SELECT len(list_intersect({_TOKS},
+  SELECT len(list_intersect({TOKS_SQL},
          ['the','and','of','to','a','in','is','it','you','that']))::BIGINT AS s,
          (lang = 'en')::BIGINT AS pos
   FROM documents
@@ -6051,8 +5968,8 @@ FROM km2 ORDER BY t
 # exact BIGINT (positive, so DIV == // here).
 ORACLE["keyphrase_rake"] = f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_TOKS}) AS w,
-         generate_subscripts({_TOKS}, 1) AS pos
+  SELECT doc_id, unnest({TOKS_SQL}) AS w,
+         generate_subscripts({TOKS_SQL}, 1) AS pos
   FROM documents
 ),
 marked AS (
@@ -6315,7 +6232,7 @@ FROM hist CROSS JOIN tot ORDER BY bin
 # surviving pair, 6 dp.  df cap (200) mirrors the Spark stop-term
 # guard.
 ORACLE["sparse_cosine_pairs_topk"] = f"""
-WITH toks AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
+WITH toks AS (SELECT doc_id, unnest({TOKS_SQL}) AS term FROM documents),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
 df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
 n AS (SELECT count(*) AS n FROM documents),
@@ -6392,7 +6309,7 @@ FROM credited GROUP BY credit ORDER BY credit
 # r7w: term_burstiness — zero-inclusive VMR from three exact BIGINTs,
 # one double division, 6 dp.
 ORACLE["term_burstiness"] = f"""
-WITH toks AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
+WITH toks AS (SELECT doc_id, unnest({TOKS_SQL}) AS term FROM documents),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
 n AS (SELECT count(*) AS n FROM documents),
 stats AS (
@@ -6412,8 +6329,8 @@ LIMIT 200
 # division; micro-unit rates of positive BIGINTs.
 ORACLE["doc_position_profile"] = f"""
 WITH toks AS (
-  SELECT len({_TOKS}) AS len, unnest({_TOKS}) AS w,
-         generate_subscripts({_TOKS}, 1) - 1 AS pos0
+  SELECT len({TOKS_SQL}) AS len, unnest({TOKS_SQL}) AS w,
+         generate_subscripts({TOKS_SQL}, 1) - 1 AS pos0
   FROM documents
 ),
 graded AS (
@@ -6432,7 +6349,7 @@ FROM graded GROUP BY decile ORDER BY decile
 # r7x: dedup_containment — directed Broder containment; the qualifying
 # test and the emitted ratio are pure integers.
 ORACLE["dedup_containment"] = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
 sh AS (
   SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
   FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i) g
@@ -6457,7 +6374,7 @@ ORDER BY id_small, id_big
 # >= 0.5) rolled to the unordered source-pair matrix with exact
 # micro-unit rates.
 ORACLE["cross_source_duplication_matrix"] = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
 sh AS (
   SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
   FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i) g
@@ -6502,8 +6419,8 @@ ORDER BY src_a, src_b
 # gap grid is built first so zero-overlap boundaries survive.
 ORACLE["text_tiling_boundaries"] = f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_TOKS}) AS w,
-         generate_subscripts({_TOKS}, 1) - 1 AS pos0
+  SELECT doc_id, unnest({TOKS_SQL}) AS w,
+         generate_subscripts({TOKS_SQL}, 1) - 1 AS pos0
   FROM documents
 ),
 bt AS (SELECT DISTINCT doc_id, pos0 // 20 AS b, w FROM toks),
@@ -6584,7 +6501,7 @@ FROM j ORDER BY event_type
 # the 30-bit md5 base makes signatures bit-identical; the estimator
 # numerator clamps at 0 before integer division.
 ORACLE["minhash_bbit_estimate"] = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
 sh AS (
   SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
   FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i) g
@@ -6597,7 +6514,7 @@ cand AS (
 ),
 hashed AS (
   SELECT doc_id,
-    (('0x' || substr(md5(s), 1, 15))::UBIGINT::BIGINT
+    ({h60_sql("s")}
      % 1073741824) AS x
   FROM sh
 ),
@@ -6685,7 +6602,7 @@ FROM scored GROUP BY event_type ORDER BY event_type
 # ranks; absent top-N terms take rank top_n + 1; exact-BIGINT Σd².
 ORACLE["source_rank_correlation"] = f"""
 WITH toks AS (
-  SELECT source, unnest({_TOKS}) AS term FROM documents
+  SELECT source, unnest({TOKS_SQL}) AS term FROM documents
 ),
 gtop AS (
   SELECT term FROM (
@@ -6774,7 +6691,7 @@ FROM runs ORDER BY event_type
 ORACLE["quality_kendall_tau"] = f"""
 WITH cells AS (
   SELECT source, n_chars // 50 AS x,
-         len(list_distinct({_TOKS})) // 5 AS y,
+         len(list_distinct({TOKS_SQL})) // 5 AS y,
          count(*) AS n
   FROM documents GROUP BY 1, 2, 3
 ),
@@ -6895,9 +6812,9 @@ ORDER BY from_type
 # engines); one double division, 6 dp.
 ORACLE["quality_flag_odds_ratio"] = f"""
 WITH base AS (
-  SELECT source, len({_TOKS}) AS n,
-         len(list_distinct({_TOKS})) AS nd,
-         coalesce(list_sum(list_transform({_TOKS},
+  SELECT source, len({TOKS_SQL}) AS n,
+         len(list_distinct({TOKS_SQL})) AS nd,
+         coalesce(list_sum(list_transform({TOKS_SQL},
                   x -> length(x))), 0) AS chars
   FROM documents
 ),
@@ -6965,7 +6882,7 @@ FROM exploded ORDER BY source, pct
 ORACLE["quality_decile_lift"] = f"""
 WITH base AS (
   SELECT doc_id,
-    len(list_intersect({_TOKS},
+    len(list_intersect({TOKS_SQL},
         ['the','and','of','to','a','in','is','it','you','that']))::BIGINT
       AS s,
     (lang = 'en')::BIGINT AS pos
@@ -7012,7 +6929,7 @@ ORDER BY decile
 # r8c: token_context_diversity — distinct left/right neighbor counts
 # from one bigram pass; all-integer diversity ratio.
 ORACLE["token_context_diversity"] = f"""
-WITH toked AS (SELECT {_TOKS} AS t FROM documents),
+WITH toked AS (SELECT {TOKS_SQL} AS t FROM documents),
 bi AS (
   SELECT t[i] AS l, t[i + 1] AS r
   FROM toked, LATERAL (SELECT unnest(generate_series(1, len(t) - 1))
@@ -7108,7 +7025,7 @@ ORDER BY source
 # r8d: dedup_shingle_size_sweep — one token pass, three k-grids, pure
 # integer qualify tests; 3-row output.
 ORACLE["dedup_shingle_size_sweep"] = f"""
-WITH toked AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toked AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
 sh2 AS (
   SELECT DISTINCT doc_id AS id, array_to_string(t[i:i+1], ' ') AS s
   FROM toked, LATERAL (SELECT unnest(generate_series(1, len(t) - 1))
@@ -7218,7 +7135,7 @@ ORDER BY event_type, wk
 # cumulative token shares.
 ORACLE["token_mass_lorenz"] = f"""
 WITH base AS (
-  SELECT source, doc_id, len({_TOKS})::BIGINT AS tk FROM documents
+  SELECT source, doc_id, len({TOKS_SQL})::BIGINT AS tk FROM documents
 ),
 tot AS (
   SELECT source, count(*)::BIGINT AS n_docs, sum(tk)::BIGINT AS total_tk
@@ -7362,14 +7279,14 @@ c{k} AS (
 # semdedup_ivf. WITH RECURSIVE is harmless for the non-recursive
 # consumer and required by semdedup's greedy-chain CTE.
 _KM_PREFIX = (
-    """WITH RECURSIVE q AS (
+    f"""WITH RECURSIVE q AS (
   SELECT vec_id,
     list_transform(embedding::DOUBLE[],
                    x -> (floor(x * 1000000.0 + 0.5)::BIGINT)::DOUBLE) AS e
   FROM embeddings
 ),
 c0 AS (
-  SELECT (('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::UBIGINT
+  SELECT ({h60_sql("vec_id::VARCHAR")}
           % 16)::BIGINT AS list_id,
          arg_min(e, vec_id) AS cvec
   FROM q GROUP BY 1
@@ -7462,10 +7379,10 @@ FROM g ORDER BY vec_id
 # nonnegative, so // == Spark's DIV), ECE from a 1-row cross join.
 ORACLE["quality_calibration_bins"] = f"""
 WITH base AS (
-  SELECT len(list_filter({_TOKS},
+  SELECT len(list_filter({TOKS_SQL},
            t -> list_contains(['the','and','of','to','a','in','is','it',
                                'you','that'], t)))::BIGINT AS hits,
-         len({_TOKS})::BIGINT AS n_tok,
+         len({TOKS_SQL})::BIGINT AS n_tok,
          (lang = 'en')::BIGINT AS pos
   FROM documents
 ),
@@ -7491,14 +7408,14 @@ SELECT bin::BIGINT AS bin, n_docs, n_pos, mean_score_e6, pos_rate_e6,
 FROM g CROSS JOIN tot ORDER BY bin
 """
 
-# r8g: partition_skew_plan — md5-60bit(user_id) % 32 buckets; loads and
+# r8g: partition_skew_plan — h60(user_id) % 32 buckets; loads and
 # factors in exact micro-units (all nonnegative).
-ORACLE["partition_skew_plan"] = """
+ORACLE["partition_skew_plan"] = f"""
 WITH per_key AS (
   SELECT user_id, count(*)::BIGINT AS c FROM events GROUP BY 1
 ),
 per_bucket AS (
-  SELECT (('0x' || substr(md5(user_id::VARCHAR), 1, 15))::UBIGINT
+  SELECT ({h60_sql("user_id::VARCHAR")}
           % 32)::BIGINT AS bucket,
          sum(c)::BIGINT AS n_rows, count(*)::BIGINT AS n_keys
   FROM per_key GROUP BY 1
@@ -7521,7 +7438,7 @@ FROM per_bucket CROSS JOIN tot ORDER BY bucket
 ORACLE["token_positional_entropy"] = f"""
 WITH toks AS (
   SELECT generate_subscripts(t, 1) - 1 AS pos, unnest(t) AS tok
-  FROM (SELECT {_TOKS} AS t FROM documents)
+  FROM (SELECT {TOKS_SQL} AS t FROM documents)
 ),
 cnt AS (
   SELECT pos, tok, count(*)::BIGINT AS c
@@ -7633,7 +7550,7 @@ FROM allrows ORDER BY source
 # same md5; per-width distinct prefix counts; birthday expectation in
 # HUGEINT (Spark: DECIMAL(38,0)).
 ORACLE["hash_width_collision_audit"] = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
 sh AS (
   SELECT DISTINCT array_to_string(t[i:i+2], ' ') AS s
   FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i) g
@@ -7662,13 +7579,13 @@ ORDER BY bits DESC
 
 # r8i: experiment_srm_audit — md5 % 2 arms; SRM and 2x2 chi-squares in
 # exact micro-units, the 2x2 numerator in HUGEINT.
-ORACLE["experiment_srm_audit"] = """
+ORACLE["experiment_srm_audit"] = f"""
 WITH per_user AS (
   SELECT user_id, max((event_type = 'purchase')::BIGINT) AS conv
   FROM events GROUP BY user_id
 ),
 arms AS (
-  SELECT (('0x' || substr(md5(user_id::VARCHAR), 1, 15))::UBIGINT
+  SELECT ({h60_sql("user_id::VARCHAR")}
           % 2)::BIGINT AS arm,
          count(*)::BIGINT AS n_users, sum(conv)::BIGINT AS n_conv
   FROM per_user GROUP BY 1
@@ -7704,7 +7621,7 @@ FROM arms CROSS JOIN stats ORDER BY arm
 # r8j: near-dup edge base at threshold 0.5 for the graph-structure
 # audits (same inverted-index pair build as _SHINGLES, lower cut).
 _EDGES_05 = f"""
-toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
 sh AS (
   SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
   FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i) g
@@ -7819,10 +7736,10 @@ GROUP BY source ORDER BY source
 # r8k: shard_order_runs_audit — adjacent same-source pairs in the
 # md5-keyed training order vs the exact permutation expectation
 # sum n_s(n_s-1)/n; HUGEINT numerators, micro-unit truncation.
-ORACLE["shard_order_runs_audit"] = """
+ORACLE["shard_order_runs_audit"] = f"""
 WITH keyed AS (
   SELECT doc_id, source, md5(doc_id::VARCHAR) AS k,
-    ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT % 8
+    {h60_sql("doc_id::VARCHAR")} % 8
       AS shard
   FROM documents
 ),
@@ -8087,10 +8004,10 @@ ORDER BY s.server
 # r8m: kfold_strata_audit — md5 % k folds, stratum x fold grid with
 # materialised zero folds, cross-multiplied exact chi-square
 # (HUGEINT / DECIMAL(38,0)), truncating micro-unit division.
-ORACLE["kfold_strata_audit"] = """
+ORACLE["kfold_strata_audit"] = f"""
 WITH counts AS (
   SELECT lang, source,
-    (('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT % 5)
+    ({h60_sql("doc_id::VARCHAR")} % 5)
       AS fold,
     count(*)::BIGINT AS n_fs
   FROM documents GROUP BY 1, 2, 3
@@ -8150,29 +8067,18 @@ def _kcore_sql(ks=(2, 3), n_rounds=5) -> str:
 
 ORACLE["kcore_dedup_graph"] = _kcore_sql()
 
-# r8n: rolling_distinct_users_hll — the hll_portable_union register
-# math (60-bit md5, 4096 buckets, exact 2^(49-r) partials, linear
-# counting under 2.5m) slid over a 7-day RANGE window on the integer
-# day index; grid materialises never-hit (day, bucket) cells so the
-# window merge sees every register.
-ORACLE["rolling_distinct_users_hll"] = """
+# r8n: rolling_distinct_users_hll — the portable HLL registers slid
+# over a 7-day RANGE window on the integer day index; grid materialises
+# never-hit (day, bucket) cells so the window merge sees every register.
+ORACLE["rolling_distinct_users_hll"] = f"""
 WITH du AS (
   SELECT DISTINCT epoch_us(ts) // 86400000000 AS day, user_id FROM events
 ),
 exact AS (
   SELECT day, count(*)::BIGINT AS exact_day_distinct FROM du GROUP BY day
 ),
-h AS (
-  SELECT day,
-    ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::UBIGINT::BIGINT AS hv
-  FROM du
-),
-rb AS (
-  SELECT day, hv % 4096 AS bucket,
-    CASE WHEN hv // 4096 = 0 THEN 49
-         ELSE 49 - length(bin(hv // 4096)) END AS rho
-  FROM h
-),
+h AS (SELECT day, {h60_sql("user_id::VARCHAR")} AS hv FROM du),
+rb AS (SELECT day, {hll_rho_sql()} FROM h),
 regs AS (SELECT day, bucket, max(rho) AS r FROM rb GROUP BY 1, 2),
 days AS (SELECT DISTINCT day FROM du),
 wd AS (
@@ -8193,27 +8099,13 @@ rolled AS (
     RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS r
   FROM grid
 ),
-est AS (
-  SELECT day, count(r) AS n_hit,
-    sum(1::BIGINT << (49 - r)) AS s_part
-  FROM rolled GROUP BY day
-),
-fin AS (
-  SELECT day, n_hit,
-    (s_part + (4096 - n_hit) * 562949953421312)::DOUBLE AS s_scaled,
-    (4096 - n_hit) AS v_empty
-  FROM est
-)
-SELECT (DATE '1970-01-01' + fin.day::INT)::VARCHAR AS day,
+est AS (SELECT day, {hll_partials_sql()} FROM rolled GROUP BY day)
+SELECT (DATE '1970-01-01' + est.day::INT)::VARCHAR AS day,
   wd.n_days_window,
   n_hit::BIGINT AS n_buckets_hit,
-  floor(CASE WHEN v_empty > 0
-              AND 6.810691763087074e+21 / s_scaled <= 10240.0
-        THEN 4096.0 * ln(4096.0 / v_empty)
-        ELSE 6.810691763087074e+21 / s_scaled END + 0.5)::BIGINT
-    AS est_rolling_distinct,
+  {hll_estimate_sql()} AS est_rolling_distinct,
   exact.exact_day_distinct
-FROM fin JOIN wd ON fin.day = wd.day JOIN exact ON fin.day = exact.day
+FROM est JOIN wd ON est.day = wd.day JOIN exact ON est.day = exact.day
 ORDER BY day
 """
 
@@ -8471,7 +8363,7 @@ FROM terms GROUP BY source, n_src ORDER BY source
 # the md5-armed experiment (first-event entry, first-purchase
 # conversion); exact HUGEINT cross products, 3841458 e6-critical
 # literal shared with the Spark side, windows on the 2 x |days| grid.
-ORACLE["experiment_peeking_audit"] = """
+ORACLE["experiment_peeking_audit"] = f"""
 WITH per_user AS (
   SELECT user_id,
     min(epoch_us(ts) // 86400000000) AS entry_day,
@@ -8480,7 +8372,7 @@ WITH per_user AS (
   FROM events GROUP BY user_id
 ),
 armed AS (
-  SELECT (('0x' || substr(md5(user_id::VARCHAR), 1, 15))::UBIGINT
+  SELECT ({h60_sql("user_id::VARCHAR")}
           % 2)::BIGINT AS arm, entry_day, conv_day
   FROM per_user
 ),
@@ -8584,7 +8476,7 @@ FROM rows_out ORDER BY col_name
 # r8r: ab_cuped_adjustment — exact HUGEINT moment sums, pooled theta,
 # identical float operation order, zero-variance guards on integer
 # tests.
-ORACLE["ab_cuped_adjustment"] = """
+ORACLE["ab_cuped_adjustment"] = f"""
 WITH base AS (
   SELECT user_id, epoch_us(ts) // 86400000000 AS day,
     round(value * 1e6)::BIGINT AS v
@@ -8598,7 +8490,7 @@ per_user AS (
   FROM base CROSS JOIN d0 GROUP BY user_id
 ),
 armed AS (
-  SELECT (('0x' || substr(md5(user_id::VARCHAR), 1, 15))::UBIGINT
+  SELECT ({h60_sql("user_id::VARCHAR")}
           % 2)::BIGINT AS arm, x, y
   FROM per_user
 ),
@@ -8639,19 +8531,15 @@ FROM stats ORDER BY arm
 
 # r8r: dedup_token_savings — the dedup_keep_best recursive-CTE CC +
 # keep-longest policy, rolled up to per-source doc/token savings.
-ORACLE["dedup_token_savings"] = r"""
+ORACLE["dedup_token_savings"] = rf"""
 WITH RECURSIVE
 toksrc AS (
   SELECT doc_id, source, n_chars,
-    len(list_filter(string_split_regex(lower(regexp_replace(text,
-      '[^a-zA-Z0-9\t\n\x0B\f\r ]+', '', 'g')), '[\t\n\x0B\f\r ]+'),
-      t -> t <> ''))::BIGINT AS n_tokens
+    len({TOKS_SQL})::BIGINT AS n_tokens
   FROM documents
 ),
 j AS (WITH
-t2 AS (SELECT doc_id, list_filter(string_split_regex(lower(
-         regexp_replace(text, '[^a-zA-Z0-9\t\n\x0B\f\r ]+', '', 'g')),
-         '[\t\n\x0B\f\r ]+'), t -> t <> '') AS t FROM documents),
+t2 AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
 sh AS (
   SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
   FROM t2, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i) g
@@ -8844,11 +8732,11 @@ ORDER BY s.event_type, day
 # r8t: isotonic_calibration_pav — quality_calibration_bins' score/
 # label pass, then the exact minimax identity on e6-rounded interval
 # means (bounded triple cross over occupied bins).
-ORACLE["isotonic_calibration_pav"] = """
+ORACLE["isotonic_calibration_pav"] = f"""
 WITH base AS (
-  SELECT len(list_filter(list_filter(string_split_regex(lower(regexp_replace(text, '[^a-zA-Z0-9\t\n\x0B\f\r ]+', '', 'g')), '[\t\n\x0B\f\r ]+'), t -> t <> ''), t -> list_contains(['the','and','of','to','a','in','is','it','you','that'], t)))::BIGINT
+  SELECT len(list_filter({TOKS_SQL}, t -> list_contains(['the','and','of','to','a','in','is','it','you','that'], t)))::BIGINT
            AS hits,
-         len(list_filter(string_split_regex(lower(regexp_replace(text, '[^a-zA-Z0-9\t\n\x0B\f\r ]+', '', 'g')), '[\t\n\x0B\f\r ]+'), t -> t <> ''))::BIGINT AS n_tok,
+         len({TOKS_SQL})::BIGINT AS n_tok,
          (lang = 'en')::BIGINT AS pos
   FROM documents
 ),
@@ -8962,7 +8850,7 @@ ORACLE["embedding_jl_distortion_audit"] = _jl_sql()
 ORACLE["negative_sampling_table"] = f"""
 WITH counts AS (
   SELECT tk, count(*)::BIGINT AS c FROM (
-    SELECT unnest({_TOKS}) AS tk FROM documents)
+    SELECT unnest({TOKS_SQL}) AS tk FROM documents)
   GROUP BY tk
 ),
 weighted AS (
@@ -8984,45 +8872,23 @@ SELECT rank::BIGINT AS rank, tk AS token, c AS cnt,
 FROM top CROSS JOIN tot ORDER BY rank
 """
 
-# r8u: hll_intersection_audit — hll_portable_union's registers and
+# r8u: hll_intersection_audit — the portable HLL registers and
 # estimator, pair unions via union-all + bucket-wise max, exact
 # distinct-token intersections as ground truth.
 ORACLE["hll_intersection_audit"] = f"""
-WITH occ AS (SELECT source, unnest({_TOKS}) AS tk FROM documents),
+WITH occ AS (SELECT source, unnest({TOKS_SQL}) AS tk FROM documents),
 toks AS (SELECT DISTINCT source, tk FROM occ),
 exact AS (
   SELECT a.source AS s1, b.source AS s2, count(*)::BIGINT AS exact_common
   FROM toks a JOIN toks b ON a.tk = b.tk AND a.source < b.source
   GROUP BY 1, 2
 ),
-h AS (SELECT source,
-        ('0x' || substr(md5(tk), 1, 15))::UBIGINT::BIGINT AS hv
-      FROM toks),
-rb AS (
-  SELECT source, hv % 4096 AS bucket,
-    CASE WHEN hv // 4096 = 0 THEN 49
-         ELSE 49 - length(bin(hv // 4096)) END AS rho
-  FROM h
-),
+h AS (SELECT source, {h60_sql("tk")} AS hv FROM toks),
+rb AS (SELECT source, {hll_rho_sql()} FROM h),
 regs AS MATERIALIZED (
   SELECT source, bucket, max(rho) AS r FROM rb GROUP BY 1, 2),
-est1 AS (
-  SELECT source, count(*) AS n_hit,
-    sum(1::BIGINT << (49 - r)) AS s_part
-  FROM regs GROUP BY source
-),
-sing AS (
-  SELECT source,
-    floor(CASE WHEN (4096 - n_hit) > 0
-                AND 6.810691763087074e+21
-                    / ((s_part + (4096 - n_hit) * 562949953421312)::DOUBLE)
-                    <= 10240.0
-          THEN 4096.0 * ln(4096.0 / (4096 - n_hit))
-          ELSE 6.810691763087074e+21
-               / ((s_part + (4096 - n_hit) * 562949953421312)::DOUBLE)
-          END + 0.5)::BIGINT AS est
-  FROM est1
-),
+est1 AS (SELECT source, {hll_partials_sql("*")} FROM regs GROUP BY source),
+sing AS (SELECT source, {hll_estimate_sql()} AS est FROM est1),
 srcs AS (SELECT DISTINCT source FROM regs),
 pairs AS (
   SELECT x.source AS s1, y.source AS s2
@@ -9038,22 +8904,8 @@ pair_regs AS (
   GROUP BY 1, 2, 3
 ),
 estu AS (
-  SELECT s1, s2, count(*) AS n_hit,
-    sum(1::BIGINT << (49 - r)) AS s_part
-  FROM pair_regs GROUP BY 1, 2
-),
-uni AS (
-  SELECT s1, s2,
-    floor(CASE WHEN (4096 - n_hit) > 0
-                AND 6.810691763087074e+21
-                    / ((s_part + (4096 - n_hit) * 562949953421312)::DOUBLE)
-                    <= 10240.0
-          THEN 4096.0 * ln(4096.0 / (4096 - n_hit))
-          ELSE 6.810691763087074e+21
-               / ((s_part + (4096 - n_hit) * 562949953421312)::DOUBLE)
-          END + 0.5)::BIGINT AS est_union
-  FROM estu
-)
+  SELECT s1, s2, {hll_partials_sql("*")} FROM pair_regs GROUP BY 1, 2),
+uni AS (SELECT s1, s2, {hll_estimate_sql()} AS est_union FROM estu)
 SELECT e.s1, e.s2, e.exact_common,
   (a.est + b.est - u.est_union)::BIGINT AS est_common,
   (a.est + b.est - u.est_union - e.exact_common)::BIGINT AS err_signed
@@ -9150,10 +9002,10 @@ FROM ks LEFT JOIN nk ON nk.k = ks.k LEFT JOIN ek ON ek.k = ks.k
 ORDER BY ks.k
 """.replace("{{edges}}", "{edges}").format(edges=_EDGES_05.strip())
 
-# r8w: ivm_hll_registers — the hll_portable_union register math with a
+# r8w: ivm_hll_registers — the portable HLL registers with a
 # base/delta day split; merged and full-recompute estimates emitted
 # side by side so the monoid identity is hash-witnessed.
-ORACLE["ivm_hll_registers"] = """
+ORACLE["ivm_hll_registers"] = f"""
 WITH d0 AS (SELECT min(epoch_us(ts) // 86400000000) AS d0 FROM events),
 tagged AS (
   SELECT event_type AS source, user_id,
@@ -9161,17 +9013,8 @@ tagged AS (
   FROM events CROSS JOIN d0
 ),
 du AS (SELECT DISTINCT source, user_id, is_delta FROM tagged),
-h AS (
-  SELECT source, is_delta,
-    ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::UBIGINT::BIGINT AS hv
-  FROM du
-),
-rb AS (
-  SELECT source, is_delta, hv % 4096 AS bucket,
-    CASE WHEN hv // 4096 = 0 THEN 49
-         ELSE 49 - length(bin(hv // 4096)) END AS rho
-  FROM h
-),
+h AS (SELECT source, is_delta, {h60_sql("user_id::VARCHAR")} AS hv FROM du),
+rb AS (SELECT source, is_delta, {hll_rho_sql()} FROM h),
 part AS MATERIALIZED (
   SELECT source, is_delta, bucket, max(rho) AS r
   FROM rb GROUP BY 1, 2, 3
@@ -9183,17 +9026,13 @@ fullr AS (
   SELECT source, bucket, max(rho) AS r FROM rb GROUP BY 1, 2
 ),
 est_b AS (
-  SELECT source, count(*) AS n_hit, sum(1::BIGINT << (49 - r)) AS s_part
+  SELECT source, {hll_partials_sql("*")}
   FROM part WHERE NOT is_delta GROUP BY source),
 est_d AS (
-  SELECT source, count(*) AS n_hit, sum(1::BIGINT << (49 - r)) AS s_part
+  SELECT source, {hll_partials_sql("*")}
   FROM part WHERE is_delta GROUP BY source),
-est_m AS (
-  SELECT source, count(*) AS n_hit, sum(1::BIGINT << (49 - r)) AS s_part
-  FROM merged GROUP BY source),
-est_f AS (
-  SELECT source, count(*) AS n_hit, sum(1::BIGINT << (49 - r)) AS s_part
-  FROM fullr GROUP BY source),
+est_m AS (SELECT source, {hll_partials_sql("*")} FROM merged GROUP BY source),
+est_f AS (SELECT source, {hll_partials_sql("*")} FROM fullr GROUP BY source),
 counts AS (
   SELECT source,
     sum((NOT is_delta)::BIGINT)::BIGINT AS n_base_keys,
@@ -9201,11 +9040,12 @@ counts AS (
   FROM du GROUP BY source
 )
 SELECT c.source, c.n_base_keys, c.n_delta_keys,
-  coalesce(floor(CASE WHEN (4096 - b.n_hit) > 0 AND 6.810691763087074e+21 / ((b.s_part + (4096 - b.n_hit) * 562949953421312)::DOUBLE) <= 10240.0 THEN 4096.0 * ln(4096.0 / (4096 - b.n_hit)) ELSE 6.810691763087074e+21 / ((b.s_part + (4096 - b.n_hit) * 562949953421312)::DOUBLE) END + 0.5), 0)::BIGINT AS est_base,
-  coalesce(floor(CASE WHEN (4096 - d.n_hit) > 0 AND 6.810691763087074e+21 / ((d.s_part + (4096 - d.n_hit) * 562949953421312)::DOUBLE) <= 10240.0 THEN 4096.0 * ln(4096.0 / (4096 - d.n_hit)) ELSE 6.810691763087074e+21 / ((d.s_part + (4096 - d.n_hit) * 562949953421312)::DOUBLE) END + 0.5), 0)::BIGINT AS est_delta,
-  floor(CASE WHEN (4096 - m.n_hit) > 0 AND 6.810691763087074e+21 / ((m.s_part + (4096 - m.n_hit) * 562949953421312)::DOUBLE) <= 10240.0 THEN 4096.0 * ln(4096.0 / (4096 - m.n_hit)) ELSE 6.810691763087074e+21 / ((m.s_part + (4096 - m.n_hit) * 562949953421312)::DOUBLE) END + 0.5)::BIGINT AS est_merged,
-  floor(CASE WHEN (4096 - f.n_hit) > 0 AND 6.810691763087074e+21 / ((f.s_part + (4096 - f.n_hit) * 562949953421312)::DOUBLE) <= 10240.0 THEN 4096.0 * ln(4096.0 / (4096 - f.n_hit)) ELSE 6.810691763087074e+21 / ((f.s_part + (4096 - f.n_hit) * 562949953421312)::DOUBLE) END + 0.5)::BIGINT AS est_full_recompute,
-  (floor(CASE WHEN (4096 - m.n_hit) > 0 AND 6.810691763087074e+21 / ((m.s_part + (4096 - m.n_hit) * 562949953421312)::DOUBLE) <= 10240.0 THEN 4096.0 * ln(4096.0 / (4096 - m.n_hit)) ELSE 6.810691763087074e+21 / ((m.s_part + (4096 - m.n_hit) * 562949953421312)::DOUBLE) END + 0.5) = floor(CASE WHEN (4096 - f.n_hit) > 0 AND 6.810691763087074e+21 / ((f.s_part + (4096 - f.n_hit) * 562949953421312)::DOUBLE) <= 10240.0 THEN 4096.0 * ln(4096.0 / (4096 - f.n_hit)) ELSE 6.810691763087074e+21 / ((f.s_part + (4096 - f.n_hit) * 562949953421312)::DOUBLE) END + 0.5))::BIGINT AS merge_identity_holds
+  coalesce({hll_estimate_sql("b")}, 0)::BIGINT AS est_base,
+  coalesce({hll_estimate_sql("d")}, 0)::BIGINT AS est_delta,
+  {hll_estimate_sql("m")} AS est_merged,
+  {hll_estimate_sql("f")} AS est_full_recompute,
+  ({hll_estimate_sql("m")} = {hll_estimate_sql("f")})::BIGINT
+    AS merge_identity_holds
 FROM counts c
 LEFT JOIN est_b b ON b.source = c.source
 LEFT JOIN est_d d ON d.source = c.source

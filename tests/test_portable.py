@@ -1,0 +1,145 @@
+"""Twin parity for the engine-portable kernels (functions/portable.py and
+the tokenizer pair in functions/text.py), and the typed oracle contract.
+
+Each kernel has a Spark form and a DuckDB SQL twin; the oracles only
+agree with the operators if the twins agree bit for bit, so they are
+compared here directly on hostile inputs rather than through a query.
+"""
+
+from __future__ import annotations
+
+import hashlib
+import math
+
+import pyarrow as pa
+import pytest
+from pyspark.sql import functions as F
+
+from hadoop_mapreduce_spark.functions.portable import (
+    HLL_ALPHA_SCALED,
+    HLL_M,
+    HLL_POW49,
+    h60,
+    h60_sql,
+    hll_estimate,
+    hll_estimate_col,
+    hll_estimate_sql,
+    hll_partials_sql,
+    hll_rho,
+    hll_rho_sql,
+)
+from hadoop_mapreduce_spark.functions.text import TOKS_SQL, normalize_text, tokenize
+
+HOSTILE = [
+    "", " ", "a", "A", "héllo wörld", "日本語 テキスト", "\x0b", "x\x0by",
+    "  leading", "trailing  ", " \t\n\x0b\f\r mixed \x0b ws \r\n",
+    "don't stop-me now!", "Agent 007 reporting 007", "\u00a0nbsp\u2003em",
+    "tab\tsep\tvalues", "emoji 🙂 here", "a" * 300, "3:", "3:abc",
+]
+
+
+def _py_h60(s: str) -> int:
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+@pytest.fixture(scope="module")
+def hostile(spark, duck):
+    duck.execute("CREATE OR REPLACE TEMP TABLE hostile (i BIGINT, s VARCHAR)")
+    duck.executemany("INSERT INTO hostile VALUES (?, ?)", list(enumerate(HOSTILE)))
+    return spark.createDataFrame(list(enumerate(HOSTILE)), "i long, s string")
+
+
+def test_h60_twins_agree(hostile, duck):
+    got = {r.i: (r.h, r.h3) for r in hostile.select(
+        "i", h60("s").alias("h"), h60(F.col("s"), seed=3).alias("h3")).collect()}
+    seeded = h60_sql("'3:' || s")
+    want = {i: (h, h3) for i, h, h3 in duck.execute(
+        f"SELECT i, {h60_sql('s')}, {seeded} FROM hostile").fetchall()}
+    assert got == want
+    for i, s in enumerate(HOSTILE):
+        assert got[i] == (_py_h60(s), _py_h60("3:" + s))
+        assert 0 <= got[i][0] < 1 << 60
+
+
+def test_hll_register_build_twins_agree(hostile, duck):
+    got = sorted(tuple(r) for r in hll_rho(hostile, ["i"], "s").collect())
+    want = sorted(duck.execute(
+        f"SELECT i, {hll_rho_sql()} FROM "
+        f"(SELECT i, {h60_sql('s')} AS hv FROM hostile)").fetchall())
+    assert got == want
+    for i, bucket, rho in got:
+        hv = _py_h60(HOSTILE[i])
+        q = hv // HLL_M
+        assert (bucket, rho) == (hv % HLL_M, 49 if q == 0 else 49 - q.bit_length())
+
+
+def test_tokenizer_twins_agree(hostile, duck):
+    got = {r.i: list(r.t) for r in hostile.select(
+        "i", tokenize(normalize_text("s")).alias("t")).collect()}
+    want = dict(duck.execute(
+        f"SELECT i, {TOKS_SQL} FROM (SELECT i, s AS text FROM hostile)").fetchall())
+    assert got == want
+    assert got[HOSTILE.index("x\x0by")] == ["x", "y"]
+    assert got[HOSTILE.index("")] == []
+
+
+def _py_estimate(n_hit: int, s_part: int) -> tuple[int, bool]:
+    raw = HLL_ALPHA_SCALED / float(s_part + (HLL_M - n_hit) * HLL_POW49)
+    v = HLL_M - n_hit
+    if v > 0 and raw <= 2.5 * HLL_M:
+        return math.floor(HLL_M * math.log(HLL_M / float(v)) + 0.5), True
+    return math.floor(raw + 0.5), False
+
+
+def test_hll_estimator_twins_agree_across_linear_counting_switch(spark, duck):
+    # (n_hit, s_part) with every hit register at rank r: both sides of
+    # the 2.5m switch with empty buckets left, and n_hit = m (no empties)
+    cases = [(n, n * (1 << (49 - r)))
+             for n in (1, 10, 1000, 2000, 3000, 4000, 4095, HLL_M)
+             for r in (1, 2, 5, 12, 20)]
+    ref = {c: _py_estimate(*c) for c in cases}
+    assert {lc for _, lc in ref.values()} == {True, False}
+    assert any(not lc and n < HLL_M for (n, _), (_, lc) in ref.items())
+    df = spark.createDataFrame(cases, "n_hit long, s_part long")
+    got = {(r.n_hit, r.s_part): r.est for r in df.select(
+        "n_hit", "s_part", hll_estimate_col().alias("est")).collect()}
+    vals = ", ".join(f"({n}, {s}::HUGEINT)" for n, s in cases)
+    want = {(n, s): e for n, s, e in duck.execute(
+        f"SELECT n_hit, s_part, {hll_estimate_sql()} FROM "
+        f"(VALUES {vals}) v(n_hit, s_part)").fetchall()}
+    assert got == want == {c: e for c, (e, _) in ref.items()}
+
+
+def test_hll_estimate_twins_agree_on_registers(hostile, duck):
+    regs = hll_rho(hostile, [], "s").groupBy("bucket").agg(F.max("rho").alias("r"))
+    got = hll_estimate(regs.select("r"), [], "est").first().est
+    want = duck.execute(
+        f"WITH rb AS (SELECT {hll_rho_sql()} FROM "
+        f"(SELECT {h60_sql('s')} AS hv FROM hostile)), "
+        f"regs AS (SELECT bucket, max(rho) AS r FROM rb GROUP BY bucket), "
+        f"est AS (SELECT {hll_partials_sql()} FROM regs) "
+        f"SELECT {hll_estimate_sql()} FROM est").fetchone()[0]
+    assert got == want == len(set(HOSTILE))
+
+
+# --- typed oracle contract -------------------------------------------------
+
+def _wide_columns(duck, sql: str) -> list[str]:
+    """Columns whose Arrow type is DECIMAL (DuckDB HUGEINT arrives as
+    decimal128(38, 0)); cursor.description reports both as NUMBER."""
+    return [f"{f.name}:{f.type}" for f in duck.execute(sql).arrow().schema
+            if pa.types.is_decimal(f.type)]
+
+
+def test_typed_check_trips_on_uncast_sum(duck):
+    assert _wide_columns(duck, "SELECT sum(x) AS s FROM (SELECT 1::BIGINT AS x)")
+    assert not _wide_columns(
+        duck, "SELECT sum(x)::BIGINT AS s FROM (SELECT 1::BIGINT AS x)")
+
+
+def test_no_oracle_emits_decimal_or_hugeint(duck):
+    from hadoop_mapreduce_spark.registry import ORACLE
+
+    wide = {name: cols for name, sql in ORACLE.items()
+            if (cols := _wide_columns(duck, sql))}
+    assert wide == {}

@@ -424,19 +424,13 @@ def test_hll_registers_match_python_md5_reference(spark, tokens):
     change any register."""
     import hashlib
 
-    from hadoop_mapreduce_spark.operators.textstats import HLL_M
+    from hadoop_mapreduce_spark.functions.portable import HLL_M, hll_rho
 
     df = spark.createDataFrame([(t,) for t in tokens], "tk string")
     got = {
         (r.bucket, r.r)
-        for r in df.selectExpr(
-            "CAST(conv(substring(md5(tk), 1, 15), 16, 10) AS BIGINT) AS hv"
-        ).selectExpr(
-            f"hv % {HLL_M} AS bucket",
-            f"CASE WHEN hv div {HLL_M} = 0 THEN 49 "
-            f"ELSE 49 - length(bin(hv div {HLL_M})) END AS rho",
-        ).groupBy("bucket").agg({"rho": "max"})
-        .withColumnRenamed("max(rho)", "r").collect()
+        for r in hll_rho(df, [], "tk").groupBy("bucket")
+        .agg(F.max("rho").alias("r")).collect()
     }
     regs: dict = {}
     for t in set(tokens):

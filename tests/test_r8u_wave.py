@@ -9,9 +9,9 @@ import hashlib
 import math
 from collections import Counter, defaultdict
 
+from hadoop_mapreduce_spark.functions.portable import HLL_M
 from hadoop_mapreduce_spark.functions.text import normalize_text  # noqa: F401
 from hadoop_mapreduce_spark.operators.textstats import (
-    HLL_M,
     hll_intersection_audit,
     negative_sampling_table,
 )
