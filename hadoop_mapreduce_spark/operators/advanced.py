@@ -22,10 +22,6 @@ from pyspark.sql import functions as F
 from hadoop_mapreduce_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-typed column family: map_from_entries over a grouped collect,
     element_at lookup, size, and map_filter on values.
@@ -34,7 +30,7 @@ def map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar longs); the map is assembled from the tiny post-aggregate
     result, so the map type never crosses an exchange at scale.
     """
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     counts = orders.groupBy("o_orderpriority", "o_orderstatus").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -59,7 +55,7 @@ def higher_order_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     forall predicates, transform + aggregate (fused fold with a finish
     lambda), all inside whole-stage codegen — the JVM-side way to do
     per-row vector math without a UDF."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     vec = F.col("embedding").cast("array<double>")
     mean = F.aggregate(
         vec,
@@ -84,7 +80,7 @@ def unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide-to-long reshape: aggregate three measures per returnflag,
     then unpivot (melt) to (flag, measure, value) rows — the inverse of
     the pivot operator already registered."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     wide = li.groupBy("l_returnflag").agg(
         F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
         F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
@@ -104,7 +100,7 @@ def window_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     readings, then F.last(ignorenulls=True) over an expanding frame
     carries the previous valid value forward; first(ignorenulls=True)
     backfills from the partition start."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     v = F.when(F.col("event_type") != "click", F.col("value"))
     w = (
         Window.partitionBy("user_id")
@@ -126,7 +122,7 @@ def bool_count_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boolean / conditional aggregate family: bool_and (EVERY),
     bool_or (ANY), count_if — all algebraic, so map-side partial
     aggregation bounds shuffle volume at O(groups)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.groupBy("o_orderpriority")
         .agg(
@@ -142,7 +138,7 @@ def regexp_extract_all_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """regexp_extract_all + explode: pull every long word (>= 8 letters)
     out of each document and count global frequency — the extract-all
     twin of the single-match regexp functions already registered."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     terms = docs.select(
         F.explode(
             F.regexp_extract_all(F.lower("text"), F.lit(r"[a-z]{8,}"), 0)
@@ -184,7 +180,7 @@ def udtf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield i, t
 
     spark.udtf.register("tokenize_first10", TokenizeFirst10)
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 100)
+    docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 100)
     docs.createOrReplaceTempView("_udtf_docs")
     return spark.sql(
         """
@@ -201,8 +197,8 @@ def string_agg_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     nondeterministic under parallel aggregation, so array_sort before
     array_join makes the result stable at any partition count — the only
     safe form of string aggregation on a cluster."""
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     return (
         nation.join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("r_name")
@@ -219,7 +215,7 @@ def bitwise_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer keys of each order-priority class bit-wise.  All three are
     commutative+associative, so Spark's partial aggregation applies and
     shuffle volume is O(groups) — same scale shape as sum/count."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.groupBy("o_orderpriority")
         .agg(
@@ -277,7 +273,7 @@ def udtf_polymorphic_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is not unique, and a per-ROW table function would otherwise emit
     # per-duplicate fan-outs the set-based oracle can't express
     li = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .where(F.col("l_orderkey") < 50)
         .groupBy("l_orderkey", "l_linenumber")
         .agg(F.max("l_quantity").alias("l_quantity"),

@@ -24,10 +24,6 @@ from hadoop_mapreduce_spark.functions.timeutil import wall_epoch_us
 from hadoop_mapreduce_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def doc_chunking(spark: SparkSession, sf_dir: str, chunk_tokens: int = 32,
                  overlap: int = 8) -> DataFrame:
     """Split each document into fixed-size token windows with overlap —
@@ -42,7 +38,7 @@ def doc_chunking(spark: SparkSession, sf_dir: str, chunk_tokens: int = 32,
     from hadoop_mapreduce_spark.functions.text import normalize_text, tokenize
 
     stride = chunk_tokens - overlap
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", tokenize(normalize_text(F.col("text"))).alias("t")
     ).where(F.size("t") > 0)
@@ -69,7 +65,7 @@ def text_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     that fuses into one codegen stage with the scan (zero shuffle,
     zero UDF). Reports per-document replacement counts so the scrub is
     auditable."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     email = r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}"
     url = r"https?://[^\s]+"
     scrubbed = F.regexp_replace(
@@ -96,7 +92,7 @@ def dataset_split(spark: SparkSession, sf_dir: str,
     from its key alone; adding data never reshuffles existing
     assignments. Returns per-split document and token counts.
     """
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     bucket = h60(F.col("doc_id").cast("string")) % 100
     split = (
         F.when(bucket < val_pct, F.lit("val"))
@@ -150,7 +146,7 @@ def seq_packing(spark: SparkSession, sf_dir: str,
     """
     import pandas as pd
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sized = docs.select(
         "source",
         "doc_id",
@@ -203,11 +199,11 @@ def dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result is driver-safe at any scale. FK checks are left_anti
     joins on the natural keys (shuffle or broadcast per AQE's choice).
     """
-    docs = _t(spark, sf_dir, "documents")
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    lineitem = _t(spark, sf_dir, "lineitem")
-    events = _t(spark, sf_dir, "events")
+    docs = load_table(spark, sf_dir, "documents")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    events = load_table(spark, sf_dir, "events")
 
     def check(name: str, df: DataFrame) -> DataFrame:
         return df.select(
@@ -275,7 +271,7 @@ def split_leakage_guard(spark: SparkSession, sf_dir: str,
         minhash_pairs_unsorted,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     # edges from the banded-LSH verified candidates, like
     # dedup_components_star: every candidate is verified with EXACT
     # shingle Jaccard before thresholding, so the edge set equals the
@@ -401,7 +397,7 @@ def memorization_novelty(spark: SparkSession, sf_dir: str, n: int = 5,
         tokenize,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     bucket = h60(F.col("doc_id").cast("string")) % 100
     split = (
         F.when(bucket < val_pct, F.lit("val"))
@@ -456,7 +452,7 @@ def padding_waste_audit(spark: SparkSession, sf_dir: str,
     under the hood) — rows cross the wire once per strategy, and the
     final rollup moves one row per batch.
     """
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.size(F.split(F.trim("text"), r"\s+")).cast("long")
     base = docs.select(
         "doc_id", toks.alias("n"),
@@ -502,7 +498,7 @@ def inbatch_collision_audit(spark: SparkSession, sf_dir: str,
     padding_waste_audit), one (batch, source) count with map-side
     partial agg, then a source rollup of batch-count rows.
     """
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     w = Window.orderBy(F.asc(F.md5(F.col("doc_id").cast("string"))),
                        F.asc("doc_id"))
     batched = docs.select(
@@ -534,7 +530,7 @@ def context_window_stats(spark: SparkSession, sf_dir: str,
     and the rollup partial-aggs to |budgets| rows. All ratios are
     exact-int divisions (bit-stable doubles on both engines).
     """
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = F.size(F.split(F.trim("text"), r"\s+")).cast("long")
     per = docs.select(toks.alias("n")).select(
         "n", F.explode(F.array(*[F.lit(b) for b in budgets])).alias("budget"))
@@ -745,7 +741,7 @@ def quality_classifier_train(spark: SparkSession, sf_dir: str,
     """
     from hadoop_mapreduce_spark.functions.text import normalize_text, tokenize
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", "text",
         tokenize(normalize_text(F.col("text"))).alias("__t")) \
@@ -787,7 +783,7 @@ def rrf_quality_fusion(spark: SparkSession, sf_dir: str,
         normalize_text, tokenize,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     t = tokenize(normalize_text(F.col("text")))
     # one tokenize pass: materialise the token array in a narrow
     # projection first so the regex runs once per row
@@ -856,7 +852,7 @@ def quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     grid = [300000, 350000, 400000, 450000, 500000, 550000, 600000, 700000]
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     t = tokenize(normalize_text(F.col("text")))
     stats = docs.select(
         "source", t.alias("__tk"),
@@ -920,7 +916,7 @@ def quality_signal_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         normalize_text, tokenize,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     stats = docs.select(
         "doc_id", "source", F.col("n_chars").cast("long").alias("n_chars"),
         tokenize(normalize_text(F.col("text"))).alias("__tk"),
@@ -979,7 +975,7 @@ def badwords_filter(spark: SparkSession, sf_dir: str,
         normalize_text, tokenize)
 
     bad = F.array(*[F.lit(w) for w in BADWORDS])
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
         "source", tokenize(normalize_text(F.col("text"))).alias("__toks"))
     per_doc = base.select(
@@ -1042,7 +1038,7 @@ def packing_boundary_audit(spark: SparkSession, sf_dir: str,
     """
     import pandas as pd
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sized = docs.select(
         "source",
         "doc_id",
@@ -1128,7 +1124,7 @@ def preference_pair_build(spark: SparkSession, sf_dir: str,
     from hadoop_mapreduce_spark.functions.text import (
         normalize_text, tokenize)
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
         "source", "doc_id",
         tokenize(normalize_text(F.col("text"))).alias("__toks"),
@@ -1204,7 +1200,7 @@ def bootstrap_ci_quality(spark: SparkSession, sf_dir: str,
     from hadoop_mapreduce_spark.functions.text import (
         normalize_text, tokenize)
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
         "source", "doc_id",
         tokenize(normalize_text(F.col("text"))).alias("__toks"),

@@ -27,10 +27,6 @@ from pyspark.sql import functions as F
 from hadoop_mapreduce_spark.sources.tables import load_table, sql_view
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _sql(spark: SparkSession, sf_dir: str, template: str, *tables: str) -> DataFrame:
     """Build a query as ONE spark.sql() round trip over sf-scoped views.
 
@@ -124,7 +120,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: pure scan-filter-aggregate; every predicate reaches
     the parquet scan as a pushed filter (verify via explain PushedFilters)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.where(
             (F.col("l_shipdate") >= F.lit("1997-01-01"))
@@ -163,7 +159,7 @@ def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN / BETWEEN / LIKE / null-safe predicates, all pushdown-eligible."""
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     return (
         part.where(
             F.col("p_brand").isin("Brand#13", "Brand#5")
@@ -178,7 +174,7 @@ def filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def project_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Computed columns: arithmetic, CASE WHEN, string concat."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.select(
             F.col("l_orderkey"),
@@ -207,7 +203,7 @@ def project_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String scalar family over part."""
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     return part.select(
         F.col("p_partkey"),
         F.upper("p_name").alias("name_upper"),
@@ -223,7 +219,7 @@ def string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/time scalar family over orders."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.select(
         F.col("o_orderkey"),
         F.year("o_orderdate").cast("long").alias("yr"),
@@ -239,7 +235,7 @@ def date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def math_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Math scalar family over lineitem (outputs rounded for engine parity)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.select(
         F.col("l_orderkey"),
         F.col("l_linenumber").cast("long").alias("l_linenumber"),
@@ -258,7 +254,7 @@ def math_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array scalar family over embeddings (size/element/slice aggregate)."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     vec = F.col("embedding").cast("array<double>")
     return e.select(
         F.col("vec_id"),
@@ -275,7 +271,7 @@ def array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def json_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON extraction over events.props + grouped aggregate of the field."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("int")
     return (
         ev.select(F.col("event_type"), k.alias("k"))
@@ -296,9 +292,9 @@ def json_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def join_broadcast_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit broadcast join: customer x nation x region — zero fact shuffle."""
-    cust = _t(spark, sf_dir, "customer")
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
-    region = F.broadcast(_t(spark, sf_dir, "region"))
+    cust = load_table(spark, sf_dir, "customer")
+    nation = F.broadcast(load_table(spark, sf_dir, "nation"))
+    region = F.broadcast(load_table(spark, sf_dir, "region"))
     return (
         cust.join(nation, cust.c_nationkey == nation.n_nationkey)
         .join(region, nation.n_regionkey == region.r_regionkey)
@@ -310,8 +306,8 @@ def join_broadcast_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer join keeping customers with zero orders (null-extended)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
         .groupBy("c_custkey", "c_name")
@@ -323,8 +319,8 @@ def join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi + anti join: customers WITH a high-value order minus those
     with any 'F' order — expressed as left_semi then left_anti."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     high = orders.where(F.col("o_totalprice") > 200000).select("o_custkey")
     fstat = orders.where(F.col("o_orderstatus") == "F").select("o_custkey")
     return (
@@ -337,8 +333,8 @@ def join_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross join of two tiny dims (both broadcast — no shuffle at all)."""
-    region = _t(spark, sf_dir, "region").select("r_name")
-    seg = _t(spark, sf_dir, "customer").select("c_mktsegment").distinct()
+    region = load_table(spark, sf_dir, "region").select("r_name")
+    seg = load_table(spark, sf_dir, "customer").select("c_mktsegment").distinct()
     return region.crossJoin(F.broadcast(seg)).orderBy("r_name", "c_mktsegment")
 
 
@@ -347,8 +343,8 @@ def join_range_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     their order date. The equi key keeps it a hash join; the range
     predicate is a post-join filter — at scale this is the right plan
     (pure theta joins degrade to broadcast-nested-loop)."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.join(
             o,
@@ -373,7 +369,7 @@ def join_self_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     while DuckDB's epoch()::BIGINT rounds, which flipped one pair at
     sf0.1 (caught by the r6 full-registry sf0.1 oracle run; invisible
     at sf0.01)."""
-    ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     a, b = ev.alias("a"), ev.alias("b")
     return (
         a.join(
@@ -395,7 +391,7 @@ def join_self_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """count-distinct + plain aggregates per group (expand-based distinct)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_orderstatus")
         .agg(
@@ -411,9 +407,9 @@ def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP (region, nation): subtotal + grand-total rows, null-marked."""
-    cust = _t(spark, sf_dir, "customer")
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
-    region = F.broadcast(_t(spark, sf_dir, "region"))
+    cust = load_table(spark, sf_dir, "customer")
+    nation = F.broadcast(load_table(spark, sf_dir, "nation"))
+    region = F.broadcast(load_table(spark, sf_dir, "region"))
     joined = cust.join(nation, cust.c_nationkey == nation.n_nationkey).join(
         region, nation.n_regionkey == region.r_regionkey
     )
@@ -426,7 +422,7 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE (returnflag, linestatus): all 2^2 grouping combinations."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.cube("l_returnflag", "l_linestatus")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("l_quantity"), 2).alias("qty"))
@@ -436,7 +432,7 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY ... HAVING — post-aggregation predicate."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_suppkey")
         .agg(F.count(F.lit(1)).alias("n_items"), F.round(F.sum("l_extendedprice"), 2).alias("volume"))
@@ -450,7 +446,7 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Not oracle-matched exactly (engines use different HLL constants), so
     this is registered rows-only; the exact variant is agg_distinct."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy("event_type")
         .agg(F.approx_count_distinct("user_id", 0.01).alias("approx_users"))
@@ -466,7 +462,7 @@ def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders per customer by price — rank-and-filter window.
 
     At scale this shuffles once on the partition key; no global sort."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
     return (
         o.withColumn("rn", F.row_number().over(w))
@@ -478,7 +474,7 @@ def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def window_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rank / dense_rank / ntile over suppliers by account balance."""
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     w = Window.partitionBy("s_nationkey").orderBy(F.desc("s_acctbal"), F.asc("s_suppkey"))
     return s.select(
         "s_suppkey",
@@ -491,7 +487,7 @@ def window_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running total per customer in order-date order (rowsBetween frame)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -506,7 +502,7 @@ def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag/lead + delta per user over the events stream (batch analytic)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return ev.select(
         "user_id",
@@ -520,7 +516,7 @@ def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rangeBetween frame: count of orders within +/-30 days (value range,
     not row offsets) per customer."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     day = F.expr("timestampdiff(DAY,"
                  " TIMESTAMP_NTZ '1970-01-01 00:00:00', o_orderdate)")
     w = Window.partitionBy("o_custkey").orderBy(day.cast("long")).rangeBetween(-30, 30)
@@ -538,7 +534,7 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sort_multi_key_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-key global sort + limit → TakeOrderedAndProject (heap-k per
     partition, k-merge on driver; never a full sort at scale)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.select("l_orderkey", F.col("l_linenumber").cast("long").alias("l_linenumber"), "l_extendedprice", "l_shipdate")
         .withColumn("l_shipdate", F.col("l_shipdate").cast("string"))
@@ -549,7 +545,7 @@ def sort_multi_key_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION / INTERSECT / EXCEPT over customer key sets."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     f_cust = o.where(F.col("o_orderstatus") == "F").select("o_custkey")
     o_cust = o.where(F.col("o_orderstatus") == "O").select("o_custkey")
     p_cust = o.where(F.col("o_orderstatus") == "P").select("o_custkey")
@@ -560,13 +556,13 @@ def set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     """unionByName over heterogeneous entity tables (customer + supplier)."""
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_name").alias("name"),
         F.col("c_nationkey").cast("long").alias("nationkey"),
         F.col("c_acctbal").alias("acctbal"),
         F.lit("customer").alias("kind"),
     )
-    supp = _t(spark, sf_dir, "supplier").select(
+    supp = load_table(spark, sf_dir, "supplier").select(
         F.lit("supplier").alias("kind"),
         F.col("s_acctbal").alias("acctbal"),
         F.col("s_nationkey").cast("long").alias("nationkey"),
@@ -582,7 +578,7 @@ def union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def distinct_dedup_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dropDuplicates on a projected key set."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.select("l_returnflag", "l_linestatus")
         .dropDuplicates()
@@ -603,12 +599,12 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem probe never materialises joined rows, so shuffle volume is
     the filtered orders alone (the classic EXISTS plan at scale).
     """
-    orders = _t(spark, sf_dir, "orders").where(
+    orders = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1997-07-01"))
         & (F.col("o_orderdate") < F.lit("1997-10-01"))
     )
     # EXISTS: any lineitem shipped strictly after the order date
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     exists = orders.join(
         li,
         (orders.o_orderkey == li.l_orderkey) & (li.l_shipdate > orders.o_orderdate),
@@ -629,15 +625,15 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles only on its natural keys. The nation-pair predicate is
     applied after both dim joins but before aggregation.
     """
-    n1 = F.broadcast(_t(spark, sf_dir, "nation").select(
+    n1 = F.broadcast(load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")))
-    n2 = F.broadcast(_t(spark, sf_dir, "nation").select(
+    n2 = F.broadcast(load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("c_nkey"), F.col("n_name").alias("cust_nation")))
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01")) & (F.col("l_shipdate") <= F.lit("1997-12-31")))
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = F.broadcast(_t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey"))
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    supp = F.broadcast(load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey"))
     pair = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -662,11 +658,11 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     Filters (returnflag, date window) sit below the joins; the final
     top-20 compiles to TakeOrderedAndProject.
     """
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    orders = _t(spark, sf_dir, "orders").where(
+    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
+    orders = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1997-01-01")) & (F.col("o_orderdate") < F.lit("1997-07-01")))
-    cust = _t(spark, sf_dir, "customer")
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
+    cust = load_table(spark, sf_dir, "customer")
+    nation = F.broadcast(load_table(spark, sf_dir, "nation"))
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey)
         .join(li, orders.o_orderkey == li.l_orderkey)
@@ -682,8 +678,9 @@ def q12_shipping_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape (adapted: no l_shipmode in the fixture): CASE-sum
     aggregation — high/low-priority order counts per shipping-lag band.
     """
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate", "o_orderpriority")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderdate", "o_orderpriority")
     lag_days = F.datediff(F.col("l_shipdate"), F.col("o_orderdate"))
     band = (
         F.when(lag_days <= 30, "FAST")
@@ -706,9 +703,9 @@ def q12_shipping_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: conditional-sum ratio over one month (promo
     revenue share). part is broadcast; single aggregate, no group key."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1997-03-01")) & (F.col("l_shipdate") < F.lit("1997-04-01")))
-    part = F.broadcast(_t(spark, sf_dir, "part").select("p_partkey", "p_type"))
+    part = F.broadcast(load_table(spark, sf_dir, "part").select("p_partkey", "p_type"))
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     promo = F.when(F.col("p_type").startswith("PROMO"), rev).otherwise(F.lit(0.0))
     return (
@@ -722,8 +719,8 @@ def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicates as the JOIN condition. The equi-key (partkey) keeps this a
     hash join; the OR-of-ANDs residual is evaluated post-probe — never a
     cartesian."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = F.broadcast(_t(spark, sf_dir, "part"))
+    li = load_table(spark, sf_dir, "lineitem")
+    part = F.broadcast(load_table(spark, sf_dir, "part"))
     cond = (li.l_partkey == part.p_partkey) & (
         ((part.p_brand == "Brand#1") & (part.p_size <= 15) & (li.l_quantity >= 1) & (li.l_quantity <= 30))
         | ((part.p_brand == "Brand#2") & (part.p_size <= 25) & (li.l_quantity >= 5) & (li.l_quantity <= 40))
@@ -744,8 +741,8 @@ def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     least one order overall) are found with left_anti — no correlated
     per-row subquery execution.
     """
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").where(
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").where(
         F.col("o_orderdate") >= F.lit("2000-06-01")).select("o_custkey")
     avg_bal = cust.where(F.col("c_acctbal") > 0).agg(F.avg("c_acctbal").alias("avg_bal"))
     rich = cust.crossJoin(F.broadcast(avg_bal)).where(F.col("c_acctbal") > F.col("avg_bal"))
@@ -766,8 +763,8 @@ def pivot_status_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIVOT: order counts per market segment x order status. Explicit
     pivot values keep the output schema static (no extra distinct scan —
     required for a stable plan at scale)."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderstatus")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    orders = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderstatus")
     return (
         orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .groupBy("c_mktsegment")
@@ -785,7 +782,7 @@ def pivot_status_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 def grouping_sets_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS with grouping_id: (flag,status), (flag),
     grand total — the general form of rollup/cube."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupingSets(
             [["l_returnflag", "l_linestatus"], ["l_returnflag"], []],
@@ -804,11 +801,11 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER join of per-nation customer and supplier rollups —
     nations may exist on either side only; coalesce reconciles the key."""
     cust = (
-        _t(spark, sf_dir, "customer").where(F.col("c_acctbal") > 9000)
+        load_table(spark, sf_dir, "customer").where(F.col("c_acctbal") > 9000)
         .groupBy("c_nationkey").agg(F.count(F.lit(1)).alias("n_cust"))
     )
     supp = (
-        _t(spark, sf_dir, "supplier").where(F.col("s_acctbal") > 9000)
+        load_table(spark, sf_dir, "supplier").where(F.col("s_acctbal") > 9000)
         .groupBy("s_nationkey").agg(F.count(F.lit(1)).alias("n_supp"))
     )
     return (
@@ -826,7 +823,7 @@ def correlated_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orders priced above 1.5x their customer's average — the classic
     correlated scalar subquery, decorrelated by hand into aggregate +
     re-join (exactly what Catalyst's decorrelation rewrite produces)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     cust_avg = orders.groupBy(F.col("o_custkey").alias("k")).agg(
         F.avg("o_totalprice").alias("cust_avg"))
     return (
@@ -844,7 +841,7 @@ def correlated_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stats_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Statistical aggregate family: stddev/variance (sample), Pearson
     correlation, sample covariance — per returnflag."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .agg(
@@ -865,7 +862,7 @@ def percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     and quartiles of o_totalprice. Exact percentile is a full-sort-per-
     group operation; the approx_percentile twin (rows-only) is the scale
     path for 100 TB."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.groupBy("o_orderstatus")
         .agg(
@@ -944,17 +941,17 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain shuffles once per fact-fact key. The share division happens
     after aggregation (2 rows), not per-row.
     """
-    region = F.broadcast(_t(spark, sf_dir, "region").where(F.col("r_name") == "EUROPE"))
-    n_cust = F.broadcast(_t(spark, sf_dir, "nation").select(
+    region = F.broadcast(load_table(spark, sf_dir, "region").where(F.col("r_name") == "EUROPE"))
+    n_cust = F.broadcast(load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("cn_key"), F.col("n_regionkey").alias("cn_rkey")))
-    n_supp = F.broadcast(_t(spark, sf_dir, "nation").select(
+    n_supp = F.broadcast(load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")))
-    part = F.broadcast(_t(spark, sf_dir, "part").where(F.col("p_type") == "ECONOMY"))
-    supp = F.broadcast(_t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey"))
-    orders = _t(spark, sf_dir, "orders").where(
+    part = F.broadcast(load_table(spark, sf_dir, "part").where(F.col("p_type") == "ECONOMY"))
+    supp = F.broadcast(load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey"))
+    orders = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1996-01-01")) & (F.col("o_orderdate") < F.lit("1998-01-01")))
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    li = _t(spark, sf_dir, "lineitem")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    li = load_table(spark, sf_dir, "lineitem")
     volume = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     flow = (
         li.join(part, li.l_partkey == part.p_partkey)
@@ -983,11 +980,11 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.5 * p_retailprice * quantity, keeping the profit-expression shape
     (revenue minus quantity-scaled cost) and the %substring% part filter.
     """
-    part = F.broadcast(_t(spark, sf_dir, "part").where(F.col("p_name").contains("red")))
-    supp = F.broadcast(_t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey"))
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    li = _t(spark, sf_dir, "lineitem")
+    part = F.broadcast(load_table(spark, sf_dir, "part").where(F.col("p_name").contains("red")))
+    supp = F.broadcast(load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey"))
+    nation = F.broadcast(load_table(spark, sf_dir, "nation"))
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    li = load_table(spark, sf_dir, "lineitem")
     profit = (F.col("l_extendedprice") * (1 - F.col("l_discount"))
               - F.lit(0.5) * F.col("p_retailprice") * F.col("l_quantity"))
     return (
@@ -1010,10 +1007,10 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     the threshold side is a 1-row aggregate joined by crossJoin —
     broadcast-trivial at any scale.
     """
-    supp = F.broadcast(_t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey"))
-    nation = F.broadcast(_t(spark, sf_dir, "nation").where(
+    supp = F.broadcast(load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey"))
+    nation = F.broadcast(load_table(spark, sf_dir, "nation").where(
         F.col("n_name").isin("NATION_1", "NATION_2", "NATION_3")))
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     val = (
         li.join(supp, li.l_suppkey == supp.s_suppkey)
         .join(nation, supp.s_nationkey == nation.n_nationkey)
@@ -1037,8 +1034,8 @@ def q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter, double aggregation). The ON-clause predicate keeps customers
     with zero surviving orders (count 0 bucket) — semantically distinct
     from a WHERE, and the reason this is a left join."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
-    orders = _t(spark, sf_dir, "orders").where(F.col("o_orderpriority") != "1-URGENT")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
+    orders = load_table(spark, sf_dir, "orders").where(F.col("o_orderpriority") != "1-URGENT")
     per_cust = (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
         .groupBy(cust.c_custkey)
@@ -1056,7 +1053,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar-max pattern). Revenue is rounded to 2dp *before* the max
     comparison on both engines so summation-order noise can't split a
     tie across engines."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1997-01-01")) & (F.col("l_shipdate") < F.lit("1997-04-01")))
     revenue = (
         li.groupBy(F.col("l_suppkey").alias("supplier_no"))
@@ -1064,7 +1061,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
              .alias("total_revenue"))
     )
     mx = revenue.agg(F.max("total_revenue").alias("mx"))
-    supp = _t(spark, sf_dir, "supplier")
+    supp = load_table(spark, sf_dir, "supplier")
     return (
         revenue.crossJoin(F.broadcast(mx))
         .where(F.col("total_revenue") == F.col("mx"))
@@ -1077,9 +1074,9 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q16_supplier_part_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: distinct supplier count per part attribute group
     (partsupp replaced by the lineitem part-supplier bridge)."""
-    part = F.broadcast(_t(spark, sf_dir, "part").where(
+    part = F.broadcast(load_table(spark, sf_dir, "part").where(
         (F.col("p_brand") != "Brand#5") & (F.col("p_size").isin(1, 5, 9, 13, 17, 21, 25, 29))))
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     return (
         li.join(part, li.l_partkey == part.p_partkey)
         .groupBy("p_brand", "p_type", F.col("p_size").cast("long").alias("p_size"))
@@ -1093,8 +1090,8 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     subquery against the same fact table). The per-part average is a
     separate aggregate joined back on partkey — the decorrelated plan
     Catalyst itself would produce for the subquery form."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = F.broadcast(_t(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#3"))
+    li = load_table(spark, sf_dir, "lineitem")
+    part = F.broadcast(load_table(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#3"))
     avg_qty = (
         li.groupBy(F.col("l_partkey").alias("ap_key"))
         .agg((F.avg("l_quantity") * 0.5).alias("half_avg"))
@@ -1111,9 +1108,9 @@ def q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape: suppliers who shipped a large quantity of PROMO
     parts in 1997 (nested EXISTS chain re-expressed as aggregate +
     semi-join; partsupp availability replaced by shipped quantity)."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1997-01-01")) & (F.col("l_shipdate") < F.lit("1998-01-01")))
-    part = F.broadcast(_t(spark, sf_dir, "part").where(F.col("p_type") == "PROMO")
+    part = F.broadcast(load_table(spark, sf_dir, "part").where(F.col("p_type") == "PROMO")
                        .select("p_partkey"))
     shipped = (
         li.join(part, li.l_partkey == part.p_partkey)
@@ -1122,8 +1119,8 @@ def q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("qty") > 50)
         .select("l_suppkey")
     )
-    supp = _t(spark, sf_dir, "supplier")
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = F.broadcast(load_table(spark, sf_dir, "nation"))
     return (
         supp.join(shipped, supp.s_suppkey == shipped.l_suppkey, "left_semi")
         .join(nation, supp.s_nationkey == nation.n_nationkey)
@@ -1173,7 +1170,7 @@ def approx_percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     group instead of the values a sort-based exact percentile needs.
     Registered rows-only: sketch outputs are implementation-defined.
     """
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.groupBy("o_orderstatus")
         .agg(
@@ -1188,7 +1185,7 @@ def approx_percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution window functions: percent_rank / cume_dist / ntile
     over orders by total price within each status partition."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
     return (
         orders.select(
@@ -1205,7 +1202,7 @@ def json_from_json_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed JSON parsing: from_json with an explicit schema (vs the
     path-extraction in json_functions) — struct field access, null-safe
     handling of malformed documents."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     parsed = ev.select(
         "event_id",
         F.from_json("props", "k INT").alias("p"),
@@ -1228,7 +1225,7 @@ def sample_seeded(spark: SparkSession, sf_dir: str, fraction: float = 0.1,
     sample (the property tests rely on exactly that). Registered
     rows-only: the selected subset is engine-specific by construction.
     """
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.sample(fraction=fraction, seed=seed)
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -1241,7 +1238,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str, seed: int = 42) -> DataF
     the dominant order status, keep the rare ones) — the class-rebalancing
     pattern of a training-data pipeline. Rows-only for the same reason as
     sample_seeded."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     fractions = {"F": 0.05, "O": 0.05, "P": 1.0}
     return (
         orders.sampleBy("o_orderstatus", fractions, seed=seed)
@@ -1254,7 +1251,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str, seed: int = 42) -> DataF
 def array_explode_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lateral explode with ordinality: posexplode of the embedding array
     (first 4 elements) — the UNNEST WITH ORDINALITY shape."""
-    emb = _t(spark, sf_dir, "embeddings").where(F.col("vec_id") < 100)
+    emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 100)
     return (
         emb.select(
             "vec_id",
@@ -1271,7 +1268,7 @@ def string_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance scalar functions: levenshtein between part name and
     type, plus a length-normalised similarity — dedup-adjacent fuzzy
     matching at the scalar level (exact DP algorithm, engine-portable)."""
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     lev = F.levenshtein("p_name", "p_type")
     maxlen = F.greatest(F.length("p_name"), F.length("p_type"))
     return (
@@ -1288,7 +1285,7 @@ def mode_median_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4 aggregate surface: mode() (deterministic=true for the
     lowest-value tie-break, matching DuckDB's tie rule) and median()
     per market segment — one keyed aggregation."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     return (
         c.groupBy("c_mktsegment")
         .agg(
@@ -1307,7 +1304,7 @@ def try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin of read_csv_strict, per-row (one projection + one rollup).
     Exercised on a synthetic divisor that hits zero, an overflow-prone
     sum, and a numeric parse of the order-priority prefix."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     denom = F.col("o_orderkey") % 7
     return (
         o.select(
@@ -1397,7 +1394,7 @@ def quantile_histogram_portable(spark: SparkSession, sf_dir: str,
     combinable), a bins-bounded cumulative window, and a 3-quantile
     projection per group.
     """
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     stats = orders.groupBy("o_orderstatus").agg(
         F.min("o_totalprice").alias("mn"),
         F.max("o_totalprice").alias("mx"),

@@ -17,8 +17,15 @@ bit-comparable:
   * the portable kernels — the 60-bit md5 hash ``h60``, the portable
     HyperLogLog registers and estimator — live once, in their Spark
     form and their SQL twin, in ``functions/portable.py``; the
-    tokenizer's twin (``TOKS_SQL``) sits beside the Spark tokenizer in
+    tokenizer's twin (``TOKS_SQL``) and the n-gram window's
+    (``ngrams_sql``) sit beside their Spark forms in
     ``functions/text.py``. Oracles interpolate the SQL twins;
+  * the near-dup oracle kernels live once, below, as CTE lists the
+    oracles splice in: the shingle sets (``_SHINGLE_SETS``), the
+    inverted-index pair counts (``_SHINGLE_PAIRS``), the exact
+    shingle-Jaccard pairs at a cut (``_jaccard_pairs``; ``_NEAR_DUPS``
+    is its 0.8 query) and the recursive min-label components
+    (``_components``);
   * approximate operators (HLL, IVF-ANN) are registered without an
     oracle → the driver records a rows-only check, as the contract
     allows for non-SQL-expressible ops.
@@ -62,6 +69,7 @@ from hadoop_mapreduce_spark.functions.text import (
     NORMALIZE_SQL,
     TOKS_SQL,
     collapse_ws_sql,
+    ngrams_sql,
     split_ws_sql,
 )
 from hadoop_mapreduce_spark.operators.ngram import ngram_count, ngram_topk
@@ -513,31 +521,63 @@ QUERIES: dict[str, QueryFn] = {
 
 _NGRAM3 = f"""
 WITH toks AS (SELECT {TOKS_SQL} AS t FROM documents),
-grams AS (
-  SELECT array_to_string(t[i:i+2], ' ') AS ngram
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i) g
-)
+grams AS (SELECT unnest({ngrams_sql('t', 3)}) AS ngram FROM toks)
 SELECT ngram, count(*) AS cnt FROM grams GROUP BY ngram
 """
 
-_SHINGLES = f"""
+# The near-dup oracle kernels. Each is a CTE list an oracle splices
+# into its own WITH, so every exact pair base and component labelling
+# is built from the same text.
+
+# toks(doc_id, t); sh(doc_id, s): each document's distinct word
+# 3-shingles; sizes(doc_id, n): the shingle-set sizes.
+_SHINGLE_SETS = f"""
 toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i) g
-),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+sh AS (SELECT DISTINCT doc_id, unnest({ngrams_sql('t', 3)}) AS s FROM toks),
+sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id)"""
+
+# _SHINGLE_SETS plus inter(id1, id2, c): the shared-shingle count of
+# every pair id1 < id2 that shares one (the inverted-index pair build).
+_SHINGLE_PAIRS = f"""{_SHINGLE_SETS},
 inter AS (
   SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c
   FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
   GROUP BY 1, 2
-),
+)"""
+
+
+def _jaccard_pairs(cut: float) -> str:
+    """_SHINGLE_PAIRS plus jac(id1, id2, jaccard): the pairs whose exact
+    shingle Jaccard reaches ``cut``, rounded to 6 dp after the cut."""
+    return f"""{_SHINGLE_PAIRS},
 jac AS (
-  SELECT id1, id2, c * 1.0 / (s1.n + s2.n - c) AS jaccard
-  FROM inter JOIN sizes s1 ON id1 = s1.doc_id JOIN sizes s2 ON id2 = s2.doc_id
-)
-SELECT id1, id2, round(jaccard, 6) AS jaccard FROM jac WHERE jaccard >= 0.8
-"""
+  SELECT id1, id2, round(j, 6) AS jaccard FROM (
+    SELECT id1, id2, c * 1.0 / (s1.n + s2.n - c) AS j
+    FROM inter JOIN sizes s1 ON id1 = s1.doc_id JOIN sizes s2 ON id2 = s2.doc_id)
+  WHERE j >= {cut}
+)"""
+
+
+# the near-dup pairs at the operators' 0.8 cut, as one query
+_NEAR_DUPS = f"WITH {_jaccard_pairs(0.8)} SELECT id1, id2, jaccard FROM jac"
+
+
+def _components(nodes: str, pairs: str) -> str:
+    """Min-label connected components: cc_edges(a, b), the (id1, id2)
+    rows of ``pairs`` in both directions; reach(src, node), every node
+    reachable from each id the query ``nodes`` returns; and
+    comp(doc_id, component), the least id reachable from each. The
+    caller's WITH must be RECURSIVE."""
+    return f"""cc_edges AS (
+  SELECT id1 AS a, id2 AS b FROM {pairs} UNION SELECT id2, id1 FROM {pairs}
+),
+reach(src, node) AS (
+  SELECT id, id FROM ({nodes}) n(id)
+  UNION
+  SELECT r.src, e.b FROM reach r JOIN cc_edges e ON r.node = e.a
+),
+comp AS (SELECT src AS doc_id, min(node) AS component FROM reach GROUP BY src)"""
+
 
 ORACLE: dict[str, str] = {
     "ngram_count": f"{_NGRAM3} ORDER BY ngram",
@@ -828,24 +868,10 @@ q AS (
 d0 AS (SELECT doc_id, text, source, t FROM q WHERE quality >= 0.6),
 keep AS (SELECT min(doc_id) AS doc_id FROM d0 GROUP BY sha256(text)),
 d1 AS (SELECT d0.* FROM d0 JOIN keep USING (doc_id)),
-toks_all AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
-sh_all AS (
-  SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-  FROM toks_all, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i) g
-),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh_all GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c
-  FROM sh_all a JOIN sh_all b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-jac AS (
-  SELECT id1, id2, c * 1.0 / (s1.n + s2.n - c) AS j
-  FROM inter JOIN sizes s1 ON id1 = s1.doc_id JOIN sizes s2 ON id2 = s2.doc_id
-),
+j AS ({_NEAR_DUPS}),
 live AS (
-  SELECT id2 FROM jac
-  WHERE j >= 0.8 AND id1 IN (SELECT doc_id FROM d1) AND id2 IN (SELECT doc_id FROM d1)
+  SELECT id2 FROM j
+  WHERE id1 IN (SELECT doc_id FROM d1) AND id2 IN (SELECT doc_id FROM d1)
 ),
 d2 AS (SELECT * FROM d1 WHERE doc_id NOT IN (SELECT id2 FROM live))
 SELECT source, count(*) AS n_docs, sum(len(t))::BIGINT AS total_tokens
@@ -855,24 +881,14 @@ FROM d2 GROUP BY source ORDER BY source
 SELECT sha256(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS n_copies
 FROM documents GROUP BY sha256(text) ORDER BY keep_id
 """,
-    "dedup_minhash_lsh": f"WITH {_SHINGLES} ORDER BY id1, id2",
+    "dedup_minhash_lsh": f"{_NEAR_DUPS} ORDER BY id1, id2",
     "dedup_connected_components": f"""
 WITH RECURSIVE
-j AS (WITH {_SHINGLES}),
-edges AS (
-  SELECT id1 AS a, id2 AS b FROM j
-  UNION
-  SELECT id2, id1 FROM j
-),
-reach(src, node) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.node = e.a
-)
-SELECT src AS doc_id, min(node)::BIGINT AS component
-FROM reach GROUP BY src ORDER BY doc_id
+j AS ({_NEAR_DUPS}),
+{_components("SELECT doc_id FROM documents", "j")}
+SELECT doc_id, component::BIGINT AS component FROM comp ORDER BY doc_id
 """,
-    "dedup_ngram_jaccard": f"WITH {_SHINGLES} ORDER BY id1, id2",
+    "dedup_ngram_jaccard": f"{_NEAR_DUPS} ORDER BY id1, id2",
     "dedup_simhash": rf"""
 WITH toks AS (
   SELECT doc_id, list_distinct({TOKS_SQL}) AS t
@@ -1597,8 +1613,8 @@ FROM v WHERE version <= 3 ORDER BY custkey, version
     "decontaminate_ngram": f"""
 WITH toks AS (SELECT doc_id, source, {TOKS_SQL} AS t FROM documents),
 grams AS (
-  SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') AS g
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-3)) AS i) x
+  SELECT DISTINCT doc_id, unnest({ngrams_sql('t', 4)}) AS g
+  FROM toks
 ),
 bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % 20 = 0),
 hits AS (
@@ -1613,12 +1629,7 @@ FROM train t LEFT JOIN hits h ON t.doc_id = h.doc_id
 GROUP BY t.source ORDER BY t.source
 """,
     "decontaminate_fuzzy": f"""
-WITH toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i) g
-),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+WITH {_SHINGLE_SETS},
 inter AS (
   SELECT t.doc_id AS train_id, b.doc_id AS bench_id, count(*) AS c
   FROM sh t JOIN sh b ON t.s = b.s
@@ -1649,18 +1660,8 @@ WHERE c >= 0.4 ORDER BY train_id, bench_id
 """,
     "dedup_keep_best": f"""
 WITH RECURSIVE
-j AS (WITH {_SHINGLES}),
-edges AS (
-  SELECT id1 AS a, id2 AS b FROM j
-  UNION
-  SELECT id2, id1 FROM j
-),
-reach(src, node) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.node = e.a
-),
-comp AS (SELECT src AS doc_id, min(node) AS component FROM reach GROUP BY src),
+j AS ({_NEAR_DUPS}),
+{_components("SELECT doc_id FROM documents", "j")},
 m AS (
   SELECT c.component, d.doc_id, d.n_chars,
     row_number() OVER (PARTITION BY c.component
@@ -1674,25 +1675,10 @@ FROM m WHERE rn = 1 AND n_members >= 2 ORDER BY component
 """,
     "pipeline_target_select": f"""
 WITH RECURSIVE
-toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i) g
-),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-jac AS (
-  SELECT id1, id2, c * 1.0 / (s1.n + s2.n - c) AS j
-  FROM inter JOIN sizes s1 ON id1 = s1.doc_id JOIN sizes s2 ON id2 = s2.doc_id
-),
-pairs AS (SELECT id1, id2 FROM jac WHERE j >= 0.8),
+{_jaccard_pairs(0.8)},
 contaminated AS (
   SELECT DISTINCT CASE WHEN id1 % 20 = 0 THEN id2 ELSE id1 END AS doc_id
-  FROM pairs WHERE (id1 % 20 = 0) <> (id2 % 20 = 0)
+  FROM jac WHERE (id1 % 20 = 0) <> (id2 % 20 = 0)
 ),
 surv AS (
   SELECT doc_id, source, n_chars FROM documents
@@ -1700,20 +1686,10 @@ surv AS (
     AND doc_id NOT IN (SELECT doc_id FROM contaminated)
 ),
 sedge AS (
-  SELECT id1, id2 FROM pairs
+  SELECT id1, id2 FROM jac
   WHERE id1 IN (SELECT doc_id FROM surv) AND id2 IN (SELECT doc_id FROM surv)
 ),
-edges AS (
-  SELECT id1 AS a, id2 AS b FROM sedge
-  UNION
-  SELECT id2, id1 FROM sedge
-),
-reach(src, node) AS (
-  SELECT doc_id, doc_id FROM surv
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.node = e.a
-),
-comp AS (SELECT src AS doc_id, min(node) AS component FROM reach GROUP BY src),
+{_components("SELECT doc_id FROM surv", "sedge")},
 ranked AS (
   SELECT c.component, s.doc_id,
     row_number() OVER (PARTITION BY c.component
@@ -1934,8 +1910,8 @@ keep AS (SELECT min(doc_id) AS doc_id FROM d0 GROUP BY sha256(text)),
 d1 AS (SELECT d0.* FROM d0 JOIN keep USING (doc_id)),
 toks_all AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
 grams AS (
-  SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') AS g
-  FROM toks_all, LATERAL (SELECT unnest(generate_series(1, len(t)-3)) AS i) x
+  SELECT DISTINCT doc_id, unnest({ngrams_sql('t', 4)}) AS g
+  FROM toks_all
 ),
 bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % 20 = 0),
 hits AS (
@@ -1987,8 +1963,8 @@ ORDER BY score DESC, doc_id LIMIT 20
 ORACLE["dup_ngram_rate"] = rf"""
 WITH toks AS (SELECT doc_id, source, {TOKS_SQL} AS t FROM documents),
 g AS (
-  SELECT DISTINCT doc_id, source, array_to_string(t[i:i+7], ' ') AS g
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-7)) AS i) x
+  SELECT DISTINCT doc_id, source, unnest({ngrams_sql('t', 8)}) AS g
+  FROM toks
 ),
 f AS (SELECT doc_id, source, count(*) OVER (PARTITION BY g) AS nd FROM g),
 pd AS (
@@ -2094,8 +2070,8 @@ FROM names GROUP BY lower(name) ORDER BY rep
 ORACLE["bloom_decontaminate"] = f"""
 WITH toks AS (SELECT doc_id, source, {TOKS_SQL} AS t FROM documents),
 grams AS (
-  SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') AS g
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-3)) AS i) x
+  SELECT DISTINCT doc_id, unnest({ngrams_sql('t', 4)}) AS g
+  FROM toks
 ),
 h12 AS (
   SELECT doc_id, g,
@@ -2224,21 +2200,15 @@ FROM zed GROUP BY 1 ORDER BY 1
 # counts. grouped_leak_pairs = 0 is the operator's contract.
 ORACLE["split_leakage_guard"] = f"""
 WITH RECURSIVE
-j AS (WITH {_SHINGLES}),
-edges AS (SELECT id1 AS a, id2 AS b FROM j UNION SELECT id2, id1 FROM j),
-reach(src, node) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.node = e.a
-),
-comp AS (SELECT src AS doc_id, min(node) AS comp FROM reach GROUP BY src),
+j AS ({_NEAR_DUPS}),
+{_components("SELECT doc_id FROM documents", "j")},
 assigned AS (
-  SELECT doc_id, comp,
+  SELECT doc_id, component AS comp,
     CASE WHEN {h60_sql("doc_id::VARCHAR")} % 10 < 8 THEN 'train'
          WHEN {h60_sql("doc_id::VARCHAR")} % 10 < 9 THEN 'val'
          ELSE 'test' END AS naive_split,
-    CASE WHEN {h60_sql("comp::VARCHAR")} % 10 < 8 THEN 'train'
-         WHEN {h60_sql("comp::VARCHAR")} % 10 < 9 THEN 'val'
+    CASE WHEN {h60_sql("component::VARCHAR")} % 10 < 8 THEN 'train'
+         WHEN {h60_sql("component::VARCHAR")} % 10 < 9 THEN 'val'
          ELSE 'test' END AS grouped_split
   FROM comp
 ),
@@ -2309,8 +2279,8 @@ rebuilt AS (
   FROM keptc GROUP BY 1, 2 HAVING sum((rn = 1)::BIGINT) > 0
 ),
 bgrams AS (
-  SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') AS g
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-3)) AS i) x
+  SELECT DISTINCT doc_id, unnest({ngrams_sql('t', 4)}) AS g
+  FROM toks
   WHERE doc_id % 20 = 0
 ),
 bh12 AS (
@@ -2325,8 +2295,8 @@ bprobes AS (
 bitmap AS (SELECT h // 63 AS word, bit_or(1::BIGINT << (h % 63)::INT) AS bits FROM bprobes GROUP BY 1),
 rt AS (SELECT doc_id, source, n_kept, string_split(rebuilt, ' ') AS rt FROM rebuilt),
 rgrams AS (
-  SELECT DISTINCT doc_id, array_to_string(rt[i:i+3], ' ') AS g
-  FROM rt, LATERAL (SELECT unnest(generate_series(1, len(rt)-3)) AS i) x
+  SELECT DISTINCT doc_id, unnest({ngrams_sql('rt', 4)}) AS g
+  FROM rt
 ),
 rh12 AS (
   SELECT doc_id, g,
@@ -2555,7 +2525,7 @@ ORDER BY cnt DESC, bigram LIMIT 20
 # Degree-oriented triangle count (Suri & Vassilvitskii orientation):
 # every triangle counted exactly once at its minimum-(degree, id) vertex.
 ORACLE["triangle_count_dedup_graph"] = f"""
-WITH j AS (WITH {_SHINGLES}),
+WITH j AS ({_NEAR_DUPS}),
 und AS (SELECT id1 AS a, id2 AS b FROM j UNION ALL SELECT id2, id1 FROM j),
 deg AS (SELECT a AS v, count(*) AS d FROM und GROUP BY a),
 e AS (
@@ -2632,8 +2602,7 @@ ORACLE["bigram_lm_quality"] = f"""
 WITH toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
 tt AS (SELECT doc_id, t FROM toks WHERE len(t) >= 2),
 big AS (
-  SELECT doc_id, t[i] || ' ' || t[i+1] AS bg
-  FROM tt, LATERAL (SELECT unnest(generate_series(1, len(t)-1)) AS i) g
+  SELECT doc_id, unnest({ngrams_sql('t', 2)}) AS bg FROM tt
 ),
 pd AS (SELECT doc_id, bg, count(*) AS cdt FROM big GROUP BY doc_id, bg),
 bc AS (SELECT bg, sum(cdt) AS cab,
@@ -2839,7 +2808,7 @@ ORDER BY event_type, event_id
 # mirrors operators/dedup.py::dedup_incremental.
 ORACLE["dedup_incremental"] = f"""
 WITH RECURSIVE
-j AS (WITH {_SHINGLES}),
+j AS ({_NEAR_DUPS}),
 newdocs AS (SELECT doc_id FROM documents WHERE doc_id % 10 = 0),
 idx_hits AS (
   SELECT CASE WHEN id1 % 10 = 0 THEN id1 ELSE id2 END AS doc_id,
@@ -2851,25 +2820,19 @@ surv AS (
   SELECT doc_id FROM newdocs
   WHERE doc_id NOT IN (SELECT doc_id FROM idx_hits)
 ),
-sedges AS (
-  SELECT id1 AS a, id2 AS b FROM j
-  WHERE id1 IN (SELECT doc_id FROM surv) AND id2 IN (SELECT doc_id FROM surv)
-  UNION
-  SELECT id2, id1 FROM j
+spairs AS (
+  SELECT id1, id2 FROM j
   WHERE id1 IN (SELECT doc_id FROM surv) AND id2 IN (SELECT doc_id FROM surv)
 ),
-reach(src, node) AS (
-  SELECT doc_id, doc_id FROM surv
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN sedges e ON r.node = e.a
-),
-comp AS (SELECT src AS doc_id, min(node) AS comp FROM reach GROUP BY src)
+{_components("SELECT doc_id FROM surv", "spairs")}
 SELECT doc_id, 'dup_of_index' AS verdict, match_id::BIGINT AS match_id
 FROM idx_hits
 UNION ALL
 SELECT doc_id,
-  CASE WHEN comp <> doc_id THEN 'dup_in_batch' ELSE 'kept' END AS verdict,
-  CASE WHEN comp <> doc_id THEN comp ELSE NULL END::BIGINT AS match_id
+  CASE WHEN component <> doc_id THEN 'dup_in_batch' ELSE 'kept' END
+    AS verdict,
+  CASE WHEN component <> doc_id THEN component ELSE NULL END::BIGINT
+    AS match_id
 FROM comp
 ORDER BY doc_id
 """
@@ -3001,8 +2964,8 @@ WITH toks AS (
     {TOKS_SQL} AS t
   FROM documents),
 grams AS (
-  SELECT DISTINCT doc_id, split, array_to_string(t[i:i+4], ' ') AS g
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 4)) AS i) x
+  SELECT DISTINCT doc_id, split, unnest({ngrams_sql('t', 5)}) AS g
+  FROM toks
 ),
 train_g AS (SELECT DISTINCT g FROM grams WHERE split = 'train'),
 val_g AS (SELECT doc_id, g FROM grams WHERE split = 'val')
@@ -3172,8 +3135,8 @@ FROM per GROUP BY lang ORDER BY lang
 ORACLE["source_overlap_matrix"] = f"""
 WITH toks AS (SELECT source, {TOKS_SQL} AS t FROM documents),
 grams AS (
-  SELECT DISTINCT source, array_to_string(t[i:i+7], ' ') AS g
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 7)) AS i) x
+  SELECT DISTINCT source, unnest({ngrams_sql('t', 8)}) AS g
+  FROM toks
 ),
 sizes AS (SELECT source, count(*)::BIGINT AS n_grams FROM grams GROUP BY source),
 pairs AS (
@@ -3203,7 +3166,7 @@ ORACLE["dedup_jaccard_prefix"] = ORACLE["dedup_ngram_jaccard"]
 # the same working table, which is exactly the operator's semantics.
 ORACLE["pagerank_dedup_graph"] = f"""
 WITH RECURSIVE
-j AS (WITH {_SHINGLES}),
+j AS ({_NEAR_DUPS}),
 edges AS (SELECT id1 AS src, id2 AS dst FROM j UNION ALL SELECT id2, id1 FROM j),
 degree AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
 nd AS (SELECT count(*)::DOUBLE AS n FROM documents),
@@ -3458,8 +3421,8 @@ WITH toks AS (
 ),
 tt AS (SELECT doc_id, t FROM toks WHERE len(t) >= 2),
 per_doc AS (
-  SELECT doc_id, array_to_string(t[i:i+1], ' ') AS bg, count(*) AS cdt
-  FROM tt, LATERAL (SELECT unnest(generate_series(1, len(t)-1)) AS i) x
+  SELECT doc_id, bg, count(*) AS cdt
+  FROM (SELECT doc_id, unnest({ngrams_sql('t', 2)}) AS bg FROM tt)
   GROUP BY doc_id, bg
 ),
 bc AS (
@@ -3487,21 +3450,9 @@ FROM scored ORDER BY kn_lp_e6, doc_id LIMIT 50
 # oracle as dedup_components_star, rolled up to a size histogram.
 ORACLE["dedup_cluster_size_histogram"] = f"""
 WITH RECURSIVE
-j AS (WITH {_SHINGLES}),
-edges AS (
-  SELECT id1 AS a, id2 AS b FROM j
-  UNION
-  SELECT id2, id1 FROM j
-),
-reach(src, node) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.node = e.a
-),
-comp AS (
-  SELECT src AS doc_id, min(node) AS comp FROM reach GROUP BY src
-),
-sizes AS (SELECT comp, count(*) AS k FROM comp GROUP BY comp)
+j AS ({_NEAR_DUPS}),
+{_components("SELECT doc_id FROM documents", "j")},
+sizes AS (SELECT component, count(*) AS k FROM comp GROUP BY component)
 SELECT k::BIGINT AS cluster_size, count(*)::BIGINT AS n_clusters,
   (k * count(*))::BIGINT AS n_docs,
   ((k - 1) * count(*))::BIGINT AS docs_removed_if_keep_one
@@ -3793,9 +3744,8 @@ ORACLE["minhash_accuracy_audit"] = f"""
 WITH toks AS (SELECT doc_id AS id, {TOKS_SQL} AS t FROM documents),
 tt AS (SELECT id, t FROM toks WHERE len(t) >= 3),
 sh AS (
-  SELECT DISTINCT id,
-    {h60_sql("array_to_string(t[i:i+2], ' ')")} AS hs
-  FROM tt, LATERAL (SELECT unnest(generate_series(1, len(t) - 2)) AS i) g
+  SELECT DISTINCT id, {h60_sql("unnest(" + ngrams_sql("t", 3) + ")")} AS hs
+  FROM tt
 ),
 cw AS (SELECT * FROM (VALUES (0, 188173298, 62257558), (1, 1614569235, 1541888525), (2, 1123302577, 1183693761), (3, 941201756, 612741583), (4, 1915815023, 145743895), (5, 1042332867, 1469431003), (6, 1586907769, 1724705301), (7, 1367643000, 567634413), (8, 1182429425, 1450717929), (9, 1840887320, 92282879), (10, 2033346063, 1574816040), (11, 1426551802, 1173352586), (12, 2087082879, 168846213), (13, 1825997516, 891168106), (14, 124724675, 334069097), (15, 1102350415, 1146895919)) t(i, a, b)),
 minima AS (
@@ -4084,9 +4034,8 @@ st AS (
     CASE WHEN len(t) > 0
          THEN (len(list_distinct(t)) * 1000000) // len(t) ELSE 0 END AS dtok_e6,
     CASE WHEN len(t) > 1
-         THEN (len(list_distinct(list_transform(
-                 generate_series(1, len(t) - 1),
-                 i -> t[i] || ' ' || t[i+1]))) * 1000000) // (len(t) - 1)
+         THEN (len(list_distinct({ngrams_sql('t', 2)})) * 1000000)
+              // (len(t) - 1)
          ELSE 0 END AS dbig_e6
   FROM toks
 ),
@@ -4288,8 +4237,8 @@ srcs AS (
   FROM (SELECT DISTINCT source FROM documents)
 ),
 grams AS (
-  SELECT DISTINCT source, array_to_string(t[i:i+3], ' ') AS g
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 3)) AS i) x
+  SELECT DISTINCT source, unnest({ngrams_sql('t', 4)}) AS g
+  FROM toks
 ),
 gr AS (SELECT g, grams.source, src_rank
        FROM grams JOIN srcs ON grams.source = srcs.source),
@@ -4335,18 +4284,14 @@ FROM rk GROUP BY source ORDER BY source
 """
 
 # r7d: ngram_diversity_audit — distinct-1/2/3 diversity per source,
-# exact integer micro-unit ratios; the three gram windows replayed via
-# generate_series slices over the same token arrays.
+# exact integer micro-unit ratios; the three gram windows over the same
+# token arrays.
 ORACLE["ngram_diversity_audit"] = f"""
 WITH toks AS (SELECT source, {TOKS_SQL} AS t FROM documents),
-tn AS (
-  SELECT source, t, n
-  FROM toks CROSS JOIN (SELECT unnest([1, 2, 3]) AS n) ns
-),
 g AS (
-  SELECT source, n, array_to_string(t[i:i+n-1], ' ') AS gram
-  FROM tn,
-  LATERAL (SELECT unnest(generate_series(1, len(t) - n + 1)) AS i) gg
+  SELECT source, 1 AS n, unnest({ngrams_sql('t', 1)}) AS gram FROM toks
+  UNION ALL SELECT source, 2, unnest({ngrams_sql('t', 2)}) FROM toks
+  UNION ALL SELECT source, 3, unnest({ngrams_sql('t', 3)}) FROM toks
 ),
 pg AS (SELECT source, n, gram, count(*) AS c FROM g GROUP BY 1, 2, 3)
 SELECT source, n::BIGINT AS n, sum(c)::BIGINT AS total_grams,
@@ -4471,18 +4416,8 @@ FROM cells CROSS JOIN t ORDER BY dow, hour
 # back to the doc labels with the (count desc, lang asc) majority rule.
 ORACLE["neardup_label_conflict"] = f"""
 WITH RECURSIVE
-j AS (WITH {_SHINGLES}),
-edges AS (
-  SELECT id1 AS a, id2 AS b FROM j
-  UNION
-  SELECT id2, id1 FROM j
-),
-reach(src, node) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.node = e.a
-),
-comp AS (SELECT src AS doc_id, min(node) AS component FROM reach GROUP BY src),
+j AS ({_NEAR_DUPS}),
+{_components("SELECT doc_id FROM documents", "j")},
 m AS (
   SELECT c.component, d.doc_id, d.lang, d.source
   FROM comp c JOIN documents d USING (doc_id)
@@ -4516,9 +4451,8 @@ ORACLE["lsh_band_tuning"] = f"""
 WITH toks AS (SELECT doc_id AS id, {TOKS_SQL} AS t FROM documents),
 tt AS (SELECT id, t FROM toks WHERE len(t) >= 3),
 sh AS (
-  SELECT DISTINCT id,
-    {h60_sql("array_to_string(t[i:i+2], ' ')")} AS hs
-  FROM tt, LATERAL (SELECT unnest(generate_series(1, len(t) - 2)) AS i) g
+  SELECT DISTINCT id, {h60_sql("unnest(" + ngrams_sql("t", 3) + ")")} AS hs
+  FROM tt
 ),
 cw AS (SELECT * FROM (VALUES (0, 188173298, 62257558), (1, 1614569235, 1541888525), (2, 1123302577, 1183693761), (3, 941201756, 612741583), (4, 1915815023, 145743895), (5, 1042332867, 1469431003), (6, 1586907769, 1724705301), (7, 1367643000, 567634413), (8, 1182429425, 1450717929), (9, 1840887320, 92282879), (10, 2033346063, 1574816040), (11, 1426551802, 1173352586), (12, 2087082879, 168846213), (13, 1825997516, 891168106), (14, 124724675, 334069097), (15, 1102350415, 1146895919)) t(i, a, b)),
 minima AS (
@@ -4837,9 +4771,8 @@ ORACLE["dedup_threshold_sweep"] = f"""
 WITH toks AS (SELECT doc_id AS id, {TOKS_SQL} AS t FROM documents),
 tt AS (SELECT id, t FROM toks WHERE len(t) >= 3),
 sh AS (
-  SELECT DISTINCT id,
-    {h60_sql("array_to_string(t[i:i+2], ' ')")} AS hs
-  FROM tt, LATERAL (SELECT unnest(generate_series(1, len(t) - 2)) AS i) g
+  SELECT DISTINCT id, {h60_sql("unnest(" + ngrams_sql("t", 3) + ")")} AS hs
+  FROM tt
 ),
 cw AS (SELECT * FROM (VALUES (0, 188173298, 62257558), (1, 1614569235, 1541888525), (2, 1123302577, 1183693761), (3, 941201756, 612741583), (4, 1915815023, 145743895), (5, 1042332867, 1469431003), (6, 1586907769, 1724705301), (7, 1367643000, 567634413), (8, 1182429425, 1450717929), (9, 1840887320, 92282879), (10, 2033346063, 1574816040), (11, 1426551802, 1173352586), (12, 2087082879, 168846213), (13, 1825997516, 891168106), (14, 124724675, 334069097), (15, 1102350415, 1146895919)) t(i, a, b)),
 minima AS (
@@ -5531,7 +5464,7 @@ l{k} AS (
   WHERE rn = 1
 )"""
 ORACLE["label_propagation_communities"] = (
-    "WITH j AS (WITH " + _SHINGLES + "),\n"
+    f"WITH j AS ({_NEAR_DUPS}),\n"
     "sym AS (SELECT id1 AS src, id2 AS dst FROM j"
     " UNION ALL SELECT id2, id1 FROM j),\n"
     # self-loops damp the synchronous-update period-2 oscillation
@@ -5604,18 +5537,8 @@ GROUP BY 1, 2 ORDER BY event_type, n DESC, motif
 # rounding (round is monotone, so min-then-round == round-then-min).
 ORACLE["dedup_chain_audit"] = f"""
 WITH RECURSIVE
-j AS (WITH {_SHINGLES}),
-edges AS (
-  SELECT id1 AS a, id2 AS b FROM j
-  UNION
-  SELECT id2, id1 FROM j
-),
-reach(src, node) AS (
-  SELECT a, a FROM edges
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.node = e.a
-),
-comp AS (SELECT src AS doc_id, min(node) AS component FROM reach GROUP BY src),
+j AS ({_NEAR_DUPS}),
+{_components("SELECT id1 FROM j UNION SELECT id2 FROM j", "j")},
 sizes AS (SELECT component, count(*)::BIGINT AS size FROM comp GROUP BY 1),
 e2 AS (
   SELECT c.component, j.jaccard
@@ -5825,8 +5748,7 @@ base AS (
   SELECT len(t) AS n,
          len(list_distinct(t)) AS nd,
          coalesce(list_sum(list_transform(t, x -> length(x))), 0) AS chars,
-         len(list_distinct(list_transform(range(1, len(t)),
-             i -> t[i] || ' ' || t[i + 1]))) AS ndb
+         len(list_distinct({ngrams_sql('t', 2)})) AS ndb
   FROM base0
 ),
 flags AS (
@@ -6346,24 +6268,20 @@ SELECT decile::BIGINT AS decile, count(*)::BIGINT AS n_tokens,
 FROM graded GROUP BY decile ORDER BY decile
 """
 
-# r7x: dedup_containment — directed Broder containment; the qualifying
-# test and the emitted ratio are pure integers.
+# r7x: dedup_containment — directed Broder containment (the shared
+# count is symmetric, so each unordered pair is read in both
+# directions); the qualifying test and the emitted ratio are pure
+# integers.
 ORACLE["dedup_containment"] = f"""
-WITH toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i) g
-),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id_small, b.doc_id AS id_big, count(*) AS c
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id <> b.doc_id
-  GROUP BY 1, 2
+WITH {_SHINGLE_PAIRS},
+directed AS (
+  SELECT id1 AS id_small, id2 AS id_big, c FROM inter
+  UNION ALL SELECT id2, id1, c FROM inter
 )
 SELECT id_small, id_big, c::BIGINT AS n_shared,
        s1.n::BIGINT AS n_small, s2.n::BIGINT AS n_big,
        (c * 1000000 // s1.n)::BIGINT AS containment_e6
-FROM inter
+FROM directed
 JOIN sizes s1 ON id_small = s1.doc_id
 JOIN sizes s2 ON id_big = s2.doc_id
 WHERE c * 1000 >= 900 * s1.n
@@ -6374,23 +6292,7 @@ ORDER BY id_small, id_big
 # >= 0.5) rolled to the unordered source-pair matrix with exact
 # micro-unit rates.
 ORACLE["cross_source_duplication_matrix"] = f"""
-WITH toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i) g
-),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-jac AS (
-  SELECT id1, id2
-  FROM inter JOIN sizes s1 ON id1 = s1.doc_id
-             JOIN sizes s2 ON id2 = s2.doc_id
-  WHERE c * 1.0 / (s1.n + s2.n - c) >= 0.5
-),
+WITH {_jaccard_pairs(0.5)},
 labeled AS (
   SELECT least(d1.source, d2.source) AS src_a,
          greatest(d1.source, d2.source) AS src_b
@@ -6501,17 +6403,7 @@ FROM j ORDER BY event_type
 # the 30-bit md5 base makes signatures bit-identical; the estimator
 # numerator clamps at 0 before integer division.
 ORACLE["minhash_bbit_estimate"] = f"""
-WITH toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i) g
-),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-cand AS (
-  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
+WITH {_SHINGLE_PAIRS},
 hashed AS (
   SELECT doc_id,
     ({h60_sql("s")}
@@ -6531,7 +6423,7 @@ sigs AS (
 coll AS (
   SELECT c.id1, c.id2, c.c,
          sum((s1.mb = s2.mb)::INT)::BIGINT AS n_coll
-  FROM cand c
+  FROM inter c
   JOIN sigs s1 ON c.id1 = s1.doc_id
   JOIN sigs s2 ON c.id2 = s2.doc_id AND s1.i = s2.i
   GROUP BY 1, 2, 3
@@ -7024,77 +6916,37 @@ ORDER BY source
 
 # r8d: dedup_shingle_size_sweep — one token pass, three k-grids, pure
 # integer qualify tests; 3-row output.
-ORACLE["dedup_shingle_size_sweep"] = f"""
-WITH toked AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
-sh2 AS (
-  SELECT DISTINCT doc_id AS id, array_to_string(t[i:i+1], ' ') AS s
-  FROM toked, LATERAL (SELECT unnest(generate_series(1, len(t) - 1))
-                       AS i) g
-  WHERE len(t) >= 2
+_SWEEP_K = """
+sh{k} AS (
+  SELECT DISTINCT doc_id AS id, unnest({grams}) AS s
+  FROM toked WHERE len(t) >= {k}
 ),
-sz2 AS (SELECT id, count(*) AS n FROM sh2 GROUP BY id),
-cold2 AS (
-  SELECT sh2.* FROM sh2
-  WHERE s NOT IN (SELECT s FROM sh2 GROUP BY s HAVING count(*) > 256)
+sz{k} AS (SELECT id, count(*) AS n FROM sh{k} GROUP BY id),
+cold{k} AS (
+  SELECT sh{k}.* FROM sh{k}
+  WHERE s NOT IN (SELECT s FROM sh{k} GROUP BY s HAVING count(*) > 256)
 ),
-q2 AS (
+q{k} AS (
   SELECT count(*) AS n_pairs, count(DISTINCT id1) AS n_id1 FROM (
     SELECT i.id1, i.id2
     FROM (SELECT a.id AS id1, b.id AS id2, count(*) AS c
-          FROM cold2 a JOIN cold2 b ON a.s = b.s AND a.id < b.id
+          FROM cold{k} a JOIN cold{k} b ON a.s = b.s AND a.id < b.id
           GROUP BY 1, 2) i
-    JOIN sz2 s1 ON i.id1 = s1.id
-    JOIN sz2 s2 ON i.id2 = s2.id
+    JOIN sz{k} s1 ON i.id1 = s1.id
+    JOIN sz{k} s2 ON i.id2 = s2.id
     WHERE i.c * 1000 >= 500 * (s1.n + s2.n - i.c))
-),
-sh3 AS (
-  SELECT DISTINCT doc_id AS id, array_to_string(t[i:i+2], ' ') AS s
-  FROM toked, LATERAL (SELECT unnest(generate_series(1, len(t) - 2))
-                       AS i) g
-  WHERE len(t) >= 3
-),
-sz3 AS (SELECT id, count(*) AS n FROM sh3 GROUP BY id),
-cold3 AS (
-  SELECT sh3.* FROM sh3
-  WHERE s NOT IN (SELECT s FROM sh3 GROUP BY s HAVING count(*) > 256)
-),
-q3 AS (
-  SELECT count(*) AS n_pairs, count(DISTINCT id1) AS n_id1 FROM (
-    SELECT i.id1, i.id2
-    FROM (SELECT a.id AS id1, b.id AS id2, count(*) AS c
-          FROM cold3 a JOIN cold3 b ON a.s = b.s AND a.id < b.id
-          GROUP BY 1, 2) i
-    JOIN sz3 s1 ON i.id1 = s1.id
-    JOIN sz3 s2 ON i.id2 = s2.id
-    WHERE i.c * 1000 >= 500 * (s1.n + s2.n - i.c))
-),
-sh4 AS (
-  SELECT DISTINCT doc_id AS id, array_to_string(t[i:i+3], ' ') AS s
-  FROM toked, LATERAL (SELECT unnest(generate_series(1, len(t) - 3))
-                       AS i) g
-  WHERE len(t) >= 4
-),
-sz4 AS (SELECT id, count(*) AS n FROM sh4 GROUP BY id),
-cold4 AS (
-  SELECT sh4.* FROM sh4
-  WHERE s NOT IN (SELECT s FROM sh4 GROUP BY s HAVING count(*) > 256)
-),
-q4 AS (
-  SELECT count(*) AS n_pairs, count(DISTINCT id1) AS n_id1 FROM (
-    SELECT i.id1, i.id2
-    FROM (SELECT a.id AS id1, b.id AS id2, count(*) AS c
-          FROM cold4 a JOIN cold4 b ON a.s = b.s AND a.id < b.id
-          GROUP BY 1, 2) i
-    JOIN sz4 s1 ON i.id1 = s1.id
-    JOIN sz4 s2 ON i.id2 = s2.id
-    WHERE i.c * 1000 >= 500 * (s1.n + s2.n - i.c))
-)
+)"""
+ORACLE["dedup_shingle_size_sweep"] = (
+    f"\nWITH toked AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),"
+    + ",".join(_SWEEP_K.format(k=k, grams=ngrams_sql("t", k))
+               for k in (2, 3, 4))
+    + """
 SELECT 2::BIGINT AS shingle_k, n_pairs::BIGINT AS n_pairs,
        n_id1::BIGINT AS n_id1 FROM q2
 UNION ALL SELECT 3, n_pairs, n_id1 FROM q3
 UNION ALL SELECT 4, n_pairs, n_id1 FROM q4
 ORDER BY shingle_k
-"""
+""")
 # r8d: dow_profile_stability — consecutive-week ZERO-PADDED 7-vector
 # cosine: full-outer dow axis (a dow present in one week only adds 0 to
 # the dot but its count^2 stays in that week's norm); days derived from
@@ -7552,8 +7404,8 @@ FROM allrows ORDER BY source
 ORACLE["hash_width_collision_audit"] = f"""
 WITH toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
 sh AS (
-  SELECT DISTINCT array_to_string(t[i:i+2], ' ') AS s
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i) g
+  SELECT DISTINCT unnest({ngrams_sql('t', 3)}) AS s
+  FROM toks
 ),
 h AS (SELECT md5(s) AS h FROM sh),
 agg AS (
@@ -7618,40 +7470,21 @@ FROM arms CROSS JOIN stats ORDER BY arm
 """
 
 
-# r8j: near-dup edge base at threshold 0.5 for the graph-structure
-# audits (same inverted-index pair build as _SHINGLES, lower cut).
-_EDGES_05 = f"""
-toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i) g
-),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-e AS (
-  SELECT id1, id2
-  FROM inter JOIN sizes s1 ON id1 = s1.doc_id JOIN sizes s2 ON id2 = s2.doc_id
-  WHERE c * 1.0 / (s1.n + s2.n - c) >= 0.5
-)"""
-
-# r8j: graph_triangle_count — degree-ordered node-iterator; every
-# triangle counted once, each corner credited.
+# r8j: graph_triangle_count — degree-ordered node-iterator on the
+# 0.5-threshold dup edges; every triangle counted once, each corner
+# credited.
 ORACLE["graph_triangle_count"] = f"""
-WITH {{edges}},
+WITH {_jaccard_pairs(0.5)},
 deg AS (
   SELECT v, count(*)::BIGINT AS d FROM (
-    SELECT id1 AS v FROM e UNION ALL SELECT id2 FROM e) GROUP BY v
+    SELECT id1 AS v FROM jac UNION ALL SELECT id2 FROM jac) GROUP BY v
 ),
 oriented AS (
   SELECT CASE WHEN (d1.d, e.id1) < (d2.d, e.id2) THEN e.id1 ELSE e.id2 END
            AS src,
          CASE WHEN (d1.d, e.id1) < (d2.d, e.id2) THEN e.id2 ELSE e.id1 END
            AS dst
-  FROM e JOIN deg d1 ON e.id1 = d1.v JOIN deg d2 ON e.id2 = d2.v
+  FROM jac e JOIN deg d1 ON e.id1 = d1.v JOIN deg d2 ON e.id2 = d2.v
 ),
 wedges AS (
   SELECT a.src AS u, a.dst AS v, b.dst AS w
@@ -7667,19 +7500,19 @@ SELECT doc_id, count(*)::BIGINT AS n_triangles FROM (
   UNION ALL SELECT w FROM tri
 ) GROUP BY doc_id
 ORDER BY n_triangles DESC, doc_id ASC LIMIT 50
-""".replace("{{edges}}", "{edges}").format(edges=_EDGES_05.strip())
+"""
 
 # r8j: graph_degree_assortativity — symmetrized Pearson of endpoint
 # degrees; exact BIGINT sums, one float expression.
 ORACLE["graph_degree_assortativity"] = f"""
-WITH {{edges}},
+WITH {_jaccard_pairs(0.5)},
 deg AS (
   SELECT v, count(*)::BIGINT AS d FROM (
-    SELECT id1 AS v FROM e UNION ALL SELECT id2 FROM e) GROUP BY v
+    SELECT id1 AS v FROM jac UNION ALL SELECT id2 FROM jac) GROUP BY v
 ),
 ends AS (
   SELECT d1.d AS x, d2.d AS y
-  FROM e JOIN deg d1 ON e.id1 = d1.v JOIN deg d2 ON e.id2 = d2.v
+  FROM jac e JOIN deg d1 ON e.id1 = d1.v JOIN deg d2 ON e.id2 = d2.v
 ),
 sym AS (SELECT x, y FROM ends UNION ALL SELECT y, x FROM ends),
 agg AS (
@@ -7693,7 +7526,7 @@ SELECT (m2 // 2)::BIGINT AS n_edges, sx, sxx, sxy,
                   / (m2 * sxx - sx * sx) * 1e6 + 0.5) / 1e6
   END AS assortativity
 FROM agg
-""".replace("{{edges}}", "{edges}").format(edges=_EDGES_05.strip())
+"""
 
 # r8k: wasserstein_source_drift — 1-D earth-mover drift of each
 # source's length distribution vs the rest: sum of cross-multiplied
@@ -8041,7 +7874,7 @@ def _kcore_sql(ks=(2, 3), n_rounds=5) -> str:
     # into 3^rounds copies of the base pair build (observed: fd
     # exhaustion from the exploded scan tree)
     for k in ks:
-        ctes.append(f"k{k}_e0 AS MATERIALIZED (SELECT id1, id2 FROM e)")
+        ctes.append(f"k{k}_e0 AS MATERIALIZED (SELECT id1, id2 FROM jac)")
         for r in range(n_rounds):
             ctes.append(
                 f"k{k}_d{r} AS MATERIALIZED (SELECT v, count(*) AS d FROM ("
@@ -8059,7 +7892,7 @@ def _kcore_sql(ks=(2, 3), n_rounds=5) -> str:
                 f"SELECT id1 AS v FROM k{k}_e{r} "
                 f"UNION SELECT id2 FROM k{k}_e{r})) AS n_nodes, "
                 f"(SELECT count(*)::BIGINT FROM k{k}_e{r}) AS n_edges")
-    return ("WITH " + _EDGES_05.strip() + ",\n"
+    return (f"WITH {_jaccard_pairs(0.5)},\n"
             + ",\n".join(ctes) + "\n"
             + "\nUNION ALL ".join(rows)
             + "\nORDER BY k, peel_round")
@@ -8538,32 +8371,8 @@ toksrc AS (
     len({TOKS_SQL})::BIGINT AS n_tokens
   FROM documents
 ),
-j AS (WITH
-t2 AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-  FROM t2, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i) g
-),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT id1, id2
-FROM inter JOIN sizes s1 ON id1 = s1.doc_id JOIN sizes s2 ON id2 = s2.doc_id
-WHERE c * 1.0 / (s1.n + s2.n - c) >= 0.8
-),
-edges AS (
-  SELECT id1 AS a, id2 AS b FROM j UNION SELECT id2, id1 FROM j
-),
-reach(src, node) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.node = e.a
-),
-comp AS (SELECT src AS doc_id, min(node) AS component FROM reach
-         GROUP BY src),
+j AS ({_NEAR_DUPS}),
+{_components("SELECT doc_id FROM documents", "j")},
 flagged AS (
   SELECT t.source, t.n_tokens,
     (row_number() OVER (PARTITION BY c.component
@@ -8586,17 +8395,14 @@ FROM flagged GROUP BY source ORDER BY source
 # on the same exact 0.8 pair base, Newman Q as ONE sign-split
 # truncating micro-division of exact HUGEINT integers.
 ORACLE["graph_modularity_audit"] = (
-    "WITH RECURSIVE\nj AS (WITH " + _SHINGLES + "),\n"
+    f"WITH RECURSIVE\nj AS ({_NEAR_DUPS}),\n"
     + """pr AS MATERIALIZED (SELECT id1, id2 FROM j),
 sym AS (SELECT id1 AS src, id2 AS dst FROM pr
         UNION ALL SELECT id2, id1 FROM pr),
 nodes AS (SELECT DISTINCT src AS v FROM sym),
-reach(src, node) AS (
-  SELECT v, v FROM nodes
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN sym e ON r.node = e.src
-),
-cc AS (SELECT src AS v, min(node) AS lbl FROM reach GROUP BY src),
+"""
+    + _components("SELECT v FROM nodes", "pr")
+    + """,
 edges AS (SELECT src, dst FROM sym UNION ALL SELECT v, v FROM nodes),
 l0 AS (SELECT v, v AS lbl FROM nodes),"""
     + ",".join(_LPA_ROUND.format(k=k, p=k - 1) for k in range(1, 5))
@@ -8606,7 +8412,7 @@ deg AS (
     SELECT id1 AS v FROM pr UNION ALL SELECT id2 FROM pr) GROUP BY v
 ),
 lab AS (
-  SELECT 'cc_star' AS method, v, lbl FROM cc
+  SELECT 'cc_star' AS method, doc_id AS v, component AS lbl FROM comp
   UNION ALL SELECT 'lpa_4', v, lbl FROM l4
 ),
 em AS (
@@ -8975,10 +8781,10 @@ FROM truthed GROUP BY o_orderpriority ORDER BY o_orderpriority
 # r8v: graph_rich_club — closed-form density among deg>k nodes on the
 # 0.5-threshold dup edges; NULL phi below 2 qualifying nodes.
 ORACLE["graph_rich_club"] = f"""
-WITH {{edges}},
+WITH {_jaccard_pairs(0.5)},
 deg AS (
   SELECT v, count(*)::BIGINT AS d FROM (
-    SELECT id1 AS v FROM e UNION ALL SELECT id2 FROM e) GROUP BY v
+    SELECT id1 AS v FROM jac UNION ALL SELECT id2 FROM jac) GROUP BY v
 ),
 ks AS (SELECT unnest([1, 2, 4, 8])::BIGINT AS k),
 nk AS (
@@ -8987,7 +8793,7 @@ nk AS (
 ),
 ek AS (
   SELECT ks.k, count(*)::BIGINT AS e_k
-  FROM e JOIN deg a ON e.id1 = a.v JOIN deg b ON e.id2 = b.v
+  FROM jac e JOIN deg a ON e.id1 = a.v JOIN deg b ON e.id2 = b.v
   CROSS JOIN ks
   WHERE a.d > ks.k AND b.d > ks.k
   GROUP BY ks.k
@@ -9000,7 +8806,7 @@ SELECT ks.k, coalesce(nk.n_k, 0)::BIGINT AS n_k,
   END AS phi_e6
 FROM ks LEFT JOIN nk ON nk.k = ks.k LEFT JOIN ek ON ek.k = ks.k
 ORDER BY ks.k
-""".replace("{{edges}}", "{edges}").format(edges=_EDGES_05.strip())
+"""
 
 # r8w: ivm_hll_registers — the portable HLL registers with a
 # base/delta day split; merged and full-recompute estimates emitted

@@ -1,10 +1,11 @@
 """Differential oracle parity for EVERY oracle-paired query, in-repo.
 
 The driver runs this comparison at sf0.01 per round; this test enforces
-the same contract at sf0.001 on every pytest run, so an operator can't
-silently drift from its oracle between rounds. Queries registered
-without SQL (approximate/stateful) are exercised rows-only: they must
-execute and return a well-formed result.
+the same contract at sf0.001, so an operator can't silently drift from
+its oracle between rounds. The bench.py headline queries run in the
+default tier; every other query is in the deep tier (see conftest.py).
+Queries registered without SQL (approximate/stateful) are exercised
+rows-only: they must execute and return a well-formed result.
 
 Rows are compared IN EMITTED ORDER whenever the oracle carries an ORDER
 BY — a regression in a query's sort would otherwise slip through a
@@ -17,10 +18,9 @@ from __future__ import annotations
 
 import pytest
 
+from bench import HEADLINE
 from hadoop_mapreduce_spark.registry import ORACLE, QUERIES
 from tests.conftest import SF_DIR
-
-pytestmark = pytest.mark.deep  # full differential tier — see conftest.py
 
 
 # Oracles where the ORDER BY does not pin a total order (ties possible),
@@ -57,7 +57,9 @@ def _assert_no_decimal(rows, side, name):
                 "or a bit-stable double instead")
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES))
+@pytest.mark.parametrize("name", [
+    pytest.param(name, marks=() if name in HEADLINE else pytest.mark.deep)
+    for name in sorted(QUERIES)])
 def test_query_matches_oracle(spark, duck, name):
     df = QUERIES[name](spark, SF_DIR)
     got_rows = df.collect()

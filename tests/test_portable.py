@@ -1,5 +1,6 @@
 """Twin parity for the engine-portable kernels (functions/portable.py and
-the tokenizer pair in functions/text.py), and the typed oracle contract.
+the tokenizer and n-gram pairs in functions/text.py), and the typed
+oracle contract.
 
 Each kernel has a Spark form and a DuckDB SQL twin; the oracles only
 agree with the operators if the twins agree bit for bit, so they are
@@ -10,6 +11,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+import re
 
 import pyarrow as pa
 import pytest
@@ -28,7 +30,13 @@ from hadoop_mapreduce_spark.functions.portable import (
     hll_rho,
     hll_rho_sql,
 )
-from hadoop_mapreduce_spark.functions.text import TOKS_SQL, normalize_text, tokenize
+from hadoop_mapreduce_spark.functions.text import (
+    TOKS_SQL,
+    ngrams_from_tokens,
+    ngrams_sql,
+    normalize_text,
+    tokenize,
+)
 
 HOSTILE = [
     "", " ", "a", "A", "héllo wörld", "日本語 テキスト", "\x0b", "x\x0by",
@@ -81,6 +89,24 @@ def test_tokenizer_twins_agree(hostile, duck):
     assert got == want
     assert got[HOSTILE.index("x\x0by")] == ["x", "y"]
     assert got[HOSTILE.index("")] == []
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 5])
+def test_ngram_window_twins_agree(hostile, duck, n):
+    toks = tokenize(normalize_text("s"))
+    got = {r.i: list(r.g) for r in hostile.select(
+        "i", ngrams_from_tokens(toks, n).alias("g")).collect()}
+    want = dict(duck.execute(
+        f"SELECT i, {ngrams_sql('t', n)} FROM "
+        f"(SELECT i, {TOKS_SQL} AS t FROM (SELECT i, s AS text FROM hostile))"
+    ).fetchall())
+    assert got == want
+    for i, s in enumerate(HOSTILE):
+        t = re.sub(r"[^a-zA-Z0-9\t\n\x0b\f\r ]+", "", s).lower().split()
+        assert got[i] == [" ".join(t[j:j + n]) for j in range(len(t) - n + 1)]
+    # shorter than n and empty documents emit nothing
+    assert got[HOSTILE.index("")] == []
+    assert got[HOSTILE.index("a")] == (["a"] if n == 1 else [])
 
 
 def _py_estimate(n_hit: int, s_part: int) -> tuple[int, bool]:
