@@ -295,9 +295,8 @@ def split_leakage_guard(spark: SparkSession, sf_dir: str,
     pairs = scoped_persist(minhash_pairs_unsorted(spark, sf_dir, threshold=threshold).select(
         "id1", "id2"))
     pairs.count()  # materialize: referenced by CC rounds AND the audit
-    # star CC, not label propagation: O(log n) rounds vs O(diameter) —
-    # both produce min-reachable component ids (property-tested equal)
-    comp = connected_components_star(docs, pairs, edges_canonical=True)  # (doc_id, comp)
+    # star CC: O(log n) rounds; component id = min reachable doc_id
+    comp = connected_components_star(docs, pairs)  # (doc_id, comp)
     naive = h60(F.col("doc_id").cast("string")) % 10
     grouped = h60(F.col("comp").cast("string")) % 10
 

@@ -14,9 +14,12 @@ Dedup families, all shuffle-disciplined for 100 TB:
   * embedding  — exact block-pair cosine (oracle) and SRP-LSH with
                  bucket-local verify (scale path).
 
-Plus the graph layer over the near-dup pairs: connected components
-(label propagation and O(log n) alternating-star), PageRank hub
-ranking, and degree-oriented triangle counting.
+Plus the graph layer over the near-dup pairs, built on four kernels
+with one definition each: connected components (O(log n) alternating
+star, ``connected_components_star``), the degree rollup (``degrees``),
+synchronous label-propagation rounds (``lpa_labels``) and degree-
+oriented triangle enumeration (``triangles``); PageRank hub ranking
+and the graph-structure audits sit on top.
 
 Determinism: no RNG anywhere. Hashes whose values must match the SQL
 oracle bit-for-bit (simhash, fingerprints) are md5-derived (engine-
@@ -945,81 +948,25 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str, threshold: float = 0.4
 
 
 # --------------------------------------------------------------------------
-# Connected components over near-dup pairs (iterative algorithm)
+# Graph kernels over near-dup pairs: connected components, degrees,
+# label-propagation rounds, triangles. Each has ONE definition here and
+# one DuckDB twin beside ``_components`` in registry.py.
 # --------------------------------------------------------------------------
 
-def connected_components(nodes: DataFrame, edges: DataFrame,
-                         max_iter: int = 20) -> DataFrame:
-    """Min-label propagation connected components.
-
-    nodes: (doc_id), edges: (id1, id2) undirected. Each round every node
-    takes the minimum label among itself and its neighbours; convergence
-    in O(component diameter) rounds (driver-side loop with a per-round
-    convergence count — the canonical iterative-algorithm pattern on
-    Spark; large-star/small-star halves the round count at extreme
-    scale, same join shape). Labels persist per round and the previous
-    round is unpersisted, so peak storage is two label tables.
-
-    Raises RuntimeError if labels are still changing after max_iter
-    rounds: returning silently would hand back SPLIT components (wrong
-    labels) on any graph whose diameter exceeds max_iter — invisible on
-    small fixtures, latent data corruption at scale.
-    """
-    sym = (
-        edges.select(F.col("id1").alias("a"), F.col("id2").alias("b"))
-        .union(edges.select(F.col("id2").alias("a"), F.col("id1").alias("b")))
-    )
-    # localCheckpoint, NOT persist: persist truncates recomputation but
-    # the logical plan still references the previous round's frame twice
-    # (neigh + join), so the plan tree doubles per round — past ~10
-    # rounds the driver hangs in Catalyst analysis long before any
-    # executor works. Checkpointing resets the plan to a leaf scan each
-    # round; prior rounds' blocks are reclaimed by the ContextCleaner
-    # when their references drop, so the live set is two label tables.
-    labels = nodes.select(
-        F.col("doc_id"), F.col("doc_id").alias("comp")).localCheckpoint()
-    for _ in range(max_iter):
-        neigh = (
-            sym.join(labels, sym.b == labels.doc_id)
-            .groupBy(F.col("a").alias("doc_id"))
-            .agg(F.min("comp").alias("neigh_min"))
-        )
-        new_labels = (
-            labels.join(neigh, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(F.col("comp"), F.coalesce("neigh_min", F.col("comp"))).alias("comp"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.join(labels.withColumnRenamed("comp", "old"), "doc_id")
-            .where(F.col("comp") != F.col("old"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing): component diameter exceeds "
-            f"max_iter — raise max_iter or switch to large-star/small-star")
-    return labels
-
-
 def connected_components_star(nodes: DataFrame, edges: DataFrame,
-                              max_iter: int = 25,
-                              edges_canonical: bool = False) -> DataFrame:
+                              max_iter: int = 25) -> DataFrame:
     """Alternating large-star / small-star connected components —
     the O(log n)-round algorithm (Kiveris et al., "Connected Components
-    in MapReduce and Beyond", SoCC'14), vs O(component diameter) rounds
-    for min-label propagation (connected_components above). On a 100 TB
-    pair graph whose duplicate chains can be thousands of hops long,
-    round count IS the cost — each round is a full shuffle of the edge
-    set — so this is the scale path; label propagation stays as the
-    differential twin (tests assert identical components on every
-    fixture and on adversarial long-path graphs).
+    in MapReduce and Beyond", SoCC'14). On a 100 TB pair graph whose
+    duplicate chains can be thousands of hops long, round count IS the
+    cost — each round is a full shuffle of the edge set — so an
+    O(component diameter) algorithm is not an option; tests check the
+    components against a union-find model on fixtures, random graphs and
+    long paths.
+
+    nodes: (doc_id); edges: (id1, id2) undirected, possibly mirrored,
+    duplicated or self-looped. Returns (doc_id, comp), comp = the
+    least doc_id of the node's component.
 
     Each round:
       * large-star: every node u attaches its strictly-larger neighbours
@@ -1029,25 +976,19 @@ def connected_components_star(nodes: DataFrame, edges: DataFrame,
         child, re-attach the child and all its parents to the smallest
         parent.
     Fixed point = a star forest: every surviving edge is
-    (node, component-min). Both passes are one groupBy + one join on the
-    node id — the same shuffle shape as one label-propagation round.
-    Each round's edge set is localCheckpoint'ed to truncate lineage.
+    (node, component-min). Both passes are one window-min on the node
+    id. Each round's edge set is localCheckpoint'ed to truncate lineage.
 
-    Raises RuntimeError on non-convergence (same contract as
-    connected_components: silent truncation would mean split components).
+    Raises RuntimeError on non-convergence: silent truncation would
+    mean split components.
     """
-    # ``edges_canonical=True`` (caller guarantees unique pairs with
-    # id1 < id2 — true for every verified-LSH edge source in this repo)
-    # skips the defensive dedup shuffle on the input; the general
-    # contract still accepts arbitrary (possibly mirrored, duplicated)
-    # edge lists.
+    # No input distinct(): round 1 ends in SELECT DISTINCT before the
+    # first stop test reads the edges, so mirrored or duplicated input
+    # pairs cost nothing but their own rows in round 1.
     spark = nodes.sparkSession
     e = edges.select(F.least("id1", "id2").alias("b"),
                      F.greatest("id1", "id2").alias("a")) \
-        .where(F.col("a") != F.col("b"))
-    if not edges_canonical:
-        e = e.distinct()
-    e = e.localCheckpoint(eager=False)
+        .where(F.col("a") != F.col("b")).localCheckpoint(eager=False)
     # (a, b) = (child, parent-candidate), b < a always; lazy — round
     # 1's stop-test job materialises it together with round 1's edges.
     #
@@ -1153,21 +1094,112 @@ def connected_components_star(nodes: DataFrame, edges: DataFrame,
         .select("doc_id", F.coalesce("root", "doc_id").alias("comp"))
 
 
+def degrees(e: DataFrame) -> DataFrame:
+    """(v, d): the degree of every endpoint of the undirected edge list
+    e(id1, id2), one row per unordered pair — one rollup over both
+    endpoint columns."""
+    return (
+        e.select(F.col("id1").alias("v"))
+        .unionAll(e.select(F.col("id2").alias("v")))
+        .groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("d"))
+    )
+
+
+def lpa_labels(pairs: DataFrame, n_iter: int) -> DataFrame:
+    """(v, lbl) after ``n_iter`` synchronous label-propagation rounds
+    over the undirected pairs(id1, id2); every pair endpoint starts
+    with its own id as its label. Each round every node adopts the
+    most frequent label among its neighbours and itself, ties to the
+    smallest label.
+
+    Determinism: classic async LPA is run-order-dependent; the
+    synchronous fixed-round variant with a total tie-break
+    (count DESC, label ASC) is a pure function of the edge set, so the
+    DuckDB oracles replay the identical rounds as chained aggregation
+    CTEs (registry ``_lpa_sql``) — aggregates are not allowed in a
+    recursive term, but a fixed iteration count needs no recursion.
+
+    Self-loops: each node votes for its own current label too. Pure
+    neighbour voting under SYNCHRONOUS update oscillates with period 2
+    on any near-bipartite family (two identical docs swap labels
+    forever and an even round count reports them as singletons); the
+    self-vote is the standard damping fix and makes pair/clique
+    families converge to their min label.
+
+    Scale shape per round: one join (labels ⨝ edges, both dup-graph-
+    sized) + one (node, label) count + one rank window keyed on node;
+    lineage is re-rooted per round via localCheckpoint.
+    """
+    from hadoop_mapreduce_spark.session import scoped_persist
+
+    sym = (
+        pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
+        .unionAll(pairs.select(F.col("id2").alias("src"),
+                               F.col("id1").alias("dst")))
+    )
+    nodes = sym.select(F.col("src").alias("v")).distinct()
+    edges = scoped_persist(
+        sym.unionAll(nodes.select(F.col("v").alias("src"),
+                                  F.col("v").alias("dst"))))
+    labels = nodes.select("v", F.col("v").alias("lbl"))
+    w = Window.partitionBy("v").orderBy(F.desc("c"), F.asc("lbl"))
+    for _ in range(n_iter):
+        labels = (
+            edges.join(labels.withColumnRenamed("v", "dst"), "dst")
+            .groupBy(F.col("src").alias("v"), "lbl")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") == 1)
+            .select("v", "lbl")
+        ).localCheckpoint(eager=False)
+    return labels
+
+
+def triangles(e: DataFrame) -> DataFrame:
+    """(u, v, w): every triangle of the undirected edge list e(id1, id2)
+    (one row per unordered pair), emitted ONCE at its (degree, id)-
+    minimum corner u, with v < w.
+
+    Degree orientation (Schank & Wagner 2005; Suri & Vassilvitskii
+    2011): orient each edge from the (degree, id)-smaller endpoint to
+    the larger; every triangle then has exactly one wedge (u->v, u->w)
+    whose two edges both leave its minimum corner. Orientation bounds
+    every wedge fan-out by the SMALLER endpoint's degree, which turns
+    the hot-node O(d_max^2) wedge explosion into O(m^(3/2)) total work;
+    wedge build and closure check are two equi-joins on edge keys.
+    """
+    deg = degrees(e)
+    d1 = deg.select(F.col("v").alias("id1"), F.col("d").alias("deg1"))
+    d2 = deg.select(F.col("v").alias("id2"), F.col("d").alias("deg2"))
+    low = (F.col("deg1") < F.col("deg2")) | (
+        (F.col("deg1") == F.col("deg2")) & (F.col("id1") < F.col("id2")))
+    oriented = e.join(d1, "id1").join(d2, "id2").select(
+        F.when(low, F.col("id1")).otherwise(F.col("id2")).alias("src"),
+        F.when(low, F.col("id2")).otherwise(F.col("id1")).alias("dst"),
+    )
+    w1 = oriented.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+    w2 = oriented.select(F.col("src").alias("u"), F.col("dst").alias("w"))
+    wedges = w1.join(w2, "u").where(F.col("v") < F.col("w"))
+    # closure: (v, w) present as an oriented edge in either direction
+    closing = oriented.select(
+        F.least("src", "dst").alias("v"), F.greatest("src", "dst").alias("w"))
+    return wedges.join(closing, ["v", "w"]).select("u", "v", "w")
+
+
 def dedup_components_star(spark: SparkSession, sf_dir: str,
                           threshold: float = 0.8) -> DataFrame:
-    """Driver twin of dedup_connected_components computed by the
-    alternating-star algorithm, with edges from the MinHash-LSH verified
-    candidates (the scale path end to end): candidate generation is
-    O(colliding pairs), not the inverted-index O(postings^2) of
-    dedup_ngram_jaccard — and because every candidate is verified with
-    EXACT shingle Jaccard before thresholding, the edge set equals the
-    exact all-pairs edge set w.h.p. (P[miss | j=0.8] ≈ 8e-8 per pair),
-    so this still hash-checks against the same recursive-CTE oracle as
-    label propagation. dedup_connected_components keeps the exact
-    inverted-index edge source as the oracle twin."""
+    """Twin of dedup_connected_components with edges from the
+    MinHash-LSH verified candidates (the scale path end to end):
+    candidate generation is O(colliding pairs), not the inverted-index
+    O(postings^2) of dedup_ngram_jaccard — and because every candidate
+    is verified with EXACT shingle Jaccard before thresholding, the edge
+    set equals the exact all-pairs edge set w.h.p. (P[miss | j=0.8] ≈
+    8e-8 per pair), so this hash-checks against the same recursive-CTE
+    oracle. dedup_connected_components keeps the exact inverted-index
+    edge source as the oracle twin."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     pairs = minhash_pairs_unsorted(spark, sf_dir, threshold=threshold).select("id1", "id2")
-    out = connected_components_star(docs, pairs, edges_canonical=True)
+    out = connected_components_star(docs, pairs)
     return (
         out.select("doc_id", F.col("comp").cast("long").alias("component"))
         .orderBy("doc_id")
@@ -1193,7 +1225,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str,
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     pairs = minhash_pairs_unsorted(spark, sf_dir, threshold=threshold).select("id1", "id2")
-    comp = connected_components_star(docs.select("doc_id"), pairs, edges_canonical=True)
+    comp = connected_components_star(docs.select("doc_id"), pairs)
     return (
         comp.join(docs, "doc_id")
         .groupBy(F.col("comp").cast("long").alias("component"))
@@ -1277,7 +1309,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str,
         .join(survivors.select(F.col("doc_id").alias("id1")), "id1", "left_semi")
         .join(survivors.select(F.col("doc_id").alias("id2")), "id2", "left_semi")
     )
-    comp = connected_components_star(survivors, edges, edges_canonical=True)
+    comp = connected_components_star(survivors, edges)
 
     ledger_idx = idx_hits.select(
         "doc_id", F.lit("dup_of_index").alias("verdict"), "match_id")
@@ -1296,10 +1328,11 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str,
     """Component id (= min reachable doc_id) per document, where edges
     are exact shingle-Jaccard >= threshold pairs. The cluster-then-keep-
     canonical step of a dedup pipeline: keep component == doc_id rows.
+    Components come from star-CC (connected_components_star).
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     pairs = dedup_ngram_jaccard(spark, sf_dir, threshold=threshold).select("id1", "id2")
-    out = connected_components(docs, pairs)
+    out = connected_components_star(docs, pairs)
     return (
         out.select("doc_id", F.col("comp").cast("long").alias("component"))
         .orderBy("doc_id")
@@ -1505,17 +1538,19 @@ def pagerank_dedup_graph(spark: SparkSession, sf_dir: str,
     """
     from pyspark.sql import Window
 
+    from hadoop_mapreduce_spark.session import scoped_persist
+
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    pairs = minhash_pairs_unsorted(spark, sf_dir, threshold=threshold).select(
-        "id1", "id2")
+    pairs = scoped_persist(
+        minhash_pairs_unsorted(spark, sf_dir, threshold=threshold)
+        .select("id1", "id2"))
     edges = (
         pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
         .unionAll(pairs.select(F.col("id2").alias("src"),
                                F.col("id1").alias("dst")))
     )
-    from hadoop_mapreduce_spark.session import scoped_persist
-    edges = scoped_persist(edges)
-    degree = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    degree = degrees(pairs).select(F.col("v").alias("src"),
+                                   F.col("d").alias("deg"))
     n_docs = docs.count()
     ranks = docs.select("doc_id", F.lit(1.0 / n_docs).alias("rank"))
     for _ in range(n_iter):
@@ -1563,48 +1598,16 @@ def triangle_count_dedup_graph(spark: SparkSession, sf_dir: str,
     (one template, many variants) during dedup keep-rule selection, and
     triangles are the cheapest signal separating the two.
 
-    The degree-orientation trick keeps the join sizes bounded: orient
-    every undirected edge from the lower-(degree, id) endpoint to the
-    higher; every triangle then has exactly ONE wedge whose two edges
-    both leave its minimum vertex, so counting (a->b, a->c, b->c)
-    matches each triangle once and the wedge join fans out by
-    out-degree, which orientation caps at O(sqrt(E)) for any graph —
-    the standard MapReduce triangle-count bound (Suri & Vassilvitskii).
-
-    Edges come from the exact inverted-index Jaccard (oracle parity);
-    output: total triangles + per-degree-class counts. Hash-green.
+    Triangles come from the degree-oriented enumerator ``triangles``
+    (each triangle once, wedge fan-out capped by orientation — the
+    standard MapReduce triangle-count bound of Suri & Vassilvitskii)
+    over the exact inverted-index Jaccard edges (``_dup_edges``, oracle
+    parity); output: total and distinct triangle counts. Hash-green.
     """
-    pairs = dedup_ngram_jaccard(spark, sf_dir, threshold=threshold).select(
-        "id1", "id2")
-    und = (
-        pairs.select(F.col("id1").alias("a"), F.col("id2").alias("b"))
-        .unionAll(pairs.select(F.col("id2").alias("a"),
-                               F.col("id1").alias("b")))
-    )
-    deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("d")).withColumnRenamed(
-        "a", "v")
-    # orient: keep (u, w) where (deg(u), u) < (deg(w), w)
-    e = (
-        und.join(deg.withColumnRenamed("v", "a").withColumnRenamed("d", "da"),
-                 "a")
-        .join(deg.withColumnRenamed("v", "b").withColumnRenamed("d", "db"),
-              "b")
-        .where((F.col("da") < F.col("db"))
-               | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))))
-        .select("a", "b")
-    )
-    wedges = (
-        e.alias("x").join(e.alias("y"), F.col("x.a") == F.col("y.a"))
-        .where(F.col("x.b") < F.col("y.b"))
-        .select(F.col("x.a").alias("a"), F.col("x.b").alias("b"),
-                F.col("y.b").alias("c"))
-    )
-    closers = e.select(F.col("a").alias("b"), F.col("b").alias("c")) \
-        .unionAll(e.select(F.col("b").alias("b"), F.col("a").alias("c")))
-    tris = wedges.join(closers, ["b", "c"], "left_semi")
+    tris = triangles(_dup_edges(spark, sf_dir, threshold))
     return tris.agg(
         F.count(F.lit(1)).alias("n_triangles"),
-        F.countDistinct("a", "b", "c").alias("n_distinct_triangles"),
+        F.countDistinct("u", "v", "w").alias("n_distinct_triangles"),
     )
 
 
@@ -1742,7 +1745,7 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str,
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     pairs = minhash_pairs_unsorted(spark, sf_dir, threshold=threshold).select(
         "id1", "id2")
-    comp = connected_components_star(docs, pairs, edges_canonical=True)
+    comp = connected_components_star(docs, pairs)
     sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("k"))
     return (
         sizes.groupBy("k")
@@ -2085,50 +2088,14 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str,
     clusters: each node adopts the MAJORITY label among its neighbours,
     ties to the smallest label, for a fixed n_iter synchronous rounds.
 
-    Determinism: classic async LPA is run-order-dependent; the
-    synchronous fixed-round variant with a total tie-break
-    (count DESC, label ASC) is a pure function of the edge set, so the
-    DuckDB oracle replays the identical rounds as CHAINED (non-
-    recursive) aggregation CTEs — aggregates are not allowed in a
-    recursive term, but a FIXED iteration count needs no recursion.
-
-    Scale shape per round: one join (labels ⨝ edges, both dup-graph-
-    sized — orders of magnitude below the corpus) + one (node, label)
-    count + one rank window keyed on node. Lineage is re-rooted per
-    round via localCheckpoint like every iterative operator here
-    (dedup.py star-CC precedent).
+    The rounds are ``lpa_labels`` (self-vote damped, total tie-break,
+    replayed by the oracle's chained CTEs). Scale shape per round: one
+    join + one (node, label) count + one rank window, all on the
+    dup-edge relation.
     """
     pairs = minhash_pairs_unsorted(spark, sf_dir, threshold=threshold) \
         .select("id1", "id2")
-    from hadoop_mapreduce_spark.session import scoped_persist
-
-    sym = (
-        pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-        .unionAll(pairs.select(F.col("id2").alias("src"),
-                               F.col("id1").alias("dst")))
-    )
-    # Self-loops: each node votes for its own current label too. Pure
-    # neighbour voting under SYNCHRONOUS update oscillates with period
-    # 2 on any near-bipartite family (two identical docs swap labels
-    # forever and an even round count reports them as singletons); the
-    # self-vote is the standard damping fix and makes pair/clique
-    # families converge to their min label.
-    nodes = sym.select(F.col("src").alias("v")).distinct()
-    edges = scoped_persist(
-        sym.unionAll(nodes.select(F.col("v").alias("src"),
-                                  F.col("v").alias("dst"))))
-    labels = nodes.select("v", F.col("v").alias("lbl"))
-    w = Window.partitionBy("v").orderBy(F.desc("c"), F.asc("lbl"))
-    for i in range(n_iter):
-        labels = (
-            edges.join(labels.withColumnRenamed("v", "dst"), "dst")
-            .groupBy(F.col("src").alias("v"), "lbl")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("v", "lbl")
-        )
-        labels = labels.localCheckpoint(eager=False)
+    labels = lpa_labels(pairs, n_iter)
     wc = Window.partitionBy("lbl")
     return (
         labels.withColumn("community_size",
@@ -2635,53 +2602,17 @@ def _dup_edges(spark: SparkSession, sf_dir: str, threshold: float):
 def graph_triangle_count(spark: SparkSession, sf_dir: str,
                          threshold: float = 0.5, k: int = 50) -> DataFrame:
     """Triangle counting over the near-dup pair graph with the
-    degree-ordered node-iterator (Schank & Wagner 2005 / the
-    vertex-ordering trick behind every distributed triangle counter):
-    orient each undirected edge from the (degree, id)-smaller endpoint
-    to the larger, join oriented wedges (u->v, u->w) against the
-    oriented edge (v->w), and every triangle is counted exactly once.
-    Triangles are the transitivity evidence `dedup_chain_audit`'s
-    chain rows lack: a dup CLUSTER rich in triangles is a true
-    re-post family, while a triangle-free chain is drift (A~B~C with
-    A!~C) that keep-one-per-cluster dedup overfolds.
-
-    Scale: the orientation bounds every wedge fan-out by the SMALLER
-    endpoint's degree — the classic fix that turns the hot-node
-    O(d_max^2) wedge explosion into O(m^(3/2)) total work; wedge build
-    and closure check are two equi-joins on edge keys.
+    degree-ordered node-iterator ``triangles`` (every triangle found
+    exactly once, O(m^(3/2)) total work). Triangles are the
+    transitivity evidence `dedup_chain_audit`'s chain rows lack: a dup
+    CLUSTER rich in triangles is a true re-post family, while a
+    triangle-free chain is drift (A~B~C with A!~C) that
+    keep-one-per-cluster dedup overfolds.
 
     Output: top-k nodes by triangle participation (count desc, id asc)
     — per-NODE counts, each triangle crediting all three corners.
     """
-    e = _dup_edges(spark, sf_dir, threshold)
-    deg = (
-        e.select(F.col("id1").alias("v")).unionAll(
-            e.select(F.col("id2").alias("v")))
-        .groupBy("v").agg(F.count(F.lit(1)).alias("d"))
-    )
-    d1 = deg.select(F.col("v").alias("id1"), F.col("d").alias("deg1"))
-    d2 = deg.select(F.col("v").alias("id2"), F.col("d").alias("deg2"))
-    # orient low (deg, id) -> high (deg, id)
-    oriented = (
-        e.join(d1, "id1").join(d2, "id2")
-        .select(
-            F.when((F.col("deg1") < F.col("deg2"))
-                   | ((F.col("deg1") == F.col("deg2"))
-                      & (F.col("id1") < F.col("id2"))),
-                   F.col("id1")).otherwise(F.col("id2")).alias("src"),
-            F.when((F.col("deg1") < F.col("deg2"))
-                   | ((F.col("deg1") == F.col("deg2"))
-                      & (F.col("id1") < F.col("id2"))),
-                   F.col("id2")).otherwise(F.col("id1")).alias("dst"),
-        )
-    )
-    w1 = oriented.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    w2 = oriented.select(F.col("src").alias("u"), F.col("dst").alias("w"))
-    wedges = w1.join(w2, "u").where(F.col("v") < F.col("w"))
-    # closure: (v, w) present as an oriented edge in either direction
-    closing = oriented.select(
-        F.least("src", "dst").alias("v"), F.greatest("src", "dst").alias("w"))
-    tri = wedges.join(closing, ["v", "w"])
+    tri = triangles(_dup_edges(spark, sf_dir, threshold))
     per_node = (
         tri.select(F.col("u").alias("doc_id"))
         .unionAll(tri.select(F.col("v").alias("doc_id")))
@@ -2713,11 +2644,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str,
     back onto edges, and a 1-row fold.
     """
     e = _dup_edges(spark, sf_dir, threshold)
-    deg = (
-        e.select(F.col("id1").alias("v")).unionAll(
-            e.select(F.col("id2").alias("v")))
-        .groupBy("v").agg(F.count(F.lit(1)).alias("d"))
-    )
+    deg = degrees(e)
     d1 = deg.select(F.col("v").alias("id1"), F.col("d").alias("da"))
     d2 = deg.select(F.col("v").alias("id2"), F.col("d").alias("db"))
     both = (
@@ -2797,12 +2724,7 @@ def kcore_dedup_graph(spark: SparkSession, sf_dir: str,
             rows = s if rows is None else rows.unionAll(s)
             if r == n_rounds:
                 break
-            deg = (
-                e.select(F.col("id1").alias("v"))
-                .unionAll(e.select(F.col("id2").alias("v")))
-                .groupBy("v").agg(F.count(F.lit(1)).alias("d"))
-            )
-            keep = deg.where(F.col("d") >= k).select("v")
+            keep = degrees(e).where(F.col("d") >= k).select("v")
             e = (
                 e.join(keep, e["id1"] == keep["v"], "left_semi")
                 .join(keep, e["id2"] == keep["v"], "left_semi")
@@ -2843,7 +2765,7 @@ def dedup_token_savings(spark: SparkSession, sf_dir: str,
     pairs = minhash_pairs_unsorted(spark, sf_dir, threshold=threshold) \
         .select("id1", "id2")
     comp = connected_components_star(
-        docs.select("doc_id"), pairs, edges_canonical=True)
+        docs.select("doc_id"), pairs)
     members = comp.join(docs, "doc_id")
     wk = Window.partitionBy("comp").orderBy(
         F.desc("n_chars"), F.asc("doc_id"))
@@ -2894,8 +2816,8 @@ def graph_modularity_audit(spark: SparkSession, sf_dir: str,
 
     Scale: pair base shared (scoped_persist); per method one
     labels-on-edges join + two label-keyed rollups — all dup-graph-
-    sized; LPA rounds are the fixed-round machinery of
-    `label_propagation_communities` on the same persisted edges.
+    sized; LPA rounds are `lpa_labels`, the fixed-round machinery of
+    `label_propagation_communities`, on the same persisted pairs.
     """
     from hadoop_mapreduce_spark.session import scoped_persist
 
@@ -2908,35 +2830,11 @@ def graph_modularity_audit(spark: SparkSession, sf_dir: str,
         .distinct()
     )
     cc = connected_components_star(
-        nodes.select(F.col("v").alias("doc_id")), pairs,
-        edges_canonical=True).select(
+        nodes.select(F.col("v").alias("doc_id")), pairs).select(
         F.col("doc_id").alias("v"), F.col("comp").alias("lbl"))
-    # LPA, the label_propagation_communities fixed rounds on the same
-    # persisted pair base (self-loop damping, (count desc, lbl) ties)
-    sym = (
-        pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-        .unionAll(pairs.select(F.col("id2").alias("src"),
-                               F.col("id1").alias("dst")))
-    )
-    edges = scoped_persist(
-        sym.unionAll(nodes.select(F.col("v").alias("src"),
-                                  F.col("v").alias("dst"))))
-    labels = nodes.select("v", F.col("v").alias("lbl"))
-    wl = Window.partitionBy("v").orderBy(F.desc("c"), F.asc("lbl"))
-    for _ in range(4):
-        labels = (
-            edges.join(labels.withColumnRenamed("v", "dst"), "dst")
-            .groupBy(F.col("src").alias("v"), "lbl")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .withColumn("rn", F.row_number().over(wl))
-            .where(F.col("rn") == 1)
-            .select("v", "lbl")
-        ).localCheckpoint(eager=False)
-    deg = (
-        pairs.select(F.col("id1").alias("v"))
-        .unionAll(pairs.select(F.col("id2").alias("v")))
-        .groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
+    # LPA: the label_propagation_communities rounds on the same pairs
+    labels = lpa_labels(pairs, 4)
+    deg = degrees(pairs)
 
     def q_row(lbl_df: DataFrame, method: str) -> DataFrame:
         l1 = lbl_df.select(F.col("v").alias("id1"),
@@ -3007,11 +2905,7 @@ def graph_rich_club(spark: SparkSession, sf_dir: str,
     from hadoop_mapreduce_spark.session import scoped_persist
 
     e = scoped_persist(e)
-    deg = (
-        e.select(F.col("id1").alias("v"))
-        .unionAll(e.select(F.col("id2").alias("v")))
-        .groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
+    deg = degrees(e)
     kdf = spark.createDataFrame([(int(k),) for k in ks], "k long")
     nk = (
         deg.crossJoin(F.broadcast(kdf))

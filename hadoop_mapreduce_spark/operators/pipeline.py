@@ -431,7 +431,7 @@ def pipeline_target_select(spark: SparkSession, sf_dir: str,
         exact_jaccard_for_pairs(docs, pairs, hashed_shingles=hs)
         .where(F.col("jaccard") >= threshold)
         .select("id1", "id2"))
-    comp = connected_components_star(surv_ids, verified, edges_canonical=True)
+    comp = connected_components_star(surv_ids, verified)
     keep = (
         comp.join(base.select("doc_id", "n_chars"), "doc_id")
         .groupBy("comp")

@@ -2220,13 +2220,13 @@ def algebraic_merge_audit(spark, sf_dir: str):
 
 
 def er_survivorship_golden(spark: SparkSession, sf_dir: str,
-                           max_lev: int = 2, n_rounds: int = 3) -> DataFrame:
+                           max_lev: int = 2) -> DataFrame:
     """Golden-record survivorship — the step AFTER entity-resolution
     linkage (`customer_entity_blocking` generates the candidate pairs,
     `fellegi_sunter_weights` scores them; this operator MERGES): matched
-    customers are clustered by fixed-round synchronous min-label
-    propagation over the lev<=``max_lev`` pair graph, and each
-    multi-member cluster emits one golden record under explicit
+    customers are clustered into the exact connected components of the
+    lev<=``max_lev`` pair graph (star-CC, `connected_components_star`),
+    and each multi-member cluster emits one golden record under explicit
     survivorship rules — golden id = MIN custkey (stable), surviving
     name = the highest-balance member's (ties to min custkey; the
     most-funded-record-wins rule stands in for recency, which the
@@ -2235,20 +2235,17 @@ def er_survivorship_golden(spark: SparkSession, sf_dir: str,
     steward reviews before committing the merge.
 
     Determinism: blocking confines pairs to equal (nation, segment),
-    so every cluster is attribute-homogeneous and min-propagation is a
-    pure function of the edge set; ``n_rounds`` fixed synchronous
-    rounds replay as chained aggregation CTEs in the oracle (the LPA
-    precedent); round r spreads each cluster's minimum custkey to every
-    node within graph distance r of it, so 3 rounds cover diameter-3
-    clusters — past the fixture's observed shapes (pairs and small
-    stars), and the wave test asserts CONVERGENCE (a 4th round changes
-    no label), so the fixed count is not a hidden approximation.
+    so every cluster is attribute-homogeneous; a component and its
+    minimum custkey are pure functions of the edge set, which the
+    oracle labels with the recursive reach CTE. Components are exact
+    at any diameter — a fixed count of min-label rounds is not: pair
+    chains in the customer graph reach 8 hops from their minimum at
+    sf0.01.
 
     Scale: pair generation is the block-confined ER cost envelope
-    (shared shape with customer_entity_blocking); each propagation
-    round is one join + one min-rollup on the PAIR graph (orders of
-    magnitude below the customer relation); survivorship is one rank
-    window + one rollup per cluster.
+    (shared shape with customer_entity_blocking); star-CC runs O(log n)
+    rounds on the PAIR graph (orders of magnitude below the customer
+    relation); survivorship is one rank window + one rollup per cluster.
     """
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_mktsegment",
@@ -2272,26 +2269,18 @@ def er_survivorship_golden(spark: SparkSession, sf_dir: str,
         .select(F.col("a.c_custkey").alias("id1"),
                 F.col("b.c_custkey").alias("id2"))
     )
+    from hadoop_mapreduce_spark.operators.dedup import (
+        connected_components_star,
+    )
     from hadoop_mapreduce_spark.session import scoped_persist
 
-    sym = pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst")) \
-        .unionAll(pairs.select(F.col("id2").alias("src"),
-                               F.col("id1").alias("dst")))
-    nodes = sym.select(F.col("src").alias("v")).distinct()
-    adj = scoped_persist(
-        sym.unionAll(nodes.select(F.col("v").alias("src"),
-                                  F.col("v").alias("dst"))))
-    labels = nodes.select("v", F.col("v").alias("lbl"))
-    for _ in range(n_rounds):
-        labels = (
-            adj.join(labels.withColumnRenamed("v", "dst"), "dst")
-            .groupBy(F.col("src").alias("v"))
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint(eager=False)
-        )
-    members = labels.join(
-        cust, labels["v"] == cust["c_custkey"]).select(
-        F.col("lbl").alias("cluster"), "c_custkey", "c_name",
+    pairs = scoped_persist(pairs)
+    nodes = pairs.select(
+        F.explode(F.array("id1", "id2")).alias("doc_id")).distinct()
+    comp = connected_components_star(nodes, pairs)
+    members = comp.join(
+        cust, comp["doc_id"] == cust["c_custkey"]).select(
+        F.col("comp").alias("cluster"), "c_custkey", "c_name",
         "c_nationkey", "c_mktsegment", "bal_cents")
     w = Window.partitionBy("cluster").orderBy(
         F.desc("bal_cents"), F.asc("c_custkey"))

@@ -100,7 +100,7 @@ def kmeans_centroids(vectors: DataFrame, n_lists: int = 16, n_iter: int = 3,
     result is deterministic. Each iteration's k-row centroid table is
     localCheckpoint'ed (k·d doubles — trivially small) to truncate
     lineage, the same bounded-iteration pattern as
-    dedup.connected_components.
+    dedup.connected_components_star.
     """
     w = Window.partitionBy("bucket").orderBy(id_col)
     centroids = (

@@ -24,8 +24,10 @@ bit-comparable:
     oracles splice in: the shingle sets (``_SHINGLE_SETS``), the
     inverted-index pair counts (``_SHINGLE_PAIRS``), the exact
     shingle-Jaccard pairs at a cut (``_jaccard_pairs``; ``_NEAR_DUPS``
-    is its 0.8 query) and the recursive min-label components
-    (``_components``);
+    is its 0.8 query), the recursive min-label components
+    (``_components``), and the graph twins of dedup.py's Spark
+    kernels: degrees (``_degrees_sql``), label-propagation rounds
+    (``_lpa_sql``) and degree-oriented triangles (``_triangles_sql``);
   * approximate operators (HLL, IVF-ANN) are registered without an
     oracle → the driver records a rows-only check, as the contract
     allows for non-SQL-expressible ops.
@@ -526,8 +528,8 @@ SELECT ngram, count(*) AS cnt FROM grams GROUP BY ngram
 """
 
 # The near-dup oracle kernels. Each is a CTE list an oracle splices
-# into its own WITH, so every exact pair base and component labelling
-# is built from the same text.
+# into its own WITH, so every exact pair base, component labelling and
+# graph kernel is built from the same text.
 
 # toks(doc_id, t); sh(doc_id, s): each document's distinct word
 # 3-shingles; sizes(doc_id, n): the shingle-set sizes.
@@ -577,6 +579,65 @@ reach(src, node) AS (
   SELECT r.src, e.b FROM reach r JOIN cc_edges e ON r.node = e.a
 ),
 comp AS (SELECT src AS doc_id, min(node) AS component FROM reach GROUP BY src)"""
+
+
+def _degrees_sql(rel: str) -> str:
+    """deg(v, d): the degree of every endpoint of the undirected edge
+    relation ``rel``(id1, id2), one row per unordered pair."""
+    return f"""deg AS (
+  SELECT v, count(*)::BIGINT AS d FROM (
+    SELECT id1 AS v FROM {rel} UNION ALL SELECT id2 FROM {rel}) GROUP BY v
+)"""
+
+
+def _lpa_sql(rel: str, n_iter: int) -> str:
+    """lpa(v, lbl): ``n_iter`` synchronous label-propagation rounds over
+    the undirected relation ``rel``(id1, id2), the twin of
+    dedup.lpa_labels. A fixed round count needs no recursion (and a
+    recursive term may not aggregate), so the rounds are chained
+    aggregation CTEs l0..l{n_iter}; self-loops damp the period-2
+    oscillation and the (count DESC, label ASC) tie-break totalises the
+    update."""
+    rounds = "".join(f""",
+l{k} AS (
+  SELECT v, lbl FROM (
+    SELECT e.src AS v, p.lbl, count(*) AS c,
+           row_number() OVER (PARTITION BY e.src
+                              ORDER BY count(*) DESC, p.lbl) AS rn
+    FROM lpa_edges e JOIN l{k - 1} p ON p.v = e.dst
+    GROUP BY e.src, p.lbl)
+  WHERE rn = 1
+)""" for k in range(1, n_iter + 1))
+    return f"""lpa_sym AS (
+  SELECT id1 AS src, id2 AS dst FROM {rel} UNION ALL SELECT id2, id1 FROM {rel}
+),
+lpa_edges AS (
+  SELECT src, dst FROM lpa_sym UNION ALL SELECT DISTINCT src, src FROM lpa_sym
+),
+l0 AS (SELECT DISTINCT src AS v, src AS lbl FROM lpa_sym){rounds},
+lpa AS (SELECT v, lbl FROM l{n_iter})"""
+
+
+def _triangles_sql(rel: str) -> str:
+    """_degrees_sql(rel) plus tri(u, v, w): every triangle of ``rel``,
+    once, at its (degree, id)-minimum corner u with v < w — the
+    degree-oriented wedges closed by an oriented edge."""
+    return f"""{_degrees_sql(rel)},
+oriented AS (
+  SELECT CASE WHEN (d1.d, e.id1) < (d2.d, e.id2) THEN e.id1 ELSE e.id2 END
+           AS src,
+         CASE WHEN (d1.d, e.id1) < (d2.d, e.id2) THEN e.id2 ELSE e.id1 END
+           AS dst
+  FROM {rel} e JOIN deg d1 ON e.id1 = d1.v JOIN deg d2 ON e.id2 = d2.v
+),
+wedges AS (
+  SELECT a.src AS u, a.dst AS v, b.dst AS w
+  FROM oriented a JOIN oriented b ON a.src = b.src AND a.dst < b.dst
+),
+closing AS (
+  SELECT least(src, dst) AS v, greatest(src, dst) AS w FROM oriented
+),
+tri AS (SELECT u, v, w FROM wedges JOIN closing USING (v, w))"""
 
 
 ORACLE: dict[str, str] = {
@@ -2525,23 +2586,11 @@ ORDER BY cnt DESC, bigram LIMIT 20
 # Degree-oriented triangle count (Suri & Vassilvitskii orientation):
 # every triangle counted exactly once at its minimum-(degree, id) vertex.
 ORACLE["triangle_count_dedup_graph"] = f"""
-WITH j AS ({_NEAR_DUPS}),
-und AS (SELECT id1 AS a, id2 AS b FROM j UNION ALL SELECT id2, id1 FROM j),
-deg AS (SELECT a AS v, count(*) AS d FROM und GROUP BY a),
-e AS (
-  SELECT u.a, u.b FROM und u
-  JOIN deg da ON u.a = da.v JOIN deg db ON u.b = db.v
-  WHERE (da.d < db.d) OR (da.d = db.d AND u.a < u.b)
-),
-wedges AS (
-  SELECT x.a, x.b, y.b AS c
-  FROM e x JOIN e y ON x.a = y.a WHERE x.b < y.b
-),
-closers AS (SELECT a AS b, b AS c FROM e UNION ALL SELECT b, a FROM e),
-tris AS (SELECT DISTINCT w.a, w.b, w.c FROM wedges w JOIN closers cl USING (b, c))
+WITH {_jaccard_pairs(0.8)},
+{_triangles_sql("jac")}
 SELECT count(*)::BIGINT AS n_triangles,
-  count(*)::BIGINT AS n_distinct_triangles
-FROM tris
+  count(DISTINCT (u, v, w))::BIGINT AS n_distinct_triangles
+FROM tri
 """
 
 ORACLE["events_anomaly_zscore"] = """
@@ -3168,7 +3217,7 @@ ORACLE["pagerank_dedup_graph"] = f"""
 WITH RECURSIVE
 j AS ({_NEAR_DUPS}),
 edges AS (SELECT id1 AS src, id2 AS dst FROM j UNION ALL SELECT id2, id1 FROM j),
-degree AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
+{_degrees_sql("j")},
 nd AS (SELECT count(*)::DOUBLE AS n FROM documents),
 pr(it, doc_id, rank) AS (
   SELECT 0, doc_id, 1.0/(SELECT n FROM nd) FROM documents
@@ -3177,13 +3226,13 @@ pr(it, doc_id, rank) AS (
     (1-0.85)/(SELECT n FROM nd)
     + 0.85 * (COALESCE(i.inflow, 0)
               + (SELECT COALESCE(sum(r2.rank), 0) FROM pr r2
-                 LEFT JOIN degree dg2 ON r2.doc_id = dg2.src
-                 WHERE dg2.src IS NULL) / (SELECT n FROM nd))
+                 LEFT JOIN deg dg2 ON r2.doc_id = dg2.v
+                 WHERE dg2.v IS NULL) / (SELECT n FROM nd))
   FROM documents d
   CROSS JOIN (SELECT DISTINCT it FROM pr) p
   LEFT JOIN (
-    SELECT e.dst AS doc_id, sum(r.rank / dg.deg) AS inflow
-    FROM pr r JOIN degree dg ON r.doc_id = dg.src
+    SELECT e.dst AS doc_id, sum(r.rank / dg.d) AS inflow
+    FROM pr r JOIN deg dg ON r.doc_id = dg.v
               JOIN edges e ON r.doc_id = e.src
     GROUP BY e.dst
   ) i ON d.doc_id = i.doc_id
@@ -5449,35 +5498,14 @@ FROM rk, t
 GROUP BY 1 ORDER BY 1
 """
 
-# r7m: label_propagation_communities — fixed-round synchronous LPA as
-# CHAINED aggregation CTEs (no recursion needed for a fixed count, and
-# recursive terms may not aggregate); tie-break (count DESC, label ASC)
-# totalises the update on both engines.
-_LPA_ROUND = """
-l{k} AS (
-  SELECT v, lbl FROM (
-    SELECT e.src AS v, p.lbl, count(*) AS c,
-           row_number() OVER (PARTITION BY e.src
-                              ORDER BY count(*) DESC, p.lbl) AS rn
-    FROM edges e JOIN l{p} p ON p.v = e.dst
-    GROUP BY e.src, p.lbl)
-  WHERE rn = 1
-)"""
-ORACLE["label_propagation_communities"] = (
-    f"WITH j AS ({_NEAR_DUPS}),\n"
-    "sym AS (SELECT id1 AS src, id2 AS dst FROM j"
-    " UNION ALL SELECT id2, id1 FROM j),\n"
-    # self-loops damp the synchronous-update period-2 oscillation
-    # (see the operator docstring)
-    "edges AS (SELECT src, dst FROM sym"
-    " UNION ALL SELECT DISTINCT src, src FROM sym),\n"
-    "l0 AS (SELECT DISTINCT src AS v, src AS lbl FROM sym),"
-    + ",".join(_LPA_ROUND.format(k=k, p=k - 1) for k in range(1, 5))
-    + """
+# r7m: label_propagation_communities — 4 rounds of the LPA twin.
+ORACLE["label_propagation_communities"] = f"""
+WITH j AS ({_NEAR_DUPS}),
+{_lpa_sql("j", 4)}
 SELECT v AS doc_id, lbl AS community,
        count(*) OVER (PARTITION BY lbl)::BIGINT AS community_size
-FROM l4 ORDER BY doc_id
-""")
+FROM lpa ORDER BY doc_id
+"""
 
 # r7m: sax_motifs — symbols from comparisons over an identically-built
 # z expression (exact BIGINT window sums -> one double expression
@@ -7475,25 +7503,7 @@ FROM arms CROSS JOIN stats ORDER BY arm
 # credited.
 ORACLE["graph_triangle_count"] = f"""
 WITH {_jaccard_pairs(0.5)},
-deg AS (
-  SELECT v, count(*)::BIGINT AS d FROM (
-    SELECT id1 AS v FROM jac UNION ALL SELECT id2 FROM jac) GROUP BY v
-),
-oriented AS (
-  SELECT CASE WHEN (d1.d, e.id1) < (d2.d, e.id2) THEN e.id1 ELSE e.id2 END
-           AS src,
-         CASE WHEN (d1.d, e.id1) < (d2.d, e.id2) THEN e.id2 ELSE e.id1 END
-           AS dst
-  FROM jac e JOIN deg d1 ON e.id1 = d1.v JOIN deg d2 ON e.id2 = d2.v
-),
-wedges AS (
-  SELECT a.src AS u, a.dst AS v, b.dst AS w
-  FROM oriented a JOIN oriented b ON a.src = b.src AND a.dst < b.dst
-),
-closing AS (
-  SELECT least(src, dst) AS v, greatest(src, dst) AS w FROM oriented
-),
-tri AS (SELECT u, v, w FROM wedges JOIN closing USING (v, w))
+{_triangles_sql("jac")}
 SELECT doc_id, count(*)::BIGINT AS n_triangles FROM (
   SELECT u AS doc_id FROM tri
   UNION ALL SELECT v FROM tri
@@ -7506,10 +7516,7 @@ ORDER BY n_triangles DESC, doc_id ASC LIMIT 50
 # degrees; exact BIGINT sums, one float expression.
 ORACLE["graph_degree_assortativity"] = f"""
 WITH {_jaccard_pairs(0.5)},
-deg AS (
-  SELECT v, count(*)::BIGINT AS d FROM (
-    SELECT id1 AS v FROM jac UNION ALL SELECT id2 FROM jac) GROUP BY v
-),
+{_degrees_sql("jac")},
 ends AS (
   SELECT d1.d AS x, d2.d AS y
   FROM jac e JOIN deg d1 ON e.id1 = d1.v JOIN deg d2 ON e.id2 = d2.v
@@ -7877,14 +7884,11 @@ def _kcore_sql(ks=(2, 3), n_rounds=5) -> str:
         ctes.append(f"k{k}_e0 AS MATERIALIZED (SELECT id1, id2 FROM jac)")
         for r in range(n_rounds):
             ctes.append(
-                f"k{k}_d{r} AS MATERIALIZED (SELECT v, count(*) AS d FROM ("
-                f"SELECT id1 AS v FROM k{k}_e{r} "
-                f"UNION ALL SELECT id2 FROM k{k}_e{r}) GROUP BY v)")
-            ctes.append(
                 f"k{k}_e{r + 1} AS MATERIALIZED "
-                f"(SELECT id1, id2 FROM k{k}_e{r} "
-                f"WHERE id1 IN (SELECT v FROM k{k}_d{r} WHERE d >= {k}) "
-                f"AND id2 IN (SELECT v FROM k{k}_d{r} WHERE d >= {k}))")
+                f"(WITH {_degrees_sql(f'k{k}_e{r}')} "
+                f"SELECT id1, id2 FROM k{k}_e{r} "
+                f"WHERE id1 IN (SELECT v FROM deg WHERE d >= {k}) "
+                f"AND id2 IN (SELECT v FROM deg WHERE d >= {k}))")
         for r in range(n_rounds + 1):
             rows.append(
                 f"SELECT {k}::BIGINT AS k, {r}::BIGINT AS peel_round, "
@@ -7943,11 +7947,12 @@ ORDER BY day
 """
 
 # r8o: er_survivorship_golden — block-confined lev<=2 pairs (the
-# customer_entity_blocking base), 3 chained min-propagation rounds
-# (MATERIALIZED: each round is referenced by the next), then the
+# customer_entity_blocking base), their exact connected components
+# (the recursive reach CTE; cluster = least reachable custkey), then the
 # survivorship rules as one rank window + one rollup.
 ORACLE["er_survivorship_golden"] = """
-WITH c AS (
+WITH RECURSIVE
+c AS (
   SELECT c_custkey, c_name, c_nationkey, c_mktsegment,
          CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_cents
   FROM customer
@@ -7960,28 +7965,12 @@ p AS MATERIALIZED (
    AND a.c_custkey < b.c_custkey
   WHERE levenshtein(a.c_name, b.c_name) <= 2
 ),
-sym AS (
-  SELECT id1 AS src, id2 AS dst FROM p
-  UNION ALL SELECT id2, id1 FROM p
-),
-nodes AS (SELECT DISTINCT src AS v FROM sym),
-adj AS MATERIALIZED (
-  SELECT src, dst FROM sym UNION ALL SELECT v, v FROM nodes
-),
-l0 AS (SELECT v, v AS lbl FROM nodes),
-l1 AS MATERIALIZED (
-  SELECT a.src AS v, min(l.lbl) AS lbl
-  FROM adj a JOIN l0 l ON a.dst = l.v GROUP BY a.src),
-l2 AS MATERIALIZED (
-  SELECT a.src AS v, min(l.lbl) AS lbl
-  FROM adj a JOIN l1 l ON a.dst = l.v GROUP BY a.src),
-l3 AS MATERIALIZED (
-  SELECT a.src AS v, min(l.lbl) AS lbl
-  FROM adj a JOIN l2 l ON a.dst = l.v GROUP BY a.src),
+nodes AS (SELECT id1 AS v FROM p UNION SELECT id2 FROM p),
+""" + _components("SELECT v FROM nodes", "p") + """,
 members AS (
-  SELECT l3.lbl AS cluster, c.c_custkey, c.c_name, c.c_nationkey,
+  SELECT comp.component AS cluster, c.c_custkey, c.c_name, c.c_nationkey,
          c.c_mktsegment, c.bal_cents
-  FROM l3 JOIN c ON l3.v = c.c_custkey
+  FROM comp JOIN c ON comp.doc_id = c.c_custkey
 ),
 gold AS (
   SELECT cluster, count(*)::BIGINT AS n_members,
@@ -8397,23 +8386,14 @@ FROM flagged GROUP BY source ORDER BY source
 ORACLE["graph_modularity_audit"] = (
     f"WITH RECURSIVE\nj AS ({_NEAR_DUPS}),\n"
     + """pr AS MATERIALIZED (SELECT id1, id2 FROM j),
-sym AS (SELECT id1 AS src, id2 AS dst FROM pr
-        UNION ALL SELECT id2, id1 FROM pr),
-nodes AS (SELECT DISTINCT src AS v FROM sym),
+nodes AS (SELECT id1 AS v FROM pr UNION SELECT id2 FROM pr),
 """
-    + _components("SELECT v FROM nodes", "pr")
-    + """,
-edges AS (SELECT src, dst FROM sym UNION ALL SELECT v, v FROM nodes),
-l0 AS (SELECT v, v AS lbl FROM nodes),"""
-    + ",".join(_LPA_ROUND.format(k=k, p=k - 1) for k in range(1, 5))
-    + """,
-deg AS (
-  SELECT v, count(*)::BIGINT AS d FROM (
-    SELECT id1 AS v FROM pr UNION ALL SELECT id2 FROM pr) GROUP BY v
-),
+    + _components("SELECT v FROM nodes", "pr") + ",\n"
+    + _lpa_sql("pr", 4) + ",\n"
+    + _degrees_sql("pr") + """,
 lab AS (
   SELECT 'cc_star' AS method, doc_id AS v, component AS lbl FROM comp
-  UNION ALL SELECT 'lpa_4', v, lbl FROM l4
+  UNION ALL SELECT 'lpa_4', v, lbl FROM lpa
 ),
 em AS (
   SELECT b1.method,
@@ -8782,10 +8762,7 @@ FROM truthed GROUP BY o_orderpriority ORDER BY o_orderpriority
 # 0.5-threshold dup edges; NULL phi below 2 qualifying nodes.
 ORACLE["graph_rich_club"] = f"""
 WITH {_jaccard_pairs(0.5)},
-deg AS (
-  SELECT v, count(*)::BIGINT AS d FROM (
-    SELECT id1 AS v FROM jac UNION ALL SELECT id2 FROM jac) GROUP BY v
-),
+{_degrees_sql("jac")},
 ks AS (SELECT unnest([1, 2, 4, 8])::BIGINT AS k),
 nk AS (
   SELECT k, count(*)::BIGINT AS n_k

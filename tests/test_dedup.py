@@ -13,7 +13,7 @@ from hadoop_mapreduce_spark.operators.dedup import (
     simhash_fingerprints,
     simhash_hamming_pairs,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, union_find_components
 
 
 def test_exact_dedup_finds_planted_dups(spark):
@@ -78,63 +78,47 @@ def test_simhash_hamming_near_dup(spark):
     assert (1, 3) not in ids and (2, 3) not in ids
 
 
+def _star_cc(spark, n, pairs, **kw):
+    from hadoop_mapreduce_spark.operators.dedup import connected_components_star
+
+    nodes = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
+    edges = spark.createDataFrame(pairs, "id1 long, id2 long")
+    return {r.doc_id: r.comp
+            for r in connected_components_star(nodes, edges, **kw).collect()}
+
+
 def test_connected_components_merges_chains(spark):
     """a~b and b~c edges (no direct a~c) must land all three in one
-    component labelled by the min id; isolated nodes keep their own id."""
-    from hadoop_mapreduce_spark.operators.dedup import connected_components
-
-    nodes = spark.createDataFrame([(i,) for i in range(1, 7)], ["doc_id"])
-    edges = spark.createDataFrame([(1, 2), (2, 3), (4, 5)], ["id1", "id2"])
-    comp = {r.doc_id: r.comp for r in connected_components(nodes, edges).collect()}
-    assert comp == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
+    component labelled by the min id; isolated nodes keep their own id.
+    Duplicate, mirrored and self-loop edges change nothing: star-CC
+    takes no input distinct(), its first round's DISTINCT absorbs them."""
+    pairs = [(1, 2), (2, 3), (4, 5)]
+    want = {0: 0, 1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
+    assert union_find_components(range(7), pairs) == want
+    assert _star_cc(spark, 7, pairs) == want
+    noisy = pairs + [(2, 1), (1, 2), (3, 2), (5, 4), (4, 5), (6, 6), (0, 0)]
+    assert _star_cc(spark, 7, noisy) == want
 
 
 def test_connected_components_raises_on_non_convergence(spark):
-    """A 6-node path needs ~5 propagation rounds; max_iter=2 must raise
-    rather than silently return split components (wrong labels)."""
+    """An 80-node path needs more than 2 star rounds; max_iter=2 must
+    raise rather than silently return split components (wrong labels)."""
     import pytest
-
-    from hadoop_mapreduce_spark.operators.dedup import connected_components
-
-    nodes = spark.createDataFrame([(i,) for i in range(1, 8)], ["doc_id"])
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 7)], ["id1", "id2"])
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(nodes, edges, max_iter=2)
-
-
-def test_star_cc_matches_label_propagation_on_chains(spark):
-    from hadoop_mapreduce_spark.operators.dedup import connected_components_star
-
-    nodes = spark.createDataFrame([(i,) for i in range(1, 7)], ["doc_id"])
-    edges = spark.createDataFrame([(1, 2), (2, 3), (4, 5)], ["id1", "id2"])
-    comp = {r.doc_id: r.comp
-            for r in connected_components_star(nodes, edges).collect()}
-    assert comp == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
-
-
-def test_star_cc_long_path_converges_where_propagation_cannot(spark):
-    """An 80-node path has diameter 79: min-label propagation needs ~79
-    rounds (raises within a 10-round budget), while alternating
-    large-star/small-star collapses it within the same budget — the
-    round-complexity gap (O(diameter) vs O(log n)) that makes the star
-    algorithm the 100 TB path for deep duplicate chains."""
-    import pytest
-
-    from hadoop_mapreduce_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
 
     n = 80
-    nodes = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], ["id1", "id2"])
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(nodes, edges, max_iter=3)
-    comp = {r.doc_id: r.comp
-            for r in connected_components_star(nodes, edges, max_iter=10).collect()}
-    assert comp == {i: 0 for i in range(n)}
+        _star_cc(spark, n, [(i, i + 1) for i in range(n - 1)], max_iter=2)
+
+
+def test_star_cc_long_path_converges_in_log_rounds(spark):
+    """An 80-node path has diameter 79 — min-label propagation would
+    need ~79 rounds — while alternating large-star/small-star collapses
+    it within 10: the O(diameter) vs O(log n) round gap that makes the
+    star algorithm the 100 TB path for deep duplicate chains."""
+    n = 80
+    pairs = [(i, i + 1) for i in range(n - 1)]
+    assert _star_cc(spark, n, pairs, max_iter=10) \
+        == union_find_components(range(n), pairs) == {i: 0 for i in range(n)}
 
 
 def test_star_cc_multi_parent_state_is_not_a_fixed_point(spark):
@@ -144,38 +128,23 @@ def test_star_cc_multi_parent_state_is_not_a_fixed_point(spark):
     forest and one more round must merge {2,8} into component 0. A stop
     test that only checks parent∉children stops a round early and
     returns split components."""
-    from hadoop_mapreduce_spark.operators.dedup import connected_components_star
-
-    nodes = spark.createDataFrame([(i,) for i in range(9)], ["doc_id"])
-    edges = spark.createDataFrame(
-        [(4, 8), (0, 3), (6, 5), (3, 0), (0, 0), (0, 5), (8, 2), (4, 6)],
-        ["id1", "id2"])
-    comp = {r.doc_id: r.comp
-            for r in connected_components_star(nodes, edges).collect()}
-    assert comp == {0: 0, 1: 1, 2: 0, 3: 0, 4: 0, 5: 0, 6: 0, 7: 7, 8: 0}
+    pairs = [(4, 8), (0, 3), (6, 5), (3, 0), (0, 0), (0, 5), (8, 2), (4, 6)]
+    assert _star_cc(spark, 9, pairs) \
+        == {0: 0, 1: 1, 2: 0, 3: 0, 4: 0, 5: 0, 6: 0, 7: 7, 8: 0}
 
 
-def test_star_cc_differential_vs_propagation_random_graph(spark):
-    """Both algorithms must agree on every node of a pseudo-random graph
-    (deterministic edge set, multiple components, cycles, dup edges,
-    reversed pairs)."""
-    from hadoop_mapreduce_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
+def test_star_cc_matches_union_find_random_graph(spark):
+    """Star-CC must equal the union-find reference on every node of a
+    pseudo-random graph (deterministic edge set, multiple components,
+    cycles, duplicate and reversed pairs)."""
     n = 36
     # deterministic scattering: edges within 3 residue classes mod 3,
     # plus cycles and duplicate/reversed noise
     pairs = [(i, i + 3) for i in range(0, n - 3)]
     pairs += [(9, 0), (20, 23), (5, 2), (2, 5), (7, 7 + 3)]
-    nodes = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
-    edges = spark.createDataFrame(pairs, ["id1", "id2"])
-    a = {r.doc_id: r.comp for r in connected_components(nodes, edges).collect()}
-    b = {r.doc_id: r.comp
-         for r in connected_components_star(nodes, edges).collect()}
-    assert a == b
-    assert set(a.values()) == {0, 1, 2}  # three residue-class components
+    got = _star_cc(spark, n, pairs)
+    assert got == union_find_components(range(n), pairs)
+    assert set(got.values()) == {0, 1, 2}  # three residue-class components
 
 
 def test_embedding_lsh_subset_of_exact_with_recall(spark):

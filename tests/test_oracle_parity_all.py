@@ -2,8 +2,9 @@
 
 The driver runs this comparison at sf0.01 per round; this test enforces
 the same contract at sf0.001, so an operator can't silently drift from
-its oracle between rounds. The bench.py headline queries run in the
-default tier; every other query is in the deep tier (see conftest.py).
+its oracle between rounds. The bench.py headline queries and the
+near-dup graph family run in the default tier; every other query is in
+the deep tier (see conftest.py).
 Queries registered without SQL (approximate/stateful) are exercised
 rows-only: they must execute and return a well-formed result.
 
@@ -57,8 +58,21 @@ def _assert_no_decimal(rows, side, name):
                 "or a bit-stable double instead")
 
 
+# The near-dup graph family built on the dedup.py graph kernels
+# (star-CC, degrees, lpa_labels, triangles) runs in the default tier
+# beside the headline queries.
+GRAPH_KERNEL_QUERIES = {
+    "dedup_connected_components", "er_survivorship_golden",
+    "label_propagation_communities", "graph_modularity_audit",
+    "triangle_count_dedup_graph", "graph_triangle_count",
+    "graph_degree_assortativity", "graph_rich_club",
+    "kcore_dedup_graph", "pagerank_dedup_graph",
+}
+DEFAULT_TIER = set(HEADLINE) | GRAPH_KERNEL_QUERIES
+
+
 @pytest.mark.parametrize("name", [
-    pytest.param(name, marks=() if name in HEADLINE else pytest.mark.deep)
+    pytest.param(name, marks=() if name in DEFAULT_TIER else pytest.mark.deep)
     for name in sorted(QUERIES)])
 def test_query_matches_oracle(spark, duck, name):
     df = QUERIES[name](spark, SF_DIR)

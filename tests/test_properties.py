@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from hadoop_mapreduce_spark.operators.ngram import ngram_count
 from hadoop_mapreduce_spark.operators.skew import salted_aggregate
+from tests.conftest import union_find_components
 
 _SETTINGS = dict(
     max_examples=15,
@@ -106,44 +107,21 @@ def test_salted_aggregate_equals_plain_for_any_data(spark, rows, n_salts):
           suppress_health_check=[HealthCheck.function_scoped_fixture,
                                  HealthCheck.too_slow])
 def test_cc_both_algorithms_match_union_find_model(spark, n, edges):
-    """Label propagation AND alternating-star CC must both equal a
-    driver-side union-find model for arbitrary small graphs (self-loops,
-    duplicate and reversed edges, out-of-range endpoints clipped)."""
-    from hadoop_mapreduce_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    """Alternating-star CC must equal a driver-side union-find model for
+    arbitrary small graphs (self-loops, duplicate and reversed edges,
+    out-of-range endpoints clipped)."""
+    from hadoop_mapreduce_spark.operators.dedup import connected_components_star
 
     edges = [(a % n, b % n) for a, b in edges]
-    parent = list(range(n))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    # canonical label = min node id of the component
-    comp_of = {}
-    for i in range(n):
-        r = find(i)
-        comp_of.setdefault(r, min(j for j in range(n) if find(j) == r))
-    want = {i: comp_of[find(i)] for i in range(n)}
+    want = union_find_components(range(n), edges)
 
     nodes_df = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
     if edges:
         edges_df = spark.createDataFrame(edges, ["id1", "id2"])
     else:
         edges_df = spark.createDataFrame([], "id1 long, id2 long")
-    got_prop = {r.doc_id: r.comp
-                for r in connected_components(nodes_df, edges_df).collect()}
     got_star = {r.doc_id: r.comp
                 for r in connected_components_star(nodes_df, edges_df).collect()}
-    assert got_prop == want
     assert got_star == want
 
 
