@@ -22,9 +22,21 @@ the shared conventions, defined once per engine:
     division, one ln and the rounding, identical in any IEEE-754
     engine.
 
+  * the portable Bloom filter. A key's ``BLOOM_K`` probes come from
+    one md5 digest by Kirsch–Mitzenmacher double hashing: h1 and h2 are
+    the first and the next 15 hex digits (two disjoint 60-bit halves of
+    the digest, so both fit a non-negative long), each mod m_bits, and
+    probe i is (h1 + i * h2) mod m_bits. One md5 per key replaces k
+    independent hashes at the same asymptotic false-positive rate. The
+    bitmap stores probe h in word h div 63 at bit h mod 63, and a
+    word's bits are the bit_or of its probes. Words hold 63 bits, not
+    64, because DuckDB raises Out of Range on ``1 << 63``, so the sign
+    bit is never used (1.6% of the bitmap). A key hits when all its
+    probes are set; a word that no probe set is a miss.
+
 The tokenizer pair lives in ``functions/text.py``. Hashes over other hex
-widths (ring points, Bloom double hashing, synthetic word picks) are
-different conventions and stay at their call sites.
+widths (ring points, synthetic word picks) are different conventions and
+stay at their call sites.
 """
 
 from __future__ import annotations
@@ -113,3 +125,110 @@ def hll_estimate_sql(rel: str | None = None) -> str:
     return (f"floor(CASE WHEN {v_empty} > 0 AND {raw} <= {2.5 * HLL_M}"
             f" THEN {float(HLL_M)} * ln({float(HLL_M)} / {v_empty})"
             f" ELSE {raw} END + 0.5)::BIGINT")
+
+
+BLOOM_K = 3                           # probes per key
+
+
+def _bloom_h12(fh: Column, m_bits: int) -> tuple[Column, Column]:
+    """The KM base pair (h1, h2) from an md5 hex column."""
+    h1 = F.conv(F.substring(fh, 1, 15), 16, 10).cast("long") % m_bits
+    h2 = F.conv(F.substring(fh, 16, 15), 16, 10).cast("long") % m_bits
+    return h1, h2
+
+
+def _bloom_word_mask(h: Column) -> tuple[Column, Column]:
+    """(word, mask) of one probe value in the 63-bit-word layout."""
+    # F.shiftleft takes only a literal shift; call_function takes a column
+    mask = F.call_function(
+        "shiftleft", F.lit(1).cast("long"), (h % 63).cast("int"))
+    return (h / 63).cast("long"), mask
+
+
+def _bloom_h12_struct(fh: Column, m_bits: int) -> Column:
+    """struct<h1, h2> of one md5 hex column."""
+    h1, h2 = _bloom_h12(fh, m_bits)
+    return F.struct(h1.alias("h1"), h2.alias("h2"))
+
+
+def _bloom_hit(h12: Column, bm: Column, m_bits: int) -> Column:
+    """All probes of one struct<h1, h2> set in the map<word, bits>
+    column ``bm``: arithmetic and map lookups only, so it is safe
+    inside an interpreted higher-order lambda."""
+    out = None
+    for i in range(BLOOM_K):
+        word, mask = _bloom_word_mask((h12["h1"] + i * h12["h2"]) % m_bits)
+        # element_at is NULL for a word no probe set: a miss
+        hit = F.coalesce(
+            F.element_at(bm, word).bitwiseAND(mask) != 0, F.lit(False))
+        out = hit if out is None else out & hit
+    return out
+
+
+def bloom_bitmap(df: DataFrame, key: Column | str, m_bits: int) -> DataFrame:
+    """One row ``bm: map<bigint, bigint>``, word -> bits, of the Bloom
+    filter over the string ``key`` of every row of ``df``.
+
+    One md5 per key; its probes are exploded from an array and folded
+    by one bit_or aggregate with at most m_bits / 63 output rows, which
+    ``collect_list`` turns into the map a probe side broadcasts. An
+    empty ``df`` gives an empty map, which every key misses."""
+    h1, h2 = _bloom_h12(F.col("fh"), m_bits)
+    word, mask = _bloom_word_mask(F.col("h"))
+    return (
+        df.select(F.md5(key).alias("fh"))
+        .select(F.explode(F.array(
+            *[(h1 + i * h2) % m_bits for i in range(BLOOM_K)])).alias("h"))
+        .select(word.alias("word"), mask.alias("mask"))
+        .groupBy("word").agg(F.bit_or("mask").alias("bits"))
+        .agg(F.map_from_entries(F.collect_list(F.struct("word", "bits")))
+             .alias("bm"))
+    )
+
+
+def bloom_hit(key: Column, bm: Column, m_bits: int) -> Column:
+    """Whether the string ``key`` hits the bitmap column ``bm``."""
+    return _bloom_hit(_bloom_h12_struct(F.md5(key), m_bits), bm, m_bits)
+
+
+def bloom_any(grams: Column, bm: Column, m_bits: int) -> Column:
+    """Whether any string of the array ``grams`` hits ``bm``.
+
+    Higher-order lambdas run interpreted, without common-subexpression
+    elimination, so the md5 and the two conv's are pinned to once per
+    gram by chaining transforms (gram -> md5 hex -> struct<h1, h2>)
+    before ``exists`` runs the arithmetic-only probe test."""
+    h12 = F.transform(F.transform(grams, F.md5),
+                      lambda fh: _bloom_h12_struct(fh, m_bits))
+    return F.exists(h12, lambda s: _bloom_hit(s, bm, m_bits))
+
+
+def bloom_probes_sql(rel: str, key: str, m_bits: int, keep: str = "") -> str:
+    """DuckDB twin of the probe rows: a query giving ``keep`` columns
+    and ``h`` for every probe of the VARCHAR ``key`` of each row of
+    ``rel``."""
+    k = f"{keep}, " if keep else ""
+    return f"""SELECT {k}(h1 + k * h2) % {m_bits} AS h
+  FROM (SELECT {k}('0x' || substr(fh, 1, 15))::UBIGINT::BIGINT % {m_bits} AS h1,
+          ('0x' || substr(fh, 16, 15))::UBIGINT::BIGINT % {m_bits} AS h2
+        FROM (SELECT {k}md5({key}) AS fh FROM {rel})),
+    LATERAL (SELECT unnest({list(range(BLOOM_K))}) AS k) kk"""
+
+
+def bloom_bitmap_sql(rel: str, key: str, m_bits: int) -> str:
+    """DuckDB twin of :func:`bloom_bitmap` as rows: a query giving
+    ``(word, bits)``, the bitmap's set words."""
+    return f"""SELECT h // 63 AS word, bit_or(1::BIGINT << (h % 63)::INT) AS bits
+  FROM ({bloom_probes_sql(rel, key, m_bits)}) GROUP BY 1"""
+
+
+def bloom_hit_sql(probes: str, bitmap: str, keys: str, alias: str) -> str:
+    """DuckDB twin of :func:`bloom_hit`: a query giving ``keys`` and
+    ``alias``, 1 when every probe row of ``probes`` with those keys is
+    set in the ``(word, bits)`` relation ``bitmap``, else 0."""
+    return f"""SELECT {keys},
+    min(CASE WHEN b.bits IS NOT NULL
+              AND (b.bits & (1::BIGINT << (p.h % 63)::INT)) <> 0
+         THEN 1 ELSE 0 END) AS {alias}
+  FROM {probes} p LEFT JOIN {bitmap} b ON p.h // 63 = b.word
+  GROUP BY {keys}"""

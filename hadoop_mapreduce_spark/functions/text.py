@@ -113,17 +113,3 @@ def ngrams_sql(t: str, n: int) -> str:
     words = ", ".join(f"{t}[i + {k}]" if k else f"{t}[i]" for k in range(n))
     return (f"list_transform(generate_series(1, len({t}) - {n - 1}), "
             f"i -> concat_ws(' ', {words}))")
-
-
-def shingles(col: Column | str, k: int = 3) -> Column:
-    """Token k-shingles of normalised text — the unit set for Jaccard /
-    MinHash near-duplicate detection.
-
-    PERF WARNING: this composes tokenize() INSIDE the n-gram lambda, so
-    Catalyst re-tokenises the document at every window position —
-    O(len²) per doc (measured 10-12× slower at sf0.1). Convenient for
-    one-off expressions on short strings only; every scan-path operator
-    must materialise the token array in its own projection below the
-    explode instead (operators/ngram.py::explode_ngrams,
-    operators/dedup.py::shingle_rows are the patterns)."""
-    return ngrams_from_tokens(tokenize(normalize_text(col)), k)

@@ -390,11 +390,7 @@ def memorization_novelty(spark: SparkSession, sf_dir: str, n: int = 5,
     broadcast assumption (train grams at 100 TB are NOT small, unlike
     decontaminate_ngram's benchmark set). Output is val-doc-sized.
     """
-    from hadoop_mapreduce_spark.functions.text import (
-        ngrams_from_tokens,
-        normalize_text,
-        tokenize,
-    )
+    from hadoop_mapreduce_spark.operators.ngram import explode_ngram_set
 
     docs = load_table(spark, sf_dir, "documents")
     bucket = h60(F.col("doc_id").cast("string")) % 100
@@ -403,19 +399,14 @@ def memorization_novelty(spark: SparkSession, sf_dir: str, n: int = 5,
         .when(bucket < val_pct + test_pct, F.lit("test"))
         .otherwise(F.lit("train"))
     )
-    toks = docs.select(
-        "doc_id", split.alias("split"),
-        tokenize(normalize_text(F.col("text"))).alias("__t"),
-    )
-    grams = toks.select(
-        "doc_id", "split",
-        F.explode(F.array_distinct(
-            ngrams_from_tokens(F.col("__t"), n))).alias("g"),
-    )
-    train_grams = grams.where(F.col("split") == "train").select("g").distinct()
-    val_grams = grams.where(F.col("split") == "val").select("doc_id", "g")
+    grams = explode_ngram_set(docs.withColumn("split", split), "text", n,
+                              ["doc_id", "split"])
+    train_grams = (grams.where(F.col("split") == "train")
+                   .select("ngram").distinct())
+    val_grams = grams.where(F.col("split") == "val").select("doc_id", "ngram")
     seen = (
-        val_grams.join(train_grams.withColumn("__hit", F.lit(1)), "g", "left")
+        val_grams.join(train_grams.withColumn("__hit", F.lit(1)), "ngram",
+                       "left")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),

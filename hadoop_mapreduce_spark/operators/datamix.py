@@ -32,11 +32,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hadoop_mapreduce_spark.functions.portable import h60
+from hadoop_mapreduce_spark.functions.portable import (
+    bloom_any,
+    bloom_bitmap,
+    h60,
+)
 from hadoop_mapreduce_spark.functions.text import (
     ngrams_from_tokens,
     normalize_text,
     tokenize,
+)
+from hadoop_mapreduce_spark.operators.ngram import (
+    explode_ngram_set,
+    explode_ngrams,
 )
 from hadoop_mapreduce_spark.sources.tables import load_table
 
@@ -60,24 +68,12 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str,
     the per-doc semi-join collapses to one boolean per document.
     """
     docs = load_table(spark, sf_dir, "documents")
-    # tokens are materialised in their own projection BELOW the explode —
-    # nesting tokenize() inside the n-gram lambda would re-tokenise the
-    # document at every window position (O(len²) per doc; the same trap
-    # operators/ngram.py::explode_ngrams documents, measured 10× here).
-    toks = docs.select(
-        "doc_id", "source",
-        tokenize(normalize_text(F.col("text"))).alias("__t"),
-    )
-    grams = toks.select(
-        "doc_id", "source",
-        F.explode(F.array_distinct(
-            ngrams_from_tokens(F.col("__t"), n))).alias("g"),
-    )
+    grams = explode_ngram_set(docs, "text", n, ["doc_id", "source"])
     is_bench = F.col("doc_id") % bench_mod == 0
-    bench_grams = grams.where(is_bench).select("g").distinct()
+    bench_grams = grams.where(is_bench).select("ngram").distinct()
     hit_docs = (
         grams.where(~is_bench)
-        .join(F.broadcast(bench_grams), "g", "left_semi")
+        .join(F.broadcast(bench_grams), "ngram", "left_semi")
         .select("doc_id").distinct()
         .withColumn("contaminated", F.lit(1))
     )
@@ -545,15 +541,8 @@ def dup_ngram_rate(spark: SparkSession, sf_dir: str, n: int = 8) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", "source",
-        tokenize(normalize_text(F.col("text"))).alias("__t"))
-    grams = toks.select(
-        "doc_id", "source",
-        F.explode(F.array_distinct(
-            ngrams_from_tokens(F.col("__t"), n))).alias("g"),
-    )
-    shared = F.count(F.lit(1)).over(Window.partitionBy("g"))
+    grams = explode_ngram_set(docs, "text", n, ["doc_id", "source"])
+    shared = F.count(F.lit(1)).over(Window.partitionBy("ngram"))
     per_doc = (
         grams.withColumn("n_docs_with_gram", shared)
         .groupBy("doc_id", "source")
@@ -563,7 +552,7 @@ def dup_ngram_rate(spark: SparkSession, sf_dir: str, n: int = 8) -> DataFrame:
         )
     )
     short = (
-        toks.where(F.size("__t") < n)
+        docs.where(F.size(tokenize(normalize_text(F.col("text")))) < n)
         .groupBy("source").agg(F.count(F.lit(1)).alias("n_short"))
     )
     return (
@@ -658,75 +647,8 @@ def sample_weighted(spark: SparkSession, sf_dir: str,
     )
 
 
-def _bloom_h12(md5_col, m_bits: int):
-    """(h1, h2) Kirsch–Mitzenmacher base hashes from ONE precomputed
-    md5 hex column: h1 = first 15 hex chars, h2 = next 15 (disjoint
-    substrings of the same digest, both < 2^60 so positive longs).
-    Engine-portable: the DuckDB oracle derives the identical pair with
-    substr + ::UBIGINT (registry convention: never engine-native
-    hashes)."""
-    h1 = F.conv(F.substring(md5_col, 1, 15), 16, 10).cast("long") % m_bits
-    h2 = F.conv(F.substring(md5_col, 16, 15), 16, 10).cast("long") % m_bits
-    return h1, h2
-
-
-def _bloom_word_mask(h):
-    """(word_index, bit_mask) for one probe value: word = h / 63,
-    mask = 1L << (h % 63). 63 bits per word, not 64: DuckDB raises Out
-    of Range on ``1 << 63`` (signed overflow), so the sign bit is never
-    used — costs 1.6% bitmap space for an oracle that runs on both
-    engines."""
-    word = (h / 63).cast("long")
-    # F.shiftleft's numBits arg only takes a Python int literal;
-    # call_function routes the column-valued shift through SQL
-    mask = F.call_function(
-        "shiftleft", F.lit(1).cast("long"), (h % 63).cast("int"))
-    return word, mask
-
-
-def _bloom_h12_struct(md5_col, m_bits: int):
-    """struct<h1,h2> of the KM base pair — the per-gram value to
-    precompute (via transform) before a lambda-side membership test, so
-    the interpreted lambda never re-derives the conv's."""
-    h1, h2 = _bloom_h12(md5_col, m_bits)
-    return F.struct(h1.alias("h1"), h2.alias("h2"))
-
-
-def _bloom_hit(h12, bm_col, n_hashes: int, m_bits: int):
-    """All-k-probes-set verdict for one gram given its (h1, h2) struct
-    and the broadcast map<word,bits> bitmap column — arithmetic and
-    map lookups only (safe inside an interpreted exists())."""
-    conds = []
-    for i in range(n_hashes):
-        word, mask = _bloom_word_mask((h12["h1"] + i * h12["h2"]) % m_bits)
-        bits = F.element_at(bm_col, word)
-        # element_at -> NULL for never-set words; a missing word is
-        # a miss, so coalesce the verdict to false
-        conds.append(F.coalesce(bits.bitwiseAND(mask) != 0, F.lit(False)))
-    out = conds[0]
-    for c in conds[1:]:
-        out = out & c
-    return out
-
-
-def _bloom_probes(gram_col, n_hashes: int, m_bits: int):
-    """k engine-portable Bloom probes for one n-gram, by double hashing
-    (Kirsch & Mitzenmacher, "Less Hashing, Same Performance"): probe i
-    is h_i = (h1 + i*h2) mod m_bits with (h1, h2) both carved from ONE
-    md5 digest of the gram — 1 md5 per gram instead of k (the digest is
-    the dominant per-gram cost on both engines; KM preserves the
-    asymptotic false-positive rate, and the superset/FPR properties are
-    asserted against the exact operator in tests/test_datamix.py).
-    Returns a list of (word_index, bit_mask) Column pairs."""
-    h1, h2 = _bloom_h12(F.md5(gram_col), m_bits)
-    return [
-        _bloom_word_mask((h1 + i * h2) % m_bits) for i in range(n_hashes)
-    ]
-
-
 def bloom_decontaminate(spark: SparkSession, sf_dir: str, n: int = 4,
-                        bench_mod: int = 20, m_bits: int = 1 << 16,
-                        n_hashes: int = 3) -> DataFrame:
+                        bench_mod: int = 20, m_bits: int = 1 << 16) -> DataFrame:
     """Benchmark decontamination through a Bloom filter instead of the
     exact broadcast gram set (decontaminate_ngram's scale sibling).
 
@@ -744,80 +666,38 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str, n: int = 4,
     bound are asserted in tests/test_datamix.py against the exact
     operator).
 
-    Plan: benchmark grams -> ONE md5 each -> k KM probes exploded ->
-    groupBy(word) bit_or(mask) = the bitmap (<= m_bits/63 rows, ~8 KiB),
-    collapsed to a ONE-ROW map<long,long> column and broadcast.
-    Training side: the whole membership test is a higher-order
-    ``exists`` over each document's gram array — 1 md5 per gram, k
-    arithmetic probes against ``element_at(bitmap, word) & mask`` — so
-    the corpus side is a pure projection: zero probe-side shuffle, zero
-    join, one per-source rollup of one row per document at the end.
-    (The first cut exploded grams and grouped-by-(doc, gram) to combine
-    probe verdicts — shuffling full gram strings; the map-lookup form
-    measured 1.8× faster at sf0.1 with bit-identical output, and the
-    KM double-hash form cuts the per-gram digest count from k to 1 on
-    both engines.) The wide exchange of the exact
+    Plan: the benchmark gram set -> ``bloom_bitmap`` (one md5 per gram,
+    k KM probes, a bit_or aggregate of <= m_bits/63 rows, ~8 KiB) as a
+    ONE-ROW map<long,long> column, broadcast. Training side: the whole
+    membership test is ``bloom_any``, a higher-order ``exists`` over
+    each document's gram array — 1 md5 per gram, k arithmetic probes
+    against ``element_at(bitmap, word) & mask`` — so the corpus side is
+    a pure projection: zero probe-side shuffle, zero join, one
+    per-source rollup of one row per document at the end. Docs shorter
+    than n tokens have an empty gram array and count clean without a
+    separate anchor join. (The first cut exploded grams and grouped-by-
+    (doc, gram) to combine probe verdicts — shuffling full gram strings;
+    the map-lookup form measured 1.8× faster at sf0.1 with bit-identical
+    output, and the KM double-hash form cuts the per-gram digest count
+    from k to 1 on both engines.) The wide exchange of the exact
     variant's DISTINCT over benchmark grams shrinks to a m_bits/63-row
     bit_or aggregate (map-side combinable: bit_or is associative and
-    each partition emits at most m_bits/63 rows).
+    each partition emits at most m_bits/63 rows). The bitmap layout and
+    its DuckDB twin are documented once, in ``functions/portable.py``.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", "source",
-        tokenize(normalize_text(F.col("text"))).alias("__t"),
-    )
-    grams = toks.select(
-        "doc_id", "source",
-        F.explode(F.array_distinct(
-            ngrams_from_tokens(F.col("__t"), n))).alias("g"),
-    )
     is_bench = F.col("doc_id") % bench_mod == 0
-
-    # build: ONE scan of the bench grams (1 md5 each), the k KM probe
-    # values exploded from an array — the former per-probe unionAll
-    # re-scanned the gram set k times and md5'd each gram k times —
-    # then one bit_or aggregate over probe words (O(m_bits/63) rows out)
-    h1, h2 = _bloom_h12(F.col("fh"), m_bits)
-    bitmap = (
-        grams.where(is_bench)
-        .select(F.md5("g").alias("fh"))
-        .select(F.explode(F.array(
-            *[(h1 + i * h2) % m_bits for i in range(n_hashes)])).alias("h"))
-        .select((F.col("h") / 63).cast("long").alias("word"),
-                F.call_function("shiftleft", F.lit(1).cast("long"),
-                                (F.col("h") % 63).cast("int")).alias("mask"))
-        .groupBy("word").agg(F.bit_or("mask").alias("bits"))
-    )
-
-    # collapse the bitmap to one map<word, bits> row for lookup-by-key
-    # inside the probe lambda (collect_list here aggregates ~1k rows of
-    # the BITMAP, not data rows — the standard broadcast-scalar pattern)
-    bm1 = bitmap.agg(
-        F.map_from_entries(F.collect_list(F.struct("word", "bits")))
-        .alias("bm"))
-
-    # probe: the whole doc-level test is one exists() over the gram
-    # array — a projection; docs shorter than n tokens have an empty
-    # gram array and exists() is false, so they count clean without a
-    # separate anchor join. Higher-order lambdas are CodegenFallback
-    # (interpreted per element, no common-subexpression elimination),
-    # so the md5 and the two conv's are each forced to run ONCE per
-    # gram by CHAINING transforms — gram → md5 hex → (h1, h2) struct —
-    # before the exists() does its k arithmetic-only bitmap lookups.
+    bm1 = bloom_bitmap(
+        explode_ngram_set(docs.where(is_bench), "text", n), "ngram", m_bits)
     per_doc = (
-        toks.where(~is_bench)
+        docs.where(~is_bench)
+        .select("doc_id", "source",
+                tokenize(normalize_text(F.col("text"))).alias("__t"))
         .crossJoin(F.broadcast(bm1))
         .select(
             "doc_id", "source",
-            F.exists(
-                F.transform(
-                    F.transform(
-                        F.array_distinct(
-                            ngrams_from_tokens(F.col("__t"), n)),
-                        F.md5),
-                    lambda fh: _bloom_h12_struct(fh, m_bits)),
-                lambda s: _bloom_hit(s, F.col("bm"), n_hashes, m_bits),
-            ).cast("long").alias("flagged"))
+            bloom_any(F.array_distinct(ngrams_from_tokens(F.col("__t"), n)),
+                      F.col("bm"), m_bits).cast("long").alias("flagged"))
     )
     return (
         per_doc.groupBy("source")
@@ -1004,24 +884,13 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str,
     |sources|² rows max. The gram relation is vocabulary-bounded, not
     corpus-bounded; nothing is broadcast.
     """
-    from hadoop_mapreduce_spark.functions.text import (
-        ngrams_from_tokens,
-        normalize_text,
-        tokenize,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "source", tokenize(normalize_text(F.col("text"))).alias("__t"))
-    grams = toks.select(
-        "source",
-        F.explode(ngrams_from_tokens(F.col("__t"), n)).alias("g"),
-    ).distinct()
+    grams = explode_ngrams(docs, "text", n, ["source"]).distinct()
     sizes = grams.groupBy("source").agg(F.count(F.lit(1)).alias("n_grams"))
-    a = grams.select(F.col("source").alias("src_a"), "g")
-    b = grams.select(F.col("source").alias("src_b"), "g")
+    a = grams.select(F.col("source").alias("src_a"), "ngram")
+    b = grams.select(F.col("source").alias("src_b"), "ngram")
     pairs = (
-        a.join(b, "g")
+        a.join(b, "ngram")
         .where(F.col("src_a") < F.col("src_b"))
         .groupBy("src_a", "src_b")
         .agg(F.count(F.lit(1)).alias("shared_grams"))
@@ -1362,21 +1231,15 @@ def source_novelty_attribution(spark: SparkSession, sf_dir: str,
                 Window.partitionBy(F.lit(1)).orderBy("source")))
     )
     grams = (
-        docs.select(
-            "source",
-            tokenize(normalize_text(F.col("text"))).alias("__t"))
-        .select(
-            "source",
-            F.explode(F.array_distinct(
-                ngrams_from_tokens(F.col("__t"), n))).alias("g"))
+        explode_ngram_set(docs, "text", n, ["source"])
         .distinct()
         .join(F.broadcast(srcs), "source")
     )
-    first = grams.groupBy("g").agg(F.min("src_rank").alias("first_rank"))
+    first = grams.groupBy("ngram").agg(F.min("src_rank").alias("first_rank"))
     # equi-join back on the gram key only (same partitioning as the
     # groupBy that built `first` — no extra exchange of the big side)
     per_source = (
-        grams.join(first, "g")
+        grams.join(first, "ngram")
         .groupBy("source", "src_rank")
         .agg(
             F.count(F.lit(1)).alias("distinct_grams"),

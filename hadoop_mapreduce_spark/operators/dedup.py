@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hadoop_mapreduce_spark.functions.portable import h60
+from hadoop_mapreduce_spark.operators.ngram import explode_ngram_set, explode_ngrams
 from hadoop_mapreduce_spark.sources.tables import load_table
 
 # Session-scoped temp-view names for operators that build SQL over a
@@ -79,42 +80,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # MinHash + LSH near-dup
 # --------------------------------------------------------------------------
-
-
-def shingle_rows(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                 shingle_k: int = 3, distinct: bool = True) -> DataFrame:
-    """(id, s) — one row per token-k-shingle occurrence (or distinct set).
-
-    Shape: tokenize once per doc, Generate (explode) the window start
-    positions, then slice the *bound* token array per row. The Generate
-    is load-bearing: two stacked Projects get merged by CollapseProject,
-    which inlines the tokenizer into the per-position expression and
-    makes shingling O(len^2) per document (measured ~10x slower at
-    sf0.1). Pass distinct=False when the consumer is invariant to
-    duplicate shingles (e.g. MinHash) to skip a dedup shuffle.
-    """
-    from hadoop_mapreduce_spark.functions.text import normalize_text, tokenize
-
-    toks = docs.select(
-        F.col(id_col).alias("id"), tokenize(normalize_text(F.col(text_col))).alias("__t")
-    ).where(F.size("__t") >= shingle_k)
-    rows = toks.select(
-        "id",
-        "__t",
-        F.explode(F.sequence(F.lit(1), F.size("__t") - F.lit(shingle_k - 1))).alias("i"),
-    ).select("id", F.concat_ws(" ", F.slice("__t", F.col("i"), shingle_k)).alias("s"))
-    return rows.dropDuplicates(["id", "s"]) if distinct else rows
-
-
-def shingle_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                 shingle_k: int = 3) -> DataFrame:
-    """(id, sh: array<string>) — distinct shingle set per doc (built from
-    shingle_rows; order is irrelevant to the set-algebra consumers)."""
-    return (
-        shingle_rows(docs, id_col, text_col, shingle_k, distinct=False)
-        .groupBy("id")
-        .agg(F.collect_set("s").alias("sh"))
-    )
 
 
 def hashed_shingle_rows(docs: DataFrame, id_col: str = "doc_id",
@@ -516,17 +481,17 @@ def simhash_hamming_pairs(docs: DataFrame, max_hamming: int = 3,
 # Exact n-gram Jaccard (ground truth / oracle twin)
 # --------------------------------------------------------------------------
 
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str, threshold: float = 0.8) -> DataFrame:
-    """Exact all-qualifying-pairs Jaccard via inverted shingle index.
+def shingle_pair_counts(sh: DataFrame) -> DataFrame:
+    """``(id1, id2, c, n1, n2)``: every pair ``id1 < id2`` of the shingle
+    set relation ``sh(id, s)`` that shares at least one shingle, with
+    the shared count ``c`` and both set sizes — the Spark twin of the
+    oracles' ``_SHINGLE_PAIRS``.
 
-    Pairs sharing >= 1 shingle are generated from the inverted index
-    (shingle → doc list), intersection counts fall out of the groupBy,
-    and sizes join in for the union denominator. Exact but O(sum of
-    postings^2 per shingle) — the scale path is dedup_minhash_lsh; this
-    one doubles as its correctness oracle.
+    Pairs come from the inverted index (shingle → id list) as a
+    self-join on the shingle, intersection counts fall out of the
+    groupBy, and the sizes join in. Exact but O(sum of postings^2 per
+    shingle); the scale paths are LSH and prefix filtering.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    sh = shingle_rows(docs, "doc_id", "text", 3, distinct=True)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -536,11 +501,21 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str, threshold: float = 0.8
     )
     s1 = sizes.select(F.col("id").alias("id1"), F.col("n").alias("n1"))
     s2 = sizes.select(F.col("id").alias("id2"), F.col("n").alias("n2"))
-    jac = (
-        inter.join(s1, "id1").join(s2, "id2")
-        .select("id1", "id2",
-                (F.col("c") / (F.col("n1") + F.col("n2") - F.col("c"))).alias("jaccard"))
-    )
+    return (inter.join(s1, "id1").join(s2, "id2")
+            .select("id1", "id2", "c", "n1", "n2"))
+
+
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str, threshold: float = 0.8) -> DataFrame:
+    """Exact all-qualifying-pairs Jaccard over the word-3-shingle sets:
+    the shared-shingle pair counts, then c / (n1 + n2 - c). The scale
+    path is dedup_minhash_lsh; this one doubles as its correctness
+    oracle.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    sh = explode_ngram_set(docs, "text", 3, ["doc_id"]).toDF("id", "s")
+    jac = shingle_pair_counts(sh).select(
+        "id1", "id2",
+        (F.col("c") / (F.col("n1") + F.col("n2") - F.col("c"))).alias("jaccard"))
     return (
         jac.where(F.col("jaccard") >= threshold)
         .select("id1", "id2", F.round("jaccard", 6).alias("jaccard"))
@@ -1850,21 +1825,11 @@ def _cw_pair_base(spark: SparkSession, sf_dir: str,
     intersection (inter) and union (uni). Engine-portable by the same
     md5 + Carter-Wegman construction documented on
     minhash_accuracy_audit."""
-    from hadoop_mapreduce_spark.functions.text import normalize_text, tokenize
     from hadoop_mapreduce_spark.session import scoped_persist
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.col("doc_id").alias("id"),
-        tokenize(normalize_text(F.col("text"))).alias("__t"),
-    ).where(F.size("__t") >= shingle_k)
-    sh = toks.select(
-        "id",
-        F.explode(F.transform(
-            F.sequence(F.lit(1), F.size("__t") - F.lit(shingle_k - 1)),
-            lambda i: F.concat_ws(" ", F.slice("__t", i, shingle_k)),
-        )).alias("s"),
-    ).select("id", h60(F.col("s")).alias("hs")).distinct()
+    sh = explode_ngram_set(docs, "text", shingle_k, ["doc_id"]).select(
+        F.col("doc_id").alias("id"), h60("ngram").alias("hs")).distinct()
     P = MINHASH_CW_MOD
     u = F.col("hs") % F.lit(P)
     mins = [F.min((F.lit(a) * u + F.lit(b)) % F.lit(P)).alias(f"m{i}")
@@ -2181,22 +2146,19 @@ def dedup_containment(spark: SparkSession, sf_dir: str,
     output join and the per-pair state is one count.
     """
     docs = load_table(spark, sf_dir, "documents")
-    sh = shingle_rows(docs, "doc_id", "text", 3, distinct=True)
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s"))
-               & (F.col("a.id") != F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_small"),
-                 F.col("b.id").alias("id_big"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    s1 = sizes.select(F.col("id").alias("id_small"),
-                      F.col("n").alias("n_small"))
-    s2 = sizes.select(F.col("id").alias("id_big"),
-                      F.col("n").alias("n_big"))
+    sh = explode_ngram_set(docs, "text", 3, ["doc_id"]).toDF("id", "s")
+
+    def direction(small: str, big: str):
+        return F.struct(F.col(f"id{small}").alias("id_small"),
+                        F.col(f"id{big}").alias("id_big"),
+                        F.col(f"n{small}").alias("n_small"),
+                        F.col(f"n{big}").alias("n_big"))
+
+    # each unordered pair, read in both directions
     return (
-        inter.join(s1, "id_small").join(s2, "id_big")
+        shingle_pair_counts(sh)
+        .select("c", F.inline(F.array(direction("1", "2"),
+                                      direction("2", "1"))))
         .where(F.col("c") * 1000 >= F.lit(threshold_e3) * F.col("n_small"))
         .select(
             "id_small", "id_big",
@@ -2303,19 +2265,12 @@ def minhash_bbit_estimate(spark: SparkSession, sf_dir: str,
     pairs come from the shared-shingle inverted index; the collision
     join is (pair × 32) rows, linear in candidates.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    sh = shingle_rows(docs, "doc_id", "text", 3, distinct=True)
     from hadoop_mapreduce_spark.session import scoped_persist
 
-    sh = scoped_persist(sh)
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    a0, b0 = sh.alias("a"), sh.alias("b")
-    cand = (
-        a0.join(b0, (F.col("a.s") == F.col("b.s"))
-                & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    docs = load_table(spark, sf_dir, "documents")
+    sh = scoped_persist(
+        explode_ngram_set(docs, "text", 3, ["doc_id"]).toDF("id", "s"))
+    cand = shingle_pair_counts(sh)
     hv30 = (h60("s") % F.lit(1 << 30)).alias("x")
     hashed = sh.select("id", hv30)
     mask = (1 << b) - 1
@@ -2330,21 +2285,13 @@ def minhash_bbit_estimate(spark: SparkSession, sf_dir: str,
         F.expr(sig_expr).cast("array<long>").alias("mb"))
     s1 = sigs.select(F.col("id").alias("id1"), F.col("mb").alias("mb1"))
     s2 = sigs.select(F.col("id").alias("id2"), F.col("mb").alias("mb2"))
-    coll = (
-        cand.join(s1, "id1").join(s2, "id2")
-        .select(
-            "id1", "id2", "c",
-            F.size(F.filter(
-                F.zip_with(F.col("mb1"), F.col("mb2"),
-                           lambda x, y: x == y),
-                lambda v: v)).cast("long").alias("n_coll"),
-        )
-    )
-    sz1 = sizes.select(F.col("id").alias("id1"), F.col("n").alias("n1"))
-    sz2 = sizes.select(F.col("id").alias("id2"), F.col("n").alias("n2"))
+    n_coll = F.size(F.filter(
+        F.zip_with(F.col("mb1"), F.col("mb2"), lambda x, y: x == y),
+        lambda v: v)).cast("long")
     twob = mask + 1
     return (
-        coll.join(sz1, "id1").join(sz2, "id2")
+        cand.join(s1, "id1").join(s2, "id2")
+        .withColumn("n_coll", n_coll)
         .select(
             "id1", "id2",
             F.col("c").cast("long").alias("n_shared"),
@@ -2388,6 +2335,7 @@ def dedup_shingle_size_sweep(spark: SparkSession, sf_dir: str,
     so the comparison stays exact.  Sweep output is 3 rows.
     """
     from hadoop_mapreduce_spark.functions.text import (
+        ngrams_from_tokens,
         normalize_text,
         tokenize,
     )
@@ -2400,19 +2348,10 @@ def dedup_shingle_size_sweep(spark: SparkSession, sf_dir: str,
     th_e3 = int(threshold * 1000)
     outs = []
     for k in (2, 3, 4):
-        starts = F.when(
-            F.size("__t") >= k,
-            F.sequence(F.lit(1), F.size("__t") - (k - 1)),
-        ).otherwise(F.array().cast("array<int>"))
-        sh = (
-            toked.select(
-                F.col("doc_id").alias("id"),
-                F.explode(F.array_distinct(F.transform(
-                    starts,
-                    lambda i: F.concat_ws(
-                        " ", F.slice(F.col("__t"), i, k))))).alias("s"),
-            )
-        )
+        sh = toked.select(
+            F.col("doc_id").alias("id"),
+            F.explode(F.array_distinct(
+                ngrams_from_tokens(F.col("__t"), k))).alias("s"))
         sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
         hot = (sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
                .where(F.col("df") > max_df).select("s"))
@@ -2478,7 +2417,7 @@ def dedup_containment_prefix(spark: SparkSession, sf_dir: str,
     docs = load_table(spark, sf_dir, "documents")
     t = threshold_e3 / 1000.0
     sh = scoped_persist(
-        shingle_rows(docs, "doc_id", "text", 3, distinct=True))
+        explode_ngram_set(docs, "text", 3, ["doc_id"]).toDF("id", "s"))
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     freq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("f"))
     w = Window.partitionBy("id").orderBy(F.asc("f"), F.asc("s"))
@@ -2547,24 +2486,9 @@ def hash_width_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     then 4 count-distincts over prefix projections of the SAME rows —
     Catalyst plans one expand + aggregate, no per-width rescans.
     """
-    from hadoop_mapreduce_spark.functions.text import (
-        ngrams_from_tokens,
-        normalize_text,
-        tokenize,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
-    # materialise the token array BELOW the n-gram lambda so the regexp
-    # tokenizer runs once per doc, not once per gram element (the plan
-    # audit's higher-order-lambda rule; same shape as dup_ngram_rate)
-    toks = docs.select(
-        tokenize(normalize_text(F.col("text"))).alias("__t"))
-    sh = (
-        toks.select(F.explode(
-            ngrams_from_tokens(F.col("__t"), 3)).alias("s"))
-        .distinct()
-        .select(F.md5(F.col("s")).alias("h"))
-    )
+    sh = (explode_ngrams(docs, "text", 3).distinct()
+          .select(F.md5("ngram").alias("h")))
     # 15/10/8/5 hex digits = 60/40/32/20 bits
     agg = sh.agg(
         F.count(F.lit(1)).cast("long").alias("n_keys"),

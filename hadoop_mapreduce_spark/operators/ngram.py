@@ -20,6 +20,13 @@ pipeline inventory SURVEY.md §2.A ops 1-12), re-expressed declaratively:
                                        letter skew (WordCount.java:54-59)
   TextOutputFormat sink (op-12)        sources.tables.write_tsv
 
+The n-gram layer has two kernels, each defined once here: the bag
+``explode_ngrams`` (one row per occurrence — the counting program
+above) and the set ``explode_ngram_set`` (one row per distinct n-gram
+of a document — the unit of the decontamination, novelty and
+shingle-Jaccard operators; the Spark twin of the oracles'
+``SELECT DISTINCT doc_id, unnest(ngrams_sql(t, n))``).
+
 Scale notes (100 TB): the only shuffle is the final-aggregate exchange on
 ``ngram``; partial aggregation bounds map output by distinct-ngrams-per-
 task, and the global sort is a second, sampling-planned range exchange.
@@ -55,6 +62,21 @@ def explode_ngrams(df: DataFrame, text_col: str, n: int, keep_cols: list[str] | 
     keep = [F.col(c) for c in (keep_cols or [])]
     toks = df.select(*keep, tokenize(normalize_text(F.col(text_col))).alias("__t"))
     return toks.select(*keep, F.explode(ngrams_from_tokens(F.col("__t"), n)).alias("ngram"))
+
+
+def explode_ngram_set(df: DataFrame, text_col: str, n: int,
+                      keep_cols: list[str] | None = None) -> DataFrame:
+    """One output row per DISTINCT n-gram of each row's ``text_col``:
+    ``(*keep_cols, ngram)``, the per-document gram set.
+
+    The same two-step projection as :func:`explode_ngrams` (tokens bound
+    below the Generate); ``array_distinct`` dedups each row's n-grams
+    in-row, so the set costs no shuffle.
+    """
+    keep = [F.col(c) for c in (keep_cols or [])]
+    toks = df.select(*keep, tokenize(normalize_text(F.col(text_col))).alias("__t"))
+    return toks.select(*keep, F.explode(F.array_distinct(
+        ngrams_from_tokens(F.col("__t"), n))).alias("ngram"))
 
 
 def ngram_count(df: DataFrame, text_col: str, n: int = 3, sort: bool = True) -> DataFrame:

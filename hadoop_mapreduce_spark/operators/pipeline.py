@@ -194,8 +194,7 @@ def pipeline_curation(spark: SparkSession, sf_dir: str,
 def pipeline_pretrain_scale(spark: SparkSession, sf_dir: str,
                             n: int = 4, bench_mod: int = 20,
                             chunk_tokens: int = 8,
-                            m_bits: int = 1 << 16,
-                            n_hashes: int = 3) -> DataFrame:
+                            m_bits: int = 1 << 16) -> DataFrame:
     """The round-5 scale-path assembly: corpus-LM quality gate →
     sub-document span dedup (with text reconstruction) → Bloom-bitmap
     benchmark decontamination on the REBUILT text → per-source ledger.
@@ -213,18 +212,18 @@ def pipeline_pretrain_scale(spark: SparkSession, sf_dir: str,
     Stage plumbing (one Catalyst plan; shuffles in stage order):
     unigram LM = one vocab aggregate (broadcast) + one doc-keyed agg;
     span dedup = chunk-hash window + doc-keyed rebuild; decontamination
-    = bit_or bitmap (broadcast map) + a probe projection; ledger = one
+    = Bloom bitmap (broadcast map) + a probe projection; ledger = one
     per-source rollup. Benchmark docs (doc_id % bench_mod == 0) feed
     the bitmap from their ORIGINAL text and are excluded from training.
     """
     from pyspark.sql import Window
 
-    from hadoop_mapreduce_spark.functions.text import ngrams_from_tokens
-    from hadoop_mapreduce_spark.operators.datamix import (
-        _bloom_h12,
-        _bloom_h12_struct,
-        _bloom_hit,
+    from hadoop_mapreduce_spark.functions.portable import (
+        bloom_any,
+        bloom_bitmap,
     )
+    from hadoop_mapreduce_spark.functions.text import ngrams_from_tokens
+    from hadoop_mapreduce_spark.operators.ngram import explode_ngram_set
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
@@ -279,27 +278,8 @@ def pipeline_pretrain_scale(spark: SparkSession, sf_dir: str,
     )
 
     # ---- stage C: Bloom decontamination on the REBUILT text ----
-    # ONE scan of the bench grams, 1 md5 each, KM probes exploded (see
-    # datamix._bloom_probes for the double-hashing rationale)
-    bench_grams = toks.where(is_bench).select(
-        F.explode(F.array_distinct(
-            ngrams_from_tokens(F.col("t"), n))).alias("g"))
-    bh1, bh2 = _bloom_h12(F.col("fh"), m_bits)
-    bm1 = (
-        bench_grams.select(F.md5("g").alias("fh"))
-        .select(F.explode(F.array(
-            *[(bh1 + i * bh2) % m_bits for i in range(n_hashes)])).alias("h"))
-        .select((F.col("h") / 63).cast("long").alias("word"),
-                F.call_function("shiftleft", F.lit(1).cast("long"),
-                                (F.col("h") % 63).cast("int")).alias("mask"))
-        .groupBy("word").agg(F.bit_or("mask").alias("bits"))
-        .agg(F.map_from_entries(F.collect_list(F.struct("word", "bits")))
-             .alias("bm"))
-    )
-
-    # probe: chained transforms pin md5 and the conv pair to once per
-    # gram (interpreted lambdas have no CSE — datamix.bloom_decontaminate
-    # documents the shape)
+    bm1 = bloom_bitmap(
+        explode_ngram_set(docs.where(is_bench), "text", n), "ngram", m_bits)
     final = (
         rebuilt
         .select("doc_id", "source", "n_kept",
@@ -307,13 +287,8 @@ def pipeline_pretrain_scale(spark: SparkSession, sf_dir: str,
         .crossJoin(F.broadcast(bm1))
         .withColumn(
             "contaminated",
-            F.exists(
-                F.transform(
-                    F.transform(
-                        F.array_distinct(ngrams_from_tokens(F.col("rt"), n)),
-                        F.md5),
-                    lambda fh: _bloom_h12_struct(fh, m_bits)),
-                lambda s: _bloom_hit(s, F.col("bm"), n_hashes, m_bits)))
+            bloom_any(F.array_distinct(ngrams_from_tokens(F.col("rt"), n)),
+                      F.col("bm"), m_bits))
     )
 
     # ---- ledger ----

@@ -2308,8 +2308,7 @@ def er_survivorship_golden(spark: SparkSession, sf_dir: str,
 
 def bloom_join_prefilter_audit(spark: SparkSession, sf_dir: str,
                                segment: str = "BUILDING",
-                               m_bits: int = 1 << 14,
-                               n_hashes: int = 3) -> DataFrame:
+                               m_bits: int = 1 << 14) -> DataFrame:
     """Bloom-prefiltered semi-join audit — the row-level runtime-filter
     decision (Spark's own injected bloom filters, Exadata/Snowflake
     join pruning) measured exactly: build an m_bits Bloom bitmap over
@@ -2321,11 +2320,12 @@ def bloom_join_prefilter_audit(spark: SparkSession, sf_dir: str,
     no false negatives, so pass ⊇ true and the audit's fp/reduction
     numbers are exact, not estimates.
 
-    Portability: the bitmap is the repo's KM double-hash Bloom
-    (bloom_decontaminate machinery — one md5 per key, k arithmetic
-    probes, 63-bit words) collapsed to a one-row map and broadcast, so
-    the oracle rebuilds it bit-identically; the probe test is a pure
-    projection (zero probe-side shuffle before the rollup).
+    Portability: the bitmap is the portable Bloom filter of
+    ``functions/portable.py`` (one md5 per key, k arithmetic probes,
+    63-bit words) collapsed to a one-row map and broadcast, so the
+    oracle rebuilds it bit-identically from the SQL twin; the probe
+    test is a pure projection (zero probe-side shuffle before the
+    rollup).
 
     100 TB shape: build side = one scan of the dim subset -> bounded
     bit_or aggregate (<= m_bits/63 rows -> ~KBs broadcast regardless
@@ -2334,47 +2334,25 @@ def bloom_join_prefilter_audit(spark: SparkSession, sf_dir: str,
     scan. This is exactly the plan shape that replaces a shuffled
     semi-join at scale.
     """
-    from hadoop_mapreduce_spark.operators.datamix import (
-        _bloom_h12,
-        _bloom_word_mask,
+    from hadoop_mapreduce_spark.functions.portable import (
+        bloom_bitmap,
+        bloom_hit,
     )
 
     cust = load_table(spark, sf_dir, "customer").where(
         F.col("c_mktsegment") == segment).select("c_custkey")
-    h1, h2 = _bloom_h12(F.md5(F.col("c_custkey").cast("string")), m_bits)
-    probes = cust.select(F.explode(F.array(
-        *[(h1 + i * h2) % m_bits for i in range(n_hashes)])).alias("h"))
-    word, mask = _bloom_word_mask(F.col("h"))
-    bitmap = (
-        probes.select(word.alias("word"), mask.alias("mask"))
-        .groupBy("word").agg(F.expr("bit_or(mask)").alias("bits"))
-        .agg(F.map_from_entries(F.collect_list(
-            F.struct("word", "bits"))).alias("bm"))
-    )
+    bitmap = bloom_bitmap(cust, F.col("c_custkey").cast("string"), m_bits)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority")
-    oh1, oh2 = _bloom_h12(F.md5(F.col("o_custkey").cast("string")), m_bits)
     flagged = orders.crossJoin(F.broadcast(bitmap)).select(
-        "o_orderpriority", "o_custkey", "bm",
-        *[((oh1 + i * oh2) % m_bits).alias(f"p{i}")
-          for i in range(n_hashes)],
+        "o_orderpriority", "o_custkey",
+        bloom_hit(F.col("o_custkey").cast("string"), F.col("bm"), m_bits)
+        .cast("long").alias("pass_bloom"),
     )
-    tests = [
-        (F.coalesce(
-            F.element_at("bm", (F.col(f"p{i}") / 63).cast("long")),
-            F.lit(0))
-         .bitwiseAND(F.call_function(
-             "shiftleft", F.lit(1).cast("long"),
-             (F.col(f"p{i}") % 63).cast("int"))) != 0)
-        for i in range(n_hashes)
-    ]
-    passes = tests[0]
-    for t in tests[1:]:
-        passes = passes & t
     truth = cust.select(F.col("c_custkey").alias("o_custkey"),
                         F.lit(1).alias("is_match"))
     return (
-        flagged.withColumn("pass_bloom", passes.cast("long"))
+        flagged
         .join(F.broadcast(truth), "o_custkey", "left")
         .groupBy("o_orderpriority")
         .agg(

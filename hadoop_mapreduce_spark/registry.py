@@ -15,8 +15,10 @@ bit-comparable:
   * all hash functions are md5/sha2-derived (engine-portable), never
     engine-native hashes;
   * the portable kernels — the 60-bit md5 hash ``h60``, the portable
-    HyperLogLog registers and estimator — live once, in their Spark
-    form and their SQL twin, in ``functions/portable.py``; the
+    HyperLogLog registers and estimator, and the Bloom filter (probe
+    rows ``bloom_probes_sql``, bitmap ``bloom_bitmap_sql``, hit test
+    ``bloom_hit_sql``) — live once, in their Spark form and their SQL
+    twin, in ``functions/portable.py``; the
     tokenizer's twin (``TOKS_SQL``) and the n-gram window's
     (``ngrams_sql``) sit beside their Spark forms in
     ``functions/text.py``. Oracles interpolate the SQL twins;
@@ -62,6 +64,9 @@ from hadoop_mapreduce_spark.operators import (
     udfs,
 )
 from hadoop_mapreduce_spark.functions.portable import (
+    bloom_bitmap_sql,
+    bloom_hit_sql,
+    bloom_probes_sql,
     h60_sql,
     hll_estimate_sql,
     hll_partials_sql,
@@ -2124,9 +2129,8 @@ FROM names GROUP BY lower(name) ORDER BY rep
 """
 
 # Bloom-filter decontamination: the oracle rebuilds the identical
-# m=65536-bit / k=3 / 63-bit-word bitmap from md5-derived probes
-# (operators/datamix.py::bloom_decontaminate documents why 63 bits:
-# DuckDB raises on 1<<63). Hash-comparable because every hash is
+# m=65536-bit bitmap from the portable Bloom twin (functions/portable.py
+# documents the layout). Hash-comparable because every hash is
 # md5-derived, never engine-native.
 ORACLE["bloom_decontaminate"] = f"""
 WITH toks AS (SELECT doc_id, source, {TOKS_SQL} AS t FROM documents),
@@ -2134,29 +2138,11 @@ grams AS (
   SELECT DISTINCT doc_id, unnest({ngrams_sql('t', 4)}) AS g
   FROM toks
 ),
-h12 AS (
-  SELECT doc_id, g,
-    ('0x' || substr(fh, 1, 15))::UBIGINT::BIGINT % 65536 AS h1,
-    ('0x' || substr(fh, 16, 15))::UBIGINT::BIGINT % 65536 AS h2
-  FROM (SELECT doc_id, g, md5(g) AS fh FROM grams)
-),
-probes AS (
-  SELECT doc_id, g, (h1 + k * h2) % 65536 AS h
-  FROM h12, LATERAL (SELECT unnest([0, 1, 2]) AS k) kk
-),
-bitmap AS (
-  SELECT h // 63 AS word, bit_or(1::BIGINT << (h % 63)::INT) AS bits
-  FROM probes WHERE doc_id % 20 = 0 GROUP BY 1
-),
-per_gram AS (
-  SELECT p.doc_id, p.g,
-    min(CASE WHEN b.bits IS NOT NULL
-              AND (b.bits & (1::BIGINT << (p.h % 63)::INT)) <> 0
-         THEN 1 ELSE 0 END) AS gram_hit
-  FROM probes p LEFT JOIN bitmap b ON p.h // 63 = b.word
-  WHERE p.doc_id % 20 <> 0
-  GROUP BY p.doc_id, p.g
-),
+bench AS (SELECT g FROM grams WHERE doc_id % 20 = 0),
+train_grams AS (SELECT doc_id, g FROM grams WHERE doc_id % 20 <> 0),
+bitmap AS ({bloom_bitmap_sql("bench", "g", 65536)}),
+probes AS ({bloom_probes_sql("train_grams", "g", 65536, "doc_id, g")}),
+per_gram AS ({bloom_hit_sql("probes", "bitmap", "doc_id, g", "gram_hit")}),
 hits AS (SELECT doc_id, max(gram_hit) AS flagged FROM per_gram GROUP BY doc_id),
 train AS (SELECT doc_id, source FROM documents WHERE doc_id % 20 <> 0)
 SELECT t.source, count(*)::BIGINT AS n_train_docs,
@@ -2344,39 +2330,14 @@ bgrams AS (
   FROM toks
   WHERE doc_id % 20 = 0
 ),
-bh12 AS (
-  SELECT ('0x' || substr(fh, 1, 15))::UBIGINT::BIGINT % 65536 AS h1,
-    ('0x' || substr(fh, 16, 15))::UBIGINT::BIGINT % 65536 AS h2
-  FROM (SELECT md5(g) AS fh FROM bgrams)
-),
-bprobes AS (
-  SELECT (h1 + k * h2) % 65536 AS h
-  FROM bh12, LATERAL (SELECT unnest([0, 1, 2]) AS k) kk
-),
-bitmap AS (SELECT h // 63 AS word, bit_or(1::BIGINT << (h % 63)::INT) AS bits FROM bprobes GROUP BY 1),
+bitmap AS ({bloom_bitmap_sql("bgrams", "g", 65536)}),
 rt AS (SELECT doc_id, source, n_kept, string_split(rebuilt, ' ') AS rt FROM rebuilt),
 rgrams AS (
   SELECT DISTINCT doc_id, unnest({ngrams_sql('rt', 4)}) AS g
   FROM rt
 ),
-rh12 AS (
-  SELECT doc_id, g,
-    ('0x' || substr(fh, 1, 15))::UBIGINT::BIGINT % 65536 AS h1,
-    ('0x' || substr(fh, 16, 15))::UBIGINT::BIGINT % 65536 AS h2
-  FROM (SELECT doc_id, g, md5(g) AS fh FROM rgrams)
-),
-rprobes AS (
-  SELECT doc_id, g, (h1 + k * h2) % 65536 AS h
-  FROM rh12, LATERAL (SELECT unnest([0, 1, 2]) AS k) kk
-),
-pg AS (
-  SELECT p.doc_id, p.g,
-    min(CASE WHEN b.bits IS NOT NULL
-              AND (b.bits & (1::BIGINT << (p.h % 63)::INT)) <> 0
-         THEN 1 ELSE 0 END) AS hit
-  FROM rprobes p LEFT JOIN bitmap b ON p.h // 63 = b.word
-  GROUP BY 1, 2
-),
+rprobes AS ({bloom_probes_sql("rgrams", "g", 65536, "doc_id, g")}),
+pg AS ({bloom_hit_sql("rprobes", "bitmap", "doc_id, g", "hit")}),
 contam AS (SELECT doc_id, max(hit) AS cont FROM pg GROUP BY 1),
 final AS (
   SELECT r.doc_id, r.source, len(r.rt) AS ntok, coalesce(c.cont, 0) AS cont
@@ -8702,43 +8663,18 @@ JOIN sing b ON b.source = e.s2
 ORDER BY e.s1, e.s2
 """
 
-# r8v: bloom_join_prefilter_audit — KM double-hash Bloom over the
-# segment customers' keys (bloom_decontaminate machinery, 2^14 bits),
-# every order probed, exact semi-join truth alongside; pass >= true by
-# the no-false-negative property.
-ORACLE["bloom_join_prefilter_audit"] = """
+# r8v: bloom_join_prefilter_audit — the portable Bloom twin over the
+# segment customers' keys (2^14 bits), every order probed, exact
+# semi-join truth alongside; pass >= true by the no-false-negative
+# property.
+_OKEYS = "o_orderkey, o_custkey, o_orderpriority"
+ORACLE["bloom_join_prefilter_audit"] = f"""
 WITH keys AS (
   SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
 ),
-h12k AS (
-  SELECT ('0x' || substr(fh, 1, 15))::UBIGINT::BIGINT % 16384 AS h1,
-         ('0x' || substr(fh, 16, 15))::UBIGINT::BIGINT % 16384 AS h2
-  FROM (SELECT md5(c_custkey::VARCHAR) AS fh FROM keys)
-),
-bitmap AS (
-  SELECT h // 63 AS word, bit_or(1::BIGINT << (h % 63)::INT) AS bits
-  FROM (SELECT (h1 + k * h2) % 16384 AS h
-        FROM h12k, LATERAL (SELECT unnest([0, 1, 2]) AS k) kk)
-  GROUP BY 1
-),
-oh AS (
-  SELECT o_orderkey, o_custkey, o_orderpriority,
-    ('0x' || substr(fh, 1, 15))::UBIGINT::BIGINT % 16384 AS h1,
-    ('0x' || substr(fh, 16, 15))::UBIGINT::BIGINT % 16384 AS h2
-  FROM (SELECT o_orderkey, o_custkey, o_orderpriority,
-               md5(o_custkey::VARCHAR) AS fh FROM orders)
-),
-probed AS (
-  SELECT o.o_orderkey, o.o_custkey, o.o_orderpriority,
-    min(CASE WHEN b.bits IS NOT NULL
-              AND (b.bits & (1::BIGINT << (p.h % 63)::INT)) <> 0
-         THEN 1 ELSE 0 END)::BIGINT AS pass_bloom
-  FROM oh o,
-    LATERAL (SELECT (o.h1 + k * o.h2) % 16384 AS h
-             FROM (SELECT unnest([0, 1, 2]) AS k)) p
-  LEFT JOIN bitmap b ON p.h // 63 = b.word
-  GROUP BY 1, 2, 3
-),
+bitmap AS ({bloom_bitmap_sql("keys", "c_custkey::VARCHAR", 16384)}),
+oprobes AS ({bloom_probes_sql("orders", "o_custkey::VARCHAR", 16384, _OKEYS)}),
+probed AS ({bloom_hit_sql("oprobes", "bitmap", _OKEYS, "pass_bloom")}),
 truthed AS (
   SELECT p.o_orderpriority, p.pass_bloom,
     CASE WHEN k.c_custkey IS NOT NULL THEN 1 ELSE 0 END AS is_match

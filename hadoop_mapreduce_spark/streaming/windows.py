@@ -275,11 +275,10 @@ def running_user_totals_tws(events: DataFrame) -> DataFrame:
 
 
 def stream_decontaminate(doc_stream: DataFrame, bitmap_map: DataFrame,
-                         n: int = 4, m_bits: int = 1 << 16,
-                         n_hashes: int = 3) -> DataFrame:
+                         n: int = 4, m_bits: int = 1 << 16) -> DataFrame:
     """Streaming benchmark decontamination: incoming documents are
     flagged against a STATIC Bloom bitmap (built batch-side from the
-    benchmark suites — datamix.bloom_decontaminate's build stage) via a
+    benchmark suites by ``functions.portable.bloom_bitmap``) via a
     stream-static crossJoin of the one-row map. The stream side is a
     pure projection (the same exists() probe as the batch operator), so
     this is a stateless streaming stage: no watermark, no state store,
@@ -290,14 +289,11 @@ def stream_decontaminate(doc_stream: DataFrame, bitmap_map: DataFrame,
     documents arrive forever; flagged docs route to quarantine via the
     sink's partition column rather than being dropped silently.
     """
+    from hadoop_mapreduce_spark.functions.portable import bloom_any
     from hadoop_mapreduce_spark.functions.text import (
         ngrams_from_tokens,
         normalize_text,
         tokenize,
-    )
-    from hadoop_mapreduce_spark.operators.datamix import (
-        _bloom_h12_struct,
-        _bloom_hit,
     )
 
     toks = doc_stream.withColumn(
@@ -306,13 +302,6 @@ def stream_decontaminate(doc_stream: DataFrame, bitmap_map: DataFrame,
         toks.crossJoin(F.broadcast(bitmap_map))
         .select(
             "doc_id", "source", "text",
-            F.exists(
-                F.transform(
-                    F.transform(
-                        F.array_distinct(
-                            ngrams_from_tokens(F.col("__t"), n)),
-                        F.md5),
-                    lambda fh: _bloom_h12_struct(fh, m_bits)),
-                lambda s: _bloom_hit(s, F.col("bm"), n_hashes, m_bits),
-            ).alias("contaminated"))
+            bloom_any(F.array_distinct(ngrams_from_tokens(F.col("__t"), n)),
+                      F.col("bm"), m_bits).alias("contaminated"))
     )

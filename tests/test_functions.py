@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from hadoop_mapreduce_spark.functions.text import (
     ngrams_from_tokens,
     normalize_text,
-    shingles,
     tokenize,
 )
 from hadoop_mapreduce_spark.functions.vectors import cosine_similarity, dot, l2_norm
@@ -39,8 +38,12 @@ def test_ngrams_window(spark):
 
 
 def test_shingles_normalised(spark):
-    got = one(spark, shingles(F.col("text"), 2), ("Hello, World again",))
-    assert got == ["hello world", "world again"]
+    from hadoop_mapreduce_spark.operators.ngram import explode_ngram_set
+
+    df = spark.createDataFrame([(1, "Hello, World again")], ["doc_id", "text"])
+    got = sorted(tuple(r) for r in
+                 explode_ngram_set(df, "text", 2, ["doc_id"]).collect())
+    assert got == [(1, "hello world"), (1, "world again")]
 
 
 def test_vector_ops(spark):

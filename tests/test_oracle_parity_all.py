@@ -68,7 +68,19 @@ GRAPH_KERNEL_QUERIES = {
     "graph_degree_assortativity", "graph_rich_club",
     "kcore_dedup_graph", "pagerank_dedup_graph",
 }
-DEFAULT_TIER = set(HEADLINE) | GRAPH_KERNEL_QUERIES
+# The queries whose Spark plan moved onto the n-gram-set kernels
+# (explode_ngram_set, shingle_pair_counts, the portable Bloom filter)
+# also run in the default tier.
+GRAM_KERNEL_QUERIES = {
+    "dup_ngram_rate", "source_overlap_matrix", "source_novelty_attribution",
+    "memorization_novelty", "hash_width_collision_audit",
+    "dedup_ngram_jaccard", "dedup_containment", "dedup_containment_prefix",
+    "minhash_bbit_estimate", "minhash_accuracy_audit", "lsh_band_tuning",
+    "dedup_threshold_sweep", "dedup_shingle_size_sweep",
+    "cross_source_duplication_matrix", "pipeline_curation",
+    "pipeline_pretrain_scale", "bloom_join_prefilter_audit",
+}
+DEFAULT_TIER = set(HEADLINE) | GRAPH_KERNEL_QUERIES | GRAM_KERNEL_QUERIES
 
 
 @pytest.mark.parametrize("name", [

@@ -18,9 +18,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from hadoop_mapreduce_spark.functions.portable import (
+    BLOOM_K,
     HLL_ALPHA_SCALED,
     HLL_M,
     HLL_POW49,
+    bloom_any,
+    bloom_bitmap,
+    bloom_bitmap_sql,
+    bloom_hit,
+    bloom_hit_sql,
+    bloom_probes_sql,
     h60,
     h60_sql,
     hll_estimate,
@@ -146,6 +153,55 @@ def test_hll_estimate_twins_agree_on_registers(hostile, duck):
         f"est AS (SELECT {hll_partials_sql()} FROM regs) "
         f"SELECT {hll_estimate_sql()} FROM est").fetchone()[0]
     assert got == want == len(set(HOSTILE))
+
+
+def _py_probes(key: str, m_bits: int) -> list[int]:
+    """Reference KM probes from the two 15-hex md5 halves."""
+    hx = hashlib.md5(key.encode()).hexdigest()
+    h1, h2 = int(hx[:15], 16) % m_bits, int(hx[15:30], 16) % m_bits
+    return [(h1 + i * h2) % m_bits for i in range(BLOOM_K)]
+
+
+def _py_bloom(keys, m_bits: int, word_bits: int = 63) -> dict[int, int]:
+    bm: dict[int, int] = {}
+    for key in keys:
+        for h in _py_probes(key, m_bits):
+            bm[h // word_bits] = bm.get(h // word_bits, 0) | 1 << (h % word_bits)
+    return bm
+
+
+def _py_bloom_hit(key: str, bm: dict[int, int], m_bits: int) -> bool:
+    return all(bm.get(h // 63, 0) >> (h % 63) & 1 for h in _py_probes(key, m_bits))
+
+
+@pytest.mark.parametrize("m_bits", [1 << 14, 1 << 16])
+def test_bloom_twins_agree(spark, hostile, duck, m_bits):
+    got = bloom_bitmap(hostile, "s", m_bits).first().bm
+    want = dict(duck.execute(bloom_bitmap_sql("hostile", "s", m_bits)).fetchall())
+    ref = _py_bloom(HOSTILE, m_bits)
+    assert got == want == ref
+    # a 64-bit-word layout is a different bitmap: the comparison trips
+    assert _py_bloom(HOSTILE, m_bits, word_bits=64) != got
+
+    # hit verdicts on members and on keys that were never added
+    probes = HOSTILE + [f"miss-{i}" for i in range(200)]
+    pdf = spark.createDataFrame(list(enumerate(probes)), "i long, s string")
+    bm = spark.createDataFrame([(got,)], "bm map<bigint, bigint>")
+    rows = pdf.crossJoin(bm).select(
+        "i", bloom_hit(F.col("s"), F.col("bm"), m_bits).alias("hit"),
+        bloom_any(F.array("s"), F.col("bm"), m_bits).alias("any")).collect()
+    hits = {r.i: r.hit for r in rows}
+    assert hits == {r.i: r.any for r in rows}
+    duck.execute("CREATE OR REPLACE TEMP TABLE bloom_probe (i BIGINT, s VARCHAR)")
+    duck.executemany("INSERT INTO bloom_probe VALUES (?, ?)", list(enumerate(probes)))
+    sql_hits = dict(duck.execute(
+        f"WITH bitmap AS ({bloom_bitmap_sql('hostile', 's', m_bits)}), "
+        f"p AS ({bloom_probes_sql('bloom_probe', 's', m_bits, 'i')}) "
+        f"{bloom_hit_sql('p', 'bitmap', 'i', 'hit')}").fetchall())
+    ref_hits = {i: _py_bloom_hit(s, ref, m_bits) for i, s in enumerate(probes)}
+    assert hits == {i: bool(h) for i, h in sql_hits.items()} == ref_hits
+    assert all(ref_hits[i] for i in range(len(HOSTILE)))  # no false negatives
+    assert not all(ref_hits.values())
 
 
 # --- typed oracle contract -------------------------------------------------

@@ -563,28 +563,17 @@ def test_stream_decontaminate_matches_batch_flags(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from hadoop_mapreduce_spark.operators.datamix import _bloom_probes
-    from hadoop_mapreduce_spark.functions.text import (
-        ngrams_from_tokens,
-        normalize_text,
-        tokenize,
-    )
+    from hadoop_mapreduce_spark.functions.portable import bloom_bitmap
+    from hadoop_mapreduce_spark.operators.ngram import explode_ngram_set
     from hadoop_mapreduce_spark.sources.tables import load_table
     from hadoop_mapreduce_spark.streaming.windows import stream_decontaminate
     from tests.conftest import SF_DIR
 
     docs = load_table(spark, SF_DIR, "documents")
-    # batch-side bitmap build (the operator's build stage, verbatim)
-    grams = docs.where(F.col("doc_id") % 20 == 0).select(
-        F.explode(F.array_distinct(ngrams_from_tokens(
-            tokenize(normalize_text(F.col("text"))), 4))).alias("g"))
-    bits = None
-    for word, mask in _bloom_probes(F.col("g"), 3, 1 << 16):
-        part = grams.select(word.alias("word"), mask.alias("mask"))
-        bits = part if bits is None else bits.unionAll(part)
-    bitmap = bits.groupBy("word").agg(F.bit_or("mask").alias("bits"))
-    bm1 = bitmap.agg(F.map_from_entries(
-        F.collect_list(F.struct("word", "bits"))).alias("bm"))
+    # batch-side bitmap build (the operator's build stage)
+    bm1 = bloom_bitmap(
+        explode_ngram_set(docs.where(F.col("doc_id") % 20 == 0), "text", 4),
+        "ngram", 1 << 16)
 
     # stream 40 training docs as two JSON micro-batches
     src = tmp_path / "docs_src"

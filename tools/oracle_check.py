@@ -10,11 +10,15 @@ With --json the per-query results are ALSO written as a driver-format
 correctness artifact ({name: {rows_match, schema_match, hash_match,
 spark_rows, oracle_rows, err}}) — used to produce CORRECTNESS_full.json
 covering every registered query, since the driver's own
-CORRECTNESS_r*.json records only a 50-query window per round.
+CORRECTNESS_r*.json records only a 50-query window per round. Each entry
+also carries spark_digest and oracle_digest, the md5 of each side's
+canonical rows, so the output identity of a refactor is a `diff` of the
+files written before and after it.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import math
 import os
@@ -48,6 +52,10 @@ def canon(rows, columns):
     return out
 
 
+def digest(canon_rows) -> str:
+    return hashlib.md5("\x1e".join(canon_rows).encode()).hexdigest()
+
+
 def main() -> int:
     argv = list(sys.argv[1:])
     json_out = None
@@ -78,6 +86,7 @@ def main() -> int:
             sdf = fn(spark, sf_dir)
             srows = sdf.collect()
             scols = sdf.columns
+            sc = canon([tuple(r) for r in srows], scols)
             # operators that scoped_persist a mid-plan materialisation
             # are released here, so a 153-query run doesn't accumulate
             # dead cached partitions (ADVICE r5)
@@ -97,7 +106,8 @@ def main() -> int:
             report[name] = {"rows_match": len(srows) >= 0, "schema_match": None,
                             "hash_match": None, "spark_rows": len(srows),
                             "oracle_rows": None, "err": None,
-                            "note": "rows-only (no SQL oracle by contract)"}
+                            "note": "rows-only (no SQL oracle by contract)",
+                            "spark_digest": digest(sc), "oracle_digest": None}
             continue
         try:
             cur = con.execute(sql)
@@ -108,7 +118,8 @@ def main() -> int:
             print(f"FAIL  {name}: duckdb error: {e}")
             report[name] = {"rows_match": False, "schema_match": False,
                             "hash_match": False, "spark_rows": len(srows),
-                            "oracle_rows": None, "err": f"duckdb: {e}"[:500]}
+                            "oracle_rows": None, "err": f"duckdb: {e}"[:500],
+                            "spark_digest": digest(sc), "oracle_digest": None}
             continue
         problems = []
         if len(srows) != len(orows):
@@ -116,10 +127,9 @@ def main() -> int:
         schema_ok = sorted(scols) == sorted(ocols)
         if not schema_ok:
             problems.append(f"columns spark={sorted(scols)} oracle={sorted(ocols)}")
+        oc = canon(orows, ocols)
         hash_ok = False
         if not problems:
-            sc = canon([tuple(r) for r in srows], scols)
-            oc = canon(orows, ocols)
             hash_ok = sc == oc
             if not hash_ok:
                 ndiff = sum(1 for a, b in zip(sc, oc) if a != b)
@@ -132,7 +142,8 @@ def main() -> int:
         report[name] = {"rows_match": len(srows) == len(orows),
                         "schema_match": schema_ok, "hash_match": hash_ok,
                         "spark_rows": len(srows), "oracle_rows": len(orows),
-                        "err": problems[0] if problems else None}
+                        "err": problems[0] if problems else None,
+                        "spark_digest": digest(sc), "oracle_digest": digest(oc)}
         if problems:
             failures.append(name)
             print(f"FAIL  {name}: " + "; ".join(problems[:1]))
