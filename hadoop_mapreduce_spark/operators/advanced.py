@@ -47,7 +47,7 @@ def map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.element_at("status_map", F.lit("O")), F.lit(0)).cast("long").alias("n_o"),
         F.coalesce(F.element_at("status_map", F.lit("P")), F.lit(0)).cast("long").alias("n_p"),
         F.size(big).cast("long").alias("n_big_status"),
-    ).orderBy("o_orderpriority")
+    )
 
 
 def higher_order_array(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -73,7 +73,7 @@ def higher_order_array(spark: SparkSession, sf_dir: str) -> DataFrame:
         # + 0.0 normalises IEEE negative zero (engines disagree on -0.0)
         (F.round(mean, 6) + F.lit(0.0)).alias("mean_val"),
         F.round(sumsq, 6).alias("sum_sq"),
-    ).orderBy("vec_id")
+    )
 
 
 def unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,7 +91,7 @@ def unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
         values=["sum_qty", "sum_price", "sum_disc"],
         variableColumnName="measure",
         valueColumnName="value",
-    ).orderBy("l_returnflag", "measure")
+    )
 
 
 def window_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -115,7 +115,7 @@ def window_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.round(F.last(v, ignorenulls=True).over(w), 2).alias("locf_value"),
         F.round(F.first(v, ignorenulls=True).over(w_all), 2).alias("first_valid"),
-    ).orderBy("user_id", "event_id")
+    )
 
 
 def bool_count_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -130,7 +130,6 @@ def bool_count_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.bool_or(F.col("o_totalprice") > 400000.0).cast("long").alias("any_over_400k"),
             F.count_if(F.col("o_orderstatus") == "F").alias("n_finished"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -148,7 +147,6 @@ def regexp_extract_all_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         terms.groupBy("term")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .where(F.col("cnt") >= 3)
-        .orderBy(F.col("cnt").desc(), "term")
     )
 
 
@@ -186,7 +184,6 @@ def udtf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
         SELECT d.doc_id, t.pos, t.token
         FROM _udtf_docs d, LATERAL tokenize_first10(d.text) t
-        ORDER BY d.doc_id, t.pos
         """
     )
 
@@ -206,7 +203,6 @@ def string_agg_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_join(F.array_sort(F.collect_list("n_name")), ",").alias("nations"),
             F.count(F.lit(1)).alias("n_nations"),
         )
-        .orderBy("r_name")
     )
 
 
@@ -223,7 +219,6 @@ def bitwise_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.bit_or("o_custkey").cast("long").alias("keys_or"),
             F.bit_xor("o_custkey").cast("long").alias("keys_xor"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -287,6 +282,5 @@ def udtf_polymorphic_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
                round(t.top2_value, 2) AS top2_value
         FROM _udtf_li,
         LATERAL topn_values(l_quantity, l_extendedprice, l_discount, 2) t
-        ORDER BY l_orderkey, l_linenumber, t.rank
         """
     )

@@ -122,7 +122,6 @@ def cdc_merge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("o_orderkey").alias("min_key"),
             F.max("o_orderkey").alias("max_key"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -156,7 +155,6 @@ def scd2_customer_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("valid_to").cast("string").alias("valid_to"),
             F.col("o_totalprice").alias("balance"),
         )
-        .orderBy("custkey", "version")
     )
 
 
@@ -219,5 +217,4 @@ def ivm_orders_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total_cents"),
         )
         .where(F.col("n_orders") > 0)
-        .orderBy("o_orderstatus")
     )

@@ -56,7 +56,7 @@ def doc_chunking(spark: SparkSession, sf_dir: str, chunk_tokens: int = 32,
         F.col("chunk_idx").cast("long").alias("chunk_idx"),
         "chunk",
         F.size(F.split("chunk", " ")).cast("long").alias("chunk_len"),
-    ).orderBy("doc_id", "chunk_idx")
+    )
 
 
 def text_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -80,7 +80,7 @@ def text_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_email.alias("n_emails_masked"),
         n_url.alias("n_urls_masked"),
         F.substring(clean, 1, 80).alias("clean_prefix"),
-    ).orderBy("doc_id")
+    )
 
 
 def dataset_split(spark: SparkSession, sf_dir: str,
@@ -107,7 +107,6 @@ def dataset_split(spark: SparkSession, sf_dir: str,
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_tokens").alias("total_tokens"),
         )
-        .orderBy("split")
     )
 
 
@@ -185,7 +184,6 @@ def seq_packing(spark: SparkSession, sf_dir: str,
     return (
         sized.groupBy("source", "bucket")
         .applyInPandas(pack, schema=_PACK_SCHEMA)
-        .orderBy("source", "pack_id")
     )
 
 
@@ -231,7 +229,7 @@ def dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = out.unionByName(c)
     return out.withColumn(
         "passed", (F.col("n_violations") == 0).cast("long")
-    ).orderBy("check_name")
+    )
 
 
 def split_leakage_guard(spark: SparkSession, sf_dir: str,
@@ -421,7 +419,6 @@ def memorization_novelty(spark: SparkSession, sf_dir: str, n: int = 5,
             # engines; no rounding needed (unlike FP-sum-fed scores)
             (F.lit(1.0) - F.col("n_seen") / F.col("n_grams")).alias("novelty"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -472,7 +469,7 @@ def padding_waste_audit(spark: SparkSession, sf_dir: str,
         (F.col("padding_tokens") /
          (F.col("padding_tokens") + F.col("total_tokens")))
         .alias("waste_frac"),
-    ).orderBy("strategy")
+    )
 
 
 def inbatch_collision_audit(spark: SparkSession, sf_dir: str,
@@ -502,7 +499,6 @@ def inbatch_collision_audit(spark: SparkSession, sf_dir: str,
             F.sum(F.col("c") * (F.col("c") - 1) / 2)
             .cast("long").alias("same_source_pairs"),
         )
-        .orderBy("source")
     )
 
 
@@ -538,7 +534,6 @@ def context_window_stats(spark: SparkSession, sf_dir: str,
                 F.col("tokens_kept").cast("long").alias("tokens_kept"),
                 (F.col("tokens_kept") / F.col("tokens_total"))
                 .alias("kept_frac"))
-        .orderBy("budget")
     )
 
 
@@ -670,7 +665,6 @@ def logreg_train_hashed(labeled: DataFrame, dim: int = 64,
                 F.round("loss", 8).alias("log_loss"),
                 F.round("acc", 6).alias("train_acc"),
                 "n_pos", F.col("n_docs").cast("long").alias("n_docs"))
-        .orderBy("b")
     )
 
 
@@ -818,7 +812,6 @@ def rrf_quality_fusion(spark: SparkSession, sf_dir: str,
                 F.col("r_dtok").cast("long").alias("r_dtok"),
                 F.col("r_dbig").cast("long").alias("r_dbig"),
                 "rrf_e12")
-        .orderBy("source", "fused_rank")
     )
 
 
@@ -880,7 +873,7 @@ def quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                    " ELSE 0 END").alias("token_frac_e6"),
         )
     )
-    return agg.orderBy("threshold", "source")
+    return agg
 
 
 def quality_signal_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -935,7 +928,6 @@ def quality_signal_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("source", F.col("n_docs").cast("long").alias("n_docs"),
                 "pearson", "spearman")
-        .orderBy("source")
     )
 
 
@@ -1002,7 +994,6 @@ def badwords_filter(spark: SparkSession, sf_dir: str,
             F.expr("flagged_docs * 1000000 div n_docs")
             .alias("flagged_frac_e6"),
         )
-        .orderBy("source")
     )
 
 
@@ -1088,7 +1079,6 @@ def packing_boundary_audit(spark: SparkSession, sf_dir: str,
             F.expr("crossdoc_pairs * 1000000 div total_pairs")
             .alias("crossdoc_frac_e6"),
         )
-        .orderBy("source")
     )
 
 
@@ -1152,7 +1142,6 @@ def preference_pair_build(spark: SparkSession, sf_dir: str,
             (F.col("chosen_q_e6") - F.col("rejected_q_e6"))
             .alias("margin_e6"),
         )
-        .orderBy("source", "pair_rank")
     )
 
 
@@ -1243,7 +1232,6 @@ def bootstrap_ci_quality(spark: SparkSession, sf_dir: str,
             (F.col("boot_hi_e6") - F.col("boot_lo_e6"))
             .alias("ci_width_e6"),
         )
-        .orderBy("source")
     )
 
 
@@ -1298,7 +1286,6 @@ def benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             r6(p).alias("benford_share"),
             r6(chi).alias("chi2_contrib"),
         )
-        .orderBy("digit")
     )
 
 
@@ -1379,7 +1366,7 @@ def quality_filter_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = rows[0]
     for r in rows[1:]:
         out = out.unionAll(r)
-    return out.orderBy("sig_a", "sig_b")
+    return out
 
 
 def auc_roc_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1463,7 +1450,6 @@ def auc_roc_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
                       THEN u2 * 1000000 DIV (2 * n_pos * n_neg)
                       END""").alias("auc_e6"),
         )
-        .orderBy("threshold")
     )
 
 
@@ -1547,7 +1533,6 @@ def quality_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.floor(tau * F.lit(1e6) + F.lit(0.5))
                        / F.lit(1e6)).alias("tau_b"),
         )
-        .orderBy("source")
     )
 
 
@@ -1636,7 +1621,6 @@ def quality_flag_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.floor(corrected * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
             .alias("odds_ratio"),
         )
-        .orderBy("flag", "source")
     )
 
 
@@ -1717,7 +1701,6 @@ def quality_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 * n_pos_total) AS BIGINT)
                       END""").alias("lift_e6"),
         )
-        .orderBy("decile")
     )
 
 
@@ -1780,7 +1763,6 @@ def quality_calibration_bins(spark: SparkSession, sf_dir: str,
         .select(F.col("bin").cast("long").alias("bin"),
                 "n_docs", "n_pos", "mean_score_e6", "pos_rate_e6",
                 "gap_e6", "ece_e6")
-        .orderBy("bin")
     )
 
 
@@ -1849,7 +1831,6 @@ def experiment_srm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("n_conv * 1000000 DIV n_users").alias("conv_rate_e6"),
             "srm_chi2_e6", "conv_chi2_e6",
         )
-        .orderBy("arm")
     )
 
 
@@ -1907,7 +1888,6 @@ def kfold_strata_audit(spark: SparkSession, sf_dir: str,
                 f" DIV (CAST({n_folds} AS DECIMAL(38,0)) * max(n_s))"
                 " AS BIGINT)").alias("chisq_e6"),
         )
-        .orderBy("lang", "source")
     )
 
 
@@ -2005,7 +1985,6 @@ def experiment_peeking_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_a", "n_b", "conv_a", "conv_b", "chi2_e6", "peek_sig",
             F.sum("peek_sig").over(wd).cast("long").alias("cum_sig_days"),
         )
-        .orderBy("day")
     )
 
 
@@ -2102,7 +2081,6 @@ def ab_cuped_adjustment(spark: SparkSession, sf_dir: str,
             F.floor(rho2 * F.lit(1e6) + F.lit(0.5)).cast("long")
             .alias("var_reduction_e6"),
         )
-        .orderBy("arm")
     )
 
 
@@ -2191,5 +2169,4 @@ def isotonic_calibration_pav(spark: SparkSession, sf_dir: str,
                   - F.col("iso_rate_e6")).cast("long")
             .alias("correction_e6"),
         )
-        .orderBy("bin")
     )

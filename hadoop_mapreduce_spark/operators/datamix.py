@@ -90,7 +90,6 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str,
             "contam_rate",
             F.round(F.col("n_contaminated") / F.col("n_train_docs"), 4),
         )
-        .orderBy("source")
     )
 
 
@@ -147,7 +146,6 @@ def decontaminate_fuzzy(spark: SparkSession, sf_dir: str,
             F.col("id2").alias("bench_id"),
             F.round("jaccard", 6).alias("jaccard"),
         )
-        .orderBy("train_id", "bench_id")
     )
 
 
@@ -188,7 +186,6 @@ def decontaminate_semantic(spark: SparkSession, sf_dir: str,
             F.col("small_id").alias("bench_id"),
             F.round("cosine", 6).alias("cosine"),
         )
-        .orderBy("train_id", "bench_id")
     )
 
 
@@ -229,7 +226,6 @@ def dsir_importance_sample(spark: SparkSession, sf_dir: str,
             F.sum((F.col("lw") > 0).cast("long")).alias("n_selected"),
             F.round(F.avg("lw"), 6).alias("avg_log_weight"),
         )
-        .orderBy("source")
     )
 
 
@@ -334,7 +330,6 @@ def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("top_token_frac"), 4).alias("avg_top_token_frac"),
             F.round(F.avg("distinct_frac"), 4).alias("avg_distinct_frac"),
         )
-        .orderBy("source")
     )
 
 
@@ -378,7 +373,6 @@ def domain_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(F.col("kept") == 1, F.col("n_chars"))
                   .otherwise(F.lit(0))).alias("sampled_chars"),
         )
-        .orderBy("source")
     )
 
 
@@ -417,7 +411,6 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("scale"), 6).alias("avg_scale"),
             F.round(F.avg("mse"), 8).alias("avg_mse"),
         )
-        .orderBy("label")
     )
 
 
@@ -451,7 +444,6 @@ def global_shuffle_order(spark: SparkSession, sf_dir: str,
         keyed.withColumn("pos", F.row_number().over(w).cast("long"))
         .where(F.col("pos") <= head)
         .select("shard", "pos", "doc_id")
-        .orderBy("shard", "pos")
     )
 
 
@@ -518,7 +510,6 @@ def shard_order_runs_audit(spark: SparkSession, sf_dir: str,
                    " DIV pairs ELSE NULL END AS BIGINT)")
             .alias("ratio_obs_exp_e6"),
         )
-        .orderBy("shard")
     )
 
 
@@ -567,7 +558,6 @@ def dup_ngram_rate(spark: SparkSession, sf_dir: str, n: int = 8) -> DataFrame:
         .join(short, "source", "left")
         .select("source", "n_docs", "avg_dup_rate", "n_mostly_dup",
                 F.coalesce("n_short", F.lit(0)).cast("long").alias("n_short"))
-        .orderBy("source")
     )
 
 
@@ -601,7 +591,6 @@ def sample_fixed_per_source(spark: SparkSession, sf_dir: str,
         )
         .where(F.col("rk") <= cap)
         .select("source", F.col("rk").cast("long").alias("rk"), "doc_id")
-        .orderBy("source", "rk")
     )
 
 
@@ -709,7 +698,6 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str, n: int = 4,
             "flag_rate",
             F.round(F.col("n_flagged_bloom") / F.col("n_train_docs"), 4),
         )
-        .orderBy("source")
     )
 
 
@@ -777,7 +765,6 @@ def jsd_lang_divergence(spark: SparkSession, sf_dir: str,
         folded.select(stack)
         .select("lang_a", "lang_b", F.round("jsd", 6).alias("jsd"),
                 F.col("n_union").cast("long").alias("n_union"))
-        .orderBy("lang_a", "lang_b")
     )
 
 
@@ -817,7 +804,6 @@ def mixture_temperature_weights(spark: SparkSession, sf_dir: str,
             F.round(weight, 6).alias("weight"),
             F.round(weight * budget, 2).alias("expected_docs"),
         )
-        .orderBy("source")
     )
 
 
@@ -863,7 +849,6 @@ def quantile_normalize_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "raw_min", "raw_p50", "raw_max",
                 F.col("n_above_cut").cast("long").alias("n_above_cut"),
                 "raw_cut_equiv")
-        .orderBy("source")
     )
 
 
@@ -904,7 +889,6 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str,
         .select("src_a", "src_b", "shared_grams",
                 (F.col("shared_grams") / F.least("na", "nb"))
                 .alias("overlap_frac"))
-        .orderBy("src_a", "src_b")
     )
 
 
@@ -985,7 +969,6 @@ def gopher_dup_ngrams(spark: SparkSession, sf_dir: str, n: int = 5,
                   .cast("long")).alias("n_flagged"),
             F.sum("frac_e6").alias("sum_dup_frac_e6"),
         )
-        .orderBy("source")
     )
 
 
@@ -1069,7 +1052,7 @@ def source_concentration_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return axis("source").unionByName(axis("lang")).orderBy("axis")
+    return axis("source").unionByName(axis("lang"))
 
 
 def token_budget_fill(spark: SparkSession, sf_dir: str,
@@ -1135,7 +1118,6 @@ def token_budget_fill(spark: SparkSession, sf_dir: str,
             F.col("n_docs_total").cast("long").alias("n_docs_total"),
             F.col("tokens_total").cast("long").alias("tokens_total"),
         )
-        .orderBy("source")
     )
 
 
@@ -1255,7 +1237,7 @@ def source_novelty_attribution(spark: SparkSession, sf_dir: str,
         F.expr("CASE WHEN distinct_grams > 0 THEN"
                " novel_grams * 1000000 div distinct_grams"
                " ELSE 0 END").alias("novelty_e6"),
-    ).orderBy("src_rank")
+    )
 
 
 def lang_source_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1311,7 +1293,7 @@ def lang_source_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
             "     * 1000000"
             " div (CAST(row_t AS DECIMAL(38,0)) * col_t * n) AS BIGINT)"
         ).alias("contrib_e6"),
-    ).orderBy("lang", "source")
+    )
 
 
 def ks_drift_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1385,7 +1367,6 @@ def ks_drift_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " abs(cum_src * n_rest - cum_rest * n_src) * 1000000"
                 " div (n_src * n_rest) ELSE 0 END")).alias("ks_e6"),
         )
-        .orderBy("source")
     )
 
 
@@ -1458,7 +1439,6 @@ def wasserstein_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " DIV (CAST(max(n_src) AS DECIMAL(38,0)) * max(n_rest))"
                 " ELSE 0 END AS BIGINT)").alias("w1_chars_e6"),
         )
-        .orderBy("source")
     )
 
 
@@ -1514,7 +1494,6 @@ def neyman_allocation_plan(spark: SparkSession, sf_dir: str,
                        THEN w_e6 * {n_total} DIV tot_w_e6
                        ELSE 0 END""").alias("n_alloc"),
         )
-        .orderBy("source")
     )
 
 
@@ -1580,7 +1559,6 @@ def lang_source_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(term_e6 DIV n_ls AS BIGINT)").alias("pmi_e6"),
             "mi_e6",
         )
-        .orderBy("lang", "source")
     )
 
 
@@ -1623,7 +1601,6 @@ def length_qq_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             r6(F.col("pair.qc")).alias("q_corpus"),
             r6(F.col("pair.qs") - F.col("pair.qc")).alias("drift"),
         )
-        .orderBy("source", "pct")
     )
 
 
@@ -1685,7 +1662,6 @@ def length_hill_tail_index(spark: SparkSession, sf_dir: str,
                         / F.col("sum_ln_e6") * F.lit(1e6) + F.lit(0.5))
                 / F.lit(1e6)).alias("hill_alpha"),
         )
-        .orderBy("source")
     )
 
 
@@ -1756,7 +1732,6 @@ def token_mass_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
                       THEN cum_tk * 1000000 DIV total_tk
                       ELSE 0 END""").alias("cum_share_e6"),
         )
-        .orderBy("source", "decile")
     )
 
 
@@ -1862,5 +1837,4 @@ def psi_source_drift(spark: SparkSession, sf_dir: str,
             .when(F.col("psi_e6") > 100_000, F.lit("MODERATE"))
             .otherwise(F.lit("STABLE")).alias("drift_flag"),
         )
-        .orderBy("source")
     )

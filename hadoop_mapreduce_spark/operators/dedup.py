@@ -73,7 +73,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(F.sha2(F.col("text"), 256).alias("content_hash"), "doc_id")
         .groupBy("content_hash")
         .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
-        .orderBy("keep_id")
     )
 
 
@@ -111,7 +110,7 @@ def hashed_shingle_rows_from_tokens(toks: DataFrame,
     # per-row cost — measured 0.52 -> 0.38 s for this stage at sf0.1.
     # The Generate (explode) stays as the projection barrier that keeps
     # the tokenizer out of the per-position expression (see
-    # shingle_rows' docstring for the CollapseProject trap).
+    # explode_ngrams' docstring in ngram.py for the re-tokenising trap).
     return toks.select(
         "id",
         "__t",
@@ -363,11 +362,11 @@ def minhash_pairs_unsorted(spark: SparkSession, sf_dir: str,
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str, threshold: float = 0.8) -> DataFrame:
-    """Near-duplicate pairs with verified Jaccard >= threshold, globally
-    sorted for presentation (see minhash_pairs_unsorted for the
+    """Near-duplicate pairs with verified Jaccard >= threshold, which the
+    registry sorts for presentation (see minhash_pairs_unsorted for the
     pipeline and its scale analysis).
 
-    The verified pairs are persisted before the global sort: orderBy's
+    The verified pairs are persisted before that global sort: orderBy's
     range-partitioning SAMPLING pass otherwise re-executes the whole
     verify plan a second time just to pick boundaries (measured ~0.3 s
     of pure re-execution at sf0.1; at scale it is a second pass over
@@ -378,8 +377,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str, threshold: float = 0.8) 
     the explained plan — persist kept deliberately.)"""
     from hadoop_mapreduce_spark.session import scoped_persist
 
-    return scoped_persist(minhash_pairs_unsorted(spark, sf_dir, threshold)) \
-        .orderBy("id1", "id2")
+    return scoped_persist(minhash_pairs_unsorted(spark, sf_dir, threshold))
 
 
 # --------------------------------------------------------------------------
@@ -443,7 +441,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return simhash_fingerprints(docs).select(
         F.col("id").alias("doc_id"), "simhash"
-    ).orderBy("doc_id")
+    )
 
 
 def simhash_hamming_pairs(docs: DataFrame, max_hamming: int = 3,
@@ -519,7 +517,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str, threshold: float = 0.8
     return (
         jac.where(F.col("jaccard") >= threshold)
         .select("id1", "id2", F.round("jaccard", 6).alias("jaccard"))
-        .orderBy("id1", "id2")
     )
 
 
@@ -694,7 +691,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str, threshold: float = 
     return (
         embedding_cosine_pairs(emb, threshold)
         .select("id1", "id2", F.round("cosine", 6).alias("cosine"))
-        .orderBy("id1", "id2")
     )
 
 
@@ -918,7 +914,6 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str, threshold: float = 0.4
         .mapInPandas(score_partition, "id1 long, id2 long, cosine double")
         .select("id1", "id2", F.round("cosine", 6).alias("cosine"))
         .distinct()  # a pair sharing k bands was scored k times
-        .orderBy("id1", "id2")
     )
 
 
@@ -1175,10 +1170,7 @@ def dedup_components_star(spark: SparkSession, sf_dir: str,
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     pairs = minhash_pairs_unsorted(spark, sf_dir, threshold=threshold).select("id1", "id2")
     out = connected_components_star(docs, pairs)
-    return (
-        out.select("doc_id", F.col("comp").cast("long").alias("component"))
-        .orderBy("doc_id")
-    )
+    return out.select("doc_id", F.col("comp").cast("long").alias("component"))
 
 
 def dedup_keep_best(spark: SparkSession, sf_dir: str,
@@ -1213,7 +1205,6 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str,
             F.max("n_chars").alias("keep_n_chars"),
         )
         .where(F.col("n_members") >= 2)
-        .orderBy("component")
     )
 
 
@@ -1295,7 +1286,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str,
         F.when(F.col("comp") != F.col("doc_id"), F.col("comp"))
         .cast("long").alias("match_id"),
     )
-    return ledger_idx.unionByName(ledger_batch).orderBy("doc_id")
+    return ledger_idx.unionByName(ledger_batch)
 
 
 def dedup_connected_components(spark: SparkSession, sf_dir: str,
@@ -1308,10 +1299,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str,
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     pairs = dedup_ngram_jaccard(spark, sf_dir, threshold=threshold).select("id1", "id2")
     out = connected_components_star(docs, pairs)
-    return (
-        out.select("doc_id", F.col("comp").cast("long").alias("component"))
-        .orderBy("doc_id")
-    )
+    return out.select("doc_id", F.col("comp").cast("long").alias("component"))
 
 
 def dedup_repeated_spans(spark: SparkSession, sf_dir: str,
@@ -1400,7 +1388,6 @@ def repeated_span_table(docs: DataFrame, k: int = 8) -> DataFrame:
             "doc_id", "span_start", "span_end",
             (F.col("span_end") - F.col("span_start") + 1).alias("span_tokens"),
         )
-        .orderBy("doc_id", "span_start")
     )
 
 
@@ -1477,7 +1464,6 @@ def dedup_span_chunks(spark: SparkSession, sf_dir: str,
                 ),
             )).alias("dedup_fp"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1561,7 +1547,6 @@ def pagerank_dedup_graph(spark: SparkSession, sf_dir: str,
         scored.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= k)
         .select("doc_id", "rank_e8", F.col("rk").cast("long").alias("rk"))
-        .orderBy("rk")
     )
 
 
@@ -1695,7 +1680,6 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str,
     return (
         verified.where(F.col("jaccard") >= threshold)
         .select("id1", "id2", F.round("jaccard", 6).alias("jaccard"))
-        .orderBy("id1", "id2")
     )
 
 
@@ -1732,7 +1716,6 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str,
             ((F.col("k") - 1) * F.col("n_clusters")).cast("long")
             .alias("docs_removed_if_keep_one"),
         )
-        .orderBy("cluster_size")
     )
 
 
@@ -1813,7 +1796,6 @@ def minhash_accuracy_audit(spark: SparkSession, sf_dir: str,
             F.sum((F.col("inter") * 5 >= F.col("uni") * 4)
                   .cast("long")).alias("n_exact_pos"),
         )
-        .orderBy("err_decile")
     )
 
 
@@ -1935,7 +1917,6 @@ def lsh_band_tuning(spark: SparkSession, sf_dir: str,
                 "CASE bands WHEN 8 THEN q8 WHEN 16 THEN q16"
                 " WHEN 32 THEN q32 ELSE q64 END"), 6).alias("p_detect"),
         )
-        .orderBy("bands", "jbucket")
     )
 
 
@@ -1992,7 +1973,6 @@ def neardup_label_conflict(spark: SparkSession, sf_dir: str,
             "majority_lang",
             (F.col("n_langs") > 1).cast("long").alias("lang_conflict"),
         )
-        .orderBy("component")
     )
 
 
@@ -2040,7 +2020,6 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str,
             F.coalesce(F.col("n_docs"), F.lit(0)).cast("long")
             .alias("n_docs_touched"),
         )
-        .orderBy("threshold_pct")
     )
 
 
@@ -2067,7 +2046,6 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str,
                           F.count(F.lit(1)).over(wc).cast("long"))
         .select(F.col("v").alias("doc_id"),
                 F.col("lbl").alias("community"), "community_size")
-        .orderBy("doc_id")
     )
 
 
@@ -2119,7 +2097,6 @@ def dedup_chain_audit(spark: SparkSession, sf_dir: str,
             (F.expr("n_edges * 2 < size * (size - 1)"))
             .alias("chained"),
         )
-        .orderBy("component")
     )
 
 
@@ -2167,7 +2144,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str,
             F.col("n_big").cast("long").alias("n_big"),
             F.expr("c * 1000000 DIV n_small").alias("containment_e6"),
         )
-        .orderBy("id_small", "id_big")
     )
 
 
@@ -2229,7 +2205,6 @@ def cross_source_duplication_matrix(spark: SparkSession, sf_dir: str,
                       ELSE n_pairs * 1000000 DIV (docs_a * docs_b)
                       END""").alias("dup_rate_e6"),
         )
-        .orderBy("src_a", "src_b")
     )
 
 
@@ -2381,7 +2356,7 @@ def dedup_shingle_size_sweep(spark: SparkSession, sf_dir: str,
     out = outs[0]
     for o in outs[1:]:
         out = out.unionAll(o)
-    return out.orderBy("shingle_k")
+    return out
 
 
 def dedup_containment_prefix(spark: SparkSession, sf_dir: str,
@@ -2461,7 +2436,6 @@ def dedup_containment_prefix(spark: SparkSession, sf_dir: str,
             F.col("n_big").cast("long").alias("n_big"),
             F.expr("c * 1000000 DIV n_small").alias("containment_e6"),
         )
-        .orderBy("id_small", "id_big")
     )
 
 
@@ -2513,7 +2487,7 @@ def hash_width_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = rows[0]
     for r in rows[1:]:
         out = out.unionByName(r)
-    return out.orderBy(F.desc("bits"))
+    return out
 
 
 def _dup_edges(spark: SparkSession, sf_dir: str, threshold: float):
@@ -2654,7 +2628,7 @@ def kcore_dedup_graph(spark: SparkSession, sf_dir: str,
                 .join(keep, e["id2"] == keep["v"], "left_semi")
                 .localCheckpoint(eager=False)
             )
-    return rows.orderBy("k", "peel_round")
+    return rows
 
 
 def dedup_token_savings(spark: SparkSession, sf_dir: str,
@@ -2714,7 +2688,6 @@ def dedup_token_savings(spark: SparkSession, sf_dir: str,
                    " dropped_tokens * 1000000 DIV total_tokens"
                    " ELSE 0 END").cast("long").alias("token_savings_e6"),
         )
-        .orderBy("source")
     )
 
 
@@ -2799,8 +2772,7 @@ def graph_modularity_audit(spark: SparkSession, sf_dir: str,
                     "q_e6")
         )
 
-    return q_row(cc, "cc_star").unionAll(q_row(labels, "lpa_4")) \
-        .orderBy("method")
+    return q_row(cc, "cc_star").unionAll(q_row(labels, "lpa_4"))
 
 
 def graph_rich_club(spark: SparkSession, sf_dir: str,
@@ -2855,5 +2827,4 @@ def graph_rich_club(spark: SparkSession, sf_dir: str,
                    " DIV (n_k * (n_k - 1)) END").cast("long")
             .alias("phi_e6"),
         )
-        .orderBy("k")
     )

@@ -96,7 +96,6 @@ def zorder_layout(spark: SparkSession, sf_dir: str,
         )
         .select(F.col("file_id").cast("long").alias("file_id"),
                 "n_rows", "min_x", "max_x", "min_y", "max_y")
-        .orderBy("file_id")
     )
 
 
@@ -210,7 +209,6 @@ def zone_map_skipping_audit(spark: SparkSession, sf_dir: str,
             F.expr("CAST(sum(skip) * 1000000 DIV count(*) AS BIGINT)")
             .alias("skip_frac_e6"),
         )
-        .orderBy("layout", "probe_id")
     )
 
 
@@ -267,7 +265,6 @@ def shard_layout_plan(spark, sf_dir: str, n_shards: int = 4) -> DataFrame:
         .groupBy("__g")
         .applyInPandas(lpt, schema="source string, tokens long,"
                        " n_docs long, shard_id long, shard_load_after long")
-        .orderBy("source")
     )
 
 
@@ -335,7 +332,6 @@ def encoding_dictionary_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.lit("DICT")).otherwise(F.lit("PLAIN"))
             .alias("recommend"),
         )
-        .orderBy("col_name")
     )
 
 
@@ -396,5 +392,4 @@ def rle_run_length_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("n_distinct * 1000000 DIV n_runs").cast("long")
             .alias("sorted_runs_ratio_e6"),
         )
-        .orderBy("col_name")
     )

@@ -274,7 +274,7 @@ def decode_batches(blobs: DataFrame) -> DataFrame:
 
 
 def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver query: real image blobs → REAL header decode, ordered.
+    """Registered query: real image blobs → REAL header decode.
 
     The blobs are valid BMP/PNG/GIF files synthesised from each document
     (with_image_payload); the output is what parse_image_header reads
@@ -288,24 +288,21 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         decode_batches(with_image_payload(docs))
         .select("doc_id", "format", "width", "height", "n_frames")
-        .orderBy("doc_id")
     )
 
 
 def frame_sample(spark: SparkSession, sf_dir: str, every: int = 2) -> DataFrame:
-    """Frame sampling pattern: explode decoded frame indices, keep every
-    k-th — the shape of video-frame extraction, driven by the REAL
-    per-blob frame counts (GIFs in the fixture carry 1-5 frames)."""
-    decoded = multimodal_decode(spark, sf_dir)
-    return (
-        decoded.select(
-            "doc_id",
-            F.explode(F.sequence(F.lit(0), F.col("n_frames") - 1)).alias("frame_idx"),
-        )
-        .where(F.col("frame_idx") % every == 0)
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_sampled"))
-        .orderBy("doc_id")
+    """Frame sampling pattern: keep every k-th decoded frame index — the
+    shape of video-frame extraction, driven by the REAL per-blob frame
+    counts (GIFs in the fixture carry 1-5 frames). Decode emits one row
+    per doc, so the kept indices are counted within the row: no
+    shuffle."""
+    frames = F.sequence(F.lit(0), F.col("n_frames") - 1)
+    kept = F.size(F.filter(frames, lambda i: i % every == 0))
+    return multimodal_decode(spark, sf_dir).select(
+        "doc_id",
+        # coalesce keeps n_sampled non-nullable (n_frames is never NULL)
+        F.coalesce(kept, F.lit(0)).cast("long").alias("n_sampled"),
     )
 
 
@@ -342,7 +339,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str, max_side: int = 32) -> D
             })
 
     out_schema = "doc_id long, width long, height long, new_width long, new_height long"
-    return decoded.mapInPandas(resize, out_schema).orderBy("doc_id")
+    return decoded.mapInPandas(resize, out_schema)
 
 
 def multimodal_features(spark: SparkSession, sf_dir: str, dim: int = 8) -> DataFrame:
@@ -370,7 +367,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str, dim: int = 8) -> DataF
     return out.select(
         "doc_id", F.size("features").cast("long").alias("dim"),
         F.round("feat_norm", 6).alias("feat_norm"),
-    ).orderBy("doc_id")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -481,7 +478,7 @@ def audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "sample_rate", "channels", "bits", "n_samples",
         F.round(F.col("n_samples") * 1000.0 / F.col("sample_rate"), 3)
         .alias("duration_ms"),
-    ).orderBy("doc_id")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -574,7 +571,6 @@ def image_dhash_neardup(spark: SparkSession, sf_dir: str,
     return (
         pairs.select("doc_a", "doc_b", ham.cast("long").alias("hamming"))
         .where(F.col("hamming") <= max_hamming)
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -715,4 +711,4 @@ def video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decoded.select(
         "doc_id", "timescale", "duration", "n_tracks", "width", "height",
         F.expr("duration * 1000 DIV timescale").alias("duration_ms"),
-    ).orderBy("doc_id")
+    )

@@ -136,7 +136,6 @@ def pipeline_pretrain(spark: SparkSession, sf_dir: str,
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_tok").cast("long").alias("total_tokens"),
         )
-        .orderBy("split")
     )
 
 
@@ -187,7 +186,6 @@ def pipeline_curation(spark: SparkSession, sf_dir: str,
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_tok").cast("long").alias("total_tokens"),
         )
-        .orderBy("source")
     )
 
 
@@ -316,7 +314,6 @@ def pipeline_pretrain_scale(spark: SparkSession, sf_dir: str,
             F.coalesce("final_tokens", F.lit(0)).cast("long")
             .alias("final_tokens"),
         )
-        .orderBy("source")
     )
 
 
@@ -451,7 +448,6 @@ def pipeline_target_select(spark: SparkSession, sf_dir: str,
             F.sum(F.col("is_dup").cast("long")).alias("n_dup_dropped"),
             F.sum(F.col("is_sel").cast("long")).alias("n_selected"),
         )
-        .orderBy("source")
     )
 
 
@@ -522,5 +518,4 @@ def dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
             "top_lang",
             F.col("top_lang_docs").cast("long").alias("top_lang_docs"),
         )
-        .orderBy("source")
     )

@@ -64,7 +64,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM {lineitem}
         WHERE l_shipdate <= '2000-09-02'
         GROUP BY l_returnflag, l_linestatus
-        ORDER BY l_returnflag, l_linestatus
     """, "lineitem")
 
 
@@ -113,7 +112,6 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE o.o_orderdate >= '1996-01-01' AND o.o_orderdate < '1998-01-01'
           AND r.r_name = 'ASIA'
         GROUP BY n_name
-        ORDER BY revenue DESC, n_name ASC
     """, "customer", "orders", "lineitem", "supplier", "nation", "region")
 
 
@@ -168,7 +166,6 @@ def filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.col("p_name").isNotNull()
         )
         .select("p_partkey", "p_name", "p_brand", "p_type", F.col("p_size").cast("long").alias("p_size"))
-        .orderBy("p_partkey")
     )
 
 
@@ -192,12 +189,6 @@ def project_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("l_shipdate").cast("long").alias("ship_year"),
         )
         .where(F.col("ship_year") == 1999)
-        # (l_orderkey, l_linenumber) is NOT unique in the synthetic
-        # fixture (TPC-H-ish, not TPC-H) — order by every varying output
-        # column so the emitted order is total up to identical rows
-        # (tools/order_audit.py flagged the 2-column key as tied).
-        .orderBy("l_orderkey", "l_linenumber", "net_charge", "disc_band",
-                 "flag_status")
     )
 
 
@@ -214,7 +205,7 @@ def string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.split(F.col("p_name"), " ").getItem(0).alias("first_word"),
         F.lpad(F.col("p_partkey").cast("string"), 8, "0").alias("key_padded"),
         F.replace(F.col("p_type"), F.lit(" "), F.lit("_")).alias("type_snake"),
-    ).orderBy("p_partkey")
+    )
 
 
 def date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -230,7 +221,7 @@ def date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(F.lit("2002-01-01").cast("date"), F.col("o_orderdate").cast("date")).cast("long").alias("days_to_2002"),
         F.last_day(F.col("o_orderdate")).cast("string").alias("month_end"),
         F.date_format("o_orderdate", "yyyy-MM").alias("ym"),
-    ).orderBy("o_orderkey")
+    )
 
 
 def math_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -246,10 +237,7 @@ def math_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor("l_quantity").alias("qty_floor"),
         F.round(F.pow(F.col("l_discount"), 2), 6).alias("disc_sq"),
         F.pmod(F.col("l_orderkey"), 7).alias("key_mod7"),
-        # non-unique fixture key → full-column tie-breakers (see
-        # project_compute / tools/order_audit.py)
-    ).orderBy("l_orderkey", "l_linenumber", "abs_dev", "qty_sqrt",
-              "price_ln", "disc_sq")
+    )
 
 
 def array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -266,7 +254,7 @@ def array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.array_max(vec), 6).alias("vec_max"),
         F.round(F.array_min(vec), 6).alias("vec_min"),
         F.size(F.filter(vec, lambda x: x > 0)).cast("long").alias("n_pos"),
-    ).orderBy("vec_id")
+    )
 
 
 def json_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -282,7 +270,6 @@ def json_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("k").cast("long").alias("min_k"),
             F.max("k").cast("long").alias("max_k"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -300,7 +287,6 @@ def join_broadcast_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(region, nation.n_regionkey == region.r_regionkey)
         .groupBy("r_name", "n_name")
         .agg(F.count(F.lit(1)).alias("n_customers"), F.round(F.sum("c_acctbal"), 2).alias("total_bal"))
-        .orderBy("r_name", "n_name")
     )
 
 
@@ -312,7 +298,6 @@ def join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
         .groupBy("c_custkey", "c_name")
         .agg(F.count("o_orderkey").alias("n_orders"))
-        .orderBy("c_custkey")
     )
 
 
@@ -327,7 +312,6 @@ def join_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust.join(high, cust.c_custkey == high.o_custkey, "left_semi")
         .join(fstat, cust.c_custkey == fstat.o_custkey, "left_anti")
         .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
     )
 
 
@@ -335,7 +319,7 @@ def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross join of two tiny dims (both broadcast — no shuffle at all)."""
     region = load_table(spark, sf_dir, "region").select("r_name")
     seg = load_table(spark, sf_dir, "customer").select("c_mktsegment").distinct()
-    return region.crossJoin(F.broadcast(seg)).orderBy("r_name", "c_mktsegment")
+    return region.crossJoin(F.broadcast(seg))
 
 
 def join_range_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -354,7 +338,6 @@ def join_range_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("o_orderstatus")
         .agg(F.count(F.lit(1)).alias("n_fast_ship"))
-        .orderBy("o_orderstatus")
     )
 
 
@@ -381,7 +364,6 @@ def join_self_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("a.user_id").alias("user_id"))
         .agg(F.count(F.lit(1)).alias("n_pairs"))
-        .orderBy("user_id")
     )
 
 
@@ -401,7 +383,6 @@ def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.min("o_totalprice"), 2).alias("min_price"),
             F.round(F.max("o_totalprice"), 2).alias("max_price"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -416,7 +397,6 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         joined.rollup("r_name", "n_name")
         .agg(F.count(F.lit(1)).alias("n_cust"), F.round(F.sum("c_acctbal"), 2).alias("bal"))
-        .orderBy(F.asc_nulls_first("r_name"), F.asc_nulls_first("n_name"))
     )
 
 
@@ -426,7 +406,6 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.cube("l_returnflag", "l_linestatus")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("l_quantity"), 2).alias("qty"))
-        .orderBy(F.asc_nulls_first("l_returnflag"), F.asc_nulls_first("l_linestatus"))
     )
 
 
@@ -437,7 +416,6 @@ def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.groupBy("l_suppkey")
         .agg(F.count(F.lit(1)).alias("n_items"), F.round(F.sum("l_extendedprice"), 2).alias("volume"))
         .where(F.col("n_items") > 500)
-        .orderBy("l_suppkey")
     )
 
 
@@ -450,7 +428,6 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ev.groupBy("event_type")
         .agg(F.approx_count_distinct("user_id", 0.01).alias("approx_users"))
-        .orderBy("event_type")
     )
 
 
@@ -468,7 +445,6 @@ def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= 3)
         .select("o_custkey", "o_orderkey", "o_totalprice", F.col("rn").cast("long").alias("rn"))
-        .orderBy("o_custkey", "rn")
     )
 
 
@@ -482,7 +458,7 @@ def window_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.rank().over(w).cast("long").alias("rnk"),
         F.dense_rank().over(w).cast("long").alias("drnk"),
         F.row_number().over(w).cast("long").alias("rn"),
-    ).orderBy("s_suppkey")
+    )
 
 
 def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -497,7 +473,7 @@ def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         "o_orderkey",
         F.round(F.sum("o_totalprice").over(w), 2).alias("running_total"),
-    ).orderBy("o_custkey", "o_orderkey")
+    )
 
 
 def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -510,7 +486,7 @@ def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("value", 1).over(w).alias("prev_value"),
         F.lead("value", 1).over(w).alias("next_value"),
         F.round(F.col("value") - F.lag("value", 1).over(w), 2).alias("delta"),
-    ).orderBy("user_id", "event_id")
+    )
 
 
 def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -524,7 +500,7 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         "o_orderkey",
         F.count(F.lit(1)).over(w).alias("orders_within_30d"),
-    ).orderBy("o_custkey", "o_orderkey")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -551,7 +527,7 @@ def set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
     p_cust = o.where(F.col("o_orderstatus") == "P").select("o_custkey")
     both = f_cust.intersect(o_cust)
     only_fo = both.exceptAll(p_cust.distinct()).distinct()
-    return only_fo.withColumnRenamed("o_custkey", "custkey").orderBy("custkey")
+    return only_fo.withColumnRenamed("o_custkey", "custkey")
 
 
 def union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -572,7 +548,6 @@ def union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust.unionByName(supp)
         .groupBy("kind", "nationkey")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("acctbal"), 2).alias("bal"))
-        .orderBy("kind", "nationkey")
     )
 
 
@@ -582,7 +557,6 @@ def distinct_dedup_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.select("l_returnflag", "l_linestatus")
         .dropDuplicates()
-        .orderBy("l_returnflag", "l_linestatus")
     )
 
 
@@ -613,7 +587,6 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         exists.groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
     )
 
 
@@ -648,7 +621,6 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         pair.groupBy("supp_nation", "cust_nation", F.year("l_shipdate").cast("long").alias("l_year"))
         .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
 
@@ -696,7 +668,6 @@ def q12_shipping_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("is_high").alias("high_line_count"),
             F.sum(1 - F.col("is_high")).alias("low_line_count"),
         )
-        .orderBy("lag_band")
     )
 
 
@@ -751,7 +722,6 @@ def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
         no_orders.groupBy("c_nationkey")
         .agg(F.count(F.lit(1)).alias("numcust"), F.round(F.sum("c_acctbal"), 2).alias("totacctbal"))
         .select(F.col("c_nationkey").cast("long").alias("c_nationkey"), "numcust", "totacctbal")
-        .orderBy("c_nationkey")
     )
 
 
@@ -775,7 +745,6 @@ def pivot_status_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_mktsegment",
             F.col("F").alias("n_f"), F.col("O").alias("n_o"), F.col("P").alias("n_p"),
         )
-        .orderBy("c_mktsegment")
     )
 
 
@@ -793,7 +762,6 @@ def grouping_sets_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("l_extendedprice"), 2).alias("volume"),
         )
-        .orderBy(F.asc_nulls_first("l_returnflag"), F.asc_nulls_first("l_linestatus"), "gid")
     )
 
 
@@ -815,7 +783,6 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("n_cust"), F.lit(0)).alias("n_cust"),
             F.coalesce(F.col("n_supp"), F.lit(0)).alias("n_supp"),
         )
-        .orderBy("nationkey")
     )
 
 
@@ -834,7 +801,6 @@ def correlated_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
         # summation orders round apart. The filter uses the full-precision
         # value; the selected columns are exact.
         .select("o_orderkey", "o_custkey", "o_totalprice")
-        .orderBy("o_orderkey")
     )
 
 
@@ -853,7 +819,6 @@ def stats_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.round(F.corr("l_extendedprice", "l_quantity"), 6) + F.lit(0.0)).alias("price_qty_corr"),
             (F.round(F.covar_samp("l_discount", "l_tax"), 6) + F.lit(0.0)).alias("disc_tax_covar"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -870,7 +835,6 @@ def percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.expr("percentile(o_totalprice, 0.5)"), 4).alias("median"),
             F.round(F.expr("percentile(o_totalprice, 0.75)"), 4).alias("p75"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -969,7 +933,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(
             F.sum(F.when(F.col("supp_nation") == "NATION_3", F.col("volume")).otherwise(0.0))
             / F.sum("volume"), 6).alias("mkt_share"))
-        .orderBy("o_year")
     )
 
 
@@ -995,7 +958,6 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("n_name").alias("nation"),
                  F.year("o_orderdate").cast("long").alias("o_year"))
         .agg(F.round(F.sum(profit), 2).alias("profit"))
-        .orderBy("nation", "o_year")
     )
 
 
@@ -1025,7 +987,6 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         val.crossJoin(F.broadcast(threshold))
         .where(F.col("value") > F.col("cutoff"))
         .select(F.col("l_partkey").alias("p_partkey"), F.round("value", 2).alias("value"))
-        .orderBy(F.desc("value"), F.asc("p_partkey"))
     )
 
 
@@ -1044,7 +1005,6 @@ def q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per_cust.groupBy("c_count")
         .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
     )
 
 
@@ -1067,7 +1027,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("total_revenue") == F.col("mx"))
         .join(F.broadcast(supp), F.col("supplier_no") == supp.s_suppkey)
         .select("s_suppkey", "s_name", "total_revenue")
-        .orderBy("s_suppkey")
     )
 
 
@@ -1081,7 +1040,6 @@ def q16_supplier_part_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(part, li.l_partkey == part.p_partkey)
         .groupBy("p_brand", "p_type", F.col("p_size").cast("long").alias("p_size"))
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
     )
 
 
@@ -1125,7 +1083,6 @@ def q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         supp.join(shipped, supp.s_suppkey == shipped.l_suppkey, "left_semi")
         .join(nation, supp.s_nationkey == nation.n_nationkey)
         .select("s_suppkey", "s_name", "n_name")
-        .orderBy("s_suppkey")
     )
 
 
@@ -1178,7 +1135,6 @@ def approx_percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.percentile_approx("o_totalprice", 0.5, 1000).alias("median"),
             F.percentile_approx("o_totalprice", 0.75, 1000).alias("p75"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -1194,7 +1150,6 @@ def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.cume_dist().over(w), 6).alias("cume"),
             F.ntile(4).over(w).cast("long").alias("quartile"),
         )
-        .orderBy("o_orderkey")
     )
 
 
@@ -1213,7 +1168,6 @@ def json_from_json_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("p.k").cast("long").alias("k"),
             F.col("p").isNotNull().cast("int").cast("long").alias("valid"),
         )
-        .orderBy("event_id")
     )
 
 
@@ -1229,7 +1183,6 @@ def sample_seeded(spark: SparkSession, sf_dir: str, fraction: float = 0.1,
     return (
         orders.sample(fraction=fraction, seed=seed)
         .select("o_orderkey", "o_custkey", "o_totalprice")
-        .orderBy("o_orderkey")
     )
 
 
@@ -1244,7 +1197,6 @@ def sample_stratified(spark: SparkSession, sf_dir: str, seed: int = 42) -> DataF
         orders.sampleBy("o_orderstatus", fractions, seed=seed)
         .groupBy("o_orderstatus")
         .agg(F.count(F.lit(1)).alias("n_sampled"))
-        .orderBy("o_orderstatus")
     )
 
 
@@ -1260,7 +1212,6 @@ def array_explode_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("vec_id", F.col("pos").cast("long").alias("pos"),
                 F.round("val", 6).alias("val"))
-        .orderBy("vec_id", "pos")
     )
 
 
@@ -1277,7 +1228,6 @@ def string_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             lev.cast("long").alias("lev_name_type"),
             F.round(1 - lev / maxlen, 6).alias("name_type_sim"),
         )
-        .orderBy("p_partkey")
     )
 
 
@@ -1294,7 +1244,6 @@ def mode_median_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("mode_nation"),
             F.round(F.median("c_acctbal"), 2).alias("median_bal"),
         )
-        .orderBy("c_mktsegment")
     )
 
 
@@ -1328,7 +1277,6 @@ def try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("priority_num").cast("double"), 2)
             .alias("avg_priority_num"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -1367,7 +1315,6 @@ def histogram_equidepth(spark: SparkSession, sf_dir: str,
             F.round(F.min("o_totalprice"), 2).alias("lo"),
             F.round(F.max("o_totalprice"), 2).alias("hi"),
         )
-        .orderBy("bucket")
     )
 
 
@@ -1449,7 +1396,6 @@ def quantile_histogram_portable(spark: SparkSession, sf_dir: str,
             F.col("cum").cast("long").alias("cum_count"),
             F.col("n").cast("long").alias("n_total"),
         )
-        .orderBy("o_orderstatus", "q")
     )
 
 
@@ -1512,7 +1458,6 @@ def customer_rfm_segments(spark, sf_dir: str) -> DataFrame:
             F.col("n_customers").cast("long").alias("n_customers"),
             F.expr("sc div n_customers").alias("mean_spend_cents"),
         )
-        .orderBy("r_score", "f_score", "m_score")
     )
 
 
@@ -1567,7 +1512,6 @@ def orders_cohort_ltv(spark, sf_dir: str) -> DataFrame:
             F.sum("spend_cents").over(w).cast("long")
             .alias("cum_spend_cents"),
         )
-        .orderBy("cohort_year", "cohort_month0", "k")
     )
 
 
@@ -1639,7 +1583,6 @@ def orders_abc_pareto(spark, sf_dir: str) -> DataFrame:
             F.min("rnk").cast("long").alias("first_rank"),
             F.max("rnk").cast("long").alias("last_rank"),
         )
-        .orderBy("abc_class")
     )
 
 
@@ -1683,7 +1626,6 @@ def orders_interarrival_profile(spark, sf_dir: str) -> DataFrame:
                    "CAST(sum(gap) * 1000000 DIV count(gap) AS BIGINT) "
                    "END").alias("mean_gap_micro_days"),
         )
-        .orderBy("o_custkey")
     )
 
 
@@ -1720,7 +1662,6 @@ def order_status_flow(spark, sf_dir: str) -> DataFrame:
             "from_status", "to_status", "n",
             F.expr("n * 1000000 DIV from_total").alias("p_e6"),
         )
-        .orderBy("from_status", "to_status")
     )
 
 
@@ -1780,7 +1721,6 @@ def skyline_quality_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (scored["distinct_tokens"] == F.col("fy")),
         )
         .select("doc_id", "source", "n_chars", "distinct_tokens")
-        .orderBy(F.col("n_chars").desc(), "doc_id")
     )
 
 
@@ -1939,7 +1879,7 @@ def customer_entity_blocking(spark: SparkSession, sf_dir: str,
         .where((F.col("name_lev") >= 0)
                & (F.col("name_lev") <= max_lev))
     )
-    return pairs.orderBy("nationkey", "mktsegment", "id1", "id2")
+    return pairs
 
 
 def fellegi_sunter_weights(spark: SparkSession, sf_dir: str,
@@ -2034,7 +1974,6 @@ def fellegi_sunter_weights(spark: SparkSession, sf_dir: str,
                     * F.lit(1e6) + F.lit(0.5)).cast("long")
             .alias("w_disagree_e6"),
         )
-        .orderBy("field")
     )
 
 
@@ -2154,7 +2093,7 @@ def supply_bipartite_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
          .agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
          .select(F.lit("supplier").alias("side"),
                  F.col("d").cast("long").alias("degree"), "n_nodes"))
-    return p.unionAll(s).orderBy("side", "degree")
+    return p.unionAll(s)
 
 
 def algebraic_merge_audit(spark, sf_dir: str):
@@ -2215,7 +2154,6 @@ def algebraic_merge_audit(spark, sf_dir: str):
         stats(partials)
         .unionByName(stats(merged))
         .unionByName(stats(direct))
-        .orderBy("source")
     )
 
 
@@ -2302,7 +2240,6 @@ def er_survivorship_golden(spark: SparkSession, sf_dir: str,
             "n_members", "n_distinct_names", "surviving_name",
             "surviving_bal_cents", "nationkey", "mktsegment",
         )
-        .orderBy("golden_custkey")
     )
 
 
@@ -2374,5 +2311,4 @@ def bloom_join_prefilter_audit(spark: SparkSession, sf_dir: str,
                    " DIV n_probe_rows").cast("long")
             .alias("scan_reduction_e6"),
         )
-        .orderBy("o_orderpriority")
     )

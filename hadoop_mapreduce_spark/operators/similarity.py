@@ -294,7 +294,6 @@ def knn_join_lsh(spark: SparkSession, sf_dir: str, k: int = 5,
         .where(F.col("rank") <= k)
         .select("qid", "nid", F.round("score", 6).alias("score"),
                 F.col("rank").cast("long").alias("rank"))
-        .orderBy("qid", "rank")
     )
 
 
@@ -421,7 +420,6 @@ def embedding_kmeans_stats(spark: SparkSession, sf_dir: str,
             .alias("avg_cohesion_e6"),
             F.min("c").cast("long").alias("min_cohesion_e6"),
         )
-        .orderBy("cluster")
     )
 
 
@@ -440,7 +438,6 @@ def embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("nrm"), 6).alias("avg_norm"),
             F.round(F.max("sq"), 6).alias("max_sq_norm"),
         )
-        .orderBy("label")
     )
 
 
@@ -579,7 +576,6 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str, n_queries: int = 5,
         .where(F.col("rank") <= k)
         .select("qid", "nid", F.round("adist", 6).alias("approx_dist"),
                 F.col("rank").cast("long").alias("rank"))
-        .orderBy("qid", "rank")
     )
 
 
@@ -620,7 +616,6 @@ def ann_pq_rerank(spark: SparkSession, sf_dir: str, n_queries: int = 5,
         .where(F.col("rank") <= k)
         .select("qid", "nid", F.round("d2", 6).alias("dist"),
                 F.col("rank").cast("long").alias("rank"))
-        .orderBy("qid", "rank")
     )
 
 
@@ -731,7 +726,6 @@ def ann_ivfpq_rerank(spark: SparkSession, sf_dir: str, n_queries: int = 5,
         .where(F.col("rank") <= k)
         .select("qid", "nid", F.round("d2", 6).alias("dist"),
                 F.col("rank").cast("long").alias("rank"))
-        .orderBy("qid", "rank")
     )
 
 
@@ -778,7 +772,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str,
         .select("qid", "nid", "neg_label",
                 F.round("score", 6).alias("score"),
                 F.col("rank").cast("long").alias("rank"))
-        .orderBy("qid", "rank")
     )
 
 
@@ -862,7 +855,6 @@ def semdedup_ivf(spark: SparkSession, sf_dir: str, tau: float = 0.5,
         members.groupBy("list_id")
         .applyInPandas(greedy, "vec_id long, list_id long, kept boolean, "
                                "witness_id long, max_cos_kept_e6 long")
-        .orderBy("vec_id")
     )
 
 
@@ -957,7 +949,6 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str,
             .alias("relevance_e6"),
             F.expr("CAST(round(mmr * 1e6) AS BIGINT)").alias("mmr_e6"),
             "rank")
-        .orderBy("qid", "rank")
     )
 
 
@@ -999,7 +990,6 @@ def ann_dim_truncation_audit(spark: SparkSession, sf_dir: str,
             F.size(F.array_intersect("set_full", "set_trunc"))
             .cast("long").alias("overlap_at_k"),
         )
-        .orderBy("qid")
     )
 
 
@@ -1102,7 +1092,6 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str,
                 F.round("total_var", 8).alias("total_var"),
                 F.round(F.col("eigval") / F.col("total_var"), 8)
                 .alias("explained_frac"))
-        .orderBy("dim")
     )
 
 
@@ -1144,7 +1133,6 @@ def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("dim").cast("long").alias("dim"), "n", "mean_e6",
                 "min_x", "max_x", "n_zero")
-        .orderBy("dim")
     )
 
 
@@ -1215,7 +1203,6 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cos, 6).alias("cos_to_global"),
             F.round(norm, 6).alias("centroid_norm"),
         )
-        .orderBy("label")
     )
 
 
@@ -1283,7 +1270,6 @@ def embedding_outlier_scores(spark: SparkSession, sf_dir: str,
     return (
         top.withColumn("rank", F.row_number().over(w).cast("long"))
         .select("rank", "vec_id", "label", "score_e6")
-        .orderBy("rank")
     )
 
 
@@ -1347,7 +1333,6 @@ def embedding_anisotropy_audit(spark: SparkSession, sf_dir: str,
         .select("bin", "n", "sum_cos_e6",
                 F.col("n_pairs").cast("long").alias("n_pairs"),
                 "mean_cos_e6")
-        .orderBy("bin")
     )
 
 
@@ -1486,7 +1471,6 @@ def retrieval_label_precision(spark: SparkSession, sf_dir: str,
             F.expr("hits_at_5 * 1000000 DIV 5").alias("p_at_5_e6"),
             F.expr(f"hits_at_10 * 1000000 DIV {k}").alias("p_at_10_e6"),
         )
-        .orderBy("qid")
     )
 
 
@@ -1548,7 +1532,6 @@ def embedding_quant_sqnr(spark: SparkSession, sf_dir: str) -> DataFrame:
         per.select(F.col("dim").cast("long").alias("dim"),
                    "n", "signal_e12", "noise_e12",
                    sqnr.alias("sqnr_db"))
-        .orderBy("dim")
     )
 
 
@@ -1639,5 +1622,4 @@ def embedding_jl_distortion_audit(spark: SparkSession,
             F.expr("CAST(sum(ratio_e6) DIV count(*) AS BIGINT)")
             .alias("mean_ratio_e6"),
         )
-        .orderBy("bin")
     )

@@ -151,7 +151,7 @@ def salted_aggregate_events(spark: SparkSession, sf_dir: str,
         },
         n_salts=n_salts,
     )
-    return out.orderBy("event_type")
+    return out
 
 
 def join_skew_audit(spark, sf_dir: str, n_parts: int = 32) -> DataFrame:
@@ -199,10 +199,7 @@ def join_skew_audit(spark, sf_dir: str, n_parts: int = 32) -> DataFrame:
             F.col("max_key_rows").cast("long").alias("max_key_rows"),
         )
 
-    return (
-        axis("event_type").unionByName(axis("user_id"))
-        .orderBy("axis", "partition_id")
-    )
+    return axis("event_type").unionByName(axis("user_id"))
 
 
 def join_cardinality_audit(spark, sf_dir: str) -> DataFrame:
@@ -270,7 +267,7 @@ def join_cardinality_audit(spark, sf_dir: str) -> DataFrame:
         .unionByName(audit("events_orders", events, "user_id",
                            orders, "o_custkey"))
     )
-    return out.orderBy("join_name")
+    return out
 
 
 def partition_skew_plan(spark, sf_dir: str, n_parts: int = 32):
@@ -319,7 +316,6 @@ def partition_skew_plan(spark, sf_dir: str, n_parts: int = 32):
             F.expr("CAST(mx DIV total_rows AS BIGINT)")
             .alias("max_load_factor_e6"),
         )
-        .orderBy("bucket")
     )
 
 
@@ -444,5 +440,4 @@ def consistent_hash_migration_audit(spark, sf_dir: str,
             F.expr("CAST(mod_moved * 1000000 DIV n_keys_total AS BIGINT)")
             .alias("mod_moved_e6"),
         )
-        .orderBy("server")
     )

@@ -85,7 +85,7 @@ def recursive_monthly_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
                   AS DOUBLE) / 100.0 AS total_price
       FROM mon LEFT JOIN v_orders
         ON trunc(o_orderdate, 'MM') = m
-      GROUP BY m ORDER BY m
+      GROUP BY m
     """)
 
 
@@ -111,7 +111,6 @@ def lateral_topk_orders(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFra
                WHERE o_custkey = c.c_custkey
                ORDER BY o_totalprice DESC, o_orderkey LIMIT {k}) o
       WHERE c.c_mktsegment = 'BUILDING'
-      ORDER BY c.c_custkey, o_totalprice DESC, o.o_orderkey
     """)
 
 
@@ -136,7 +135,6 @@ def variant_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("k"), 4).alias("avg_k"),
             F.max("k").cast("long").alias("max_k"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -156,7 +154,6 @@ def collation_ci_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min(F.expr("name COLLATE UTF8_BINARY")).alias("rep"),
              F.count(F.lit(1)).alias("n"))
         .select("rep", "n")
-        .orderBy("rep")
     )
 
 
@@ -189,5 +186,5 @@ def sql_udf_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                              l_tax)), 2) AS sum_charge
       FROM v_lineitem
       WHERE l_quantity < 25
-      GROUP BY l_returnflag ORDER BY l_returnflag
+      GROUP BY l_returnflag
     """)

@@ -95,7 +95,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(stop_ratio, 4).alias("stopword_ratio"),
         F.round(punct_ratio, 4).alias("punct_ratio"),
         F.round(score, 4).alias("quality"),
-    ).orderBy("doc_id")
+    )
 
 
 def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,7 +113,6 @@ def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("bpe_tokens").alias("total_bpe_tokens"),
             F.round(F.avg("bpe_tokens"), 4).alias("avg_bpe_tokens"),
         )
-        .orderBy("source")
     )
 
 
@@ -139,7 +138,6 @@ def language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         out.groupBy("lang", "pred_lang")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("lang", "pred_lang")
     )
 
 
@@ -177,7 +175,6 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str, kgram: int = 8) -> DataFra
         kg.groupBy("doc_id", "content_md5")
         .agg(F.min("h").alias("min_kgram_hash"))
         .select("doc_id", "content_md5", "min_kgram_hash")
-        .orderBy("doc_id")
     )
 
 
@@ -208,7 +205,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
         .where(F.col("rnk") <= k)
         .select("doc_id", "term", F.col("tf").cast("long").alias("tf"),
                 F.round("score", 6).alias("tfidf"), F.col("rnk").cast("long").alias("rnk"))
-        .orderBy("doc_id", "rnk")
     )
 
 
@@ -302,10 +298,12 @@ def keyword_search(spark: SparkSession, sf_dir: str,
         )
         .where(F.col("n_terms") == len(terms))  # conjunctive match
     )
+    # ranked on the reported (rounded) score, as the oracle ranks
     return (
-        per_doc.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        .select("doc_id", F.col("total_tf").cast("long").alias("total_tf"),
-                F.round("score", 6).alias("score"))
+        per_doc.select("doc_id",
+                       F.col("total_tf").cast("long").alias("total_tf"),
+                       F.round("score", 6).alias("score"))
+        .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     )
 
 
@@ -415,7 +413,6 @@ def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("ar") < F.col("cut")).cast("long"))
             .alias("n_low_quality"),
         )
-        .orderBy("source")
     )
 
 
@@ -446,7 +443,7 @@ def hll_union_sources(spark: SparkSession, sf_dir: str,
         .select(F.lit("__all__").alias("source"),
                 F.hll_sketch_estimate("sk").cast("long").alias("est_distinct"))
     )
-    return per_source.unionByName(union_all).orderBy("source")
+    return per_source.unionByName(union_all)
 
 
 def doc_hash_embedding(spark: SparkSession, sf_dir: str,
@@ -480,7 +477,6 @@ def doc_hash_embedding(spark: SparkSession, sf_dir: str,
             F.max_by("b", F.struct(F.col("v"), (-F.col("b")).alias("nb")))
             .cast("long").alias("top_bucket"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -959,7 +955,6 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
              F.sum("bpe").cast("long").alias("bpe_tokens"))
         .select("lang", "n_docs", "ws_tokens", "bpe_tokens",
                 (F.col("bpe_tokens") / F.col("ws_tokens")).alias("fertility"))
-        .orderBy("lang")
     )
 
 
@@ -1082,7 +1077,6 @@ def hll_portable_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_hit").cast("long").alias("n_buckets_hit"),
             hll_estimate_col().alias("est_distinct"),
         )
-        .orderBy("source")
     )
 
 
@@ -1198,7 +1192,6 @@ def winnowing_fingerprint(spark: SparkSession, sf_dir: str,
             F.min(F.expr(f"sel div {WINNOW_POS}")).alias("fp_min_hash"),
             F.expr("bit_xor(sel)").alias("fp_xor"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1258,10 +1251,6 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang", bucket_name.alias("bucket"), "n_docs", "total_tokens",
             "avg_logprob",
         )
-        # 'head' < 'middle' < 'tail' alphabetically == tercile order, so
-        # the output ordering is expressible on output columns alone
-        # (the oracle orders identically).
-        .orderBy("lang", "bucket")
     )
 
 
@@ -1321,7 +1310,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str,
         "covered_occ",
         "total_occ",
         F.round(F.col("covered_occ") / F.col("total_occ"), 6).alias("coverage"),
-    ).orderBy("vocab_k")
+    )
 
 
 def char_trigram_langid(spark: SparkSession, sf_dir: str,
@@ -1418,7 +1407,6 @@ def char_trigram_langid(spark: SparkSession, sf_dir: str,
     return (
         labelled.groupBy("lang", "pred_lang")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("lang", "pred_lang")
     )
 
 
@@ -1480,7 +1468,6 @@ def winnowing_neardup_pairs(spark: SparkSession, sf_dir: str,
             F.expr("CAST(shared_fp * 1000000 div least(nf1, nf2) AS BIGINT)")
             .alias("containment_e6"),
         )
-        .orderBy("id1", "id2")
     )
 
 
@@ -1529,7 +1516,7 @@ def stopword_discovery(spark: SparkSession, sf_dir: str,
         F.col("df").cast("long").alias("df"),
         F.col("tf").cast("long").alias("tf"),
         F.expr("df * 1000000 div n_docs").alias("df_frac_e6"),
-    ).orderBy("lang", "rank")
+    )
 
 
 def ngram_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1587,7 +1574,6 @@ def ngram_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("distinct_grams * 1000000 div total_grams")
             .alias("distinct_frac_e6"),
         )
-        .orderBy("source", "n")
     )
 
 
@@ -1656,7 +1642,6 @@ def fightin_words(spark: SparkSession, sf_dir: str,
         .where(F.col("rank") <= k)
         .select("source", F.col("rank").cast("long").alias("rank"),
                 F.col("w").alias("term"), "y_iw", "z")
-        .orderBy("source", "rank")
     )
 
 
@@ -1767,7 +1752,6 @@ def compression_ratio_quality(spark: SparkSession, sf_dir: str,
             "corpus_ratio_e6",
             F.col("n_flagged").cast("long").alias("n_flagged"),
         )
-        .orderBy("source")
     )
 
 
@@ -1864,7 +1848,6 @@ def pii_redact_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_ip").cast("long").alias("n_ips"),
             F.sum("pii_chars").cast("long").alias("pii_chars"),
         )
-        .orderBy("source")
     )
 
 
@@ -1941,7 +1924,6 @@ def readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(nz, F.expr("polysyllables * 1000000 DIV words"))
             .alias("poly_rate_e6"),
         )
-        .orderBy("source")
     )
 
 
@@ -1991,7 +1973,7 @@ def vocab_growth_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when((F.col("vocab_cum") > 1) & (F.col("tokens_cum") > 1),
                F.floor(beta * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
         .alias("heaps_beta"),
-    ).orderBy("checkpoint")
+    )
 
 
 def keyphrase_rake(spark: SparkSession, sf_dir: str,
@@ -2160,7 +2142,6 @@ def doc_position_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("avg_wlen_e6"),
             F.expr("n_stop * 1000000 DIV n_tokens").alias("stop_rate_e6"),
         )
-        .orderBy("decile")
     )
 
 
@@ -2231,7 +2212,6 @@ def text_tiling_boundaries(spark: SparkSession, sf_dir: str,
             F.min(F.when(F.col("overlap_e6") < boundary_e6, F.col("b")))
             .cast("long").alias("first_boundary_block"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -2311,7 +2291,6 @@ def source_rank_correlation(spark: SparkSession, sf_dir: str,
                    F.floor(F.col("raw") * F.lit(1e6) + F.lit(0.5))
                    / F.lit(1e6)).alias("spearman_rho"),
         )
-        .orderBy("src_a", "src_b")
     )
 
 
@@ -2403,7 +2382,6 @@ def token_context_diversity(spark: SparkSession, sf_dir: str,
             F.expr("""(coalesce(n_left, 0) + coalesce(n_right, 0))
                    * 1000000 DIV (2 * freq)""").alias("diversity_e6"),
         )
-        .orderBy(F.desc("freq"), "word")
     )
 
 
@@ -2450,7 +2428,6 @@ def token_positional_entropy(spark: SparkSession, sf_dir: str,
             F.expr("CAST(CAST(substring(packed, 1, 10) AS BIGINT)"
                    " * 1000000 DIV n AS BIGINT)").alias("top_share_e6"),
         )
-        .orderBy("pos")
     )
 
 
@@ -2506,7 +2483,6 @@ def negative_sampling_table(spark: SparkSession, sf_dir: str,
                    " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
                    " * 1000000 DIV tw AS BIGINT)").alias("cum_weight_e6"),
         )
-        .orderBy("rank")
     )
 
 
@@ -2581,7 +2557,6 @@ def hll_intersection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("est_a") + F.col("est_b") - F.col("est_union")
              - F.col("exact_common")).cast("long").alias("err_signed"),
         )
-        .orderBy("s1", "s2")
     )
 
 
@@ -2649,5 +2624,4 @@ def ivm_hll_registers(spark: SparkSession, sf_dir: str,
             (F.col("est_merged") == F.col("est_full_recompute"))
             .cast("long").alias("merge_identity_holds"),
         )
-        .orderBy("source")
     )

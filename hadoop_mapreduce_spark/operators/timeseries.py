@@ -31,7 +31,6 @@ def events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             "total_value",
         )
-        .orderBy("window_start", "event_type")
     )
 
 
@@ -42,7 +41,6 @@ def events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").cast("string").alias("window_start"), "event_type", "n")
-        .orderBy("window_start", "event_type")
     )
 
 
@@ -62,7 +60,6 @@ def events_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             "session_value",
         )
-        .orderBy("user_id", "session_start")
     )
 
 
@@ -76,7 +73,6 @@ def events_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .select("user_id", "event_type", "event_id", F.col("ts").cast("string").alias("first_ts"))
-        .orderBy("user_id", "event_type")
     )
 
 
@@ -117,7 +113,6 @@ def asof_join_events_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("k").alias("user_id"),
             F.col("last_odate").cast("string").alias("last_order_date"),
         )
-        .orderBy("event_id")
     )
 
 
@@ -148,7 +143,6 @@ def events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("hour").cast("string").alias("hour"),
             F.coalesce(F.col("n"), F.lit(0)).alias("n"),
         )
-        .orderBy("user_id", "hour")
     )
 
 
@@ -170,12 +164,13 @@ def events_hierarchical_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # conversion, the two sites whose rounding/formatting is library-
     # version-sensitive (the r7/r8 driver-red hash-mismatch signature):
     #
-    # * Buckets are epoch indices: complete hours/days since the NTZ
-    #   epoch (timestampdiff on TIMESTAMP_NTZ is integer micros DIV unit
-    #   — no session timezone, no calendar rendering). DuckDB mirrors
-    #   with date_diff('hour'|'day', epoch, ts): boundary-crossing
-    #   counts from an hour/day-aligned origin equal the floor index for
-    #   the post-1970 fixture domain.
+    # * Buckets are epoch indices: complete hours since the NTZ epoch
+    #   (timestampdiff on TIMESTAMP_NTZ is integer micros DIV unit — no
+    #   session timezone, no calendar rendering), and the day is that
+    #   hour floor-divided by 24, so both tiers bucket from one site.
+    #   DuckDB mirrors with date_diff('hour', epoch, ts): boundary-
+    #   crossing counts from an hour-aligned origin equal the floor
+    #   index for the post-1970 fixture domain.
     # * Values are summed as integer MICRO-units per row
     #   (round(value*1e6) — both engines round doubles half-away-from-
     #   zero, and the probe in OPTIMIZATION_r09.md shows per-row
@@ -188,7 +183,6 @@ def events_hierarchical_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
     hourly = (
         ev.groupBy(
-            F.expr(f"timestampdiff(DAY, {epoch}, ts)").alias("day_id"),
             F.expr(f"timestampdiff(HOUR, {epoch}, ts)").alias("bucket_id"),
             "event_type",
         )
@@ -204,7 +198,8 @@ def events_hierarchical_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("sm DIV n").alias("avg_value_micros"),
     )
     daily_out = (
-        hourly.groupBy("day_id", "event_type")
+        hourly.groupBy(F.floor(F.col("bucket_id") / 24).alias("day_id"),
+                       "event_type")
         .agg(F.sum("n").alias("n"), F.sum("sm").alias("sm"))
         .select(
             F.lit("day").alias("resolution"),
@@ -214,8 +209,7 @@ def events_hierarchical_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("sm DIV n").alias("avg_value_micros"),
         )
     )
-    return hourly_out.unionByName(daily_out).orderBy(
-        "resolution", "bucket_id", "event_type")
+    return hourly_out.unionByName(daily_out)
 
 
 def events_daily_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -238,7 +232,6 @@ def events_daily_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("user_id", F.col("day").cast("string").alias("day"),
                 "open", "close", "low", "high", "n")
-        .orderBy("user_id", "day")
     )
 
 
@@ -322,7 +315,6 @@ def events_lttb_downsample(spark: SparkSession, sf_dir: str,
         .applyInPandas(
             lttb,
             "event_type string, rank long, x long, y long, event_id long")
-        .orderBy("event_type", "rank")
     )
 
 
@@ -389,7 +381,6 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str,
         .where(F.col("week_offset") <= max_weeks)
         .groupBy("cohort_week", "week_offset")
         .agg(F.countDistinct("user_id").alias("n_users"))
-        .orderBy("cohort_week", "week_offset")
     )
 
 
@@ -488,7 +479,6 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str,
             (F.abs(F.coalesce(z, F.lit(0.0))) > z_cut).alias("is_anomaly"),
         )
         .where(F.col("is_anomaly"))
-        .orderBy("event_type", "hour")
     )
 
 
@@ -546,7 +536,6 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str,
                 F.col("med"), F.col("mad"),
                 mad_z.alias("mad_z"))
         .where(F.abs(mad_z) > cut)
-        .orderBy("event_type", "event_id")
     )
 
 
@@ -590,7 +579,6 @@ def events_twap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("event_type", F.col("day").cast("string").alias("day"),
                 "twap", "mean_unweighted", "n", "covered_us")
-        .orderBy("event_type", "day")
     )
 
 
@@ -630,7 +618,6 @@ def events_winsorize_stats(spark: SparkSession, sf_dir: str,
             F.any_value("lo").alias("lo"),
             F.any_value("hi").alias("hi"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -692,7 +679,6 @@ def asof_join_nearest(spark: SparkSession, sf_dir: str,
             .alias("direction"),
             F.when(use_back, d_back).when(vf, d_fwd).alias("dist_us"),
         )
-        .orderBy("event_id")
     )
 
 
@@ -765,7 +751,6 @@ def events_ewma_daily(spark: SparkSession, sf_dir: str,
             (F.floor(F.col("r.ewma") * F.lit(1e6) + F.lit(0.5))
              / F.lit(1e6)).alias("ewma"),
         )
-        .orderBy("event_type", "day")
     )
 
 
@@ -815,7 +800,6 @@ def events_dow_hour_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("n_events * 168 * 1000000 div tot").alias("load_e6"),
             F.expr("sv_micros div n_events").alias("mean_value_micros"),
         )
-        .orderBy("dow", "hour")
     )
 
 
@@ -866,7 +850,7 @@ def session_gap_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = rows[0]
     for r in rows[1:]:
         out = out.unionByName(r)
-    return out.orderBy("gap_minutes")
+    return out
 
 
 def event_pair_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -929,7 +913,6 @@ def event_pair_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("support * nb * 1000000 div (supp_a * supp_b)")
             .alias("lift_e6"),
         )
-        .orderBy("item_a", "item_b")
     )
 
 
@@ -981,7 +964,6 @@ def active_user_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("mau").cast("long").alias("mau"),
             F.expr("dau * 1000000 div mau").alias("stickiness_e6"),
         )
-        .orderBy("day")
     )
 
 
@@ -1029,7 +1011,6 @@ def watermark_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                          F.col("late_us"))).alias("p95_late_us"),
             F.max("late_us").alias("max_late_us"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1092,7 +1073,6 @@ def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("r.s") > F.lit(2) * F.col("t_total"))
             .cast("long").alias("shift_flag"),
         )
-        .orderBy("event_type", "day")
     )
 
 
@@ -1154,7 +1134,6 @@ def conversion_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(F.when(F.expr("rn = (n * 95 + 99) div 100"),
                          F.col("lag_us"))).alias("p95_lag_us"),
         )
-        .orderBy("credit")
     )
 
 
@@ -1210,7 +1189,6 @@ def user_active_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_add(F.lit("2024-01-01").cast("date"), F.col("ls_d"))
             .cast("string").alias("longest_streak_start"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -1273,7 +1251,6 @@ def events_acf(spark: SparkSession, sf_dir: str, max_lag: int = 7) -> DataFrame:
                            * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
             .alias("acf"),
         )
-        .orderBy("event_type", "lag")
     )
 
 
@@ -1365,7 +1342,6 @@ def session_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("day"),
             "max_concurrency", "n_sessions_started", "n_sessions_ended",
         )
-        .orderBy("day")
     )
 
 
@@ -1440,7 +1416,6 @@ def events_holt_linear(spark: SparkSession, sf_dir: str,
             r6(F.abs(F.col("r.x").cast("double") - F.col("r.f")))
             .alias("abs_error"),
         )
-        .orderBy("event_type", "day")
     )
 
 
@@ -1510,7 +1485,6 @@ def sax_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         motifs.groupBy("event_type", "motif")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .orderBy("event_type", F.desc("n"), "motif")
     )
 
 
@@ -1589,7 +1563,6 @@ def events_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("n_sessions_matched * 1000000 DIV n_sessions")
             .alias("session_share_e6"),
         )
-        .orderBy("pattern")
     )
 
 
@@ -1669,7 +1642,6 @@ def survival_kaplan_meier(
             (F.floor(surv * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
             .alias("survival"),
         )
-        .orderBy("t")
     )
 
 
@@ -1727,7 +1699,6 @@ def events_stl_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
                      * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
             .alias("seasonal"),
         )
-        .orderBy("event_type", "dow")
     )
 
 
@@ -1811,7 +1782,6 @@ def user_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
                            * 1000000 DIV n_churned END""")
             .alias("quick_ratio_e6"),
         )
-        .orderBy("wk")
     )
 
 
@@ -1874,7 +1844,6 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             r6(F.expr("percentile(r, 0.5)")).alias("intercept"),
         )
         .select("event_type", "n_days", "n_pairs", "slope", "intercept")
-        .orderBy("event_type")
     )
 
 
@@ -2022,7 +1991,6 @@ def attribution_linear_credit(spark: SparkSession, sf_dir: str,
             F.sum("credit_e6").cast("long").alias("total_credit_e6"),
             F.sum("n_type_touches").cast("long").alias("n_touches_total"),
         )
-        .orderBy("credit")
     )
 
 
@@ -2094,7 +2062,6 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.floor(z * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
             .alias("z"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -2146,7 +2113,6 @@ def forecast_backtest_snaive(spark: SparkSession, sf_dir: str,
             F.expr("sum_abs_err * 1000000 DIV n_points").alias("mae_e6"),
             F.expr("sum_ape_e6 DIV n_points").alias("mape_e6"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -2219,7 +2185,6 @@ def runs_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type", "n1", "n2", "runs",
             (F.floor(z * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias("z"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -2290,7 +2255,6 @@ def session_transition_entropy(spark: SparkSession, sf_dir: str,
         .select("from_type",
                 F.col("n_from").cast("long").alias("n_from"),
                 "n_distinct_to", "entropy_e6", "rate_e6")
-        .orderBy("from_type")
     )
 
 
@@ -2386,7 +2350,6 @@ def markov_absorption_steps(spark: SparkSession, sf_dir: str,
             F.col("v_e6").alias("steps_to_absorb_e6"),
             F.col("p_e6").alias("p_purchase_e6"),
         )
-        .orderBy("state")
     )
 
 
@@ -2448,7 +2411,6 @@ def events_residual_anomaly(spark: SparkSession, sf_dir: str,
                 > F.lit(z_cut * z_cut) * var_num)
             .alias("is_anomaly"),
         )
-        .orderBy("event_type", "d")
     )
 
 
@@ -2519,7 +2481,6 @@ def dow_profile_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
                      * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
             .alias("cosine"),
         )
-        .orderBy("event_type", "wk")
     )
 
 
@@ -2601,7 +2562,6 @@ def rolling_distinct_users_hll(spark: SparkSession, sf_dir: str,
             hll_estimate_col().alias("est_rolling_distinct"),
             "exact_day_distinct",
         )
-        .orderBy("day")
     )
 
 
@@ -2739,7 +2699,6 @@ def markov_attribution_removal(spark: SparkSession, sf_dir: str,
                    " DIV te AS BIGINT) ELSE 0 END")
             .alias("attribution_share_e6"),
         )
-        .orderBy("channel")
     )
 
 
@@ -2862,7 +2821,6 @@ def events_burst_kleinberg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("z.c0").alias("cum_cost0_e6"),
             F.col("z.c1").alias("cum_cost1_e6"),
         )
-        .orderBy("event_type", "day")
     )
 
 
@@ -2945,5 +2903,4 @@ def attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(credit_e6 * CAST(1000000 AS DECIMAL(38,0))"
                    " DIV all_credit AS BIGINT)").alias("share_e6"),
         )
-        .orderBy("channel")
     )

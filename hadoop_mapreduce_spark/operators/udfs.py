@@ -35,7 +35,6 @@ def udf_pandas_vector_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return (
         emb.select("vec_id", F.round(l2_norm("embedding"), 6).alias("l2_norm"))
-        .orderBy("vec_id")
     )
 
 
@@ -53,7 +52,6 @@ def udf_grouped_agg_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         orders.groupBy("o_orderstatus")
         .agg(F.round(trimmed_mean("o_totalprice"), 4).alias("trimmed_avg_price"))
-        .orderBy("o_orderstatus")
     )
 
 
@@ -83,7 +81,6 @@ def udf_apply_in_pandas_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ev.groupBy("user_id")
         .applyInPandas(zscore, "user_id long, event_id long, zscore double")
-        .orderBy("user_id", "event_id")
     )
 
 
@@ -99,7 +96,6 @@ def udf_python_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
     return (
         part.select("p_partkey", digit_sum("p_partkey").alias("key_digit_sum"))
-        .orderBy("p_partkey")
     )
 
 
@@ -144,4 +140,4 @@ def arrow_normalize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.round("l2norm", 4).alias("l2norm"),
         F.round("first_component", 6).alias("first_component"),
-    ).orderBy("vec_id")
+    )

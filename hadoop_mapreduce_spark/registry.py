@@ -32,7 +32,17 @@ bit-comparable:
     (``_lpa_sql``) and degree-oriented triangles (``_triangles_sql``);
   * approximate operators (HLL, IVF-ANN) are registered without an
     oracle → the driver records a rows-only check, as the contract
-    allows for non-SQL-expressible ops.
+    allows for non-SQL-expressible ops;
+  * output order is declared once per query, beside its operator, as
+    SQL-style keys (``ordered(fn, "cnt DESC", "ngram")``, collected in
+    ``ORDER_KEYS``), and operators return unordered frames.
+    ``order_frame`` sorts the Spark frame and ``order_sql`` wraps the
+    oracle as ``SELECT * FROM (<sql>) ORDER BY <keys>``, both with
+    Spark's NULL placement spelled out: ASC NULLS FIRST, DESC NULLS
+    LAST (DuckDB's own default is ASC NULLS LAST). Single-row and
+    unordered rows-only queries declare no keys. Top-k operators and
+    oracles keep their own ``ORDER BY … LIMIT k``, because there the
+    order is the computation; the declared keys re-sort the k rows.
 
 Output contract change: ``events_hierarchical_rollup`` emits the
 integer epoch bucket ``bucket_id`` (complete hours or days since
@@ -42,9 +52,11 @@ integer epoch bucket ``bucket_id`` (complete hours or days since
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from hadoop_mapreduce_spark.operators import (
     advanced,
@@ -85,13 +97,43 @@ from hadoop_mapreduce_spark.sources.tables import load_table
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
+def _sort_keys(keys: tuple[str, ...]) -> list[tuple[str, bool]]:
+    """``("cnt DESC", "ngram")`` -> ``[("cnt", True), ("ngram", False)]``."""
+    return [(k.removesuffix(" DESC"), k.endswith(" DESC")) for k in keys]
+
+
+def order_frame(df: DataFrame, keys: tuple[str, ...]) -> DataFrame:
+    """``df`` sorted by the declared keys: ASC NULLS FIRST (Spark's
+    default), DESC NULLS LAST."""
+    return df.orderBy(*[F.col(c).desc_nulls_last() if desc
+                        else F.col(c).asc_nulls_first()
+                        for c, desc in _sort_keys(keys)])
+
+
+def order_sql(sql: str, keys: tuple[str, ...]) -> str:
+    """``sql`` sorted by the declared keys, with Spark's NULL placement
+    spelled out (DuckDB sorts ASC NULLS LAST by default)."""
+    by = ", ".join(f'"{c}" DESC NULLS LAST' if desc else f'"{c}" ASC NULLS FIRST'
+                   for c, desc in _sort_keys(keys))
+    return f"SELECT * FROM (\n{sql.rstrip().rstrip(';')}\n) ORDER BY {by}"
+
+
+def ordered(fn: QueryFn, *keys: str) -> QueryFn:
+    """Declare a query's output order: ``fn``'s frame sorted by ``keys``.
+    The oracle of the same name is sorted by the same keys (ORACLE)."""
+    @functools.wraps(fn)
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return order_frame(fn(spark, sf_dir), keys)
+
+    query.order_keys = keys
+    return query
+
+
 def _pyds_custom_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4 Python Data Source API: a custom distributed source with
     partition planning and doc_id-range filter pushdown
     (sources/pyds.py). The oracle replays the deterministic md5 recipe,
     so the source's rows are hash-checkable without any file input."""
-    from pyspark.sql import functions as F
-
     from hadoop_mapreduce_spark.sources.pyds import register
 
     register(spark)
@@ -100,7 +142,6 @@ def _pyds_custom_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where((F.col("doc_id") >= 50) & (F.col("doc_id") < 150))
         .select("doc_id", "n_chars",
                 F.size(F.split("text", " ")).cast("long").alias("n_tokens"))
-        .orderBy("doc_id")
     )
 
 # ---------------------------------------------------------------------------
@@ -109,7 +150,8 @@ def _pyds_custom_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ngram_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ngram_count(load_table(spark, sf_dir, "documents"), "text", n=3)
+    return ngram_count(load_table(spark, sf_dir, "documents"), "text", n=3,
+                       sort=False)
 
 
 def _ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -127,398 +169,640 @@ QUERIES: dict[str, QueryFn] = {
     # -- never driver-hash-witnessed (front priority) --
     # the two round-5 driver flakes, re-registered after the Decimal
     # determinism fix (operators/sql4.py) so r6 witnesses the repair:
-    "recursive_monthly_spine": sql4.recursive_monthly_spine,
-    "lateral_topk_orders": sql4.lateral_topk_orders,
+    "recursive_monthly_spine":
+        ordered(sql4.recursive_monthly_spine, "month_start"),
+    "lateral_topk_orders":
+        ordered(sql4.lateral_topk_orders,
+                "c_custkey", "o_totalprice DESC", "o_orderkey"),
     # round-6 selection / decontamination ladder:
-    "decontaminate_fuzzy": datamix.decontaminate_fuzzy,
-    "decontaminate_semantic": datamix.decontaminate_semantic,
-    "dedup_keep_best": dedup.dedup_keep_best,
-    "dedup_repeated_spans": dedup.dedup_repeated_spans,
-    "dsir_importance_sample": datamix.dsir_importance_sample,
-    "pipeline_target_select": pipeline.pipeline_target_select,
+    "decontaminate_fuzzy":
+        ordered(datamix.decontaminate_fuzzy, "train_id", "bench_id"),
+    "decontaminate_semantic":
+        ordered(datamix.decontaminate_semantic, "train_id", "bench_id"),
+    "dedup_keep_best": ordered(dedup.dedup_keep_best, "component"),
+    "dedup_repeated_spans":
+        ordered(dedup.dedup_repeated_spans, "doc_id", "span_start"),
+    "dsir_importance_sample":
+        ordered(datamix.dsir_importance_sample, "source"),
+    "pipeline_target_select":
+        ordered(pipeline.pipeline_target_select, "source"),
     # round-6 second wave:
-    "bigram_lm_quality": textstats.bigram_lm_quality,
-    "image_dhash_neardup": multimodal.image_dhash_neardup,
-    "bm25_search": textstats.bm25_search,
-    "token_entropy_quality": textstats.token_entropy_quality,
-    "jsd_lang_divergence": datamix.jsd_lang_divergence,
-    "hard_negative_mining": similarity.hard_negative_mining,
-    "events_anomaly_mad": timeseries.events_anomaly_mad,
-    "bigram_pmi_collocations": textstats.bigram_pmi_collocations,
-    "skipgram_cooccurrence": textstats.skipgram_cooccurrence,  # hash-paired r7c
+    "bigram_lm_quality":
+        ordered(textstats.bigram_lm_quality, "bigram_lp", "doc_id"),
+    "image_dhash_neardup":
+        ordered(multimodal.image_dhash_neardup, "doc_a", "doc_b"),
+    "bm25_search": ordered(textstats.bm25_search, "bm25 DESC", "doc_id"),
+    "token_entropy_quality":
+        ordered(textstats.token_entropy_quality, "token_entropy", "doc_id"),
+    "jsd_lang_divergence":
+        ordered(datamix.jsd_lang_divergence, "lang_a", "lang_b"),
+    "hard_negative_mining":
+        ordered(similarity.hard_negative_mining, "qid", "rank"),
+    "events_anomaly_mad":
+        ordered(timeseries.events_anomaly_mad, "event_type", "event_id"),
+    "bigram_pmi_collocations":
+        ordered(textstats.bigram_pmi_collocations, "pmi DESC", "w1", "w2"),
+    "skipgram_cooccurrence":  # hash-paired r7c
+        ordered(textstats.skipgram_cooccurrence, "pmi DESC", "w1", "w2"),
     # round-6 third wave:
-    "dedup_incremental": dedup.dedup_incremental,
-    "sample_weighted": datamix.sample_weighted,
-    "events_twap_daily": timeseries.events_twap_daily,
-    "events_winsorize_stats": timeseries.events_winsorize_stats,
-    "histogram_equidepth": relational.histogram_equidepth,
+    "dedup_incremental": ordered(dedup.dedup_incremental, "doc_id"),
+    "sample_weighted":
+        ordered(datamix.sample_weighted, "es_key DESC", "doc_id"),
+    "events_twap_daily":
+        ordered(timeseries.events_twap_daily, "event_type", "day"),
+    "events_winsorize_stats":
+        ordered(timeseries.events_winsorize_stats, "event_type"),
+    "histogram_equidepth": ordered(relational.histogram_equidepth, "bucket"),
     # never recorded in r1-r5 windows (pre-existing key):
-    "events_hierarchical_rollup": timeseries.events_hierarchical_rollup,
+    "events_hierarchical_rollup":
+        ordered(timeseries.events_hierarchical_rollup,
+                "resolution", "bucket_id", "event_type"),
     # round-6 fourth wave (new):
-    "bpe_merge_step": textstats.bpe_merge_step,
-    "inverted_index_topk": textstats.inverted_index_topk,
-    "memorization_novelty": curation.memorization_novelty,
-    "mixture_temperature_weights": datamix.mixture_temperature_weights,
-    "quantile_normalize_quality": datamix.quantile_normalize_quality,
-    "rrf_quality_fusion": curation.rrf_quality_fusion,  # hash-paired r7c
-    "quality_threshold_sweep": curation.quality_threshold_sweep,  # hash-paired r7c
-    "stopword_discovery": textstats.stopword_discovery,  # hash-paired r7c
-    "source_concentration_audit": datamix.source_concentration_audit,  # hash-paired r7c
-    "token_budget_fill": datamix.token_budget_fill,  # hash-paired r7c
-    "curriculum_interleave": datamix.curriculum_interleave,  # hash-paired r7c
-    "source_novelty_attribution": datamix.source_novelty_attribution,  # hash-paired r7c
-    "quality_signal_correlation": curation.quality_signal_correlation,  # hash-paired r7c
-    "ngram_diversity_audit": textstats.ngram_diversity_audit,  # hash-paired r7d
-    "dataset_card": pipeline.dataset_card,  # hash-paired r7d
-    "badwords_filter": curation.badwords_filter,  # hash-paired r7d
-    "lang_source_chisq": datamix.lang_source_chisq,  # hash-paired r7d
-    "events_dow_hour_profile": timeseries.events_dow_hour_profile,  # hash-paired r7d
-    "neardup_label_conflict": dedup.neardup_label_conflict,  # hash-paired r7d
-    "lsh_band_tuning": dedup.lsh_band_tuning,  # hash-paired r7d
-    "packing_boundary_audit": curation.packing_boundary_audit,  # hash-paired r7d
-    "preference_pair_build": curation.preference_pair_build,  # hash-paired r7e
-    "bootstrap_ci_quality": curation.bootstrap_ci_quality,  # hash-paired r7e
-    "ks_drift_quality": datamix.ks_drift_quality,  # hash-paired r7f
-    "session_gap_sweep": timeseries.session_gap_sweep,  # hash-paired r7f
-    "dedup_threshold_sweep": dedup.dedup_threshold_sweep,  # hash-paired r7f
-    "event_pair_itemsets": timeseries.event_pair_itemsets,  # hash-paired r7f
-    "active_user_ratios": timeseries.active_user_ratios,  # hash-paired r7g
-    "customer_rfm_segments": relational.customer_rfm_segments,  # hash-paired r7g
-    "watermark_lateness_audit": timeseries.watermark_lateness_audit,  # hash-paired r7h
-    "join_cardinality_audit": skew.join_cardinality_audit,  # hash-paired r7h
-    "fightin_words": textstats.fightin_words,  # hash-paired r7h
-    "events_cusum_changepoint": timeseries.events_cusum_changepoint,  # hash-paired r7i
-    "kwic_concordance": textstats.kwic_concordance,  # hash-paired r7i
-    "ivm_orders_agg": cdc.ivm_orders_agg,  # hash-paired r7i
-    "orders_cohort_ltv": relational.orders_cohort_ltv,  # hash-paired r7j
-    "conversion_attribution": timeseries.conversion_attribution,  # hash-paired r7j
-    "user_active_streaks": timeseries.user_active_streaks,  # hash-paired r7k
-    "pii_redact_audit": textstats.pii_redact_audit,  # hash-paired r7l
-    "benford_audit": curation.benford_audit,  # hash-paired r7l
-    "orders_abc_pareto": relational.orders_abc_pareto,  # hash-paired r7l
-    "label_propagation_communities": dedup.label_propagation_communities,  # hash-paired r7m
-    "sax_motifs": timeseries.sax_motifs,  # hash-paired r7m
-    "dedup_chain_audit": dedup.dedup_chain_audit,  # hash-paired r7n
-    "vocab_growth_heaps": textstats.vocab_growth_heaps,  # hash-paired r7n
-    "embedding_outlier_scores": similarity.embedding_outlier_scores,  # hash-paired r7o
-    "orders_interarrival_profile": relational.orders_interarrival_profile,  # hash-paired r7p
-    "order_status_flow": relational.order_status_flow,  # hash-paired r7p
-    "events_pattern_match": timeseries.events_pattern_match,  # hash-paired r7q
-    "quality_filter_agreement": curation.quality_filter_agreement,  # hash-paired r7r
+    "bpe_merge_step": ordered(textstats.bpe_merge_step, "cnt DESC", "pair"),
+    "inverted_index_topk":
+        ordered(textstats.inverted_index_topk,
+                "df DESC", "tf_total DESC", "term"),
+    "memorization_novelty": ordered(curation.memorization_novelty, "doc_id"),
+    "mixture_temperature_weights":
+        ordered(datamix.mixture_temperature_weights, "source"),
+    "quantile_normalize_quality":
+        ordered(datamix.quantile_normalize_quality, "source"),
+    "rrf_quality_fusion":  # hash-paired r7c
+        ordered(curation.rrf_quality_fusion, "source", "fused_rank"),
+    "quality_threshold_sweep":  # hash-paired r7c
+        ordered(curation.quality_threshold_sweep, "threshold", "source"),
+    "stopword_discovery":  # hash-paired r7c
+        ordered(textstats.stopword_discovery, "lang", "rank"),
+    "source_concentration_audit":  # hash-paired r7c
+        ordered(datamix.source_concentration_audit, "axis"),
+    "token_budget_fill":  # hash-paired r7c
+        ordered(datamix.token_budget_fill, "source"),
+    "curriculum_interleave":  # hash-paired r7c
+        ordered(datamix.curriculum_interleave, "position"),
+    "source_novelty_attribution":  # hash-paired r7c
+        ordered(datamix.source_novelty_attribution, "src_rank"),
+    "quality_signal_correlation":  # hash-paired r7c
+        ordered(curation.quality_signal_correlation, "source"),
+    "ngram_diversity_audit":  # hash-paired r7d
+        ordered(textstats.ngram_diversity_audit, "source", "n"),
+    "dataset_card":  # hash-paired r7d
+        ordered(pipeline.dataset_card, "source"),
+    "badwords_filter":  # hash-paired r7d
+        ordered(curation.badwords_filter, "source"),
+    "lang_source_chisq":  # hash-paired r7d
+        ordered(datamix.lang_source_chisq, "lang", "source"),
+    "events_dow_hour_profile":  # hash-paired r7d
+        ordered(timeseries.events_dow_hour_profile, "dow", "hour"),
+    "neardup_label_conflict":  # hash-paired r7d
+        ordered(dedup.neardup_label_conflict, "component"),
+    "lsh_band_tuning":  # hash-paired r7d
+        ordered(dedup.lsh_band_tuning, "bands", "jbucket"),
+    "packing_boundary_audit":  # hash-paired r7d
+        ordered(curation.packing_boundary_audit, "source"),
+    "preference_pair_build":  # hash-paired r7e
+        ordered(curation.preference_pair_build, "source", "pair_rank"),
+    "bootstrap_ci_quality":  # hash-paired r7e
+        ordered(curation.bootstrap_ci_quality, "source"),
+    "ks_drift_quality":  # hash-paired r7f
+        ordered(datamix.ks_drift_quality, "source"),
+    "session_gap_sweep":  # hash-paired r7f
+        ordered(timeseries.session_gap_sweep, "gap_minutes"),
+    "dedup_threshold_sweep":  # hash-paired r7f
+        ordered(dedup.dedup_threshold_sweep, "threshold_pct"),
+    "event_pair_itemsets":  # hash-paired r7f
+        ordered(timeseries.event_pair_itemsets, "item_a", "item_b"),
+    "active_user_ratios":  # hash-paired r7g
+        ordered(timeseries.active_user_ratios, "day"),
+    "customer_rfm_segments":  # hash-paired r7g
+        ordered(relational.customer_rfm_segments,
+                "r_score", "f_score", "m_score"),
+    "watermark_lateness_audit":  # hash-paired r7h
+        ordered(timeseries.watermark_lateness_audit, "event_type"),
+    "join_cardinality_audit":  # hash-paired r7h
+        ordered(skew.join_cardinality_audit, "join_name"),
+    "fightin_words":  # hash-paired r7h
+        ordered(textstats.fightin_words, "source", "rank"),
+    "events_cusum_changepoint":  # hash-paired r7i
+        ordered(timeseries.events_cusum_changepoint, "event_type", "day"),
+    "kwic_concordance":  # hash-paired r7i
+        ordered(textstats.kwic_concordance, "doc_id", "pos"),
+    "ivm_orders_agg":  # hash-paired r7i
+        ordered(cdc.ivm_orders_agg, "o_orderstatus"),
+    "orders_cohort_ltv":  # hash-paired r7j
+        ordered(relational.orders_cohort_ltv,
+                "cohort_year", "cohort_month0", "k"),
+    "conversion_attribution":  # hash-paired r7j
+        ordered(timeseries.conversion_attribution, "credit"),
+    "user_active_streaks":  # hash-paired r7k
+        ordered(timeseries.user_active_streaks, "user_id"),
+    "pii_redact_audit":  # hash-paired r7l
+        ordered(textstats.pii_redact_audit, "source"),
+    "benford_audit":  # hash-paired r7l
+        ordered(curation.benford_audit, "digit"),
+    "orders_abc_pareto":  # hash-paired r7l
+        ordered(relational.orders_abc_pareto, "abc_class"),
+    "label_propagation_communities":  # hash-paired r7m
+        ordered(dedup.label_propagation_communities, "doc_id"),
+    "sax_motifs":  # hash-paired r7m
+        ordered(timeseries.sax_motifs, "event_type", "n DESC", "motif"),
+    "dedup_chain_audit":  # hash-paired r7n
+        ordered(dedup.dedup_chain_audit, "component"),
+    "vocab_growth_heaps":  # hash-paired r7n
+        ordered(textstats.vocab_growth_heaps, "checkpoint"),
+    "embedding_outlier_scores":  # hash-paired r7o
+        ordered(similarity.embedding_outlier_scores, "rank"),
+    "orders_interarrival_profile":  # hash-paired r7p
+        ordered(relational.orders_interarrival_profile, "o_custkey"),
+    "order_status_flow":  # hash-paired r7p
+        ordered(relational.order_status_flow, "from_status", "to_status"),
+    "events_pattern_match":  # hash-paired r7q
+        ordered(timeseries.events_pattern_match, "pattern"),
+    "quality_filter_agreement":  # hash-paired r7r
+        ordered(curation.quality_filter_agreement, "sig_a", "sig_b"),
     # round-7 wave s: preference / evaluation / survival statistics
-    "skyline_quality_frontier": relational.skyline_quality_frontier,
-    "auc_roc_langid": curation.auc_roc_langid,
-    "survival_kaplan_meier": timeseries.survival_kaplan_meier,
+    "skyline_quality_frontier":
+        ordered(relational.skyline_quality_frontier, "n_chars DESC", "doc_id"),
+    "auc_roc_langid": ordered(curation.auc_roc_langid, "threshold"),
+    "survival_kaplan_meier": ordered(timeseries.survival_kaplan_meier, "t"),
     # round-7 wave t: keyword extraction / decomposition / growth ledger
-    "keyphrase_rake": textstats.keyphrase_rake,
-    "events_stl_seasonal": timeseries.events_stl_seasonal,
-    "user_growth_accounting": timeseries.user_growth_accounting,
+    "keyphrase_rake":
+        ordered(textstats.keyphrase_rake, "rake_e6 DESC", "freq DESC", "word"),
+    "events_stl_seasonal":
+        ordered(timeseries.events_stl_seasonal, "event_type", "dow"),
+    "user_growth_accounting": ordered(timeseries.user_growth_accounting, "wk"),
     # round-7 wave u: basket mining / robust trend / journey paths
-    "basket_part_pairs": relational.basket_part_pairs,
-    "theil_sen_trend": timeseries.theil_sen_trend,
-    "session_path_topk": timeseries.session_path_topk,
+    "basket_part_pairs":
+        ordered(relational.basket_part_pairs, "support DESC", "p1", "p2"),
+    "theil_sen_trend": ordered(timeseries.theil_sen_trend, "event_type"),
+    "session_path_topk":
+        ordered(timeseries.session_path_topk, "n_sessions DESC", "path"),
     # round-7 wave v: entity resolution / embedding diagnostics / sparse sim
-    "customer_entity_blocking": relational.customer_entity_blocking,
-    "embedding_anisotropy_audit": similarity.embedding_anisotropy_audit,
-    "sparse_cosine_pairs_topk": similarity.sparse_cosine_pairs_topk,
+    "customer_entity_blocking":
+        ordered(relational.customer_entity_blocking,
+                "nationkey", "mktsegment", "id1", "id2"),
+    "embedding_anisotropy_audit":
+        ordered(similarity.embedding_anisotropy_audit, "bin"),
+    "sparse_cosine_pairs_topk":
+        ordered(similarity.sparse_cosine_pairs_topk,
+                "cosine DESC", "id1", "id2"),
     # round-7 wave w: multi-touch attribution / burstiness / position bias
-    "attribution_linear_credit": timeseries.attribution_linear_credit,
-    "term_burstiness": textstats.term_burstiness,
-    "doc_position_profile": textstats.doc_position_profile,
+    "attribution_linear_credit":
+        ordered(timeseries.attribution_linear_credit, "credit"),
+    "term_burstiness": ordered(textstats.term_burstiness, "cf DESC", "term"),
+    "doc_position_profile": ordered(textstats.doc_position_profile, "decile"),
     # round-7 wave x: containment dedup / provenance matrix / segmentation
-    "dedup_containment": dedup.dedup_containment,
-    "cross_source_duplication_matrix": dedup.cross_source_duplication_matrix,
-    "text_tiling_boundaries": textstats.text_tiling_boundaries,
+    "dedup_containment":
+        ordered(dedup.dedup_containment, "id_small", "id_big"),
+    "cross_source_duplication_matrix":
+        ordered(dedup.cross_source_duplication_matrix, "src_a", "src_b"),
+    "text_tiling_boundaries":
+        ordered(textstats.text_tiling_boundaries, "doc_id"),
     # round-7 wave y: trend testing / compressed sketches / sampling design
-    "mann_kendall_trend": timeseries.mann_kendall_trend,
-    "minhash_bbit_estimate": dedup.minhash_bbit_estimate,
-    "neyman_allocation_plan": datamix.neyman_allocation_plan,
+    "mann_kendall_trend": ordered(timeseries.mann_kendall_trend, "event_type"),
+    "minhash_bbit_estimate":
+        ordered(dedup.minhash_bbit_estimate, "jaccard_e6 DESC", "id1", "id2"),
+    "neyman_allocation_plan":
+        ordered(datamix.neyman_allocation_plan, "source"),
     # round-7 wave z: forecast baseline / rank drift / randomness test
-    "forecast_backtest_snaive": timeseries.forecast_backtest_snaive,
-    "source_rank_correlation": textstats.source_rank_correlation,
-    "runs_test_daily": timeseries.runs_test_daily,
+    "forecast_backtest_snaive":
+        ordered(timeseries.forecast_backtest_snaive, "event_type"),
+    "source_rank_correlation":
+        ordered(textstats.source_rank_correlation, "src_a", "src_b"),
+    "runs_test_daily": ordered(timeseries.runs_test_daily, "event_type"),
     # round-8 wave a (r7 continuation): concordance / joint structure
-    "quality_kendall_tau": curation.quality_kendall_tau,
-    "lang_source_mutual_info": datamix.lang_source_mutual_info,
-    "session_transition_entropy": timeseries.session_transition_entropy,
+    "quality_kendall_tau": ordered(curation.quality_kendall_tau, "source"),
+    "lang_source_mutual_info":
+        ordered(datamix.lang_source_mutual_info, "lang", "source"),
+    "session_transition_entropy":
+        ordered(timeseries.session_transition_entropy, "from_type"),
     # round-8 wave b: effect sizes / QQ drift / gains table
-    "quality_flag_odds_ratio": curation.quality_flag_odds_ratio,
-    "length_qq_drift": datamix.length_qq_drift,
-    "quality_decile_lift": curation.quality_decile_lift,
+    "quality_flag_odds_ratio":
+        ordered(curation.quality_flag_odds_ratio, "flag", "source"),
+    "length_qq_drift": ordered(datamix.length_qq_drift, "source", "pct"),
+    "quality_decile_lift": ordered(curation.quality_decile_lift, "decile"),
     # round-8 wave c: context diversity / seasonal shocks / tail index
-    "token_context_diversity": textstats.token_context_diversity,
-    "events_residual_anomaly": timeseries.events_residual_anomaly,
-    "length_hill_tail_index": datamix.length_hill_tail_index,
+    "token_context_diversity":
+        ordered(textstats.token_context_diversity, "freq DESC", "word"),
+    "events_residual_anomaly":
+        ordered(timeseries.events_residual_anomaly, "event_type", "d"),
+    "length_hill_tail_index":
+        ordered(datamix.length_hill_tail_index, "source"),
     # round-8 wave d: parameter sensitivity / rhythm stability / inequality
-    "dedup_shingle_size_sweep": dedup.dedup_shingle_size_sweep,
-    "dow_profile_stability": timeseries.dow_profile_stability,
-    "token_mass_lorenz": datamix.token_mass_lorenz,
+    "dedup_shingle_size_sweep":
+        ordered(dedup.dedup_shingle_size_sweep, "shingle_k"),
+    "dow_profile_stability":
+        ordered(timeseries.dow_profile_stability, "event_type", "wk"),
+    "token_mass_lorenz":
+        ordered(datamix.token_mass_lorenz, "source", "decile"),
     # round-8 wave e: supply-chain risk on the part x supplier edge
-    "part_supplier_hhi": relational.part_supplier_hhi,
-    "part_return_rate_wilson": relational.part_return_rate_wilson,
-    "supply_bipartite_profile": relational.supply_bipartite_profile,
+    "part_supplier_hhi":
+        ordered(relational.part_supplier_hhi,
+                "hhi_e6 DESC", "n_lines DESC", "partkey"),
+    "part_return_rate_wilson":
+        ordered(relational.part_return_rate_wilson,
+                "wilson_lower DESC", "n DESC", "partkey"),
+    "supply_bipartite_profile":
+        ordered(relational.supply_bipartite_profile, "side", "degree"),
     # round-8 wave f: prefix-filtered scale path for directed containment
-    "dedup_containment_prefix": dedup.dedup_containment_prefix,
+    "dedup_containment_prefix":
+        ordered(dedup.dedup_containment_prefix, "id_small", "id_big"),
     # round-8 wave g: score calibration / bucket-layout planning /
     # positional template detection
-    "quality_calibration_bins": curation.quality_calibration_bins,
-    "partition_skew_plan": skew.partition_skew_plan,
-    "token_positional_entropy": textstats.token_positional_entropy,
+    "quality_calibration_bins":
+        ordered(curation.quality_calibration_bins, "bin"),
+    "partition_skew_plan": ordered(skew.partition_skew_plan, "bucket"),
+    "token_positional_entropy":
+        ordered(textstats.token_positional_entropy, "pos"),
     # round-8 wave h: retrieval eval / quantization audit / merge
     # governance
-    "retrieval_label_precision": similarity.retrieval_label_precision,
-    "embedding_quant_sqnr": similarity.embedding_quant_sqnr,
-    "algebraic_merge_audit": relational.algebraic_merge_audit,
+    "retrieval_label_precision":
+        ordered(similarity.retrieval_label_precision, "qid"),
+    "embedding_quant_sqnr": ordered(similarity.embedding_quant_sqnr, "dim"),
+    "algebraic_merge_audit":
+        ordered(relational.algebraic_merge_audit, "source"),
     # round-8 wave i: hash-width governance / experimentation health
-    "hash_width_collision_audit": dedup.hash_width_collision_audit,
-    "experiment_srm_audit": curation.experiment_srm_audit,
+    "hash_width_collision_audit":
+        ordered(dedup.hash_width_collision_audit, "bits DESC"),
+    "experiment_srm_audit": ordered(curation.experiment_srm_audit, "arm"),
     # round-8 wave j: dup-graph structure (triangles, assortativity)
-    "graph_triangle_count": dedup.graph_triangle_count,
+    "graph_triangle_count":
+        ordered(dedup.graph_triangle_count, "n_triangles DESC", "doc_id"),
     "graph_degree_assortativity": dedup.graph_degree_assortativity,
     # round-8 wave k: transport-cost drift, shuffle-order audit,
     # zone-map skipping
-    "wasserstein_source_drift": datamix.wasserstein_source_drift,
-    "shard_order_runs_audit": datamix.shard_order_runs_audit,
-    "zone_map_skipping_audit": layout.zone_map_skipping_audit,
+    "wasserstein_source_drift":
+        ordered(datamix.wasserstein_source_drift, "source"),
+    "shard_order_runs_audit": ordered(datamix.shard_order_runs_audit, "shard"),
+    "zone_map_skipping_audit":
+        ordered(layout.zone_map_skipping_audit, "layout", "probe_id"),
     # round-8 wave l: record-linkage weights, absorbing-chain funnel
-    "fellegi_sunter_weights": relational.fellegi_sunter_weights,
-    "markov_absorption_steps": timeseries.markov_absorption_steps,
+    "fellegi_sunter_weights":
+        ordered(relational.fellegi_sunter_weights, "field"),
+    "markov_absorption_steps":
+        ordered(timeseries.markov_absorption_steps, "state"),
     # round-8 wave m: shard-routing & CV-fold governance
     "consistent_hash_migration_audit":
-        skew.consistent_hash_migration_audit,
-    "kfold_strata_audit": curation.kfold_strata_audit,
+        ordered(skew.consistent_hash_migration_audit, "server"),
+    "kfold_strata_audit":
+        ordered(curation.kfold_strata_audit, "lang", "source"),
     # round-8 wave n: dup-graph k-core peeling, mergeable sliding
     # distinct (rolling HLL)
-    "kcore_dedup_graph": dedup.kcore_dedup_graph,
-    "rolling_distinct_users_hll": timeseries.rolling_distinct_users_hll,
+    "kcore_dedup_graph": ordered(dedup.kcore_dedup_graph, "k", "peel_round"),
+    "rolling_distinct_users_hll":
+        ordered(timeseries.rolling_distinct_users_hll, "day"),
     # round-8 wave o: ER survivorship merge, encoding-layout audit
-    "er_survivorship_golden": relational.er_survivorship_golden,
-    "encoding_dictionary_audit": layout.encoding_dictionary_audit,
+    "er_survivorship_golden":
+        ordered(relational.er_survivorship_golden, "golden_custkey"),
+    "encoding_dictionary_audit":
+        ordered(layout.encoding_dictionary_audit, "col_name"),
     # round-8 wave p: removal-effect attribution, PSI drift gate
-    "markov_attribution_removal": timeseries.markov_attribution_removal,
-    "psi_source_drift": datamix.psi_source_drift,
+    "markov_attribution_removal":
+        ordered(timeseries.markov_attribution_removal, "channel"),
+    "psi_source_drift": ordered(datamix.psi_source_drift, "source"),
     # round-8 wave q: peeking audit, RLE run-length layout audit
-    "experiment_peeking_audit": curation.experiment_peeking_audit,
-    "rle_run_length_audit": layout.rle_run_length_audit,
+    "experiment_peeking_audit":
+        ordered(curation.experiment_peeking_audit, "day"),
+    "rle_run_length_audit": ordered(layout.rle_run_length_audit, "col_name"),
     # round-8 wave r: CUPED adjustment, dedup token-savings ledger
-    "ab_cuped_adjustment": curation.ab_cuped_adjustment,
-    "dedup_token_savings": dedup.dedup_token_savings,
+    "ab_cuped_adjustment": ordered(curation.ab_cuped_adjustment, "arm"),
+    "dedup_token_savings": ordered(dedup.dedup_token_savings, "source"),
     # round-8 wave s: partition-quality score over the dup graph,
     # Kleinberg burst automaton
-    "graph_modularity_audit": dedup.graph_modularity_audit,
-    "events_burst_kleinberg": timeseries.events_burst_kleinberg,
+    "graph_modularity_audit": ordered(dedup.graph_modularity_audit, "method"),
+    "events_burst_kleinberg":
+        ordered(timeseries.events_burst_kleinberg, "event_type", "day"),
     # round-8 wave t: isotonic calibration fit, JL distortion audit
-    "isotonic_calibration_pav": curation.isotonic_calibration_pav,
+    "isotonic_calibration_pav":
+        ordered(curation.isotonic_calibration_pav, "bin"),
     "embedding_jl_distortion_audit":
-        similarity.embedding_jl_distortion_audit,
+        ordered(similarity.embedding_jl_distortion_audit, "bin"),
     # round-8 wave u: word2vec sampling table, HLL inclusion-exclusion
-    "negative_sampling_table": textstats.negative_sampling_table,
-    "hll_intersection_audit": textstats.hll_intersection_audit,
+    "negative_sampling_table":
+        ordered(textstats.negative_sampling_table, "rank"),
+    "hll_intersection_audit":
+        ordered(textstats.hll_intersection_audit, "s1", "s2"),
     # round-8 wave v: runtime-filter join governance, rich-club sweep
-    "bloom_join_prefilter_audit": relational.bloom_join_prefilter_audit,
-    "graph_rich_club": dedup.graph_rich_club,
+    "bloom_join_prefilter_audit":
+        ordered(relational.bloom_join_prefilter_audit, "o_orderpriority"),
+    "graph_rich_club": ordered(dedup.graph_rich_club, "k"),
     # round-8 wave w: sketch IVM, time-decay attribution
-    "ivm_hll_registers": textstats.ivm_hll_registers,
-    "attribution_time_decay": timeseries.attribution_time_decay,
-    "readability_scores": textstats.readability_scores,  # hash-paired r7l
-    "events_acf": timeseries.events_acf,  # hash-paired r7k
-    "session_concurrency": timeseries.session_concurrency,  # hash-paired r7k
-    "events_holt_linear": timeseries.events_holt_linear,  # hash-paired r7k
-    "compression_ratio_quality": textstats.compression_ratio_quality,  # rows-only (DEFLATE not SQL-expressible)
-    "padding_waste_audit": curation.padding_waste_audit,
-    "inbatch_collision_audit": curation.inbatch_collision_audit,
-    "ann_dim_truncation_audit": similarity.ann_dim_truncation_audit,
-    "sql_udf_revenue": sql4.sql_udf_revenue,
-    "dedup_jaccard_prefix": dedup.dedup_jaccard_prefix,
-    "quality_classifier_train": curation.quality_classifier_train,  # rows-only (iterative GD)
-    "context_window_stats": curation.context_window_stats,
-    "tokenizer_fertility": textstats.tokenizer_fertility,
-    "source_overlap_matrix": datamix.source_overlap_matrix,
-    "embedding_pca_power": similarity.embedding_pca_power,  # rows-only (iterative fixpoint)
+    "ivm_hll_registers": ordered(textstats.ivm_hll_registers, "source"),
+    "attribution_time_decay":
+        ordered(timeseries.attribution_time_decay, "channel"),
+    "readability_scores":  # hash-paired r7l
+        ordered(textstats.readability_scores, "source"),
+    "events_acf":  # hash-paired r7k
+        ordered(timeseries.events_acf, "event_type", "lag"),
+    "session_concurrency":  # hash-paired r7k
+        ordered(timeseries.session_concurrency, "day"),
+    "events_holt_linear":  # hash-paired r7k
+        ordered(timeseries.events_holt_linear, "event_type", "day"),
+    "compression_ratio_quality":  # rows-only (DEFLATE not SQL-expressible)
+        ordered(textstats.compression_ratio_quality, "source"),
+    "padding_waste_audit": ordered(curation.padding_waste_audit, "strategy"),
+    "inbatch_collision_audit":
+        ordered(curation.inbatch_collision_audit, "source"),
+    "ann_dim_truncation_audit":
+        ordered(similarity.ann_dim_truncation_audit, "qid"),
+    "sql_udf_revenue": ordered(sql4.sql_udf_revenue, "l_returnflag"),
+    "dedup_jaccard_prefix": ordered(dedup.dedup_jaccard_prefix, "id1", "id2"),
+    "quality_classifier_train":  # rows-only (iterative GD)
+        ordered(curation.quality_classifier_train, "b"),
+    "context_window_stats": ordered(curation.context_window_stats, "budget"),
+    "tokenizer_fertility": ordered(textstats.tokenizer_fertility, "lang"),
+    "source_overlap_matrix":
+        ordered(datamix.source_overlap_matrix, "src_a", "src_b"),
+    "embedding_pca_power":  # rows-only (iterative fixpoint)
+        ordered(similarity.embedding_pca_power, "dim"),
     # -- previously witnessed (r5 window), filling out the r6 window --
-    "bloom_decontaminate": datamix.bloom_decontaminate,
-    "dedup_span_chunks": dedup.dedup_span_chunks,
-    "unigram_logprob_quality": textstats.unigram_logprob_quality,
-    "zorder_layout": layout.zorder_layout,
-    "shard_layout_plan": layout.shard_layout_plan,  # hash-paired r7e
+    "bloom_decontaminate": ordered(datamix.bloom_decontaminate, "source"),
+    "dedup_span_chunks": ordered(dedup.dedup_span_chunks, "doc_id"),
+    "unigram_logprob_quality":
+        ordered(textstats.unigram_logprob_quality, "source"),
+    "zorder_layout": ordered(layout.zorder_layout, "file_id"),
+    "shard_layout_plan":  # hash-paired r7e
+        ordered(layout.shard_layout_plan, "source"),
     "split_leakage_guard": curation.split_leakage_guard,
-    "audio_meta": multimodal.audio_meta,
-    "pipeline_pretrain_scale": pipeline.pipeline_pretrain_scale,
-    "doc_hash_embedding": textstats.doc_hash_embedding,
-    "mode_median_aggs": relational.mode_median_aggs,
-    "try_arithmetic": relational.try_arithmetic,
-    "pyds_custom_source": _pyds_custom_source,
-    "udtf_polymorphic_topn": advanced.udtf_polymorphic_topn,
-    "arrow_normalize_embeddings": udfs.arrow_normalize_embeddings,
+    "audio_meta": ordered(multimodal.audio_meta, "doc_id"),
+    "pipeline_pretrain_scale":
+        ordered(pipeline.pipeline_pretrain_scale, "source"),
+    "doc_hash_embedding": ordered(textstats.doc_hash_embedding, "doc_id"),
+    "mode_median_aggs": ordered(relational.mode_median_aggs, "c_mktsegment"),
+    "try_arithmetic": ordered(relational.try_arithmetic, "o_orderstatus"),
+    "pyds_custom_source": ordered(_pyds_custom_source, "doc_id"),
+    "udtf_polymorphic_topn":
+        ordered(advanced.udtf_polymorphic_topn,
+                "l_orderkey", "l_linenumber", "rank"),
+    "arrow_normalize_embeddings":
+        ordered(udfs.arrow_normalize_embeddings, "vec_id"),
     "events_funnel": timeseries.events_funnel,
-    "events_retention_cohorts": timeseries.events_retention_cohorts,
-    "events_session_bigrams": timeseries.events_session_bigrams,
+    "events_retention_cohorts":
+        ordered(timeseries.events_retention_cohorts,
+                "cohort_week", "week_offset"),
+    "events_session_bigrams":
+        ordered(timeseries.events_session_bigrams, "cnt DESC", "bigram"),
     "triangle_count_dedup_graph": dedup.triangle_count_dedup_graph,
-    "events_anomaly_zscore": timeseries.events_anomaly_zscore,
-    "variant_props_stats": sql4.variant_props_stats,
-    "collation_ci_counts": sql4.collation_ci_counts,
-    "window_ignore_nulls": advanced.window_ignore_nulls,
-    "bool_count_aggs": advanced.bool_count_aggs,
-    "regexp_extract_all_terms": advanced.regexp_extract_all_terms,
-    "udtf_tokens": advanced.udtf_tokens,
-    "string_agg_sorted": advanced.string_agg_sorted,
-    "bitwise_aggs": advanced.bitwise_aggs,
-    "doc_chunking": curation.doc_chunking,
-    "text_scrub": curation.text_scrub,
-    "dataset_split": curation.dataset_split,
-    "dq_checks": curation.dq_checks,
-    "cdc_merge_orders": cdc.cdc_merge_orders,
-    "scd2_customer_history": cdc.scd2_customer_history,
-    "decontaminate_ngram": datamix.decontaminate_ngram,
-    "quality_repetition": datamix.quality_repetition,
-    "domain_mixture_sample": datamix.domain_mixture_sample,
-    "embedding_quantize": datamix.embedding_quantize,
-    "global_shuffle_order": datamix.global_shuffle_order,
-    "knn_join_lsh": similarity.knn_join_lsh,  # rows-only (approximate kNN join)
-    "embedding_kmeans_stats": similarity.embedding_kmeans_stats,  # hash-paired r8 (portable exact Lloyd)
-    "seq_packing": curation.seq_packing,  # hash-paired r7 (lockstep recursive first-fit twin)
-    "dedup_components_star": dedup.dedup_components_star,
-    "pipeline_pretrain": pipeline.pipeline_pretrain,
-    "keyword_search": textstats.keyword_search,
-    "dup_ngram_rate": datamix.dup_ngram_rate,
-    "sample_fixed_per_source": datamix.sample_fixed_per_source,
+    "events_anomaly_zscore":
+        ordered(timeseries.events_anomaly_zscore, "event_type", "hour"),
+    "variant_props_stats": ordered(sql4.variant_props_stats, "event_type"),
+    "collation_ci_counts": ordered(sql4.collation_ci_counts, "rep"),
+    "window_ignore_nulls":
+        ordered(advanced.window_ignore_nulls, "user_id", "event_id"),
+    "bool_count_aggs": ordered(advanced.bool_count_aggs, "o_orderpriority"),
+    "regexp_extract_all_terms":
+        ordered(advanced.regexp_extract_all_terms, "cnt DESC", "term"),
+    "udtf_tokens": ordered(advanced.udtf_tokens, "doc_id", "pos"),
+    "string_agg_sorted": ordered(advanced.string_agg_sorted, "r_name"),
+    "bitwise_aggs": ordered(advanced.bitwise_aggs, "o_orderpriority"),
+    "doc_chunking": ordered(curation.doc_chunking, "doc_id", "chunk_idx"),
+    "text_scrub": ordered(curation.text_scrub, "doc_id"),
+    "dataset_split": ordered(curation.dataset_split, "split"),
+    "dq_checks": ordered(curation.dq_checks, "check_name"),
+    "cdc_merge_orders": ordered(cdc.cdc_merge_orders, "o_orderstatus"),
+    "scd2_customer_history":
+        ordered(cdc.scd2_customer_history, "custkey", "version"),
+    "decontaminate_ngram": ordered(datamix.decontaminate_ngram, "source"),
+    "quality_repetition": ordered(datamix.quality_repetition, "source"),
+    "domain_mixture_sample": ordered(datamix.domain_mixture_sample, "source"),
+    "embedding_quantize": ordered(datamix.embedding_quantize, "label"),
+    "global_shuffle_order":
+        ordered(datamix.global_shuffle_order, "shard", "pos"),
+    "knn_join_lsh":  # rows-only (approximate kNN join)
+        ordered(similarity.knn_join_lsh, "qid", "rank"),
+    "embedding_kmeans_stats":  # hash-paired r8 (portable exact Lloyd)
+        ordered(similarity.embedding_kmeans_stats, "cluster"),
+    "seq_packing":  # hash-paired r7 (lockstep recursive first-fit twin)
+        ordered(curation.seq_packing, "source", "pack_id"),
+    "dedup_components_star": ordered(dedup.dedup_components_star, "doc_id"),
+    "pipeline_pretrain": ordered(pipeline.pipeline_pretrain, "split"),
+    "keyword_search":
+        ordered(textstats.keyword_search, "score DESC", "doc_id"),
+    "dup_ngram_rate": ordered(datamix.dup_ngram_rate, "source"),
+    "sample_fixed_per_source":
+        ordered(datamix.sample_fixed_per_source, "source", "rk"),
     "token_zipf_slope": textstats.token_zipf_slope,
     # rows-only operators sit just past the 50-query driver window: the
     # driver's rows-only check is weaker than the hash check, so window
     # slots go to hash-comparable queries; CORRECTNESS_full.json covers
     # these every round regardless.
-    "ann_pq_adc": similarity.ann_pq_adc,  # rows-only (quantized ranks)
-    "ann_pq_rerank": similarity.ann_pq_rerank,  # rows-only (ADC shortlist)
-    "ann_ivfpq_rerank": similarity.ann_ivfpq_rerank,  # rows-only (IVFADC)
-    "hll_union_sources": textstats.hll_union_sources,  # rows-only (DataSketches HLL)
-    "hll_portable_union": textstats.hll_portable_union,  # hash-paired r7b (md5 registers)
-    "winnowing_fingerprint": textstats.winnowing_fingerprint,  # hash-paired r7b
-    "ccnet_perplexity_buckets": textstats.ccnet_perplexity_buckets,  # hash-paired r7b
-    "vocab_coverage_curve": textstats.vocab_coverage_curve,  # hash-paired r7b
-    "embedding_centroid_drift": similarity.embedding_centroid_drift,  # hash-paired r7b
-    "char_trigram_langid": textstats.char_trigram_langid,  # hash-paired r7b
-    "minhash_accuracy_audit": dedup.minhash_accuracy_audit,  # hash-paired r7b
-    "quantile_histogram_portable": relational.quantile_histogram_portable,  # hash-paired r7b
-    "events_ewma_daily": timeseries.events_ewma_daily,  # hash-paired r7b
-    "salted_aggregate_events": skew.salted_aggregate_events,  # hash-paired r7b
-    "join_skew_audit": skew.join_skew_audit,  # hash-paired r7e
-    "winnowing_neardup_pairs": textstats.winnowing_neardup_pairs,  # hash-paired r7b
-    "events_lttb_downsample": timeseries.events_lttb_downsample,
-    "pagerank_dedup_graph": dedup.pagerank_dedup_graph,  # hash-paired r7 (recursive-CTE twin)
-    "semdedup_ivf": similarity.semdedup_ivf,  # hash-paired r8 (portable Lloyd + recursive greedy twin)
-    "mmr_diversified_topk": similarity.mmr_diversified_topk,  # hash-paired r7 (recursive greedy twin)
+    "ann_pq_adc":  # rows-only (quantized ranks)
+        ordered(similarity.ann_pq_adc, "qid", "rank"),
+    "ann_pq_rerank":  # rows-only (ADC shortlist)
+        ordered(similarity.ann_pq_rerank, "qid", "rank"),
+    "ann_ivfpq_rerank":  # rows-only (IVFADC)
+        ordered(similarity.ann_ivfpq_rerank, "qid", "rank"),
+    "hll_union_sources":  # rows-only (DataSketches HLL)
+        ordered(textstats.hll_union_sources, "source"),
+    "hll_portable_union":  # hash-paired r7b (md5 registers)
+        ordered(textstats.hll_portable_union, "source"),
+    "winnowing_fingerprint":  # hash-paired r7b
+        ordered(textstats.winnowing_fingerprint, "doc_id"),
+    # 'head' < 'middle' < 'tail' alphabetically == tercile order
+    "ccnet_perplexity_buckets":  # hash-paired r7b
+        ordered(textstats.ccnet_perplexity_buckets, "lang", "bucket"),
+    "vocab_coverage_curve":  # hash-paired r7b
+        ordered(textstats.vocab_coverage_curve, "vocab_k"),
+    "embedding_centroid_drift":  # hash-paired r7b
+        ordered(similarity.embedding_centroid_drift, "label"),
+    "char_trigram_langid":  # hash-paired r7b
+        ordered(textstats.char_trigram_langid, "lang", "pred_lang"),
+    "minhash_accuracy_audit":  # hash-paired r7b
+        ordered(dedup.minhash_accuracy_audit, "err_decile"),
+    "quantile_histogram_portable":  # hash-paired r7b
+        ordered(relational.quantile_histogram_portable, "o_orderstatus", "q"),
+    "events_ewma_daily":  # hash-paired r7b
+        ordered(timeseries.events_ewma_daily, "event_type", "day"),
+    "salted_aggregate_events":  # hash-paired r7b
+        ordered(skew.salted_aggregate_events, "event_type"),
+    "join_skew_audit":  # hash-paired r7e
+        ordered(skew.join_skew_audit, "axis", "partition_id"),
+    "winnowing_neardup_pairs":  # hash-paired r7b
+        ordered(textstats.winnowing_neardup_pairs, "id1", "id2"),
+    "events_lttb_downsample":
+        ordered(timeseries.events_lttb_downsample, "event_type", "rank"),
+    "pagerank_dedup_graph":  # hash-paired r7 (recursive-CTE twin)
+        ordered(dedup.pagerank_dedup_graph, "rk"),
+    "semdedup_ivf":  # hash-paired r8 (portable Lloyd + recursive greedy twin)
+        ordered(similarity.semdedup_ivf, "vec_id"),
+    "mmr_diversified_topk":  # hash-paired r7 (recursive greedy twin)
+        ordered(similarity.mmr_diversified_topk, "qid", "rank"),
     # --- previously driver-recorded (r1-r4 windows) ---
-    "ngram_count": _ngram_count,
-    "ngram_topk": _ngram_topk,
-    "q1_pricing_summary": relational.q1_pricing_summary,
-    "q3_shipping_priority": relational.q3_shipping_priority,
-    "q5_local_supplier_volume": relational.q5_local_supplier_volume,
+    "ngram_count": ordered(_ngram_count, "ngram"),
+    "ngram_topk": ordered(_ngram_topk, "cnt DESC", "ngram"),
+    "q1_pricing_summary":
+        ordered(relational.q1_pricing_summary, "l_returnflag", "l_linestatus"),
+    "q3_shipping_priority":
+        ordered(relational.q3_shipping_priority,
+                "revenue DESC", "o_orderdate", "o_orderkey"),
+    "q5_local_supplier_volume":
+        ordered(relational.q5_local_supplier_volume, "revenue DESC", "n_name"),
     "q6_forecast_revenue": relational.q6_forecast_revenue,
-    "q18_large_volume_customer": relational.q18_large_volume_customer,
-    "q4_order_priority": relational.q4_order_priority,
-    "q7_volume_shipping": relational.q7_volume_shipping,
-    "q10_returned_items": relational.q10_returned_items,
-    "q12_shipping_lag": relational.q12_shipping_lag,
+    "q18_large_volume_customer":
+        ordered(relational.q18_large_volume_customer,
+                "o_totalprice DESC", "o_orderkey"),
+    "q4_order_priority":
+        ordered(relational.q4_order_priority, "o_orderpriority"),
+    "q7_volume_shipping":
+        ordered(relational.q7_volume_shipping,
+                "supp_nation", "cust_nation", "l_year"),
+    "q10_returned_items":
+        ordered(relational.q10_returned_items, "revenue DESC", "c_custkey"),
+    "q12_shipping_lag": ordered(relational.q12_shipping_lag, "lag_band"),
     "q14_promo_effect": relational.q14_promo_effect,
     "q19_discounted_revenue": relational.q19_discounted_revenue,
-    "q22_global_sales_opportunity": relational.q22_global_sales_opportunity,
-    "filter_predicates": relational.filter_predicates,
-    "project_compute": relational.project_compute,
-    "string_functions": relational.string_functions,
-    "date_functions": relational.date_functions,
-    "math_functions": relational.math_functions,
-    "array_functions": relational.array_functions,
-    "json_functions": relational.json_functions,
-    "json_from_json_typed": relational.json_from_json_typed,
-    "array_explode_pos": relational.array_explode_pos,
-    "string_distance": relational.string_distance,
-    "join_broadcast_dim": relational.join_broadcast_dim,
-    "join_outer": relational.join_outer,
-    "join_semi_anti": relational.join_semi_anti,
-    "join_cross": relational.join_cross,
-    "join_range_theta": relational.join_range_theta,
-    "join_self_pairs": relational.join_self_pairs,
-    "agg_distinct": relational.agg_distinct,
-    "agg_rollup": relational.agg_rollup,
-    "agg_cube": relational.agg_cube,
-    "agg_having": relational.agg_having,
-    "agg_approx_distinct": relational.agg_approx_distinct,  # rows-only (HLL)
-    "approx_percentile_stats": relational.approx_percentile_stats,  # rows-only (t-digest)
-    "pivot_status_by_segment": relational.pivot_status_by_segment,
-    "grouping_sets_sales": relational.grouping_sets_sales,
-    "join_full_outer": relational.join_full_outer,
-    "correlated_scalar_subquery": relational.correlated_scalar_subquery,
-    "stats_aggregates": relational.stats_aggregates,
-    "percentile_stats": relational.percentile_stats,
-    "q2_min_cost_supplier": relational.q2_min_cost_supplier,
-    "q8_market_share": relational.q8_market_share,
-    "q9_product_profit": relational.q9_product_profit,
-    "q11_important_stock": relational.q11_important_stock,
-    "q13_order_distribution": relational.q13_order_distribution,
-    "q15_top_supplier": relational.q15_top_supplier,
-    "q16_supplier_part_count": relational.q16_supplier_part_count,
+    "q22_global_sales_opportunity":
+        ordered(relational.q22_global_sales_opportunity, "c_nationkey"),
+    "filter_predicates": ordered(relational.filter_predicates, "p_partkey"),
+    # (l_orderkey, l_linenumber) is not unique in the fixture: every
+    # varying output column breaks ties
+    "project_compute":
+        ordered(relational.project_compute,
+                "l_orderkey", "l_linenumber", "net_charge", "disc_band",
+                "flag_status"),
+    "string_functions": ordered(relational.string_functions, "p_partkey"),
+    "date_functions": ordered(relational.date_functions, "o_orderkey"),
+    # the same non-unique fixture key as project_compute
+    "math_functions":
+        ordered(relational.math_functions,
+                "l_orderkey", "l_linenumber", "abs_dev", "qty_sqrt",
+                "price_ln", "disc_sq"),
+    "array_functions": ordered(relational.array_functions, "vec_id"),
+    "json_functions": ordered(relational.json_functions, "event_type"),
+    "json_from_json_typed":
+        ordered(relational.json_from_json_typed, "event_id"),
+    "array_explode_pos":
+        ordered(relational.array_explode_pos, "vec_id", "pos"),
+    "string_distance": ordered(relational.string_distance, "p_partkey"),
+    "join_broadcast_dim":
+        ordered(relational.join_broadcast_dim, "r_name", "n_name"),
+    "join_outer": ordered(relational.join_outer, "c_custkey"),
+    "join_semi_anti": ordered(relational.join_semi_anti, "c_custkey"),
+    "join_cross": ordered(relational.join_cross, "r_name", "c_mktsegment"),
+    "join_range_theta": ordered(relational.join_range_theta, "o_orderstatus"),
+    "join_self_pairs": ordered(relational.join_self_pairs, "user_id"),
+    "agg_distinct": ordered(relational.agg_distinct, "o_orderstatus"),
+    "agg_rollup": ordered(relational.agg_rollup, "r_name", "n_name"),
+    "agg_cube": ordered(relational.agg_cube, "l_returnflag", "l_linestatus"),
+    "agg_having": ordered(relational.agg_having, "l_suppkey"),
+    "agg_approx_distinct":  # rows-only (HLL)
+        ordered(relational.agg_approx_distinct, "event_type"),
+    "approx_percentile_stats":  # rows-only (t-digest)
+        ordered(relational.approx_percentile_stats, "o_orderstatus"),
+    "pivot_status_by_segment":
+        ordered(relational.pivot_status_by_segment, "c_mktsegment"),
+    "grouping_sets_sales":
+        ordered(relational.grouping_sets_sales,
+                "l_returnflag", "l_linestatus", "gid"),
+    "join_full_outer": ordered(relational.join_full_outer, "nationkey"),
+    "correlated_scalar_subquery":
+        ordered(relational.correlated_scalar_subquery, "o_orderkey"),
+    "stats_aggregates": ordered(relational.stats_aggregates, "l_returnflag"),
+    "percentile_stats": ordered(relational.percentile_stats, "o_orderstatus"),
+    "q2_min_cost_supplier":
+        ordered(relational.q2_min_cost_supplier,
+                "unit_cost", "p_partkey", "s_name"),
+    "q8_market_share": ordered(relational.q8_market_share, "o_year"),
+    "q9_product_profit":
+        ordered(relational.q9_product_profit, "nation", "o_year"),
+    "q11_important_stock":
+        ordered(relational.q11_important_stock, "value DESC", "p_partkey"),
+    "q13_order_distribution":
+        ordered(relational.q13_order_distribution,
+                "custdist DESC", "c_count DESC"),
+    "q15_top_supplier": ordered(relational.q15_top_supplier, "s_suppkey"),
+    "q16_supplier_part_count":
+        ordered(relational.q16_supplier_part_count,
+                "supplier_cnt DESC", "p_brand", "p_type", "p_size"),
     "q17_small_qty_revenue": relational.q17_small_qty_revenue,
-    "q20_excess_suppliers": relational.q20_excess_suppliers,
-    "q21_waiting_supplier": relational.q21_waiting_supplier,
-    "window_topk_per_group": relational.window_topk_per_group,
-    "window_rank_dense": relational.window_rank_dense,
-    "window_running_sum": relational.window_running_sum,
-    "window_lag_lead": relational.window_lag_lead,
-    "window_range_frame": relational.window_range_frame,
-    "window_distribution": relational.window_distribution,
-    "sort_multi_key_limit": relational.sort_multi_key_limit,
-    "set_operations": relational.set_operations,
-    "union_by_name": relational.union_by_name,
-    "distinct_dedup_rows": relational.distinct_dedup_rows,
-    "sample_seeded": relational.sample_seeded,  # rows-only (engine-specific subset)
-    "sample_stratified": relational.sample_stratified,  # rows-only (engine-specific subset)
-    "pipeline_curation": pipeline.pipeline_curation,
-    "dedup_exact": dedup.dedup_exact,
-    "dedup_minhash_lsh": dedup.dedup_minhash_lsh,
-    "dedup_simhash": dedup.dedup_simhash,
-    "dedup_ngram_jaccard": dedup.dedup_ngram_jaccard,
-    "dedup_embedding_cosine": dedup.dedup_embedding_cosine,
-    "dedup_connected_components": dedup.dedup_connected_components,
-    "dedup_embedding_lsh": dedup.dedup_embedding_lsh,  # rows-only (SRP recall < 1)
-    "sim_search_topk": similarity.sim_search_topk,
+    "q20_excess_suppliers":
+        ordered(relational.q20_excess_suppliers, "s_suppkey"),
+    "q21_waiting_supplier":
+        ordered(relational.q21_waiting_supplier, "numwait DESC", "s_name"),
+    "window_topk_per_group":
+        ordered(relational.window_topk_per_group, "o_custkey", "rn"),
+    "window_rank_dense": ordered(relational.window_rank_dense, "s_suppkey"),
+    "window_running_sum":
+        ordered(relational.window_running_sum, "o_custkey", "o_orderkey"),
+    "window_lag_lead":
+        ordered(relational.window_lag_lead, "user_id", "event_id"),
+    "window_range_frame":
+        ordered(relational.window_range_frame, "o_custkey", "o_orderkey"),
+    "window_distribution":
+        ordered(relational.window_distribution, "o_orderkey"),
+    "sort_multi_key_limit":
+        ordered(relational.sort_multi_key_limit,
+                "l_extendedprice DESC", "l_orderkey", "l_linenumber"),
+    "set_operations": ordered(relational.set_operations, "custkey"),
+    "union_by_name": ordered(relational.union_by_name, "kind", "nationkey"),
+    "distinct_dedup_rows":
+        ordered(relational.distinct_dedup_rows,
+                "l_returnflag", "l_linestatus"),
+    "sample_seeded":  # rows-only (engine-specific subset)
+        ordered(relational.sample_seeded, "o_orderkey"),
+    "sample_stratified":  # rows-only (engine-specific subset)
+        ordered(relational.sample_stratified, "o_orderstatus"),
+    "pipeline_curation": ordered(pipeline.pipeline_curation, "source"),
+    "dedup_exact": ordered(dedup.dedup_exact, "keep_id"),
+    "dedup_minhash_lsh": ordered(dedup.dedup_minhash_lsh, "id1", "id2"),
+    "dedup_simhash": ordered(dedup.dedup_simhash, "doc_id"),
+    "dedup_ngram_jaccard": ordered(dedup.dedup_ngram_jaccard, "id1", "id2"),
+    "dedup_embedding_cosine":
+        ordered(dedup.dedup_embedding_cosine, "id1", "id2"),
+    "dedup_connected_components":
+        ordered(dedup.dedup_connected_components, "doc_id"),
+    "dedup_embedding_lsh":  # rows-only (SRP recall < 1)
+        ordered(dedup.dedup_embedding_lsh, "id1", "id2"),
+    "sim_search_topk": ordered(similarity.sim_search_topk, "qid", "rank"),
     "ann_ivf_topk": similarity.ann_ivf_topk,  # rows-only (approximate)
-    "embedding_stats": similarity.embedding_stats,
-    "text_quality": textstats.text_quality,
-    "token_count": textstats.token_count,
-    "language_id": textstats.language_id,
-    "doc_fingerprint": textstats.doc_fingerprint,
-    "tfidf_top_terms": textstats.tfidf_top_terms,
-    "heavy_hitters_cms": textstats.heavy_hitters_cms,  # hash-paired r7 (md5 cells -> identical sketch)
+    "embedding_stats": ordered(similarity.embedding_stats, "label"),
+    "text_quality": ordered(textstats.text_quality, "doc_id"),
+    "token_count": ordered(textstats.token_count, "source"),
+    "language_id": ordered(textstats.language_id, "lang", "pred_lang"),
+    "doc_fingerprint": ordered(textstats.doc_fingerprint, "doc_id"),
+    "tfidf_top_terms": ordered(textstats.tfidf_top_terms, "doc_id", "rnk"),
+    "heavy_hitters_cms":  # hash-paired r7 (md5 cells -> identical sketch)
+        ordered(textstats.heavy_hitters_cms, "est DESC", "term"),
     # r7: the video-modality twin of audio_meta (ISO-BMFF box walk)
-    "video_meta": multimodal.video_meta,
+    "video_meta": ordered(multimodal.video_meta, "doc_id"),
     # r7: the dup-n-gram half of the Gopher repetition gate
-    "gopher_dup_ngrams": datamix.gopher_dup_ngrams,
+    "gopher_dup_ngrams": ordered(datamix.gopher_dup_ngrams, "source"),
     # r7: Kneser-Ney smoothing — the standard rung above bigram_lm_quality
-    "kneser_ney_quality": textstats.kneser_ney_quality,
+    "kneser_ney_quality":
+        ordered(textstats.kneser_ney_quality, "kn_lp_e6", "doc_id"),
     # r7: cluster-size histogram over the near-dup CC assignment
-    "dedup_cluster_size_histogram": dedup.dedup_cluster_size_histogram,
+    "dedup_cluster_size_histogram":
+        ordered(dedup.dedup_cluster_size_histogram, "cluster_size"),
     # r7: per-dimension embedding audit (dead/skewed dims before ANN)
-    "embedding_dim_stats": similarity.embedding_dim_stats,
+    "embedding_dim_stats": ordered(similarity.embedding_dim_stats, "dim"),
     # r7: nearest-direction as-of join with tolerance (merge_asof twin)
-    "asof_join_nearest": timeseries.asof_join_nearest,
-    "multimodal_decode": multimodal.multimodal_decode,
-    "frame_sample": multimodal.frame_sample,
-    "multimodal_resize": multimodal.multimodal_resize,
-    "multimodal_features": multimodal.multimodal_features,
-    "events_tumbling": timeseries.events_tumbling,
-    "events_sliding": timeseries.events_sliding,
-    "events_session": timeseries.events_session,
-    "events_dedup_first": timeseries.events_dedup_first,
-    "asof_join_events_orders": timeseries.asof_join_events_orders,
-    "events_gap_fill": timeseries.events_gap_fill,
-    "events_daily_ohlc": timeseries.events_daily_ohlc,
-    "udf_pandas_vector_norm": udfs.udf_pandas_vector_norm,
-    "udf_grouped_agg_mean": udfs.udf_grouped_agg_mean,
-    "udf_apply_in_pandas_zscore": udfs.udf_apply_in_pandas_zscore,
-    "udf_python_scalar": udfs.udf_python_scalar,
-    "map_functions": advanced.map_functions,
-    "higher_order_array": advanced.higher_order_array,
-    "unpivot_measures": advanced.unpivot_measures,
+    "asof_join_nearest": ordered(timeseries.asof_join_nearest, "event_id"),
+    "multimodal_decode": ordered(multimodal.multimodal_decode, "doc_id"),
+    "frame_sample": ordered(multimodal.frame_sample, "doc_id"),
+    "multimodal_resize": ordered(multimodal.multimodal_resize, "doc_id"),
+    "multimodal_features": ordered(multimodal.multimodal_features, "doc_id"),
+    "events_tumbling":
+        ordered(timeseries.events_tumbling, "window_start", "event_type"),
+    "events_sliding":
+        ordered(timeseries.events_sliding, "window_start", "event_type"),
+    "events_session":
+        ordered(timeseries.events_session, "user_id", "session_start"),
+    "events_dedup_first":
+        ordered(timeseries.events_dedup_first, "user_id", "event_type"),
+    "asof_join_events_orders":
+        ordered(timeseries.asof_join_events_orders, "event_id"),
+    "events_gap_fill": ordered(timeseries.events_gap_fill, "user_id", "hour"),
+    "events_daily_ohlc":
+        ordered(timeseries.events_daily_ohlc, "user_id", "day"),
+    "udf_pandas_vector_norm": ordered(udfs.udf_pandas_vector_norm, "vec_id"),
+    "udf_grouped_agg_mean":
+        ordered(udfs.udf_grouped_agg_mean, "o_orderstatus"),
+    "udf_apply_in_pandas_zscore":
+        ordered(udfs.udf_apply_in_pandas_zscore, "user_id", "event_id"),
+    "udf_python_scalar": ordered(udfs.udf_python_scalar, "p_partkey"),
+    "map_functions": ordered(advanced.map_functions, "o_orderpriority"),
+    "higher_order_array": ordered(advanced.higher_order_array, "vec_id"),
+    "unpivot_measures":
+        ordered(advanced.unpivot_measures, "l_returnflag", "measure"),
 }
 
 
@@ -646,7 +930,7 @@ tri AS (SELECT u, v, w FROM wedges JOIN closing USING (v, w))"""
 
 
 ORACLE: dict[str, str] = {
-    "ngram_count": f"{_NGRAM3} ORDER BY ngram",
+    "ngram_count": _NGRAM3,
     "ngram_topk": f"{_NGRAM3} ORDER BY cnt DESC, ngram LIMIT 100",
     "q1_pricing_summary": """
 SELECT l_returnflag, l_linestatus,
@@ -659,7 +943,7 @@ SELECT l_returnflag, l_linestatus,
   round(avg(l_discount), 4) AS avg_disc,
   count(*) AS count_order
 FROM lineitem WHERE l_shipdate <= TIMESTAMP '2000-09-02'
-GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus
+GROUP BY l_returnflag, l_linestatus
 """,
     "q3_shipping_priority": """
 SELECT o_orderkey,
@@ -681,7 +965,7 @@ JOIN nation ON s_nationkey = n_nationkey
 JOIN region ON n_regionkey = r_regionkey
 WHERE r_name = 'ASIA'
   AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
-GROUP BY n_name ORDER BY revenue DESC, n_name
+GROUP BY n_name
 """,
     "q6_forecast_revenue": """
 SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
@@ -705,7 +989,6 @@ SELECT p_partkey, p_name, p_brand, p_type, p_size::BIGINT AS p_size
 FROM part
 WHERE p_brand IN ('Brand#13', 'Brand#5') AND p_size BETWEEN 5 AND 25
   AND p_type LIKE 'ECONOMY%' AND p_name IS NOT NULL
-ORDER BY p_partkey
 """,
     "project_compute": """
 SELECT l_orderkey, l_linenumber::BIGINT AS l_linenumber,
@@ -714,7 +997,6 @@ SELECT l_orderkey, l_linenumber::BIGINT AS l_linenumber,
   l_returnflag || '-' || l_linestatus AS flag_status,
   year(l_shipdate)::BIGINT AS ship_year
 FROM lineitem WHERE year(l_shipdate) = 1999
-ORDER BY l_orderkey, l_linenumber, net_charge, disc_band, flag_status
 """,
     "string_functions": """
 SELECT p_partkey,
@@ -726,7 +1008,7 @@ SELECT p_partkey,
   string_split(p_name, ' ')[1] AS first_word,
   lpad(p_partkey::VARCHAR, 8, '0') AS key_padded,
   replace(p_type, ' ', '_') AS type_snake
-FROM part ORDER BY p_partkey
+FROM part
 """,
     "date_functions": """
 SELECT o_orderkey,
@@ -738,7 +1020,7 @@ SELECT o_orderkey,
   date_diff('day', o_orderdate::DATE, DATE '2002-01-01')::BIGINT AS days_to_2002,
   last_day(o_orderdate::DATE)::VARCHAR AS month_end,
   strftime(o_orderdate, '%Y-%m') AS ym
-FROM orders ORDER BY o_orderkey
+FROM orders
 """,
     "math_functions": """
 SELECT l_orderkey, l_linenumber::BIGINT AS l_linenumber,
@@ -750,7 +1032,6 @@ SELECT l_orderkey, l_linenumber::BIGINT AS l_linenumber,
   round(power(l_discount, 2), 6) AS disc_sq,
   (l_orderkey % 7)::BIGINT AS key_mod7
 FROM lineitem
-ORDER BY l_orderkey, l_linenumber, abs_dev, qty_sqrt, price_ln, disc_sq
 """,
     "array_functions": """
 SELECT vec_id,
@@ -760,13 +1041,13 @@ SELECT vec_id,
   round(list_max(embedding::DOUBLE[]), 6) AS vec_max,
   round(list_min(embedding::DOUBLE[]), 6) AS vec_min,
   len(list_filter(embedding::DOUBLE[], x -> x > 0))::BIGINT AS n_pos
-FROM embeddings ORDER BY vec_id
+FROM embeddings
 """,
     "json_functions": """
 SELECT event_type, count(*) AS n,
   round(avg(k), 4) AS avg_k, min(k)::BIGINT AS min_k, max(k)::BIGINT AS max_k
 FROM (SELECT event_type, json_extract_string(props, '$.k')::INT AS k FROM events)
-GROUP BY event_type ORDER BY event_type
+GROUP BY event_type
 """,
     "window_distribution": """
 SELECT o_orderkey, o_orderstatus,
@@ -774,13 +1055,12 @@ SELECT o_orderkey, o_orderstatus,
   round(cume_dist() OVER w, 6) AS cume,
   ntile(4) OVER w::BIGINT AS quartile
 FROM orders WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey)
-ORDER BY o_orderkey
 """,
     "json_from_json_typed": """
 SELECT event_id,
   json_extract_string(props, '$.k')::BIGINT AS k,
   CASE WHEN json_valid(props) THEN 1 ELSE 0 END::BIGINT AS valid
-FROM events ORDER BY event_id
+FROM events
 """,
     "array_explode_pos": """
 SELECT vec_id, (g.ord - 1)::BIGINT AS pos, round(g.val, 6) AS val
@@ -788,89 +1068,83 @@ FROM embeddings,
   LATERAL (SELECT unnest((embedding::DOUBLE[])[1:4]) AS val,
                   generate_subscripts((embedding::DOUBLE[])[1:4], 1) AS ord) g
 WHERE vec_id < 100
-ORDER BY vec_id, pos
 """,
     "string_distance": """
 SELECT p_partkey,
   levenshtein(p_name, p_type)::BIGINT AS lev_name_type,
   round(1 - levenshtein(p_name, p_type) * 1.0 / greatest(length(p_name), length(p_type)), 6) AS name_type_sim
-FROM part ORDER BY p_partkey
+FROM part
 """,
     "join_broadcast_dim": """
 SELECT r_name, n_name, count(*) AS n_customers, round(sum(c_acctbal), 2) AS total_bal
 FROM customer JOIN nation ON c_nationkey = n_nationkey
 JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name, n_name ORDER BY r_name, n_name
+GROUP BY r_name, n_name
 """,
     "join_outer": """
 SELECT c_custkey, c_name, count(o_orderkey) AS n_orders
 FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-GROUP BY c_custkey, c_name ORDER BY c_custkey
+GROUP BY c_custkey, c_name
 """,
     "join_semi_anti": """
 SELECT c_custkey, c_name FROM customer c
 WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 200000)
   AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')
-ORDER BY c_custkey
 """,
     "join_cross": """
 SELECT r_name, c_mktsegment
 FROM region CROSS JOIN (SELECT DISTINCT c_mktsegment FROM customer)
-ORDER BY r_name, c_mktsegment
 """,
     "join_range_theta": """
 SELECT o_orderstatus, count(*) AS n_fast_ship
 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
   AND l_shipdate >= o_orderdate AND l_shipdate <= o_orderdate + INTERVAL 90 DAY
-GROUP BY o_orderstatus ORDER BY o_orderstatus
+GROUP BY o_orderstatus
 """,
     "join_self_pairs": """
 SELECT a.user_id AS user_id, count(*) AS n_pairs
 FROM events a JOIN events b ON a.user_id = b.user_id AND a.event_id < b.event_id
   AND abs(epoch_us(b.ts) - epoch_us(a.ts)) <= 300000000
-GROUP BY a.user_id ORDER BY user_id
+GROUP BY a.user_id
 """,
     "agg_distinct": """
 SELECT o_orderstatus, count(DISTINCT o_custkey) AS n_customers, count(*) AS n_orders,
   round(sum(o_totalprice), 2) AS total,
   round(min(o_totalprice), 2) AS min_price, round(max(o_totalprice), 2) AS max_price
-FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
+FROM orders GROUP BY o_orderstatus
 """,
     "agg_rollup": """
 SELECT r_name, n_name, count(*) AS n_cust, round(sum(c_acctbal), 2) AS bal
 FROM customer JOIN nation ON c_nationkey = n_nationkey
 JOIN region ON n_regionkey = r_regionkey
 GROUP BY ROLLUP (r_name, n_name)
-ORDER BY r_name NULLS FIRST, n_name NULLS FIRST
 """,
     "agg_cube": """
 SELECT l_returnflag, l_linestatus, count(*) AS n, round(sum(l_quantity), 2) AS qty
 FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
 """,
     "agg_having": """
 SELECT l_suppkey, count(*) AS n_items, round(sum(l_extendedprice), 2) AS volume
-FROM lineitem GROUP BY l_suppkey HAVING count(*) > 500 ORDER BY l_suppkey
+FROM lineitem GROUP BY l_suppkey HAVING count(*) > 500
 """,
     "window_topk_per_group": """
 SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
   SELECT o_custkey, o_orderkey, o_totalprice,
     row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey)::BIGINT AS rn
   FROM orders
-) WHERE rn <= 3 ORDER BY o_custkey, rn
+) WHERE rn <= 3
 """,
     "window_rank_dense": """
 SELECT s_suppkey, s_nationkey::BIGINT AS s_nationkey,
   rank() OVER w::BIGINT AS rnk, dense_rank() OVER w::BIGINT AS drnk,
   row_number() OVER w::BIGINT AS rn
 FROM supplier WINDOW w AS (PARTITION BY s_nationkey ORDER BY s_acctbal DESC, s_suppkey)
-ORDER BY s_suppkey
 """,
     "window_running_sum": """
 SELECT o_custkey, o_orderkey,
   round(sum(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_total
-FROM orders ORDER BY o_custkey, o_orderkey
+FROM orders
 """,
     "window_lag_lead": """
 SELECT user_id, event_id,
@@ -878,13 +1152,12 @@ SELECT user_id, event_id,
   lead(value, 1) OVER w AS next_value,
   round(value - lag(value, 1) OVER w, 2) AS delta
 FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-ORDER BY user_id, event_id
 """,
     "window_range_frame": """
 SELECT o_custkey, o_orderkey,
   count(*) OVER (PARTITION BY o_custkey ORDER BY o_orderdate
     RANGE BETWEEN INTERVAL 30 DAY PRECEDING AND INTERVAL 30 DAY FOLLOWING) AS orders_within_30d
-FROM orders ORDER BY o_custkey, o_orderkey
+FROM orders
 """,
     "sort_multi_key_limit": """
 SELECT l_orderkey, l_linenumber::BIGINT AS l_linenumber, l_extendedprice,
@@ -898,7 +1171,7 @@ SELECT custkey FROM (
    SELECT o_custkey FROM orders WHERE o_orderstatus = 'O')
   EXCEPT
   SELECT o_custkey FROM orders WHERE o_orderstatus = 'P'
-) ORDER BY custkey
+)
 """,
     "union_by_name": """
 SELECT kind, nationkey::BIGINT AS nationkey, count(*) AS n, round(sum(acctbal), 2) AS bal
@@ -906,11 +1179,10 @@ FROM (
   SELECT 'customer' AS kind, c_nationkey AS nationkey, c_acctbal AS acctbal FROM customer
   UNION ALL
   SELECT 'supplier', s_nationkey, s_acctbal FROM supplier
-) GROUP BY kind, nationkey ORDER BY kind, nationkey
+) GROUP BY kind, nationkey
 """,
     "distinct_dedup_rows": """
 SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-ORDER BY l_returnflag, l_linestatus
 """,
     "pipeline_curation": rf"""
 WITH t0 AS (
@@ -941,20 +1213,20 @@ live AS (
 ),
 d2 AS (SELECT * FROM d1 WHERE doc_id NOT IN (SELECT id2 FROM live))
 SELECT source, count(*) AS n_docs, sum(len(t))::BIGINT AS total_tokens
-FROM d2 GROUP BY source ORDER BY source
+FROM d2 GROUP BY source
 """,
     "dedup_exact": """
 SELECT sha256(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS n_copies
-FROM documents GROUP BY sha256(text) ORDER BY keep_id
+FROM documents GROUP BY sha256(text)
 """,
-    "dedup_minhash_lsh": f"{_NEAR_DUPS} ORDER BY id1, id2",
+    "dedup_minhash_lsh": f"{_NEAR_DUPS}",
     "dedup_connected_components": f"""
 WITH RECURSIVE
 j AS ({_NEAR_DUPS}),
 {_components("SELECT doc_id FROM documents", "j")}
-SELECT doc_id, component::BIGINT AS component FROM comp ORDER BY doc_id
+SELECT doc_id, component::BIGINT AS component FROM comp
 """,
-    "dedup_ngram_jaccard": f"{_NEAR_DUPS} ORDER BY id1, id2",
+    "dedup_ngram_jaccard": f"{_NEAR_DUPS}",
     "dedup_simhash": rf"""
 WITH toks AS (
   SELECT doc_id, list_distinct({TOKS_SQL}) AS t
@@ -968,7 +1240,7 @@ bits AS (
 ),
 votes AS (SELECT doc_id, i, sum(v) AS s FROM bits GROUP BY doc_id, i)
 SELECT doc_id, sum(CASE WHEN s > 0 THEN (1::BIGINT << i) ELSE 0 END)::BIGINT AS simhash
-FROM votes GROUP BY doc_id ORDER BY doc_id
+FROM votes GROUP BY doc_id
 """,
     "sim_search_topk": """
 WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
@@ -984,14 +1256,13 @@ ranked AS (
   FROM scored
 )
 SELECT qid, nid, round(score, 6) AS score, rank FROM ranked WHERE rank <= 10
-ORDER BY qid, rank
 """,
     "embedding_stats": """
 SELECT label::BIGINT AS label, count(*) AS n,
   round(avg(sqrt(list_dot_product(e, e))), 6) AS avg_norm,
   round(max(list_dot_product(e, e)), 6) AS max_sq_norm
 FROM (SELECT label, embedding::DOUBLE[] AS e FROM embeddings)
-GROUP BY label ORDER BY label
+GROUP BY label
 """,
     "text_quality": rf"""
 WITH t0 AS (
@@ -1017,7 +1288,7 @@ SELECT doc_id, ntok::BIGINT AS n_tokens, nc::BIGINT AS n_chars_m,
   round((CASE WHEN ntok >= 5 THEN 1.0 ELSE 0.0 END
        + CASE WHEN awl >= 3 AND awl <= 10 THEN 1.0 ELSE 0.0 END
        + CASE WHEN pr < 0.2 THEN 1.0 ELSE 0.0 END) / 3.0, 4) AS quality
-FROM t1 ORDER BY doc_id
+FROM t1
 """,
     "token_count": rf"""
 WITH per_doc AS (
@@ -1029,7 +1300,7 @@ SELECT source, count(*) AS n_docs,
   sum(ws_tokens)::BIGINT AS total_ws_tokens,
   sum(bpe_tokens)::BIGINT AS total_bpe_tokens,
   round(avg(bpe_tokens), 4) AS avg_bpe_tokens
-FROM per_doc GROUP BY source ORDER BY source
+FROM per_doc GROUP BY source
 """,
     "language_id": rf"""
 WITH t0 AS (SELECT doc_id, lang, {TOKS_SQL} AS t FROM documents),
@@ -1051,7 +1322,6 @@ pred AS (
   FROM hits
 )
 SELECT lang, pred_lang, count(*) AS n FROM pred GROUP BY lang, pred_lang
-ORDER BY lang, pred_lang
 """,
     "tfidf_top_terms": f"""
 WITH toks AS (SELECT doc_id, unnest({TOKS_SQL}) AS term FROM documents),
@@ -1068,7 +1338,7 @@ ranked AS (
   FROM scored
 )
 SELECT doc_id, term, tf::BIGINT AS tf, round(score, 6) AS tfidf, rnk::BIGINT AS rnk
-FROM ranked WHERE rnk <= 5 ORDER BY doc_id, rnk
+FROM ranked WHERE rnk <= 5
 """,
     "doc_fingerprint": rf"""
 WITH c AS (
@@ -1082,7 +1352,7 @@ kg AS (
   FROM c, LATERAL (SELECT unnest(generate_series(1, greatest(length(compact) - 7, 1))) AS i) g
   GROUP BY doc_id, compact
 )
-SELECT doc_id, md5(compact) AS content_md5, min_kgram_hash FROM kg ORDER BY doc_id
+SELECT doc_id, md5(compact) AS content_md5, min_kgram_hash FROM kg
 """,
     # The Spark side synthesises a VALID bmp/png/gif blob per document
     # (format = doc_id % 3, dims/frames derived from the text byte
@@ -1096,13 +1366,13 @@ SELECT doc_id,
   (octet_length(encode(text)) % 48 + 1)::BIGINT AS height,
   (CASE WHEN doc_id % 3 = 2 THEN octet_length(encode(text)) % 5 + 1
         ELSE 1 END)::BIGINT AS n_frames
-FROM documents ORDER BY doc_id
+FROM documents
 """,
     "frame_sample": """
 SELECT doc_id,
   ((CASE WHEN doc_id % 3 = 2 THEN octet_length(encode(text)) % 5 ELSE 0 END)
     // 2 + 1)::BIGINT AS n_sampled
-FROM documents ORDER BY doc_id
+FROM documents
 """,
     "multimodal_resize": """
 WITH d AS (
@@ -1116,19 +1386,19 @@ SELECT doc_id, width, height,
        ELSE width * 32 // greatest(width, height) END AS new_width,
   CASE WHEN greatest(width, height) <= 32 THEN height
        ELSE height * 32 // greatest(width, height) END AS new_height
-FROM d ORDER BY doc_id
+FROM d
 """,
     "multimodal_features": """
 WITH b AS (SELECT doc_id, octet_length(encode(text))::BIGINT AS n FROM documents)
 SELECT doc_id, 8::BIGINT AS dim,
   round(sqrt(list_sum(list_transform(generate_series(1, 8),
     i -> ((n * i) % 1000 / 1000.0) * ((n * i) % 1000 / 1000.0)))), 6) AS feat_norm
-FROM b ORDER BY doc_id
+FROM b
 """,
     "events_tumbling": """
 SELECT time_bucket(INTERVAL '1 hour', ts)::VARCHAR AS window_start, event_type,
   count(*) AS n, round(sum(value), 2) AS total_value
-FROM events GROUP BY 1, 2 ORDER BY 1, 2
+FROM events GROUP BY 1, 2
 """,
     "events_sliding": """
 WITH e2 AS (
@@ -1138,7 +1408,7 @@ WITH e2 AS (
   FROM events
 )
 SELECT ws::VARCHAR AS window_start, event_type, count(*) AS n
-FROM e2 GROUP BY 1, 2 ORDER BY 1, 2
+FROM e2 GROUP BY 1, 2
 """,
     "events_session": """
 WITH o AS (
@@ -1154,27 +1424,26 @@ s AS (
 )
 SELECT user_id, min(ts)::VARCHAR AS session_start, count(*) AS n_events,
   round(sum(value), 2) AS session_value
-FROM s GROUP BY user_id, sid ORDER BY user_id, session_start
+FROM s GROUP BY user_id, sid
 """,
     "events_dedup_first": """
 SELECT user_id, event_type, event_id, first_ts FROM (
   SELECT user_id, event_type, event_id, ts::VARCHAR AS first_ts,
     row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts, event_id) AS rn
   FROM events
-) WHERE rn = 1 ORDER BY user_id, event_type
+) WHERE rn = 1
 """,
     "asof_join_events_orders": """
 SELECT e.event_id, e.user_id, o.o_orderdate::VARCHAR AS last_order_date
 FROM events e ASOF LEFT JOIN orders o
   ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
-ORDER BY e.event_id
 """,
     "q4_order_priority": """
 SELECT o_orderpriority, count(*) AS order_count
 FROM orders o
 WHERE o_orderdate >= TIMESTAMP '1997-07-01' AND o_orderdate < TIMESTAMP '1997-10-01'
   AND EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-GROUP BY o_orderpriority ORDER BY o_orderpriority
+GROUP BY o_orderpriority
 """,
     "q7_volume_shipping": """
 SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
@@ -1189,7 +1458,7 @@ JOIN nation n2 ON c_nationkey = n2.n_nationkey
 WHERE l_shipdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1997-12-31'
   AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
     OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
+GROUP BY 1, 2, 3
 """,
     "q10_returned_items": """
 SELECT c_custkey, c_name, c_acctbal, n_name,
@@ -1210,7 +1479,7 @@ SELECT CASE WHEN date_diff('day', o_orderdate::DATE, l_shipdate::DATE) <= 30 THE
   sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END)::BIGINT AS high_line_count,
   sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 0 ELSE 1 END)::BIGINT AS low_line_count
 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-GROUP BY lag_band ORDER BY lag_band
+GROUP BY lag_band
 """,
     "q14_promo_effect": """
 SELECT round(sum(CASE WHEN p_type LIKE 'PROMO%' THEN l_extendedprice * (1 - l_discount) ELSE 0 END)
@@ -1232,7 +1501,7 @@ SELECT c_nationkey::BIGINT AS c_nationkey, count(*) AS numcust,
 FROM customer, avg_bal
 WHERE c_acctbal > ab
   AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderdate >= TIMESTAMP '2000-06-01')
-GROUP BY 1 ORDER BY 1
+GROUP BY 1
 """,
     "pivot_status_by_segment": """
 SELECT c_mktsegment,
@@ -1240,7 +1509,7 @@ SELECT c_mktsegment,
   sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END)::BIGINT AS n_o,
   sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END)::BIGINT AS n_p
 FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_mktsegment ORDER BY c_mktsegment
+GROUP BY c_mktsegment
 """,
     "grouping_sets_sales": """
 SELECT l_returnflag, l_linestatus,
@@ -1248,7 +1517,6 @@ SELECT l_returnflag, l_linestatus,
   count(*) AS n, round(sum(l_extendedprice), 2) AS volume
 FROM lineitem
 GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST, gid
 """,
     "join_full_outer": """
 WITH c AS (SELECT c_nationkey AS k, count(*) AS n_cust FROM customer WHERE c_acctbal > 9000 GROUP BY 1),
@@ -1256,14 +1524,12 @@ WITH c AS (SELECT c_nationkey AS k, count(*) AS n_cust FROM customer WHERE c_acc
 SELECT coalesce(c.k, s.k)::BIGINT AS nationkey,
   coalesce(n_cust, 0) AS n_cust, coalesce(n_supp, 0) AS n_supp
 FROM c FULL OUTER JOIN s ON c.k = s.k
-ORDER BY nationkey
 """,
     "correlated_scalar_subquery": """
 WITH ca AS (SELECT o_custkey AS k, avg(o_totalprice) AS cust_avg FROM orders GROUP BY 1)
 SELECT o_orderkey, o_custkey, o_totalprice
 FROM orders JOIN ca ON o_custkey = k
 WHERE o_totalprice > 1.5 * cust_avg
-ORDER BY o_orderkey
 """,
     "stats_aggregates": """
 SELECT l_returnflag, count(*) AS n,
@@ -1271,14 +1537,14 @@ SELECT l_returnflag, count(*) AS n,
   round(var_samp(l_quantity), 4) AS qty_var,
   round(corr(l_extendedprice, l_quantity), 6) + 0.0 AS price_qty_corr,
   round(covar_samp(l_discount, l_tax), 6) + 0.0 AS disc_tax_covar
-FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
+FROM lineitem GROUP BY l_returnflag
 """,
     "percentile_stats": """
 SELECT o_orderstatus,
   round(quantile_cont(o_totalprice, 0.25), 4) AS p25,
   round(quantile_cont(o_totalprice, 0.5), 4) AS median,
   round(quantile_cont(o_totalprice, 0.75), 4) AS p75
-FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
+FROM orders GROUP BY o_orderstatus
 """,
     "events_gap_fill": """
 WITH bounds AS (
@@ -1294,7 +1560,6 @@ observed AS (
 )
 SELECT s.user_id, s.hour::VARCHAR AS hour, coalesce(o.n, 0) AS n
 FROM spine s LEFT JOIN observed o ON s.user_id = o.user_id AND s.hour = o.hour
-ORDER BY s.user_id, s.hour
 """,
     "q2_min_cost_supplier": """
 WITH unit AS (
@@ -1328,7 +1593,7 @@ WITH flow AS (
 )
 SELECT o_year,
   round(sum(CASE WHEN supp_nation = 'NATION_3' THEN volume ELSE 0 END) / sum(volume), 6) AS mkt_share
-FROM flow GROUP BY o_year ORDER BY o_year
+FROM flow GROUP BY o_year
 """,
     "q9_product_profit": """
 SELECT n_name AS nation, year(o_orderdate)::BIGINT AS o_year,
@@ -1338,7 +1603,7 @@ JOIN part ON l_partkey = p_partkey AND p_name LIKE '%red%'
 JOIN supplier ON l_suppkey = s_suppkey
 JOIN nation ON s_nationkey = n_nationkey
 JOIN orders ON l_orderkey = o_orderkey
-GROUP BY 1, 2 ORDER BY 1, 2
+GROUP BY 1, 2
 """,
     "q11_important_stock": """
 WITH val AS (
@@ -1351,7 +1616,6 @@ WITH val AS (
 )
 SELECT l_partkey AS p_partkey, round(value, 2) AS value FROM val
 WHERE value > (SELECT avg(value) * 3.0 FROM val)
-ORDER BY value DESC, p_partkey
 """,
     "q13_order_distribution": """
 WITH per_cust AS (
@@ -1361,7 +1625,6 @@ WITH per_cust AS (
   GROUP BY c_custkey
 )
 SELECT c_count, count(*) AS custdist FROM per_cust GROUP BY c_count
-ORDER BY custdist DESC, c_count DESC
 """,
     "q15_top_supplier": """
 WITH revenue AS (
@@ -1374,13 +1637,12 @@ WITH revenue AS (
 SELECT s_suppkey, s_name, total_revenue
 FROM supplier JOIN revenue ON s_suppkey = supplier_no
 WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
-ORDER BY s_suppkey
 """,
     "q16_supplier_part_count": """
 SELECT p_brand, p_type, p_size::BIGINT AS p_size, count(DISTINCT l_suppkey) AS supplier_cnt
 FROM part JOIN lineitem ON p_partkey = l_partkey
 WHERE p_brand <> 'Brand#5' AND p_size IN (1, 5, 9, 13, 17, 21, 25, 29)
-GROUP BY 1, 2, 3 ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
+GROUP BY 1, 2, 3
 """,
     "q17_small_qty_revenue": """
 WITH pa AS (SELECT l_partkey AS ap_key, 0.5 * avg(l_quantity) AS half_avg FROM lineitem GROUP BY 1)
@@ -1400,7 +1662,6 @@ WITH shipped AS (
 SELECT s_suppkey, s_name, n_name
 FROM supplier JOIN nation ON s_nationkey = n_nationkey
 WHERE s_suppkey IN (SELECT l_suppkey FROM shipped WHERE qty > 50)
-ORDER BY s_suppkey
 """,
     "q21_waiting_supplier": """
 WITH per_supp AS (
@@ -1429,7 +1690,6 @@ p AS (
   FROM v a JOIN v b ON a.vec_id < b.vec_id
 )
 SELECT id1, id2, round(cosine, 6) AS cosine FROM p WHERE cosine >= 0.4
-ORDER BY id1, id2
 """,
     "events_daily_ohlc": """
 SELECT user_id, date_trunc('day', ts)::TIMESTAMP::VARCHAR AS day,
@@ -1438,35 +1698,33 @@ SELECT user_id, date_trunc('day', ts)::TIMESTAMP::VARCHAR AS day,
   round(min(value), 2) AS low,
   round(max(value), 2) AS high,
   count(*) AS n
-FROM events GROUP BY 1, 2 ORDER BY user_id, day
+FROM events GROUP BY 1, 2
 """,
     "events_hierarchical_rollup": """
 WITH hourly AS (
-  SELECT date_diff('day', TIMESTAMP '1970-01-01 00:00:00', ts) AS day_id,
-    date_diff('hour', TIMESTAMP '1970-01-01 00:00:00', ts) AS bucket_id, event_type,
-    count(*) AS n, sum(round(value * 1000000)::BIGINT) AS sm
-  FROM events GROUP BY 1, 2, 3
+  SELECT date_diff('hour', TIMESTAMP '1970-01-01 00:00:00', ts) AS bucket_id,
+    event_type, count(*) AS n, sum(round(value * 1000000)::BIGINT) AS sm
+  FROM events GROUP BY 1, 2
 )
 SELECT 'hour' AS resolution, bucket_id, event_type, n,
   (sm // 10000)::BIGINT AS total_value_cents,
   (sm // n)::BIGINT AS avg_value_micros
 FROM hourly
 UNION ALL
-SELECT 'day', day_id, event_type, sum(n)::BIGINT, (sum(sm) // 10000)::BIGINT,
-  (sum(sm) // sum(n))::BIGINT
-FROM hourly GROUP BY day_id, event_type
-ORDER BY resolution, bucket_id, event_type
+SELECT 'day', floor(bucket_id / 24)::BIGINT AS day_id, event_type,
+  sum(n)::BIGINT, (sum(sm) // 10000)::BIGINT, (sum(sm) // sum(n))::BIGINT
+FROM hourly GROUP BY 2, event_type
 """,
     "udf_pandas_vector_norm": """
 SELECT vec_id, round(sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])), 6) AS l2_norm
-FROM embeddings ORDER BY vec_id
+FROM embeddings
 """,
     "udf_grouped_agg_mean": """
 SELECT o_orderstatus,
   round(CASE WHEN count(*) <= 2 THEN avg(o_totalprice)
              ELSE (sum(o_totalprice) - min(o_totalprice) - max(o_totalprice)) / (count(*) - 2)
         END, 4) AS trimmed_avg_price
-FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
+FROM orders GROUP BY o_orderstatus
 """,
     "udf_apply_in_pandas_zscore": """
 WITH st AS (
@@ -1477,12 +1735,12 @@ WITH st AS (
 )
 SELECT user_id, event_id,
   round(CASE WHEN sd IS NULL OR sd = 0 THEN 0.0 ELSE (value - m) / sd END, 6) AS zscore
-FROM st ORDER BY user_id, event_id
+FROM st
 """,
     "udf_python_scalar": """
 SELECT p_partkey,
   list_sum(list_transform(regexp_extract_all(p_partkey::VARCHAR, '\\d'), x -> x::INT))::BIGINT AS key_digit_sum
-FROM part ORDER BY p_partkey
+FROM part
 """,
     "map_functions": """
 WITH c AS (
@@ -1495,7 +1753,7 @@ SELECT o_orderpriority,
   coalesce(sum(CASE WHEN o_orderstatus = 'O' THEN cnt END), 0)::BIGINT AS n_o,
   coalesce(sum(CASE WHEN o_orderstatus = 'P' THEN cnt END), 0)::BIGINT AS n_p,
   sum(CASE WHEN cnt > 50 THEN 1 ELSE 0 END)::BIGINT AS n_big_status
-FROM c GROUP BY 1 ORDER BY 1
+FROM c GROUP BY 1
 """,
     "higher_order_array": """
 SELECT vec_id,
@@ -1503,7 +1761,7 @@ SELECT vec_id,
   (len(list_filter(embedding::DOUBLE[], x -> abs(x) >= 10.0)) = 0)::BIGINT AS all_small,
   round(list_sum(embedding::DOUBLE[]) / len(embedding), 6) + 0.0 AS mean_val,
   round(list_sum(list_transform(embedding::DOUBLE[], x -> x * x)), 6) AS sum_sq
-FROM embeddings ORDER BY vec_id
+FROM embeddings
 """,
     "unpivot_measures": """
 WITH w AS (
@@ -1516,7 +1774,6 @@ WITH w AS (
 SELECT l_returnflag, 'sum_qty' AS measure, sum_qty AS value FROM w
 UNION ALL SELECT l_returnflag, 'sum_price', sum_price FROM w
 UNION ALL SELECT l_returnflag, 'sum_disc', sum_disc FROM w
-ORDER BY l_returnflag, measure
 """,
     "window_ignore_nulls": """
 SELECT user_id, event_id,
@@ -1526,19 +1783,19 @@ SELECT user_id, event_id,
   round(first_value(CASE WHEN event_type <> 'click' THEN value END IGNORE NULLS)
     OVER (PARTITION BY user_id ORDER BY ts, event_id
           ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING), 2) AS first_valid
-FROM events ORDER BY user_id, event_id
+FROM events
 """,
     "bool_count_aggs": """
 SELECT o_orderpriority,
   bool_and(o_totalprice > 1000.0)::BIGINT AS all_over_1k,
   bool_or(o_totalprice > 400000.0)::BIGINT AS any_over_400k,
   sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END)::BIGINT AS n_finished
-FROM orders GROUP BY 1 ORDER BY 1
+FROM orders GROUP BY 1
 """,
     "regexp_extract_all_terms": """
 SELECT term, count(*)::BIGINT AS cnt
 FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z]{8,}')) AS term FROM documents)
-GROUP BY term HAVING count(*) >= 3 ORDER BY cnt DESC, term
+GROUP BY term HAVING count(*) >= 3
 """,
     "doc_chunking": rf"""
 WITH toks AS (
@@ -1555,7 +1812,7 @@ st AS (
 SELECT doc_id, (ord - 1)::BIGINT AS chunk_idx,
   array_to_string(t[s:s+31], ' ') AS chunk,
   len(t[s:s+31])::BIGINT AS chunk_len
-FROM st ORDER BY doc_id, chunk_idx
+FROM st
 """,
     "text_scrub": rf"""
 WITH m AS (
@@ -1574,7 +1831,7 @@ s AS (
 SELECT doc_id, length(clean)::BIGINT AS clean_len,
   ne::BIGINT AS n_emails_masked, nu::BIGINT AS n_urls_masked,
   substr(clean, 1, 80) AS clean_prefix
-FROM s ORDER BY doc_id
+FROM s
 """,
     "dataset_split": rf"""
 WITH b AS (
@@ -1586,7 +1843,7 @@ SELECT CASE WHEN bucket < 10 THEN 'val'
             WHEN bucket < 20 THEN 'test'
             ELSE 'train' END AS split,
   count(*)::BIGINT AS n_docs, sum(n_tokens)::BIGINT AS total_tokens
-FROM b GROUP BY 1 ORDER BY 1
+FROM b GROUP BY 1
 """,
     "dq_checks": r"""
 WITH c AS (
@@ -1609,7 +1866,7 @@ WITH c AS (
 )
 SELECT check_name, n_violations::BIGINT AS n_violations,
   (n_violations = 0)::BIGINT AS passed
-FROM c ORDER BY check_name
+FROM c
 """,
     "udtf_tokens": """
 WITH d AS (
@@ -1620,21 +1877,20 @@ WITH d AS (
 )
 SELECT doc_id, (g.ord - 1)::INT AS pos, g.token
 FROM d, LATERAL (SELECT unnest(toks) AS token, generate_subscripts(toks, 1) AS ord) g
-ORDER BY doc_id, pos
 """,
     "string_agg_sorted": """
 SELECT r_name,
   string_agg(n_name, ',' ORDER BY n_name) AS nations,
   count(*)::BIGINT AS n_nations
 FROM nation JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name ORDER BY r_name
+GROUP BY r_name
 """,
     "bitwise_aggs": """
 SELECT o_orderpriority,
   bit_and(o_custkey)::BIGINT AS keys_and,
   bit_or(o_custkey)::BIGINT AS keys_or,
   bit_xor(o_custkey)::BIGINT AS keys_xor
-FROM orders GROUP BY 1 ORDER BY 1
+FROM orders GROUP BY 1
 """,
     "cdc_merge_orders": """
 WITH orders0 AS (
@@ -1661,7 +1917,7 @@ merged AS (
 SELECT o_orderstatus, count(*) AS n_orders,
   round(sum(o_totalprice::DECIMAL(18,2)), 2)::DOUBLE AS total_price,
   min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
-FROM merged GROUP BY 1 ORDER BY 1
+FROM merged GROUP BY 1
 """,
     "scd2_customer_history": """
 WITH v AS (
@@ -1674,7 +1930,7 @@ WITH v AS (
   WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 )
 SELECT custkey, version::BIGINT AS version, valid_from, valid_to, balance
-FROM v WHERE version <= 3 ORDER BY custkey, version
+FROM v WHERE version <= 3
 """,
     "decontaminate_ngram": f"""
 WITH toks AS (SELECT doc_id, source, {TOKS_SQL} AS t FROM documents),
@@ -1692,7 +1948,7 @@ SELECT t.source, count(*)::BIGINT AS n_train_docs,
   count(h.doc_id)::BIGINT AS n_contaminated,
   round(count(h.doc_id) * 1.0 / count(*), 4) AS contam_rate
 FROM train t LEFT JOIN hits h ON t.doc_id = h.doc_id
-GROUP BY t.source ORDER BY t.source
+GROUP BY t.source
 """,
     "decontaminate_fuzzy": f"""
 WITH {_SHINGLE_SETS},
@@ -1709,7 +1965,7 @@ jac AS (
   JOIN sizes s2 ON bench_id = s2.doc_id
 )
 SELECT train_id, bench_id, round(j, 6) AS jaccard FROM jac
-WHERE j >= 0.8 ORDER BY train_id, bench_id
+WHERE j >= 0.8
 """,
     "decontaminate_semantic": """
 WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
@@ -1722,7 +1978,7 @@ s AS (
   FROM t, b
 )
 SELECT train_id, bench_id, round(c, 6) AS cosine FROM s
-WHERE c >= 0.4 ORDER BY train_id, bench_id
+WHERE c >= 0.4
 """,
     "dedup_keep_best": f"""
 WITH RECURSIVE
@@ -1737,7 +1993,7 @@ m AS (
 )
 SELECT component::BIGINT AS component, doc_id AS keep_id,
   n_members::BIGINT AS n_members, n_chars AS keep_n_chars
-FROM m WHERE rn = 1 AND n_members >= 2 ORDER BY component
+FROM m WHERE rn = 1 AND n_members >= 2
 """,
     "pipeline_target_select": f"""
 WITH RECURSIVE
@@ -1802,7 +2058,7 @@ SELECT source, count(*)::BIGINT AS n_train_docs,
   sum(CASE WHEN is_contam THEN 1 ELSE 0 END)::BIGINT AS n_contaminated,
   sum(CASE WHEN is_dup THEN 1 ELSE 0 END)::BIGINT AS n_dup_dropped,
   sum(CASE WHEN is_sel THEN 1 ELSE 0 END)::BIGINT AS n_selected
-FROM flags GROUP BY source ORDER BY source
+FROM flags GROUP BY source
 """,
     "dedup_repeated_spans": f"""
 WITH toks AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
@@ -1829,7 +2085,7 @@ isl AS (
 )
 SELECT doc_id, min(p)::BIGINT AS span_start, (max(p) + 7)::BIGINT AS span_end,
   (max(p) + 7 - min(p) + 1)::BIGINT AS span_tokens
-FROM isl GROUP BY doc_id, island ORDER BY doc_id, span_start
+FROM isl GROUP BY doc_id, island
 """,
     "dsir_importance_sample": f"""
 WITH tok0 AS (SELECT doc_id, source, unnest(t) AS w
@@ -1860,7 +2116,7 @@ lw AS (
 SELECT source, count(*)::BIGINT AS n_train_docs,
   sum(CASE WHEN lw > 0 THEN 1 ELSE 0 END)::BIGINT AS n_selected,
   round(avg(lw), 6) AS avg_log_weight
-FROM lw GROUP BY source ORDER BY source
+FROM lw GROUP BY source
 """,
     "quality_repetition": f"""
 WITH toks AS (SELECT doc_id, source, {TOKS_SQL} AS t FROM documents),
@@ -1882,7 +2138,7 @@ SELECT source, count(*)::BIGINT AS n_docs,
     AS n_flagged,
   round(avg(top_token_frac), 4) AS avg_top_token_frac,
   round(avg(distinct_frac), 4) AS avg_distinct_frac
-FROM d GROUP BY source ORDER BY source
+FROM d GROUP BY source
 """,
     "domain_mixture_sample": rf"""
 WITH s AS (
@@ -1903,7 +2159,7 @@ d AS (
 SELECT source, target_pct::BIGINT AS target_pct,
   count(*)::BIGINT AS n_docs, sum(kept)::BIGINT AS n_sampled,
   sum(CASE WHEN kept = 1 THEN n_chars ELSE 0 END)::BIGINT AS sampled_chars
-FROM d GROUP BY 1, 2 ORDER BY source
+FROM d GROUP BY 1, 2
 """,
     "embedding_quantize": """
 WITH v AS (
@@ -1927,7 +2183,7 @@ e AS (
 SELECT label, count(*)::BIGINT AS n_vecs,
   round(avg(scale), 6) AS avg_scale,
   round(avg(mse), 8) AS avg_mse
-FROM e GROUP BY label ORDER BY label
+FROM e GROUP BY label
 """,
     "global_shuffle_order": f"""
 WITH k AS (
@@ -1939,7 +2195,7 @@ SELECT shard, pos, doc_id FROM (
   SELECT shard, row_number() OVER (PARTITION BY shard ORDER BY k) AS pos,
          doc_id
   FROM k
-) WHERE pos <= 5 ORDER BY shard, pos
+) WHERE pos <= 5
 """,
 }
 
@@ -2001,7 +2257,7 @@ d3 AS (
 SELECT CASE WHEN sb < 10 THEN 'val' WHEN sb < 20 THEN 'test'
             ELSE 'train' END AS split,
   count(*)::BIGINT AS n_docs, sum(len(t))::BIGINT AS total_tokens
-FROM d3 GROUP BY 1 ORDER BY 1
+FROM d3 GROUP BY 1
 """
 
 # Conjunctive keyword search over the same tokenisation, ranked by
@@ -2048,7 +2304,7 @@ short AS (
 )
 SELECT agg.source, n_docs, avg_dup_rate, n_mostly_dup,
   coalesce(n_short, 0)::BIGINT AS n_short
-FROM agg LEFT JOIN short USING (source) ORDER BY agg.source
+FROM agg LEFT JOIN short USING (source)
 """
 
 # Deterministic per-domain cap: md5(doc_id) order, ties by doc_id.
@@ -2060,7 +2316,6 @@ WITH r AS (
   FROM documents
 )
 SELECT source, rk::BIGINT AS rk, doc_id FROM r WHERE rk <= 12
-ORDER BY source, rk
 """
 
 # Zipf slope over the top-500 token ranks (rank ties broken by token so
@@ -2098,7 +2353,7 @@ WITH RECURSIVE mon(m) AS (
 SELECT m::DATE AS month_start, count(o_orderkey)::BIGINT AS n_orders,
   coalesce(sum(round(o_totalprice * 100)::BIGINT), 0) / 100.0 AS total_price
 FROM mon LEFT JOIN orders ON date_trunc('month', o_orderdate) = m
-GROUP BY m ORDER BY m
+GROUP BY m
 """
 
 ORACLE["lateral_topk_orders"] = """
@@ -2108,7 +2363,6 @@ LATERAL (SELECT o_orderkey, o_totalprice FROM orders
          WHERE o_custkey = c.c_custkey
          ORDER BY o_totalprice DESC, o_orderkey LIMIT 3) o
 WHERE c.c_mktsegment = 'BUILDING'
-ORDER BY c.c_custkey, o_totalprice DESC, o.o_orderkey
 """
 
 ORACLE["variant_props_stats"] = """
@@ -2116,7 +2370,7 @@ SELECT event_type, count(*)::BIGINT AS n,
   count(json_extract(props, '$.k'))::BIGINT AS n_with_k,
   round(avg(json_extract(props, '$.k')::INT), 4) AS avg_k,
   max(json_extract(props, '$.k')::INT)::BIGINT AS max_k
-FROM events GROUP BY event_type ORDER BY event_type
+FROM events GROUP BY event_type
 """
 
 ORACLE["collation_ci_counts"] = """
@@ -2125,7 +2379,7 @@ WITH names AS (
   UNION ALL SELECT lower(r_name) FROM region
 )
 SELECT min(name) AS rep, count(*)::BIGINT AS n
-FROM names GROUP BY lower(name) ORDER BY rep
+FROM names GROUP BY lower(name)
 """
 
 # Bloom-filter decontamination: the oracle rebuilds the identical
@@ -2149,7 +2403,7 @@ SELECT t.source, count(*)::BIGINT AS n_train_docs,
   sum(coalesce(h.flagged, 0))::BIGINT AS n_flagged_bloom,
   round(sum(coalesce(h.flagged, 0)) * 1.0 / count(*), 4) AS flag_rate
 FROM train t LEFT JOIN hits h ON t.doc_id = h.doc_id
-GROUP BY t.source ORDER BY t.source
+GROUP BY t.source
 """
 
 # Sub-document chunk dedup: first-occurrence-wins over 8-token spans,
@@ -2183,7 +2437,6 @@ SELECT t.doc_id, t.n_chunks::BIGINT AS n_chunks,
   coalesce(r.n_kept, 0)::BIGINT AS n_kept,
   md5(coalesce(r.rebuilt, '')) AS dedup_fp
 FROM totals t LEFT JOIN rebuilt r ON t.doc_id = r.doc_id
-ORDER BY t.doc_id
 """
 
 # Corpus-unigram LM quality proxy (CCNet/RefinedWeb perplexity filter
@@ -2209,7 +2462,7 @@ SELECT source, count(*)::BIGINT AS n_docs,
   round(avg(ar) - ln(min(n_total)), 4) AS avg_logprob,
   sum((ar < cut)::BIGINT)::BIGINT AS n_low_quality
 FROM per_doc, stats
-GROUP BY source ORDER BY source
+GROUP BY source
 """
 
 # Z-order layout audit: the oracle regenerates the identical Morton
@@ -2239,7 +2492,7 @@ zed AS (SELECT x, y, (@MORTON@)::BIGINT AS zval FROM keyed)
 SELECT (zval >> 11)::BIGINT AS file_id, count(*)::BIGINT AS n_rows,
   min(x)::BIGINT AS min_x, max(x)::BIGINT AS max_x,
   min(y)::BIGINT AS min_y, max(y)::BIGINT AS max_y
-FROM zed GROUP BY 1 ORDER BY 1
+FROM zed GROUP BY 1
 """.replace("@MORTON@", _MORTON_SQL)
 
 # Near-dup-aware split guard: cluster-keyed split assignment (recursive
@@ -2293,7 +2546,7 @@ WITH b AS (
 )
 SELECT doc_id, sample_rate, 1::BIGINT AS channels, 16::BIGINT AS bits,
   n_samples, round(n_samples * 1000.0 / sample_rate, 3) AS duration_ms
-FROM b ORDER BY doc_id
+FROM b
 """
 
 # Round-5 scale-path assembly: LM-quality gate -> span dedup + rebuild
@@ -2356,7 +2609,6 @@ SELECT i.source, i.n_in::BIGINT AS n_in,
   coalesce(o.n_clean, 0)::BIGINT AS n_clean,
   coalesce(o.final_tokens, 0)::BIGINT AS final_tokens
 FROM n_in i LEFT JOIN n_q q USING (source) LEFT JOIN outp o USING (source)
-ORDER BY i.source
 """
 
 # Feature-hashing document vectors: md5-bucket counts, portable on both
@@ -2380,7 +2632,6 @@ agg AS (
 )
 SELECT a.doc_id, a.nnz, a.l2norm, r.b::BIGINT AS top_bucket
 FROM agg a JOIN ranked r ON a.doc_id = r.doc_id AND r.rn = 1
-ORDER BY a.doc_id
 """
 
 ORACLE["mode_median_aggs"] = """
@@ -2404,7 +2655,6 @@ base AS (
 )
 SELECT b.c_mktsegment, b.n, w.mode_nation::BIGINT AS mode_nation, b.median_bal
 FROM base b JOIN winners w USING (c_mktsegment)
-ORDER BY b.c_mktsegment
 """
 
 ORACLE["try_arithmetic"] = """
@@ -2421,7 +2671,7 @@ SELECT o_orderstatus, count(*)::BIGINT AS n,
   sum((per_bucket IS NULL)::BIGINT)::BIGINT AS n_div_by_zero,
   sum((overflow_add IS NULL)::BIGINT)::BIGINT AS n_overflow,
   round(avg(priority_num), 2) AS avg_priority_num
-FROM t GROUP BY o_orderstatus ORDER BY o_orderstatus
+FROM t GROUP BY o_orderstatus
 """
 
 # The custom Python data source's generation recipe, replayed in SQL:
@@ -2441,7 +2691,7 @@ tok AS (
 docs AS (SELECT doc_id, string_agg(w, ' ' ORDER BY i) AS text FROM tok GROUP BY doc_id)
 SELECT doc_id, length(text)::BIGINT AS n_chars,
   (length(text) - length(replace(text, ' ', '')) + 1)::BIGINT AS n_tokens
-FROM docs ORDER BY doc_id
+FROM docs
 """
 
 # Polymorphic UDTF twin: unpivot the three measures, rank desc with the
@@ -2471,7 +2721,6 @@ m AS (
 SELECT l_orderkey, l_linenumber, rank, measure,
   round(val, 2) AS top2_value
 FROM m WHERE rank <= 2
-ORDER BY l_orderkey, l_linenumber, rank
 """
 
 ORACLE["arrow_normalize_embeddings"] = """
@@ -2480,7 +2729,7 @@ n AS (SELECT vec_id, sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm,
              e[1] AS x0 FROM v)
 SELECT vec_id, round(nrm, 4) AS l2norm,
   round(CASE WHEN nrm = 0 THEN 0.0 ELSE x0 / nrm END, 6) AS first_component
-FROM n ORDER BY vec_id
+FROM n
 """
 
 ORACLE["events_funnel"] = """
@@ -2512,7 +2761,7 @@ SELECT cohort_wk::DATE::VARCHAR AS cohort_week,
   count(DISTINCT w.user_id)::BIGINT AS n_users
 FROM weeks w JOIN first USING (user_id)
 WHERE date_diff('day', cohort_wk, wk) // 7 <= 4
-GROUP BY 1, 2 ORDER BY 1, 2
+GROUP BY 1, 2
 """
 
 # The flagship n-gram applied to event sequences within gap-sessions:
@@ -2578,7 +2827,6 @@ FROM scored
 WHERE n_hist >= 3
   AND abs(coalesce(CASE WHEN sigma = 0 THEN (CASE WHEN n = mu THEN 0.0 END)
                         ELSE (n - mu) / sigma END, 0.0)) > 3.0
-ORDER BY event_type, hour
 """
 
 
@@ -2677,7 +2925,6 @@ JOIN h ha ON cand.doc_a = ha.doc_id
 JOIN h hb ON cand.doc_b = hb.doc_id
 WHERE (bit_count(xor(ha.b0, hb.b0)) + bit_count(xor(ha.b1, hb.b1))
        + bit_count(xor(ha.b2, hb.b2)) + bit_count(xor(ha.b3, hb.b3))) <= 3
-ORDER BY doc_a, doc_b
 """
 
 # Okapi BM25 (Lucene +1 idf variant): tf/df/dl/N are exact integers,
@@ -2757,7 +3004,6 @@ wide AS (
 tot AS (SELECT {", ".join(f"sum(c_{l}) AS n_{l}" for l in _JSD_LANGS)}
         FROM wide)
 {" UNION ALL ".join(_jsd_pair_select(a, b) for a, b in _JSD_PAIRS)}
-ORDER BY lang_a, lang_b
 """
 
 # Hard-negative mining: exact cosine (identical left-to-right fold),
@@ -2778,7 +3024,7 @@ ranked AS (
   FROM scored
 )
 SELECT qid, nid, neg_label, round(score, 6) AS score, rank
-FROM ranked WHERE rank <= 3 ORDER BY qid, rank
+FROM ranked WHERE rank <= 3
 """
 
 # Median/MAD robust outliers (Iglewicz-Hoaglin modified z-score):
@@ -2805,7 +3051,6 @@ scored AS (
   WHERE mad > 0
 )
 SELECT * FROM scored WHERE abs(mad_z) > 3.5
-ORDER BY event_type, event_id
 """
 
 # Incremental ingest dedup: exact all-pairs Jaccard oracle for the
@@ -2844,7 +3089,6 @@ SELECT doc_id,
   CASE WHEN component <> doc_id THEN component ELSE NULL END::BIGINT
     AS match_id
 FROM comp
-ORDER BY doc_id
 """
 
 # Efraimidis-Spirakis weighted sampling: u from the md5-bucket
@@ -2885,7 +3129,7 @@ SELECT event_type, day::TIMESTAMP::VARCHAR AS day,
   round(sum(value * dt) / sum(dt), 6) AS twap,
   round(avg(value), 6) AS mean_unweighted,
   count(*)::BIGINT AS n, sum(dt)::BIGINT AS covered_us
-FROM d GROUP BY event_type, day ORDER BY event_type, day
+FROM d GROUP BY event_type, day
 """
 
 # Winsorized per-type stats: envelope edges rounded to 4 dp before the
@@ -2905,7 +3149,7 @@ SELECT event_type, count(*)::BIGINT AS n,
   round(avg(least(greatest(value, lo), hi)), 6) AS mean_winsorized,
   any_value(lo) AS lo, any_value(hi) AS hi
 FROM events JOIN env USING (event_type)
-GROUP BY event_type ORDER BY event_type
+GROUP BY event_type
 """
 
 # Equi-depth histogram: decile edges rounded to 4 dp so both engines
@@ -2923,7 +3167,7 @@ SELECT len(list_filter(ed, e -> o_totalprice > e))::BIGINT AS bucket,
   count(*)::BIGINT AS n,
   round(min(o_totalprice), 2) AS lo, round(max(o_totalprice), 2) AS hi
 FROM orders, edges
-GROUP BY 1 ORDER BY bucket
+GROUP BY 1
 """
 
 # --- round-6 fourth wave: tokenizer training / index build / memorization ---
@@ -2984,7 +3228,7 @@ SELECT v.doc_id, count(*)::BIGINT AS n_grams,
   1.0 - sum(CASE WHEN tg.g IS NOT NULL THEN 1 ELSE 0 END) / count(*)
     AS novelty
 FROM val_g v LEFT JOIN train_g tg ON v.g = tg.g
-GROUP BY v.doc_id ORDER BY v.doc_id
+GROUP BY v.doc_id
 """
 
 ORACLE["mixture_temperature_weights"] = rf"""
@@ -3007,7 +3251,7 @@ SELECT source, n_docs, n_tokens,
   round(share, 6) AS natural_share,
   round(scaled / z, 6) AS weight,
   round(scaled / z * 1000, 2) AS expected_docs
-FROM sc ORDER BY source
+FROM sc
 """
 
 ORACLE["quantile_normalize_quality"] = rf"""
@@ -3027,7 +3271,7 @@ SELECT source, count(*)::BIGINT AS n_docs,
   round(max(raw), 6) AS raw_max,
   sum(CASE WHEN q >= 0.8 THEN 1 ELSE 0 END)::BIGINT AS n_above_cut,
   round(min(CASE WHEN q >= 0.8 THEN raw END), 6) AS raw_cut_equiv
-FROM ranked GROUP BY source ORDER BY source
+FROM ranked GROUP BY source
 """
 
 ORACLE["ann_dim_truncation_audit"] = """
@@ -3061,7 +3305,6 @@ FROM (SELECT qid, max(CASE WHEN rnk = 1 THEN nid END) AS top1_full
 JOIN (SELECT qid, max(CASE WHEN rnk = 1 THEN nid END) AS top1_trunc
       FROM rt GROUP BY qid) t ON f.qid = t.qid
 LEFT JOIN ov ON ov.qid = f.qid
-ORDER BY f.qid
 """
 
 ORACLE["padding_waste_audit"] = rf"""
@@ -3092,7 +3335,7 @@ ws AS (
 )
 SELECT strategy, n_batches, total_tokens, padding_tokens,
   padding_tokens / (padding_tokens + total_tokens) AS waste_frac
-FROM ws ORDER BY strategy
+FROM ws
 """
 
 ORACLE["inbatch_collision_audit"] = """
@@ -3105,7 +3348,7 @@ WITH batched AS (
 per AS (SELECT b, source, count(*)::BIGINT AS c FROM batched GROUP BY b, source)
 SELECT source, sum(c)::BIGINT AS n_docs,
   cast(sum(c * (c - 1) / 2) AS BIGINT) AS same_source_pairs
-FROM per GROUP BY source ORDER BY source
+FROM per GROUP BY source
 """
 
 ORACLE["sql_udf_revenue"] = """
@@ -3114,7 +3357,7 @@ SELECT l_returnflag, count(*)::BIGINT AS n_items,
   round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2)
     AS sum_charge
 FROM lineitem WHERE l_quantity < 25
-GROUP BY l_returnflag ORDER BY l_returnflag
+GROUP BY l_returnflag
 """
 
 ORACLE["context_window_stats"] = rf"""
@@ -3127,7 +3370,7 @@ SELECT budget::BIGINT AS budget, count(*)::BIGINT AS n_docs,
   sum(n)::BIGINT AS tokens_total,
   sum(least(n, budget))::BIGINT AS tokens_kept,
   sum(least(n, budget)) / sum(n) AS kept_frac
-FROM per GROUP BY budget ORDER BY budget
+FROM per GROUP BY budget
 """
 
 ORACLE["tokenizer_fertility"] = f"""
@@ -3139,7 +3382,7 @@ WITH per AS (
 )
 SELECT lang, count(*)::BIGINT AS n_docs, sum(ws)::BIGINT AS ws_tokens,
   sum(bpe)::BIGINT AS bpe_tokens, sum(bpe) / sum(ws) AS fertility
-FROM per GROUP BY lang ORDER BY lang
+FROM per GROUP BY lang
 """
 
 ORACLE["source_overlap_matrix"] = f"""
@@ -3159,7 +3402,6 @@ SELECT src_a, src_b, shared_grams,
 FROM pairs
 JOIN sizes sa ON sa.source = src_a
 JOIN sizes sb ON sb.source = src_b
-ORDER BY src_a, src_b
 """
 
 # Prefix-filtered exact Jaccard produces the IDENTICAL qualifying-pair
@@ -3263,7 +3505,7 @@ sel(qid, step, nid, rel, mmr, picked) AS (
 )
 SELECT qid, nid, round(rel * 1e6)::BIGINT AS relevance_e6,
   round(mmr * 1e6)::BIGINT AS mmr_e6, step::BIGINT AS rank
-FROM sel ORDER BY qid, rank
+FROM sel
 """
 
 # --------------------------------------------------------------------------
@@ -3386,7 +3628,7 @@ WITH b AS (
 )
 SELECT doc_id, timescale, duration, n_tracks, width, height,
   duration * 1000 // timescale AS duration_ms
-FROM b ORDER BY doc_id
+FROM b
 """
 
 # r7: gopher_dup_ngrams — the within-doc duplicated-5-gram coverage
@@ -3418,7 +3660,7 @@ per_doc AS (
 SELECT source, count(*)::BIGINT AS n_docs,
   sum((frac_e6 > 200000)::BIGINT)::BIGINT AS n_flagged,
   sum(frac_e6)::BIGINT AS sum_dup_frac_e6
-FROM per_doc GROUP BY source ORDER BY source
+FROM per_doc GROUP BY source
 """
 
 # r7: kneser_ney_quality — interpolated KN bigram LM, discount 0.75.
@@ -3466,7 +3708,7 @@ sizes AS (SELECT component, count(*) AS k FROM comp GROUP BY component)
 SELECT k::BIGINT AS cluster_size, count(*)::BIGINT AS n_clusters,
   (k * count(*))::BIGINT AS n_docs,
   ((k - 1) * count(*))::BIGINT AS docs_removed_if_keep_one
-FROM sizes GROUP BY k ORDER BY cluster_size
+FROM sizes GROUP BY k
 """
 
 # r7: embedding_dim_stats — float32 inputs make the float64 sum exact
@@ -3483,7 +3725,7 @@ SELECT dim::BIGINT AS dim, count(*)::BIGINT AS n,
   round(sum(x) * 1e6 / count(*))::BIGINT AS mean_e6,
   min(x) AS min_x, max(x) AS max_x,
   sum((x = 0.0)::BIGINT)::BIGINT AS n_zero
-FROM cells GROUP BY dim ORDER BY dim
+FROM cells GROUP BY dim
 """
 
 # r7: seq_packing converts from rows-only to hash-paired — first-fit
@@ -3521,7 +3763,7 @@ ff(source, bucket, rn, doc_id, t, pack_idx, bins) AS (
 )
 SELECT source, (pack_idx * 8 + bucket)::BIGINT AS pack_id,
   count(*)::BIGINT AS n_docs, sum(t)::BIGINT AS pack_tokens
-FROM ff GROUP BY source, pack_id ORDER BY source, pack_id
+FROM ff GROUP BY source, pack_id
 """
 
 # r7: asof_join_nearest — pandas merge_asof(direction='nearest',
@@ -3542,7 +3784,6 @@ FROM events e LEFT JOIN LATERAL (
         <= 604800000000
   ORDER BY dist_us, direction LIMIT 1
 ) o ON true
-ORDER BY event_id
 """
 
 # r7b: hll_portable_union — the hash-paired HLL twin: the portable HLL
@@ -3564,7 +3805,7 @@ est AS (
 )
 SELECT source, n_hit::BIGINT AS n_buckets_hit,
   {hll_estimate_sql()} AS est_distinct
-FROM est ORDER BY source
+FROM est
 """
 
 # r7b: winnowing_fingerprint — Schleimer et al. winnowing with the
@@ -3605,7 +3846,7 @@ SELECT doc_id, max(n_kgrams)::BIGINT AS n_kgrams,
   count(*)::BIGINT AS n_fp,
   min(sel // 16777216)::BIGINT AS fp_min_hash,
   bit_xor(sel)::BIGINT AS fp_xor
-FROM fps GROUP BY doc_id ORDER BY doc_id
+FROM fps GROUP BY doc_id
 """
 
 # r7b: ccnet_perplexity_buckets — per-language LM-score terciles. The
@@ -3633,7 +3874,7 @@ SELECT lang,
   CASE b WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket,
   count(*)::BIGINT AS n_docs, sum(len)::BIGINT AS total_tokens,
   round(sum(ar_e8) / (count(*) * 100000000.0), 4) AS avg_logprob
-FROM bucketed GROUP BY lang, b ORDER BY lang, bucket
+FROM bucketed GROUP BY lang, b
 """
 
 # r7b: vocab_coverage_curve — deterministic (count DESC, token ASC)
@@ -3655,7 +3896,7 @@ cov AS (
 SELECT c.vocab_k, least(c.vocab_k, t.n_types)::BIGINT AS n_types_kept,
   c.covered_occ, t.total_occ,
   round(c.covered_occ / t.total_occ, 6) AS coverage
-FROM cov c, tot t ORDER BY c.vocab_k
+FROM cov c, tot t
 """
 
 # r7b: embedding_centroid_drift — float32 sums are exact in float64,
@@ -3685,7 +3926,7 @@ SELECT label::BIGINT AS label, n_vecs::BIGINT AS n_vecs,
         THEN dot_lg::DOUBLE / (sqrt(l_ssq::DOUBLE) * sqrt(g_ssq::DOUBLE))
         ELSE 0.0 END, 6) AS cos_to_global,
   round(sqrt(l_ssq::DOUBLE) / (n_vecs * 1e6), 6) AS centroid_norm
-FROM stats, gn ORDER BY label
+FROM stats, gn
 """
 
 # r7b: char_trigram_langid — profile-based language ID. The oracle
@@ -3742,7 +3983,7 @@ pick AS (
 SELECT b.lang, coalesce(k.pred_lang, 'und') AS pred_lang,
   count(*)::BIGINT AS n
 FROM base b LEFT JOIN pick k USING (doc_id)
-GROUP BY 1, 2 ORDER BY lang, pred_lang
+GROUP BY 1, 2
 """
 
 # r7b: minhash_accuracy_audit — portable Carter-Wegman hash family
@@ -3795,7 +4036,7 @@ SELECT floor(abs(eq / 16.0 - inter * 1.0 / uni) * 10.0)::BIGINT AS err_decile,
   round(sum(eq) / (16.0 * count(*)), 6) AS mean_est,
   sum((eq * 5 >= 64)::BIGINT)::BIGINT AS n_est_pos,
   sum((inter * 5 >= uni * 4)::BIGINT)::BIGINT AS n_exact_pos
-FROM paired GROUP BY 1 ORDER BY err_decile
+FROM paired GROUP BY 1
 """
 
 # r7b: quantile_histogram_portable — the portable quantile sketch
@@ -3837,7 +4078,7 @@ SELECT o_orderstatus, q,
         ELSE mn + ((mx - mn) / 256.0) * (b + (q * n - (cum - cnt)) / cnt)
         END, 6) AS est_value,
   b::BIGINT AS bin_idx, cum::BIGINT AS cum_count, n::BIGINT AS n_total
-FROM picked ORDER BY o_orderstatus, q
+FROM picked
 """
 
 # r7b: events_ewma_daily — the oracle steps the identical EWMA
@@ -3864,7 +4105,7 @@ ew AS (
 SELECT event_type, day::TIMESTAMP::VARCHAR AS day,
   v_e6 / 1000000.0 AS day_avg,
   floor(s * 1e6 + 0.5)::BIGINT / 1e6 AS ewma
-FROM ew ORDER BY event_type, day
+FROM ew
 """
 
 
@@ -3877,7 +4118,7 @@ SELECT event_type,
   sum(round(value * 1e6)::BIGINT)::BIGINT AS total_value_e6,
   min(round(value * 1e6)::BIGINT)::BIGINT AS min_value_e6,
   max(round(value * 1e6)::BIGINT)::BIGINT AS max_value_e6
-FROM events GROUP BY event_type ORDER BY event_type
+FROM events GROUP BY event_type
 """
 
 
@@ -3929,7 +4170,6 @@ SELECT p.id1, p.id2, p.shared_fp::BIGINT AS shared_fp,
 FROM pairs p
 JOIN nfp n1 ON n1.doc_id = p.id1
 JOIN nfp n2 ON n2.doc_id = p.id2
-ORDER BY id1, id2
 """
 
 # r7c: events_lttb_downsample converts from rows-only to hash-paired —
@@ -4004,7 +4244,6 @@ FROM sel s JOIN pts p ON p.event_type = s.event_type AND p.i = s.i
 UNION ALL
 SELECT event_type, 24::BIGINT AS rank, x, y, event_id
 FROM pts WHERE n > 24 AND i = n - 1
-ORDER BY event_type, rank
 """
 
 # r7c: skipgram_cooccurrence — windowed (±3) co-occurrence PMI, the
@@ -4072,7 +4311,6 @@ SELECT source, fused_rank::BIGINT AS fused_rank, doc_id,
   r_len::BIGINT AS r_len, r_dtok::BIGINT AS r_dtok,
   r_dbig::BIGINT AS r_dbig, rrf_e12::BIGINT AS rrf_e12
 FROM fr WHERE fused_rank <= 5
-ORDER BY source, fused_rank
 """
 
 # r7c: quality_threshold_sweep — cutoff-calibration table for the
@@ -4107,7 +4345,7 @@ SELECT threshold::BIGINT AS threshold, source,
   n_tokens_kept::BIGINT AS n_tokens_kept,
   (CASE WHEN n_tokens > 0 THEN n_tokens_kept * 1000000 // n_tokens
         ELSE 0 END)::BIGINT AS token_frac_e6
-FROM agg ORDER BY threshold, source
+FROM agg
 """
 
 # r7c: stopword_discovery — per-language top-20 terms by document
@@ -4133,7 +4371,6 @@ rk AS (
 SELECT lang, rank::BIGINT AS rank, w AS term, df::BIGINT AS df,
   tf::BIGINT AS tf, (df * 1000000 // n_docs)::BIGINT AS df_frac_e6
 FROM rk WHERE rank <= 20
-ORDER BY lang, rank
 """
 
 # r7c: source_concentration_audit — HHI / Gini / entropy of token mass
@@ -4176,7 +4413,7 @@ SELECT axis, n_groups::BIGINT AS n_groups, n_docs::BIGINT AS n_docs,
     - (n_groups + 1)::HUGEINT * total_tokens * 1000000)
    // (n_groups::HUGEINT * total_tokens))::BIGINT AS gini_e6,
   entropy
-FROM (SELECT * FROM a_s UNION ALL SELECT * FROM a_l) ORDER BY axis
+FROM (SELECT * FROM a_s UNION ALL SELECT * FROM a_l)
 """
 
 # r7c: token_budget_fill — equal per-source slices of a global token
@@ -4205,7 +4442,7 @@ SELECT source, max(budget)::BIGINT AS budget,
              // max(budget) ELSE 0 END)::BIGINT AS fill_e6,
   count(*)::BIGINT AS n_docs_total,
   sum(n_tok)::BIGINT AS tokens_total
-FROM run GROUP BY source ORDER BY source
+FROM run GROUP BY source
 """
 
 # r7c: curriculum_interleave — quality-descending, round-robin-by-
@@ -4267,7 +4504,7 @@ SELECT src_rank::BIGINT AS src_rank, source,
   (CASE WHEN distinct_grams > 0
         THEN novel_grams * 1000000 // distinct_grams
         ELSE 0 END)::BIGINT AS novelty_e6
-FROM per ORDER BY src_rank
+FROM per
 """
 
 # r7c: quality_signal_correlation — per-source Pearson + deterministic-
@@ -4290,7 +4527,7 @@ rk AS (
 SELECT source, count(*)::BIGINT AS n_docs,
   round(corr(n_chars::DOUBLE, dtok_e6::DOUBLE), 6) AS pearson,
   round(corr(r_len::DOUBLE, r_dtok::DOUBLE), 6) AS spearman
-FROM rk GROUP BY source ORDER BY source
+FROM rk GROUP BY source
 """
 
 # r7d: ngram_diversity_audit — distinct-1/2/3 diversity per source,
@@ -4307,7 +4544,7 @@ pg AS (SELECT source, n, gram, count(*) AS c FROM g GROUP BY 1, 2, 3)
 SELECT source, n::BIGINT AS n, sum(c)::BIGINT AS total_grams,
   count(*)::BIGINT AS distinct_grams,
   (count(*) * 1000000 // sum(c))::BIGINT AS distinct_frac_e6
-FROM pg GROUP BY source, n ORDER BY source, n
+FROM pg GROUP BY source, n
 """
 
 # r7d: dataset_card — per-source datasheet (volumes, language spread,
@@ -4347,7 +4584,6 @@ SELECT vol.source, n_docs::BIGINT AS n_docs, n_langs::BIGINT AS n_langs,
   top_lang, top_lang_docs::BIGINT AS top_lang_docs
 FROM vol JOIN terms ON vol.source = terms.source
 JOIN tl ON vol.source = tl.source
-ORDER BY vol.source
 """
 
 # r7d: badwords_filter — C4-style blocklist audit; literal-list
@@ -4375,7 +4611,7 @@ SELECT source, count(*)::BIGINT AS n_docs,
     AS blocked_frac_e6,
   (sum(CASE WHEN flagged THEN 1 ELSE 0 END) * 1000000 // count(*))::BIGINT
     AS flagged_frac_e6
-FROM fl GROUP BY source ORDER BY source
+FROM fl GROUP BY source
 """
 
 # r7d: lang_source_chisq — exact-integer chi-square contingency audit;
@@ -4398,7 +4634,7 @@ SELECT lang, source, observed::BIGINT AS observed,
   (row_t * col_t * 1000000 // n)::BIGINT AS expected_e6,
   ((observed * n - row_t * col_t) * (observed * n - row_t * col_t)
    * 1000000 // (row_t * col_t * n))::BIGINT AS contrib_e6
-FROM grid ORDER BY lang, source
+FROM grid
 """
 
 # r7d: events_dow_hour_profile — weekly seasonality heatmap cells;
@@ -4418,7 +4654,7 @@ SELECT dow::BIGINT AS dow, hour::BIGINT AS hour,
   (n_events * 1000000 // tot)::BIGINT AS share_e6,
   (n_events * 168 * 1000000 // tot)::BIGINT AS load_e6,
   (sv_micros // n_events)::BIGINT AS mean_value_micros
-FROM cells CROSS JOIN t ORDER BY dow, hour
+FROM cells CROSS JOIN t
 """
 
 # r7d: neardup_label_conflict — label-noise audit per near-dup cluster;
@@ -4450,7 +4686,6 @@ SELECT ag.component::BIGINT AS component, n_docs::BIGINT AS n_docs,
   majority_lang,
   (CASE WHEN n_langs > 1 THEN 1 ELSE 0 END)::BIGINT AS lang_conflict
 FROM ag JOIN ml ON ag.component = ml.component
-ORDER BY ag.component
 """
 
 # r7d: lsh_band_tuning — S-curve detection probabilities per (b, r)
@@ -4520,7 +4755,7 @@ SELECT bands::BIGINT AS bands, rows_per_band::BIGINT AS rows_per_band,
   round(s, 6) AS s_mid,
   round(1.0 - CASE bands WHEN 8 THEN q8 WHEN 16 THEN q16
               WHEN 32 THEN q32 ELSE q64 END, 6) AS p_detect
-FROM x11 ORDER BY bands, jbucket
+FROM x11
 """
 
 # r7d: packing_boundary_audit — cross-document attention mass of the
@@ -4567,7 +4802,7 @@ SELECT source, count(*)::BIGINT AS n_packs, sum(nd)::BIGINT AS n_docs,
   sum(s * (s + 1) // 2)::BIGINT AS total_pairs,
   (sum((s * s - ssq) // 2) * 1000000 // sum(s * (s + 1) // 2))::BIGINT
     AS crossdoc_frac_e6
-FROM per_pack GROUP BY source ORDER BY source
+FROM per_pack GROUP BY source
 """
 
 # r7e: preference_pair_build — extreme-rank DPO pair construction per
@@ -4600,7 +4835,6 @@ SELECT b.source, b.rk::BIGINT AS pair_rank, chosen_id, rejected_id,
 FROM best b JOIN worst w ON b.source = w.source AND b.rk = w.rk
 WHERE b.rk <= 3 AND chosen_id <> rejected_id
   AND chosen_q_e6 > rejected_q_e6
-ORDER BY b.source, pair_rank
 """
 
 # r7e: join_skew_audit — hash-partition load table for the two event
@@ -4624,7 +4858,6 @@ SELECT p.axis, partition_id::BIGINT AS partition_id,
   (n_rows * 32 * 1000000 // tot)::BIGINT AS load_e6,
   max_key_rows::BIGINT AS max_key_rows
 FROM parts p JOIN t ON p.axis = t.axis
-ORDER BY p.axis, partition_id
 """
 
 # r7e: shard_layout_plan — LPT greedy over the per-source token
@@ -4654,7 +4887,7 @@ ff(rn, source, tokens, n_docs, shard_id, load_after, loads) AS (
 )
 SELECT source, tokens::BIGINT AS tokens, n_docs::BIGINT AS n_docs,
   shard_id::BIGINT AS shard_id, load_after::BIGINT AS shard_load_after
-FROM ff ORDER BY source
+FROM ff
 """
 
 # r7e: bootstrap_ci_quality — md5-deterministic Poisson bootstrap CI of
@@ -4706,7 +4939,6 @@ SELECT pt.source, point_e6::BIGINT AS point_e6, n_replicas,
   boot_lo_e6::BIGINT AS boot_lo_e6, boot_hi_e6::BIGINT AS boot_hi_e6,
   (boot_hi_e6 - boot_lo_e6)::BIGINT AS ci_width_e6
 FROM pt JOIN ci ON pt.source = ci.source
-ORDER BY pt.source
 """
 
 # r7f: ks_drift_quality — exact KS statistic per source vs rest via
@@ -4747,7 +4979,7 @@ SELECT source, max(n_src)::BIGINT AS n_src, max(n_rest)::BIGINT AS n_rest,
   max(CASE WHEN n_rest > 0
       THEN abs(cum_src * n_rest - cum_rest * n_src) * 1000000
            // (n_src * n_rest) ELSE 0 END)::BIGINT AS ks_e6
-FROM cum GROUP BY source ORDER BY source
+FROM cum GROUP BY source
 """
 
 # r7f: session_gap_sweep — sessionization-timeout calibration; the gap
@@ -4772,7 +5004,7 @@ SELECT gap_minutes::BIGINT AS gap_minutes, n_users::BIGINT AS n_users,
   (n_users + ng)::BIGINT AS n_sessions,
   ((n_users + ng) * 1000000 // n_users)::BIGINT AS sessions_per_user_e6,
   (n_events * 1000000 // (n_users + ng))::BIGINT AS events_per_session_e6
-FROM cnt CROSS JOIN base ORDER BY gap_minutes
+FROM cnt CROSS JOIN base
 """
 
 # r7f: dedup_threshold_sweep — removal-volume curve per Jaccard cutoff
@@ -4827,7 +5059,6 @@ SELECT (th.t10 * 10)::BIGINT AS threshold_pct,
   coalesce(nd.n_docs, 0)::BIGINT AS n_docs_touched
 FROM th LEFT JOIN np ON th.t10 = np.t10
 LEFT JOIN nd ON th.t10 = nd.t10
-ORDER BY threshold_pct
 """
 
 # r7f: event_pair_itemsets — (user, day) basket pair support + lift in
@@ -4856,7 +5087,6 @@ FROM pairs
 JOIN supp sa ON sa.event_type = item_a
 JOIN supp sb ON sb.event_type = item_b
 CROSS JOIN nb
-ORDER BY item_a, item_b
 """
 
 # r7g: active_user_ratios — DAU/WAU/MAU + stickiness per observed day;
@@ -4886,7 +5116,6 @@ FROM days d
 JOIN dau ON d.day = dau.day
 JOIN wau ON d.day = wau.day
 JOIN mau ON d.day = mau.day
-ORDER BY day
 """
 
 # r7g: customer_rfm_segments — deterministic ntile(5) RFM cube; both
@@ -4909,7 +5138,7 @@ sc AS (
 SELECT r_score::BIGINT AS r_score, f_score::BIGINT AS f_score,
   m_score::BIGINT AS m_score, count(*)::BIGINT AS n_customers,
   (sum(spend_cents) // count(*))::BIGINT AS mean_spend_cents
-FROM sc GROUP BY 1, 2, 3 ORDER BY r_score, f_score, m_score
+FROM sc GROUP BY 1, 2, 3
 """
 
 # r7h: watermark_lateness_audit — lateness vs running event-time max in
@@ -4938,7 +5167,7 @@ SELECT event_type, max(n)::BIGINT AS n_events,
   max(CASE WHEN rn = (n * 95 + 99) // 100 THEN late_us END)::BIGINT
     AS p95_late_us,
   max(late_us)::BIGINT AS max_late_us
-FROM rk GROUP BY event_type ORDER BY event_type
+FROM rk GROUP BY event_type
 """
 
 # r7h: join_cardinality_audit — CBO estimate vs exact histogram-derived
@@ -4977,7 +5206,6 @@ SELECT s.join_name, rows_a::BIGINT AS rows_a, rows_b::BIGINT AS rows_b,
       // (rows_a * rows_b // greatest(ndv_a, ndv_b))
    ELSE 0 END)::BIGINT AS err_ratio_e6
 FROM s LEFT JOIN act ON s.join_name = act.join_name
-ORDER BY s.join_name
 """
 
 # r7h: fightin_words — Monroe et al. prior-smoothed log-odds z per
@@ -5018,7 +5246,7 @@ rk AS (
   FROM sc
 )
 SELECT source, rank::BIGINT AS rank, w AS term, y_iw::BIGINT AS y_iw, z
-FROM rk WHERE rank <= 5 ORDER BY source, rank
+FROM rk WHERE rank <= 5
 """
 
 # r7i: events_cusum_changepoint — all-integer Page CUSUM over daily
@@ -5052,7 +5280,7 @@ cu AS (
 SELECT event_type, day, x::BIGINT AS daily_count,
   s::BIGINT AS cusum_scaled,
   (s > 2 * t_total)::BIGINT AS shift_flag
-FROM cu ORDER BY event_type, day
+FROM cu
 """
 
 # r7i: kwic_concordance — keyword-in-context page for 'spark', width 3;
@@ -5102,7 +5330,7 @@ merged AS (
 )
 SELECT o_orderstatus, count(*)::BIGINT AS n_orders,
   sum(cents)::BIGINT AS total_cents
-FROM merged GROUP BY 1 ORDER BY 1
+FROM merged GROUP BY 1
 """
 
 # r7j: orders_cohort_ltv — cohort LTV triangle; integer year*12+month
@@ -5128,7 +5356,7 @@ SELECT (cohort_ym // 12)::BIGINT AS cohort_year,
   sum(spend_cents) OVER (PARTITION BY cohort_ym ORDER BY k
                          ROWS UNBOUNDED PRECEDING)::BIGINT
     AS cum_spend_cents
-FROM cells ORDER BY cohort_year, cohort_month0, k
+FROM cells
 """
 
 # r7j: conversion_attribution — last-touch credit via the one-shuffle
@@ -5168,7 +5396,7 @@ SELECT credit, max(n)::BIGINT AS n_conversions,
     AS p50_lag_us,
   max(CASE WHEN rn = (n * 95 + 99) // 100 THEN lag_us END)::BIGINT
     AS p95_lag_us
-FROM rk GROUP BY credit ORDER BY credit
+FROM rk GROUP BY credit
 """
 
 # r7k: user_active_streaks — gaps-and-islands on exact integer day
@@ -5201,7 +5429,7 @@ SELECT user_id,
        (DATE '2024-01-01'
         + to_days(min(CASE WHEN len = mx THEN start_d END)::INTEGER)
        )::DATE::VARCHAR AS longest_streak_start
-FROM m GROUP BY user_id ORDER BY user_id
+FROM m GROUP BY user_id
 """
 
 # r7k: events_acf — Pearson sums are exact BIGINT (daily counts are
@@ -5233,7 +5461,7 @@ SELECT event_type, lag, n AS n_pairs,
                / sqrt(((n * sx2 - sx * sx) * (n * sy2 - sy * sy))::DOUBLE)
                * 1e6 + 0.5) / 1e6
        END AS acf
-FROM g ORDER BY event_type, lag
+FROM g
 """
 
 # r7k: session_concurrency — the oracle rebuilds the same ±1 boundary
@@ -5282,7 +5510,7 @@ SELECT (DATE '1970-01-01' + to_days((t_us // 86400000000)::INTEGER))::DATE::VARC
        max(conc)::BIGINT AS max_concurrency,
        sum(CASE WHEN delta = 1 THEN 1 ELSE 0 END)::BIGINT AS n_sessions_started,
        sum(CASE WHEN delta = -1 THEN 1 ELSE 0 END)::BIGINT AS n_sessions_ended
-FROM c GROUP BY 1 ORDER BY 1
+FROM c GROUP BY 1
 """
 
 # r7k: events_holt_linear — lockstep recursive CTE stepping the exact
@@ -5317,7 +5545,7 @@ SELECT event_type,
        floor(b * 1e6 + 0.5) / 1e6 AS trend,
        floor(f * 1e6 + 0.5) / 1e6 AS forecast,
        floor(abs(x::DOUBLE - f) * 1e6 + 0.5) / 1e6 AS abs_error
-FROM h ORDER BY event_type, day
+FROM h
 """
 
 # r7l: pii_redact_audit — the oracle replays the md5 contact-string
@@ -5369,7 +5597,7 @@ SELECT source, count(*)::BIGINT AS n_docs,
   sum(n_phone)::BIGINT AS n_phones,
   sum(n_ip)::BIGINT AS n_ips,
   sum(pii_chars)::BIGINT AS pii_chars
-FROM pd GROUP BY source ORDER BY source
+FROM pd GROUP BY source
 """
 
 # r7l: readability_scores — integer totals per source, one float
@@ -5401,7 +5629,7 @@ SELECT source, n_docs, words, syllables, polysyllables, sentences,
     AS syl_per_word_e6,
   CASE WHEN words > 0 THEN (polysyllables * 1000000 // words) END
     AS poly_rate_e6
-FROM g ORDER BY source
+FROM g
 """.replace("{toks}", TOKS_SQL)
 
 # r7l: benford_audit — shares/counts exact integers; the Benford
@@ -5425,7 +5653,7 @@ SELECT digit, n,
          * (n::DOUBLE - total::DOUBLE * log10(1.0 + 1.0 / digit::DOUBLE)))
         / (total::DOUBLE * log10(1.0 + 1.0 / digit::DOUBLE))
         * 1e6 + 0.5) / 1e6 AS chi2_contrib
-FROM g, t ORDER BY digit
+FROM g, t
 """
 
 # r7l: orders_abc_pareto — all-integer 1e-4-dollar revenue units
@@ -5456,7 +5684,7 @@ SELECT CASE WHEN 100 * cum <= 80 * total THEN 'A'
        min(rnk)::BIGINT AS first_rank,
        max(rnk)::BIGINT AS last_rank
 FROM rk, t
-GROUP BY 1 ORDER BY 1
+GROUP BY 1
 """
 
 # r7m: label_propagation_communities — 4 rounds of the LPA twin.
@@ -5465,7 +5693,7 @@ WITH j AS ({_NEAR_DUPS}),
 {_lpa_sql("j", 4)}
 SELECT v AS doc_id, lbl AS community,
        count(*) OVER (PARTITION BY lbl)::BIGINT AS community_size
-FROM lpa ORDER BY doc_id
+FROM lpa
 """
 
 # r7m: sax_motifs — symbols from comparisons over an identically-built
@@ -5517,7 +5745,7 @@ mot AS (
 )
 SELECT event_type, motif, count(*)::BIGINT AS n
 FROM mot WHERE d1 = d + 1 AND d2 = d + 2
-GROUP BY 1, 2 ORDER BY event_type, n DESC, motif
+GROUP BY 1, 2
 """
 
 # r7n: dedup_chain_audit — the oracle rebuilds the exact edge set and
@@ -5540,7 +5768,7 @@ SELECT e2.component, max(s.size)::BIGINT AS size,
          AS density_e6,
        count(*) * 2 < max(s.size) * (max(s.size) - 1) AS chained
 FROM e2 JOIN sizes s ON s.component = e2.component
-GROUP BY 1 ORDER BY 1
+GROUP BY 1
 """
 
 # r7n: vocab_growth_heaps — md5-bucket nested prefixes replace "first k
@@ -5575,7 +5803,7 @@ SELECT checkpoint, docs_cum::BIGINT AS docs_cum,
          floor(ln(vocab_cum::DOUBLE) / ln(tokens_cum::DOUBLE) * 1e6 + 0.5)
            / 1e6
        END AS heaps_beta
-FROM cum ORDER BY checkpoint
+FROM cum
 """
 
 # r7o: embedding_outlier_scores — float32-exact per-dim stats (a
@@ -5640,7 +5868,7 @@ SELECT o_custkey,
        CASE WHEN count(gap) > 0
             THEN (sum(gap) * 1000000 // count(gap))::BIGINT END
          AS mean_gap_micro_days
-FROM g GROUP BY o_custkey ORDER BY o_custkey
+FROM g GROUP BY o_custkey
 """
 
 # r7p: order_status_flow — |statuses|^2 rollup, micro-unit rows.
@@ -5659,7 +5887,7 @@ g AS (
 SELECT from_status, to_status, n,
        (n * 1000000 // sum(n) OVER (PARTITION BY from_status))::BIGINT
          AS p_e6
-FROM g ORDER BY from_status, to_status
+FROM g
 """
 
 # r7q: events_pattern_match — MATCH_RECOGNIZE/CEP twin: sessions
@@ -5704,7 +5932,7 @@ SELECT pattern,
        (sum(CASE WHEN m > 0 THEN 1 ELSE 0 END) * 1000000
         // max(tot.n_sessions))::BIGINT AS session_share_e6
 FROM per, tot
-GROUP BY pattern ORDER BY pattern
+GROUP BY pattern
 """
 
 # r7r: quality_filter_agreement — exact BIGINT contingency cells, one
@@ -5760,7 +5988,7 @@ agg AS (
     + "\nUNION ALL\n".join(
         _QFA_PAIR.format(a=a, b=b, a_name=a[2:], b_name=b[2:])
         for i, a in enumerate(_QFA_SIGS) for b in _QFA_SIGS[i + 1:])
-    + "\n) ORDER BY sig_a, sig_b")
+    + "\n)")
 
 # r7s: skyline_quality_frontier — the oracle spells the SKYLINE
 # definition directly (NOT EXISTS dominance anti-join, O(n^2) — fine at
@@ -5780,7 +6008,6 @@ WHERE NOT EXISTS (
   WHERE q.n_chars >= s.n_chars AND q.distinct_tokens >= s.distinct_tokens
     AND (q.n_chars > s.n_chars OR q.distinct_tokens > s.distinct_tokens)
 )
-ORDER BY s.n_chars DESC, s.doc_id
 """
 
 # r7s: auc_roc_langid — exact BIGINT Mann-Whitney with doubled-unit tie
@@ -5823,7 +6050,6 @@ SELECT e.s AS threshold, e.tp::BIGINT AS tp, e.fp::BIGINT AS fp,
             THEN (t.u2 * 1000000 // (2 * t.n_pos * t.n_neg))::BIGINT
        END AS auc_e6
 FROM enr e CROSS JOIN tot t
-ORDER BY threshold
 """
 
 # r7s: survival_kaplan_meier — counts are exact BIGINT on a day-span
@@ -5871,7 +6097,7 @@ SELECT t, d AS n_churned, c AS n_censored, n_at_risk,
               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
             * 1e6 + 0.5) / 1e6
   END AS survival
-FROM km2 ORDER BY t
+FROM km2
 """
 
 # r7t: keyphrase_rake — RAKE word scores; phrase segmentation is the
@@ -5935,7 +6161,6 @@ SELECT event_type, dow::BIGINT AS dow,
   floor(sum(d7)::DOUBLE / (7.0 * count(*)) * 1e6 + 0.5) / 1e6 AS seasonal
 FROM det WHERE cnt7 = 7
 GROUP BY event_type, dow
-ORDER BY event_type, dow
 """
 
 # r7t: user_growth_accounting — lag/lead classification on per-user
@@ -5979,7 +6204,6 @@ SELECT coalesce(p.wk, c.wk)::BIGINT AS wk,
        THEN ((coalesce(n_new, 0) + coalesce(n_resurrected, 0))
              * 1000000 // n_churned)::BIGINT END AS quick_ratio_e6
 FROM per_week p FULL OUTER JOIN churn c ON p.wk = c.wk
-ORDER BY wk
 """
 
 # r7u: basket_part_pairs — pair fan-out rides the order key, bounded by
@@ -6038,7 +6262,6 @@ resid AS (
 SELECT event_type, count(*)::BIGINT AS n_days, n_pairs, slope,
        floor(quantile_cont(r, 0.5) * 1e6 + 0.5) / 1e6 AS intercept
 FROM resid GROUP BY event_type, n_pairs, slope
-ORDER BY event_type
 """
 
 # r7u: session_path_topk — identical lag/cumsum sessionisation as
@@ -6097,7 +6320,6 @@ FROM c a JOIN c b
  AND a.c_mktsegment = b.c_mktsegment
  AND a.c_custkey < b.c_custkey
 WHERE levenshtein(a.c_name, b.c_name) <= 2
-ORDER BY nationkey, mktsegment, id1, id2
 """
 
 # r7v: embedding_anisotropy_audit — id-adjacent pair cosines floor-
@@ -6135,7 +6357,7 @@ tot AS (
   FROM hist
 )
 SELECT bin, n, sum_cos_e6, n_pairs, mean_cos_e6
-FROM hist CROSS JOIN tot ORDER BY bin
+FROM hist CROSS JOIN tot
 """
 
 # r7v: sparse_cosine_pairs_topk — TF-IDF weights e6-floor-rounded
@@ -6215,7 +6437,7 @@ credited AS (
 SELECT credit, count(*)::BIGINT AS n_conversions_credited,
        sum(credit_e6)::BIGINT AS total_credit_e6,
        sum(n_type_touches)::BIGINT AS n_touches_total
-FROM credited GROUP BY credit ORDER BY credit
+FROM credited GROUP BY credit
 """
 # r7w: term_burstiness — zero-inclusive VMR from three exact BIGINTs,
 # one double division, 6 dp.
@@ -6254,7 +6476,7 @@ SELECT decile::BIGINT AS decile, count(*)::BIGINT AS n_tokens,
   sum(wlen)::BIGINT AS sum_chars, sum(is_stop)::BIGINT AS n_stop,
   (sum(wlen) * 1000000 // count(*))::BIGINT AS avg_wlen_e6,
   (sum(is_stop) * 1000000 // count(*))::BIGINT AS stop_rate_e6
-FROM graded GROUP BY decile ORDER BY decile
+FROM graded GROUP BY decile
 """
 
 # r7x: dedup_containment — directed Broder containment (the shared
@@ -6274,7 +6496,6 @@ FROM directed
 JOIN sizes s1 ON id_small = s1.doc_id
 JOIN sizes s2 ON id_big = s2.doc_id
 WHERE c * 1000 >= 900 * s1.n
-ORDER BY id_small, id_big
 """
 
 # r7x: cross_source_duplication_matrix — near-dup pairs (exact Jaccard
@@ -6303,7 +6524,6 @@ SELECT src_a, src_b, n_pairs,
 FROM counts
 JOIN per_src ca ON src_a = ca.source
 JOIN per_src cb ON src_b = cb.source
-ORDER BY src_a, src_b
 """
 
 # r7x: text_tiling_boundaries — all-integer lexical-cohesion gaps; the
@@ -6339,7 +6559,7 @@ SELECT doc_id, count(*)::BIGINT AS n_gaps,
   min(overlap_e6)::BIGINT AS min_overlap_e6,
   min(CASE WHEN overlap_e6 < 300000 THEN b END)::BIGINT
     AS first_boundary_block
-FROM scored GROUP BY doc_id ORDER BY doc_id
+FROM scored GROUP BY doc_id
 """
 
 
@@ -6385,7 +6605,7 @@ SELECT event_type, n_days, s, var18,
        WHEN s < 0 THEN floor((s + 1)::DOUBLE
                              / sqrt(var18::DOUBLE / 18.0) * 1e6 + 0.5) / 1e6
        ELSE 0.0 END AS z
-FROM j ORDER BY event_type
+FROM j
 """
 
 # r7y: minhash_bbit_estimate — the integer universal-hash family over
@@ -6454,7 +6674,7 @@ SELECT source, n_docs, sx, sx2, w_e6, tot_w_e6,
        CASE WHEN tot_w_e6 > 0
             THEN (w_e6 * 1000 // tot_w_e6)::BIGINT
             ELSE 0 END AS n_alloc
-FROM w CROSS JOIN tot ORDER BY source
+FROM w CROSS JOIN tot
 """
 
 # r7z: forecast_backtest_snaive — exact integer error sums on the
@@ -6476,7 +6696,7 @@ SELECT event_type, count(*)::BIGINT AS n_points,
   sum(err)::BIGINT AS sum_err,
   (sum(abs(err)) * 1000000 // count(*))::BIGINT AS mae_e6,
   (sum(abs(err) * 1000000 // actual) // count(*))::BIGINT AS mape_e6
-FROM scored GROUP BY event_type ORDER BY event_type
+FROM scored GROUP BY event_type
 """
 
 # r7z: source_rank_correlation — deterministic (count DESC, term)
@@ -6520,7 +6740,7 @@ SELECT a.source AS src_a, b.source AS src_b,
   END AS spearman_rho
 FROM fullr a JOIN fullr b
   ON a.term = b.term AND a.source < b.source
-GROUP BY 1, 2 ORDER BY src_a, src_b
+GROUP BY 1, 2
 """
 
 # r7z: runs_test_daily — median-dichotomised runs with continuity
@@ -6564,7 +6784,7 @@ SELECT event_type, n1, n2, runs,
                 / ((n1 + n2)::DOUBLE * (n1 + n2) * (n1 + n2 - 1)))
          * 1e6 + 0.5) / 1e6
   END AS z
-FROM runs ORDER BY event_type
+FROM runs
 """
 
 # r8a: quality_kendall_tau — exact tau-b from the bucketed joint grid;
@@ -6608,7 +6828,6 @@ SELECT cd.source, nn, c, d,
   END AS tau_b
 FROM cd JOIN tot USING (source) JOIN tx USING (source)
 JOIN ty USING (source)
-ORDER BY source
 """
 
 # r8a: lang_source_mutual_info — per-cell terms e6-floor-rounded before
@@ -6638,7 +6857,6 @@ SELECT lang, source, n_ls, n_l, n_s,
        ELSE -((-term_e6) // n_ls)::BIGINT END AS pmi_e6,
   mi_e6
 FROM cells CROSS JOIN mi
-ORDER BY lang, source
 """
 
 # r8a: session_transition_entropy — same lag/cumsum sessionisation as
@@ -6685,7 +6903,6 @@ rate AS (
 )
 SELECT from_type, n_from, n_distinct_to, entropy_e6, rate_e6
 FROM per_from CROSS JOIN rate
-ORDER BY from_type
 """
 
 # r8b: quality_flag_odds_ratio — exact 2x2 cells; Haldane-Anscombe +0.5
@@ -6728,7 +6945,6 @@ SELECT p.flag, p.source, a AS n_flagged, b AS n_clean,
                   ELSE (a * (tb - b))::DOUBLE / (b * (ta - a))
              END * 1e6 + 0.5) / 1e6 AS odds_ratio
 FROM per p JOIN tot t USING (flag)
-ORDER BY flag, source
 """
 
 # r8b: length_qq_drift — interpolating decile vectors on both engines;
@@ -6754,7 +6970,7 @@ SELECT source, n_docs, (i * 10)::BIGINT AS pct,
   floor(q_s * 1e6 + 0.5) / 1e6 AS q_source,
   floor(q_c * 1e6 + 0.5) / 1e6 AS q_corpus,
   floor((q_s - q_c) * 1e6 + 0.5) / 1e6 AS drift
-FROM exploded ORDER BY source, pct
+FROM exploded
 """
 
 # r8b: quality_decile_lift — global rank decomposed into bounded-grid
@@ -6804,7 +7020,6 @@ SELECT decile::BIGINT AS decile, n_docs, n_pos,
 FROM per
 WINDOW w AS (ORDER BY decile ROWS BETWEEN UNBOUNDED PRECEDING
              AND CURRENT ROW)
-ORDER BY decile
 """
 
 # r8c: token_context_diversity — distinct left/right neighbor counts
@@ -6837,7 +7052,6 @@ SELECT f.w AS word, f.freq,
 FROM freq2 f
 LEFT JOIN ld ON f.w = ld.w
 LEFT JOIN rd ON f.w = rd.w
-ORDER BY f.freq DESC, word
 """
 
 # r8c: events_residual_anomaly — exact integer seasonal-difference
@@ -6869,7 +7083,6 @@ SELECT r.event_type, r.d::BIGINT AS d, r.r AS residual,
        ELSE (r.r * m - sr) * (r.r * m - sr) * m
             > 4 * (m * sr2 - sr * sr) END AS is_anomaly
 FROM resid r JOIN stats s USING (event_type)
-ORDER BY event_type, d
 """
 
 # r8c: length_hill_tail_index — top-k order stats on the portable
@@ -6900,7 +7113,6 @@ SELECT source, k_eff, x_k,
        ELSE floor(count(*)::DOUBLE * 1e6 / sum(t_e6) * 1e6 + 0.5) / 1e6
   END AS hill_alpha
 FROM terms GROUP BY source, k_eff, x_k
-ORDER BY source
 """
 
 # r8d: dedup_shingle_size_sweep — one token pass, three k-grids, pure
@@ -6934,7 +7146,6 @@ SELECT 2::BIGINT AS shingle_k, n_pairs::BIGINT AS n_pairs,
        n_id1::BIGINT AS n_id1 FROM q2
 UNION ALL SELECT 3, n_pairs, n_id1 FROM q3
 UNION ALL SELECT 4, n_pairs, n_id1 FROM q4
-ORDER BY shingle_k
 """)
 # r8d: dow_profile_stability — consecutive-week ZERO-PADDED 7-vector
 # cosine: full-outer dow axis (a dow present in one week only adds 0 to
@@ -6968,7 +7179,6 @@ SELECT event_type, wk::BIGINT AS wk,
         * 1e6 + 0.5) / 1e6 AS cosine
 FROM padded GROUP BY 1, 2
 HAVING sum(n_a * n_a) > 0 AND sum(n_b * n_b) > 0
-ORDER BY event_type, wk
 """
 
 # r8d: token_mass_lorenz — rank decomposed through the counts-of-counts
@@ -7015,7 +7225,6 @@ SELECT source, decile::BIGINT AS decile, docs_in_decile, tk_in_decile,
 FROM per
 WINDOW w AS (PARTITION BY source ORDER BY decile
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-ORDER BY source, decile
 """
 
 # r8e: part_supplier_hhi — per-part supplier-share HHI in exact
@@ -7065,7 +7274,6 @@ SELECT 'part' AS side, d::BIGINT AS degree, count(*)::BIGINT AS n_nodes
 FROM pd GROUP BY d
 UNION ALL
 SELECT 'supplier', d::BIGINT, count(*)::BIGINT FROM sd GROUP BY d
-ORDER BY side, degree
 """
 
 # r8f: dedup_containment_prefix — identical OUTPUT to the quadratic
@@ -7156,7 +7364,7 @@ SELECT list_id::BIGINT AS cluster, count(*)::BIGINT AS n_members,
   CASE WHEN sum(c) >= 0 THEN (sum(c) // count(*))::BIGINT
        ELSE -((-sum(c)) // count(*))::BIGINT END AS avg_cohesion_e6,
   min(c)::BIGINT AS min_cohesion_e6
-FROM afin GROUP BY list_id ORDER BY cluster
+FROM afin GROUP BY list_id
 """)
 
 # r8: semdedup_ivf converts from rows-only to hash-paired — blocking is
@@ -7211,7 +7419,7 @@ g(list_id, rn, vec_id, kept, witness_id, max_cos_kept_e6, kept_ids) AS (
 SELECT vec_id::BIGINT AS vec_id, list_id::BIGINT AS list_id, kept,
        witness_id::BIGINT AS witness_id,
        max_cos_kept_e6::BIGINT AS max_cos_kept_e6
-FROM g ORDER BY vec_id
+FROM g
 """)
 
 
@@ -7246,7 +7454,7 @@ g AS (
 tot AS (SELECT (sum(n_docs * gap_e6) // sum(n_docs))::BIGINT AS ece_e6 FROM g)
 SELECT bin::BIGINT AS bin, n_docs, n_pos, mean_score_e6, pos_rate_e6,
        gap_e6::BIGINT AS gap_e6, ece_e6
-FROM g CROSS JOIN tot ORDER BY bin
+FROM g CROSS JOIN tot
 """
 
 # r8g: partition_skew_plan — h60(user_id) % 32 buckets; loads and
@@ -7270,7 +7478,7 @@ SELECT bucket, n_rows, n_keys,
   (n_rows * 1000000 // total_rows)::BIGINT AS share_e6,
   (n_rows * 32 * 1000000 // total_rows)::BIGINT AS load_factor_e6,
   (mx // total_rows)::BIGINT AS max_load_factor_e6
-FROM per_bucket CROSS JOIN tot ORDER BY bucket
+FROM per_bucket CROSS JOIN tot
 """
 
 # r8g: token_positional_entropy — algebraic exact-integer entropy
@@ -7295,7 +7503,7 @@ SELECT pos::BIGINT AS pos, n, n_distinct,
   round(ln(n) - clnc / n, 6) AS entropy,
   packed[12:] AS top_token,
   (packed[1:10]::BIGINT * 1000000 // n)::BIGINT AS top_share_e6
-FROM per ORDER BY pos
+FROM per
 """
 
 
@@ -7326,7 +7534,7 @@ SELECT qid::BIGINT AS qid, qlabel::BIGINT AS qlabel,
   (sum(CASE WHEN nlabel = qlabel THEN 1 ELSE 0 END)
    * 1000000 // 10)::BIGINT AS p_at_10_e6
 FROM ranked WHERE r <= 10
-GROUP BY qid, qlabel ORDER BY qid
+GROUP BY qid, qlabel
 """
 
 # r8h: embedding_quant_sqnr — symmetric int8 per-dim quantization;
@@ -7357,7 +7565,7 @@ SELECT dim::BIGINT AS dim, count(*)::BIGINT AS n,
   CASE WHEN sum(noise_e12) > 0
        THEN round(10.0 * log10(sum(sig_e12)::DOUBLE / sum(noise_e12)), 6)
   END AS sqnr_db
-FROM dq GROUP BY dim ORDER BY dim
+FROM dq GROUP BY dim
 """
 
 # r8h: algebraic_merge_audit — per-source partials + merged and direct
@@ -7383,7 +7591,7 @@ SELECT source, n, s, ssq::VARCHAR AS ssq,
   (s * 1000000 // n)::BIGINT AS mean_e6,
   ((ssq * n - s::HUGEINT * s) * 1000000 // (n::HUGEINT * n))::BIGINT
     AS var_e6
-FROM allrows ORDER BY source
+FROM allrows
 """
 
 
@@ -7415,7 +7623,6 @@ FROM (
   UNION ALL SELECT 32, n_keys, d32 FROM agg
   UNION ALL SELECT 20, n_keys, d20 FROM agg
 )
-ORDER BY bits DESC
 """
 
 # r8i: experiment_srm_audit — md5 % 2 arms; SRM and 2x2 chi-squares in
@@ -7455,7 +7662,7 @@ stats AS (
 SELECT arm, n_users, n_conv,
   (n_conv * 1000000 // n_users)::BIGINT AS conv_rate_e6,
   srm_chi2_e6, conv_chi2_e6
-FROM arms CROSS JOIN stats ORDER BY arm
+FROM arms CROSS JOIN stats
 """
 
 
@@ -7531,7 +7738,7 @@ SELECT source, max(n_src)::BIGINT AS n_src, max(n_rest)::BIGINT AS n_rest,
      // (max(n_src)::HUGEINT * max(n_rest)))::BIGINT
   ELSE 0 END AS w1_chars_e6
 FROM cum WHERE gap IS NOT NULL
-GROUP BY source ORDER BY source
+GROUP BY source
 """
 
 # r8k: shard_order_runs_audit — adjacent same-source pairs in the
@@ -7565,7 +7772,6 @@ SELECT o.shard::BIGINT AS shard, o.n_docs, o.obs_same_adj,
     (o.obs_same_adj::HUGEINT * o.n_docs * 1000000 // e.pairs)::BIGINT
   END AS ratio_obs_exp_e6
 FROM obs o JOIN exp e USING (shard)
-ORDER BY shard
 """
 
 # r8k: zone_map_skipping_audit — three key-range layouts of events
@@ -7615,7 +7821,7 @@ SELECT layout, probe_id::BIGINT AS probe_id,
   count(*)::BIGINT AS n_files, sum(skip)::BIGINT AS files_skipped,
   sum(skip * n_rows)::BIGINT AS rows_skipped,
   (sum(skip) * 1000000 // count(*))::BIGINT AS skip_frac_e6
-FROM marked GROUP BY 1, 2 ORDER BY layout, probe_id
+FROM marked GROUP BY 1, 2
 """
 
 # r8l: fellegi_sunter_weights — seeded m/u estimation over the blocked
@@ -7669,7 +7875,7 @@ SELECT field, n_m, n_u, agree_m, agree_u, m_e6, u_e6,
   floor(ln(m_e6::DOUBLE / u_e6) * 1e6 + 0.5)::BIGINT AS w_agree_e6,
   floor(ln((1000000 - m_e6)::DOUBLE / (1000000 - u_e6)) * 1e6 + 0.5)
     ::BIGINT AS w_disagree_e6
-FROM probs ORDER BY field
+FROM probs
 """
 
 # r8l: markov_absorption_steps — the lag/cumsum sessionisation, one
@@ -7734,7 +7940,6 @@ totals AS (
 SELECT t.from_type AS state, t.n_out, t.n_to_purchase,
   v12.v AS steps_to_absorb_e6, v12.p AS p_purchase_e6
 FROM totals t JOIN v12 ON v12.s = t.from_type
-ORDER BY state
 """)
 
 # r8m: consistent_hash_migration_audit — md5-48bit ring points packed
@@ -7799,7 +8004,6 @@ SELECT s.server, coalesce(b.n_before, 0)::BIGINT AS n_before,
   (g.mod_moved * 1000000 // g.n_keys_total)::BIGINT AS mod_moved_e6
 FROM servers s LEFT JOIN after a USING (server)
 LEFT JOIN before b USING (server) CROSS JOIN gtot g
-ORDER BY s.server
 """
 
 # r8m: kfold_strata_audit — md5 % k folds, stratum x fold grid with
@@ -7828,7 +8032,7 @@ SELECT lang, source, max(n_s)::BIGINT AS n_docs,
   min(n_fs)::BIGINT AS min_fold_n, max(n_fs)::BIGINT AS max_fold_n,
   (sum((5 * n_fs - n_s)::HUGEINT * (5 * n_fs - n_s)) * 1000000
    // (5::HUGEINT * max(n_s)))::BIGINT AS chisq_e6
-FROM grid GROUP BY lang, source ORDER BY lang, source
+FROM grid GROUP BY lang, source
 """
 
 # r8n: kcore_dedup_graph — fixed-round synchronous k-core peeling at
@@ -7859,8 +8063,7 @@ def _kcore_sql(ks=(2, 3), n_rounds=5) -> str:
                 f"(SELECT count(*)::BIGINT FROM k{k}_e{r}) AS n_edges")
     return (f"WITH {_jaccard_pairs(0.5)},\n"
             + ",\n".join(ctes) + "\n"
-            + "\nUNION ALL ".join(rows)
-            + "\nORDER BY k, peel_round")
+            + "\nUNION ALL ".join(rows))
 
 
 ORACLE["kcore_dedup_graph"] = _kcore_sql()
@@ -7904,7 +8107,6 @@ SELECT (DATE '1970-01-01' + est.day::INT)::VARCHAR AS day,
   {hll_estimate_sql()} AS est_rolling_distinct,
   exact.exact_day_distinct
 FROM est JOIN wd ON est.day = wd.day JOIN exact ON est.day = exact.day
-ORDER BY day
 """
 
 # r8o: er_survivorship_golden — block-confined lev<=2 pairs (the
@@ -7950,7 +8152,6 @@ SELECT g.cluster AS golden_custkey, g.n_members, g.n_distinct_names,
        r.c_nationkey::BIGINT AS nationkey, r.c_mktsegment AS mktsegment
 FROM gold g JOIN ranked r ON g.cluster = r.cluster AND r.rn = 1
 WHERE g.n_members >= 2
-ORDER BY golden_custkey
 """
 
 # r8o: encoding_dictionary_audit — counts-of-counts per (column,
@@ -7998,7 +8199,7 @@ SELECT col_name, n_rows, n_distinct, plain_bytes, index_bits, dict_bytes,
   (dict_bytes * 1000000 // plain_bytes)::BIGINT AS dict_ratio_e6,
   CASE WHEN dict_bytes < plain_bytes THEN 'DICT' ELSE 'PLAIN' END
     AS recommend
-FROM fin ORDER BY col_name
+FROM fin
 """
 
 # r8p: markov_attribution_removal — the markov_absorption_steps value
@@ -8083,7 +8284,7 @@ SELECT channel, p_base_e6, p_removed_e6, removal_effect_e6,
   CASE WHEN te > 0
        THEN (removal_effect_e6::HUGEINT * 1000000 // te)::BIGINT
        ELSE 0 END AS attribution_share_e6
-FROM eff CROSS JOIN tot ORDER BY channel
+FROM eff CROSS JOIN tot
 """)
 
 # r8p: psi_source_drift — exact counts-of-counts decile edges
@@ -8139,7 +8340,7 @@ SELECT source, n_src AS n_docs, sum(t_e6)::BIGINT AS psi_e6,
   CASE WHEN sum(t_e6) > 250000 THEN 'MAJOR'
        WHEN sum(t_e6) > 100000 THEN 'MODERATE'
        ELSE 'STABLE' END AS drift_flag
-FROM terms GROUP BY source, n_src ORDER BY source
+FROM terms GROUP BY source, n_src
 """
 
 # r8q: experiment_peeking_audit — cumulative daily 2x2 chi-square of
@@ -8211,7 +8412,7 @@ flagged AS (
 SELECT (DATE '1970-01-01' + day::INT)::VARCHAR AS day,
   n_a, n_b, conv_a, conv_b, chi2_e6, peek_sig,
   sum(peek_sig) OVER (ORDER BY day)::BIGINT AS cum_sig_days
-FROM flagged ORDER BY day
+FROM flagged
 """
 
 # r8q: rle_run_length_audit — run boundaries (value <> lag) over the
@@ -8253,7 +8454,7 @@ rows_out AS (
 SELECT col_name, n_rows, n_distinct, n_runs,
   (n_rows * 1000000 // n_runs)::BIGINT AS avg_run_len_e6,
   (n_distinct * 1000000 // n_runs)::BIGINT AS sorted_runs_ratio_e6
-FROM rows_out ORDER BY col_name
+FROM rows_out
 """
 
 # r8r: ab_cuped_adjustment — exact HUGEINT moment sums, pooled theta,
@@ -8309,7 +8510,7 @@ SELECT arm, n_users,
               ELSE (cov_n::DOUBLE * cov_n::DOUBLE)
                    / (var_xn::DOUBLE * var_yn::DOUBLE) END) * 1e6
         + 0.5)::BIGINT AS var_reduction_e6
-FROM stats ORDER BY arm
+FROM stats
 """
 
 # r8r: dedup_token_savings — the dedup_keep_best recursive-CTE CC +
@@ -8338,7 +8539,7 @@ SELECT source, count(*)::BIGINT AS n_docs,
   CASE WHEN sum(n_tokens) > 0
        THEN (sum(dropped * n_tokens) * 1000000 // sum(n_tokens))::BIGINT
        ELSE 0 END AS token_savings_e6
-FROM flagged GROUP BY source ORDER BY source
+FROM flagged GROUP BY source
 """
 
 # r8s: graph_modularity_audit — CC (recursive reach) and 4-round LPA
@@ -8387,7 +8588,7 @@ SELECT method, n_nodes, m_edges, n_communities, internal_edges,
   sum_deg_sq::BIGINT AS sum_deg_sq,
   (CASE WHEN num >= 0 THEN (num * 1000000) // den
         ELSE -(((-num) * 1000000) // den) END)::BIGINT AS q_e6
-FROM fin ORDER BY method
+FROM fin
 """)
 
 # r8s: events_burst_kleinberg — per-day state costs e6-rounded FIRST
@@ -8473,7 +8674,6 @@ SELECT s.event_type,
 FROM steps s
 JOIN fwd f ON f.event_type = s.event_type AND f.k = s.k
 JOIN bwd b ON b.event_type = s.event_type AND b.k = s.k
-ORDER BY s.event_type, day
 """
 
 # r8t: isotonic_calibration_pav — quality_calibration_bins' score/
@@ -8522,7 +8722,6 @@ SELECT per.bin, per.n_docs, per.n_pos,
   abs(per.n_pos * 1000000 // per.n_docs - iso.iso_rate_e6)::BIGINT
     AS correction_e6
 FROM per JOIN iso ON per.bin = iso.i
-ORDER BY per.bin
 """
 
 # r8t: embedding_jl_distortion_audit — the JL_SIGNS literal matrix
@@ -8585,7 +8784,7 @@ binned AS (
 )
 SELECT bin, count(*)::BIGINT AS n_pairs,
   (sum(ratio_e6) // count(*))::BIGINT AS mean_ratio_e6
-FROM binned GROUP BY bin ORDER BY bin
+FROM binned GROUP BY bin
 """
 
 
@@ -8616,7 +8815,7 @@ top AS (
 SELECT rank::BIGINT AS rank, tk AS token, c AS cnt,
   (w::HUGEINT * 1000000 // tw)::BIGINT AS weight_e6,
   (cw * 1000000 // tw)::BIGINT AS cum_weight_e6
-FROM top CROSS JOIN tot ORDER BY rank
+FROM top CROSS JOIN tot
 """
 
 # r8u: hll_intersection_audit — the portable HLL registers and
@@ -8660,7 +8859,6 @@ FROM exact e
 JOIN uni u ON u.s1 = e.s1 AND u.s2 = e.s2
 JOIN sing a ON a.source = e.s1
 JOIN sing b ON b.source = e.s2
-ORDER BY e.s1, e.s2
 """
 
 # r8v: bloom_join_prefilter_audit — the portable Bloom twin over the
@@ -8691,7 +8889,7 @@ SELECT o_orderpriority,
        ELSE 0 END AS fp_rate_e6,
   ((count(*) - sum(pass_bloom)) * 1000000 // count(*))::BIGINT
     AS scan_reduction_e6
-FROM truthed GROUP BY o_orderpriority ORDER BY o_orderpriority
+FROM truthed GROUP BY o_orderpriority
 """
 
 # r8v: graph_rich_club — closed-form density among deg>k nodes on the
@@ -8718,7 +8916,6 @@ SELECT ks.k, coalesce(nk.n_k, 0)::BIGINT AS n_k,
              // (nk.n_k * (nk.n_k - 1)))::BIGINT
   END AS phi_e6
 FROM ks LEFT JOIN nk ON nk.k = ks.k LEFT JOIN ek ON ek.k = ks.k
-ORDER BY ks.k
 """
 
 # r8w: ivm_hll_registers — the portable HLL registers with a
@@ -8770,7 +8967,6 @@ LEFT JOIN est_b b ON b.source = c.source
 LEFT JOIN est_d d ON d.source = c.source
 JOIN est_m m ON m.source = c.source
 JOIN est_f f ON f.source = c.source
-ORDER BY c.source
 """
 
 # r8w: attribution_time_decay - the 31-entry literal half-life
@@ -8810,5 +9006,12 @@ SELECT channel, count(*)::BIGINT AS n_touches,
   sum(credit_e6)::BIGINT AS credit_e6,
   (sum(credit_e6)::HUGEINT * 1000000 // t.all_credit)::BIGINT AS share_e6
 FROM credited CROSS JOIN total t
-GROUP BY channel, t.all_credit ORDER BY channel
+GROUP BY channel, t.all_credit
 """
+
+# Every query's declared order (empty: single-row or unordered), and
+# each ordered oracle sorted by the same keys.
+ORDER_KEYS: dict[str, tuple[str, ...]] = {
+    name: getattr(fn, "order_keys", ()) for name, fn in QUERIES.items()}
+ORACLE = {name: order_sql(sql, ORDER_KEYS[name]) if ORDER_KEYS[name] else sql
+          for name, sql in ORACLE.items()}

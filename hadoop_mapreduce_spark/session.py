@@ -14,6 +14,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _half_ram() -> str:
+    """Half of this host's physical memory, capped at 32g, as a JVM size."""
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(total_mb // 2, 32 << 10)}m"
+
+
 def get_spark(
     app_name: str = "hadoop-mapreduce-spark",
     shuffle_partitions: int | None = None,
@@ -31,9 +37,11 @@ def get_spark(
     # Local mode runs driver + all 32 executor threads + every broadcast
     # build in ONE JVM whose heap defaults to 1g — that heap, not any
     # plan, is what falls over first as data grows (observed: broadcast
-    # build OOM at 8x sf0.1). Size it like the single node it is; on a
-    # real cluster this maps to normal executor/driver memory sizing.
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+    # build OOM at 8x sf0.1). Size it like the single node it is: half
+    # its physical memory, capped at 32g, so the heap cannot grow past
+    # RAM; on a real cluster this maps to normal executor/driver memory
+    # sizing.
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _half_ram()
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -148,11 +148,9 @@ def test_inbatch_collision_counts(spark):
 def test_context_window_stats_monotone(spark):
     """Larger budgets keep strictly more (or equal) tokens and truncate
     fewer docs; kept_frac is an exact-int ratio ending at <= 1."""
-    from hadoop_mapreduce_spark.operators.curation import (
-        context_window_stats,
-    )
+    from hadoop_mapreduce_spark.registry import QUERIES
 
-    rows = context_window_stats(spark, SF_DIR).collect()
+    rows = QUERIES["context_window_stats"](spark, SF_DIR).collect()
     assert [r.budget for r in rows] == sorted(r.budget for r in rows)
     assert len({r.tokens_total for r in rows}) == 1  # same corpus per row
     for a, b in zip(rows, rows[1:]):

@@ -7,10 +7,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from hadoop_mapreduce_spark.operators.layout import (
-    morton_interleave16,
-    zorder_layout,
-)
+from hadoop_mapreduce_spark.operators.layout import morton_interleave16
+from hadoop_mapreduce_spark.registry import QUERIES
 from tests.conftest import SF_DIR
 
 
@@ -32,7 +30,7 @@ def test_morton_interleave_known_values(spark):
 
 
 def test_zorder_layout_bounds_both_dims(spark):
-    rows = zorder_layout(spark, SF_DIR).collect()
+    rows = QUERIES["zorder_layout"](spark, SF_DIR).collect()
     assert len(rows) > 4  # the layout actually cuts multiple files
     total = sum(r.n_rows for r in rows)
     assert total == spark.read.parquet(f"{SF_DIR}/events.parquet").count()

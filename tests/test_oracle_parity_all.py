@@ -8,11 +8,11 @@ the deep tier (see conftest.py).
 Queries registered without SQL (approximate/stateful) are exercised
 rows-only: they must execute and return a well-formed result.
 
-Rows are compared IN EMITTED ORDER whenever the oracle carries an ORDER
-BY — a regression in a query's sort would otherwise slip through a
-multiset comparison. Oracles whose ORDER BY is not total (ties leave
-the within-tie order engine-defined) are listed in _TIED_ORDER and fall
-back to multiset comparison, as do the few oracles with no ORDER BY.
+Rows are compared IN EMITTED ORDER exactly when the query declares
+order keys in the registry (ORDER_KEYS), and the declared key tuple must
+be unique across the Spark rows, so the declared order is total and
+the ordered comparison cannot trip on ties. Queries without declared
+keys (single-row aggregates) are compared as multisets.
 """
 
 from __future__ import annotations
@@ -20,26 +20,23 @@ from __future__ import annotations
 import pytest
 
 from bench import HEADLINE
-from hadoop_mapreduce_spark.registry import ORACLE, QUERIES
+from hadoop_mapreduce_spark.registry import ORACLE, ORDER_KEYS, QUERIES
 from tests.conftest import SF_DIR
-
-
-# Oracles where the ORDER BY does not pin a total order (ties possible),
-# so Spark and DuckDB may legitimately interleave tied rows differently.
-# AUDITED (round 4): tools/order_audit.py extracts every oracle's
-# top-level ORDER BY key and checks for duplicated key tuples in DuckDB
-# at sf0.01. It found two non-total keys — math_functions and
-# project_compute ordered by (l_orderkey, l_linenumber), which is NOT
-# unique in the synthetic fixture — fixed by adding full-column
-# tie-breakers to both the Spark query and the oracle rather than
-# listing them here. All other ordered oracles have total keys; the 4
-# oracles with no ORDER BY (q6/q14/q17/q19, single-row aggregates) use
-# the multiset path below. Re-run the audit when adding oracles.
-_TIED_ORDER: set[str] = set()
 
 
 def _key(rows, cols):
     return [tuple(str(v) for _, v in sorted(zip(cols, r))) for r in rows]
+
+
+def _assert_total_order(rows, cols, keys, name):
+    """No two rows share the declared key tuple: the order is total."""
+    at = [cols.index(k.partition(" ")[0]) for k in keys]
+    seen = set()
+    for r in rows:
+        key = tuple(r[i] for i in at)
+        assert key not in seen, (
+            f"{name}: declared order {keys} ties on {key}")
+        seen.add(key)
 
 
 def _assert_no_decimal(rows, side, name):
@@ -89,6 +86,9 @@ DEFAULT_TIER = set(HEADLINE) | GRAPH_KERNEL_QUERIES | GRAM_KERNEL_QUERIES
 def test_query_matches_oracle(spark, duck, name):
     df = QUERIES[name](spark, SF_DIR)
     got_rows = df.collect()
+    keys = ORDER_KEYS[name]
+    if keys:
+        _assert_total_order(got_rows, df.columns, keys, name)
     sql = ORACLE.get(name)
     if sql is None:
         # rows-only contract: executes, yields columns, row count >= 0
@@ -103,8 +103,15 @@ def test_query_matches_oracle(spark, duck, name):
     _assert_no_decimal(want_rows, "oracle", name)
     want = _key(want_rows, [d[0] for d in cur.description])
     assert sorted(df.columns) == sorted(d[0] for d in cur.description)
-    ordered = "order by" in sql.lower() and name not in _TIED_ORDER
-    if ordered:
+    if keys:
         assert got == want
     else:
         assert sorted(got) == sorted(want)
+
+
+def test_total_order_check_trips_on_ties(spark):
+    df = spark.createDataFrame([(1, "a"), (2, "b"), (1, "c")],
+                               "k long, v string")
+    _assert_total_order(df.collect(), df.columns, ("v",), "distinct")
+    with pytest.raises(AssertionError, match="ties on"):
+        _assert_total_order(df.collect(), df.columns, ("k DESC",), "tied")

@@ -130,12 +130,10 @@ def test_hash_collision_audit_monotone(spark):
 
 
 def test_srm_audit_partition_and_bounds(spark):
-    from hadoop_mapreduce_spark.operators.curation import (
-        experiment_srm_audit,
-    )
+    from hadoop_mapreduce_spark.registry import QUERIES
     from hadoop_mapreduce_spark.sources.tables import load_table
 
-    rows = experiment_srm_audit(spark, SF_DIR).collect()
+    rows = QUERIES["experiment_srm_audit"](spark, SF_DIR).collect()
     assert [r.arm for r in rows] == [0, 1]
     users = load_table(spark, SF_DIR, "events").select(
         "user_id").distinct().count()

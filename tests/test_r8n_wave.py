@@ -11,9 +11,7 @@ from hadoop_mapreduce_spark.operators.dedup import (
     _dup_edges,
     kcore_dedup_graph,
 )
-from hadoop_mapreduce_spark.operators.timeseries import (
-    rolling_distinct_users_hll,
-)
+from hadoop_mapreduce_spark.registry import QUERIES
 from hadoop_mapreduce_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
 
@@ -62,7 +60,7 @@ def test_kcore_monotone_and_converged_core_degree_contract(spark):
 
 
 def test_rolling_hll_tracks_exact_rolling_distinct(spark):
-    rows = rolling_distinct_users_hll(spark, SF_DIR).collect()
+    rows = QUERIES["rolling_distinct_users_hll"](spark, SF_DIR).collect()
     assert rows == sorted(rows, key=lambda r: r.day)
     ev = load_table(spark, SF_DIR, "events").select("ts", "user_id") \
         .collect()

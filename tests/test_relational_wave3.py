@@ -322,10 +322,6 @@ def test_skyline_quality_frontier_dominance(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from hadoop_mapreduce_spark.operators.relational import (
-        skyline_quality_frontier,
-    )
-
     # distinct_tokens = number of distinct words; n_chars set explicitly
     def words(k, tag):
         return " ".join(f"{tag}{i}" for i in range(k))
@@ -341,7 +337,7 @@ def test_skyline_quality_frontier_dominance(spark, tmp_path):
         "n_chars": pa.array(nch, pa.int64()),
     })
     pq.write_table(tbl, str(tmp_path / "documents.parquet"))
-    out = skyline_quality_frontier(spark, str(tmp_path)).collect()
+    out = QUERIES["skyline_quality_frontier"](spark, str(tmp_path)).collect()
     assert {(r.doc_id, r.n_chars, r.distinct_tokens) for r in out} == {
         (1, 10, 5), (2, 8, 9), (6, 8, 9)}
     # ordered by n_chars desc then doc_id

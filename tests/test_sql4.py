@@ -8,14 +8,14 @@ from pyspark.sql import functions as F
 from hadoop_mapreduce_spark.operators.sql4 import (
     collation_ci_counts,
     lateral_topk_orders,
-    recursive_monthly_spine,
     variant_props_stats,
 )
+from hadoop_mapreduce_spark.registry import QUERIES
 from tests.conftest import SF_DIR
 
 
 def test_recursive_spine_gap_free(spark):
-    rows = recursive_monthly_spine(spark, SF_DIR).collect()
+    rows = QUERIES["recursive_monthly_spine"](spark, SF_DIR).collect()
     assert rows
     # consecutive month starts, no gaps even where n_orders == 0
     for a, b in zip(rows, rows[1:]):

@@ -13,7 +13,9 @@ covering every registered query, since the driver's own
 CORRECTNESS_r*.json records only a 50-query window per round. Each entry
 also carries spark_digest and oracle_digest, the md5 of each side's
 canonical rows, so the output identity of a refactor is a `diff` of the
-files written before and after it.
+files written before and after it; spark_order_digest and
+oracle_order_digest are the same md5 over the rows in emitted order,
+so the diff also covers each side's output order.
 """
 
 from __future__ import annotations
@@ -43,12 +45,13 @@ def normalize_cell(v):
     return str(v)
 
 
-def canon(rows, columns):
+def canon(rows, columns, keep_order=False):
     order = sorted(range(len(columns)), key=lambda i: columns[i])
     out = []
     for row in rows:
         out.append("\x1f".join(normalize_cell(row[i]) for i in order))
-    out.sort()
+    if not keep_order:
+        out.sort()
     return out
 
 
@@ -87,6 +90,7 @@ def main() -> int:
             srows = sdf.collect()
             scols = sdf.columns
             sc = canon([tuple(r) for r in srows], scols)
+            s_ord = digest(canon([tuple(r) for r in srows], scols, True))
             # operators that scoped_persist a mid-plan materialisation
             # are released here, so a 153-query run doesn't accumulate
             # dead cached partitions (ADVICE r5)
@@ -107,7 +111,9 @@ def main() -> int:
                             "hash_match": None, "spark_rows": len(srows),
                             "oracle_rows": None, "err": None,
                             "note": "rows-only (no SQL oracle by contract)",
-                            "spark_digest": digest(sc), "oracle_digest": None}
+                            "spark_digest": digest(sc), "oracle_digest": None,
+                            "spark_order_digest": s_ord,
+                            "oracle_order_digest": None}
             continue
         try:
             cur = con.execute(sql)
@@ -119,7 +125,9 @@ def main() -> int:
             report[name] = {"rows_match": False, "schema_match": False,
                             "hash_match": False, "spark_rows": len(srows),
                             "oracle_rows": None, "err": f"duckdb: {e}"[:500],
-                            "spark_digest": digest(sc), "oracle_digest": None}
+                            "spark_digest": digest(sc), "oracle_digest": None,
+                            "spark_order_digest": s_ord,
+                            "oracle_order_digest": None}
             continue
         problems = []
         if len(srows) != len(orows):
@@ -143,7 +151,9 @@ def main() -> int:
                         "schema_match": schema_ok, "hash_match": hash_ok,
                         "spark_rows": len(srows), "oracle_rows": len(orows),
                         "err": problems[0] if problems else None,
-                        "spark_digest": digest(sc), "oracle_digest": digest(oc)}
+                        "spark_digest": digest(sc), "oracle_digest": digest(oc),
+                        "spark_order_digest": s_ord,
+                        "oracle_order_digest": digest(canon(orows, ocols, True))}
         if problems:
             failures.append(name)
             print(f"FAIL  {name}: " + "; ".join(problems[:1]))

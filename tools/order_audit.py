@@ -1,14 +1,13 @@
-"""Audit: does every oracle's top-level ORDER BY pin a TOTAL order?
+"""Audit: does every oracle's declared order pin a TOTAL order?
 
 tests/test_oracle_parity_all.py compares rows IN EMITTED ORDER whenever
-the oracle has an ORDER BY; a non-total sort key would make that
-comparison flaky (Spark and DuckDB may interleave tied rows
-differently). This tool proves the property on data rather than by
-eyeball: for each oracle it extracts the final top-level ORDER BY key,
-wraps the oracle as a subquery, and asks DuckDB whether any key tuple
-occurs more than once at the given sf. Queries with duplicated keys are
-printed as NON-TOTAL and belong in _TIED_ORDER (or should grow a
-tie-breaker column in BOTH the query and the oracle — preferred).
+the query declares order keys in the registry (ORDER_KEYS); a
+non-total key would make that comparison flaky (Spark and DuckDB may
+interleave tied rows differently). This tool checks the property on
+data at a given sf: for each ordered oracle it asks DuckDB whether any
+declared key tuple occurs more than once. Queries with duplicated keys
+are printed as NON-TOTAL and should grow a tie-breaker key in their
+registry declaration.
 
 Usage: python tools/order_audit.py [sf_dir]
 """
@@ -16,7 +15,6 @@ Usage: python tools/order_audit.py [sf_dir]
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 import duckdb
@@ -24,34 +22,9 @@ import duckdb
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def top_level_order_by(sql: str) -> str | None:
-    """Return the expression list of the LAST depth-0 ORDER BY, or None."""
-    depth = 0
-    last = None
-    for m in re.finditer(r"\(|\)|ORDER\s+BY", sql, re.IGNORECASE):
-        tok = m.group(0)
-        if tok == "(":
-            depth += 1
-        elif tok == ")":
-            depth -= 1
-        elif depth == 0:
-            last = m.end()
-    if last is None:
-        return None
-    tail = sql[last:]
-    # clause runs to LIMIT / end; strip direction + null-placement noise
-    tail = re.split(r"\bLIMIT\b", tail, flags=re.IGNORECASE)[0]
-    tail = re.sub(r"\b(ASC|DESC|NULLS\s+FIRST|NULLS\s+LAST)\b", "", tail,
-                  flags=re.IGNORECASE)
-    # the probe selects from the oracle's OUTPUT, where source-table
-    # aliases no longer exist — `e.event_id` is output column `event_id`
-    tail = re.sub(r"\b[A-Za-z_]\w*\.", "", tail)
-    return tail.strip().rstrip(";").strip()
-
-
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    from hadoop_mapreduce_spark.registry import ORACLE
+    from hadoop_mapreduce_spark.registry import ORACLE, ORDER_KEYS
 
     con = duckdb.connect()
     for t in ("region", "nation", "customer", "supplier", "part", "orders",
@@ -61,15 +34,10 @@ def main() -> int:
 
     non_total, no_order, errors = [], [], []
     for name, sql in sorted(ORACLE.items()):
-        key = top_level_order_by(sql)
-        if key is None:
+        if not ORDER_KEYS[name]:
             no_order.append(name)
             continue
-        # positional keys (ORDER BY 1, 2) → resolve to output column names
-        if re.fullmatch(r"[\d\s,]+", key):
-            cols = [d[0] for d in con.execute(sql).description]
-            key = ", ".join(f'"{cols[int(p) - 1]}"'
-                            for p in re.split(r"\s*,\s*", key.strip()))
+        key = ", ".join(f'"{k.partition(" ")[0]}"' for k in ORDER_KEYS[name])
         probe = (f"SELECT {key}, COUNT(*) AS __n FROM ({sql.rstrip().rstrip(';')}) "
                  f"GROUP BY ALL HAVING COUNT(*) > 1 LIMIT 5")
         try:
@@ -84,7 +52,7 @@ def main() -> int:
             print(f"total      {name:32s} ({key})")
 
     print()
-    print(f"{len(no_order)} oracles with no top-level ORDER BY "
+    print(f"{len(no_order)} oracles with no declared order "
           f"(multiset comparison applies): {no_order}")
     for name, err in errors:
         print(f"ERROR      {name}: {err}")
