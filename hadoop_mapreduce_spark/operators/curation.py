@@ -266,7 +266,7 @@ def split_leakage_guard(spark: SparkSession, sf_dir: str,
         _drop_view,
         _temp_views,
         connected_components_star,
-        minhash_pairs_unsorted,
+        dedup_minhash_lsh,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
@@ -290,9 +290,9 @@ def split_leakage_guard(spark: SparkSession, sf_dir: str,
     # cap (r6) cannot drop fixture edges either: the cap only engages
     # past 2048-member buckets, asserted adversarially in the same file.
     from hadoop_mapreduce_spark.session import scoped_persist
-    pairs = scoped_persist(minhash_pairs_unsorted(spark, sf_dir, threshold=threshold).select(
-        "id1", "id2"))
-    pairs.count()  # materialize: referenced by CC rounds AND the audit
+
+    # the pairs arrive persisted: the CC rounds AND the audit read them
+    pairs = dedup_minhash_lsh(spark, sf_dir, threshold).select("id1", "id2")
     # star CC: O(log n) rounds; component id = min reachable doc_id
     comp = connected_components_star(docs, pairs)  # (doc_id, comp)
     naive = h60(F.col("doc_id").cast("string")) % 10

@@ -132,21 +132,12 @@ def decontaminate_fuzzy(spark: SparkSession, sf_dir: str,
     docs = load_table(spark, sf_dir, "documents")
     # One tokenise+shingle scan feeds signatures AND the verify pass.
     hs = scoped_persist(hashed_shingle_rows(docs))
-    sigs = minhash_signatures(docs, hashed_shingles=hs)
+    sigs = minhash_signatures(hs)
     is_bench = F.col("id") % bench_mod == 0
-    cands = lsh_cross_candidates(
-        sigs.where(~is_bench), sigs.where(is_bench),
-        bands=16, rows_per_band=2,
-    ).select(F.col("big_id").alias("id1"), F.col("small_id").alias("id2"))
-    verified = exact_jaccard_for_pairs(docs, cands, hashed_shingles=hs)
-    return (
-        verified.where(F.col("jaccard") >= threshold)
-        .select(
-            F.col("id1").alias("train_id"),
-            F.col("id2").alias("bench_id"),
-            F.round("jaccard", 6).alias("jaccard"),
-        )
-    )
+    cands = lsh_cross_candidates(sigs.where(~is_bench), sigs.where(is_bench))
+    return exact_jaccard_for_pairs(hs, cands, threshold).select(
+        F.col("id1").alias("train_id"), F.col("id2").alias("bench_id"),
+        "jaccard")
 
 
 def decontaminate_semantic(spark: SparkSession, sf_dir: str,

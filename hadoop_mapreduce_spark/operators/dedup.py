@@ -14,6 +14,22 @@ Dedup families, all shuffle-disciplined for 100 TB:
   * embedding  — exact block-pair cosine (oracle) and SRP-LSH with
                  bucket-local verify (scale path).
 
+The MinHash-LSH pipeline is one set of kernels with fixed parameters:
+``hashed_shingle_rows`` (token SHINGLE_K-grams hashed to longs) →
+``minhash_signatures`` (32 mins by default) → ``lsh_candidate_pairs``
+(LSH_BANDS x LSH_ROWS banding, hot buckets capped) or, train-vs-
+benchmark, ``lsh_cross_candidates`` → ``exact_jaccard_for_pairs``
+(exact verify, cut at the threshold, jaccard rounded to 6 dp).
+``dedup_minhash_lsh`` chains them into THE verified pair set, and it
+alone decides what is materialised: the shingle rows (read by the
+signature and the verify pass), the candidates (read three times by
+the verify; filled by one eager count, which measured 2x faster than
+letting the verify race to fill it) and the verified pairs (read
+again by every consumer: the registry's range sort, CC rounds, audit
+joins — filled lazily by the consumer's first job). Consumers take the
+pairs from it, or components from ``dedup_components_star``, and add no
+persist of their own.
+
 Plus the graph layer over the near-dup pairs, built on four kernels
 with one definition each: connected components (O(log n) alternating
 star, ``connected_components_star``), the degree rollup (``degrees``),
@@ -81,27 +97,29 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def hashed_shingle_rows(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", shingle_k: int = 3) -> DataFrame:
-    """(id, h0) — one row per shingle occurrence, shingle pre-hashed to a
-    64-bit long. The shared input of the MinHash signature pass AND the
-    exact-Jaccard verify pass: tokenising + shingling + hashing is the
-    dominant scan cost, so computing it once (and persisting it at the
-    call site) halves the corpus passes of the LSH pipeline."""
+SHINGLE_K = 3  # tokens per shingle
+LSH_BANDS, LSH_ROWS = 16, 2  # P(miss | j=0.8) = (1 - 0.8^2)^16 ~ 8e-8
+
+
+def hashed_shingle_rows(docs: DataFrame) -> DataFrame:
+    """(id, h0) — one row per shingle occurrence of a (doc_id, text)
+    relation, shingle pre-hashed to a 64-bit long. The shared input of
+    the MinHash signature pass AND the exact-Jaccard verify pass:
+    tokenising + shingling + hashing is the dominant scan cost, so the
+    pipeline computes it once and persists it."""
     from hadoop_mapreduce_spark.functions.text import normalize_text, tokenize
 
     toks = docs.select(
-        F.col(id_col).alias("id"),
-        tokenize(normalize_text(F.col(text_col))).alias("__t"),
+        F.col("doc_id").alias("id"),
+        tokenize(normalize_text(F.col("text"))).alias("__t"),
     )
-    return hashed_shingle_rows_from_tokens(toks, shingle_k)
+    return hashed_shingle_rows_from_tokens(toks)
 
 
-def hashed_shingle_rows_from_tokens(toks: DataFrame,
-                                    shingle_k: int = 3) -> DataFrame:
+def hashed_shingle_rows_from_tokens(toks: DataFrame) -> DataFrame:
     """:func:`hashed_shingle_rows` over a pre-tokenised (id, __t)
     relation — shares one tokenisation pass across pipeline stages."""
-    toks = toks.where(F.size("__t") >= shingle_k)
+    toks = toks.where(F.size("__t") >= SHINGLE_K)
     # Hash the k tokens DIRECTLY (multi-arg xxhash64) instead of
     # materialising the joined shingle string: slice() + concat_ws()
     # allocate an array and a string per shingle row, and the string
@@ -114,20 +132,17 @@ def hashed_shingle_rows_from_tokens(toks: DataFrame,
     return toks.select(
         "id",
         "__t",
-        F.explode(F.sequence(F.lit(1), F.size("__t") - F.lit(shingle_k - 1))).alias("i"),
+        F.explode(F.sequence(F.lit(1), F.size("__t") - F.lit(SHINGLE_K - 1))).alias("i"),
     ).select(
         "id",
         F.xxhash64(*[F.element_at("__t", F.col("i") + F.lit(j))
-                     for j in range(shingle_k)]).alias("h0"),
+                     for j in range(SHINGLE_K)]).alias("h0"),
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    num_hashes: int = 32, shingle_k: int = 3,
-    hashed_shingles: DataFrame | None = None,
-) -> DataFrame:
-    """(id, sig: array<long>) — MinHash signature over token-k-shingles.
+def minhash_signatures(hs: DataFrame, num_hashes: int = 32) -> DataFrame:
+    """(id, sig: array<long>) — MinHash signature over the hashed
+    shingle rows ``hs`` of :func:`hashed_shingle_rows`.
 
     Shape: shingle occurrence rows (duplicates fine: min over a multiset
     equals min over its set), all num_hashes hashes per row via native
@@ -138,15 +153,10 @@ def minhash_signatures(
     determinism — the correctness oracle checks exact Jaccard, not
     signature bytes.
     """
-    # Hash the (variable-length) shingle string ONCE, then derive the
-    # hash family by re-mixing that 64-bit value: h_i = xxhash64(i, h0)
-    # is constant-time per function vs re-hashing the string num_hashes
-    # times (32x the string-hash work). Standard one-base-hash MinHash.
-    base = (
-        hashed_shingles
-        if hashed_shingles is not None
-        else hashed_shingle_rows(docs, id_col, text_col, shingle_k)
-    )
+    # The shingle is hashed ONCE (h0); the hash family re-mixes that
+    # 64-bit value: h_i = xxhash64(i, h0) is constant-time per function
+    # vs re-hashing the shingle num_hashes times. Standard one-base-hash
+    # MinHash.
     # ONE parsed expression (array of the num_hashes min-aggregates),
     # not num_hashes separate F.expr calls + a second array() projection
     # — each F.expr is a py4j round-trip plus a SQL parse, and this
@@ -154,40 +164,36 @@ def minhash_signatures(
     # per-QUERY overhead that no executor count amortises)
     sig = "array(" + ",".join(
         f"min(xxhash64({i}, h0))" for i in range(num_hashes)) + ") as sig"
-    return base.groupBy("id").agg(F.expr(sig))
+    return hs.groupBy("id").agg(F.expr(sig))
 
 
-def _band_keys_expr(bands: int, rows_per_band: int):
-    """array<int> of per-band bucket keys over a ``sig`` column — one
-    Murmur3 hash of (band index, the band's signature rows). Built as a
-    single parsed expression: per-band F.hash() calls would cost a py4j
-    round trip each, re-paid on every plan build."""
-    return F.expr("array(" + ",".join(
-        "hash(" + ",".join(
-            [str(b)] + [f"sig[{b * rows_per_band + r}]" for r in range(rows_per_band)]
-        ) + ")"
-        for b in range(bands)
-    ) + ")")
+# array<int> of per-band bucket keys over a ``sig`` column — one Murmur3
+# hash of (band index, the band's signature rows). One parsed expression:
+# per-band F.hash() calls would cost a py4j round trip each, re-paid on
+# every plan build.
+_BAND_KEYS = "array(" + ",".join(
+    "hash(" + ",".join(
+        [str(b)] + [f"sig[{b * LSH_ROWS + r}]" for r in range(LSH_ROWS)]
+    ) + ")"
+    for b in range(LSH_BANDS)
+) + ")"
 
 
-def lsh_candidate_pairs(sig_df: DataFrame, bands: int, rows_per_band: int,
-                        max_bucket: int = 2048) -> DataFrame:
+def lsh_candidate_pairs(sig_df: DataFrame, max_bucket: int = 2048) -> DataFrame:
     """LSH banding: docs agreeing on all rows of ≥1 band become candidates.
 
     Shuffle is keyed on (band_idx, band_hash) — uniformly distributed, so
     the self-join groups stay tiny unless documents genuinely collide.
 
     Scale guard (VERDICT r5): buckets larger than ``max_bucket`` are
-    suppressed with a broadcast left-anti BEFORE any pair generation —
-    the same hot-bucket cap as ``dedup_embedding_lsh``. A template-heavy
-    corpus (thousands of near-identical docs sharing one band bucket)
-    would otherwise materialise O(bucket²) candidate rows; with the cap
-    the pair count is bounded by bands·N·max_bucket/2. Members of a
-    suppressed bucket still pair through their other, smaller bands;
-    byte-identical mass duplicates are exact-dedup's job upstream of
-    any LSH pass (``dedup_exact``). The banded rows are persisted so
-    the bucket-size pass and the pair pass read one materialisation
-    instead of re-running the signature pipeline twice.
+    suppressed BEFORE any pair generation — the same hot-bucket cap as
+    ``dedup_embedding_lsh``. A template-heavy corpus (thousands of
+    near-identical docs sharing one band bucket) would otherwise
+    materialise O(bucket²) candidate rows; with the cap the pair count
+    is bounded by bands·N·max_bucket/2. Members of a suppressed bucket
+    still pair through their other, smaller bands; byte-identical mass
+    duplicates are exact-dedup's job upstream of any LSH pass
+    (``dedup_exact``).
 
     Pair generation is BUCKET-LOCAL (r6): one hash aggregation collects
     each surviving bucket's member ids (bounded at max_bucket·8 B =
@@ -208,7 +214,7 @@ def lsh_candidate_pairs(sig_df: DataFrame, bands: int, rows_per_band: int,
     count-and-drop without ever entering a collect_list buffer.
     """
     banded = sig_df.select("id", F.posexplode(
-        _band_keys_expr(bands, rows_per_band)).alias("band", "bucket"))
+        F.expr(_BAND_KEYS)).alias("band", "bucket"))
     w = Window.partitionBy("band", "bucket")
     members = (
         banded.withColumn("bsz", F.count(F.lit(1)).over(w))
@@ -227,10 +233,9 @@ def lsh_candidate_pairs(sig_df: DataFrame, bands: int, rows_per_band: int,
     )
 
 
-def lsh_cross_candidates(big_sigs: DataFrame, small_sigs: DataFrame,
-                         bands: int, rows_per_band: int) -> DataFrame:
-    """Cross-corpus LSH candidates: (big_id, small_id) pairs agreeing on
-    all rows of >= 1 band — the asymmetric variant of
+def lsh_cross_candidates(big_sigs: DataFrame, small_sigs: DataFrame) -> DataFrame:
+    """Cross-corpus LSH candidates: (id1, id2) = (big id, small id)
+    pairs agreeing on all rows of >= 1 band — the asymmetric variant of
     ``lsh_candidate_pairs`` for train-vs-benchmark decontamination.
 
     The small side (a benchmark suite: O(10^3..10^5) docs) has its band
@@ -243,32 +248,34 @@ def lsh_cross_candidates(big_sigs: DataFrame, small_sigs: DataFrame,
     """
     big = big_sigs.select(
         F.col("id").alias("big_id"),
-        F.posexplode(_band_keys_expr(bands, rows_per_band)).alias("band", "bucket"))
+        F.posexplode(F.expr(_BAND_KEYS)).alias("band", "bucket"))
     small = small_sigs.select(
         F.col("id").alias("small_id"),
-        F.posexplode(_band_keys_expr(bands, rows_per_band)).alias("band", "bucket"))
+        F.posexplode(F.expr(_BAND_KEYS)).alias("band", "bucket"))
     return (
         big.join(F.broadcast(small), ["band", "bucket"])
         .select("big_id", "small_id")
         .dropDuplicates()
+        .select(F.col("big_id").alias("id1"), F.col("small_id").alias("id2"))
     )
 
 
-def exact_jaccard_for_pairs(docs: DataFrame, pairs: DataFrame,
-                            id_col: str = "doc_id", text_col: str = "text",
-                            shingle_k: int = 3,
-                            hashed_shingles: DataFrame | None = None) -> DataFrame:
-    """Verify candidate pairs with exact shingle-set Jaccard (columnar:
-    array_intersect/array_union on the two shingle arrays).
+def exact_jaccard_for_pairs(hs: DataFrame, pairs: DataFrame,
+                            threshold: float) -> DataFrame:
+    """(id1, id2, jaccard) — the candidate ``pairs`` whose exact
+    shingle-set Jaccard over the hashed shingle rows ``hs`` is
+    >= threshold, jaccard rounded to 6 dp (the cut reads the unrounded
+    ratio). Columnar: array_intersect/array_union on the two shingle
+    arrays.
 
-    The shingle source is semi-joined (broadcast) to the candidate id
+    The shingle rows are semi-joined (broadcast) to the candidate id
     set, so shingle arrays are built only for documents that appear in a
     pair — at scale the candidate set is orders of magnitude smaller than
     the corpus. Shingles are compared as xxhash64 longs, not strings: set
     sizes are identical w.h.p. (64-bit collisions ~1e-16 per doc pair)
-    and long-array intersection is several times cheaper than string.
-    Pass hashed_shingles (persisted) to reuse the signature pass's
-    tokenisation instead of re-scanning the corpus."""
+    and long-array intersection is several times cheaper than string."""
+    from hadoop_mapreduce_spark.session import scoped_persist
+
     # No .distinct() on the id set: the semi-join's broadcast build is a
     # hash SET, so duplicate probe ids cost nothing, while the distinct
     # was a full exchange of its own (pairs are tiny — 2x tiny is tiny).
@@ -278,14 +285,7 @@ def exact_jaccard_for_pairs(docs: DataFrame, pairs: DataFrame,
     # (measured 131 ms for the union pair at sf0.1, r8).
     ids = pairs.select(
         F.explode(F.array("id1", "id2")).alias("cid"))
-    if hashed_shingles is not None:
-        hashed = hashed_shingles.join(
-            F.broadcast(ids), hashed_shingles["id"] == ids.cid, "left_semi")
-    else:
-        cand_docs = docs.join(F.broadcast(ids), docs[id_col] == ids.cid, "left_semi")
-        hashed = hashed_shingle_rows(cand_docs, id_col, text_col, shingle_k)
-    from hadoop_mapreduce_spark.session import scoped_persist
-
+    hashed = hs.join(F.broadcast(ids), hs["id"] == ids.cid, "left_semi")
     # Persisted: BOTH sides of the pair join below read this relation —
     # without the materialisation point the candidate semi-join +
     # collect_set aggregation execute twice (once per join side).
@@ -308,16 +308,16 @@ def exact_jaccard_for_pairs(docs: DataFrame, pairs: DataFrame,
                 / F.size(F.array_union("sh1", "sh2"))
             ).alias("jaccard"),
         )
+        .where(F.col("jaccard") >= threshold)
+        .select("id1", "id2", F.round("jaccard", 6).alias("jaccard"))
     )
 
 
-def minhash_pairs_unsorted(spark: SparkSession, sf_dir: str,
-                           threshold: float = 0.8) -> DataFrame:
-    """Verified near-dup pairs (id1, id2, jaccard) WITHOUT the
-    presentation sort — the edge source for CC / leakage-guard /
-    PageRank consumers, which re-shuffle the pairs anyway; feeding them
-    the sorted dedup_minhash_lsh wastes a global range exchange per
-    caller.
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str, threshold: float = 0.8) -> DataFrame:
+    """Verified near-dup pairs (id1, id2, jaccard >= threshold) — the
+    pair builder of the whole near-dup family: every consumer (CC,
+    keep-best, leakage guard, PageRank, LPA, the audits) reads its
+    edges from here and adds no materialisation of its own.
 
     Pipeline: shingle → 32 MinHashes → 16-band x 2-row LSH → candidate
     self-join → exact Jaccard verify. P(miss | j=0.8) = (1-0.8^2)^16 ≈
@@ -337,7 +337,6 @@ def minhash_pairs_unsorted(spark: SparkSession, sf_dir: str,
     # comparison was polluted by cross-run candidate caching). The
     # cache is ~260k (id, long) rows at sf0.1 — MBs, MEMORY_AND_DISK.
     hs = scoped_persist(hashed_shingle_rows(docs))
-    sigs = minhash_signatures(docs, num_hashes=32, hashed_shingles=hs)
     # Persist the candidate pairs: the verify stage references them three
     # times (id set + both sides of the shingle join) and without a
     # materialisation point each reference would recompute the whole
@@ -348,36 +347,19 @@ def minhash_pairs_unsorted(spark: SparkSession, sf_dir: str,
     # stats are what let the planner pick BroadcastHashJoin here at
     # fixture scale and fall back to sort-merge only when pairs are
     # genuinely large.
-    cands = scoped_persist(lsh_candidate_pairs(sigs, bands=16, rows_per_band=2))
+    cands = scoped_persist(lsh_candidate_pairs(minhash_signatures(hs)))
     # Materialize the cache NOW: the verify stage references cands three
     # times, and letting the first big action populate the cache means
     # each reference races to recompute the whole signature pipeline
     # (measured 2x the wall-clock). One tiny count job fills the cache.
     cands.count()
-    verified = exact_jaccard_for_pairs(docs, cands, hashed_shingles=hs)
-    return (
-        verified.where(F.col("jaccard") >= threshold)
-        .select("id1", "id2", F.round("jaccard", 6).alias("jaccard"))
-    )
-
-
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str, threshold: float = 0.8) -> DataFrame:
-    """Near-duplicate pairs with verified Jaccard >= threshold, which the
-    registry sorts for presentation (see minhash_pairs_unsorted for the
-    pipeline and its scale analysis).
-
-    The verified pairs are persisted before that global sort: orderBy's
-    range-partitioning SAMPLING pass otherwise re-executes the whole
-    verify plan a second time just to pick boundaries (measured ~0.3 s
-    of pure re-execution at sf0.1; at scale it is a second pass over
-    the candidate joins). The pair set is the pipeline's smallest
-    artifact, so the cache is bytes where the re-execution is joins.
-    (r8 note: an eager localCheckpoint here measured within noise of the
-    persist under the bench protocol and hides the verify pipeline from
-    the explained plan — persist kept deliberately.)"""
-    from hadoop_mapreduce_spark.session import scoped_persist
-
-    return scoped_persist(minhash_pairs_unsorted(spark, sf_dir, threshold))
+    # The verified pairs are the pipeline's smallest artifact and every
+    # consumer reads them more than once (the registry's range sort
+    # samples then scans them; CC rounds and audit joins re-read them),
+    # so they are persisted here — lazily: the consumer's first job
+    # fills the cache. (r8: an eager localCheckpoint measured within
+    # noise of the persist and hides the verify plan from explain.)
+    return scoped_persist(exact_jaccard_for_pairs(hs, cands, threshold))
 
 
 # --------------------------------------------------------------------------
@@ -1168,7 +1150,7 @@ def dedup_components_star(spark: SparkSession, sf_dir: str,
     oracle. dedup_connected_components keeps the exact inverted-index
     edge source as the oracle twin."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    pairs = minhash_pairs_unsorted(spark, sf_dir, threshold=threshold).select("id1", "id2")
+    pairs = dedup_minhash_lsh(spark, sf_dir, threshold).select("id1", "id2")
     out = connected_components_star(docs, pairs)
     return out.select("doc_id", F.col("comp").cast("long").alias("component"))
 
@@ -1191,11 +1173,10 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str,
     formulation would sort every cluster's members; max_by folds them.
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    pairs = minhash_pairs_unsorted(spark, sf_dir, threshold=threshold).select("id1", "id2")
-    comp = connected_components_star(docs.select("doc_id"), pairs)
+    comp = dedup_components_star(spark, sf_dir, threshold)
     return (
         comp.join(docs, "doc_id")
-        .groupBy(F.col("comp").cast("long").alias("component"))
+        .groupBy("component")
         .agg(
             F.max_by(
                 "doc_id",
@@ -1246,16 +1227,13 @@ def dedup_incremental(spark: SparkSession, sf_dir: str,
 
     docs = load_table(spark, sf_dir, "documents")
     hs = scoped_persist(hashed_shingle_rows(docs))
-    sigs = minhash_signatures(docs, hashed_shingles=hs)
+    sigs = minhash_signatures(hs)
     is_new = F.col("id") % ingest_mod == 0
 
     # --- screen 1: new batch vs existing corpus (index side = big) ---
-    cross = lsh_cross_candidates(
-        sigs.where(~is_new), sigs.where(is_new), bands=16, rows_per_band=2,
-    ).select(F.col("big_id").alias("id1"), F.col("small_id").alias("id2"))
+    cross = lsh_cross_candidates(sigs.where(~is_new), sigs.where(is_new))
     idx_hits = (
-        exact_jaccard_for_pairs(docs, cross, hashed_shingles=hs)
-        .where(F.col("jaccard") >= threshold)
+        exact_jaccard_for_pairs(hs, cross, threshold)
         .groupBy(F.col("id2").alias("doc_id"))
         .agg(F.min("id1").alias("match_id"))
     )
@@ -1263,13 +1241,9 @@ def dedup_incremental(spark: SparkSession, sf_dir: str,
     # --- screen 2: within-batch clusters among index-screen survivors ---
     new_ids = docs.where(F.col("doc_id") % ingest_mod == 0).select("doc_id")
     survivors = scoped_persist(new_ids.join(idx_hits, "doc_id", "left_anti"))
-    batch_cands = lsh_candidate_pairs(
-        sigs.where(is_new), bands=16, rows_per_band=2)
-    batch_pairs = (
-        exact_jaccard_for_pairs(docs, batch_cands, hashed_shingles=hs)
-        .where(F.col("jaccard") >= threshold)
+    batch_cands = lsh_candidate_pairs(sigs.where(is_new))
+    batch_pairs = exact_jaccard_for_pairs(hs, batch_cands, threshold) \
         .select("id1", "id2")
-    )
     edges = (
         batch_pairs
         .join(survivors.select(F.col("doc_id").alias("id1")), "id1", "left_semi")
@@ -1499,12 +1473,8 @@ def pagerank_dedup_graph(spark: SparkSession, sf_dir: str,
     """
     from pyspark.sql import Window
 
-    from hadoop_mapreduce_spark.session import scoped_persist
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    pairs = scoped_persist(
-        minhash_pairs_unsorted(spark, sf_dir, threshold=threshold)
-        .select("id1", "id2"))
+    pairs = dedup_minhash_lsh(spark, sf_dir, threshold).select("id1", "id2")
     edges = (
         pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
         .unionAll(pairs.select(F.col("id2").alias("src"),
@@ -1676,11 +1646,7 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str,
     )
     cand = scoped_persist(cand)
     cand.count()  # the verify references the pair set three times
-    verified = exact_jaccard_for_pairs(docs, cand, hashed_shingles=hs)
-    return (
-        verified.where(F.col("jaccard") >= threshold)
-        .select("id1", "id2", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return exact_jaccard_for_pairs(hs, cand, threshold)
 
 
 def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str,
@@ -1701,11 +1667,8 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str,
     dedup_components_star; same exact-equality-w.h.p. contract, same
     recursive-CTE oracle family).
     """
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    pairs = minhash_pairs_unsorted(spark, sf_dir, threshold=threshold).select(
-        "id1", "id2")
-    comp = connected_components_star(docs, pairs)
-    sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("k"))
+    comp = dedup_components_star(spark, sf_dir, threshold)
+    sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("k"))
     return (
         sizes.groupBy("k")
         .agg(F.count(F.lit(1)).alias("n_clusters"))
@@ -2037,8 +2000,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str,
     join + one (node, label) count + one rank window, all on the
     dup-edge relation.
     """
-    pairs = minhash_pairs_unsorted(spark, sf_dir, threshold=threshold) \
-        .select("id1", "id2")
+    pairs = dedup_minhash_lsh(spark, sf_dir, threshold).select("id1", "id2")
     labels = lpa_labels(pairs, n_iter)
     wc = Window.partitionBy("lbl")
     return (
@@ -2063,25 +2025,26 @@ def dedup_chain_audit(spark: SparkSession, sf_dir: str,
     are NOT near-dups of the kept representative).
 
     Scale shape: the edge relation is the shared LSH-verified pair
-    base (collision-bounded, persisted inside), components ride the
-    star-CC assignment, and everything after is cluster-keyed rollups
+    base (collision-bounded, persisted by dedup_minhash_lsh), and the
+    star-CC components are computed over those same pairs — the
+    pipeline is built once; everything after is cluster-keyed rollups
     over dup-graph-sized relations. Density math is exact integer
     micro-units; the weakest-edge Jaccard reuses the pair base's 6-dp
     rounding convention.
     """
-    from hadoop_mapreduce_spark.session import scoped_persist
-
-    pairs = scoped_persist(
-        minhash_pairs_unsorted(spark, sf_dir, threshold=threshold))
-    # star-CC assignment over the same edge set (doc_id, component)
-    assign = dedup_components_star(spark, sf_dir, threshold=threshold)
-    wc = Window.partitionBy("component")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    pairs = dedup_minhash_lsh(spark, sf_dir, threshold)
+    # star-CC assignment over the same edge set (dedup_components_star's
+    # components, from the pairs already held)
+    comp = connected_components_star(docs, pairs.select("id1", "id2"))
+    wc = Window.partitionBy("comp")
     multi = (
-        assign.withColumn("size", F.count(F.lit(1)).over(wc))
+        comp.withColumn("size", F.count(F.lit(1)).over(wc))
         .where(F.col("size") >= 2)
     )
     e = pairs.join(
-        multi.select(F.col("doc_id").alias("id1"), "component", "size"),
+        multi.select(F.col("doc_id").alias("id1"),
+                     F.col("comp").cast("long").alias("component"), "size"),
         "id1")
     return (
         e.groupBy("component")
@@ -2659,11 +2622,10 @@ def dedup_token_savings(spark: SparkSession, sf_dir: str,
     )
     from hadoop_mapreduce_spark.session import scoped_persist
 
+    # persisted: the star-CC node set and the member join both read it
     docs = scoped_persist(docs)
-    pairs = minhash_pairs_unsorted(spark, sf_dir, threshold=threshold) \
-        .select("id1", "id2")
-    comp = connected_components_star(
-        docs.select("doc_id"), pairs)
+    pairs = dedup_minhash_lsh(spark, sf_dir, threshold).select("id1", "id2")
+    comp = connected_components_star(docs.select("doc_id"), pairs)
     members = comp.join(docs, "doc_id")
     wk = Window.partitionBy("comp").orderBy(
         F.desc("n_chars"), F.asc("doc_id"))
@@ -2711,16 +2673,12 @@ def graph_modularity_audit(spark: SparkSession, sf_dir: str,
     Spark's toward-zero DIV with the sign-split CASE (the
     lang_source_mutual_info convention).
 
-    Scale: pair base shared (scoped_persist); per method one
+    Scale: pair base shared (persisted by dedup_minhash_lsh); per method one
     labels-on-edges join + two label-keyed rollups — all dup-graph-
     sized; LPA rounds are `lpa_labels`, the fixed-round machinery of
     `label_propagation_communities`, on the same persisted pairs.
     """
-    from hadoop_mapreduce_spark.session import scoped_persist
-
-    pairs = scoped_persist(
-        minhash_pairs_unsorted(spark, sf_dir, threshold=threshold)
-        .select("id1", "id2"))
+    pairs = dedup_minhash_lsh(spark, sf_dir, threshold).select("id1", "id2")
     nodes = (
         pairs.select(F.col("id1").alias("v"))
         .unionAll(pairs.select(F.col("id2").alias("v")))

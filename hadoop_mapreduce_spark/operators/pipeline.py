@@ -376,17 +376,15 @@ def pipeline_target_select(spark: SparkSession, sf_dir: str,
     hs = scoped_persist(
         hashed_shingle_rows_from_tokens(
             base.select(F.col("doc_id").alias("id"), F.col("t").alias("__t"))))
-    sigs = scoped_persist(minhash_signatures(docs, hashed_shingles=hs))
+    sigs = scoped_persist(minhash_signatures(hs))
 
     # --- stage 1: fuzzy decontamination (train x bench, bench broadcast)
     cands = lsh_cross_candidates(
         sigs.where(F.col("id") % bench_mod != 0),
         sigs.where(F.col("id") % bench_mod == 0),
-        bands=16, rows_per_band=2,
-    ).select(F.col("big_id").alias("id1"), F.col("small_id").alias("id2"))
+    )
     contaminated = (
-        exact_jaccard_for_pairs(docs, cands, hashed_shingles=hs)
-        .where(F.col("jaccard") >= threshold)
+        exact_jaccard_for_pairs(hs, cands, threshold)
         .select(F.col("id1").alias("doc_id")).distinct()
     )
     surv1 = train.select("doc_id", "source", "n_chars") \
@@ -394,15 +392,10 @@ def pipeline_target_select(spark: SparkSession, sf_dir: str,
 
     # --- stage 2: near-dup clusters among stage-1 survivors, keep-longest
     surv_ids = surv1.where(F.col("__c").isNull()).select("doc_id")
-    pairs = (
-        lsh_candidate_pairs(
-            sigs.join(surv_ids.withColumnRenamed("doc_id", "id"), "id", "left_semi"),
-            bands=16, rows_per_band=2)
-    )
+    pairs = lsh_candidate_pairs(
+        sigs.join(surv_ids.withColumnRenamed("doc_id", "id"), "id", "left_semi"))
     verified = scoped_persist(
-        exact_jaccard_for_pairs(docs, pairs, hashed_shingles=hs)
-        .where(F.col("jaccard") >= threshold)
-        .select("id1", "id2"))
+        exact_jaccard_for_pairs(hs, pairs, threshold).select("id1", "id2"))
     comp = connected_components_star(surv_ids, verified)
     keep = (
         comp.join(base.select("doc_id", "n_chars"), "doc_id")

@@ -9,6 +9,7 @@ from hadoop_mapreduce_spark.operators.dedup import (
     dedup_exact,
     dedup_minhash_lsh,
     dedup_ngram_jaccard,
+    hashed_shingle_rows,
     minhash_signatures,
     simhash_fingerprints,
     simhash_hamming_pairs,
@@ -49,10 +50,10 @@ def test_minhash_lsh_equals_exact_jaccard(spark):
 
 def test_minhash_signature_shape(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(10)
-    sigs = minhash_signatures(docs, num_hashes=16).collect()
+    sigs = minhash_signatures(hashed_shingle_rows(docs), num_hashes=16).collect()
     assert all(len(r.sig) == 16 for r in sigs)
     # signatures are deterministic across runs
-    sigs2 = minhash_signatures(docs, num_hashes=16).collect()
+    sigs2 = minhash_signatures(hashed_shingle_rows(docs), num_hashes=16).collect()
     assert {r.id: r.sig for r in sigs} == {r.id: r.sig for r in sigs2}
 
 
@@ -235,8 +236,8 @@ def test_lsh_hot_bucket_cap_bounds_candidates(spark):
         [(5000, "completely different unique text about zebra migrations"),
          (5001, "completely different unique text about zebra migrations")],
         "doc_id long, text string")
-    sigs = minhash_signatures(template.unionByName(pair), num_hashes=32)
-    cands = lsh_candidate_pairs(sigs, bands=16, rows_per_band=2).collect()
+    sigs = minhash_signatures(hashed_shingle_rows(template.unionByName(pair)))
+    cands = lsh_candidate_pairs(sigs).collect()
     got = {(r.id1, r.id2) for r in cands}
     assert (5000, 5001) in got
     # bounded: the 5000-doc template family is suppressed entirely
@@ -252,11 +253,9 @@ def test_lsh_hot_bucket_cap_off_recovers_template_pairs(spark):
     fam = spark.range(30).select(
         F.col("id").alias("doc_id"),
         F.lit("alpha beta gamma delta epsilon zeta eta theta").alias("text"))
-    sigs = minhash_signatures(fam, num_hashes=32)
-    capped = lsh_candidate_pairs(sigs, bands=16, rows_per_band=2,
-                                 max_bucket=10).count()
-    uncapped = lsh_candidate_pairs(sigs, bands=16, rows_per_band=2,
-                                   max_bucket=2048).count()
+    sigs = minhash_signatures(hashed_shingle_rows(fam))
+    capped = lsh_candidate_pairs(sigs, max_bucket=10).count()
+    uncapped = lsh_candidate_pairs(sigs, max_bucket=2048).count()
     assert capped == 0
     assert uncapped == 30 * 29 // 2
 
@@ -654,3 +653,53 @@ def test_containment_prefix_equals_quadratic(spark, tmp_path):
     pref = sorted(tuple(r) for r in
                   dedup_containment_prefix(spark, str(tmp_path)).collect())
     assert base == pref and len(base) >= 1
+
+
+def test_modularity_exact_algebra_and_bounds(spark):
+    """Replay the modularity algebra from the operator's own partitions
+    over the verified pair base."""
+    from collections import defaultdict
+
+    from hadoop_mapreduce_spark.operators.dedup import graph_modularity_audit
+
+    rows = {r.method: r for r in
+            graph_modularity_audit(spark, SF_DIR).collect()}
+    assert set(rows) == {"cc_star", "lpa_4"}
+    edges = [(r.id1, r.id2) for r in dedup_minhash_lsh(
+        spark, SF_DIR, threshold=0.8).select("id1", "id2").collect()]
+    m = len(edges)
+    deg = defaultdict(int)
+    for u, v in edges:
+        deg[u] += 1
+        deg[v] += 1
+    for r in rows.values():
+        assert r.m_edges == m
+        assert r.n_nodes == len(deg)
+        assert 0 <= r.internal_edges <= m
+        # Q in [-0.5, 1] by theory; exact micro-division replay
+        num = 4 * m * r.internal_edges - r.sum_deg_sq
+        q = num * 1_000_000 // (4 * m * m) if num >= 0 else \
+            -((-num) * 1_000_000 // (4 * m * m))
+        assert r.q_e6 == q
+        assert -500_000 <= r.q_e6 <= 1_000_000
+    # CC internal edges = ALL edges (components absorb every edge)
+    assert rows["cc_star"].internal_edges == m
+    # sum of degrees squared is partition-dependent but bounded by
+    # (2m)^2 (one giant community) and >= sum over nodes d^2 / n_comm
+    for r in rows.values():
+        assert r.sum_deg_sq <= (2 * m) ** 2
+
+
+def test_chain_audit_builds_pair_pipeline_once(spark):
+    """dedup_chain_audit reads its components from the pairs it already
+    holds: building it registers no more persisted frames than building
+    dedup_components_star, whose pipeline it shares."""
+    from hadoop_mapreduce_spark import session
+    from hadoop_mapreduce_spark.registry import QUERIES
+
+    def persists(name):
+        before = len(session._SCOPED_CACHES)
+        QUERIES[name](spark, SF_DIR)
+        return len(session._SCOPED_CACHES) - before
+
+    assert persists("dedup_chain_audit") <= persists("dedup_components_star")

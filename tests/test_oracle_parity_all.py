@@ -2,8 +2,9 @@
 
 The driver runs this comparison at sf0.01 per round; this test enforces
 the same contract at sf0.001, so an operator can't silently drift from
-its oracle between rounds. The bench.py headline queries and the
-near-dup graph family run in the default tier; every other query is in
+its oracle between rounds. The bench.py headline queries, the near-dup
+graph family, the n-gram-set kernel queries and the MinHash-LSH
+pipeline's consumers run in the default tier; every other query is in
 the deep tier (see conftest.py).
 Queries registered without SQL (approximate/stateful) are exercised
 rows-only: they must execute and return a well-formed result.
@@ -77,7 +78,17 @@ GRAM_KERNEL_QUERIES = {
     "cross_source_duplication_matrix", "pipeline_curation",
     "pipeline_pretrain_scale", "bloom_join_prefilter_audit",
 }
-DEFAULT_TIER = set(HEADLINE) | GRAPH_KERNEL_QUERIES | GRAM_KERNEL_QUERIES
+# The remaining consumers of the MinHash-LSH pipeline (dedup.py's
+# shingle/signature/banding/verify kernels and dedup_minhash_lsh's
+# persisted pairs) also run in the default tier.
+LSH_PIPELINE_QUERIES = {
+    "dedup_keep_best", "dedup_incremental", "dedup_jaccard_prefix",
+    "dedup_cluster_size_histogram", "neardup_label_conflict",
+    "dedup_chain_audit", "dedup_token_savings", "decontaminate_fuzzy",
+    "pipeline_target_select",
+}
+DEFAULT_TIER = (set(HEADLINE) | GRAPH_KERNEL_QUERIES | GRAM_KERNEL_QUERIES
+                | LSH_PIPELINE_QUERIES)
 
 
 @pytest.mark.parametrize("name", [

@@ -209,3 +209,20 @@ def test_neardup_pairs_join_keyed_on_fingerprint(spark):
     text = static_plan_text(winnowing_neardup_pairs(spark, SF_DIR))
     assert "CartesianProduct" not in text
     assert "LeftAnti" in text
+
+
+def test_plan_dump_strips_lambda_and_codegen_ids():
+    """tools/plan_dump.py's id normalisation: two plan texts that differ
+    only in session-history counters (lambda-variable suffixes,
+    whole-stage codegen ids, expression ids) dump identically."""
+    from tools.plan_dump import strip_ids
+
+    a = ("(3) Project [codegen id : 2]\nOutput [1]: [transform(a#7, "
+         "lambdafunction((lambda x_591#12L + 1), lambda x_591#12L, false)) "
+         "AS b#9]")
+    b = ("(3) Project [codegen id : 5]\nOutput [1]: [transform(a#70, "
+         "lambdafunction((lambda x_3#4L + 1), lambda x_3#4L, false)) "
+         "AS b#91]")
+    assert strip_ids(a) == strip_ids(b)
+    assert "[codegen id : x]" in strip_ids(a)
+    assert "lambda x_x#xL" in strip_ids(a)

@@ -1206,3 +1206,73 @@ def test_dow_profile_stability_identical_vs_rotated(spark, tmp_path):
     assert s.n_shared_dows == 7 and s.dot == s.na == s.nb
     assert abs(s.cosine - 1.0) < 1e-9
     assert out["rotated"].cosine < 0.8
+
+
+def test_kleinberg_path_is_min_cost_on_bruteforce(spark):
+    """The emitted burst path is the minimum-cost labelling: an exact
+    forward min-plus replay over the same integer costs."""
+    import math
+    from collections import defaultdict
+
+    from hadoop_mapreduce_spark.sources.tables import load_table
+
+    rows = timeseries.events_burst_kleinberg(spark, SF_DIR).collect()
+    by_type = defaultdict(list)
+    for r in rows:
+        by_type[r.event_type].append(r)
+    ev = load_table(spark, SF_DIR, "events").select(
+        "ts", "event_type").collect()
+    epoch = ev[0].ts.__class__(1970, 1, 1)
+    counts: dict = defaultdict(int)
+    day_tot: dict = defaultdict(int)
+    for e in ev:
+        d = int((e.ts - epoch).total_seconds() * 1_000_000) \
+            // 86_400_000_000
+        counts[(e.event_type, d)] += 1
+        day_tot[d] += 1
+    days = sorted(day_tot)
+    dd = sum(day_tot.values())
+    for typ, seq in by_type.items():
+        seq.sort(key=lambda r: r.day)
+        assert len(seq) == len(days)  # zero-days materialised
+        rr = sum(counts.get((typ, d), 0) for d in days)
+        p0 = min(rr / dd, 0.98)
+        p1 = min(2.0 * p0, 0.99)
+        c0s, c1s = [], []
+        for d in days:
+            r_, n_ = counts.get((typ, d), 0), day_tot[d]
+            c0s.append(math.floor(
+                -(r_ * math.log(p0) + (n_ - r_) * math.log(1.0 - p0))
+                * 1e6 + 0.5))
+            c1s.append(math.floor(
+                -(r_ * math.log(p1) + (n_ - r_) * math.log(1.0 - p1))
+                * 1e6 + 0.5))
+        tau = math.floor(math.log(len(days)) * 1e6 + 0.5)
+
+        def path_cost(states):
+            c, prev = 0, 0
+            for t, s in enumerate(states):
+                c += c1s[t] if s else c0s[t]
+                if s == 1 and prev == 0:
+                    c += tau
+                prev = s
+            return c
+
+        got = [r.burst for r in seq]
+        got_cost = path_cost(got)
+        # exact DP replay (not exponential enumeration): forward
+        # min-plus over the same integer costs
+        c0, c1 = c0s[0], c1s[0] + tau
+        for t in range(1, len(days)):
+            c0, c1 = (c0s[t] + min(c0, c1),
+                      c1s[t] + min(c0 + tau, c1))
+        assert got_cost == min(c0, c1)
+        # emitted cumulative costs match the forward recursion ends
+        assert (seq[-1].cum_cost0_e6, seq[-1].cum_cost1_e6) == (c0, c1)
+        # burst days really are high-share days: mean share on burst
+        # days >= mean share on baseline days (when both exist)
+        shares = [counts.get((typ, d), 0) / day_tot[d] for d in days]
+        b = [s for s, g in zip(shares, got) if g]
+        nb = [s for s, g in zip(shares, got) if not g]
+        if b and nb:
+            assert sum(b) / len(b) > sum(nb) / len(nb)

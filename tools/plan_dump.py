@@ -3,10 +3,16 @@ markdown artifact — the judge-readable evidence of plan shape (joins,
 exchanges, codegen spans, pushed filters) that the plan-audit tests
 assert programmatically.
 
-Expression ids, plan ids and RDD ids are replaced by ``x``: they count
-up with session history, so without them two dumps of the same query
-from two commits are identical exactly when the plans are, and the
-plan-identity check of a refactor is a ``diff`` of the two files.
+Expression ids, plan ids, RDD ids, lambda-variable suffixes
+(``lambda x_591`` -> ``lambda x_x``) and whole-stage codegen ids
+(``[codegen id : 3]`` -> ``[codegen id : x]``) are replaced by ``x``:
+they count up with session history, so without them two dumps of the
+same query from two commits are identical exactly when the plans are,
+and the plan-identity check of a refactor is a ``diff`` of the two
+files. One history effect is left: the attribute order of Expand and
+aggregate keys can still differ with what the session built before, so
+a query that differs in a many-query dump should be dumped again alone
+in a fresh session before its plan is called changed.
 
 Usage: PYTHONPATH=. python tools/plan_dump.py OUT.md q1 [q2 ...]
        (env SPARK_GRAFT_SF_DIR picks the fixture; default sf0.01)
@@ -20,11 +26,14 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# name#123L -> name#xL, [plan_id=45] -> [plan_id=x], MapPartitionsRDD[9] -> ...RDD[x]
+# name#123L -> name#xL, [plan_id=45] -> [plan_id=x], MapPartitionsRDD[9] -> ...RDD[x],
+# lambda x_591 -> lambda x_x, [codegen id : 3] -> [codegen id : x]
 _IDS = [
     (re.compile(r"#\d+"), "#x"),
     (re.compile(r"plan_id=\d+"), "plan_id=x"),
     (re.compile(r"RDD\[\d+\]"), "RDD[x]"),
+    (re.compile(r"(lambda \w+?)_\d+\b"), r"\1_x"),
+    (re.compile(r"\[codegen id : \d+\]"), "[codegen id : x]"),
 ]
 
 
