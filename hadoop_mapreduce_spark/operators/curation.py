@@ -83,8 +83,7 @@ def text_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dataset_split(spark: SparkSession, sf_dir: str,
-                  val_pct: int = 10, test_pct: int = 10) -> DataFrame:
+def dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic train/val/test split: bucket = md5(doc_id) mod 100.
 
     Engine-portable and seed-stable — any process (Spark executor,
@@ -95,8 +94,8 @@ def dataset_split(spark: SparkSession, sf_dir: str,
     docs = load_table(spark, sf_dir, "documents")
     bucket = h60(F.col("doc_id").cast("string")) % 100
     split = (
-        F.when(bucket < val_pct, F.lit("val"))
-        .when(bucket < val_pct + test_pct, F.lit("test"))
+        F.when(bucket < 10, F.lit("val"))
+        .when(bucket < 20, F.lit("test"))
         .otherwise(F.lit("train"))
     )
     toks = F.size(F.split(F.trim("text"), r"\s+")).cast("long")
@@ -115,8 +114,7 @@ _PACK_SCHEMA = (
 )
 
 
-def seq_packing(spark: SparkSession, sf_dir: str,
-                max_tokens: int = 512, n_buckets: int = 8) -> DataFrame:
+def seq_packing(spark: SparkSession, sf_dir: str, max_tokens: int = 512) -> DataFrame:
     """Greedy sequence packing: bin documents into <= max_tokens context
     windows, first-fit in deterministic doc_id order within each
     (source, hash-bucket) group.
@@ -145,6 +143,7 @@ def seq_packing(spark: SparkSession, sf_dir: str,
     """
     import pandas as pd
 
+    n_buckets = 8
     docs = load_table(spark, sf_dir, "documents")
     sized = docs.select(
         "source",
@@ -232,14 +231,13 @@ def dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def split_leakage_guard(spark: SparkSession, sf_dir: str,
-                        threshold: float = 0.8) -> DataFrame:
+def split_leakage_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate-aware train/val/test splitting with a leakage
     audit — the step naive pipelines get wrong: hashing doc_id sends
     near-identical documents to DIFFERENT splits, so the eval set
     contains soft copies of training rows and benchmark numbers
     inflate. The guard assigns splits by near-dup CLUSTER (connected
-    components over verified Jaccard >= threshold edges, cluster key =
+    components over verified Jaccard >= 0.8 edges, cluster key =
     component id), so an entire dup family lands in one split by
     construction.
 
@@ -292,7 +290,7 @@ def split_leakage_guard(spark: SparkSession, sf_dir: str,
     from hadoop_mapreduce_spark.session import scoped_persist
 
     # the pairs arrive persisted: the CC rounds AND the audit read them
-    pairs = dedup_minhash_lsh(spark, sf_dir, threshold).select("id1", "id2")
+    pairs = dedup_minhash_lsh(spark, sf_dir).select("id1", "id2")
     # star CC: O(log n) rounds; component id = min reachable doc_id
     comp = connected_components_star(docs, pairs)  # (doc_id, comp)
     naive = h60(F.col("doc_id").cast("string")) % 10
@@ -366,8 +364,7 @@ def split_leakage_guard(spark: SparkSession, sf_dir: str,
     return out
 
 
-def memorization_novelty(spark: SparkSession, sf_dir: str, n: int = 5,
-                         val_pct: int = 10, test_pct: int = 10) -> DataFrame:
+def memorization_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memorization / leakage audit over the dataset_split assignment:
     for every VAL document, what fraction of its distinct token
     n-grams also appears somewhere in the TRAIN split? Low novelty
@@ -377,8 +374,8 @@ def memorization_novelty(spark: SparkSession, sf_dir: str, n: int = 5,
 
     Split assignment reuses dataset_split's portable convention
     (bucket = md5(doc_id) mod 100) so the audit describes exactly the
-    split the pipeline would ship. Documents shorter than n tokens
-    have no grams and no row — they cannot memorize anything at this n.
+    split the pipeline would ship. Documents shorter than 5 tokens
+    have no 5-grams and no row — they cannot memorize anything.
 
     Scale shape: grams are distinct'd per doc BELOW the join (map-side
     partial agg on (doc, gram)); the train-side gram set collapses to
@@ -393,11 +390,11 @@ def memorization_novelty(spark: SparkSession, sf_dir: str, n: int = 5,
     docs = load_table(spark, sf_dir, "documents")
     bucket = h60(F.col("doc_id").cast("string")) % 100
     split = (
-        F.when(bucket < val_pct, F.lit("val"))
-        .when(bucket < val_pct + test_pct, F.lit("test"))
+        F.when(bucket < 10, F.lit("val"))
+        .when(bucket < 20, F.lit("test"))
         .otherwise(F.lit("train"))
     )
-    grams = explode_ngram_set(docs.withColumn("split", split), "text", n,
+    grams = explode_ngram_set(docs.withColumn("split", split), "text", 5,
                               ["doc_id", "split"])
     train_grams = (grams.where(F.col("split") == "train")
                    .select("ngram").distinct())
@@ -422,8 +419,7 @@ def memorization_novelty(spark: SparkSession, sf_dir: str, n: int = 5,
     )
 
 
-def padding_waste_audit(spark: SparkSession, sf_dir: str,
-                        batch_size: int = 32) -> DataFrame:
+def padding_waste_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-efficiency audit: padding waste of fixed-size batches
     under two batching orders — the portable md5 shuffle order
     (global_shuffle_order's convention) vs length-sorted order. Every
@@ -448,7 +444,7 @@ def padding_waste_audit(spark: SparkSession, sf_dir: str,
     def waste(order_cols, strategy):
         w = Window.orderBy(*order_cols)
         batched = base.withColumn(
-            "b", F.floor((F.row_number().over(w) - 1) / batch_size)
+            "b", F.floor((F.row_number().over(w) - 1) / 32)
             .cast("long"))
         per_batch = batched.groupBy("b").agg(
             F.count(F.lit(1)).alias("rows"),
@@ -472,8 +468,7 @@ def padding_waste_audit(spark: SparkSession, sf_dir: str,
     )
 
 
-def inbatch_collision_audit(spark: SparkSession, sf_dir: str,
-                            batch_size: int = 32) -> DataFrame:
+def inbatch_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive-training hygiene: with batches formed in the
     portable md5 shuffle order, how many in-batch pairs share a source
     (false negatives for in-batch-negative losses)? Emits, per source,
@@ -490,7 +485,7 @@ def inbatch_collision_audit(spark: SparkSession, sf_dir: str,
                        F.asc("doc_id"))
     batched = docs.select(
         "doc_id", "source",
-        F.floor((F.row_number().over(w) - 1) / batch_size)
+        F.floor((F.row_number().over(w) - 1) / 32)
         .cast("long").alias("b"))
     per = batched.groupBy("b", "source").agg(F.count(F.lit(1)).alias("c"))
     return (
@@ -502,9 +497,7 @@ def inbatch_collision_audit(spark: SparkSession, sf_dir: str,
     )
 
 
-def context_window_stats(spark: SparkSession, sf_dir: str,
-                         budgets: tuple[int, ...] = (128, 512, 2048)
-                         ) -> DataFrame:
+def context_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Capacity planning for context budgets: for each candidate
     window size, how many documents truncate and what fraction of the
     corpus's tokens survive? The table that decides between "train at
@@ -512,14 +505,14 @@ def context_window_stats(spark: SparkSession, sf_dir: str,
     their parameters.
 
     Scale shape: ONE corpus scan computes per-doc token counts; the
-    per-budget expansion explodes |budgets| rows per doc (a constant),
-    and the rollup partial-aggs to |budgets| rows. All ratios are
+    per-budget expansion explodes 3 rows per doc (a constant),
+    and the rollup partial-aggs to 3 rows. All ratios are
     exact-int divisions (bit-stable doubles on both engines).
     """
     docs = load_table(spark, sf_dir, "documents")
     toks = F.size(F.split(F.trim("text"), r"\s+")).cast("long")
     per = docs.select(toks.alias("n")).select(
-        "n", F.explode(F.array(*[F.lit(b) for b in budgets])).alias("budget"))
+        "n", F.explode(F.array(*[F.lit(b) for b in (128, 512, 2048)])).alias("budget"))
     return (
         per.groupBy("budget").agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -739,8 +732,7 @@ def quality_classifier_train(spark: SparkSession, sf_dir: str,
 
 
 
-def rrf_quality_fusion(spark: SparkSession, sf_dir: str,
-                       rrf_k: int = 60, top_per_source: int = 5) -> DataFrame:
+def rrf_quality_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal-rank fusion of quality signals: combine per-document
     length, lexical diversity, and bigram diversity rankings into one
     fused quality ordering — the standard ensemble trick (Cormack et
@@ -761,12 +753,13 @@ def rrf_quality_fusion(spark: SparkSession, sf_dir: str,
     two-phase distributed rank as vocab_coverage_curve; per-source
     fusion is both the more useful curation unit (pick the best docs
     of each domain) and shuffle-safe — no single-partition window
-    anywhere. Emits the top_per_source fused winners per source.
+    anywhere. Emits the top 5 fused winners per source.
     """
     from hadoop_mapreduce_spark.functions.text import (
         normalize_text, tokenize,
     )
 
+    rrf_k = 60
     docs = load_table(spark, sf_dir, "documents")
     t = tokenize(normalize_text(F.col("text")))
     # one tokenize pass: materialise the token array in a narrow
@@ -805,7 +798,7 @@ def rrf_quality_fusion(spark: SparkSession, sf_dir: str,
         F.row_number().over(Window.partitionBy("source")
                             .orderBy(F.desc("rrf_e12"), F.asc("doc_id"))))
     return (
-        fused.where(F.col("fused_rank") <= top_per_source)
+        fused.where(F.col("fused_rank") <= 5)
         .select("source", F.col("fused_rank").cast("long").alias("fused_rank"),
                 "doc_id",
                 F.col("r_len").cast("long").alias("r_len"),
@@ -937,8 +930,7 @@ def quality_signal_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 BADWORDS: tuple[str, ...] = ("slow", "dup", "leak")
 
 
-def badwords_filter(spark: SparkSession, sf_dir: str,
-                    max_frac_e6: int = 30_000) -> DataFrame:
+def badwords_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocklist filtering audit, C4-style: per source, how many
     documents contain any blocklisted term, how many exceed the
     blocked-token-fraction threshold (the actual drop rule — C4 drops
@@ -970,7 +962,7 @@ def badwords_filter(spark: SparkSession, sf_dir: str,
         "source", "n_tok", "n_bad",
         (F.col("n_bad") > 0).alias("hit"),
         F.when(F.col("n_tok") > 0,
-               F.expr("n_bad * 1000000 div n_tok") > F.lit(max_frac_e6))
+               F.expr("n_bad * 1000000 div n_tok") > F.lit(30_000))
         .otherwise(F.lit(False)).alias("flagged"),
     )
     return (
@@ -997,9 +989,7 @@ def badwords_filter(spark: SparkSession, sf_dir: str,
     )
 
 
-def packing_boundary_audit(spark: SparkSession, sf_dir: str,
-                           max_tokens: int = 512,
-                           n_buckets: int = 8) -> DataFrame:
+def packing_boundary_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document attention audit of the first-fit packing plan:
     per source, how much of the packed context windows' causal
     attention mass crosses a document boundary. Packing without
@@ -1019,6 +1009,8 @@ def packing_boundary_audit(spark: SparkSession, sf_dir: str,
     """
     import pandas as pd
 
+    max_tokens = 512
+    n_buckets = 8
     docs = load_table(spark, sf_dir, "documents")
     sized = docs.select(
         "source",
@@ -1082,8 +1074,7 @@ def packing_boundary_audit(spark: SparkSession, sf_dir: str,
     )
 
 
-def preference_pair_build(spark: SparkSession, sf_dir: str,
-                          k: int = 3) -> DataFrame:
+def preference_pair_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Preference-pair construction (the DPO/RLHF data-assembly step):
     within each group (source stands in for the prompt group), pair the
     i-th best document with the i-th worst by quality score, up to k
@@ -1104,6 +1095,7 @@ def preference_pair_build(spark: SparkSession, sf_dir: str,
     from hadoop_mapreduce_spark.functions.text import (
         normalize_text, tokenize)
 
+    k = 3
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
         "source", "doc_id",
@@ -1154,8 +1146,7 @@ _POISSON_T = (424136118829305344, 848272237658610688,
               1148701988496035328, 1152236456152946176)
 
 
-def bootstrap_ci_quality(spark: SparkSession, sf_dir: str,
-                         n_boot: int = 32) -> DataFrame:
+def bootstrap_ci_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bootstrap confidence intervals for each source's mean quality
     score — the uncertainty read that belongs next to every per-source
     quality number this engine reports: a source whose CI overlaps the
@@ -1171,7 +1162,7 @@ def bootstrap_ci_quality(spark: SparkSession, sf_dir: str,
     Exact integers end to end: per-replica weighted means are floor
     divisions, the CI bounds are ORDER STATISTICS of the 32 replica
     means (ranks ceil(0.05 n) / ceil(0.95 n), replica id tie-break),
-    never interpolated percentiles. Explode factor = n_boot; at 100 TB
+    never interpolated percentiles. Explode factor = 32 replicates; at 100 TB
     run the same construction over per-partition sufficient statistics
     instead of doc rows (sum w, sum w*q commute with partial agg — the
     shape is already algebraic here).
@@ -1195,7 +1186,7 @@ def bootstrap_ci_quality(spark: SparkSession, sf_dir: str,
 
     reps = scored.select(
         "source", "doc_id", "q_e6",
-        F.explode(F.array(*[F.lit(b) for b in range(n_boot)])).alias("b"),
+        F.explode(F.array(*[F.lit(b) for b in range(32)])).alias("b"),
     ).withColumn(
         "u",
         h60(F.concat_ws(":", F.col("b"), F.col("doc_id"))),
@@ -1704,8 +1695,7 @@ def quality_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def quality_calibration_bins(spark: SparkSession, sf_dir: str,
-                             n_bins: int = 10) -> DataFrame:
+def quality_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability diagram + expected calibration error (ECE) for the
     stopword-fraction quality score against the lang='en' label — the
     calibration read a filtering pipeline does before turning a
@@ -1730,6 +1720,7 @@ def quality_calibration_bins(spark: SparkSession, sf_dir: str,
     )
     from hadoop_mapreduce_spark.operators.textstats import LANG_STOPWORDS
 
+    n_bins = 10
     docs = load_table(spark, sf_dir, "documents")
     toks = tokenize(normalize_text(F.col("text")))
     sw = F.lit(list(LANG_STOPWORDS["en"]))
@@ -1834,8 +1825,7 @@ def experiment_srm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def kfold_strata_audit(spark: SparkSession, sf_dir: str,
-                       n_folds: int = 5) -> DataFrame:
+def kfold_strata_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-validation fold-balance audit: assign every document to a
     fold via the portable md5 hash and verify, per (lang, source)
     stratum, that the folds received proportional shares — the hygiene
@@ -1856,6 +1846,7 @@ def kfold_strata_audit(spark: SparkSession, sf_dir: str,
     Scale: one scan to the (lang, source, fold) counts; the grid and
     the rollup run on |strata| * k metadata-sized rows.
     """
+    n_folds = 5
     docs = load_table(spark, sf_dir, "documents")
     h = h60(F.col("doc_id").cast("string"))
     counts = (
@@ -1988,8 +1979,7 @@ def experiment_peeking_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ab_cuped_adjustment(spark: SparkSession, sf_dir: str,
-                        pre_days: int = 15) -> DataFrame:
+def ab_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUPED variance reduction for the md5-armed A/B experiment
     (Deng et al. 2013, the industry-standard pre-experiment covariate
     adjustment): split the event span into a pre-period (first
@@ -2015,6 +2005,7 @@ def ab_cuped_adjustment(spark: SparkSession, sf_dir: str,
     Scale: one groupBy(user_id) pass with conditional partial
     aggregates, one 1-row pooled moment fold, one 2-row arm rollup.
     """
+    pre_days = 15
     ev = load_table(spark, sf_dir, "events")
     day = (wall_epoch_us("ts") / F.lit(86_400_000_000)).cast("long")
     h = h60(F.col("user_id").cast("string"))
@@ -2084,8 +2075,7 @@ def ab_cuped_adjustment(spark: SparkSession, sf_dir: str,
     )
 
 
-def isotonic_calibration_pav(spark: SparkSession, sf_dir: str,
-                             n_bins: int = 10) -> DataFrame:
+def isotonic_calibration_pav(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isotonic (PAV) calibration of the stopword quality score against
     the lang='en' label — the FITTER that turns
     `quality_calibration_bins`' diagnosis (reliability gaps / ECE)
@@ -2116,6 +2106,7 @@ def isotonic_calibration_pav(spark: SparkSession, sf_dir: str,
     from hadoop_mapreduce_spark.operators.textstats import LANG_STOPWORDS
     from hadoop_mapreduce_spark.session import scoped_persist
 
+    n_bins = 10
     docs = load_table(spark, sf_dir, "documents")
     toks = tokenize(normalize_text(F.col("text")))
     sw = F.lit(list(LANG_STOPWORDS["en"]))

@@ -49,13 +49,12 @@ from hadoop_mapreduce_spark.operators.ngram import (
 from hadoop_mapreduce_spark.sources.tables import load_table
 
 
-def decontaminate_ngram(spark: SparkSession, sf_dir: str,
-                        n: int = 4, bench_mod: int = 20) -> DataFrame:
+def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing any
     token n-gram with a held-out benchmark set.
 
     The fixture has no separate benchmark table, so the benchmark set is
-    carved deterministically (doc_id % bench_mod == 0 — 5% of docs);
+    carved deterministically (doc_id % 20 == 0 — 5% of docs);
     the remaining 95% are "training". A training doc is contaminated if
     any of its distinct 4-grams appears in any benchmark doc — the
     published recipe (GPT-3 app. C uses 13-grams; 4 here because the
@@ -68,8 +67,8 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str,
     the per-doc semi-join collapses to one boolean per document.
     """
     docs = load_table(spark, sf_dir, "documents")
-    grams = explode_ngram_set(docs, "text", n, ["doc_id", "source"])
-    is_bench = F.col("doc_id") % bench_mod == 0
+    grams = explode_ngram_set(docs, "text", 4, ["doc_id", "source"])
+    is_bench = F.col("doc_id") % 20 == 0
     bench_grams = grams.where(is_bench).select("ngram").distinct()
     hit_docs = (
         grams.where(~is_bench)
@@ -93,16 +92,15 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str,
     )
 
 
-def decontaminate_fuzzy(spark: SparkSession, sf_dir: str,
-                        threshold: float = 0.8, bench_mod: int = 20) -> DataFrame:
+def decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FUZZY benchmark decontamination: training documents that are
-    near-duplicates (shingle Jaccard >= threshold) of a held-out
+    near-duplicates (shingle Jaccard >= 0.8) of a held-out
     benchmark doc — the MinHash complement of ``decontaminate_ngram``'s
     exact n-gram hit test. Exact overlap misses paraphrased/perturbed
     benchmark leakage (reordered sentences, small edits); the published
     fix (e.g. Llama/FLAN decontamination reports) is near-dup matching
     between train and eval at a Jaccard threshold. Benchmark set =
-    doc_id % bench_mod == 0, the same 5% carve as decontaminate_ngram.
+    doc_id % 20 == 0, the same 5% carve as decontaminate_ngram.
 
     Output: one row per contaminated (train_id, bench_id) pair with its
     exact verified Jaccard — downstream either drops train_id or audits
@@ -133,20 +131,20 @@ def decontaminate_fuzzy(spark: SparkSession, sf_dir: str,
     # One tokenise+shingle scan feeds signatures AND the verify pass.
     hs = scoped_persist(hashed_shingle_rows(docs))
     sigs = minhash_signatures(hs)
-    is_bench = F.col("id") % bench_mod == 0
+    is_bench = F.col("id") % 20 == 0
     cands = lsh_cross_candidates(sigs.where(~is_bench), sigs.where(is_bench))
-    return exact_jaccard_for_pairs(hs, cands, threshold).select(
+    return exact_jaccard_for_pairs(hs, cands, 0.8).select(
         F.col("id1").alias("train_id"), F.col("id2").alias("bench_id"),
         "jaccard")
 
 
 def decontaminate_semantic(spark: SparkSession, sf_dir: str,
-                           threshold: float = 0.4, bench_mod: int = 20) -> DataFrame:
+                           threshold: float = 0.4) -> DataFrame:
     """SEMANTIC decontamination: training vectors whose embedding cosine
     against any held-out benchmark vector meets the threshold — catches
     rephrasings that share no surface n-grams at all (the third rung
     after exact n-gram and fuzzy Jaccard). Benchmark set =
-    vec_id % bench_mod == 0, mirroring the text-side carve.
+    vec_id % 20 == 0, mirroring the text-side carve.
 
     (Production threshold is ~0.9; the fixture embeddings are
     near-random with max cross cosine ~0.49, so 0.4 exercises the
@@ -168,7 +166,7 @@ def decontaminate_semantic(spark: SparkSession, sf_dir: str,
     from hadoop_mapreduce_spark.operators.dedup import embedding_cosine_cross_pairs
 
     emb = load_table(spark, sf_dir, "embeddings")
-    is_bench = F.col("vec_id") % bench_mod == 0
+    is_bench = F.col("vec_id") % 20 == 0
     return (
         embedding_cosine_cross_pairs(
             emb.where(~is_bench), emb.where(is_bench), threshold)
@@ -180,22 +178,20 @@ def decontaminate_semantic(spark: SparkSession, sf_dir: str,
     )
 
 
-def dsir_importance_sample(spark: SparkSession, sf_dir: str,
-                           bench_mod: int = 20,
-                           n_buckets: int = 10_000) -> DataFrame:
+def dsir_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR-style data selection (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): score every training
     document by the log-likelihood ratio of a TARGET unigram model
-    (fit on the held-out target carve, doc_id % bench_mod == 0) against
+    (fit on the held-out target carve, doc_id % 20 == 0) against
     the RAW corpus model, over HASHED token features — then select the
     documents the ratio favours. This is the principled version of
     "sample more of what looks like the target domain": mixture weights
     fall out of the data instead of being hand-set per source
     (complements domain_mixture_sample's explicit per-source rates).
 
-    Features are md5-hashed into ``n_buckets`` buckets exactly as the
+    Features are md5-hashed into 10,000 buckets exactly as the
     paper hashes n-grams: the two models and their ratio table are then
-    CONSTANT-SIZE (n_buckets rows) regardless of corpus vocabulary, so
+    CONSTANT-SIZE (10,000 rows) regardless of corpus vocabulary, so
     the ratio table broadcasts at any scale and scoring is one
     broadcast-join + one doc_id-keyed aggregation over the token rows —
     the corpus shuffles once, keyed by doc_id, nothing else. Both
@@ -209,7 +205,7 @@ def dsir_importance_sample(spark: SparkSession, sf_dir: str,
     log-weight; the md5 bucketing matches the DuckDB oracle bit-for-bit.
     """
     docs = load_table(spark, sf_dir, "documents")
-    lw = dsir_log_weights(docs, bench_mod=bench_mod, n_buckets=n_buckets)
+    lw = dsir_log_weights(docs, bench_mod=20)
     return (
         lw.groupBy("source")
         .agg(
@@ -220,24 +216,22 @@ def dsir_importance_sample(spark: SparkSession, sf_dir: str,
     )
 
 
-def dsir_log_weights(docs: DataFrame, bench_mod: int = 20,
-                     n_buckets: int = 10_000) -> DataFrame:
+def dsir_log_weights(docs: DataFrame, bench_mod: int = 20) -> DataFrame:
     """Per-training-doc DSIR log importance weight (doc_id, source, lw)
     — core of :func:`dsir_importance_sample`, see there for the method
     and scale analysis."""
     toks = docs.select(
         "doc_id", "source", tokenize(normalize_text(F.col("text"))).alias("t"))
-    return dsir_log_weights_from_tokens(toks, bench_mod=bench_mod,
-                                        n_buckets=n_buckets)
+    return dsir_log_weights_from_tokens(toks, bench_mod=bench_mod)
 
 
-def dsir_log_weights_from_tokens(toks: DataFrame, bench_mod: int = 20,
-                                 n_buckets: int = 10_000) -> DataFrame:
+def dsir_log_weights_from_tokens(toks: DataFrame, bench_mod: int = 20) -> DataFrame:
     """:func:`dsir_log_weights` over a pre-tokenised (doc_id, source, t)
     relation — lets pipeline compositions share ONE tokenisation pass
     across stages (the dominant scan cost at corpus scale)."""
     from hadoop_mapreduce_spark.session import scoped_persist
 
+    n_buckets = 10_000
     # Persisted: FIVE consumers read this relation (target counts, raw
     # counts, the two totals, and the per-doc feature counts) — without
     # the materialisation point each one re-explodes the corpus and
@@ -405,21 +399,20 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def global_shuffle_order(spark: SparkSession, sf_dir: str,
-                         n_shards: int = 8, head: int = 5) -> DataFrame:
+def global_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic global training-order shuffle: permute the corpus
     by md5(doc_id), sharded for parallel writes.
 
-    shard = md5-bucket(doc_id) % n_shards; within a shard the order is
+    shard = md5-bucket(doc_id) % 8; within a shard the order is
     the md5 hex string itself (uniform, uncorrelated with insertion
     order). Any process re-derives a document's (shard, position)
     from its key — resumable epoch iteration with no shuffle-service
-    state. Emits the first `head` docs of every shard (the permutation's
+    state. Emits the first 5 docs of every shard (the permutation's
     checkable prefix) rather than the full corpus.
 
     Scale: one hash-partition exchange on shard + a per-shard sort —
     exactly the write path of a sharded training-set materialisation.
-    The row_number window is per-shard (n_shards-way parallel), never a
+    The row_number window is per-shard (8-way parallel), never a
     single global window.
     """
     from pyspark.sql import Window
@@ -428,18 +421,17 @@ def global_shuffle_order(spark: SparkSession, sf_dir: str,
     keyed = docs.select(
         "doc_id",
         F.md5(F.col("doc_id").cast("string")).alias("k"),
-        (h60(F.col("doc_id").cast("string")) % n_shards).alias("shard"),
+        (h60(F.col("doc_id").cast("string")) % 8).alias("shard"),
     )
     w = Window.partitionBy("shard").orderBy("k")
     return (
         keyed.withColumn("pos", F.row_number().over(w).cast("long"))
-        .where(F.col("pos") <= head)
+        .where(F.col("pos") <= 5)
         .select("shard", "pos", "doc_id")
     )
 
 
-def shard_order_runs_audit(spark: SparkSession, sf_dir: str,
-                           n_shards: int = 8) -> DataFrame:
+def shard_order_runs_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-quality audit of the deterministic training order: per
     shard of global_shuffle_order's layout, the observed count of
     ADJACENT same-source document pairs versus the count expected under
@@ -459,7 +451,7 @@ def shard_order_runs_audit(spark: SparkSession, sf_dir: str,
 
     Scale shape: shard = md5-bucket(doc_id), order = md5 hex (exactly
     global_shuffle_order's write path) — ONE hash exchange + per-shard
-    sort for the lag window (n_shards-way parallel, never a global
+    sort for the lag window (8-way parallel, never a global
     window), plus a (shard, source) count aggregate whose grid is
     metadata-sized.
     """
@@ -467,7 +459,7 @@ def shard_order_runs_audit(spark: SparkSession, sf_dir: str,
     keyed = docs.select(
         "doc_id", "source",
         F.md5(F.col("doc_id").cast("string")).alias("k"),
-        (h60(F.col("doc_id").cast("string")) % n_shards).alias("shard"),
+        (h60(F.col("doc_id").cast("string")) % 8).alias("shard"),
     )
     w = Window.partitionBy("shard").orderBy("k", "doc_id")
     obs = (
@@ -504,7 +496,7 @@ def shard_order_runs_audit(spark: SparkSession, sf_dir: str,
     )
 
 
-def dup_ngram_rate(spark: SparkSession, sf_dir: str, n: int = 8) -> DataFrame:
+def dup_ngram_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Repeated-long-n-gram rate per source — the scalable proxy for
     exact-substring duplication (Lee et al., "Deduplicating Training
     Data Makes Language Models Better" builds suffix arrays to find
@@ -522,6 +514,7 @@ def dup_ngram_rate(spark: SparkSession, sf_dir: str, n: int = 8) -> DataFrame:
     """
     from pyspark.sql import Window
 
+    n = 8
     docs = load_table(spark, sf_dir, "documents")
     grams = explode_ngram_set(docs, "text", n, ["doc_id", "source"])
     shared = F.count(F.lit(1)).over(Window.partitionBy("ngram"))
@@ -627,8 +620,8 @@ def sample_weighted(spark: SparkSession, sf_dir: str,
     )
 
 
-def bloom_decontaminate(spark: SparkSession, sf_dir: str, n: int = 4,
-                        bench_mod: int = 20, m_bits: int = 1 << 16) -> DataFrame:
+def bloom_decontaminate(spark: SparkSession, sf_dir: str,
+                        m_bits: int = 1 << 16) -> DataFrame:
     """Benchmark decontamination through a Bloom filter instead of the
     exact broadcast gram set (decontaminate_ngram's scale sibling).
 
@@ -665,8 +658,9 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str, n: int = 4,
     each partition emits at most m_bits/63 rows). The bitmap layout and
     its DuckDB twin are documented once, in ``functions/portable.py``.
     """
+    n = 4
     docs = load_table(spark, sf_dir, "documents")
-    is_bench = F.col("doc_id") % bench_mod == 0
+    is_bench = F.col("doc_id") % 20 == 0
     bm1 = bloom_bitmap(
         explode_ngram_set(docs.where(is_bench), "text", n), "ngram", m_bits)
     per_doc = (
@@ -759,11 +753,9 @@ def jsd_lang_divergence(spark: SparkSession, sf_dir: str,
     )
 
 
-def mixture_temperature_weights(spark: SparkSession, sf_dir: str,
-                                alpha: float = 0.7,
-                                budget: int = 1000) -> DataFrame:
+def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled mixture weights: sampling probability per
-    source proportional to (token share)^alpha — the multilingual /
+    source proportional to (token share)^alpha, alpha = 0.7 — the multilingual /
     multi-domain rebalancing rule (alpha=1 keeps the natural
     distribution, alpha→0 approaches uniform; mT5 and friends train at
     alpha≈0.3-0.7). Emits each source's natural share, its
@@ -785,7 +777,7 @@ def mixture_temperature_weights(spark: SparkSession, sf_dir: str,
         F.count(F.lit(1)).alias("n_docs"), F.sum("n").alias("n_tokens"))
     w = Window.partitionBy()
     share = F.col("n_tokens") / F.sum("n_tokens").over(w)
-    scaled = F.pow(share, F.lit(alpha))
+    scaled = F.pow(share, F.lit(0.7))
     weight = scaled / F.sum(scaled).over(w)
     return (
         per_src.select(
@@ -793,7 +785,7 @@ def mixture_temperature_weights(spark: SparkSession, sf_dir: str,
             F.col("n_tokens").cast("long").alias("n_tokens"),
             F.round(share, 6).alias("natural_share"),
             F.round(weight, 6).alias("weight"),
-            F.round(weight * budget, 2).alias("expected_docs"),
+            F.round(weight * 1000, 2).alias("expected_docs"),
         )
     )
 
@@ -843,8 +835,7 @@ def quantile_normalize_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def source_overlap_matrix(spark: SparkSession, sf_dir: str,
-                          n: int = 8) -> DataFrame:
+def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source contamination matrix: for every source pair, how
     many distinct token 8-grams they share — the provenance audit that
     finds mirror sites, syndicated feeds and wholesale copying BETWEEN
@@ -861,7 +852,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str,
     corpus-bounded; nothing is broadcast.
     """
     docs = load_table(spark, sf_dir, "documents")
-    grams = explode_ngrams(docs, "text", n, ["source"]).distinct()
+    grams = explode_ngrams(docs, "text", 8, ["source"]).distinct()
     sizes = grams.groupBy("source").agg(F.count(F.lit(1)).alias("n_grams"))
     a = grams.select(F.col("source").alias("src_a"), "ngram")
     b = grams.select(F.col("source").alias("src_b"), "ngram")
@@ -883,8 +874,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str,
     )
 
 
-def gopher_dup_ngrams(spark: SparkSession, sf_dir: str, n: int = 5,
-                      flag_frac: float = 0.20) -> DataFrame:
+def gopher_dup_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The other half of the Gopher repetition gate (Rae et al. 2021,
     Table A1): the fraction of a document covered by n-grams that occur
     MORE THAN ONCE within that document. quality_repetition implements
@@ -919,6 +909,7 @@ def gopher_dup_ngrams(spark: SparkSession, sf_dir: str, n: int = 5,
     )
     from pyspark.sql import Window
 
+    n = 5
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", "source",
@@ -956,7 +947,7 @@ def gopher_dup_ngrams(spark: SparkSession, sf_dir: str, n: int = 5,
         per_doc.groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum((F.col("frac_e6") > int(flag_frac * 1_000_000))
+            F.sum((F.col("frac_e6") > 200_000)
                   .cast("long")).alias("n_flagged"),
             F.sum("frac_e6").alias("sum_dup_frac_e6"),
         )
@@ -1046,8 +1037,7 @@ def source_concentration_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return axis("source").unionByName(axis("lang"))
 
 
-def token_budget_fill(spark: SparkSession, sf_dir: str,
-                      budget_divisor: int = 5) -> DataFrame:
+def token_budget_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Budgeted corpus assembly: give every source an equal slice of a
     global token budget (total_tokens // budget_divisor) and fill each
     slice in deterministic md5(doc_id) order until the next document
@@ -1071,6 +1061,7 @@ def token_budget_fill(spark: SparkSession, sf_dir: str,
     Shape: one scan; one exchange on source for the running-sum window;
     the per-source budget table is a 1-row aggregate broadcast back.
     """
+    budget_divisor = 5
     docs = load_table(spark, sf_dir, "documents")
     sized = docs.select(
         "source", "doc_id",
@@ -1112,15 +1103,14 @@ def token_budget_fill(spark: SparkSession, sf_dir: str,
     )
 
 
-def curriculum_interleave(spark: SparkSession, sf_dir: str,
-                          k: int = 100) -> DataFrame:
+def curriculum_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curriculum training order: rank each source's documents by a
     quality signal (distinct-token ratio, exact-int), then interleave
     the sources round-robin — position = (quality_rank − 1)·n_sources +
     source_index — so a training run sees every domain early and the
     best documents of each domain first. This is the deterministic
     "quality-descending, domain-balanced" curriculum an ordered
-    pre-training dataloader consumes; emits the first k positions.
+    pre-training dataloader consumes; emits the first 100 positions.
 
     Portability: the quality signal is the floor-divided dtok ratio,
     ranks are row_numbers with doc_id tie-breaks, and the source index
@@ -1172,12 +1162,11 @@ def curriculum_interleave(spark: SparkSession, sf_dir: str,
             "doc_id", "dtok_e6",
         )
         .orderBy("position")
-        .limit(k)
+        .limit(100)
     )
 
 
-def source_novelty_attribution(spark: SparkSession, sf_dir: str,
-                               n: int = 4) -> DataFrame:
+def source_novelty_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-value attribution: process sources in a canonical
     (alphabetical) order and credit every distinct token n-gram to the
     FIRST source that contributes it — each source's "novel grams" are
@@ -1204,7 +1193,7 @@ def source_novelty_attribution(spark: SparkSession, sf_dir: str,
                 Window.partitionBy(F.lit(1)).orderBy("source")))
     )
     grams = (
-        explode_ngram_set(docs, "text", n, ["source"])
+        explode_ngram_set(docs, "text", 4, ["source"])
         .distinct()
         .join(F.broadcast(srcs), "source")
     )
@@ -1433,8 +1422,7 @@ def wasserstein_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def neyman_allocation_plan(spark: SparkSession, sf_dir: str,
-                           n_total: int = 1000) -> DataFrame:
+def neyman_allocation_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Neyman-optimal stratified sampling design: allocate a fixed
     sample budget across sources proportionally to N_h·S_h (stratum
     size × stratum std-dev of document length) — the design that
@@ -1458,6 +1446,7 @@ def neyman_allocation_plan(spark: SparkSession, sf_dir: str,
     Scale: one corpus scan to |sources| rows; everything after is
     metadata-sized.
     """
+    n_total = 1000
     docs = load_table(spark, sf_dir, "documents")
     per = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -1595,11 +1584,10 @@ def length_qq_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def length_hill_tail_index(spark: SparkSession, sf_dir: str,
-                           k: int = 100) -> DataFrame:
+def length_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hill estimator of the document-length tail index per source —
-    alpha = 1 / mean(ln(x_(i) / x_(k))) over the top-k order
-    statistics: alpha < 2 means infinite-variance tails (a handful of
+    alpha = 1 / mean(ln(x_(i) / x_(k))) over the top-k (k = 100)
+    order statistics: alpha < 2 means infinite-variance tails (a handful of
     giant documents dominate token mass and shard sizing), the
     heavy-tail fact a mean/percentile profile understates.  Consumes
     the same length column as `length_qq_drift` but answers the TAIL
@@ -1620,7 +1608,7 @@ def length_hill_tail_index(spark: SparkSession, sf_dir: str,
     topk = (
         docs.select("source", "n_chars", "doc_id")
         .withColumn("rk", F.row_number().over(w))
-        .where((F.col("rk") <= k) & (F.col("n_chars") > 0))
+        .where((F.col("rk") <= 100) & (F.col("n_chars") > 0))
     )
     from hadoop_mapreduce_spark.session import scoped_persist
 
@@ -1726,8 +1714,7 @@ def token_mass_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def psi_source_drift(spark: SparkSession, sf_dir: str,
-                     n_bins: int = 10) -> DataFrame:
+def psi_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index of each source's document-length
     distribution against the corpus-wide reference — THE industry
     drift gate (credit-risk monitoring heritage; the 0.1 / 0.25
@@ -1758,6 +1745,7 @@ def psi_source_drift(spark: SparkSession, sf_dir: str,
     a |sources| x n_bins grid for the fold. Nothing after the first
     exchanges exceeds the value domain.
     """
+    n_bins = 10
     docs = load_table(spark, sf_dir, "documents")
     vals = docs.select("source", F.col("n_chars").alias("x"))
     from hadoop_mapreduce_spark.session import scoped_persist

@@ -313,8 +313,8 @@ def exact_jaccard_for_pairs(hs: DataFrame, pairs: DataFrame,
     )
 
 
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str, threshold: float = 0.8) -> DataFrame:
-    """Verified near-dup pairs (id1, id2, jaccard >= threshold) — the
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Verified near-dup pairs (id1, id2, jaccard >= 0.8) — the
     pair builder of the whole near-dup family: every consumer (CC,
     keep-best, leakage guard, PageRank, LPA, the audits) reads its
     edges from here and adds no materialisation of its own.
@@ -359,15 +359,14 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str, threshold: float = 0.8) 
     # so they are persisted here — lazily: the consumer's first job
     # fills the cache. (r8: an eager localCheckpoint measured within
     # noise of the persist and hides the verify plan from explain.)
-    return scoped_persist(exact_jaccard_for_pairs(hs, cands, threshold))
+    return scoped_persist(exact_jaccard_for_pairs(hs, cands, 0.8))
 
 
 # --------------------------------------------------------------------------
 # SimHash
 # --------------------------------------------------------------------------
 
-def simhash_fingerprints(docs: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text", bits: int = 60) -> DataFrame:
+def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     """(id, simhash: long) — per-bit majority vote over token hashes.
 
     Classic Charikar simhash: each distinct token contributes +1/-1 to
@@ -390,8 +389,9 @@ def simhash_fingerprints(docs: DataFrame, id_col: str = "doc_id",
     """
     from hadoop_mapreduce_spark.functions.text import normalize_text, tokenize
 
-    toks = F.array_distinct(tokenize(normalize_text(F.col(text_col))))
-    th = docs.select(F.col(id_col).alias("id"), F.explode(toks).alias("tk")).select(
+    bits = 60
+    toks = F.array_distinct(tokenize(normalize_text(F.col("text"))))
+    th = docs.select(F.col("doc_id").alias("id"), F.explode(toks).alias("tk")).select(
         "id", h60(F.col("tk")).alias("h")
     )
     # Whole-expression SQL strings: one py4j round-trip per aggregate
@@ -426,8 +426,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def simhash_hamming_pairs(docs: DataFrame, max_hamming: int = 3,
-                          bits: int = 60, blocks: int = 4) -> DataFrame:
+def simhash_hamming_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Candidate near-dup pairs at Hamming distance <= max_hamming.
 
     Pigeonhole blocking: split the fingerprint into `blocks` bit-blocks;
@@ -435,7 +434,9 @@ def simhash_hamming_pairs(docs: DataFrame, max_hamming: int = 3,
     groupBy-block-value join finds all candidates with one uniform
     shuffle, then an exact popcount filter verifies.
     """
-    fp = simhash_fingerprints(docs, bits=bits)
+    bits = 60
+    blocks = 4
+    fp = simhash_fingerprints(docs)
     block_bits = bits // blocks
     mask = (1 << block_bits) - 1
     blocked = fp.select(
@@ -506,9 +507,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str, threshold: float = 0.8
 # Embedding-cosine near-dup (the 5th dedup family: semantic duplicates)
 # --------------------------------------------------------------------------
 
-def embedding_cosine_pairs(vectors: DataFrame, threshold: float,
-                           id_col: str = "vec_id", vec_col: str = "embedding",
-                           n_blocks: int = 4) -> DataFrame:
+def embedding_cosine_pairs(vectors: DataFrame, threshold: float) -> DataFrame:
     """Exact all-pairs cosine near-dup: every (id1 < id2) pair whose
     cosine similarity meets the threshold.
 
@@ -529,10 +528,12 @@ def embedding_cosine_pairs(vectors: DataFrame, threshold: float,
     at 100 TB); parallelism = n_blocks*(n_blocks+1)/2 groups. The
     sub-quadratic path is dedup_embedding_lsh below.
     """
+    id_col = "vec_id"
+    n_blocks = 4
     spark = vectors.sparkSession
     raw = vectors.select(
         F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("embedding").cast("array<double>").alias("v"),
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("blk"),
     )
     spine = spark.createDataFrame(
@@ -600,10 +601,7 @@ def embedding_cosine_pairs(vectors: DataFrame, threshold: float,
 
 
 def embedding_cosine_cross_pairs(big: DataFrame, small: DataFrame,
-                                 threshold: float,
-                                 id_col: str = "vec_id",
-                                 vec_col: str = "embedding",
-                                 n_blocks: int = 8) -> DataFrame:
+                                 threshold: float) -> DataFrame:
     """Cross-set exact cosine pairs (big_id, small_id, cosine >= t) —
     the asymmetric sibling of :func:`embedding_cosine_pairs` for
     train-vs-benchmark shapes where one side is O(10^3..10^5) vectors
@@ -616,6 +614,9 @@ def embedding_cosine_cross_pairs(big: DataFrame, small: DataFrame,
     Flops O(|big| x |small| x d) are intrinsic to the exact answer; the
     sub-linear path is the SRP/IVF machinery in operators/similarity.py.
     """
+    id_col = "vec_id"
+    vec_col = "embedding"
+    n_blocks = 8
     b = big.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
@@ -691,8 +692,7 @@ def _srp_planes(n_bits: int, dim: int):
     return np.array(flat, dtype=np.float64).reshape(n_bits, dim)
 
 
-def srp_signatures(vectors: DataFrame, n_bits: int = 16,
-                   id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def srp_signatures(vectors: DataFrame, n_bits: int = 16) -> DataFrame:
     """Sign-random-projection (SRP) signatures for cosine LSH.
 
     bit_i = 1 iff dot(v, r_i) > 0 with deterministic ±1 hyperplanes
@@ -711,6 +711,8 @@ def srp_signatures(vectors: DataFrame, n_bits: int = 16,
     """
     import numpy as np
 
+    id_col = "vec_id"
+    vec_col = "embedding"
     schema = "id long, " + ", ".join(f"b{i} int" for i in range(n_bits))
 
     def sign(batches):
@@ -732,8 +734,7 @@ def srp_signatures(vectors: DataFrame, n_bits: int = 16,
     return vectors.select(id_col, vec_col).mapInPandas(sign, schema)
 
 
-def srp_bucket_rows(vectors: DataFrame, n_bits: int = 64, bands: int = 16,
-                    id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def srp_bucket_rows(vectors: DataFrame) -> DataFrame:
     """(id, bucket) band-bucket rows straight from the SRP stage.
 
     Same signatures as srp_signatures, but the banding (reshape the
@@ -748,6 +749,10 @@ def srp_bucket_rows(vectors: DataFrame, n_bits: int = 64, bands: int = 16,
     """
     import numpy as np
 
+    n_bits = 64
+    bands = 16
+    id_col = "vec_id"
+    vec_col = "embedding"
     rows_per_band = n_bits // bands
 
     def bucketize(batches):
@@ -773,28 +778,27 @@ def srp_bucket_rows(vectors: DataFrame, n_bits: int = 64, bands: int = 16,
         bucketize, "id long, bucket long")
 
 
-def dedup_embedding_lsh(spark: SparkSession, sf_dir: str, threshold: float = 0.4,
-                        n_bits: int = 64, bands: int = 16,
-                        max_bucket: int = 2048) -> DataFrame:
+def dedup_embedding_lsh(spark: SparkSession, sf_dir: str,
+                        threshold: float = 0.4) -> DataFrame:
     """Approximate embedding near-dup: SRP-LSH banding + exact verify.
 
-    Candidate pairs = vectors agreeing on all bits of >= 1 band (bands x
-    (n_bits/bands) banding; r=4 bits/band → a random pair collides with
+    Candidate pairs = vectors agreeing on all bits of >= 1 band (16 bands x
+    4 bits of a 64-bit signature; r=4 bits/band → a random pair collides with
     p≈2^-4 per band while a cosine-0.9 pair collides with p≈0.54 and is
     recalled w.p. ~1-(1-0.54)^16 ≈ 1). Scale guards:
 
-      * hot-bucket suppression: buckets larger than max_bucket are
+      * hot-bucket suppression: buckets larger than 2048 are
         dropped before pair scoring — an oversized bucket is O(size^2)
         pairs carrying almost no signal (standard LSH-at-scale practice;
         its members still pair via their other bands);
       * verification is BUCKET-LOCAL: each band bucket (bounded by
-        max_bucket) holds its members' unit vectors; one BLAS matmul
+        2048) holds its members' unit vectors; one BLAS matmul
         scores all within-bucket pairs and ONLY above-threshold pairs
         leave the worker. Candidate pairs are never materialised as
         shuffle rows — the earlier formulation (bucket self-join →
         10^7-10^8 candidate rows → distinct → two joins back to the
         vector table) shuffled O(candidates) rows; this one shuffles
-        O(bands·N) vector rows plus O(result) pairs, the same reshape
+        O(16·N) vector rows plus O(result) pairs, the same reshape
         the exact block-pair scorer uses but with LSH buckets as the
         blocks. A pair sharing k bands is scored k times (bounded
         extra flops, all in BLAS) and deduped by the final distinct
@@ -836,10 +840,10 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str, threshold: float = 0.4
     # bucket = band id in the high bits, sign bits packed below — a
     # LONG shuffle key, assembled inside the SRP numpy kernel
     # (srp_bucket_rows) so the plan carries no per-bit columns.
-    buckets = scoped_persist(srp_bucket_rows(emb, n_bits=n_bits, bands=bands))
+    buckets = scoped_persist(srp_bucket_rows(emb))
     bucket_sizes = buckets.groupBy("bucket").agg(F.count(F.lit(1)).alias("bsz"))
     pruned = buckets.join(
-        F.broadcast(bucket_sizes.where(F.col("bsz") > max_bucket).select("bucket")),
+        F.broadcast(bucket_sizes.where(F.col("bsz") > 2048).select("bucket")),
         "bucket", "left_anti",
     )
 
@@ -863,7 +867,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str, threshold: float = 0.4
         bk = pdf["bucket"].to_numpy()
         # bucket-sorted within the partition → contiguous runs; group the
         # runs by length and score each length class with ONE batched
-        # matmul (nb, s, dim) x (nb, dim, s) — max_bucket bounds s, so a
+        # matmul (nb, s, dim) x (nb, dim, s) — the 2048 cap bounds s, so a
         # class slab is ≤ nb * 32 MB/2048-bucket equivalents
         starts = np.flatnonzero(np.r_[True, bk[1:] != bk[:-1]])
         lens = np.diff(np.r_[starts, len(bk)])
@@ -1138,8 +1142,7 @@ def triangles(e: DataFrame) -> DataFrame:
     return wedges.join(closing, ["v", "w"]).select("u", "v", "w")
 
 
-def dedup_components_star(spark: SparkSession, sf_dir: str,
-                          threshold: float = 0.8) -> DataFrame:
+def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Twin of dedup_connected_components with edges from the
     MinHash-LSH verified candidates (the scale path end to end):
     candidate generation is O(colliding pairs), not the inverted-index
@@ -1150,13 +1153,12 @@ def dedup_components_star(spark: SparkSession, sf_dir: str,
     oracle. dedup_connected_components keeps the exact inverted-index
     edge source as the oracle twin."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    pairs = dedup_minhash_lsh(spark, sf_dir, threshold).select("id1", "id2")
+    pairs = dedup_minhash_lsh(spark, sf_dir).select("id1", "id2")
     out = connected_components_star(docs, pairs)
     return out.select("doc_id", F.col("comp").cast("long").alias("component"))
 
 
-def dedup_keep_best(spark: SparkSession, sf_dir: str,
-                    threshold: float = 0.8) -> DataFrame:
+def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical-representative selection: for every near-dup cluster
     with >= 2 members, pick the member to KEEP — the longest document
     (n_chars), doc_id as the deterministic tie-break. This is the step
@@ -1173,7 +1175,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str,
     formulation would sort every cluster's members; max_by folds them.
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    comp = dedup_components_star(spark, sf_dir, threshold)
+    comp = dedup_components_star(spark, sf_dir)
     return (
         comp.join(docs, "doc_id")
         .groupBy("component")
@@ -1189,8 +1191,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str,
     )
 
 
-def dedup_incremental(spark: SparkSession, sf_dir: str,
-                      threshold: float = 0.8, ingest_mod: int = 10) -> DataFrame:
+def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ingest dedup — the daily-crawl pattern: a NEW BATCH
     of documents (here the doc_id % ingest_mod == 0 carve, ~10%) is
     deduplicated against the EXISTING CORPUS (the other ~90%, standing
@@ -1225,6 +1226,8 @@ def dedup_incremental(spark: SparkSession, sf_dir: str,
     """
     from hadoop_mapreduce_spark.session import scoped_persist
 
+    threshold = 0.8
+    ingest_mod = 10
     docs = load_table(spark, sf_dir, "documents")
     hs = scoped_persist(hashed_shingle_rows(docs))
     sigs = minhash_signatures(hs)
@@ -1263,27 +1266,25 @@ def dedup_incremental(spark: SparkSession, sf_dir: str,
     return ledger_idx.unionByName(ledger_batch)
 
 
-def dedup_connected_components(spark: SparkSession, sf_dir: str,
-                               threshold: float = 0.8) -> DataFrame:
+def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Component id (= min reachable doc_id) per document, where edges
-    are exact shingle-Jaccard >= threshold pairs. The cluster-then-keep-
+    are exact shingle-Jaccard >= 0.8 pairs. The cluster-then-keep-
     canonical step of a dedup pipeline: keep component == doc_id rows.
     Components come from star-CC (connected_components_star).
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    pairs = dedup_ngram_jaccard(spark, sf_dir, threshold=threshold).select("id1", "id2")
+    pairs = dedup_ngram_jaccard(spark, sf_dir, threshold=0.8).select("id1", "id2")
     out = connected_components_star(docs, pairs)
     return out.select("doc_id", F.col("comp").cast("long").alias("component"))
 
 
-def dedup_repeated_spans(spark: SparkSession, sf_dir: str,
-                         k: int = 8) -> DataFrame:
+def dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Position-exact repeated-substring spans — the sliding-window form
     of Lee et al.'s suffix-array dedup ("Deduplicating Training Data
     Makes Language Models Better": remove every duplicated >= 50-token
     span, keep one occurrence). ``dedup_span_chunks`` trades span
     ALIGNMENT for fixed non-overlapping chunks; this operator keeps the
-    alignment: every k-token window at every position is tested, so a
+    alignment: every k-token window (k = 8) at every position is tested, so a
     duplicated passage is found wherever it starts, and overlapping
     duplicated windows merge into one maximal span.
 
@@ -1314,7 +1315,7 @@ def dedup_repeated_spans(spark: SparkSession, sf_dir: str,
     per-doc and bounded by doc length.
     """
     docs = load_table(spark, sf_dir, "documents")
-    return repeated_span_table(docs, k=k)
+    return repeated_span_table(docs, k=8)
 
 
 def repeated_span_table(docs: DataFrame, k: int = 8) -> DataFrame:
@@ -1441,9 +1442,7 @@ def dedup_span_chunks(spark: SparkSession, sf_dir: str,
     )
 
 
-def pagerank_dedup_graph(spark: SparkSession, sf_dir: str,
-                         threshold: float = 0.8, damping: float = 0.85,
-                         n_iter: int = 10, k: int = 50) -> DataFrame:
+def pagerank_dedup_graph(spark: SparkSession, sf_dir: str, k: int = 50) -> DataFrame:
     """PageRank over the near-duplicate graph — ranks the "hub"
     documents that sit at the centre of duplication families (the doc a
     curator should inspect first; also the canonical-representative
@@ -1473,8 +1472,9 @@ def pagerank_dedup_graph(spark: SparkSession, sf_dir: str,
     """
     from pyspark.sql import Window
 
+    damping = 0.85
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    pairs = dedup_minhash_lsh(spark, sf_dir, threshold).select("id1", "id2")
+    pairs = dedup_minhash_lsh(spark, sf_dir).select("id1", "id2")
     edges = (
         pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
         .unionAll(pairs.select(F.col("id2").alias("src"),
@@ -1484,7 +1484,7 @@ def pagerank_dedup_graph(spark: SparkSession, sf_dir: str,
                                    F.col("d").alias("deg"))
     n_docs = docs.count()
     ranks = docs.select("doc_id", F.lit(1.0 / n_docs).alias("rank"))
-    for _ in range(n_iter):
+    for _ in range(10):
         contrib = (
             ranks.join(degree, ranks["doc_id"] == degree["src"], "inner")
             .join(edges, "src")
@@ -1520,8 +1520,7 @@ def pagerank_dedup_graph(spark: SparkSession, sf_dir: str,
     )
 
 
-def triangle_count_dedup_graph(spark: SparkSession, sf_dir: str,
-                               threshold: float = 0.8) -> DataFrame:
+def triangle_count_dedup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle count over the near-duplicate graph — the clustering-
     coefficient ingredient: near-dup families that are CLIQUES (every
     pair mutually similar) behave differently from star-shaped families
@@ -1534,15 +1533,14 @@ def triangle_count_dedup_graph(spark: SparkSession, sf_dir: str,
     over the exact inverted-index Jaccard edges (``_dup_edges``, oracle
     parity); output: total and distinct triangle counts. Hash-green.
     """
-    tris = triangles(_dup_edges(spark, sf_dir, threshold))
+    tris = triangles(_dup_edges(spark, sf_dir, 0.8))
     return tris.agg(
         F.count(F.lit(1)).alias("n_triangles"),
         F.countDistinct("u", "v", "w").alias("n_distinct_triangles"),
     )
 
 
-def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str,
-                         threshold: float = 0.8) -> DataFrame:
+def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT all-qualifying-pairs Jaccard via prefix filtering (the
     PPJoin/AllPairs family, Bayardo et al. / Xiao et al.) — same output
     as dedup_ngram_jaccard, WITHOUT the inverted index's O(postings²)
@@ -1596,6 +1594,7 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str,
     """
     from hadoop_mapreduce_spark.session import scoped_persist
 
+    threshold = 0.8
     docs = load_table(spark, sf_dir, "documents")
     # Shingles carried as xxhash64 LONGS end to end (r7): the global
     # prefix order becomes (corpus frequency ASC, hash ASC) — any total
@@ -1649,8 +1648,7 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str,
     return exact_jaccard_for_pairs(hs, cand, threshold)
 
 
-def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str,
-                                 threshold: float = 0.8) -> DataFrame:
+def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup cluster-size distribution: how many clusters have
     exactly k members — the first diagnostic a curator reads off a
     dedup run (a long tail of giant clusters means template/boilerplate
@@ -1667,7 +1665,7 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str,
     dedup_components_star; same exact-equality-w.h.p. contract, same
     recursive-CTE oracle family).
     """
-    comp = dedup_components_star(spark, sf_dir, threshold)
+    comp = dedup_components_star(spark, sf_dir)
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("k"))
     return (
         sizes.groupBy("k")
@@ -1713,9 +1711,7 @@ MINHASH_CW: list[tuple[int, int]] = [
 MINHASH_CW_MOD = 2147483647
 
 
-def minhash_accuracy_audit(spark: SparkSession, sf_dir: str,
-                           num_hashes: int = 16, shingle_k: int = 3,
-                           ) -> DataFrame:
+def minhash_accuracy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-accuracy audit: for every pair of documents whose MinHash
     signatures collide on >= 1 component, compare the SIGNATURE-estimated
     Jaccard (matching components / num_hashes) against the EXACT shingle
@@ -1742,7 +1738,8 @@ def minhash_accuracy_audit(spark: SparkSession, sf_dir: str,
     the exact verify joins candidate pairs to the bounded per-doc
     arrays. Output is <= 10 rows.
     """
-    paired = _cw_pair_base(spark, sf_dir, num_hashes, shingle_k)
+    num_hashes = 16
+    paired = _cw_pair_base(spark, sf_dir)
     nh = float(num_hashes)
     err = F.abs(F.col("eq") / F.lit(nh) - F.col("inter") / F.col("uni"))
     return (
@@ -1762,8 +1759,7 @@ def minhash_accuracy_audit(spark: SparkSession, sf_dir: str,
     )
 
 
-def _cw_pair_base(spark: SparkSession, sf_dir: str,
-                  num_hashes: int = 16, shingle_k: int = 3) -> DataFrame:
+def _cw_pair_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared measurement base for the sketch-audit family
     (minhash_accuracy_audit, lsh_band_tuning): every signature-colliding
     pair with its matching-component count (eq), exact shingle
@@ -1772,8 +1768,9 @@ def _cw_pair_base(spark: SparkSession, sf_dir: str,
     minhash_accuracy_audit."""
     from hadoop_mapreduce_spark.session import scoped_persist
 
+    num_hashes = 16
     docs = load_table(spark, sf_dir, "documents")
-    sh = explode_ngram_set(docs, "text", shingle_k, ["doc_id"]).select(
+    sh = explode_ngram_set(docs, "text", 3, ["doc_id"]).select(
         F.col("doc_id").alias("id"), h60("ngram").alias("hs")).distinct()
     P = MINHASH_CW_MOD
     u = F.col("hs") % F.lit(P)
@@ -1826,8 +1823,7 @@ def _cw_pair_base(spark: SparkSession, sf_dir: str,
     return paired
 
 
-def lsh_band_tuning(spark: SparkSession, sf_dir: str,
-                    num_hashes: int = 16, shingle_k: int = 3) -> DataFrame:
+def lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Band/row tuning table: for each candidate LSH configuration
     (bands x rows_per_band, all with b*r = 128), the S-curve detection
     probability 1-(1-s^r)^b evaluated against the CORPUS'S OWN measured
@@ -1845,7 +1841,7 @@ def lsh_band_tuning(spark: SparkSession, sf_dir: str,
     small integers. The only shuffle beyond the shared pair base is a
     20-row aggregation; the config grid is a 4-row literal cross join.
     """
-    pairs = _cw_pair_base(spark, sf_dir, num_hashes, shingle_k)
+    pairs = _cw_pair_base(spark, sf_dir)
     bk = (
         pairs.select(
             F.least(F.expr("inter * 20 div uni"), F.lit(19))
@@ -1883,8 +1879,7 @@ def lsh_band_tuning(spark: SparkSession, sf_dir: str,
     )
 
 
-def neardup_label_conflict(spark: SparkSession, sf_dir: str,
-                           threshold: float = 0.8) -> DataFrame:
+def neardup_label_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Label-consistency audit over near-duplicate clusters: for every
     cluster (>= 2 members) from the LSH + star-CC scale path, the
     member count, how many distinct lang / source labels its members
@@ -1904,7 +1899,7 @@ def neardup_label_conflict(spark: SparkSession, sf_dir: str,
     """
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source")
-    comp = dedup_components_star(spark, sf_dir, threshold=threshold)
+    comp = dedup_components_star(spark, sf_dir)
     members = comp.join(docs, "doc_id")
     lang_counts = (
         members.groupBy("component", "lang")
@@ -1939,9 +1934,7 @@ def neardup_label_conflict(spark: SparkSession, sf_dir: str,
     )
 
 
-def dedup_threshold_sweep(spark: SparkSession, sf_dir: str,
-                          num_hashes: int = 16,
-                          shingle_k: int = 3) -> DataFrame:
+def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup-threshold calibration: for each candidate Jaccard cutoff
     (0.5 ... 0.9), how many verified pairs and how many distinct
     documents the near-dup pass would touch — the removal-volume curve
@@ -1958,7 +1951,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str,
     its two endpoints (pairs are collision-bounded, so the explode is
     too). Output: 5 rows.
     """
-    pairs = _cw_pair_base(spark, sf_dir, num_hashes, shingle_k).select(
+    pairs = _cw_pair_base(spark, sf_dir).select(
         "id1", "id2", "inter", "uni")
     th = spark.createDataFrame([(t,) for t in (5, 6, 7, 8, 9)],
                                "t10 long")
@@ -1986,22 +1979,20 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str,
     )
 
 
-def label_propagation_communities(spark: SparkSession, sf_dir: str,
-                                  threshold: float = 0.8,
-                                  n_iter: int = 4) -> DataFrame:
+def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous label propagation (LPA) over the near-duplicate
     graph — the community view that sits between connected components
     (too coarse: one bridge edge merges two dup families) and pairwise
     clusters: each node adopts the MAJORITY label among its neighbours,
-    ties to the smallest label, for a fixed n_iter synchronous rounds.
+    ties to the smallest label, for a fixed 4 synchronous rounds.
 
     The rounds are ``lpa_labels`` (self-vote damped, total tie-break,
     replayed by the oracle's chained CTEs). Scale shape per round: one
     join + one (node, label) count + one rank window, all on the
     dup-edge relation.
     """
-    pairs = dedup_minhash_lsh(spark, sf_dir, threshold).select("id1", "id2")
-    labels = lpa_labels(pairs, n_iter)
+    pairs = dedup_minhash_lsh(spark, sf_dir).select("id1", "id2")
+    labels = lpa_labels(pairs, 4)
     wc = Window.partitionBy("lbl")
     return (
         labels.withColumn("community_size",
@@ -2011,8 +2002,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str,
     )
 
 
-def dedup_chain_audit(spark: SparkSession, sf_dir: str,
-                      threshold: float = 0.8) -> DataFrame:
+def dedup_chain_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive-merge audit of the connected-component dedup: per
     multi-doc cluster, edge count, edge DENSITY (observed edges /
     possible pairs) and the weakest verified edge — the governance
@@ -2033,7 +2023,7 @@ def dedup_chain_audit(spark: SparkSession, sf_dir: str,
     rounding convention.
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    pairs = dedup_minhash_lsh(spark, sf_dir, threshold)
+    pairs = dedup_minhash_lsh(spark, sf_dir)
     # star-CC assignment over the same edge set (dedup_components_star's
     # components, from the pairs already held)
     comp = connected_components_star(docs, pairs.select("id1", "id2"))
@@ -2063,8 +2053,7 @@ def dedup_chain_audit(spark: SparkSession, sf_dir: str,
     )
 
 
-def dedup_containment(spark: SparkSession, sf_dir: str,
-                      threshold_e3: int = 900) -> DataFrame:
+def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric shingle CONTAINMENT pairs (Broder 1997):
     C(A,B) = |S(A) ∩ S(B)| / |S(A)| — the directed statistic that
     catches a document EMBEDDED inside a larger one, which symmetric
@@ -2075,7 +2064,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str,
     `dedup_minhash_lsh`) is blind to them.
 
     Exactness: the qualifying test is pure integers —
-    c * 1000 >= threshold_e3 * |S(A)| — and containment is emitted in
+    c * 1000 >= 900 * |S(A)| — and containment is emitted in
     micro-units by integer division; no float ever compares.  Ordered
     pairs: (small ⊂ big) and (big ⊃ small) are different facts, and
     both directions emit when both pass.
@@ -2099,7 +2088,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str,
         shingle_pair_counts(sh)
         .select("c", F.inline(F.array(direction("1", "2"),
                                       direction("2", "1"))))
-        .where(F.col("c") * 1000 >= F.lit(threshold_e3) * F.col("n_small"))
+        .where(F.col("c") * 1000 >= F.lit(900) * F.col("n_small"))
         .select(
             "id_small", "id_big",
             F.col("c").cast("long").alias("n_shared"),
@@ -2110,8 +2099,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str,
     )
 
 
-def cross_source_duplication_matrix(spark: SparkSession, sf_dir: str,
-                                    threshold: float = 0.5) -> DataFrame:
+def cross_source_duplication_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Which sources copy from which: near-duplicate pair counts rolled
     up to the |sources|² matrix, with within-source and cross-source
     duplication separated — the provenance question behind mixture
@@ -2119,7 +2107,7 @@ def cross_source_duplication_matrix(spark: SparkSession, sf_dir: str,
     less novelty than its row count suggests; `source_overlap_matrix`
     measures vocabulary overlap, this measures actual near-dup mass).
 
-    Pairs come from the exact inverted-index Jaccard at the given
+    Pairs come from the exact inverted-index Jaccard at the 0.5
     threshold (oracle parity with the `dedup_ngram_jaccard` family);
     the rollup key is the UNORDERED source pair (src_a <= src_b), and
     the pair-rate denominator |docs_a| * |docs_b| (or n*(n-1)/2 within
@@ -2129,7 +2117,7 @@ def cross_source_duplication_matrix(spark: SparkSession, sf_dir: str,
     Scale: the matrix rollup is |sources|²-bounded; per-source doc
     counts broadcast onto it.
     """
-    pairs = dedup_ngram_jaccard(spark, sf_dir, threshold=threshold) \
+    pairs = dedup_ngram_jaccard(spark, sf_dir, threshold=0.5) \
         .select("id1", "id2")
     docs = load_table(spark, sf_dir, "documents")
     src = docs.select("doc_id", "source")
@@ -2179,8 +2167,7 @@ _BBIT_A = [2 * i * i + 4 * i + 3 for i in range(32)]
 _BBIT_B = [7 * i + 1 for i in range(32)]
 
 
-def minhash_bbit_estimate(spark: SparkSession, sf_dir: str,
-                          b: int = 4, k: int = 200) -> DataFrame:
+def minhash_bbit_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """b-bit MinHash accuracy audit (Li & König 2010): store only the
     lowest b bits of each MinHash value — 1/16th of the signature bytes
     at b=4 — and estimate Jaccard from the b-bit collision rate with
@@ -2211,7 +2198,7 @@ def minhash_bbit_estimate(spark: SparkSession, sf_dir: str,
     cand = shingle_pair_counts(sh)
     hv30 = (h60("s") % F.lit(1 << 30)).alias("x")
     hashed = sh.select("id", hv30)
-    mask = (1 << b) - 1
+    mask = (1 << 4) - 1
     # ALL 32 per-function mins in ONE aggregation (the
     # minhash_signatures pattern): the first cut exploded a 32-row
     # family per shingle — a 32x-inflated exchange that measured 57.8s
@@ -2242,16 +2229,14 @@ def minhash_bbit_estimate(spark: SparkSession, sf_dir: str,
                      DIV (32 * {twob - 1}))""").alias("abs_err_e6"),
         )
         .orderBy(F.desc("jaccard_e6"), "id1", "id2")
-        .limit(k)
+        .limit(200)
     )
 
 
-def dedup_shingle_size_sweep(spark: SparkSession, sf_dir: str,
-                             threshold: float = 0.5,
-                             max_df: int = 256) -> DataFrame:
+def dedup_shingle_size_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle-size sensitivity sweep: the near-duplicate pair count
     and docs-touched at k = 2, 3, 4 token shingles under one Jaccard
-    threshold — the parameter-robustness read before freezing a dedup
+    threshold (0.5) — the parameter-robustness read before freezing a dedup
     config (k=2 over-merges through common bigrams, k=5 misses
     reorderings; a pair set that COLLAPSES between k=3 and k=4 is
     boilerplate, one that survives is true duplication).
@@ -2265,7 +2250,7 @@ def dedup_shingle_size_sweep(spark: SparkSession, sf_dir: str,
 
     Scale: the k-grid multiplies the postings volume by 3, not the
     pair fan-out (each k joins only within itself), and shingles
-    appearing in > max_df documents are dropped on BOTH engines (the
+    appearing in > 256 documents are dropped on BOTH engines (the
     stop-shingle guard every postings self-join needs — k=2 bigram
     postings otherwise go quadratic on dup-saturated corpora: the
     uncapped sweep measured 60 s / heap-ceiling at 4×).  The cap is
@@ -2283,7 +2268,7 @@ def dedup_shingle_size_sweep(spark: SparkSession, sf_dir: str,
     toked = scoped_persist(
         docs.select("doc_id",
                     tokenize(normalize_text(F.col("text"))).alias("__t")))
-    th_e3 = int(threshold * 1000)
+    th_e3 = 500
     outs = []
     for k in (2, 3, 4):
         sh = toked.select(
@@ -2292,7 +2277,7 @@ def dedup_shingle_size_sweep(spark: SparkSession, sf_dir: str,
                 ngrams_from_tokens(F.col("__t"), k))).alias("s"))
         sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
         hot = (sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-               .where(F.col("df") > max_df).select("s"))
+               .where(F.col("df") > 256).select("s"))
         sh = sh.join(F.broadcast(hot), "s", "left_anti")
         a, b = sh.alias("a"), sh.alias("b")
         inter = (
@@ -2322,8 +2307,7 @@ def dedup_shingle_size_sweep(spark: SparkSession, sf_dir: str,
     return out
 
 
-def dedup_containment_prefix(spark: SparkSession, sf_dir: str,
-                             threshold_e3: int = 900) -> DataFrame:
+def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix-filtered EXACT containment — identical output to
     `dedup_containment`, without its all-shared-shingle candidate
     blowup: the asymmetric adaptation of the PPJoin prefix theorem
@@ -2352,6 +2336,7 @@ def dedup_containment_prefix(spark: SparkSession, sf_dir: str,
     """
     from hadoop_mapreduce_spark.session import scoped_persist
 
+    threshold_e3 = 900
     docs = load_table(spark, sf_dir, "documents")
     t = threshold_e3 / 1000.0
     sh = scoped_persist(
@@ -2460,8 +2445,7 @@ def _dup_edges(spark: SparkSession, sf_dir: str, threshold: float):
         .select("id1", "id2")
 
 
-def graph_triangle_count(spark: SparkSession, sf_dir: str,
-                         threshold: float = 0.5, k: int = 50) -> DataFrame:
+def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle counting over the near-dup pair graph with the
     degree-ordered node-iterator ``triangles`` (every triangle found
     exactly once, O(m^(3/2)) total work). Triangles are the
@@ -2473,7 +2457,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str,
     Output: top-k nodes by triangle participation (count desc, id asc)
     — per-NODE counts, each triangle crediting all three corners.
     """
-    tri = triangles(_dup_edges(spark, sf_dir, threshold))
+    tri = triangles(_dup_edges(spark, sf_dir, 0.5))
     per_node = (
         tri.select(F.col("u").alias("doc_id"))
         .unionAll(tri.select(F.col("v").alias("doc_id")))
@@ -2482,12 +2466,11 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str,
         .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
     )
     return (
-        per_node.orderBy(F.desc("n_triangles"), F.asc("doc_id")).limit(k)
+        per_node.orderBy(F.desc("n_triangles"), F.asc("doc_id")).limit(50)
     )
 
 
-def graph_degree_assortativity(spark: SparkSession, sf_dir: str,
-                               threshold: float = 0.5) -> DataFrame:
+def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity of the near-dup graph (Newman 2002): the
     Pearson correlation of endpoint degrees across edges — positive
     means dup hubs connect to dup hubs (one template family), negative
@@ -2504,7 +2487,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str,
     Scale: degrees from one edge-list rollup, one broadcast-sized join
     back onto edges, and a 1-row fold.
     """
-    e = _dup_edges(spark, sf_dir, threshold)
+    e = _dup_edges(spark, sf_dir, 0.5)
     deg = degrees(e)
     d1 = deg.select(F.col("v").alias("id1"), F.col("d").alias("da"))
     d2 = deg.select(F.col("v").alias("id2"), F.col("d").alias("db"))
@@ -2532,13 +2515,11 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str,
     )
 
 
-def kcore_dedup_graph(spark: SparkSession, sf_dir: str,
-                      threshold: float = 0.5, ks: tuple = (2, 3),
-                      n_rounds: int = 5) -> DataFrame:
+def kcore_dedup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core peeling of the near-dup graph (Seidman 1983; the
     distributed formulation of Montresor et al. 2013): repeatedly
     delete every node whose current degree is < k, for a FIXED
-    ``n_rounds`` synchronous rounds, at k in ``ks``. The surviving
+    ``n_rounds`` synchronous rounds, at k in (2, 3). The surviving
     k-core separates the two dup morphologies the keep-policy choice
     hinges on: pendant chains and stars (drift: A~B~C with A!~C) peel
     away immediately, while genuine re-post families survive as dense
@@ -2562,7 +2543,8 @@ def kcore_dedup_graph(spark: SparkSession, sf_dir: str,
     """
     from hadoop_mapreduce_spark.session import scoped_persist
 
-    e0 = scoped_persist(_dup_edges(spark, sf_dir, threshold))
+    n_rounds = 5
+    e0 = scoped_persist(_dup_edges(spark, sf_dir, 0.5))
 
     def summary(e: DataFrame, k: int, r: int) -> DataFrame:
         nodes = (
@@ -2578,7 +2560,7 @@ def kcore_dedup_graph(spark: SparkSession, sf_dir: str,
             "n_nodes", "n_edges")
 
     rows = None
-    for k in ks:
+    for k in (2, 3):
         e = e0
         for r in range(n_rounds + 1):
             s = summary(e, k, r)
@@ -2594,8 +2576,7 @@ def kcore_dedup_graph(spark: SparkSession, sf_dir: str,
     return rows
 
 
-def dedup_token_savings(spark: SparkSession, sf_dir: str,
-                        threshold: float = 0.8) -> DataFrame:
+def dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-savings accounting of keep-one-per-cluster dedup — the
     table every dedup proposal gets budgeted against ("dedup deletes
     X% of the tokens we pay to train on"): per source, document and
@@ -2624,7 +2605,7 @@ def dedup_token_savings(spark: SparkSession, sf_dir: str,
 
     # persisted: the star-CC node set and the member join both read it
     docs = scoped_persist(docs)
-    pairs = dedup_minhash_lsh(spark, sf_dir, threshold).select("id1", "id2")
+    pairs = dedup_minhash_lsh(spark, sf_dir).select("id1", "id2")
     comp = connected_components_star(docs.select("doc_id"), pairs)
     members = comp.join(docs, "doc_id")
     wk = Window.partitionBy("comp").orderBy(
@@ -2653,8 +2634,7 @@ def dedup_token_savings(spark: SparkSession, sf_dir: str,
     )
 
 
-def graph_modularity_audit(spark: SparkSession, sf_dir: str,
-                           threshold: float = 0.8) -> DataFrame:
+def graph_modularity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newman-Girvan modularity of the two community assignments this
     engine produces over the near-dup graph — connected components
     (star-CC) and 4-round synchronous LPA — on the SAME verified pair
@@ -2678,7 +2658,7 @@ def graph_modularity_audit(spark: SparkSession, sf_dir: str,
     sized; LPA rounds are `lpa_labels`, the fixed-round machinery of
     `label_propagation_communities`, on the same persisted pairs.
     """
-    pairs = dedup_minhash_lsh(spark, sf_dir, threshold).select("id1", "id2")
+    pairs = dedup_minhash_lsh(spark, sf_dir).select("id1", "id2")
     nodes = (
         pairs.select(F.col("id1").alias("v"))
         .unionAll(pairs.select(F.col("id2").alias("v")))
@@ -2733,9 +2713,7 @@ def graph_modularity_audit(spark: SparkSession, sf_dir: str,
     return q_row(cc, "cc_star").unionAll(q_row(labels, "lpa_4"))
 
 
-def graph_rich_club(spark: SparkSession, sf_dir: str,
-                    threshold: float = 0.5,
-                    ks: tuple = (1, 2, 4, 8)) -> DataFrame:
+def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rich-club coefficient of the near-dup graph (Zhou & Mondragon
     2004; Colizza et al. 2006): for each degree cutoff k, the edge
     density phi(k) = 2*E_k / (N_k * (N_k - 1)) among nodes with degree
@@ -2753,14 +2731,14 @@ def graph_rich_club(spark: SparkSession, sf_dir: str,
 
     Scale: one degree rollup + one broadcast-of-degrees edge filter
     per cutoff expressed as a single grid join — everything dup-graph-
-    sized; |ks| x 1 rows out.
+    sized; 4 rows out, one per cutoff.
     """
-    e = _dup_edges(spark, sf_dir, threshold)
+    e = _dup_edges(spark, sf_dir, 0.5)
     from hadoop_mapreduce_spark.session import scoped_persist
 
     e = scoped_persist(e)
     deg = degrees(e)
-    kdf = spark.createDataFrame([(int(k),) for k in ks], "k long")
+    kdf = spark.createDataFrame([(k,) for k in (1, 2, 4, 8)], "k long")
     nk = (
         deg.crossJoin(F.broadcast(kdf))
         .where(F.col("d") > F.col("k"))

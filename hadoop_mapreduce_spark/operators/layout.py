@@ -47,12 +47,11 @@ def morton_interleave16(x: Column, y: Column) -> Column:
     return (_spread16(x) + F.shiftleft(_spread16(y), 1)).cast("long")
 
 
-def zorder_layout(spark: SparkSession, sf_dir: str,
-                  prefix_shift: int = 11) -> DataFrame:
+def zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order the events table on (user_id, hour) and report the file
     layout the clustering would produce.
 
-    File assignment is the z-value PREFIX (z >> prefix_shift) — exactly
+    File assignment is the z-value PREFIX (z >> 11) — exactly
     how z-ordered writers cut files (contiguous Morton ranges), and a
     pure projection: no global window, no single-partition sort. The
     per-file min/max of BOTH dimensions is the result a reader's
@@ -86,7 +85,7 @@ def zorder_layout(spark: SparkSession, sf_dir: str,
     z = morton_interleave16(F.col("x"), F.col("y"))
     return (
         keyed.select("x", "y", z.alias("zval"))
-        .groupBy(F.shiftright(F.col("zval"), prefix_shift).alias("file_id"))
+        .groupBy(F.shiftright(F.col("zval"), 11).alias("file_id"))
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.min("x").cast("long").alias("min_x"),
@@ -116,8 +115,7 @@ _ZONE_PROBES = [
 ]
 
 
-def zone_map_skipping_audit(spark: SparkSession, sf_dir: str,
-                            n_files: int = 64) -> DataFrame:
+def zone_map_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-skipping effectiveness of three physical layouts of the
     events table under one fixed probe workload — the read-side audit
     that justifies (or refutes) paying for a z-order rewrite. For each
@@ -143,6 +141,7 @@ def zone_map_skipping_audit(spark: SparkSession, sf_dir: str,
     table. Integers end-to-end (rank-space bounds, counts, micro-unit
     fractions).
     """
+    n_files = 64
     ev = load_table(spark, sf_dir, "events")
     hour = F.expr("timestampdiff(HOUR,"
                   " TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")

@@ -316,18 +316,18 @@ def _resize_dims(w: int, h: int, max_side: int) -> tuple[int, int]:
     return (w * max_side) // longest, (h * max_side) // longest
 
 
-def multimodal_resize(spark: SparkSession, sf_dir: str, max_side: int = 32) -> DataFrame:
+def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resize pattern: REAL decoded dims → target dims via a vectorised
     batch transform. Real pipelines emit the resized blob too; here the
     dim math is real (and oracle-checked) while the pixel resample is
-    the documented library slot. max_side=32 so the fixture's ≤64-px
+    the documented library slot. The max side is 32 px, so the fixture's ≤64-px
     images actually exercise both branches of the clamp."""
     decoded = decode_batches(with_image_payload(load_table(spark, sf_dir, "documents")))
 
     def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             dims = [
-                _resize_dims(w, h, max_side)
+                _resize_dims(w, h, 32)
                 for w, h in zip(pdf["width"], pdf["height"])
             ]
             yield pd.DataFrame({
@@ -342,7 +342,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str, max_side: int = 32) -> D
     return decoded.mapInPandas(resize, out_schema)
 
 
-def multimodal_features(spark: SparkSession, sf_dir: str, dim: int = 8) -> DataFrame:
+def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-extract pattern: blob → fixed-dim float vector (the shape
     of an image/audio embedding model run under mapInPandas). The stub
     features are deterministic in the byte length (f_i = ((n_bytes *
@@ -355,8 +355,8 @@ def multimodal_features(spark: SparkSession, sf_dir: str, dim: int = 8) -> DataF
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             n = pdf["blob"].map(len).to_numpy()[:, None].astype(np.int64)
-            mult = np.arange(1, dim + 1, dtype=np.int64)[None, :]
-            feats = ((n * mult) % 1000) / 1000.0  # (batch, dim) — vectorised
+            mult = np.arange(1, 9, dtype=np.int64)[None, :]
+            feats = ((n * mult) % 1000) / 1000.0  # (batch, 8) — vectorised
             yield pd.DataFrame({
                 "doc_id": pdf["doc_id"],
                 "features": list(feats),
@@ -485,7 +485,7 @@ def audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Perceptual-hash (dHash) image near-duplicate detection
 # --------------------------------------------------------------------------
 
-def _dhash_band_expr(band: int, grid_col: str = "g") -> str:
+def _dhash_band_expr(band: int) -> str:
     """SQL expression for one 16-bit slice of the 64-bit dHash.
 
     Global bit n (0..63) maps to grid row r = n div 8, col c = n % 8;
@@ -495,6 +495,7 @@ def _dhash_band_expr(band: int, grid_col: str = "g") -> str:
     values ARE the hash state — no 64-bit value (and no cross-engine
     signed-overflow hazard) anywhere.
     """
+    grid_col = "g"
     base = 16 * band
     idx = f"cast(((({base} + j) div 8) * 9 + pmod({base} + j, 8)) as int)"
     return (

@@ -22,9 +22,7 @@ from hadoop_mapreduce_spark.operators.textstats import text_quality
 from hadoop_mapreduce_spark.sources.tables import load_table
 
 
-def pipeline_pretrain(spark: SparkSession, sf_dir: str,
-                      min_quality: float = 0.6,
-                      ngram_n: int = 4, bench_mod: int = 20) -> DataFrame:
+def pipeline_pretrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full pretraining-assembly pipeline as ONE declarative plan:
     quality gate → exact dedup → benchmark decontamination → domain
     mixture sampling → train/val/test split accounting. A user of the
@@ -58,6 +56,7 @@ def pipeline_pretrain(spark: SparkSession, sf_dir: str,
 
     from hadoop_mapreduce_spark.functions.text import ngrams_from_tokens
 
+    bench_mod = 20
     docs = load_table(spark, sf_dir, "documents")
     n_chars = F.length("text")
     n_punct = n_chars - F.length(F.regexp_replace("text", r"[^\w\s]", ""))
@@ -82,7 +81,7 @@ def pipeline_pretrain(spark: SparkSession, sf_dir: str,
         + F.when((avg_wl >= 3) & (avg_wl <= 10), 1.0).otherwise(0.0)
         + F.when(F.col("np") / F.col("nc") < 0.2, 1.0).otherwise(0.0)
     ) / 3.0
-    d0 = base.where(F.round(score, 4) >= min_quality)
+    d0 = base.where(F.round(score, 4) >= 0.6)
 
     # 2. exact dedup: keep min doc_id per content hash
     keep_exact = (
@@ -99,7 +98,7 @@ def pipeline_pretrain(spark: SparkSession, sf_dir: str,
     grams = base.select(
         "doc_id",
         F.explode(F.array_distinct(
-            ngrams_from_tokens(F.col("t"), ngram_n))).alias("g"),
+            ngrams_from_tokens(F.col("t"), 4))).alias("g"),
     )
     is_bench = F.col("doc_id") % bench_mod == 0
     bench_grams = grams.where(is_bench).select("g").distinct()
@@ -139,15 +138,13 @@ def pipeline_pretrain(spark: SparkSession, sf_dir: str,
     )
 
 
-def pipeline_curation(spark: SparkSession, sf_dir: str,
-                      min_quality: float = 0.6,
-                      jaccard_threshold: float = 0.8) -> DataFrame:
+def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source counts + token totals of the curated corpus.
 
-    1. quality gate: composite score >= min_quality (2 of 3 signals);
+    1. quality gate: composite score >= 0.6 (2 of 3 signals);
     2. exact dedup: keep the min doc_id of each sha256(text) group;
     3. near-dup removal: among survivors, drop the greater id of every
-       pair with shingle-Jaccard >= jaccard_threshold (exact Jaccard —
+       pair with shingle-Jaccard >= 0.8 (exact Jaccard —
        at 100 TB you swap in the MinHash-LSH candidates, same keep-rule);
     4. accounting: docs + whitespace tokens per source.
     """
@@ -155,7 +152,7 @@ def pipeline_curation(spark: SparkSession, sf_dir: str,
 
     q_ok = (
         text_quality(spark, sf_dir)
-        .where(F.col("quality") >= min_quality)
+        .where(F.col("quality") >= 0.6)
         .select("doc_id")
     )
     d0 = docs.join(q_ok, "doc_id", "left_semi")
@@ -169,7 +166,7 @@ def pipeline_curation(spark: SparkSession, sf_dir: str,
 
     # exact Jaccard pairs are computed corpus-wide (oracle-matched path),
     # then restricted to survivors; drop the greater id of each pair
-    pairs = dedup_ngram_jaccard(spark, sf_dir, threshold=jaccard_threshold)
+    pairs = dedup_ngram_jaccard(spark, sf_dir, threshold=0.8)
     ids1 = d1.select("doc_id")
     live_pairs = (
         pairs.join(ids1.withColumnRenamed("doc_id", "id1"), "id1", "left_semi")
@@ -190,8 +187,6 @@ def pipeline_curation(spark: SparkSession, sf_dir: str,
 
 
 def pipeline_pretrain_scale(spark: SparkSession, sf_dir: str,
-                            n: int = 4, bench_mod: int = 20,
-                            chunk_tokens: int = 8,
                             m_bits: int = 1 << 16) -> DataFrame:
     """The round-5 scale-path assembly: corpus-LM quality gate →
     sub-document span dedup (with text reconstruction) → Bloom-bitmap
@@ -211,7 +206,7 @@ def pipeline_pretrain_scale(spark: SparkSession, sf_dir: str,
     unigram LM = one vocab aggregate (broadcast) + one doc-keyed agg;
     span dedup = chunk-hash window + doc-keyed rebuild; decontamination
     = Bloom bitmap (broadcast map) + a probe projection; ledger = one
-    per-source rollup. Benchmark docs (doc_id % bench_mod == 0) feed
+    per-source rollup. Benchmark docs (doc_id % 20 == 0) feed
     the bitmap from their ORIGINAL text and are excluded from training.
     """
     from pyspark.sql import Window
@@ -223,11 +218,13 @@ def pipeline_pretrain_scale(spark: SparkSession, sf_dir: str,
     from hadoop_mapreduce_spark.functions.text import ngrams_from_tokens
     from hadoop_mapreduce_spark.operators.ngram import explode_ngram_set
 
+    n = 4
+    chunk_tokens = 8
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", "source",
         tokenize(normalize_text(F.col("text"))).alias("t"))
-    is_bench = F.col("doc_id") % bench_mod == 0
+    is_bench = F.col("doc_id") % 20 == 0
 
     # ---- stage A: corpus-unigram LM quality gate over TRAIN docs ----
     tok = toks.where(~is_bench).select(
@@ -317,9 +314,7 @@ def pipeline_pretrain_scale(spark: SparkSession, sf_dir: str,
     )
 
 
-def pipeline_target_select(spark: SparkSession, sf_dir: str,
-                           threshold: float = 0.8, bench_mod: int = 20,
-                           n_buckets: int = 10_000) -> DataFrame:
+def pipeline_target_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Target-conditioned selection pipeline as ONE declarative plan —
     the fine-tuning/domain-adaptation complement of pipeline_pretrain:
 
@@ -361,6 +356,8 @@ def pipeline_target_select(spark: SparkSession, sf_dir: str,
     )
     from hadoop_mapreduce_spark.session import scoped_persist
 
+    threshold = 0.8
+    bench_mod = 20
     docs = load_table(spark, sf_dir, "documents")
     base = scoped_persist(
         docs.select(
@@ -416,7 +413,7 @@ def pipeline_target_select(spark: SparkSession, sf_dir: str,
     # --- stage 3: DSIR selection over remaining survivors
     lw = dsir_log_weights_from_tokens(
         base.select("doc_id", "source", "t"),
-        bench_mod=bench_mod, n_buckets=n_buckets,
+        bench_mod=bench_mod,
     ).select("doc_id", "lw")
 
     flags = (

@@ -1171,8 +1171,7 @@ def json_from_json_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sample_seeded(spark: SparkSession, sf_dir: str, fraction: float = 0.1,
-                  seed: int = 42) -> DataFrame:
+def sample_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded Bernoulli sample of orders — deterministic for a fixed
     (seed, partitioning): each task XORs the seed with its partition
     index, so the same data + same split layout reproduces the same
@@ -1181,12 +1180,12 @@ def sample_seeded(spark: SparkSession, sf_dir: str, fraction: float = 0.1,
     """
     orders = load_table(spark, sf_dir, "orders")
     return (
-        orders.sample(fraction=fraction, seed=seed)
+        orders.sample(fraction=0.1, seed=42)
         .select("o_orderkey", "o_custkey", "o_totalprice")
     )
 
 
-def sample_stratified(spark: SparkSession, sf_dir: str, seed: int = 42) -> DataFrame:
+def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified sample via sampleBy: per-stratum fractions (downsample
     the dominant order status, keep the rare ones) — the class-rebalancing
     pattern of a training-data pipeline. Rows-only for the same reason as
@@ -1194,7 +1193,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str, seed: int = 42) -> DataF
     orders = load_table(spark, sf_dir, "orders")
     fractions = {"F": 0.05, "O": 0.05, "P": 1.0}
     return (
-        orders.sampleBy("o_orderstatus", fractions, seed=seed)
+        orders.sampleBy("o_orderstatus", fractions, seed=42)
         .groupBy("o_orderstatus")
         .agg(F.count(F.lit(1)).alias("n_sampled"))
     )
@@ -1280,8 +1279,7 @@ def try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def histogram_equidepth(spark: SparkSession, sf_dir: str,
-                        buckets: int = 10) -> DataFrame:
+def histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-depth histogram of order totals: decile edges from exact
     percentiles, then one scan assigns each row to its bucket — the
     optimizer-statistics / feature-binning primitive (equi-WIDTH bins
@@ -1298,6 +1296,7 @@ def histogram_equidepth(spark: SparkSession, sf_dir: str,
     bit-identical boundaries (the events_anomaly_mad convention); the
     t-digest approx_percentile is the 100 TB swap, same plan shape.
     """
+    buckets = 10
     orders = load_table(spark, sf_dir, "orders").select("o_totalprice")
     qs = ", ".join(str(round((i + 1) / buckets, 4))
                    for i in range(buckets - 1))
@@ -1318,8 +1317,7 @@ def histogram_equidepth(spark: SparkSession, sf_dir: str,
     )
 
 
-def quantile_histogram_portable(spark: SparkSession, sf_dir: str,
-                                bins: int = 256) -> DataFrame:
+def quantile_histogram_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine-portable histogram quantiles: p25/median/p75 of order
     totals per status from a 256-bin equi-width histogram — the
     hash-paired twin of ``approx_percentile_stats`` (whose t-digest
@@ -1341,6 +1339,7 @@ def quantile_histogram_portable(spark: SparkSession, sf_dir: str,
     combinable), a bins-bounded cumulative window, and a 3-quantile
     projection per group.
     """
+    bins = 256
     orders = load_table(spark, sf_dir, "orders")
     stats = orders.groupBy("o_orderstatus").agg(
         F.min("o_totalprice").alias("mn"),
@@ -1724,8 +1723,7 @@ def skyline_quality_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def basket_part_pairs(spark: SparkSession, sf_dir: str,
-                      min_support: int = 2, k: int = 100) -> DataFrame:
+def basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket co-purchase mining over lineitem: part pairs that
     appear together in the same order, with support and lift — the
     frequent-itemset statistic `event_pair_itemsets` computes for event
@@ -1782,7 +1780,7 @@ def basket_part_pairs(spark: SparkSession, sf_dir: str,
     pairs = (
         pair_arrays.groupBy("p1", "p2")
         .agg(F.count(F.lit(1)).alias("support"))
-        .where(F.col("support") >= min_support)
+        .where(F.col("support") >= 2)
     )
     return (
         pairs
@@ -1803,12 +1801,11 @@ def basket_part_pairs(spark: SparkSession, sf_dir: str,
                       AS BIGINT)""").alias("lift_e6"),
         )
         .orderBy(F.col("support").desc(), "p1", "p2")
-        .limit(k)
+        .limit(100)
     )
 
 
-def customer_entity_blocking(spark: SparkSession, sf_dir: str,
-                             max_lev: int = 2) -> DataFrame:
+def customer_entity_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity-resolution candidate generation: customers blocked by
     (nation, market segment), pairwise name edit distance scored inside
     each block, match candidates emitted at levenshtein <= max_lev —
@@ -1829,6 +1826,7 @@ def customer_entity_blocking(spark: SparkSession, sf_dir: str,
     The block join shuffles each side once on the blocking key; no
     global product ever forms.
     """
+    max_lev = 2
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_mktsegment",
         F.expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)")
@@ -1882,8 +1880,7 @@ def customer_entity_blocking(spark: SparkSession, sf_dir: str,
     return pairs
 
 
-def fellegi_sunter_weights(spark: SparkSession, sf_dir: str,
-                           max_lev: int = 2) -> DataFrame:
+def fellegi_sunter_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fellegi-Sunter record-linkage weight estimation over the blocked
     customer pair space: per comparison field, the agreement
     probabilities m = P(agree | match) and u = P(agree | non-match) and
@@ -1895,7 +1892,7 @@ def fellegi_sunter_weights(spark: SparkSession, sf_dir: str,
 
     Label source (documented, deterministic): the standard seeded
     estimation — pairs matched by the high-precision rule (name edit
-    distance <= max_lev) form the M sample, all other in-block pairs
+    distance <= 2) form the M sample, all other in-block pairs
     the U sample (no EM; the seed rule is the same one the blocking op
     ships). Comparison fields are deliberately NOT the blocking or seed
     fields: balance within $100, same last-2 name characters, same
@@ -1925,7 +1922,7 @@ def fellegi_sunter_weights(spark: SparkSession, sf_dir: str,
         & (F.col("a.c_mktsegment") == F.col("b.c_mktsegment"))
         & (F.col("a.c_custkey") < F.col("b.c_custkey"))
     ).select(
-        (F.levenshtein(F.col("a.c_name"), F.col("b.c_name"), max_lev)
+        (F.levenshtein(F.col("a.c_name"), F.col("b.c_name"), 2)
          >= 0).alias("is_m"),
         (F.abs(F.col("a.bal_cents") - F.col("b.bal_cents"))
          <= F.lit(10000)).alias("f_bal_close"),
@@ -1977,8 +1974,7 @@ def fellegi_sunter_weights(spark: SparkSession, sf_dir: str,
     )
 
 
-def part_supplier_hhi(spark: SparkSession, sf_dir: str,
-                      min_lines: int = 5, k: int = 100) -> DataFrame:
+def part_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Supply-concentration risk per part: the Herfindahl-Hirschman
     index of supplier shares of each part's line volume — HHI 1e6 =
     single-sourced (the supply-chain single-point-of-failure query),
@@ -2003,7 +1999,7 @@ def part_supplier_hhi(spark: SparkSession, sf_dir: str,
             F.sum("cnt").cast("long").alias("n_lines"),
             F.sum(F.col("cnt") * F.col("cnt")).cast("long").alias("s2"),
         )
-        .where(F.col("n_lines") >= min_lines)
+        .where(F.col("n_lines") >= 5)
         .select(
             F.col("l_partkey").alias("partkey"),
             "n_suppliers", "n_lines",
@@ -2012,12 +2008,10 @@ def part_supplier_hhi(spark: SparkSession, sf_dir: str,
         )
     )
     return per_part.orderBy(
-        F.desc("hhi_e6"), F.desc("n_lines"), "partkey").limit(k)
+        F.desc("hhi_e6"), F.desc("n_lines"), "partkey").limit(100)
 
 
-def part_return_rate_wilson(spark: SparkSession, sf_dir: str,
-                            min_lines: int = 10, k: int = 100,
-                            z_e3: int = 1960) -> DataFrame:
+def part_return_rate_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Worst-returning parts WITH statistical confidence: per part, the
     'R' return-flag share plus the Wilson 95% LOWER bound — ranking by
     the bound instead of the raw rate is the standard fix for "2
@@ -2041,9 +2035,9 @@ def part_return_rate_wilson(spark: SparkSession, sf_dir: str,
             F.sum((F.col("l_returnflag") == "R").cast("long"))
             .cast("long").alias("r"),
         )
-        .where(F.col("n") >= min_lines)
+        .where(F.col("n") >= 10)
     )
-    z = F.lit(z_e3).cast("double") / F.lit(1000.0)
+    z = F.lit(1960).cast("double") / F.lit(1000.0)
     n, r = F.col("n").cast("double"), F.col("r").cast("double")
     z2 = z * z
     lower = ((r + z2 / 2
@@ -2057,7 +2051,7 @@ def part_return_rate_wilson(spark: SparkSession, sf_dir: str,
             .alias("wilson_lower"),
         )
         .orderBy(F.desc("wilson_lower"), F.desc("n"), "partkey")
-        .limit(k)
+        .limit(100)
     )
 
 
@@ -2157,13 +2151,12 @@ def algebraic_merge_audit(spark, sf_dir: str):
     )
 
 
-def er_survivorship_golden(spark: SparkSession, sf_dir: str,
-                           max_lev: int = 2) -> DataFrame:
+def er_survivorship_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Golden-record survivorship — the step AFTER entity-resolution
     linkage (`customer_entity_blocking` generates the candidate pairs,
     `fellegi_sunter_weights` scores them; this operator MERGES): matched
     customers are clustered into the exact connected components of the
-    lev<=``max_lev`` pair graph (star-CC, `connected_components_star`),
+    lev<=2 pair graph (star-CC, `connected_components_star`),
     and each multi-member cluster emits one golden record under explicit
     survivorship rules — golden id = MIN custkey (stable), surviving
     name = the highest-balance member's (ties to min custkey; the
@@ -2203,7 +2196,7 @@ def er_survivorship_golden(spark: SparkSession, sf_dir: str,
                & (F.col("a.c_mktsegment") == F.col("b.c_mktsegment"))
                & (F.col("a.c_custkey") < F.col("b.c_custkey"))
                & (F.levenshtein(F.col("a.c_name"), F.col("b.c_name"),
-                                max_lev) >= 0))
+                                2) >= 0))
         .select(F.col("a.c_custkey").alias("id1"),
                 F.col("b.c_custkey").alias("id2"))
     )
@@ -2244,12 +2237,11 @@ def er_survivorship_golden(spark: SparkSession, sf_dir: str,
 
 
 def bloom_join_prefilter_audit(spark: SparkSession, sf_dir: str,
-                               segment: str = "BUILDING",
                                m_bits: int = 1 << 14) -> DataFrame:
     """Bloom-prefiltered semi-join audit — the row-level runtime-filter
     decision (Spark's own injected bloom filters, Exadata/Snowflake
     join pruning) measured exactly: build an m_bits Bloom bitmap over
-    the ``segment`` customers' keys, probe EVERY order against it, and
+    the BUILDING-segment customers' keys, probe EVERY order against it, and
     report per order-priority how many probe rows the bitmap passes vs
     the exact semi-join truth — the false-positive rate and scan-
     reduction table that decides whether shipping a filter to the
@@ -2277,7 +2269,7 @@ def bloom_join_prefilter_audit(spark: SparkSession, sf_dir: str,
     )
 
     cust = load_table(spark, sf_dir, "customer").where(
-        F.col("c_mktsegment") == segment).select("c_custkey")
+        F.col("c_mktsegment") == "BUILDING").select("c_custkey")
     bitmap = bloom_bitmap(cust, F.col("c_custkey").cast("string"), m_bits)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority")

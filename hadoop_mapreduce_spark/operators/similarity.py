@@ -24,16 +24,15 @@ from hadoop_mapreduce_spark.functions.vectors import cosine_similarity, dot, l2_
 from hadoop_mapreduce_spark.sources.tables import load_table
 
 
-def cosine_topk(
-    vectors: DataFrame, queries: DataFrame, k: int = 10,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact top-k cosine neighbours of each query vector.
 
     queries is assumed small (it's broadcast); vectors can be any size —
     the scoring pass is a broadcast nested-loop join that never shuffles
     the big side, and the per-query top-k is a window over qid.
     """
+    id_col = "vec_id"
+    vec_col = "embedding"
     q = queries.select(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
     )
@@ -67,18 +66,18 @@ def cosine_topk(
     )
 
 
-def sim_search_topk(spark: SparkSession, sf_dir: str, n_queries: int = 5, k: int = 10) -> DataFrame:
-    """Driver query: top-10 cosine neighbours for vec_id < n_queries."""
+def sim_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Driver query: top-10 cosine neighbours for vec_id < 5."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return cosine_topk(emb, emb.where(F.col("vec_id") < n_queries), k=k)
+    return cosine_topk(emb, emb.where(F.col("vec_id") < 5), k=10)
 
 
 # --------------------------------------------------------------------------
 # IVF approximate nearest neighbour
 # --------------------------------------------------------------------------
 
-def kmeans_centroids(vectors: DataFrame, n_lists: int = 16, n_iter: int = 3,
-                     id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def kmeans_centroids(vectors: DataFrame, n_lists: int = 16,
+                     n_iter: int = 3) -> DataFrame:
     """Deterministic distributed k-means (Lloyd) for the IVF coarse index.
 
     Init = the vector whose id ranks first in each of n_lists id-hash
@@ -102,6 +101,8 @@ def kmeans_centroids(vectors: DataFrame, n_lists: int = 16, n_iter: int = 3,
     lineage, the same bounded-iteration pattern as
     dedup.connected_components_star.
     """
+    id_col = "vec_id"
+    vec_col = "embedding"
     w = Window.partitionBy("bucket").orderBy(id_col)
     centroids = (
         vectors.withColumn("bucket", F.pmod(F.crc32(F.col(id_col).cast("string")), F.lit(n_lists)))
@@ -140,16 +141,16 @@ def kmeans_centroids(vectors: DataFrame, n_lists: int = 16, n_iter: int = 3,
     return centroids
 
 
-def ivf_assign(vectors: DataFrame, n_lists: int = 16, n_iter: int = 3,
-               id_col: str = "vec_id", vec_col: str = "embedding") -> tuple[DataFrame, DataFrame]:
+def ivf_assign(vectors: DataFrame, n_lists: int = 16) -> tuple[DataFrame, DataFrame]:
     """Deterministic IVF index: coarse centroids from distributed
     k-means (kmeans_centroids — Lloyd iterations, seedless hash init).
 
     Returns (centroids, assignments): every vector is assigned to its
     max-cosine centroid via one broadcast pass over the data.
     """
-    centroids = kmeans_centroids(vectors, n_lists=n_lists, n_iter=n_iter,
-                                 id_col=id_col, vec_col=vec_col)
+    id_col = "vec_id"
+    vec_col = "embedding"
+    centroids = kmeans_centroids(vectors, n_lists=n_lists, n_iter=3)
     # argmax per vector as a max_by AGGREGATE, not a row_number window:
     # max_by is algebraic, so map-side partials reduce the N x n_lists
     # scored rows to one row per vector before the shuffle, and no sort
@@ -172,17 +173,16 @@ def ivf_assign(vectors: DataFrame, n_lists: int = 16, n_iter: int = 3,
     return centroids, assigned
 
 
-def ann_ivf_topk(spark: SparkSession, sf_dir: str, n_queries: int = 5,
-                 k: int = 10, n_lists: int = 16, n_probe: int = 4) -> DataFrame:
-    """Approximate top-k: score only vectors in the n_probe closest lists.
+def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Approximate top-k: score only vectors in the 4 closest lists.
 
     At 100 TB the assignment table is written bucketed by list_id so a
-    probe reads only n_probe/n_lists of the data — that partition pruning
+    probe reads only 4/16 of the data — that partition pruning
     is the whole point of IVF. Registered rows-only (approximate recall).
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    centroids, assigned = ivf_assign(emb, n_lists=n_lists)
-    queries = emb.where(F.col("vec_id") < n_queries).select(
+    centroids, assigned = ivf_assign(emb, n_lists=16)
+    queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     # which lists does each query probe?
@@ -190,7 +190,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str, n_queries: int = 5,
         queries.crossJoin(F.broadcast(centroids))
         .select("qid", "qvec", "list_id", cosine_similarity(F.col("qvec"), F.col("cvec")).alias("csim"))
         .withColumn("pr", F.row_number().over(Window.partitionBy("qid").orderBy(F.desc("csim"), F.asc("list_id"))))
-        .where(F.col("pr") <= n_probe)
+        .where(F.col("pr") <= 4)
         .select("qid", "qvec", "list_id")
     )
     scored = (
@@ -204,16 +204,14 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str, n_queries: int = 5,
     # not coalesce — see there).
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 10)
         .select("qid", "nid", F.round("score", 6).alias("score"), F.col("rank").cast("long").alias("rank"))
         .repartition(1)
         .sortWithinPartitions("qid", "rank")
     )
 
 
-def knn_join_lsh(spark: SparkSession, sf_dir: str, k: int = 5,
-                 n_bits: int = 64, bands: int = 16,
-                 max_bucket: int = 2048) -> DataFrame:
+def knn_join_lsh(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     """Approximate k-NN JOIN: every vector finds its top-k cosine
     neighbours — the all-pairs primitive behind semantic dedup
     clustering and hard-negative mining, distinct from sim_search_topk
@@ -223,9 +221,9 @@ def knn_join_lsh(spark: SparkSession, sf_dir: str, k: int = 5,
     Same SRP-LSH machinery as dedup_embedding_lsh (shared signatures /
     banding / hot-bucket suppression), but each band bucket emits every
     member's within-bucket top-k instead of thresholded pairs; a final
-    per-vector window over the ≤ bands·k surviving candidates picks the
-    global top-k. Shuffle volume is O(bands·N) vector rows in and
-    O(bands·k·N) candidate rows out of the bucket stage — never the
+    per-vector window over the ≤ 16·k surviving candidates picks the
+    global top-k. Shuffle volume is O(16·N) vector rows in and
+    O(16·k·N) candidate rows out of the bucket stage — never the
     O(N²) scored matrix.
 
     Vectors whose every band lands in a suppressed or singleton bucket
@@ -242,10 +240,10 @@ def knn_join_lsh(spark: SparkSession, sf_dir: str, k: int = 5,
     # vector→bucket partitioning as the former per-bit-column + concat_ws
     # string keys, minus the 65-field schema and ~100-node projection in
     # every plan build (see srp_bucket_rows)
-    buckets = srp_bucket_rows(emb, n_bits=n_bits, bands=bands)
+    buckets = srp_bucket_rows(emb)
     bucket_sizes = buckets.groupBy("bucket").agg(F.count(F.lit(1)).alias("bsz"))
     pruned = buckets.join(
-        F.broadcast(bucket_sizes.where(F.col("bsz") > max_bucket).select("bucket")),
+        F.broadcast(bucket_sizes.where(F.col("bsz") > 2048).select("bucket")),
         "bucket", "left_anti",
     )
     unit = emb.select(
@@ -271,7 +269,7 @@ def knn_join_lsh(spark: SparkSession, sf_dir: str, k: int = 5,
         # are cut deterministically (a bare argpartition picks an
         # arbitrary subset of tied scores, which varies with pandas
         # group row order across shuffle fetches). lexsort's last key
-        # is primary; buckets are ≤ max_bucket rows so the O(n log n)
+        # is primary; buckets are ≤ 2048 rows so the O(n log n)
         # per-row sort is bounded.
         top = np.lexsort(
             (np.broadcast_to(ids, sims.shape), -sims), axis=1)[:, :kk]
@@ -297,8 +295,7 @@ def knn_join_lsh(spark: SparkSession, sf_dir: str, k: int = 5,
     )
 
 
-def _portable_kmeans_assign(emb: DataFrame, n_lists: int = 16,
-                            n_iter: int = 3) -> DataFrame:
+def _portable_kmeans_assign(emb: DataFrame) -> DataFrame:
     """Engine-portable exact Lloyd assignment (the hash-paired k-means
     core shared by embedding_kmeans_stats and semdedup_ivf; the DuckDB
     twin is registry._KM_ROUND's chained CTEs):
@@ -327,7 +324,7 @@ def _portable_kmeans_assign(emb: DataFrame, n_lists: int = 16,
     )
     h = h60(F.col("vec_id").cast("string"))
     centroids = (
-        q.withColumn("b", F.pmod(h, F.lit(n_lists)))
+        q.withColumn("b", F.pmod(h, F.lit(16)))
         .groupBy("b")
         .agg(F.min_by("e", F.col("vec_id")).alias("cvec"))
         .select(F.col("b").alias("list_id"), "cvec")
@@ -352,7 +349,7 @@ def _portable_kmeans_assign(emb: DataFrame, n_lists: int = 16,
                  .getField("c").alias("c"))
         )
 
-    for _ in range(n_iter):
+    for _ in range(3):
         assigned = assign(centroids)
         means = (
             assigned.select("list_id", F.posexplode("e").alias("pos", "x"))
@@ -376,8 +373,7 @@ def _portable_kmeans_assign(emb: DataFrame, n_lists: int = 16,
     return assign(centroids)
 
 
-def embedding_kmeans_stats(spark: SparkSession, sf_dir: str,
-                           n_lists: int = 16, n_iter: int = 3) -> DataFrame:
+def embedding_kmeans_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-structure audit of the corpus embedding space: per-cluster
     membership and cohesion from a deterministic Lloyd k-means — the
     "what domains does this corpus contain" step before mixture
@@ -410,7 +406,7 @@ def embedding_kmeans_stats(spark: SparkSession, sf_dir: str,
     mean aggregate; the vector table never shuffles.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    final = _portable_kmeans_assign(emb, n_lists=n_lists, n_iter=n_iter)
+    final = _portable_kmeans_assign(emb)
     return (
         final.groupBy(F.col("list_id").cast("long").alias("cluster"))
         .agg(
@@ -445,8 +441,7 @@ def embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Product quantization (PQ) with asymmetric distance computation (ADC)
 # --------------------------------------------------------------------------
 
-def pq_codebook(subvecs: DataFrame, n_codes: int = 16,
-                n_iter: int = 2) -> DataFrame:
+def pq_codebook(subvecs: DataFrame, n_codes: int = 16) -> DataFrame:
     """Per-subspace k-means codebook for product quantization
     (Jégou et al., "Product Quantization for Nearest Neighbor Search").
 
@@ -474,7 +469,7 @@ def pq_codebook(subvecs: DataFrame, n_codes: int = 16,
     # PQ quantizes raw L2 geometry (not cosine): min_by squared distance,
     # ties to the lowest code id
     best = F.min_by("code", F.struct(F.col("d2"), F.col("code")))
-    for _ in range(n_iter):
+    for _ in range(2):
         assigned = (
             subvecs.join(F.broadcast(codebook), "sub")
             .select("vec_id", "sub", "svec", "code",
@@ -501,13 +496,12 @@ def pq_codebook(subvecs: DataFrame, n_codes: int = 16,
     return codebook
 
 
-def _pq_subvectors(vectors: DataFrame, m: int, id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> DataFrame:
+def _pq_subvectors(vectors: DataFrame, m: int, vec_col: str = "embedding") -> DataFrame:
     """Split each vector into m contiguous subvectors: one posexploded
     projection, no shuffle. Dimension d must divide by m (64/8 here)."""
     sub_dim = F.size(vec_col) / m
     return vectors.select(
-        F.col(id_col).alias("vec_id"),
+        F.col("vec_id").alias("vec_id"),
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(m - 1)),
@@ -519,8 +513,8 @@ def _pq_subvectors(vectors: DataFrame, m: int, id_col: str = "vec_id",
     )
 
 
-def ann_pq_adc(spark: SparkSession, sf_dir: str, n_queries: int = 5,
-               k: int = 10, m: int = 8, n_codes: int = 16) -> DataFrame:
+def ann_pq_adc(spark: SparkSession, sf_dir: str, k: int = 10, m: int = 8,
+               n_codes: int = 16) -> DataFrame:
     """Approximate top-k nearest neighbours via product quantization
     with asymmetric distance computation.
 
@@ -557,7 +551,7 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str, n_queries: int = 5,
     )
     # per-query LUT: partial squared distance from the query's subvector
     # to every codebook cell — m * n_codes rows per query, broadcast
-    queries = _pq_subvectors(emb.where(F.col("vec_id") < n_queries), m) \
+    queries = _pq_subvectors(emb.where(F.col("vec_id") < 5), m) \
         .withColumnRenamed("vec_id", "qid").withColumnRenamed("svec", "qsvec")
     lut = (
         queries.join(F.broadcast(codebook), "sub")
@@ -579,28 +573,27 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str, n_queries: int = 5,
     )
 
 
-def ann_pq_rerank(spark: SparkSession, sf_dir: str, n_queries: int = 5,
-                  k: int = 10, m: int = 16, n_codes: int = 32,
-                  shortlist: int = 300) -> DataFrame:
+def ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ-ADC shortlist + exact re-rank — the production composition
     (FAISS's IVFADC+R): the quantized scan whittles N candidates down
-    to `shortlist` per query using only 8-byte codes, then the exact
+    to 300 per query using only 8-byte codes, then the exact
     distance runs on that tiny set alone.
 
-    Recall follows ADC's recall@shortlist (much higher than its
+    Recall follows ADC's recall@300 (much higher than its
     recall@k — a coarse quantizer rarely drops a true neighbour out of
     the top 50), while the exact pass restores true distance order
     among survivors. The re-rank join touches original vectors for
-    shortlist·n_queries rows total — independent of N, so at 100 TB
+    300·n_queries rows total — independent of N, so at 100 TB
     the full-precision data is read (point look-ups by id, a bucketed
     or indexed fetch) only for ~0.1% of candidates.
 
     Registered rows-only (the shortlist is still approximate); recall
     vs the exact oracle is asserted in tests and reported by bench.py.
     """
+    n_queries = 5
     emb = load_table(spark, sf_dir, "embeddings")
-    short = ann_pq_adc(spark, sf_dir, n_queries=n_queries, k=shortlist,
-                       m=m, n_codes=n_codes).select("qid", "nid")
+    short = ann_pq_adc(spark, sf_dir, k=300, m=16, n_codes=32).select(
+        "qid", "nid")
     queries = emb.where(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
     exact = (
@@ -613,19 +606,16 @@ def ann_pq_rerank(spark: SparkSession, sf_dir: str, n_queries: int = 5,
     w = Window.partitionBy("qid").orderBy(F.asc("d2"), F.asc("nid"))
     return (
         exact.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 10)
         .select("qid", "nid", F.round("d2", 6).alias("dist"),
                 F.col("rank").cast("long").alias("rank"))
     )
 
 
-def ann_ivfpq_rerank(spark: SparkSession, sf_dir: str, n_queries: int = 5,
-                     k: int = 10, n_lists: int = 8, n_probe: int = 3,
-                     m: int = 16, n_codes: int = 32,
-                     shortlist: int = 200) -> DataFrame:
+def ann_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FAISS-style IVFADC + exact re-rank — the full production ANN
     composition (Jégou et al. §IV): the IVF coarse quantizer prunes
-    WHICH vectors are scored (n_probe of n_lists inverted lists), PQ
+    WHICH vectors are scored (3 of 8 inverted lists), PQ
     codes on the RESIDUAL v - centroid(list(v)) shrink WHAT a score
     costs (m uint8 codes + an LUT sum, never the raw vector), and the
     exact pass re-ranks only the ADC shortlist.
@@ -635,20 +625,21 @@ def ann_ivfpq_rerank(spark: SparkSession, sf_dir: str, n_queries: int = 5,
     local spread instead of the global point cloud — the standard
     IVFADC accuracy win over PQ-on-raw-vectors. One shared residual
     codebook across lists (FAISS's default) keeps the LUT per
-    (query, probed list) at m x n_codes cells, built from the query's
+    (query, probed list) at m x 32 cells, built from the query's
     OWN residual against that list's centroid.
 
     Scale shape: at 100 TB the assignment table is written bucketed by
-    list_id (partition pruning reads n_probe/n_lists of the codes), the
+    list_id (partition pruning reads 3/8 of the codes), the
     codebook + centroids broadcast (KBs), ADC moves (qid, nid, dist)
-    rows only, and the re-rank fetches shortlist x Q raw vectors by id.
+    rows only, and the re-rank fetches 200 x Q raw vectors by id.
     Registered rows-only (approximate); recall@10 vs brute force is
     asserted >= 0.9 in tests and reported by bench.py. Extension
     coverage (SURVEY.md §2.EXT embedding-space structure — the
     reference has no ANN surface).
     """
+    m = 16
     emb = load_table(spark, sf_dir, "embeddings")
-    centroids, assigned = ivf_assign(emb, n_lists=n_lists)
+    centroids, assigned = ivf_assign(emb, n_lists=8)
     # residual per vector against its own list centroid (JVM zip_with)
     resid = (
         assigned.join(F.broadcast(centroids), "list_id")
@@ -657,7 +648,7 @@ def ann_ivfpq_rerank(spark: SparkSession, sf_dir: str, n_queries: int = 5,
                 .alias("rvec"))
     )
     subvecs = _pq_subvectors(resid, m, vec_col="rvec")
-    codebook = pq_codebook(subvecs, n_codes=n_codes)
+    codebook = pq_codebook(subvecs, n_codes=32)
     best = F.min_by("code", F.struct(F.col("d2"), F.col("code")))
     codes = (
         subvecs.join(F.broadcast(codebook), "sub")
@@ -667,7 +658,7 @@ def ann_ivfpq_rerank(spark: SparkSession, sf_dir: str, n_queries: int = 5,
         .agg(best.alias("code"))
         .join(resid.select("vec_id", "list_id"), "vec_id")
     )
-    queries = emb.where(F.col("vec_id") < n_queries).select(
+    queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
     # probed lists per query (coarse argmax over the broadcast centroids)
     wq = Window.partitionBy("qid").orderBy(F.asc("qd2"), F.asc("list_id"))
@@ -677,11 +668,11 @@ def ann_ivfpq_rerank(spark: SparkSession, sf_dir: str, n_queries: int = 5,
                 l2_sq_dist(F.col("qvec"), F.col("cvec")).alias("qd2"),
                 F.zip_with("qvec", "cvec", lambda a, b: a - b).alias("qres"))
         .withColumn("pr", F.row_number().over(wq))
-        .where(F.col("pr") <= n_probe)
+        .where(F.col("pr") <= 3)
         .select("qid", "list_id", "qres")
     )
     # per (query, probed list) LUT from the query's residual vs the
-    # shared residual codebook — m x n_codes x n_probe rows per query
+    # shared residual codebook — m x 32 x 3 rows per query
     qsub = probes.select(
         "qid", "list_id",
         F.posexplode(
@@ -711,7 +702,7 @@ def ann_ivfpq_rerank(spark: SparkSession, sf_dir: str, n_queries: int = 5,
     ws = Window.partitionBy("qid").orderBy(F.asc("adist"), F.asc("nid"))
     short = (
         scored.withColumn("r", F.row_number().over(ws))
-        .where(F.col("r") <= shortlist)
+        .where(F.col("r") <= 200)
         .select("qid", "nid")
     )
     exact = (
@@ -723,22 +714,21 @@ def ann_ivfpq_rerank(spark: SparkSession, sf_dir: str, n_queries: int = 5,
     wr = Window.partitionBy("qid").orderBy(F.asc("d2"), F.asc("nid"))
     return (
         exact.withColumn("rank", F.row_number().over(wr))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 10)
         .select("qid", "nid", F.round("d2", 6).alias("dist"),
                 F.col("rank").cast("long").alias("rank"))
     )
 
 
-def hard_negative_mining(spark: SparkSession, sf_dir: str,
-                         n_queries: int = 25, k_neg: int = 3) -> DataFrame:
+def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining for contrastive / embedding training: for
-    each query vector, the k_neg most-similar vectors carrying a
+    each query vector, the 3 most-similar vectors carrying a
     DIFFERENT label — the near-misses a contrastive loss learns most
     from (the random-negative baseline is trivial; the value is in the
     "hard" = high-cosine wrong-label set).
 
     Exact scoring, same plan skeleton as sim_search_topk: the query set
-    (vec_id < n_queries) is broadcast, the corpus side never shuffles,
+    (vec_id < 25) is broadcast, the corpus side never shuffles,
     the label-mismatch predicate drops same-label pairs BEFORE the
     window, and the per-query top-k window ranks the scored stream.
     At corpus-as-queries scale the LSH kNN join (knn_join_lsh) is the
@@ -750,7 +740,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str,
     query here shares); only the reported score is rounded.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < n_queries).select(
+    q = emb.where(F.col("vec_id") < 25).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qvec"),
         F.col("label").alias("qlabel"))
@@ -768,15 +758,14 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str,
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("nid"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k_neg)
+        .where(F.col("rank") <= 3)
         .select("qid", "nid", "neg_label",
                 F.round("score", 6).alias("score"),
                 F.col("rank").cast("long").alias("rank"))
     )
 
 
-def semdedup_ivf(spark: SparkSession, sf_dir: str, tau: float = 0.5,
-                 n_lists: int = 16, n_iter: int = 3) -> DataFrame:
+def semdedup_ivf(spark: SparkSession, sf_dir: str, tau: float = 0.5) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication by clustering the embedding space and greedily
     dropping, within each cluster, every vector whose cosine to an
@@ -810,8 +799,7 @@ def semdedup_ivf(spark: SparkSession, sf_dir: str, tau: float = 0.5,
     """
     emb = load_table(spark, sf_dir, "embeddings")
     tau_e6 = int(round(tau * 1e6))
-    members = _portable_kmeans_assign(emb, n_lists=n_lists,
-                                      n_iter=n_iter).select(
+    members = _portable_kmeans_assign(emb).select(
         "list_id", F.col("vec_id").alias("id"), "e")
 
     def greedy(pdf):
@@ -859,8 +847,8 @@ def semdedup_ivf(spark: SparkSession, sf_dir: str, tau: float = 0.5,
 
 
 def mmr_diversified_topk(spark: SparkSession, sf_dir: str,
-                         n_queries: int = 5, k: int = 10,
-                         pool: int = 20, lam: float = 0.7) -> DataFrame:
+                         k: int = 10, pool: int = 20,
+                         lam: float = 0.7) -> DataFrame:
     """Maximal Marginal Relevance (Carbonell & Goldstein 1998)
     diversified re-ranking: from each query's exact top-``pool``
     cosine candidates, greedily pick ``k`` maximising
@@ -888,7 +876,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str,
     from hadoop_mapreduce_spark.functions.vectors import l2_norm
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cands = cosine_topk(emb, emb.where(F.col("vec_id") < n_queries),
+    cands = cosine_topk(emb, emb.where(F.col("vec_id") < 5),
                         k=pool).select("qid", "nid", "score")
     unit = emb.select(
         F.col("vec_id").alias("nid"),
@@ -993,8 +981,7 @@ def ann_dim_truncation_audit(spark: SparkSession, sf_dir: str,
     )
 
 
-def embedding_pca_power(spark: SparkSession, sf_dir: str,
-                        n_iter: int = 12) -> DataFrame:
+def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top principal component of the embedding cloud by distributed
     power iteration — the anisotropy audit (embedding sets whose top
     PC explains a large variance fraction are 'collapsed' and rank
@@ -1051,7 +1038,7 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str,
             F.zip_with("x", F.col("mu"), lambda a, b: a - b),
             F.col("v"), lambda c, w: c * w),
         F.lit(0.0), lambda acc, y: acc + y)
-    for _ in range(n_iter):
+    for _ in range(12):
         scored = (
             vec.crossJoin(F.broadcast(mu)).crossJoin(F.broadcast(v))
             .select("x", F.col("mu").alias("m"), cdot.alias("dot"))
@@ -1206,8 +1193,7 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def embedding_outlier_scores(spark: SparkSession, sf_dir: str,
-                             k: int = 20) -> DataFrame:
+def embedding_outlier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Diagonal-covariance Mahalanobis outlier ranking: each vector's
     score is Σ_d (x_d − μ_d)² / σ²_d — the standard cheap anomaly read
     over an embedding column (mislabeled modality, truncated encodes,
@@ -1265,7 +1251,7 @@ def embedding_outlier_scores(spark: SparkSession, sf_dir: str,
     )
     # TakeOrdered top-k first (never a global window over all vectors);
     # the rank window then runs over k rows.
-    top = scored.orderBy(F.desc("score_e6"), F.asc("vec_id")).limit(k)
+    top = scored.orderBy(F.desc("score_e6"), F.asc("vec_id")).limit(20)
     w = Window.orderBy(F.desc("score_e6"), F.asc("vec_id"))
     return (
         top.withColumn("rank", F.row_number().over(w).cast("long"))
@@ -1273,8 +1259,7 @@ def embedding_outlier_scores(spark: SparkSession, sf_dir: str,
     )
 
 
-def embedding_anisotropy_audit(spark: SparkSession, sf_dir: str,
-                               n_bins: int = 40) -> DataFrame:
+def embedding_anisotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anisotropy audit of the embedding space: the distribution of
     pairwise cosine similarity over a deterministic id-adjacent pair
     sample, binned into a fixed histogram, plus the exact-integer mean
@@ -1295,6 +1280,7 @@ def embedding_anisotropy_audit(spark: SparkSession, sf_dir: str,
     Scale: one self-join on contiguous ids (co-partitioned ranges join
     with near-zero skew), one bounded groupBy(bin), one 1-row total.
     """
+    n_bins = 40
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e"))
     a, b = emb.alias("a"), emb.alias("b")
@@ -1336,8 +1322,7 @@ def embedding_anisotropy_audit(spark: SparkSession, sf_dir: str,
     )
 
 
-def sparse_cosine_pairs_topk(spark: SparkSession, sf_dir: str,
-                             max_df: int = 200, k: int = 50) -> DataFrame:
+def sparse_cosine_pairs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k most similar document pairs by TF-IDF cosine — the sparse
     lexical twin of `dedup_embedding_cosine`'s dense similarity: a
     term-at-a-time postings self-join accumulates dot products only
@@ -1351,7 +1336,7 @@ def sparse_cosine_pairs_topk(spark: SparkSession, sf_dir: str,
     double division cosine = dot / sqrt(norm1 * norm2) happens on
     engine-identical integers, floor-rounded at 6 dp.
 
-    Scale: the df cap (drop terms with df > max_df) bounds posting-list
+    Scale: the df cap (drop terms with df > 200) bounds posting-list
     length — the standard stop-term guard that keeps the pair fan-out
     O(sum df_t^2) instead of corpus-quadratic; per-pair accumulation is
     map-side combined; top-k is TakeOrdered, no global sort.
@@ -1371,7 +1356,7 @@ def sparse_cosine_pairs_topk(spark: SparkSession, sf_dir: str,
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = docs.agg(F.count(F.lit(1)).alias("n"))
     weighted = scoped_persist(
-        tf.join(F.broadcast(df.where(F.col("df") <= max_df)), "term")
+        tf.join(F.broadcast(df.where(F.col("df") <= 200)), "term")
         .crossJoin(F.broadcast(n))
         .select(
             "doc_id", "term",
@@ -1413,14 +1398,13 @@ def sparse_cosine_pairs_topk(spark: SparkSession, sf_dir: str,
             .alias("cosine"),
         )
         .orderBy(F.desc("cosine"), "id1", "id2")
-        .limit(k)
+        .limit(50)
     )
 
 
-def retrieval_label_precision(spark: SparkSession, sf_dir: str,
-                              n_queries: int = 20, k: int = 10) -> DataFrame:
+def retrieval_label_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space retrieval evaluation: label-match precision@5 and
-    @10 of the EXACT cosine top-k for each of the first n_queries
+    @10 of the EXACT cosine top-k for each of the first 20
     vectors — "do nearest neighbours share the query's label", the
     standard is-this-space-retrievable read (kNN classification
     accuracy) run BEFORE building any ANN index on it: if exact
@@ -1431,15 +1415,16 @@ def retrieval_label_precision(spark: SparkSession, sf_dir: str,
     tie-break (integer total order — no float argsort hazard), hits and
     precisions are exact integers.
 
-    Scale: the n_queries-row query set broadcasts; the vector table is
+    Scale: the 20-row query set broadcasts; the vector table is
     scanned once, never shuffled; per-query rank is a window over the
-    broadcast-joined score rows keyed by qid (n_queries-bounded
+    broadcast-joined score rows keyed by qid (20-query-bounded
     partitions).
     """
+    k = 10
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e"),
         "label")
-    q = emb.where(F.col("vec_id") < n_queries).select(
+    q = emb.where(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("qid"), F.col("e").alias("qe"),
         F.col("label").alias("qlabel"))
     scored = (

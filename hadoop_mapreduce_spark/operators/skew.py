@@ -35,7 +35,6 @@ def salted_join(
     right_key: str,
     n_salts: int = 16,
     how: str = "inner",
-    salt_source: str | None = None,
 ) -> DataFrame:
     """Equi-join where the LEFT side's key distribution is skewed.
 
@@ -46,8 +45,7 @@ def salted_join(
     right side is small-ish but above the broadcast threshold (if it
     broadcasts, there is no shuffle to skew in the first place).
 
-    salt_source names a left column whose values vary within the hot key
-    (default: the whole row via all columns).
+    The salt hashes the whole left row, so rows of one hot key spread.
 
     `how` is restricted to joins whose semantics survive right-side
     replication: for right/full outer joins every UNMATCHED right row
@@ -65,8 +63,8 @@ def salted_join(
             f"replicated {n_salts}x, so right/full outer joins would emit "
             f"each unmatched right row once per salt replica. "
             f"Supported: inner, left(_outer), left_semi, left_anti, cross.")
-    salt_cols = [salt_source] if salt_source else [F.col(c) for c in left.columns]
-    l_salted = left.withColumn("__salt", _salt_of(*salt_cols, n_salts=n_salts))
+    l_salted = left.withColumn(
+        "__salt", _salt_of(*[F.col(c) for c in left.columns], n_salts=n_salts))
     r_salted = right.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)).cast("array<int>"))
     )
@@ -154,7 +152,7 @@ def salted_aggregate_events(spark: SparkSession, sf_dir: str,
     return out
 
 
-def join_skew_audit(spark, sf_dir: str, n_parts: int = 32) -> DataFrame:
+def join_skew_audit(spark, sf_dir: str) -> DataFrame:
     """Pre-join skew audit: for each candidate shuffle key axis of the
     events fact table (the 5-value event_type — pathologically hot —
     and user_id — the realistic mild-skew case), how the rows would
@@ -175,6 +173,7 @@ def join_skew_audit(spark, sf_dir: str, n_parts: int = 32) -> DataFrame:
     """
     from hadoop_mapreduce_spark.sources.tables import load_table
 
+    n_parts = 32
     ev = load_table(spark, sf_dir, "events")
 
     def axis(col: str) -> DataFrame:
@@ -270,7 +269,7 @@ def join_cardinality_audit(spark, sf_dir: str) -> DataFrame:
     return out
 
 
-def partition_skew_plan(spark, sf_dir: str, n_parts: int = 32):
+def partition_skew_plan(spark, sf_dir: str):
     """Bucket-layout planning audit: hash events.user_id into n_parts
     buckets with the repo's portable md5 hash and report each bucket's
     row load, key count and load factor — the read you do BEFORE
@@ -291,6 +290,7 @@ def partition_skew_plan(spark, sf_dir: str, n_parts: int = 32):
     """
     from hadoop_mapreduce_spark.sources.tables import load_table
 
+    n_parts = 32
     ev = load_table(spark, sf_dir, "events")
     h = h60(F.col("user_id").cast("string"))
     per_key = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
@@ -319,9 +319,7 @@ def partition_skew_plan(spark, sf_dir: str, n_parts: int = 32):
     )
 
 
-def consistent_hash_migration_audit(spark, sf_dir: str,
-                                    n_servers: int = 8,
-                                    v_nodes: int = 64) -> DataFrame:
+def consistent_hash_migration_audit(spark, sf_dir: str) -> DataFrame:
     """Consistent-hashing ring audit for shard routing: place
     ``n_servers`` servers on an md5 ring (``v_nodes`` virtual points
     each), assign every events partition key (user_id) to its
@@ -349,6 +347,8 @@ def consistent_hash_migration_audit(spark, sf_dir: str,
     """
     from hadoop_mapreduce_spark.sources.tables import load_table
 
+    n_servers = 8
+    v_nodes = 64
     ev = load_table(spark, sf_dir, "events")
     keys = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_rows"))
 

@@ -141,7 +141,7 @@ def language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def doc_fingerprint(spark: SparkSession, sf_dir: str, kgram: int = 8) -> DataFrame:
+def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing-style fingerprint: minimum 60-bit hash over character
     k-grams of the normalised text (whitespace-insensitive near-exact
     matching), plus the full-content hash. Both md5-derived →
@@ -154,6 +154,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str, kgram: int = 8) -> DataFra
     normalisation regexes at every position (O(len^2) per doc; measured
     ~60x slower at sf0.1).
     """
+    kgram = 8
     docs = load_table(spark, sf_dir, "documents")
     compact = F.regexp_replace(normalize_text(F.col("text")), r"\s+", " ")
     c = docs.select(
@@ -178,7 +179,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str, kgram: int = 8) -> DataFra
     )
 
 
-def tfidf_top_terms(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
+def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k terms per document by TF-IDF (smoothed idf = ln((N+1)/(df+1))).
 
     Three aggregates over the exploded token stream — tf per (doc, term),
@@ -202,36 +203,36 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
+        .where(F.col("rnk") <= 5)
         .select("doc_id", "term", F.col("tf").cast("long").alias("tf"),
                 F.round("score", 6).alias("tfidf"), F.col("rnk").cast("long").alias("rnk"))
     )
 
 
-def heavy_hitters_cms(spark: SparkSession, sf_dir: str, depth: int = 4,
-                      width: int = 256, k: int = 20) -> DataFrame:
+def heavy_hitters_cms(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
     """Heavy hitters via a count-min sketch built as DataFrame ops.
 
     Sketch build: each token occurrence updates `depth` counters at
-    (row d, xxhash64(d, term) % width) — one groupBy over depth x width
-    cells, so the shuffle carries at most depth*width rows per partition
+    (row d, xxhash64(d, term) % 256) — one groupBy over depth x 256
+    cells, so the shuffle carries at most depth*256 rows per partition
     regardless of corpus size (the point of a sketch at 100 TB: the
     aggregation state is O(1), not O(vocabulary)).  Estimate for a term
     = min over its depth cells (classic CMS upper-bound estimate,
     overcounts on collision, never undercounts).  The top-k candidates
     come from the distinct-term side joined against the sketch.
 
-    Hash-paired since r7: the row-d cell index is h60("d:term") % width
+    Hash-paired since r7: the row-d cell index is h60("d:term") % 256
     (functions/portable.py), so the DuckDB oracle rebuilds the IDENTICAL
     sketch and the estimates — integer counts — hash-match exactly.
     (The previous xxhash64 cells were JVM-only, which is what kept this
     rows-only; md5 costs ~2x per occurrence but the sketch aggregation,
     not the hash, dominates the pass.)
     """
+    depth = 4
     docs = load_table(spark, sf_dir, "documents")
 
     def cell(d):
-        return h60(F.concat_ws(":", F.lit(str(d)), F.col("term"))) % width
+        return h60(F.concat_ws(":", F.lit(str(d)), F.col("term"))) % 256
 
     toks = docs.select(F.explode(_tokens("text")).alias("term"))
     cells = toks.select(
@@ -266,9 +267,7 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str, depth: int = 4,
     )
 
 
-def keyword_search(spark: SparkSession, sf_dir: str,
-                   terms: tuple[str, ...] = ("spark", "window", "join"),
-                   k: int = 20) -> DataFrame:
+def keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conjunctive (AND) keyword search ranked by summed TF-IDF — the
     query side of the inverted index tfidf_top_terms builds: find the
     top-k documents containing EVERY query term.
@@ -278,8 +277,9 @@ def keyword_search(spark: SparkSession, sf_dir: str,
     touches O(matches) rows, not the corpus; df comes from the same
     filtered stream (df of non-query terms is never computed). The
     final top-k is orderBy+limit → TakeOrderedAndProject (per-partition
-    heaps + driver merge of k rows), never a single-partition window.
+    heaps + driver merge of 20 rows), never a single-partition window.
     """
+    terms = ("spark", "window", "join")
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(_tokens("text")).alias("term"))
     qt = toks.where(F.col("term").isin(*terms))
@@ -303,14 +303,13 @@ def keyword_search(spark: SparkSession, sf_dir: str,
         per_doc.select("doc_id",
                        F.col("total_tf").cast("long").alias("total_tf"),
                        F.round("score", 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        .orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
     )
 
 
-def token_zipf_slope(spark: SparkSession, sf_dir: str,
-                     max_rank: int = 500) -> DataFrame:
+def token_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf audit of the corpus token distribution: regression slope of
-    ln(count) on ln(rank) over the top max_rank tokens (natural text
+    ln(count) on ln(rank) over the top 500 tokens (natural text
     sits near -1; a slope far off flags boilerplate-heavy or synthetic
     corpora — a standard pre-training corpus health check).
 
@@ -331,7 +330,7 @@ def token_zipf_slope(spark: SparkSession, sf_dir: str,
     )
     w = Window.orderBy(F.desc("c"), F.asc("tk"))
     ranked = counts.withColumn("r", F.row_number().over(w)).where(
-        F.col("r") <= max_rank)
+        F.col("r") <= 500)
     return ranked.agg(
         F.round(F.expr("regr_slope(ln(c), ln(r))"), 6).alias("zipf_slope"),
         F.round(F.expr("regr_r2(ln(c), ln(r))"), 6).alias("zipf_r2"),
@@ -416,8 +415,7 @@ def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def hll_union_sources(spark: SparkSession, sf_dir: str,
-                      lg_k: int = 12) -> DataFrame:
+def hll_union_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable distinct-token sketches via Spark 4's Apache
     DataSketches HLL surface: one hll_sketch_agg per source, then
     hll_union_agg rolls the per-source sketches up to a corpus-wide
@@ -435,7 +433,7 @@ def hll_union_sources(spark: SparkSession, sf_dir: str,
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("source", F.explode(_tokens("text")).alias("tk"))
     sketches = tok.groupBy("source").agg(
-        F.hll_sketch_agg("tk", F.lit(lg_k)).alias("sk"))
+        F.hll_sketch_agg("tk", F.lit(12)).alias("sk"))
     per_source = sketches.select(
         "source", F.hll_sketch_estimate("sk").cast("long").alias("est_distinct"))
     union_all = (
@@ -446,10 +444,9 @@ def hll_union_sources(spark: SparkSession, sf_dir: str,
     return per_source.unionByName(union_all)
 
 
-def doc_hash_embedding(spark: SparkSession, sf_dir: str,
-                       dim: int = 32) -> DataFrame:
+def doc_hash_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-hashing document vectors (the "hashing trick"): bucket =
-    md5(token) mod dim, value = occurrence count — a dependency-free
+    md5(token) mod 32, value = occurrence count — a dependency-free
     text embedding that turns `documents` into vectors for the
     similarity stack without a model. Output per doc: nnz (distinct
     buckets hit), l2 norm, and the argmax bucket (ties to the lowest
@@ -465,7 +462,7 @@ def doc_hash_embedding(spark: SparkSession, sf_dir: str,
     tok = docs.select("doc_id", F.explode(_tokens("text")).alias("tk"))
     bucketed = tok.select(
         "doc_id",
-        (h60("tk") % dim).alias("b"),
+        (h60("tk") % 32).alias("b"),
     )
     cells = bucketed.groupBy("doc_id", "b").agg(
         F.count(F.lit(1)).alias("v"))
@@ -480,8 +477,7 @@ def doc_hash_embedding(spark: SparkSession, sf_dir: str,
     )
 
 
-def bigram_pmi_collocations(spark: SparkSession, sf_dir: str,
-                            min_count: int = 5, k: int = 50) -> DataFrame:
+def bigram_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collocation mining: top-k token bigrams by pointwise mutual
     information, PMI = ln( p(ab) / (p(a)·p(b)) ) with all probabilities
     estimated from the corpus itself — the classic Church & Hanks
@@ -498,7 +494,7 @@ def bigram_pmi_collocations(spark: SparkSession, sf_dir: str,
     totals (n_uni, n_big) are DERIVED from those two frequency tables
     (sum of counts pre-filter), not re-scanned — the original third
     tokenise pass was ~1/3 of the op's 4x ladder time. Everything
-    downstream of the scans is vocabulary-sized. min_count guards the
+    downstream of the scans is vocabulary-sized. The min count of 5 guards the
     classic PMI small-count instability (hapax pairs otherwise own
     the top).
 
@@ -517,7 +513,7 @@ def bigram_pmi_collocations(spark: SparkSession, sf_dir: str,
         .groupBy("bg").agg(F.count(F.lit(1)).alias("cab"))
     )
     big = (
-        bgc.where(F.col("cab") >= min_count)
+        bgc.where(F.col("cab") >= 5)
         .select(F.split("bg", " ").getItem(0).alias("w1"),
                 F.split("bg", " ").getItem(1).alias("w2"),
                 "cab")
@@ -539,12 +535,10 @@ def bigram_pmi_collocations(spark: SparkSession, sf_dir: str,
                          * (F.col("c2") / F.col("n_uni")))), 6).alias("pmi"),
         )
     )
-    return pmi.orderBy(F.desc("pmi"), F.asc("w1"), F.asc("w2")).limit(k)
+    return pmi.orderBy(F.desc("pmi"), F.asc("w1"), F.asc("w2")).limit(50)
 
 
-def skipgram_cooccurrence(spark: SparkSession, sf_dir: str,
-                          window: int = 3, min_count: int = 5,
-                          k: int = 50) -> DataFrame:
+def skipgram_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Windowed co-occurrence PMI: top-k UNORDERED token pairs that
     co-occur within ±window positions, scored by pointwise mutual
     information — the statistic GloVe/word2vec-style embedding
@@ -571,6 +565,7 @@ def skipgram_cooccurrence(spark: SparkSession, sf_dir: str,
     """
     from hadoop_mapreduce_spark.session import scoped_persist
 
+    window = 3
     docs = load_table(spark, sf_dir, "documents")
     # one tokenize pass shared by the pair expansion and the unigram
     # table (scoped so harness code can release it)
@@ -594,7 +589,7 @@ def skipgram_cooccurrence(spark: SparkSession, sf_dir: str,
         .groupBy("pr").agg(F.count(F.lit(1)).alias("c12"))
     )
     pairs = (
-        pc.where(F.col("c12") >= min_count)
+        pc.where(F.col("c12") >= 5)
         .select(F.split("pr", " ").getItem(0).alias("w1"),
                 F.split("pr", " ").getItem(1).alias("w2"),
                 "c12")
@@ -616,15 +611,14 @@ def skipgram_cooccurrence(spark: SparkSession, sf_dir: str,
                          * (F.col("c2") / F.col("n_uni")))), 6).alias("pmi"),
         )
     )
-    return scored.orderBy(F.desc("pmi"), F.asc("w1"), F.asc("w2")).limit(k)
+    return scored.orderBy(F.desc("pmi"), F.asc("w1"), F.asc("w2")).limit(50)
 
 
-def bigram_lm_quality(spark: SparkSession, sf_dir: str,
-                      lam: float = 0.7, k: int = 50) -> DataFrame:
+def bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated bigram language-model quality filter: score each
     document by the mean log-probability of its token *transitions*
     under a bigram LM estimated from the corpus itself, and return the
-    k most surprising (lowest-scoring) documents — the next rung up
+    50 most surprising (lowest-scoring) documents — the next rung up
     from unigram_logprob_quality on the CCNet/KenLM perplexity-filter
     ladder, and the LM companion to the reference's flagship n-gram
     counts (WordCount.java n=2 output IS this model's sufficient
@@ -671,6 +665,7 @@ def bigram_lm_quality(spark: SparkSession, sf_dir: str,
     from hadoop_mapreduce_spark.functions.text import ngrams_from_tokens
     from hadoop_mapreduce_spark.session import scoped_persist
 
+    lam = 0.7
     docs = load_table(spark, sf_dir, "documents")
     # tokenize ONCE: per_doc, uni and totals all derive from this
     # persisted projection (the unpersisted form re-ran the regex
@@ -736,13 +731,11 @@ def bigram_lm_quality(spark: SparkSession, sf_dir: str,
     return (
         scored.select("doc_id", F.col("nb").cast("long").alias("n_bigrams"),
                       F.round("score", 6).alias("bigram_lp"))
-        .orderBy(F.asc("bigram_lp"), F.asc("doc_id")).limit(k)
+        .orderBy(F.asc("bigram_lp"), F.asc("doc_id")).limit(50)
     )
 
 
-def bm25_search(spark: SparkSession, sf_dir: str,
-                terms: tuple[str, ...] = ("spark", "window", "join"),
-                k1: float = 1.2, b: float = 0.75, k: int = 20) -> DataFrame:
+def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 ranked retrieval for a fixed term set — the
     relevance-ranked (disjunctive) counterpart of keyword_search's
     conjunctive TF-IDF: any document containing at least one query term
@@ -766,12 +759,14 @@ def bm25_search(spark: SparkSession, sf_dir: str,
     """
     from hadoop_mapreduce_spark.session import scoped_persist
 
+    k1 = 1.2
+    b = 0.75
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", _tokens("text").alias("__toks"))
     row = scoped_persist(base.select(
         "doc_id",
         F.size("__toks").alias("dl"),
-        F.filter("__toks", lambda t: t.isin(*terms)).alias("m"),
+        F.filter("__toks", lambda t: t.isin("spark", "window", "join")).alias("m"),
     ))
     stats = row.agg(F.count(F.lit(1)).alias("n_docs"),
                     F.avg("dl").alias("avgdl"))
@@ -795,7 +790,7 @@ def bm25_search(spark: SparkSession, sf_dir: str,
     return (
         scored.select("doc_id", F.col("n_terms").cast("long").alias("n_terms"),
                       F.round("score", 6).alias("bm25"))
-        .orderBy(F.desc("bm25"), F.asc("doc_id")).limit(k)
+        .orderBy(F.desc("bm25"), F.asc("doc_id")).limit(20)
     )
 
 
@@ -958,8 +953,7 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def kneser_ney_quality(spark: SparkSession, sf_dir: str,
-                       discount: float = 0.75, k: int = 50) -> DataFrame:
+def kneser_ney_quality(spark: SparkSession, sf_dir: str, k: int = 50) -> DataFrame:
     """Interpolated Kneser-Ney bigram LM quality filter — the standard
     smoothing for n-gram LMs (Kneser & Ney 1995; Chen & Goodman 1999)
     and the published rung above bigram_lm_quality's simple
@@ -989,6 +983,7 @@ def kneser_ney_quality(spark: SparkSession, sf_dir: str,
     from hadoop_mapreduce_spark.functions.text import ngrams_from_tokens
     from hadoop_mapreduce_spark.session import scoped_persist
 
+    discount = 0.75
     docs = load_table(spark, sf_dir, "documents")
     toks = scoped_persist(
         docs.select("doc_id", _tokens("text").alias("t"))
@@ -1093,19 +1088,15 @@ KR_MOD = 2147483647          # 2^31 - 1 (Mersenne prime)
 KR_BASE = 2097169            # prime > 2^21 (max Unicode code point)
 
 
-def _kr_expr(arr: str, pos: str, n: int, spark: bool = True) -> str:
-    """SQL text of the n-char Karp-Rabin Horner fold over a code-point
-    ARRAY column starting at 1-based index `pos`. Array indexing, not
-    per-character substring: substring(s, i, 1) re-seeks the UTF-8
-    string from the start (O(i) per char — measured 12 s for the
-    8-char fold at 4x sf0.1 vs ~O(1) element_at). Out-of-range indices
-    (short documents) coalesce to 0, matching ascii('') = 0. The Spark
-    and DuckDB accessors differ syntactically (try_element_at vs [])
-    but both run the same exact integer recurrence."""
+def _kr_expr(arr: str, pos: str, n: int) -> str:
+    """Spark SQL text of the n-char Karp-Rabin Horner fold over a
+    code-point ARRAY column starting at 1-based index `pos`. Array
+    indexing, not per-character substring: substring(s, i, 1) re-seeks
+    the UTF-8 string from the start (O(i) per char — measured 12 s for
+    the 8-char fold at 4x sf0.1 vs ~O(1) element_at). Out-of-range
+    indices (short documents) coalesce to 0, matching ascii('') = 0."""
     def at(j: int) -> str:
-        if spark:
-            return f"coalesce(try_element_at({arr}, ({pos}) + {j}), 0)"
-        return f"coalesce({arr}[({pos}) + {j}], 0)"
+        return f"coalesce(try_element_at({arr}, ({pos}) + {j}), 0)"
 
     e = f"CAST({at(0)} AS BIGINT)"
     for j in range(1, n):
@@ -1154,8 +1145,7 @@ def _winnow_selected(docs: DataFrame, kgram: int = 8,
     )
 
 
-def winnowing_fingerprint(spark: SparkSession, sf_dir: str,
-                          kgram: int = 8, window: int = 8) -> DataFrame:
+def winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
     SIGMOD'03 — the MOSS algorithm): hash every character k-gram of the
     whitespace-compacted normalised text, slide a w-window over the
@@ -1183,7 +1173,7 @@ def winnowing_fingerprint(spark: SparkSession, sf_dir: str,
     stream.
     """
     sel = _winnow_selected(
-        load_table(spark, sf_dir, "documents"), kgram, window)
+        load_table(spark, sf_dir, "documents"), 8, 8)
     return (
         sel.groupBy("doc_id")
         .agg(
@@ -1254,8 +1244,7 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def vocab_coverage_curve(spark: SparkSession, sf_dir: str,
-                         ks: tuple[int, ...] = (1000, 8000, 32000)) -> DataFrame:
+def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary coverage curve: what fraction of corpus token
     OCCURRENCES the top-k most frequent types cover, for the candidate
     vocab sizes a tokenizer design sweeps (Zipf's law makes this curve
@@ -1276,6 +1265,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str,
     Output: one row per k — n_types kept, occurrences covered, total
     occurrences, coverage fraction (6 dp).
     """
+    ks = (1000, 8000, 32000)
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(F.explode(_tokens("text")).alias("tk"))
     vocab = tok.groupBy("tk").agg(F.count(F.lit(1)).alias("c"))
@@ -1313,8 +1303,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str,
     )
 
 
-def char_trigram_langid(spark: SparkSession, sf_dir: str,
-                        profile_n: int = 64) -> DataFrame:
+def char_trigram_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Profile-based language ID (the CLD / textcat family): build a
     top-N character-trigram frequency profile per language from the
     labelled corpus, score every document against every profile by
@@ -1380,7 +1369,7 @@ def char_trigram_langid(spark: SparkSession, sf_dir: str,
     profile = (lang_tri
                .select("lang", "tri", "cl",
                        F.row_number().over(w_prof).alias("rnk"))
-               .where(F.col("rnk") <= profile_n)
+               .where(F.col("rnk") <= 64)
                .select(F.col("lang").alias("plang"), "tri", "cl"))
     pnorm = profile.groupBy("plang").agg(
         F.sum(F.col("cl").cast("decimal(38,0)") * F.col("cl")).alias("ssq"))
@@ -1410,14 +1399,11 @@ def char_trigram_langid(spark: SparkSession, sf_dir: str,
     )
 
 
-def winnowing_neardup_pairs(spark: SparkSession, sf_dir: str,
-                            kgram: int = 16, window: int = 16,
-                            min_shared: int = 8,
-                            max_df: int = 256) -> DataFrame:
+def winnowing_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document near-duplicate detection over winnowing
     fingerprints — the actual MOSS use of the selections
     winnowing_fingerprint digests per doc: two documents sharing
-    >= min_shared fingerprint HASHES (position-independent) share that
+    >= 8 fingerprint HASHES (position-independent) share that
     many w+k-1-length substrings and are flagged as a pair, with the
     containment fraction shared/min(|fp1|, |fp2|) in exact integer
     micro-units. Detection parameters are STRICTER than the per-doc
@@ -1426,7 +1412,7 @@ def winnowing_neardup_pairs(spark: SparkSession, sf_dir: str,
     substrings with every other and the pair set is ~quadratic noise
     (measured 51k pairs over 500 docs vs 26 true near-dups at k=16).
 
-    Fingerprints present in more than max_df documents are culled
+    Fingerprints present in more than 256 documents are culled
     BEFORE pairing — the paper's own treatment of boilerplate
     (headers, license blocks): a fingerprint every page shares
     identifies nothing and would otherwise pair quadratically. The
@@ -1436,16 +1422,16 @@ def winnowing_neardup_pairs(spark: SparkSession, sf_dir: str,
     Scale shape: the selection relation (≈ 2/(w+1) of k-gram
     positions), one df-counting aggregation (fingerprint-keyed,
     map-side combinable), the capped self-join keyed by fingerprint
-    hash (per-key fanout <= max_df), one pair-keyed count, and a
+    hash (per-key fanout <= 256), one pair-keyed count, and a
     broadcast join back to the tiny per-doc fingerprint counts.
     """
     docs = load_table(spark, sf_dir, "documents")
-    sel = _winnow_selected(docs, kgram, window)
+    sel = _winnow_selected(docs, 16, 16)
     fps = sel.select(
         "doc_id", F.expr(f"sel div {WINNOW_POS}").alias("fph")).distinct()
     n_fp = fps.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nf"))
     df_ = fps.groupBy("fph").agg(F.count(F.lit(1)).alias("df"))
-    rare = fps.join(F.broadcast(df_.where(F.col("df") > max_df)),
+    rare = fps.join(F.broadcast(df_.where(F.col("df") > 256)),
                     "fph", "left_anti")
     pairs = (
         rare.alias("a").join(
@@ -1455,7 +1441,7 @@ def winnowing_neardup_pairs(spark: SparkSession, sf_dir: str,
         .groupBy(F.col("a.doc_id").alias("id1"),
                  F.col("b.doc_id").alias("id2"))
         .agg(F.count(F.lit(1)).alias("shared_fp"))
-        .where(F.col("shared_fp") >= min_shared)
+        .where(F.col("shared_fp") >= 8)
     )
     return (
         pairs
@@ -1471,8 +1457,7 @@ def winnowing_neardup_pairs(spark: SparkSession, sf_dir: str,
     )
 
 
-def stopword_discovery(spark: SparkSession, sf_dir: str,
-                       k: int = 20) -> DataFrame:
+def stopword_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-driven stopword-list construction: the top-k terms per
     language by DOCUMENT frequency (not raw count — a term that
     saturates every document is structural, one that repeats inside a
@@ -1507,7 +1492,7 @@ def stopword_discovery(spark: SparkSession, sf_dir: str,
             F.row_number().over(
                 Window.partitionBy("lang")
                 .orderBy(F.desc("df"), F.desc("tf"), F.asc("w"))))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 20)
     )
     return ranked.select(
         "lang",
@@ -1577,8 +1562,7 @@ def ngram_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def fightin_words(spark: SparkSession, sf_dir: str,
-                  k: int = 5, a0: float = 1000.0) -> DataFrame:
+def fightin_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinctive-term extraction per source — Monroe, Colaresi &
     Quinn's "Fightin' Words" (2008): the log-odds ratio of each term
     in source-vs-rest, shrunk by an informative Dirichlet prior
@@ -1596,8 +1580,9 @@ def fightin_words(spark: SparkSession, sf_dir: str,
     near-equal z values collapse to the same key instead of depending
     on last-ulp order. Plan: one (source, term) count exchange; the
     corpus-total relation is vocabulary-sized and broadcast; top-k per
-    source is a bounded rank window. Output = |sources| * k rows.
+    source is a bounded rank window. Output = |sources| * 5 rows.
     """
+    a0 = 1000.0
     docs = load_table(spark, sf_dir, "documents")
     counts = (
         docs.select("source", F.explode(_tokens("text")).alias("w"))
@@ -1639,15 +1624,13 @@ def fightin_words(spark: SparkSession, sf_dir: str,
     wr = Window.partitionBy("source").orderBy(F.desc("z"), F.asc("w"))
     return (
         scored.withColumn("rank", F.row_number().over(wr))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 5)
         .select("source", F.col("rank").cast("long").alias("rank"),
                 F.col("w").alias("term"), "y_iw", "z")
     )
 
 
-def kwic_concordance(spark: SparkSession, sf_dir: str,
-                     term: str = "spark", width: int = 3,
-                     k: int = 50) -> DataFrame:
+def kwic_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyword-in-context concordance — the corpus linguist's (and the
     data auditor's) primary exploration view: every occurrence of a
     query term with `width` tokens of left and right context, top-k by
@@ -1663,13 +1646,14 @@ def kwic_concordance(spark: SparkSession, sf_dir: str,
     never re-tokenized per occurrence. Deterministic page via the
     (doc_id, pos) sort.
     """
+    width = 3
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", _tokens("text").alias("__toks"))
     hits = (
         base.select(
             "doc_id", "__toks",
             F.posexplode("__toks").alias("pos", "tok"))
-        .where(F.col("tok") == term)
+        .where(F.col("tok") == "spark")
     )
     left = F.concat_ws(
         " ", F.slice(F.col("__toks"),
@@ -1686,12 +1670,11 @@ def kwic_concordance(spark: SparkSession, sf_dir: str,
             right.alias("right_ctx"),
         )
         .orderBy("doc_id", "pos")
-        .limit(k)
+        .limit(50)
     )
 
 
-def compression_ratio_quality(spark: SparkSession, sf_dir: str,
-                              max_ratio_e6: int = 300_000) -> DataFrame:
+def compression_ratio_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compression-ratio quality signal (Dolma/RedPajama's dedup-adjacent
     heuristic): zlib-compress each document and flag those whose
     compressed/raw ratio is LOW — highly compressible text is
@@ -1741,7 +1724,7 @@ def compression_ratio_quality(spark: SparkSession, sf_dir: str,
             F.sum("z_len").alias("z_bytes"),
             F.expr("sum(z_len) * 1000000 div sum(raw_len)")
             .alias("corpus_ratio_e6"),
-            F.sum((F.col("ratio_e6") < F.lit(max_ratio_e6))
+            F.sum((F.col("ratio_e6") < F.lit(300_000))
                   .cast("long")).alias("n_flagged"),
         )
         .select(
@@ -1976,8 +1959,7 @@ def vocab_growth_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def keyphrase_rake(spark: SparkSession, sf_dir: str,
-                   top_k: int = 100) -> DataFrame:
+def keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAKE keyword scoring (Rose et al. 2010): candidate phrases are
     maximal runs of non-stopword tokens; a word's degree is the summed
     length of the phrases containing it, its score degree/frequency —
@@ -2044,12 +2026,11 @@ def keyphrase_rake(spark: SparkSession, sf_dir: str,
             F.expr("degree * 1000000 DIV freq").alias("rake_e6"),
         )
         .orderBy(F.col("rake_e6").desc(), F.col("freq").desc(), "word")
-        .limit(top_k)
+        .limit(100)
     )
 
 
-def term_burstiness(spark: SparkSession, sf_dir: str,
-                    min_cf: int = 20, k: int = 200) -> DataFrame:
+def term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Church-Gale burstiness per term: the variance-to-mean ratio of
     per-document counts (zeros included) — topical "bursty" words
     (appearing many times in few docs) score >> 1, function words sit
@@ -2080,7 +2061,7 @@ def term_burstiness(spark: SparkSession, sf_dir: str,
             F.sum("tf").cast("long").alias("cf"),
             F.sum(F.col("tf") * F.col("tf")).cast("long").alias("s2"),
         )
-        .where(F.col("cf") >= min_cf)
+        .where(F.col("cf") >= 20)
         .crossJoin(F.broadcast(n))
     )
     return (
@@ -2093,7 +2074,7 @@ def term_burstiness(spark: SparkSession, sf_dir: str,
             .alias("burstiness"),
         )
         .orderBy(F.desc("cf"), "term")
-        .limit(k)
+        .limit(200)
     )
 
 
@@ -2145,9 +2126,7 @@ def doc_position_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def text_tiling_boundaries(spark: SparkSession, sf_dir: str,
-                           block: int = 20, min_block: int = 5,
-                           boundary_e6: int = 300000) -> DataFrame:
+def text_tiling_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TextTiling-style topic-shift detection (Hearst 1997, lexical
     cohesion form): adjacent fixed-size token blocks are compared by
     distinct-vocabulary overlap, and a gap whose overlap ratio drops
@@ -2158,7 +2137,7 @@ def text_tiling_boundaries(spark: SparkSession, sf_dir: str,
 
     All-integer: block id = pos0 DIV block; overlap ratio =
     shared_distinct * 1e6 DIV min(|V_b|, |V_b+1|); gaps whose right
-    block is shorter than min_block (the ragged tail) are excluded
+    block is shorter than 5 tokens (the ragged tail) are excluded
     rather than spuriously flagged.  Zero-overlap gaps are REAL
     boundaries — the gap grid is built first and shared counts left-
     join onto it (an inner join would silently drop exactly the
@@ -2169,6 +2148,8 @@ def text_tiling_boundaries(spark: SparkSession, sf_dir: str,
     and a doc-keyed rollup.  Everything shuffles on (doc) or
     (doc, token) — no global structure.
     """
+    block = 20
+    boundary_e6 = 300000
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.posexplode(_tokens("text")).alias("pos0", "w"))
@@ -2180,7 +2161,7 @@ def text_tiling_boundaries(spark: SparkSession, sf_dir: str,
     gaps = (
         l.join(r, (F.col("l.doc_id") == F.col("r.doc_id"))
                & (F.col("r.b") == F.col("l.b") + 1))
-        .where(F.col("r.nv") >= min_block)
+        .where(F.col("r.nv") >= 5)
         .select(F.col("l.doc_id").alias("doc_id"), F.col("l.b").alias("b"),
                 F.col("l.nv").alias("nv_l"), F.col("r.nv").alias("nv_r"))
     )
@@ -2215,8 +2196,7 @@ def text_tiling_boundaries(spark: SparkSession, sf_dir: str,
     )
 
 
-def source_rank_correlation(spark: SparkSession, sf_dir: str,
-                            top_n: int = 100) -> DataFrame:
+def source_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman rank correlation of term-frequency rankings between
     every source pair, over the corpus-wide top-N vocabulary — the
     rank-based drift statistic: `lang_source_chisq` tests count
@@ -2235,6 +2215,7 @@ def source_rank_correlation(spark: SparkSession, sf_dir: str,
     Scale: vocabulary-bounded throughout — top-N vocab broadcast, per
     (source, term) counts map-side combined, |sources|² output.
     """
+    top_n = 100
     docs = load_table(spark, sf_dir, "documents")
     toked = docs.select("source", _tokens("text").alias("__t"))
     toks = toked.select("source", F.explode("__t").alias("term"))
@@ -2294,8 +2275,7 @@ def source_rank_correlation(spark: SparkSession, sf_dir: str,
     )
 
 
-def token_context_diversity(spark: SparkSession, sf_dir: str,
-                            top_k: int = 100) -> DataFrame:
+def token_context_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contextual diversity of the top-k terms: how many DISTINCT left
     and right neighbors each frequent token has — the lexical statistic
     separating a genuinely versatile word from one frozen inside a
@@ -2325,7 +2305,7 @@ def token_context_diversity(spark: SparkSession, sf_dir: str,
     freq = (
         toked.select(F.explode("__t").alias("w"))
         .groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
-        .orderBy(F.desc("freq"), "w").limit(top_k)
+        .orderBy(F.desc("freq"), "w").limit(100)
     )
     # one pass: each bigram (l, r) contributes ('R', l, r) and
     # ('L', r, l) — the right- and left-neighbor facts — in a single
@@ -2385,9 +2365,8 @@ def token_context_diversity(spark: SparkSession, sf_dir: str,
     )
 
 
-def token_positional_entropy(spark: SparkSession, sf_dir: str,
-                             n_positions: int = 20) -> DataFrame:
-    """Per-POSITION token entropy over the first n_positions tokens of
+def token_positional_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-POSITION token entropy over the first 20 tokens of
     every document — the boilerplate/template detector: a corpus whose
     documents all open with the same scaffold ("subject: ... from: ...")
     shows collapsed entropy at early positions while a natural corpus
@@ -2402,14 +2381,14 @@ def token_positional_entropy(spark: SparkSession, sf_dir: str,
     packed max — count-desc then lexicographically-last token,
     bit-identical on both engines — and its share is exact micro-units.
 
-    Scale: position explode is capped at n_positions per doc (bounded
+    Scale: position explode is capped at 20 per doc (bounded
     output regardless of doc length), one (pos, token) partial-agg
-    exchange, one n_positions-bounded rollup.
+    exchange, one 20-position-bounded rollup.
     """
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         F.posexplode(_tokens("text")).alias("pos", "t")
-    ).where(F.col("pos") < n_positions)
+    ).where(F.col("pos") < 20)
     cnt = toks.groupBy("pos", "t").agg(F.count(F.lit(1)).alias("c"))
     per = cnt.groupBy("pos").agg(
         F.sum("c").cast("long").alias("n"),
@@ -2431,8 +2410,7 @@ def token_positional_entropy(spark: SparkSession, sf_dir: str,
     )
 
 
-def negative_sampling_table(spark: SparkSession, sf_dir: str,
-                            k: int = 64) -> DataFrame:
+def negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """word2vec-style negative-sampling table (Mikolov et al. 2013):
     the unigram distribution raised to the 3/4 power — the smoothing
     that up-weights rare words just enough to make sampled negatives
@@ -2466,7 +2444,7 @@ def negative_sampling_table(spark: SparkSession, sf_dir: str,
     weighted = scoped_persist(counts.select("tk", "c", w_e6.alias("w")))
     tot = weighted.agg(
         F.expr("sum(CAST(w AS DECIMAL(38,0)))").alias("tw"))
-    top = weighted.orderBy(F.desc("c"), F.asc("tk")).limit(k)
+    top = weighted.orderBy(F.desc("c"), F.asc("tk")).limit(64)
     wr = Window.orderBy(F.desc("c"), F.asc("tk")) \
         .rowsBetween(Window.unboundedPreceding, 0)
     return (
@@ -2560,11 +2538,10 @@ def hll_intersection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ivm_hll_registers(spark: SparkSession, sf_dir: str,
-                      delta_from_day: int = 25) -> DataFrame:
+def ivm_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental view maintenance for a SKETCH: the per-event-type
     distinct-user HLL registers maintained from a delta batch (events
-    on day >= ``delta_from_day``) merged into the standing base
+    on day >= 25) merged into the standing base
     registers (earlier days) — next to `ivm_orders_agg` (exact
     algebraic IVM) this is the sketch half of the incremental story:
     HLL registers form a commutative monoid under bucket-wise max, so
@@ -2590,7 +2567,7 @@ def ivm_hll_registers(spark: SparkSession, sf_dir: str,
     tagged = ev.crossJoin(F.broadcast(d0)).select(
         F.col("event_type").alias("source"),
         "user_id",
-        (day >= F.col("d0") + delta_from_day).alias("is_delta"),
+        (day >= F.col("d0") + 25).alias("is_delta"),
     )
     du = scoped_persist(
         tagged.select("source", "user_id", "is_delta").distinct())

@@ -354,8 +354,7 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_retention_cohorts(spark: SparkSession, sf_dir: str,
-                             max_weeks: int = 4) -> DataFrame:
+def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention matrix: users grouped by first-activity week
     (the cohort), counted by how many distinct later weeks they return
     — the (cohort_week, week_offset) → users triangle every analytics
@@ -378,14 +377,13 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str,
             F.floor(F.datediff(F.col("wk"), F.col("cohort_wk")) / 7)
             .cast("long").alias("week_offset"),
         )
-        .where(F.col("week_offset") <= max_weeks)
+        .where(F.col("week_offset") <= 4)
         .groupBy("cohort_week", "week_offset")
         .agg(F.countDistinct("user_id").alias("n_users"))
     )
 
 
-def events_session_bigrams(spark: SparkSession, sf_dir: str,
-                           gap_minutes: int = 30, k: int = 20) -> DataFrame:
+def events_session_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's flagship n-gram operator re-applied to event
     STREAMS: top-k event-type bigrams within user sessions — "what do
     users do next" path analysis (WordCount's sliding window over
@@ -412,7 +410,7 @@ def events_session_bigrams(spark: SparkSession, sf_dir: str,
     ).select(
         "user_id", "ts", "event_id", "event_type",
         F.sum(
-            (F.coalesce(F.col("gap"), F.lit(0)) > gap_minutes * 60)
+            (F.coalesce(F.col("gap"), F.lit(0)) > 30 * 60)
             .cast("long")
         ).over(w).alias("session_id"),
     )
@@ -431,17 +429,16 @@ def events_session_bigrams(spark: SparkSession, sf_dir: str,
         bigrams.groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy(F.desc("cnt"), F.asc("bigram"))
-        .limit(k)
+        .limit(20)
         .select("bigram", F.col("cnt").cast("long").alias("cnt"))
     )
 
 
-def events_anomaly_zscore(spark: SparkSession, sf_dir: str,
-                          window_hours: int = 24, z_cut: float = 3.0) -> DataFrame:
+def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling z-score anomaly detection per event_type: each hourly
     bucket's count is scored against the mean/stddev of the PRECEDING
-    `window_hours` buckets (strictly preceding — a self-inclusive
-    window lets an anomaly mask itself), flagged when |z| > z_cut. The
+    24 buckets (strictly preceding — a self-inclusive
+    window lets an anomaly mask itself), flagged when |z| > 3. The
     monitoring primitive for feed-health dashboards.
 
     Plan: one (type, hour) aggregate (map-side combinable), then a
@@ -458,7 +455,7 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str,
         .agg(F.count(F.lit(1)).alias("n"))
     )
     w = (Window.partitionBy("event_type").orderBy("hr")
-         .rowsBetween(-window_hours, -1))
+         .rowsBetween(-24, -1))
     scored = hourly.select(
         "event_type",
         F.col("hr").cast("string").alias("hour"),
@@ -476,20 +473,19 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str,
             "event_type", "hour", F.col("n").cast("long").alias("n"),
             F.round("mu", 4).alias("mu"),
             F.round(z, 4).alias("z"),
-            (F.abs(F.coalesce(z, F.lit(0.0))) > z_cut).alias("is_anomaly"),
+            (F.abs(F.coalesce(z, F.lit(0.0))) > 3.0).alias("is_anomaly"),
         )
         .where(F.col("is_anomaly"))
     )
 
 
-def events_anomaly_mad(spark: SparkSession, sf_dir: str,
-                       cut: float = 3.5) -> DataFrame:
+def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust outlier detection on event values per event_type using
     the median / MAD (median absolute deviation) scale — the
     breakdown-resistant twin of events_anomaly_zscore: a z-score's
     mean/stddev are themselves dragged by the outliers being hunted,
     while the median/MAD pair tolerates up to 50% contamination. Flag
-    = modified z-score 0.6745*(x - med)/MAD > cut (Iglewicz-Hoaglin).
+    = modified z-score 0.6745*(x - med)/MAD > 3.5 (Iglewicz-Hoaglin).
 
     Plan: two passes over the (type, value) projection — exact medians
     via percentile() grouped per type (Spark's exact-percentile sorts
@@ -535,7 +531,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str,
                 F.round("value", 2).alias("value"),
                 F.col("med"), F.col("mad"),
                 mad_z.alias("mad_z"))
-        .where(F.abs(mad_z) > cut)
+        .where(F.abs(mad_z) > 3.5)
     )
 
 
@@ -582,8 +578,7 @@ def events_twap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_winsorize_stats(spark: SparkSession, sf_dir: str,
-                           lo_q: float = 0.01, hi_q: float = 0.99) -> DataFrame:
+def events_winsorize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winsorized per-type statistics: clip values to the [p01, p99]
     percentile envelope and report the clip counts and the raw-vs-
     winsorized mean shift — the robust-mean preprocessing step (tail
@@ -599,6 +594,8 @@ def events_winsorize_stats(spark: SparkSession, sf_dir: str,
     comparison so both engines clip against bit-identical bounds
     (the events_anomaly_mad portability convention).
     """
+    lo_q = 0.01
+    hi_q = 0.99
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
     env = ev.groupBy("event_type").agg(
         F.round(F.expr(f"percentile(value, {lo_q})"), 4).alias("lo"),
@@ -621,11 +618,10 @@ def events_winsorize_stats(spark: SparkSession, sf_dir: str,
     )
 
 
-def asof_join_nearest(spark: SparkSession, sf_dir: str,
-                      tolerance_days: int = 7) -> DataFrame:
+def asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join, NEAREST variant with tolerance: for each event, the
     closest order of that customer in EITHER direction, but only within
-    +/- tolerance_days — pandas' merge_asof(direction='nearest',
+    +/- 7 days — pandas' merge_asof(direction='nearest',
     tolerance=...) semantics, the variant backtesting and feature
     pipelines reach for when the fact can legitimately lag or lead its
     dimension. Ties (equidistant before/after) resolve to the earlier
@@ -642,7 +638,7 @@ def asof_join_nearest(spark: SparkSession, sf_dir: str,
     Distances compare in exact integer MICROSECONDS (unix_micros /
     epoch_us — identical integers on both engines; no float time math).
     """
-    tol_us = tolerance_days * 86_400_000_000
+    tol_us = 7 * 86_400_000_000
     ev = load_table(spark, sf_dir, "events").select(
         F.col("user_id").alias("k"), F.col("ts"), F.lit(1).alias("side"),
         "event_id", F.lit(None).cast("timestamp_ntz").alias("odate"),
@@ -682,8 +678,7 @@ def asof_join_nearest(spark: SparkSession, sf_dir: str,
     )
 
 
-def events_ewma_daily(spark: SparkSession, sf_dir: str,
-                      alpha: float = 0.3) -> DataFrame:
+def events_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type exponentially-weighted moving average over the DAILY
     mean series (s_t = alpha*v_t + (1-alpha)*s_{t-1}, seeded s_1 = v_1)
     — the classic smoothing/trend primitive between the gap-fill and
@@ -704,6 +699,7 @@ def events_ewma_daily(spark: SparkSession, sf_dir: str,
     with a lockstep recursive CTE), so the float EWMA is bit-identical
     and rounds cleanly at 6 dp.
     """
+    alpha = 0.3
     ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.select("event_type",
@@ -1192,7 +1188,7 @@ def user_active_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_acf(spark: SparkSession, sf_dir: str, max_lag: int = 7) -> DataFrame:
+def events_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Autocorrelation function of the daily event-count series per
     event type, lags 1..max_lag — the seasonality / persistence
     diagnostic read before fitting any forecast model (pairs with
@@ -1221,7 +1217,7 @@ def events_acf(spark: SparkSession, sf_dir: str, max_lag: int = 7) -> DataFrame:
         .groupBy("event_type", "d")
         .agg(F.count(F.lit(1)).cast("long").alias("x"))
     )
-    lags = spark.range(1, max_lag + 1).select(F.col("id").alias("lag"))
+    lags = spark.range(1, 8).select(F.col("id").alias("lag"))
     a, b = daily.alias("a"), daily.alias("b")
     pairs = (
         a.crossJoin(F.broadcast(lags))
@@ -1345,8 +1341,7 @@ def session_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_holt_linear(spark: SparkSession, sf_dir: str,
-                       alpha: float = 0.5, beta: float = 0.3) -> DataFrame:
+def events_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt's double exponential smoothing (level + linear trend) over
     the per-type DAILY event-count series, with the one-step-ahead
     forecast and its absolute error — the trend-aware upgrade of
@@ -1366,6 +1361,8 @@ def events_holt_linear(spark: SparkSession, sf_dir: str,
     recursive CTE), the float chain is bit-identical and floor-rounds
     cleanly at 6 dp.
     """
+    alpha = 0.5
+    beta = 0.3
     ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.select("event_type",
@@ -1566,14 +1563,12 @@ def events_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def survival_kaplan_meier(
-    spark: SparkSession, sf_dir: str, churn_gap_days: int = 7,
-) -> DataFrame:
+def survival_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier product-limit survival curve of user lifetime with
     right-censoring — the churn statistic `events_retention_cohorts`
     approximates without censoring handling.  A user's lifetime is
     last_active_day - first_active_day; the churn event is OBSERVED
-    only when the user has been silent for > churn_gap_days before the
+    only when the user has been silent for > 7 days before the
     corpus end, otherwise the lifetime is right-censored (the user may
     still be active).
 
@@ -1602,7 +1597,7 @@ def survival_kaplan_meier(
         .select(
             (F.col("last_d") - F.col("first_d")).cast("long").alias("t"),
             (F.col("last_d")
-             < F.col("corpus_end") - F.lit(churn_gap_days))
+             < F.col("corpus_end") - F.lit(7))
             .cast("long").alias("churned"),
         )
     )
@@ -1847,11 +1842,9 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def session_path_topk(spark: SparkSession, sf_dir: str,
-                      gap_minutes: int = 30, max_steps: int = 12,
-                      k: int = 50) -> DataFrame:
+def session_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k full navigation paths: the ordered event-type sequence of
-    each user session, truncated to its first max_steps events, counted
+    each user session, truncated to its first 12 events, counted
     across the corpus — the whole-journey statistic
     `events_session_bigrams` only sees two steps of.
 
@@ -1865,9 +1858,9 @@ def session_path_topk(spark: SparkSession, sf_dir: str,
     session contributes a fixed-size path, not an unbounded row).
 
     Scale: one user-keyed window pass, one (user, session) aggregation
-    whose state is capped by max_steps after truncation, and a
+    whose state is capped by 12 steps after truncation, and a
     path-keyed count whose key space is bounded by |event_types|^
-    max_steps in theory but by observed path diversity in practice;
+    12 in theory but by observed path diversity in practice;
     top-k is TakeOrdered, no global sort.
     """
     ev = load_table(spark, sf_dir, "events")
@@ -1879,7 +1872,7 @@ def session_path_topk(spark: SparkSession, sf_dir: str,
     ).select(
         "user_id", "ts", "event_id", "event_type",
         F.sum(
-            (F.coalesce(F.col("gap"), F.lit(0)) > gap_minutes * 60)
+            (F.coalesce(F.col("gap"), F.lit(0)) > 30 * 60)
             .cast("long")
         ).over(w).alias("session_id"),
     )
@@ -1887,7 +1880,7 @@ def session_path_topk(spark: SparkSession, sf_dir: str,
         "ts", "event_id")
     ranked = stepped.withColumn("rn", F.row_number().over(ws))
     # collect_list skips NULLs, so the aggregation state holds at most
-    # max_steps structs per session REGARDLESS of session length — the
+    # 12 structs per session REGARDLESS of session length — the
     # truncation happens before the collect, not after
     paths = (
         ranked.groupBy("user_id", "session_id")
@@ -1896,7 +1889,7 @@ def session_path_topk(spark: SparkSession, sf_dir: str,
                 ">",
                 F.transform(
                     F.sort_array(F.collect_list(
-                        F.when(F.col("rn") <= max_steps,
+                        F.when(F.col("rn") <= 12,
                                F.struct("ts", "event_id", "event_type")))),
                     lambda s: s["event_type"],
                 ),
@@ -1912,12 +1905,11 @@ def session_path_topk(spark: SparkSession, sf_dir: str,
             F.max("len").cast("long").alias("max_len"),
         )
         .orderBy(F.desc("n_sessions"), F.asc("path"))
-        .limit(k)
+        .limit(50)
     )
 
 
-def attribution_linear_credit(spark: SparkSession, sf_dir: str,
-                              lookback_days: int = 7) -> DataFrame:
+def attribution_linear_credit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear multi-touch attribution: every non-purchase touch of the
     converting user inside the lookback window before a 'purchase'
     event shares the conversion credit equally — the fairness-spread
@@ -1952,7 +1944,7 @@ def attribution_linear_credit(spark: SparkSession, sf_dir: str,
         F.col("event_id").alias("conv_id"),
     )
     touch_src = ev.where(F.col("event_type") != "purchase")
-    lb = F.lit(lookback_days * 86400 * 1000000)
+    lb = F.lit(7 * 86400 * 1000000)
     # explicit aliases: both sides share the ev lineage, and unaliased
     # F.col() can silently resolve through the wrong parent (classic
     # self-join trap — this bug shipped as an all-'(none)' table once)
@@ -2065,8 +2057,7 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def forecast_backtest_snaive(spark: SparkSession, sf_dir: str,
-                             season: int = 7) -> DataFrame:
+def forecast_backtest_snaive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal-naive forecast backtest: predict each day's count with the
     value one season (7 days) earlier, score MAE / MAPE / bias per
     event type — the evaluation floor every real forecast
@@ -2092,7 +2083,7 @@ def forecast_backtest_snaive(spark: SparkSession, sf_dir: str,
     a, b = daily.alias("a"), daily.alias("b")
     scored = (
         a.join(b, (F.col("a.event_type") == F.col("b.event_type"))
-               & (F.col("b.d") == F.col("a.d") - season))
+               & (F.col("b.d") == F.col("a.d") - 7))
         .select(
             F.col("a.event_type").alias("event_type"),
             (F.col("a.n") - F.col("b.n")).alias("err"),
@@ -2188,8 +2179,7 @@ def runs_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def session_transition_entropy(spark: SparkSession, sf_dir: str,
-                               gap_minutes: int = 30) -> DataFrame:
+def session_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Markov transition entropy of user journeys: for each event type,
     the Shannon entropy of its NEXT-event distribution inside sessions,
     plus the stationary-weighted entropy rate — how predictable the
@@ -2213,7 +2203,7 @@ def session_transition_entropy(spark: SparkSession, sf_dir: str,
          - wall_epoch_secs(F.lag("ts").over(w))).alias("gap"),
     ).select(
         "user_id", "ts", "event_id", "event_type",
-        F.sum((F.coalesce(F.col("gap"), F.lit(0)) > gap_minutes * 60)
+        F.sum((F.coalesce(F.col("gap"), F.lit(0)) > 30 * 60)
               .cast("long")).over(w).alias("session_id"),
     )
     ws = Window.partitionBy("user_id", "session_id").orderBy(
@@ -2258,9 +2248,7 @@ def session_transition_entropy(spark: SparkSession, sf_dir: str,
     )
 
 
-def markov_absorption_steps(spark: SparkSession, sf_dir: str,
-                            gap_minutes: int = 30,
-                            n_iter: int = 12) -> DataFrame:
+def markov_absorption_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Absorbing-chain analysis of user journeys: treating 'purchase'
     and session-end ('END') as absorbing states, the expected number of
     steps to absorption and the probability of absorbing in PURCHASE
@@ -2272,7 +2260,7 @@ def markov_absorption_steps(spark: SparkSession, sf_dir: str,
 
     Semantics: the standard absorbing-chain fundamental-matrix
     quantities v = (I-Q)^-1·1 and b = (I-Q)^-1·R, computed by
-    ``n_iter`` FIXED truncated value iterations v <- 1 + Q·v,
+    12 FIXED truncated value iterations v <- 1 + Q·v,
     p <- R_purchase + Q·p (exact for the tail the iteration reaches;
     both engines run the identical schedule, the LPA fixed-round
     precedent). Each iterate stays exact: v/p live in integer
@@ -2282,7 +2270,7 @@ def markov_absorption_steps(spark: SparkSession, sf_dir: str,
 
     Scale shape: sessionisation is the portable lag/cumsum
     formulation; ONE transition aggregation over the data; all
-    ``n_iter`` iterations run on the |event_types|^2-bounded count
+    12 iterations run on the |event_types|^2-bounded count
     matrix (metadata-sized at any corpus scale), localCheckpoint'ed
     per round like kmeans_centroids.
     """
@@ -2294,7 +2282,7 @@ def markov_absorption_steps(spark: SparkSession, sf_dir: str,
          - wall_epoch_secs(F.lag("ts").over(w))).alias("gap"),
     ).select(
         "user_id", "ts", "event_id", "event_type",
-        F.sum((F.coalesce(F.col("gap"), F.lit(0)) > gap_minutes * 60)
+        F.sum((F.coalesce(F.col("gap"), F.lit(0)) > 30 * 60)
               .cast("long")).over(w).alias("session_id"),
     )
     ws = Window.partitionBy("user_id", "session_id").orderBy(
@@ -2321,7 +2309,7 @@ def markov_absorption_steps(spark: SparkSession, sf_dir: str,
         F.lit(0).cast("long").alias("v_e6"),
         F.lit(0).cast("long").alias("p_e6"),
     ).localCheckpoint()
-    for _ in range(n_iter):
+    for _ in range(12):
         j = trans.join(F.broadcast(state),
                        trans["to_type"] == state["s"], "left")
         folded = (
@@ -2353,8 +2341,7 @@ def markov_absorption_steps(spark: SparkSession, sf_dir: str,
     )
 
 
-def events_residual_anomaly(spark: SparkSession, sf_dir: str,
-                            season: int = 7, z_cut: int = 2) -> DataFrame:
+def events_residual_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal-adjusted anomaly detection: z-score the RESIDUALS of
     the seasonal-naive forecast (n_t − n_{t−7}) instead of the raw
     counts — `events_anomaly_zscore` flags every Saturday of a weekly-
@@ -2372,6 +2359,7 @@ def events_residual_anomaly(spark: SparkSession, sf_dir: str,
 
     Scale: bounded (type, day) grid self-join on exact day keys.
     """
+    z_cut = 2
     ev = load_table(spark, sf_dir, "events")
     day = F.datediff(F.col("ts").cast("date"),
                      F.lit("2024-01-01").cast("date"))
@@ -2383,7 +2371,7 @@ def events_residual_anomaly(spark: SparkSession, sf_dir: str,
     a, b = daily.alias("a"), daily.alias("b")
     resid = (
         a.join(b, (F.col("a.event_type") == F.col("b.event_type"))
-               & (F.col("b.d") == F.col("a.d") - season))
+               & (F.col("b.d") == F.col("a.d") - 7))
         .select(F.col("a.event_type").alias("event_type"),
                 F.col("a.d").alias("d"),
                 (F.col("a.n") - F.col("b.n")).alias("r"))
@@ -2484,8 +2472,7 @@ def dow_profile_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def rolling_distinct_users_hll(spark: SparkSession, sf_dir: str,
-                               window_days: int = 7) -> DataFrame:
+def rolling_distinct_users_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 7-day distinct active users per day via MERGEABLE
     portable HyperLogLog registers (Flajolet et al. 2007) — the
     sliding-distinct shape that exact COUNT(DISTINCT) cannot sustain at
@@ -2519,6 +2506,7 @@ def rolling_distinct_users_hll(spark: SparkSession, sf_dir: str,
     )
     from hadoop_mapreduce_spark.session import scoped_persist
 
+    window_days = 7
     ev = load_table(spark, sf_dir, "events")
     day = (wall_epoch_us("ts") / F.lit(86_400_000_000)).cast("long")
     # distinct BEFORE hashing: registers are max-aggregates, duplicate
@@ -2565,9 +2553,7 @@ def rolling_distinct_users_hll(spark: SparkSession, sf_dir: str,
     )
 
 
-def markov_attribution_removal(spark: SparkSession, sf_dir: str,
-                               gap_minutes: int = 30,
-                               n_iter: int = 12) -> DataFrame:
+def markov_attribution_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Markov removal-effect attribution (Anderl et al. 2014 — the
     data-driven alternative to last-touch/linear credit): model user
     journeys as a first-order chain with a synthetic START state,
@@ -2583,7 +2569,7 @@ def markov_attribution_removal(spark: SparkSession, sf_dir: str,
 
     Exactness: the |scenarios| x |states|^2 matrix (scenarios = NONE +
     one per transient channel) is metadata-sized, and the absorption
-    probability is computed by ``n_iter`` FIXED truncated value
+    probability is computed by 12 FIXED truncated value
     iterations p <- (R + Q·p)/n_out in integer micro-units with
     DECIMAL(38,0)/HUGEINT products — the exact machinery of
     `markov_absorption_steps`, crossed with the scenario dimension so
@@ -2603,7 +2589,7 @@ def markov_attribution_removal(spark: SparkSession, sf_dir: str,
          - wall_epoch_secs(F.lag("ts").over(w))).alias("gap"),
     ).select(
         "user_id", "ts", "event_id", "event_type",
-        F.sum((F.coalesce(F.col("gap"), F.lit(0)) > gap_minutes * 60)
+        F.sum((F.coalesce(F.col("gap"), F.lit(0)) > 30 * 60)
               .cast("long")).over(w).alias("session_id"),
     )
     ws = Window.partitionBy("user_id", "session_id").orderBy(
@@ -2652,7 +2638,7 @@ def markov_attribution_removal(spark: SparkSession, sf_dir: str,
         F.col("scenario").alias("st_scn"),
         F.col("from_type").alias("st_s"),
         F.lit(0).cast("long").alias("p_e6")).localCheckpoint()
-    for _ in range(n_iter):
+    for _ in range(12):
         j = atn.join(
             F.broadcast(state),
             (F.col("scenario") == F.col("st_scn"))

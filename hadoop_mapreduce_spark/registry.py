@@ -3,8 +3,12 @@ with its ANSI-SQL (DuckDB) oracle for the driver's differential check.
 
 Contract (driver, __spark_entry__.py): each entry's Spark result and
 oracle SQL result are compared at sf0.01 on row-count + schema +
-order-insensitive value hash. Conventions that keep the two engines
-bit-comparable:
+order-insensitive value hash. A registered query is a pure function of
+``(spark, sf_dir)``: its constants (thresholds, k, rounds, widths) live
+once in its operator's body and once in its oracle, never as a default
+argument no caller sets (``test_operator_knobs`` pins the few defaulted
+parameters that tests or other operators still set). Conventions that
+keep the two engines bit-comparable:
 
   * every aggregate / computed column is aliased identically both sides;
   * integer outputs are cast to 64-bit on both sides (Spark int vs
@@ -3812,7 +3816,7 @@ FROM est
 # rightmost-min tie-break packed into one BIGINT key
 # (h*2^24 + (2^24-1-i)); the oracle replays the identical window min
 # over the identical 31-bit Karp-Rabin k-gram hashes (the hash the
-# paper rolls; exact-integer Horner shared via textstats._kr_expr).
+# paper rolls; the exact-integer Horner fold of textstats._kr_expr).
 ORACLE["winnowing_fingerprint"] = rf"""
 WITH c AS (
   SELECT doc_id,

@@ -666,7 +666,7 @@ def test_modularity_exact_algebra_and_bounds(spark):
             graph_modularity_audit(spark, SF_DIR).collect()}
     assert set(rows) == {"cc_star", "lpa_4"}
     edges = [(r.id1, r.id2) for r in dedup_minhash_lsh(
-        spark, SF_DIR, threshold=0.8).select("id1", "id2").collect()]
+        spark, SF_DIR).select("id1", "id2").collect()]
     m = len(edges)
     deg = defaultdict(int)
     for u, v in edges:

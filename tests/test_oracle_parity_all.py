@@ -1,11 +1,11 @@
 """Differential oracle parity for EVERY oracle-paired query, in-repo.
 
 The driver runs this comparison at sf0.01 per round; this test enforces
-the same contract at sf0.001, so an operator can't silently drift from
-its oracle between rounds. The bench.py headline queries, the near-dup
-graph family, the n-gram-set kernel queries and the MinHash-LSH
-pipeline's consumers run in the default tier; every other query is in
-the deep tier (see conftest.py).
+the same contract at sf0.001 for all registered queries in the default
+tier, so an operator can't silently drift from its oracle between
+rounds. Each case releases the scoped caches its query persisted, as
+tools/oracle_check.py and bench.py do, so caches do not pile up across
+the registry in one JVM.
 Queries registered without SQL (approximate/stateful) are exercised
 rows-only: they must execute and return a well-formed result.
 
@@ -14,14 +14,20 @@ order keys in the registry (ORDER_KEYS), and the declared key tuple must
 be unique across the Spark rows, so the declared order is total and
 the ordered comparison cannot trip on ties. Queries without declared
 keys (single-row aggregates) are compared as multisets.
+
+A registered query is a function of (spark, sf_dir) only: its constants
+live in its operator body and in its oracle. ``test_operator_knobs``
+pins the few defaulted operator parameters that some caller still sets.
 """
 
 from __future__ import annotations
 
+import inspect
+
 import pytest
 
-from bench import HEADLINE
 from hadoop_mapreduce_spark.registry import ORACLE, ORDER_KEYS, QUERIES
+from hadoop_mapreduce_spark.session import release_caches
 from tests.conftest import SF_DIR
 
 
@@ -56,45 +62,15 @@ def _assert_no_decimal(rows, side, name):
                 "or a bit-stable double instead")
 
 
-# The near-dup graph family built on the dedup.py graph kernels
-# (star-CC, degrees, lpa_labels, triangles) runs in the default tier
-# beside the headline queries.
-GRAPH_KERNEL_QUERIES = {
-    "dedup_connected_components", "er_survivorship_golden",
-    "label_propagation_communities", "graph_modularity_audit",
-    "triangle_count_dedup_graph", "graph_triangle_count",
-    "graph_degree_assortativity", "graph_rich_club",
-    "kcore_dedup_graph", "pagerank_dedup_graph",
-}
-# The queries whose Spark plan moved onto the n-gram-set kernels
-# (explode_ngram_set, shingle_pair_counts, the portable Bloom filter)
-# also run in the default tier.
-GRAM_KERNEL_QUERIES = {
-    "dup_ngram_rate", "source_overlap_matrix", "source_novelty_attribution",
-    "memorization_novelty", "hash_width_collision_audit",
-    "dedup_ngram_jaccard", "dedup_containment", "dedup_containment_prefix",
-    "minhash_bbit_estimate", "minhash_accuracy_audit", "lsh_band_tuning",
-    "dedup_threshold_sweep", "dedup_shingle_size_sweep",
-    "cross_source_duplication_matrix", "pipeline_curation",
-    "pipeline_pretrain_scale", "bloom_join_prefilter_audit",
-}
-# The remaining consumers of the MinHash-LSH pipeline (dedup.py's
-# shingle/signature/banding/verify kernels and dedup_minhash_lsh's
-# persisted pairs) also run in the default tier.
-LSH_PIPELINE_QUERIES = {
-    "dedup_keep_best", "dedup_incremental", "dedup_jaccard_prefix",
-    "dedup_cluster_size_histogram", "neardup_label_conflict",
-    "dedup_chain_audit", "dedup_token_savings", "decontaminate_fuzzy",
-    "pipeline_target_select",
-}
-DEFAULT_TIER = (set(HEADLINE) | GRAPH_KERNEL_QUERIES | GRAM_KERNEL_QUERIES
-                | LSH_PIPELINE_QUERIES)
-
-
-@pytest.mark.parametrize("name", [
-    pytest.param(name, marks=() if name in DEFAULT_TIER else pytest.mark.deep)
-    for name in sorted(QUERIES)])
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, duck, name):
+    try:
+        _check_query(spark, duck, name)
+    finally:
+        release_caches()
+
+
+def _check_query(spark, duck, name):
     df = QUERIES[name](spark, SF_DIR)
     got_rows = df.collect()
     keys = ORDER_KEYS[name]
@@ -126,3 +102,68 @@ def test_total_order_check_trips_on_ties(spark):
     _assert_total_order(df.collect(), df.columns, ("v",), "distinct")
     with pytest.raises(AssertionError, match="ties on"):
         _assert_total_order(df.collect(), df.columns, ("k DESC",), "tied")
+
+
+# Every defaulted parameter of a registered operator, as (query,
+# parameter). Each is set by some caller other than the registry —
+# mostly a test that needs a value the registered one cannot show on a
+# fixture; ann_pq_adc's by ann_pq_rerank and dedup_ngram_jaccard's
+# threshold by its 0.5 and 0.8 callers. The m_bits Bloom sizes stay
+# knobs. A new default must be added here on purpose.
+OPERATOR_KNOBS = {
+    ("ann_dim_truncation_audit", "k"),
+    ("ann_dim_truncation_audit", "keep_dims"),
+    ("ann_dim_truncation_audit", "n_queries"),
+    ("ann_pq_adc", "k"),
+    ("ann_pq_adc", "m"),
+    ("ann_pq_adc", "n_codes"),
+    ("bloom_decontaminate", "m_bits"),
+    ("bloom_join_prefilter_audit", "m_bits"),
+    ("bpe_merge_step", "k"),
+    ("decontaminate_semantic", "threshold"),
+    ("dedup_embedding_cosine", "threshold"),
+    ("dedup_embedding_lsh", "threshold"),
+    ("dedup_ngram_jaccard", "threshold"),
+    ("dedup_span_chunks", "chunk_tokens"),
+    ("doc_chunking", "chunk_tokens"),
+    ("doc_chunking", "overlap"),
+    ("events_lttb_downsample", "n_out"),
+    ("frame_sample", "every"),
+    ("heavy_hitters_cms", "k"),
+    ("image_dhash_neardup", "max_hamming"),
+    ("inverted_index_topk", "k_postings"),
+    ("inverted_index_topk", "k_terms"),
+    ("jsd_lang_divergence", "langs"),
+    ("kneser_ney_quality", "k"),
+    ("knn_join_lsh", "k"),
+    ("lateral_topk_orders", "k"),
+    ("mmr_diversified_topk", "k"),
+    ("mmr_diversified_topk", "lam"),
+    ("mmr_diversified_topk", "pool"),
+    ("pagerank_dedup_graph", "k"),
+    ("pipeline_pretrain_scale", "m_bits"),
+    ("quality_classifier_train", "dim"),
+    ("quality_classifier_train", "lr"),
+    ("quality_classifier_train", "n_iter"),
+    ("quality_classifier_train", "reg"),
+    ("salted_aggregate_events", "n_salts"),
+    ("sample_fixed_per_source", "cap"),
+    ("sample_weighted", "k"),
+    ("semdedup_ivf", "tau"),
+    ("seq_packing", "max_tokens"),
+    ("shard_layout_plan", "n_shards"),
+    ("token_entropy_quality", "k"),
+}
+
+
+def test_operator_knobs():
+    """The registered operators' defaulted parameters are exactly
+    OPERATOR_KNOBS: a default that no caller sets is a second copy of a
+    constant its oracle already spells out, free to drift from it."""
+    got = set()
+    for name, fn in QUERIES.items():
+        raw = getattr(fn, "__wrapped__", fn)
+        got |= {(name, p.name)
+                for p in inspect.signature(raw).parameters.values()
+                if p.default is not inspect.Parameter.empty}
+    assert got == OPERATOR_KNOBS
