@@ -24,10 +24,9 @@ from hadoop_mapreduce_spark.functions.timeutil import wall_epoch_us
 from hadoop_mapreduce_spark.sources.tables import load_table
 
 
-def doc_chunking(spark: SparkSession, sf_dir: str, chunk_tokens: int = 32,
-                 overlap: int = 8) -> DataFrame:
-    """Split each document into fixed-size token windows with overlap —
-    the standard pre-training / RAG chunker, fully JVM-side.
+def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Split each document into 32-token windows overlapping by 8 tokens
+    — the standard pre-training / RAG chunker, fully JVM-side.
 
     tokenize → sequence(1, n, stride) start positions → transform to
     slice(toks, start, chunk) → posexplode. No shuffle: chunk assembly
@@ -37,6 +36,7 @@ def doc_chunking(spark: SparkSession, sf_dir: str, chunk_tokens: int = 32,
     """
     from hadoop_mapreduce_spark.functions.text import normalize_text, tokenize
 
+    chunk_tokens, overlap = 32, 8
     stride = chunk_tokens - overlap
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
@@ -114,8 +114,8 @@ _PACK_SCHEMA = (
 )
 
 
-def seq_packing(spark: SparkSession, sf_dir: str, max_tokens: int = 512) -> DataFrame:
-    """Greedy sequence packing: bin documents into <= max_tokens context
+def seq_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Greedy sequence packing: bin documents into <= 512-token context
     windows, first-fit in deterministic doc_id order within each
     (source, hash-bucket) group.
 
@@ -138,12 +138,12 @@ def seq_packing(spark: SparkSession, sf_dir: str, max_tokens: int = 512) -> Data
     bounds the Arrow groups also bounds the oracle's recursion depth.
     The bucket hash switched from JVM-only xxhash64 to the repo's md5
     convention to make the grouping engine-portable. Invariant tests
-    (every pack <= max_tokens, each doc assigned once, deterministic
+    (every pack <= 512 tokens, each doc assigned once, deterministic
     output) remain in tests/test_curation.py.
     """
     import pandas as pd
 
-    n_buckets = 8
+    max_tokens, n_buckets = 512, 8
     docs = load_table(spark, sf_dir, "documents")
     sized = docs.select(
         "source",
@@ -661,9 +661,7 @@ def logreg_train_hashed(labeled: DataFrame, dim: int = 64,
     )
 
 
-def quality_classifier_train(spark: SparkSession, sf_dir: str,
-                             dim: int = 64, n_iter: int = 8,
-                             lr: float = 1.0, reg: float = 1e-4) -> DataFrame:
+def quality_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train the fastText-style quality classifier, distributed: logistic
     regression on hashed token features against weak heuristic labels —
     the standard "curated-vs-web" quality filter (GPT-3's WebText
@@ -681,7 +679,7 @@ def quality_classifier_train(spark: SparkSession, sf_dir: str,
     Features: hashing trick (md5(token) mod dim — doc_hash_embedding's
     convention), tf-normalised (count / doc tokens), plus a bias unit.
     Training: full-batch gradient descent, fixed lr, L2 on non-bias
-    weights, n_iter rounds. Each round is TWO partial-agg'd shuffles,
+    weights, 8 rounds. Each round is TWO partial-agg'd shuffles,
     both bounded: (1) margins — the (doc, bucket) cell table joins the
     dim-row weight relation and folds per doc; (2) gradient — per-doc
     residuals join back to cells and fold per bucket (dim rows out).
@@ -727,8 +725,7 @@ def quality_classifier_train(spark: SparkSession, sf_dir: str,
         .groupBy("doc_id", "text", "tk").agg(F.count(F.lit(1)).alias("c"))
     labeled = counts.groupBy("doc_id", "text").agg(
         (F.max("c") / F.sum("c") <= 0.1).cast("double").alias("y"))
-    return logreg_train_hashed(labeled, dim=dim, n_iter=n_iter,
-                               lr=lr, reg=reg)
+    return logreg_train_hashed(labeled, dim=64, n_iter=8, lr=1.0, reg=1e-4)
 
 
 

@@ -205,7 +205,7 @@ def dsir_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     log-weight; the md5 bucketing matches the DuckDB oracle bit-for-bit.
     """
     docs = load_table(spark, sf_dir, "documents")
-    lw = dsir_log_weights(docs, bench_mod=20)
+    lw = dsir_log_weights(docs)
     return (
         lw.groupBy("source")
         .agg(
@@ -216,16 +216,16 @@ def dsir_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dsir_log_weights(docs: DataFrame, bench_mod: int = 20) -> DataFrame:
+def dsir_log_weights(docs: DataFrame) -> DataFrame:
     """Per-training-doc DSIR log importance weight (doc_id, source, lw)
     — core of :func:`dsir_importance_sample`, see there for the method
     and scale analysis."""
     toks = docs.select(
         "doc_id", "source", tokenize(normalize_text(F.col("text"))).alias("t"))
-    return dsir_log_weights_from_tokens(toks, bench_mod=bench_mod)
+    return dsir_log_weights_from_tokens(toks)
 
 
-def dsir_log_weights_from_tokens(toks: DataFrame, bench_mod: int = 20) -> DataFrame:
+def dsir_log_weights_from_tokens(toks: DataFrame) -> DataFrame:
     """:func:`dsir_log_weights` over a pre-tokenised (doc_id, source, t)
     relation — lets pipeline compositions share ONE tokenisation pass
     across stages (the dominant scan cost at corpus scale)."""
@@ -241,7 +241,7 @@ def dsir_log_weights_from_tokens(toks: DataFrame, bench_mod: int = 20) -> DataFr
     tok = scoped_persist(toks.select(
         "doc_id", "source", F.explode("t").alias("w"),
     ).select("doc_id", "source", (h60("w") % n_buckets).alias("f")))
-    is_bench = F.col("doc_id") % bench_mod == 0
+    is_bench = F.col("doc_id") % 20 == 0
     # model counts: one uniform feature-keyed aggregation each; both
     # collapse to <= n_buckets rows before any join
     ct = tok.where(is_bench).groupBy("f").agg(F.count(F.lit(1)).alias("ct"))
@@ -620,8 +620,7 @@ def sample_weighted(spark: SparkSession, sf_dir: str,
     )
 
 
-def bloom_decontaminate(spark: SparkSession, sf_dir: str,
-                        m_bits: int = 1 << 16) -> DataFrame:
+def bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination through a Bloom filter instead of the
     exact broadcast gram set (decontaminate_ngram's scale sibling).
 
@@ -659,6 +658,7 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str,
     its DuckDB twin are documented once, in ``functions/portable.py``.
     """
     n = 4
+    m_bits = 1 << 16
     docs = load_table(spark, sf_dir, "documents")
     is_bench = F.col("doc_id") % 20 == 0
     bm1 = bloom_bitmap(

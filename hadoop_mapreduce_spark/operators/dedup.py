@@ -528,13 +528,12 @@ def embedding_cosine_pairs(vectors: DataFrame, threshold: float) -> DataFrame:
     at 100 TB); parallelism = n_blocks*(n_blocks+1)/2 groups. The
     sub-quadratic path is dedup_embedding_lsh below.
     """
-    id_col = "vec_id"
     n_blocks = 4
     spark = vectors.sparkSession
     raw = vectors.select(
-        F.col(id_col).alias("id"),
+        F.col("vec_id").alias("id"),
         F.col("embedding").cast("array<double>").alias("v"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("blk"),
+        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_blocks)).cast("int").alias("blk"),
     )
     spine = spark.createDataFrame(
         [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
@@ -614,20 +613,18 @@ def embedding_cosine_cross_pairs(big: DataFrame, small: DataFrame,
     Flops O(|big| x |small| x d) are intrinsic to the exact answer; the
     sub-linear path is the SRP/IVF machinery in operators/similarity.py.
     """
-    id_col = "vec_id"
-    vec_col = "embedding"
     n_blocks = 8
     b = big.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").cast("array<double>").alias("v"),
         F.lit(0).alias("side"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("blk"),
+        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_blocks)).cast("int").alias("blk"),
     )
     spark = big.sparkSession
     spine = spark.range(n_blocks).select(F.col("id").cast("int").alias("blk"))
     s = small.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").cast("array<double>").alias("v"),
         F.lit(1).alias("side"),
     ).crossJoin(F.broadcast(spine))
     tagged = b.unionByName(s.select("id", "v", "side", "blk"))
@@ -711,8 +708,6 @@ def srp_signatures(vectors: DataFrame, n_bits: int = 16) -> DataFrame:
     """
     import numpy as np
 
-    id_col = "vec_id"
-    vec_col = "embedding"
     schema = "id long, " + ", ".join(f"b{i} int" for i in range(n_bits))
 
     def sign(batches):
@@ -722,16 +717,16 @@ def srp_signatures(vectors: DataFrame, n_bits: int = 16) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+            mat = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
             if planes is None:
                 planes = _srp_planes(n_bits, mat.shape[1])
             bits = (mat @ planes.T) > 0
-            out = {"id": pdf[id_col].to_numpy()}
+            out = {"id": pdf["vec_id"].to_numpy()}
             for i in range(n_bits):
                 out[f"b{i}"] = bits[:, i].astype("int32")
             yield pd.DataFrame(out)
 
-    return vectors.select(id_col, vec_col).mapInPandas(sign, schema)
+    return vectors.select("vec_id", "embedding").mapInPandas(sign, schema)
 
 
 def srp_bucket_rows(vectors: DataFrame) -> DataFrame:
@@ -751,8 +746,6 @@ def srp_bucket_rows(vectors: DataFrame) -> DataFrame:
 
     n_bits = 64
     bands = 16
-    id_col = "vec_id"
-    vec_col = "embedding"
     rows_per_band = n_bits // bands
 
     def bucketize(batches):
@@ -764,17 +757,17 @@ def srp_bucket_rows(vectors: DataFrame) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+            mat = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
             if planes is None:
                 planes = _srp_planes(n_bits, mat.shape[1])
             bits = ((mat @ planes.T) > 0).reshape(len(pdf), bands, rows_per_band)
             buckets = bits.astype(np.int64) @ weights + offsets[None, :]
             yield pd.DataFrame({
-                "id": np.repeat(pdf[id_col].to_numpy(), bands),
+                "id": np.repeat(pdf["vec_id"].to_numpy(), bands),
                 "bucket": buckets.reshape(-1),
             })
 
-    return vectors.select(id_col, vec_col).mapInPandas(
+    return vectors.select("vec_id", "embedding").mapInPandas(
         bucketize, "id long, bucket long")
 
 
@@ -1315,16 +1308,17 @@ def dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc and bounded by doc length.
     """
     docs = load_table(spark, sf_dir, "documents")
-    return repeated_span_table(docs, k=8)
+    return repeated_span_table(docs)
 
 
-def repeated_span_table(docs: DataFrame, k: int = 8) -> DataFrame:
+def repeated_span_table(docs: DataFrame) -> DataFrame:
     """Core of :func:`dedup_repeated_spans` over an arbitrary
     (doc_id, text) relation — see that docstring for semantics/plan."""
     from pyspark.sql import Window
 
     from hadoop_mapreduce_spark.functions.text import normalize_text, tokenize
 
+    k = 8
     toks = docs.select(
         "doc_id", tokenize(normalize_text(F.col("text"))).alias("t"),
     ).where(F.size("t") >= k)

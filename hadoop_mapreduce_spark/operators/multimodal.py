@@ -291,14 +291,14 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def frame_sample(spark: SparkSession, sf_dir: str, every: int = 2) -> DataFrame:
-    """Frame sampling pattern: keep every k-th decoded frame index — the
+def frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frame sampling pattern: keep every 2nd decoded frame index — the
     shape of video-frame extraction, driven by the REAL per-blob frame
     counts (GIFs in the fixture carry 1-5 frames). Decode emits one row
     per doc, so the kept indices are counted within the row: no
     shuffle."""
     frames = F.sequence(F.lit(0), F.col("n_frames") - 1)
-    kept = F.size(F.filter(frames, lambda i: i % every == 0))
+    kept = F.size(F.filter(frames, lambda i: i % 2 == 0))
     return multimodal_decode(spark, sf_dir).select(
         "doc_id",
         # coalesce keeps n_sampled non-nullable (n_frames is never NULL)

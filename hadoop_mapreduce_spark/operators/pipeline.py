@@ -186,8 +186,7 @@ def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pipeline_pretrain_scale(spark: SparkSession, sf_dir: str,
-                            m_bits: int = 1 << 16) -> DataFrame:
+def pipeline_pretrain_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The round-5 scale-path assembly: corpus-LM quality gate →
     sub-document span dedup (with text reconstruction) → Bloom-bitmap
     benchmark decontamination on the REBUILT text → per-source ledger.
@@ -220,6 +219,7 @@ def pipeline_pretrain_scale(spark: SparkSession, sf_dir: str,
 
     n = 4
     chunk_tokens = 8
+    m_bits = 1 << 16
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", "source",
@@ -412,9 +412,7 @@ def pipeline_target_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # --- stage 3: DSIR selection over remaining survivors
     lw = dsir_log_weights_from_tokens(
-        base.select("doc_id", "source", "t"),
-        bench_mod=bench_mod,
-    ).select("doc_id", "lw")
+        base.select("doc_id", "source", "t")).select("doc_id", "lw")
 
     flags = (
         surv1

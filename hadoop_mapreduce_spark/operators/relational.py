@@ -2236,11 +2236,10 @@ def er_survivorship_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def bloom_join_prefilter_audit(spark: SparkSession, sf_dir: str,
-                               m_bits: int = 1 << 14) -> DataFrame:
+def bloom_join_prefilter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-prefiltered semi-join audit — the row-level runtime-filter
     decision (Spark's own injected bloom filters, Exadata/Snowflake
-    join pruning) measured exactly: build an m_bits Bloom bitmap over
+    join pruning) measured exactly: build a 2^14-bit Bloom bitmap over
     the BUILDING-segment customers' keys, probe EVERY order against it, and
     report per order-priority how many probe rows the bitmap passes vs
     the exact semi-join truth — the false-positive rate and scan-
@@ -2268,6 +2267,7 @@ def bloom_join_prefilter_audit(spark: SparkSession, sf_dir: str,
         bloom_hit,
     )
 
+    m_bits = 1 << 14
     cust = load_table(spark, sf_dir, "customer").where(
         F.col("c_mktsegment") == "BUILDING").select("c_custkey")
     bitmap = bloom_bitmap(cust, F.col("c_custkey").cast("string"), m_bits)

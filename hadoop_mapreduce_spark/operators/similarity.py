@@ -31,13 +31,11 @@ def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int = 10) -> DataFram
     the scoring pass is a broadcast nested-loop join that never shuffles
     the big side, and the per-query top-k is a window over qid.
     """
-    id_col = "vec_id"
-    vec_col = "embedding"
     q = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     v = vectors.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec")
+        F.col("vec_id").alias("nid"), F.col("embedding").alias("nvec")
     )
     scored = (
         v.crossJoin(F.broadcast(q))
@@ -101,14 +99,12 @@ def kmeans_centroids(vectors: DataFrame, n_lists: int = 16,
     lineage, the same bounded-iteration pattern as
     dedup.connected_components_star.
     """
-    id_col = "vec_id"
-    vec_col = "embedding"
-    w = Window.partitionBy("bucket").orderBy(id_col)
+    w = Window.partitionBy("bucket").orderBy("vec_id")
     centroids = (
-        vectors.withColumn("bucket", F.pmod(F.crc32(F.col(id_col).cast("string")), F.lit(n_lists)))
+        vectors.withColumn("bucket", F.pmod(F.crc32(F.col("vec_id").cast("string")), F.lit(n_lists)))
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
-        .select(F.col("bucket").alias("list_id"), F.col(vec_col).alias("cvec"))
+        .select(F.col("bucket").alias("list_id"), F.col("embedding").alias("cvec"))
         .localCheckpoint()
     )
     best = F.max_by(
@@ -117,14 +113,14 @@ def kmeans_centroids(vectors: DataFrame, n_lists: int = 16,
         assigned = (
             vectors.crossJoin(F.broadcast(centroids))
             .select(
-                id_col, vec_col, "list_id",
-                cosine_similarity(F.col(vec_col), F.col("cvec")).alias("csim"),
+                "vec_id", "embedding", "list_id",
+                cosine_similarity(F.col("embedding"), F.col("cvec")).alias("csim"),
             )
-            .groupBy(id_col)
-            .agg(best.alias("list_id"), F.any_value(vec_col).alias(vec_col))
+            .groupBy("vec_id")
+            .agg(best.alias("list_id"), F.any_value("embedding").alias("embedding"))
         )
         means = (
-            assigned.select("list_id", F.posexplode(vec_col).alias("pos", "x"))
+            assigned.select("list_id", F.posexplode("embedding").alias("pos", "x"))
             .groupBy("list_id", "pos")
             .agg(F.avg("x").alias("m"))
             .groupBy("list_id")
@@ -148,8 +144,6 @@ def ivf_assign(vectors: DataFrame, n_lists: int = 16) -> tuple[DataFrame, DataFr
     Returns (centroids, assignments): every vector is assigned to its
     max-cosine centroid via one broadcast pass over the data.
     """
-    id_col = "vec_id"
-    vec_col = "embedding"
     centroids = kmeans_centroids(vectors, n_lists=n_lists, n_iter=3)
     # argmax per vector as a max_by AGGREGATE, not a row_number window:
     # max_by is algebraic, so map-side partials reduce the N x n_lists
@@ -163,12 +157,12 @@ def ivf_assign(vectors: DataFrame, n_lists: int = 16) -> tuple[DataFrame, DataFr
     assigned = (
         vectors.crossJoin(F.broadcast(centroids))
         .select(
-            id_col, vec_col, "list_id",
-            cosine_similarity(F.col(vec_col), F.col("cvec")).alias("csim"),
+            "vec_id", "embedding", "list_id",
+            cosine_similarity(F.col("embedding"), F.col("cvec")).alias("csim"),
         )
-        .groupBy(id_col)
-        .agg(best.alias("list_id"), F.any_value(vec_col).alias(vec_col))
-        .select(id_col, vec_col, "list_id")
+        .groupBy("vec_id")
+        .agg(best.alias("list_id"), F.any_value("embedding").alias("embedding"))
+        .select("vec_id", "embedding", "list_id")
     )
     return centroids, assigned
 
@@ -211,8 +205,8 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def knn_join_lsh(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
-    """Approximate k-NN JOIN: every vector finds its top-k cosine
+def knn_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Approximate k-NN JOIN: every vector finds its top-5 cosine
     neighbours — the all-pairs primitive behind semantic dedup
     clustering and hard-negative mining, distinct from sim_search_topk
     (which broadcasts a small query set against the corpus; a kNN join
@@ -235,6 +229,7 @@ def knn_join_lsh(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     from hadoop_mapreduce_spark.functions.vectors import l2_norm
     from hadoop_mapreduce_spark.operators.dedup import srp_bucket_rows
 
+    k = 5
     emb = load_table(spark, sf_dir, "embeddings")
     # long band-bucket keys assembled inside the SRP numpy kernel — same
     # vector→bucket partitioning as the former per-bit-column + concat_ws
@@ -513,6 +508,10 @@ def _pq_subvectors(vectors: DataFrame, m: int, vec_col: str = "embedding") -> Da
     )
 
 
+# ann_pq_adc scores, and ann_pq_rerank re-ranks, the queries vec_id < 5
+PQ_N_QUERIES = 5
+
+
 def ann_pq_adc(spark: SparkSession, sf_dir: str, k: int = 10, m: int = 8,
                n_codes: int = 16) -> DataFrame:
     """Approximate top-k nearest neighbours via product quantization
@@ -551,7 +550,7 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str, k: int = 10, m: int = 8,
     )
     # per-query LUT: partial squared distance from the query's subvector
     # to every codebook cell — m * n_codes rows per query, broadcast
-    queries = _pq_subvectors(emb.where(F.col("vec_id") < 5), m) \
+    queries = _pq_subvectors(emb.where(F.col("vec_id") < PQ_N_QUERIES), m) \
         .withColumnRenamed("vec_id", "qid").withColumnRenamed("svec", "qsvec")
     lut = (
         queries.join(F.broadcast(codebook), "sub")
@@ -583,18 +582,17 @@ def ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall@k — a coarse quantizer rarely drops a true neighbour out of
     the top 50), while the exact pass restores true distance order
     among survivors. The re-rank join touches original vectors for
-    300·n_queries rows total — independent of N, so at 100 TB
+    300·PQ_N_QUERIES rows total — independent of N, so at 100 TB
     the full-precision data is read (point look-ups by id, a bucketed
     or indexed fetch) only for ~0.1% of candidates.
 
     Registered rows-only (the shortlist is still approximate); recall
     vs the exact oracle is asserted in tests and reported by bench.py.
     """
-    n_queries = 5
     emb = load_table(spark, sf_dir, "embeddings")
     short = ann_pq_adc(spark, sf_dir, k=300, m=16, n_codes=32).select(
         "qid", "nid")
-    queries = emb.where(F.col("vec_id") < n_queries).select(
+    queries = emb.where(F.col("vec_id") < PQ_N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
     exact = (
         emb.join(F.broadcast(short),
@@ -846,14 +844,12 @@ def semdedup_ivf(spark: SparkSession, sf_dir: str, tau: float = 0.5) -> DataFram
     )
 
 
-def mmr_diversified_topk(spark: SparkSession, sf_dir: str,
-                         k: int = 10, pool: int = 20,
-                         lam: float = 0.7) -> DataFrame:
+def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal Marginal Relevance (Carbonell & Goldstein 1998)
-    diversified re-ranking: from each query's exact top-``pool``
-    cosine candidates, greedily pick ``k`` maximising
-    lam*rel(d) - (1-lam)*max_{s in selected} sim(d, s) — the standard
-    redundancy-suppressing re-rank behind search result pages and RAG
+    diversified re-ranking: from each query's exact top-20 (``pool``)
+    cosine candidates, greedily pick ``k`` = 10 maximising
+    lam*rel(d) - (1-lam)*max_{s in selected} sim(d, s) at lam = 0.7 —
+    the standard redundancy-suppressing re-rank behind search result pages and RAG
     context assembly (pure top-k returns near-duplicates; MMR trades
     relevance for coverage).
 
@@ -875,6 +871,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str,
     """
     from hadoop_mapreduce_spark.functions.vectors import l2_norm
 
+    k, pool, lam = 10, 20, 0.7
     emb = load_table(spark, sf_dir, "embeddings")
     cands = cosine_topk(emb, emb.where(F.col("vec_id") < 5),
                         k=pool).select("qid", "nid", "score")
@@ -941,11 +938,10 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str,
 
 
 def ann_dim_truncation_audit(spark: SparkSession, sf_dir: str,
-                             n_queries: int = 50, k: int = 10,
-                             keep_dims: int = 32) -> DataFrame:
+                             n_queries: int = 50) -> DataFrame:
     """Matryoshka-style dimension-truncation audit: how much of each
-    query's exact top-k survives when embeddings are truncated to the
-    first keep_dims dimensions? Truncated prefixes are the standard
+    query's exact top-10 survives when embeddings are truncated to the
+    first 32 dimensions? Truncated prefixes are the standard
     cheap first-pass index (MRL-trained models make the prefix
     meaningful; this audit MEASURES whether yours does) — the output
     is per query the exact-vs-truncated top-1 ids and the top-k
@@ -953,16 +949,16 @@ def ann_dim_truncation_audit(spark: SparkSession, sf_dir: str,
 
     Scale shape: two broadcast-query scoring passes over the vector
     table (cosine_topk never shuffles the big side), then a qid-keyed
-    k-row aggregate — the audit costs two scans regardless of corpus
-    size, and the truncated pass reads keep_dims/d of the vector bytes
+    10-row aggregate — the audit costs two scans regardless of corpus
+    size, and the truncated pass reads 32/d of the vector bytes
     (with columnar layouts the prefix slice prunes at the scan).
     """
     emb = load_table(spark, sf_dir, "embeddings")
     cut = F.col("vec_id") < n_queries
     half = emb.select(
-        "vec_id", F.slice("embedding", 1, keep_dims).alias("embedding"))
-    full_top = cosine_topk(emb, emb.where(cut), k=k)
-    half_top = cosine_topk(half, half.where(cut), k=k)
+        "vec_id", F.slice("embedding", 1, 32).alias("embedding"))
+    full_top = cosine_topk(emb, emb.where(cut), k=10)
+    half_top = cosine_topk(half, half.where(cut), k=10)
 
     def _roll(df, tag):
         return df.groupBy("qid").agg(

@@ -89,9 +89,9 @@ def recursive_monthly_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
-def lateral_topk_orders(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
-    """Each BUILDING-segment customer's top-k orders by price via a
-    correlated LATERAL subquery (ORDER BY ... LIMIT k inside the
+def lateral_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each BUILDING-segment customer's top-3 orders by price via a
+    correlated LATERAL subquery (ORDER BY ... LIMIT 3 inside the
     lateral) — the SQL-standard spelling of per-key top-k. Catalyst
     decorrelates it into a ranked window over one exchange on the
     correlation key, i.e. the same physical plan window_topk_per_group
@@ -104,12 +104,12 @@ def lateral_topk_orders(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFra
     """
     _view(spark, sf_dir, "orders", "v_orders")
     _view(spark, sf_dir, "customer", "v_customer")
-    return spark.sql(f"""
+    return spark.sql("""
       SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
       FROM v_customer c,
       LATERAL (SELECT o_orderkey, o_totalprice FROM v_orders
                WHERE o_custkey = c.c_custkey
-               ORDER BY o_totalprice DESC, o_orderkey LIMIT {k}) o
+               ORDER BY o_totalprice DESC, o_orderkey LIMIT 3) o
       WHERE c.c_mktsegment = 'BUILDING'
     """)
 

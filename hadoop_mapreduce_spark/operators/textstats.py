@@ -209,7 +209,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def heavy_hitters_cms(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
+def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy hitters via a count-min sketch built as DataFrame ops.
 
     Sketch build: each token occurrence updates `depth` counters at
@@ -218,7 +218,7 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFram
     regardless of corpus size (the point of a sketch at 100 TB: the
     aggregation state is O(1), not O(vocabulary)).  Estimate for a term
     = min over its depth cells (classic CMS upper-bound estimate,
-    overcounts on collision, never undercounts).  The top-k candidates
+    overcounts on collision, never undercounts).  The top-20 candidates
     come from the distinct-term side joined against the sketch.
 
     Hash-paired since r7: the row-d cell index is h60("d:term") % 256
@@ -262,7 +262,7 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFram
     )
     return (
         est.orderBy(F.desc("est"), F.asc("term"))
-        .limit(k)
+        .limit(20)
         .select("term", F.col("est").cast("long").alias("est"))
     )
 
@@ -838,7 +838,7 @@ def token_entropy_quality(spark: SparkSession, sf_dir: str,
     )
 
 
-def bpe_merge_step(spark: SparkSession, sf_dir: str, k: int = 50) -> DataFrame:
+def bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One BPE tokenizer-training step, distributed: count adjacent
     character-pair frequencies across the corpus and rank the merge
     candidates — the computation Sennrich-style BPE repeats per merge
@@ -852,7 +852,7 @@ def bpe_merge_step(spark: SparkSession, sf_dir: str, k: int = 50) -> DataFrame:
     regardless of corpus size); the char-pair expansion then explodes
     each distinct word's <= len-1 pairs — O(vocab · word_len) rows at
     100 TB, not O(corpus tokens). Shuffle #2 aggregates pair weights;
-    top-k via TakeOrderedAndProject. All expansion is codegen'd
+    top-50 via TakeOrderedAndProject. All expansion is codegen'd
     (sequence/transform/substring) — no Python in the pipeline.
     """
     docs = load_table(spark, sf_dir, "documents")
@@ -871,15 +871,15 @@ def bpe_merge_step(spark: SparkSession, sf_dir: str, k: int = 50) -> DataFrame:
     )
     return (
         pairs.groupBy("pair").agg(F.sum("wc").alias("cnt"))
-        .orderBy(F.desc("cnt"), F.asc("pair")).limit(k)
+        .orderBy(F.desc("cnt"), F.asc("pair")).limit(50)
         .select("pair", F.col("cnt").cast("long").alias("cnt"))
     )
 
 
 def inverted_index_topk(spark: SparkSession, sf_dir: str,
-                        k_terms: int = 100, k_postings: int = 20) -> DataFrame:
+                        k_terms: int = 100) -> DataFrame:
     """Build the retrieval-side inverted index: per term, document
-    frequency, total term frequency, and the top-k postings serialized
+    frequency, total term frequency, and the top-20 postings serialized
     as a deterministic "doc:tf" string (ordered tf desc, doc_id asc —
     a total order, so the string is engine-portable; an array<struct>
     output would compare engine-specifically).
@@ -890,9 +890,9 @@ def inverted_index_topk(spark: SparkSession, sf_dir: str,
     Scale shape: one (term, doc) keyed shuffle with map-side partial
     counts; df/tf roll up from the same aggregate without a second
     exchange (same-key agg chain); the per-term posting cut is a
-    bounded window (rank <= k over term partitions — state is one heap
+    bounded window (rank <= 20 over term partitions — state is one heap
     per term, never a global sort); final top-terms via
-    TakeOrderedAndProject. Postings strings are O(k) per term — the
+    TakeOrderedAndProject. Postings strings are O(20) per term — the
     full posting lists never leave the shuffle, only the serialized
     heads do.
     """
@@ -909,7 +909,7 @@ def inverted_index_topk(spark: SparkSession, sf_dir: str,
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(
-                    F.when(F.col("rnk") <= k_postings,
+                    F.when(F.col("rnk") <= 20,
                            F.struct(F.col("rnk"), F.col("doc_id"),
                                     F.col("tf"))))),
                 lambda s: F.concat_ws(":", s["doc_id"].cast("string"),
@@ -953,7 +953,7 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def kneser_ney_quality(spark: SparkSession, sf_dir: str, k: int = 50) -> DataFrame:
+def kneser_ney_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated Kneser-Ney bigram LM quality filter — the standard
     smoothing for n-gram LMs (Kneser & Ney 1995; Chen & Goodman 1999)
     and the published rung above bigram_lm_quality's simple
@@ -978,7 +978,7 @@ def kneser_ney_quality(spark: SparkSession, sf_dir: str, k: int = 50) -> DataFra
     counts per w2, context totals + distinct-successor counts per w1,
     the global distinct-bigram total) all vocabulary-bounded broadcast
     relations. The per-bigram log-prob joins back on bg inside the one
-    exchange; one doc-keyed fold; TakeOrdered top-k.
+    exchange; one doc-keyed fold; TakeOrdered top-50.
     """
     from hadoop_mapreduce_spark.functions.text import ngrams_from_tokens
     from hadoop_mapreduce_spark.session import scoped_persist
@@ -1027,7 +1027,7 @@ def kneser_ney_quality(spark: SparkSession, sf_dir: str, k: int = 50) -> DataFra
         scored.select(
             "doc_id", F.col("nb").cast("long").alias("n_bigrams"),
             F.expr("CAST(round(score * 1e6) AS BIGINT)").alias("kn_lp_e6"))
-        .orderBy(F.asc("kn_lp_e6"), F.asc("doc_id")).limit(k)
+        .orderBy(F.asc("kn_lp_e6"), F.asc("doc_id")).limit(50)
     )
 
 

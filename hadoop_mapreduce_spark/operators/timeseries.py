@@ -235,10 +235,9 @@ def events_daily_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_lttb_downsample(spark: SparkSession, sf_dir: str,
-                           n_out: int = 24) -> DataFrame:
+def events_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Largest-Triangle-Three-Buckets downsampling of each event_type's
-    (ts, value) series to n_out visually-representative points —
+    (ts, value) series to n_out = 24 visually-representative points —
     the standard dashboarding reduction (Steinarsson 2013): per bucket,
     keep the point maximising the triangle area formed with the
     previously KEPT point and the next bucket's centroid.
@@ -273,6 +272,7 @@ def events_lttb_downsample(spark: SparkSession, sf_dir: str,
         F.expr("cast(round(value * 1000000.0, 0) as bigint)").alias("y"),
         F.col("event_id").cast("long").alias("event_id"),
     )
+    n_out = 24
     n_mid = n_out - 2  # interior bucket count
 
     def lttb(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -6,9 +6,9 @@ oracle SQL result are compared at sf0.01 on row-count + schema +
 order-insensitive value hash. A registered query is a pure function of
 ``(spark, sf_dir)``: its constants (thresholds, k, rounds, widths) live
 once in its operator's body and once in its oracle, never as a default
-argument no caller sets (``test_operator_knobs`` pins the few defaulted
-parameters that tests or other operators still set). Conventions that
-keep the two engines bit-comparable:
+argument that callers leave at its default (``test_operator_knobs`` pins
+the few defaulted parameters that tests or other operators set to other
+values). Conventions that keep the two engines bit-comparable:
 
   * every aggregate / computed column is aliased identically both sides;
   * integer outputs are cast to 64-bit on both sides (Spark int vs

@@ -15,7 +15,7 @@ from tests.conftest import SF_DIR
 
 
 def test_seq_packing_invariants(spark, duck):
-    packs = curation.seq_packing(spark, SF_DIR, max_tokens=512).collect()
+    packs = curation.seq_packing(spark, SF_DIR).collect()
     assert packs, "no packs produced"
     # feasibility: no pack exceeds the context budget
     assert all(r.pack_tokens <= 512 for r in packs)
@@ -35,18 +35,18 @@ def test_seq_packing_invariants(spark, duck):
 
 
 def test_seq_packing_deterministic(spark):
-    a = curation.seq_packing(spark, SF_DIR, max_tokens=512).collect()
-    b = curation.seq_packing(spark, SF_DIR, max_tokens=512).collect()
+    a = curation.seq_packing(spark, SF_DIR).collect()
+    b = curation.seq_packing(spark, SF_DIR).collect()
     assert a == b
 
 
 def test_doc_chunking_overlap_semantics(spark):
-    chunks = curation.doc_chunking(spark, SF_DIR, chunk_tokens=32, overlap=8)
+    chunks = curation.doc_chunking(spark, SF_DIR)
     rows = chunks.where(F.col("doc_id") == chunks.select(F.min("doc_id")).first()[0]).collect()
     assert rows, "no chunks for first doc"
-    # every chunk is at most chunk_tokens long, and consecutive chunks of
+    # every chunk is at most 32 tokens long, and consecutive chunks of
     # one document start stride (= 32 - 8 = 24) tokens apart: the first
-    # `overlap` tokens of chunk i+1 equal the last `overlap` of chunk i
+    # 8 (overlap) tokens of chunk i+1 equal the last 8 of chunk i
     # whenever chunk i is full
     assert all(r.chunk_len <= 32 for r in rows)
     for prev, nxt in zip(rows, rows[1:]):
@@ -177,9 +177,9 @@ def test_logreg_trainer_numpy_exact_and_monotone(spark):
     )
     from hadoop_mapreduce_spark.sources.tables import load_table
 
+    # the registered schedule, replayed by the numpy reference below
     dim, n_iter, lr, reg = 64, 8, 1.0, 1e-4
-    rows = quality_classifier_train(spark, SF_DIR, dim=dim, n_iter=n_iter,
-                                    lr=lr, reg=reg).collect()
+    rows = quality_classifier_train(spark, SF_DIR).collect()
     got_w = {r.b: r.weight for r in rows}
     got_loss = rows[0].log_loss
 

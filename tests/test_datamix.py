@@ -213,7 +213,7 @@ def test_dsir_favours_target_domain(spark):
         (2, "off", "banana apple mango papaya cherry grape"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    lw = {r.doc_id: r.lw for r in dsir_log_weights(docs, bench_mod=20).collect()}
+    lw = {r.doc_id: r.lw for r in dsir_log_weights(docs).collect()}
     assert set(lw) == {1, 2}
     assert lw[1] > 0 > lw[2]
 
@@ -346,13 +346,13 @@ def test_kneser_ney_scores_are_valid_logprobs(spark):
     from hadoop_mapreduce_spark.operators.textstats import kneser_ney_quality
     from tests.conftest import SF_DIR
 
-    rows = kneser_ney_quality(spark, SF_DIR, k=50).collect()
+    rows = kneser_ney_quality(spark, SF_DIR).collect()
     assert 0 < len(rows) <= 50
     assert all(r.kn_lp_e6 <= 0 for r in rows)
     assert all(r.n_bigrams >= 1 for r in rows)
     keys = [(r.kn_lp_e6, r.doc_id) for r in rows]
     assert keys == sorted(keys)
-    rows2 = kneser_ney_quality(spark, SF_DIR, k=50).collect()
+    rows2 = kneser_ney_quality(spark, SF_DIR).collect()
     assert [tuple(r) for r in rows] == [tuple(r) for r in rows2]
 
 

@@ -297,7 +297,7 @@ def test_repeated_spans_planted_passage(spark):
     d2 = "six seven " + passage + " eight nine ten eleven"  # P at pos 3..12
     docs = spark.createDataFrame([(1, d1), (2, d2)], "doc_id long, text string")
     got = [(r.doc_id, r.span_start, r.span_end, r.span_tokens)
-           for r in repeated_span_table(docs, k=8).collect()]
+           for r in repeated_span_table(docs).collect()]
     assert got == [(2, 3, 12, 10)]
 
 
@@ -309,7 +309,7 @@ def test_repeated_spans_within_doc_repeat(spark):
     run = "a1 a2 a3 a4 a5 a6 a7 a8"
     doc = run + " filler1 filler2 " + run      # repeat at pos 11..18
     docs = spark.createDataFrame([(7, doc)], "doc_id long, text string")
-    got = [(r.doc_id, r.span_start, r.span_end) for r in repeated_span_table(docs, k=8).collect()]
+    got = [(r.doc_id, r.span_start, r.span_end) for r in repeated_span_table(docs).collect()]
     assert got == [(7, 11, 18)]
 
 

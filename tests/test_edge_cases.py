@@ -59,8 +59,8 @@ def test_salted_aggregate_empty(spark):
 
 
 def test_bloom_with_no_benchmark_docs_flags_nothing(spark):
-    """A corpus whose id space contains no benchmark docs (doc_id %
-    bench_mod never 0) must produce an EMPTY bitmap and zero flags —
+    """A corpus whose id space contains no benchmark docs (doc_id % 20
+    never 0) must produce an EMPTY bitmap and zero flags —
     the element_at(map, word) NULL path, coalesced to a miss."""
     from unittest.mock import patch
 

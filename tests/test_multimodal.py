@@ -128,7 +128,7 @@ def test_multimodal_decode_full_table(spark):
 
 
 def test_frame_sample_counts(spark):
-    rows = frame_sample(spark, SF_DIR, every=2).collect()
+    rows = frame_sample(spark, SF_DIR).collect()
     # frames are 1 (bmp/png) or 1-5 (gif) -> sampled every 2nd: 1-3
     assert all(1 <= r.n_sampled <= 3 for r in rows)
 

@@ -124,7 +124,7 @@ def test_cms_heavy_hitters_never_undercount(spark):
     from hadoop_mapreduce_spark.sources.tables import load_table
     from tests.conftest import SF_DIR
 
-    est = {r.term: r.est for r in heavy_hitters_cms(spark, SF_DIR, k=20).collect()}
+    est = {r.term: r.est for r in heavy_hitters_cms(spark, SF_DIR).collect()}
     true = {
         r.term: r.cnt
         for r in load_table(spark, SF_DIR, "documents")

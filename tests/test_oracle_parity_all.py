@@ -105,52 +105,30 @@ def test_total_order_check_trips_on_ties(spark):
 
 
 # Every defaulted parameter of a registered operator, as (query,
-# parameter). Each is set by some caller other than the registry —
-# mostly a test that needs a value the registered one cannot show on a
-# fixture; ann_pq_adc's by ann_pq_rerank and dedup_ngram_jaccard's
-# threshold by its 0.5 and 0.8 callers. The m_bits Bloom sizes stay
-# knobs. A new default must be added here on purpose.
+# parameter). Each is set, to a value other than its default, by some
+# caller other than the registry: a test that needs a value the
+# registered one cannot show on a fixture, or (ann_pq_adc's k/m/n_codes,
+# dedup_ngram_jaccard's threshold) another operator. A parameter whose
+# callers only ever pass its default is not a knob: its value belongs in
+# the operator body. A new default must be added here on purpose.
 OPERATOR_KNOBS = {
-    ("ann_dim_truncation_audit", "k"),
-    ("ann_dim_truncation_audit", "keep_dims"),
     ("ann_dim_truncation_audit", "n_queries"),
     ("ann_pq_adc", "k"),
     ("ann_pq_adc", "m"),
     ("ann_pq_adc", "n_codes"),
-    ("bloom_decontaminate", "m_bits"),
-    ("bloom_join_prefilter_audit", "m_bits"),
-    ("bpe_merge_step", "k"),
     ("decontaminate_semantic", "threshold"),
     ("dedup_embedding_cosine", "threshold"),
     ("dedup_embedding_lsh", "threshold"),
     ("dedup_ngram_jaccard", "threshold"),
     ("dedup_span_chunks", "chunk_tokens"),
-    ("doc_chunking", "chunk_tokens"),
-    ("doc_chunking", "overlap"),
-    ("events_lttb_downsample", "n_out"),
-    ("frame_sample", "every"),
-    ("heavy_hitters_cms", "k"),
     ("image_dhash_neardup", "max_hamming"),
-    ("inverted_index_topk", "k_postings"),
     ("inverted_index_topk", "k_terms"),
     ("jsd_lang_divergence", "langs"),
-    ("kneser_ney_quality", "k"),
-    ("knn_join_lsh", "k"),
-    ("lateral_topk_orders", "k"),
-    ("mmr_diversified_topk", "k"),
-    ("mmr_diversified_topk", "lam"),
-    ("mmr_diversified_topk", "pool"),
     ("pagerank_dedup_graph", "k"),
-    ("pipeline_pretrain_scale", "m_bits"),
-    ("quality_classifier_train", "dim"),
-    ("quality_classifier_train", "lr"),
-    ("quality_classifier_train", "n_iter"),
-    ("quality_classifier_train", "reg"),
     ("salted_aggregate_events", "n_salts"),
     ("sample_fixed_per_source", "cap"),
     ("sample_weighted", "k"),
     ("semdedup_ivf", "tau"),
-    ("seq_packing", "max_tokens"),
     ("shard_layout_plan", "n_shards"),
     ("token_entropy_quality", "k"),
 }

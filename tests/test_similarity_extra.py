@@ -15,11 +15,11 @@ from hadoop_mapreduce_spark.operators.similarity import (
 from hadoop_mapreduce_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
 
-K = 5
+K = 5  # knn_join_lsh's k
 
 
 def test_knn_join_shape_invariants(spark):
-    rows = knn_join_lsh(spark, SF_DIR, k=K).collect()
+    rows = knn_join_lsh(spark, SF_DIR).collect()
     assert rows
     by_q: dict[int, list] = {}
     for r in rows:
@@ -46,7 +46,7 @@ def test_knn_join_recall_vs_exact(spark):
         (r.qid, r.nid)
         for r in cosine_topk(emb, emb, k=K).collect()
     }
-    approx_rows = knn_join_lsh(spark, SF_DIR, k=K).collect()
+    approx_rows = knn_join_lsh(spark, SF_DIR).collect()
     approx = {(r.qid, r.nid) for r in approx_rows}
     recall = len(approx & exact) / len(exact)
     assert recall >= 0.6, f"recall@{K} {recall:.3f} below design point"
@@ -60,8 +60,8 @@ def test_knn_join_recall_vs_exact(spark):
 
 
 def test_knn_join_deterministic(spark):
-    a = [tuple(r) for r in knn_join_lsh(spark, SF_DIR, k=K).collect()]
-    b = [tuple(r) for r in knn_join_lsh(spark, SF_DIR, k=K).collect()]
+    a = [tuple(r) for r in knn_join_lsh(spark, SF_DIR).collect()]
+    b = [tuple(r) for r in knn_join_lsh(spark, SF_DIR).collect()]
     assert a == b
 
 
@@ -265,9 +265,9 @@ def test_mmr_matches_numpy_reference_and_diversifies(spark):
     )
     from tests.conftest import SF_DIR
 
+    # the registered parameters, replayed by the numpy reference below
     lam, pool, k = 0.7, 20, 10
-    got = mmr_diversified_topk(spark, SF_DIR, lam=lam, pool=pool,
-                               k=k).collect()
+    got = mmr_diversified_topk(spark, SF_DIR).collect()
     emb = {r.vec_id: np.asarray(r.embedding, dtype=np.float64)
            for r in spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
            .collect()}
@@ -320,8 +320,7 @@ def test_dim_truncation_audit_bounds(spark):
         ann_dim_truncation_audit,
     )
 
-    rows = ann_dim_truncation_audit(spark, SF_DIR, n_queries=20, k=10,
-                                    keep_dims=32).collect()
+    rows = ann_dim_truncation_audit(spark, SF_DIR, n_queries=20).collect()
     assert len(rows) == 20
     for r in rows:
         assert 0 <= r.overlap_at_k <= 10

@@ -26,7 +26,7 @@ def test_recursive_spine_gap_free(spark):
 
 
 def test_lateral_topk_matches_window(spark):
-    lat = lateral_topk_orders(spark, SF_DIR, k=3)
+    lat = lateral_topk_orders(spark, SF_DIR)
     rows = lat.collect()
     per_cust = {}
     for r in rows:

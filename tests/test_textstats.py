@@ -212,7 +212,7 @@ def test_bpe_merge_step_invariants(spark):
 
     from hadoop_mapreduce_spark.operators.textstats import bpe_merge_step
 
-    rows = bpe_merge_step(spark, SF_DIR, k=50).collect()
+    rows = bpe_merge_step(spark, SF_DIR).collect()
     assert len(rows) == 50
     assert all(re.fullmatch(r"\S \S", r.pair) for r in rows)
     keys = [(-r.cnt, r.pair) for r in rows]
@@ -221,14 +221,14 @@ def test_bpe_merge_step_invariants(spark):
 
 
 def test_inverted_index_postings_wellformed(spark):
-    """Postings strings parse as doc:tf entries, hold at most
-    k_postings entries in tf-desc order, cover df when df <= k, and
+    """Postings strings parse as doc:tf entries, hold at most 20
+    entries in tf-desc order, cover df when df <= 20, and
     their tf mass never exceeds the term's total."""
     from hadoop_mapreduce_spark.operators.textstats import (
         inverted_index_topk,
     )
 
-    rows = inverted_index_topk(spark, SF_DIR, k_terms=50, k_postings=20).collect()
+    rows = inverted_index_topk(spark, SF_DIR, k_terms=50).collect()
     assert rows
     for r in rows:
         entries = [tuple(map(int, e.split(":"))) for e in r.postings.split(",")]

@@ -110,7 +110,7 @@ def test_hierarchical_rollup_daily_matches_direct(spark):
 
 
 def test_lttb_invariants(spark):
-    """LTTB contract: exactly n_out points per series (inputs are
+    """LTTB contract: exactly 24 points per series (inputs are
     longer), endpoints kept verbatim, output a time-ordered subsequence
     of the input, deterministic across runs."""
     from pyspark.sql import functions as F
@@ -120,7 +120,7 @@ def test_lttb_invariants(spark):
     )
     from hadoop_mapreduce_spark.sources.tables import load_table
 
-    out = events_lttb_downsample(spark, SF_DIR, n_out=24).collect()
+    out = events_lttb_downsample(spark, SF_DIR).collect()
     ev = load_table(spark, SF_DIR, "events").select(
         "event_type",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("x"),
@@ -141,7 +141,7 @@ def test_lttb_invariants(spark):
         assert xs == sorted(xs)
         ids = {p[1] for p in pts}
         assert all(r.event_id in ids for r in rows)
-    out2 = events_lttb_downsample(spark, SF_DIR, n_out=24).collect()
+    out2 = events_lttb_downsample(spark, SF_DIR).collect()
     assert [tuple(r) for r in out] == [tuple(r) for r in out2]
 
 
