@@ -34,7 +34,13 @@ the shared conventions, defined once per engine:
     bit is never used (1.6% of the bitmap). A key hits when all its
     probes are set; a word that no probe set is a miss.
 
-The tokenizer pair lives in ``functions/text.py``. Hashes over other hex
+  * the curation splits of a document id. The benchmark carve
+    ``is_bench`` holds out 1 id in 20 (``id % 20 == 0``); the
+    train/val/test split ``doc_split`` buckets ``h60`` of the id's
+    decimal string mod 100 into val (< 10), test (< 20) and train.
+
+The tokenizer pair lives in ``functions/text.py``; the quality gate's
+pair in ``functions/quality.py``. Hashes over other hex
 widths (ring points, synthetic word picks) are different conventions and
 stay at their call sites.
 """
@@ -64,6 +70,31 @@ def h60(col: Column | str, seed: int | str | None = None) -> Column:
 def h60_sql(expr: str) -> str:
     """DuckDB twin of :func:`h60` over a VARCHAR expression."""
     return f"('0x' || substr(md5({expr}), 1, 15))::UBIGINT::BIGINT"
+
+
+def is_bench(col: str) -> Column:
+    """Whether the id column ``col`` is in the benchmark carve."""
+    return F.col(col) % 20 == 0
+
+
+def is_bench_sql(col: str) -> str:
+    """DuckDB twin of :func:`is_bench`, parenthesised for ``NOT``."""
+    return f"({col} % 20 = 0)"
+
+
+def doc_split(col: str) -> Column:
+    """The split ('val', 'test' or 'train') of the id column ``col``."""
+    bucket = h60(F.col(col).cast("string")) % 100
+    return (F.when(bucket < 10, F.lit("val"))
+            .when(bucket < 20, F.lit("test"))
+            .otherwise(F.lit("train")))
+
+
+def doc_split_sql(col: str) -> str:
+    """DuckDB twin of :func:`doc_split`."""
+    bucket = f"{h60_sql(f'{col}::VARCHAR')} % 100"
+    return (f"CASE WHEN {bucket} < 10 THEN 'val' "
+            f"WHEN {bucket} < 20 THEN 'test' ELSE 'train' END")
 
 
 def hll_rho(df: DataFrame, keys: list, value: Column | str) -> DataFrame:

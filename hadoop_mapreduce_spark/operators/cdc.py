@@ -28,10 +28,10 @@ from hadoop_mapreduce_spark.sources.tables import load_table
 
 
 def merge_apply(target: DataFrame, changes: DataFrame, key: str,
-                op_col: str = "op", seq_col: str | None = None) -> DataFrame:
+                seq_col: str | None = None) -> DataFrame:
     """Apply keyed changes to a snapshot (MERGE INTO emulation).
 
-    changes carries the full row payload plus `op_col` in
+    changes carries the full row payload plus an ``op`` column in
     {'I','U','D'}. Duplicate change rows per key are COMPACTED here
     (not assumed away): last-change-wins by ``seq_col`` when the feed
     carries a change-sequence/LSN column, else by a deterministic
@@ -52,18 +52,18 @@ def merge_apply(target: DataFrame, changes: DataFrame, key: str,
     # changes all have NULL seq; a null struct FIELD merely sorts
     # lowest, so such rows still compact deterministically).
     lead = [F.col(seq_col)] if seq_col is not None else []
-    order = F.struct(*lead, F.col(op_col), *[F.col(c) for c in payload])
+    order = F.struct(*lead, F.col("op"), *[F.col(c) for c in payload])
     compacted = (
         changes.groupBy(key)
         .agg(F.max_by(
-            F.struct(F.col(op_col).alias(op_col),
+            F.struct(F.col("op").alias("op"),
                      *[F.col(c).alias(c) for c in payload]),
             order,
         ).alias("__ch"))
         .select(key, "__ch.*")
     )
     ch = compacted.select(
-        F.col(key).alias("__ck"), F.col(op_col).alias("__op"),
+        F.col(key).alias("__ck"), F.col("op").alias("__op"),
         *[F.col(c).alias(f"__c_{c}") for c in payload],
     )
     joined = target.join(ch, target[key] == F.col("__ck"), "full_outer")

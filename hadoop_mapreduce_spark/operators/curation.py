@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hadoop_mapreduce_spark.functions.portable import h60
+from hadoop_mapreduce_spark.functions.portable import doc_split, h60
 from hadoop_mapreduce_spark.functions.timeutil import wall_epoch_us
 from hadoop_mapreduce_spark.sources.tables import load_table
 
@@ -84,7 +84,8 @@ def text_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/val/test split: bucket = md5(doc_id) mod 100.
+    """Deterministic 10/10/80 val/test/train split of md5(doc_id) mod
+    100 (``doc_split``).
 
     Engine-portable and seed-stable — any process (Spark executor,
     downstream loader, the DuckDB oracle) re-derives a document's split
@@ -92,12 +93,7 @@ def dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignments. Returns per-split document and token counts.
     """
     docs = load_table(spark, sf_dir, "documents")
-    bucket = h60(F.col("doc_id").cast("string")) % 100
-    split = (
-        F.when(bucket < 10, F.lit("val"))
-        .when(bucket < 20, F.lit("test"))
-        .otherwise(F.lit("train"))
-    )
+    split = doc_split("doc_id")
     toks = F.size(F.split(F.trim("text"), r"\s+")).cast("long")
     return (
         docs.select(split.alias("split"), toks.alias("n_tokens"))
@@ -372,10 +368,10 @@ def memorization_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     optimistically — the published eval-hygiene check (e.g. the GPT-3
     appendix-C overlap study), run as one relational plan.
 
-    Split assignment reuses dataset_split's portable convention
-    (bucket = md5(doc_id) mod 100) so the audit describes exactly the
-    split the pipeline would ship. Documents shorter than 5 tokens
-    have no 5-grams and no row — they cannot memorize anything.
+    Split assignment is dataset_split's ``doc_split``, so the audit
+    describes exactly the split the pipeline would ship. Documents
+    shorter than 5 tokens have no 5-grams and no row — they cannot
+    memorize anything.
 
     Scale shape: grams are distinct'd per doc BELOW the join (map-side
     partial agg on (doc, gram)); the train-side gram set collapses to
@@ -388,14 +384,8 @@ def memorization_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_mapreduce_spark.operators.ngram import explode_ngram_set
 
     docs = load_table(spark, sf_dir, "documents")
-    bucket = h60(F.col("doc_id").cast("string")) % 100
-    split = (
-        F.when(bucket < 10, F.lit("val"))
-        .when(bucket < 20, F.lit("test"))
-        .otherwise(F.lit("train"))
-    )
-    grams = explode_ngram_set(docs.withColumn("split", split), "text", 5,
-                              ["doc_id", "split"])
+    grams = explode_ngram_set(docs.withColumn("split", doc_split("doc_id")),
+                              "text", 5, ["doc_id", "split"])
     train_grams = (grams.where(F.col("split") == "train")
                    .select("ngram").distinct())
     val_grams = grams.where(F.col("split") == "val").select("doc_id", "ngram")

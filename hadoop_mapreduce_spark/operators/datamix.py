@@ -36,6 +36,7 @@ from hadoop_mapreduce_spark.functions.portable import (
     bloom_any,
     bloom_bitmap,
     h60,
+    is_bench,
 )
 from hadoop_mapreduce_spark.functions.text import (
     ngrams_from_tokens,
@@ -54,8 +55,8 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     token n-gram with a held-out benchmark set.
 
     The fixture has no separate benchmark table, so the benchmark set is
-    carved deterministically (doc_id % 20 == 0 — 5% of docs);
-    the remaining 95% are "training". A training doc is contaminated if
+    carved deterministically (``is_bench``: 1 doc_id in 20); the
+    remaining 95% are "training". A training doc is contaminated if
     any of its distinct 4-grams appears in any benchmark doc — the
     published recipe (GPT-3 app. C uses 13-grams; 4 here because the
     synthetic vocabulary is ~30 words and docs are ~40 tokens).
@@ -68,15 +69,15 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     grams = explode_ngram_set(docs, "text", 4, ["doc_id", "source"])
-    is_bench = F.col("doc_id") % 20 == 0
-    bench_grams = grams.where(is_bench).select("ngram").distinct()
+    bench = is_bench("doc_id")
+    bench_grams = grams.where(bench).select("ngram").distinct()
     hit_docs = (
-        grams.where(~is_bench)
+        grams.where(~bench)
         .join(F.broadcast(bench_grams), "ngram", "left_semi")
         .select("doc_id").distinct()
         .withColumn("contaminated", F.lit(1))
     )
-    train = docs.where(~is_bench).select("doc_id", "source")
+    train = docs.where(~bench).select("doc_id", "source")
     return (
         train.join(hit_docs, "doc_id", "left")
         .groupBy("source")
@@ -99,8 +100,8 @@ def decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact n-gram hit test. Exact overlap misses paraphrased/perturbed
     benchmark leakage (reordered sentences, small edits); the published
     fix (e.g. Llama/FLAN decontamination reports) is near-dup matching
-    between train and eval at a Jaccard threshold. Benchmark set =
-    doc_id % 20 == 0, the same 5% carve as decontaminate_ngram.
+    between train and eval at a Jaccard threshold. Benchmark set: the
+    same ``is_bench`` carve as decontaminate_ngram.
 
     Output: one row per contaminated (train_id, bench_id) pair with its
     exact verified Jaccard — downstream either drops train_id or audits
@@ -131,8 +132,8 @@ def decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One tokenise+shingle scan feeds signatures AND the verify pass.
     hs = scoped_persist(hashed_shingle_rows(docs))
     sigs = minhash_signatures(hs)
-    is_bench = F.col("id") % 20 == 0
-    cands = lsh_cross_candidates(sigs.where(~is_bench), sigs.where(is_bench))
+    bench = is_bench("id")
+    cands = lsh_cross_candidates(sigs.where(~bench), sigs.where(bench))
     return exact_jaccard_for_pairs(hs, cands, 0.8).select(
         F.col("id1").alias("train_id"), F.col("id2").alias("bench_id"),
         "jaccard")
@@ -143,8 +144,8 @@ def decontaminate_semantic(spark: SparkSession, sf_dir: str,
     """SEMANTIC decontamination: training vectors whose embedding cosine
     against any held-out benchmark vector meets the threshold — catches
     rephrasings that share no surface n-grams at all (the third rung
-    after exact n-gram and fuzzy Jaccard). Benchmark set =
-    vec_id % 20 == 0, mirroring the text-side carve.
+    after exact n-gram and fuzzy Jaccard). Benchmark set: the
+    ``is_bench`` carve over vec_id, mirroring the text side.
 
     (Production threshold is ~0.9; the fixture embeddings are
     near-random with max cross cosine ~0.49, so 0.4 exercises the
@@ -166,10 +167,10 @@ def decontaminate_semantic(spark: SparkSession, sf_dir: str,
     from hadoop_mapreduce_spark.operators.dedup import embedding_cosine_cross_pairs
 
     emb = load_table(spark, sf_dir, "embeddings")
-    is_bench = F.col("vec_id") % 20 == 0
+    bench = is_bench("vec_id")
     return (
         embedding_cosine_cross_pairs(
-            emb.where(~is_bench), emb.where(is_bench), threshold)
+            emb.where(~bench), emb.where(bench), threshold)
         .select(
             F.col("big_id").alias("train_id"),
             F.col("small_id").alias("bench_id"),
@@ -182,7 +183,7 @@ def dsir_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR-style data selection (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): score every training
     document by the log-likelihood ratio of a TARGET unigram model
-    (fit on the held-out target carve, doc_id % 20 == 0) against
+    (fit on the held-out ``is_bench`` target carve) against
     the RAW corpus model, over HASHED token features — then select the
     documents the ratio favours. This is the principled version of
     "sample more of what looks like the target domain": mixture weights
@@ -241,15 +242,15 @@ def dsir_log_weights_from_tokens(toks: DataFrame) -> DataFrame:
     tok = scoped_persist(toks.select(
         "doc_id", "source", F.explode("t").alias("w"),
     ).select("doc_id", "source", (h60("w") % n_buckets).alias("f")))
-    is_bench = F.col("doc_id") % 20 == 0
+    bench = is_bench("doc_id")
     # model counts: one uniform feature-keyed aggregation each; both
     # collapse to <= n_buckets rows before any join
-    ct = tok.where(is_bench).groupBy("f").agg(F.count(F.lit(1)).alias("ct"))
-    cr = tok.where(~is_bench).groupBy("f").agg(F.count(F.lit(1)).alias("cr"))
+    ct = tok.where(bench).groupBy("f").agg(F.count(F.lit(1)).alias("ct"))
+    cr = tok.where(~bench).groupBy("f").agg(F.count(F.lit(1)).alias("cr"))
     # totals as 1-row broadcast (crossJoin of scalar aggregates — the
     # plan-audit-sanctioned tiny-spine pattern)
-    nt = tok.where(is_bench).agg(F.count(F.lit(1)).alias("nt"))
-    nr = tok.where(~is_bench).agg(F.count(F.lit(1)).alias("nr"))
+    nt = tok.where(bench).agg(F.count(F.lit(1)).alias("nt"))
+    nr = tok.where(~bench).agg(F.count(F.lit(1)).alias("nr"))
     ratio = (
         ct.join(cr, "f", "full_outer")
         .crossJoin(F.broadcast(nt)).crossJoin(F.broadcast(nr))
@@ -263,7 +264,7 @@ def dsir_log_weights_from_tokens(toks: DataFrame) -> DataFrame:
             ).alias("llr"),
         )
     )
-    cdf = tok.where(~is_bench).groupBy("doc_id", "source", "f").agg(
+    cdf = tok.where(~bench).groupBy("doc_id", "source", "f").agg(
         F.count(F.lit(1)).alias("c"))
     return (
         cdf.join(F.broadcast(ratio), "f")
@@ -660,11 +661,11 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = 4
     m_bits = 1 << 16
     docs = load_table(spark, sf_dir, "documents")
-    is_bench = F.col("doc_id") % 20 == 0
+    bench = is_bench("doc_id")
     bm1 = bloom_bitmap(
-        explode_ngram_set(docs.where(is_bench), "text", n), "ngram", m_bits)
+        explode_ngram_set(docs.where(bench), "text", n), "ngram", m_bits)
     per_doc = (
-        docs.where(~is_bench)
+        docs.where(~bench)
         .select("doc_id", "source",
                 tokenize(normalize_text(F.col("text"))).alias("__t"))
         .crossJoin(F.broadcast(bm1))

@@ -93,7 +93,7 @@ def ngram_count(df: DataFrame, text_col: str, n: int = 3, sort: bool = True) -> 
 
 
 def ngram_count_text(
-    spark: SparkSession, path: str, n: int = 3, cross_line: bool = False, sort: bool = True
+    spark: SparkSession, path: str, n: int = 3, cross_line: bool = False
 ) -> DataFrame:
     """Reference CLI equivalent: count n-grams in a directory of text files.
 
@@ -112,12 +112,12 @@ def ngram_count_text(
     """
     lines = spark.read.text(path)
     if not cross_line:
-        return ngram_count(lines, "value", n, sort=sort)
-    return _ngram_count_cross_line(spark, lines, n, sort=sort)
+        return ngram_count(lines, "value", n)
+    return _ngram_count_cross_line(spark, lines, n)
 
 
 def _ngram_count_cross_line(
-    spark: SparkSession, lines: DataFrame, n: int, sort: bool = True
+    spark: SparkSession, lines: DataFrame, n: int
 ) -> DataFrame:
     """Cross-line n-gram counts with (n-1)-token carry across line AND
     split boundaries — the distributed twin of the reference's static
@@ -142,7 +142,7 @@ def _ngram_count_cross_line(
          boundary, handling runt partitions shorter than n-1 tokens by
          rolling the carry through them.
       4. Partial counts union junction counts → one final hash
-         aggregation (map-side combined) → optional global sort.
+         aggregation (map-side combined) → global sort.
     """
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
@@ -253,7 +253,7 @@ def _ngram_count_cross_line(
         partial.unionByName(junction)
         .groupBy("ngram").agg(F.sum("cnt").alias("cnt"))
     )
-    return counts.orderBy("ngram") if sort else counts
+    return counts.orderBy("ngram")
 
 
 def ngram_topk(df: DataFrame, text_col: str, n: int = 3, k: int = 100) -> DataFrame:

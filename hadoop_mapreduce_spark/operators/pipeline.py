@@ -15,7 +15,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoop_mapreduce_spark.functions.portable import h60
+from hadoop_mapreduce_spark.functions.portable import (
+    doc_split,
+    h60,
+    is_bench,
+)
+from hadoop_mapreduce_spark.functions.quality import (
+    punct_count,
+    quality_pass,
+    quality_score,
+)
 from hadoop_mapreduce_spark.functions.text import normalize_text, tokenize
 from hadoop_mapreduce_spark.operators.dedup import dedup_ngram_jaccard
 from hadoop_mapreduce_spark.operators.textstats import text_quality
@@ -33,10 +42,10 @@ def pipeline_pretrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stage order is scale order (cheap scan-speed gates first, shuffling
     stages over ever-smaller survivor sets). Hash-independence matters
     in the tail: the MIXTURE keep-decision uses a salted key
-    md5('mix:' || doc_id) while the SPLIT bucket uses md5(doc_id) — on
-    the same unsalted bucket, "bucket < rate" (mixture) would nest
-    inside "bucket < 10" (val split), silently exempting val/test from
-    downsampling and starving train.
+    md5('mix:' || doc_id) while the SPLIT (``doc_split``) buckets
+    md5(doc_id) — on the same unsalted bucket, "bucket < rate"
+    (mixture) would nest inside the low val/test buckets, silently
+    exempting val/test from downsampling and starving train.
 
     Emits per-split doc/token accounting (3 rows) — the corpus ledger a
     training run records before the first batch.
@@ -56,32 +65,22 @@ def pipeline_pretrain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from hadoop_mapreduce_spark.functions.text import ngrams_from_tokens
 
-    bench_mod = 20
     docs = load_table(spark, sf_dir, "documents")
-    n_chars = F.length("text")
-    n_punct = n_chars - F.length(F.regexp_replace("text", r"[^\w\s]", ""))
     base = docs.select(
         "doc_id",
         "source",
         tokenize(normalize_text(F.col("text"))).alias("t"),
         F.sha2("text", 256).alias("h"),
-        n_chars.alias("nc"),
-        n_punct.alias("np"),
+        F.length("text").alias("nc"),
+        punct_count("text").alias("np"),
     )
     from hadoop_mapreduce_spark.session import scoped_persist
     base = scoped_persist(base, StorageLevel.MEMORY_AND_DISK)
 
-    # 1. quality gate (same composite score as text_quality, computed
-    # from the shared token projection instead of a second corpus scan;
-    # rounded like text_quality so the gate is bit-identical)
-    n_tok = F.size("t")
-    avg_wl = F.aggregate("t", F.lit(0), lambda a, x: a + F.length(x)) / n_tok
-    score = (
-        F.when(n_tok >= 5, 1.0).otherwise(0.0)
-        + F.when((avg_wl >= 3) & (avg_wl <= 10), 1.0).otherwise(0.0)
-        + F.when(F.col("np") / F.col("nc") < 0.2, 1.0).otherwise(0.0)
-    ) / 3.0
-    d0 = base.where(F.round(score, 4) >= 0.6)
+    # 1. the quality gate (functions/quality.py), computed from the
+    # shared token projection instead of a second corpus scan
+    d0 = base.where(quality_pass(
+        quality_score(F.col("t"), F.col("nc"), F.col("np"))))
 
     # 2. exact dedup: keep min doc_id per content hash
     keep_exact = (
@@ -100,17 +99,14 @@ def pipeline_pretrain(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.array_distinct(
             ngrams_from_tokens(F.col("t"), 4))).alias("g"),
     )
-    is_bench = F.col("doc_id") % bench_mod == 0
-    bench_grams = grams.where(is_bench).select("g").distinct()
+    bench = is_bench("doc_id")
+    bench_grams = grams.where(bench).select("g").distinct()
     hits = (
-        grams.where(~is_bench)
+        grams.where(~bench)
         .join(F.broadcast(bench_grams), "g", "left_semi")
         .select("doc_id").distinct()
     )
-    d2 = (
-        d1.where(F.col("doc_id") % bench_mod != 0)
-        .join(hits, "doc_id", "left_anti")
-    )
+    d2 = d1.where(~bench).join(hits, "doc_id", "left_anti")
 
     # 4. domain mixture (salted hash — independent of the split bucket)
     idx = F.regexp_extract(F.col("source"), r"(\d+)", 1).cast("int")
@@ -122,14 +118,9 @@ def pipeline_pretrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     d3 = d2.where(mix_bucket < rate)
 
     # 5. split + ledger
-    split_bucket = h60(F.col("doc_id").cast("string")) % 100
-    split = (
-        F.when(split_bucket < 10, F.lit("val"))
-        .when(split_bucket < 20, F.lit("test"))
-        .otherwise(F.lit("train"))
-    )
     return (
-        d3.select(split.alias("split"), F.size("t").alias("n_tok"))
+        d3.select(doc_split("doc_id").alias("split"),
+                  F.size("t").alias("n_tok"))
         .groupBy("split")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -141,7 +132,7 @@ def pipeline_pretrain(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source counts + token totals of the curated corpus.
 
-    1. quality gate: composite score >= 0.6 (2 of 3 signals);
+    1. the quality gate (``functions/quality.py``) over text_quality;
     2. exact dedup: keep the min doc_id of each sha256(text) group;
     3. near-dup removal: among survivors, drop the greater id of every
        pair with shingle-Jaccard >= 0.8 (exact Jaccard —
@@ -152,7 +143,7 @@ def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q_ok = (
         text_quality(spark, sf_dir)
-        .where(F.col("quality") >= 0.6)
+        .where(quality_pass(F.col("quality")))
         .select("doc_id")
     )
     d0 = docs.join(q_ok, "doc_id", "left_semi")
@@ -205,7 +196,7 @@ def pipeline_pretrain_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     unigram LM = one vocab aggregate (broadcast) + one doc-keyed agg;
     span dedup = chunk-hash window + doc-keyed rebuild; decontamination
     = Bloom bitmap (broadcast map) + a probe projection; ledger = one
-    per-source rollup. Benchmark docs (doc_id % 20 == 0) feed
+    per-source rollup. Benchmark docs (``is_bench``) feed
     the bitmap from their ORIGINAL text and are excluded from training.
     """
     from pyspark.sql import Window
@@ -224,10 +215,10 @@ def pipeline_pretrain_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id", "source",
         tokenize(normalize_text(F.col("text"))).alias("t"))
-    is_bench = F.col("doc_id") % 20 == 0
+    bench = is_bench("doc_id")
 
     # ---- stage A: corpus-unigram LM quality gate over TRAIN docs ----
-    tok = toks.where(~is_bench).select(
+    tok = toks.where(~bench).select(
         "doc_id", "source", F.explode("t").alias("tk"))
     vocab = tok.groupBy("tk").agg(F.count(F.lit(1)).alias("c"))
     total = vocab.agg(F.sum("c").alias("n_total"))
@@ -274,7 +265,7 @@ def pipeline_pretrain_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ---- stage C: Bloom decontamination on the REBUILT text ----
     bm1 = bloom_bitmap(
-        explode_ngram_set(docs.where(is_bench), "text", n), "ngram", m_bits)
+        explode_ngram_set(docs.where(bench), "text", n), "ngram", m_bits)
     final = (
         rebuilt
         .select("doc_id", "source", "n_kept",
@@ -287,7 +278,7 @@ def pipeline_pretrain_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # ---- ledger ----
-    n_in = toks.where(~is_bench).groupBy("source").agg(
+    n_in = toks.where(~bench).groupBy("source").agg(
         F.count(F.lit(1)).alias("n_in"))
     n_q = kept_q.groupBy("source").agg(F.count(F.lit(1)).alias("n_quality"))
     out = (
@@ -320,7 +311,7 @@ def pipeline_target_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
       1. FUZZY DECONTAMINATION: drop training docs that are verified
          near-dups (shingle Jaccard >= threshold) of the held-out target
-         set (doc_id % bench_mod == 0) — decontaminate_fuzzy's rule;
+         set (``is_bench``) — decontaminate_fuzzy's rule;
       2. NEAR-DUP DEDUP among survivors: star-CC clusters over verified
          LSH pairs, keep-longest representative (dedup_keep_best's rule);
       3. DSIR SELECTION: keep survivors whose hashed-feature unigram LM
@@ -357,7 +348,6 @@ def pipeline_target_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_mapreduce_spark.session import scoped_persist
 
     threshold = 0.8
-    bench_mod = 20
     docs = load_table(spark, sf_dir, "documents")
     base = scoped_persist(
         docs.select(
@@ -367,8 +357,7 @@ def pipeline_target_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         StorageLevel.MEMORY_AND_DISK,
     )
-    is_bench = F.col("doc_id") % bench_mod == 0
-    train = base.where(~is_bench)
+    train = base.where(~is_bench("doc_id"))
 
     hs = scoped_persist(
         hashed_shingle_rows_from_tokens(
@@ -376,10 +365,8 @@ def pipeline_target_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = scoped_persist(minhash_signatures(hs))
 
     # --- stage 1: fuzzy decontamination (train x bench, bench broadcast)
-    cands = lsh_cross_candidates(
-        sigs.where(F.col("id") % bench_mod != 0),
-        sigs.where(F.col("id") % bench_mod == 0),
-    )
+    bench = is_bench("id")
+    cands = lsh_cross_candidates(sigs.where(~bench), sigs.where(bench))
     contaminated = (
         exact_jaccard_for_pairs(hs, cands, threshold)
         .select(F.col("id1").alias("doc_id")).distinct()

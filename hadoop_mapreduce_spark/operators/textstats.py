@@ -19,6 +19,12 @@ from hadoop_mapreduce_spark.functions.portable import (
     hll_partials,
     hll_rho,
 )
+from hadoop_mapreduce_spark.functions.quality import (
+    avg_word_len,
+    punct_count,
+    punct_ratio,
+    quality_score,
+)
 from hadoop_mapreduce_spark.functions.text import normalize_text, tokenize
 from hadoop_mapreduce_spark.sources.tables import load_table
 
@@ -48,7 +54,8 @@ def _tokens(text_col: str) -> Column:
 
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality signals: token/char counts, word lengths,
-    stopword ratio, punctuation ratio, and a composite quality score.
+    stopword ratio, punctuation ratio, and the composite quality score
+    of the quality gate (``functions/quality.py``).
 
     Pure projection — no shuffle at all; at 100 TB this runs at scan
     speed and is the canonical "cheap filter before expensive dedup"
@@ -66,35 +73,19 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.col("__toks")
     n_tok = F.size(toks)
     n_chars = F.length("text")
-    # explicit Java-\s class (not \s): the oracle's RE2 \s lacks \x0B —
-    # the same divergence the differential fuzzer caught in the
-    # tokenizer oracles (a \x0B document counted it as punctuation on
-    # one engine only).
-    n_punct = n_chars - F.length(
-        F.regexp_replace("text", "[^\\w\t\n\x0B\f\r ]", ""))
     stop_hits = F.size(F.array_intersect(toks, F.lit(list(LANG_STOPWORDS["en"]))))
-    # Empty-input contract (fuzz-found ANSI divide-by-zero): zero
-    # tokens => avg_word_len/stopword_ratio 0.0; zero chars =>
-    # punct_ratio 0.0 and the punctuation score term passes vacuously.
-    avg_wl = F.when(
-        n_tok > 0,
-        F.aggregate(toks, F.lit(0), lambda a, t: a + F.length(t)) / n_tok,
-    ).otherwise(F.lit(0.0))
+    # zero tokens => stopword_ratio 0.0, like the quality signals'
+    # empty-input guards (functions/quality.py)
     stop_ratio = F.when(n_tok > 0, stop_hits / n_tok).otherwise(F.lit(0.0))
-    punct_ratio = F.when(n_chars > 0, n_punct / n_chars).otherwise(F.lit(0.0))
-    score = (
-        F.when(n_tok >= 5, 1.0).otherwise(0.0)
-        + F.when((avg_wl >= 3) & (avg_wl <= 10), 1.0).otherwise(0.0)
-        + F.when(punct_ratio < 0.2, 1.0).otherwise(0.0)
-    ) / 3.0
+    n_punct = punct_count("text")
     return base.select(
         "doc_id",
         n_tok.cast("long").alias("n_tokens"),
         n_chars.cast("long").alias("n_chars_m"),
-        F.round(avg_wl, 4).alias("avg_word_len"),
+        F.round(avg_word_len(toks), 4).alias("avg_word_len"),
         F.round(stop_ratio, 4).alias("stopword_ratio"),
-        F.round(punct_ratio, 4).alias("punct_ratio"),
-        F.round(score, 4).alias("quality"),
+        F.round(punct_ratio(n_punct, n_chars), 4).alias("punct_ratio"),
+        quality_score(toks, n_chars, n_punct).alias("quality"),
     )
 
 

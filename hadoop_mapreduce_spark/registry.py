@@ -26,6 +26,13 @@ values). Conventions that keep the two engines bit-comparable:
     tokenizer's twin (``TOKS_SQL``) and the n-gram window's
     (``ngrams_sql``) sit beside their Spark forms in
     ``functions/text.py``. Oracles interpolate the SQL twins;
+  * so do the curation policies: the benchmark carve (``is_bench`` /
+    ``is_bench_sql``) and the 10/10/80 val/test/train split
+    (``doc_split`` / ``doc_split_sql``) in ``functions/portable.py``,
+    and the composite quality gate (its three signals, the rounded
+    score ``quality_score`` and the pass ``quality_pass``, each with a
+    ``_sql`` twin) in ``functions/quality.py``. ``_QUALITY_KEPT`` below
+    is the gated-documents CTE the pipeline oracles splice in;
   * the near-dup oracle kernels live once, below, as CTE lists the
     oracles splice in: the shingle sets (``_SHINGLE_SETS``), the
     inverted-index pair counts (``_SHINGLE_PAIRS``), the exact
@@ -83,10 +90,19 @@ from hadoop_mapreduce_spark.functions.portable import (
     bloom_bitmap_sql,
     bloom_hit_sql,
     bloom_probes_sql,
+    doc_split_sql,
     h60_sql,
     hll_estimate_sql,
     hll_partials_sql,
     hll_rho_sql,
+    is_bench_sql,
+)
+from hadoop_mapreduce_spark.functions.quality import (
+    avg_word_len_sql,
+    punct_count_sql,
+    punct_ratio_sql,
+    quality_pass_sql,
+    quality_score_sql,
 )
 from hadoop_mapreduce_spark.functions.text import (
     NORMALIZE_SQL,
@@ -163,34 +179,108 @@ def _ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES: dict[str, QueryFn] = {
-    # The driver records a 50-query correctness window per round in
-    # registry order. Round-6 policy: every hash-paired query that has
-    # NEVER appeared hash-green in any CORRECTNESS_r*.json sits at the
-    # FRONT (22 entries as of r6), so this round's window witnesses all
-    # of them; previously-witnessed queries fill the remaining slots
-    # and spill past 50 into CORRECTNESS_full.json coverage. Pure
-    # reordering: no key or implementation changed.
-    # -- never driver-hash-witnessed (front priority) --
-    # the two round-5 driver flakes, re-registered after the Decimal
-    # determinism fix (operators/sql4.py) so r6 witnesses the repair:
+    # The driver records the first 50 entries as its per-round
+    # correctness window, so an entry's place here is its priority.
+    "events_hierarchical_rollup":
+        ordered(timeseries.events_hierarchical_rollup,
+                "resolution", "bucket_id", "event_type"),
+    "split_leakage_guard": curation.split_leakage_guard,
+    "dedup_components_star": ordered(dedup.dedup_components_star, "doc_id"),
+    "dedup_keep_best": ordered(dedup.dedup_keep_best, "component"),
+    "dedup_incremental": ordered(dedup.dedup_incremental, "doc_id"),
+    "dedup_cluster_size_histogram":
+        ordered(dedup.dedup_cluster_size_histogram, "cluster_size"),
+    "pipeline_target_select":
+        ordered(pipeline.pipeline_target_select, "source"),
+    "keyphrase_rake":
+        ordered(textstats.keyphrase_rake, "rake_e6 DESC", "freq DESC", "word"),
+    "token_context_diversity":
+        ordered(textstats.token_context_diversity, "freq DESC", "word"),
+    "dedup_minhash_lsh": ordered(dedup.dedup_minhash_lsh, "id1", "id2"),
+    "orders_abc_pareto":
+        ordered(relational.orders_abc_pareto, "abc_class"),
+    "label_propagation_communities":
+        ordered(dedup.label_propagation_communities, "doc_id"),
+    "sax_motifs":
+        ordered(timeseries.sax_motifs, "event_type", "n DESC", "motif"),
+    "dedup_chain_audit":
+        ordered(dedup.dedup_chain_audit, "component"),
+    "vocab_growth_heaps":
+        ordered(textstats.vocab_growth_heaps, "checkpoint"),
+    "embedding_outlier_scores":
+        ordered(similarity.embedding_outlier_scores, "rank"),
+    "order_status_flow":
+        ordered(relational.order_status_flow, "from_status", "to_status"),
+    "events_pattern_match":
+        ordered(timeseries.events_pattern_match, "pattern"),
+    "readability_scores":
+        ordered(textstats.readability_scores, "source"),
+    "events_acf":
+        ordered(timeseries.events_acf, "event_type", "lag"),
+    "compression_ratio_quality":  # rows-only (DEFLATE not SQL-expressible)
+        ordered(textstats.compression_ratio_quality, "source"),
+    "shard_layout_plan":
+        ordered(layout.shard_layout_plan, "source"),
+    "hll_portable_union":  # hash-paired (md5 registers)
+        ordered(textstats.hll_portable_union, "source"),
+    # 'head' < 'middle' < 'tail' alphabetically == tercile order
+    "ccnet_perplexity_buckets":
+        ordered(textstats.ccnet_perplexity_buckets, "lang", "bucket"),
+    "vocab_coverage_curve":
+        ordered(textstats.vocab_coverage_curve, "vocab_k"),
+    "embedding_centroid_drift":
+        ordered(similarity.embedding_centroid_drift, "label"),
+    "char_trigram_langid":
+        ordered(textstats.char_trigram_langid, "lang", "pred_lang"),
+    "minhash_accuracy_audit":
+        ordered(dedup.minhash_accuracy_audit, "err_decile"),
+    "quantile_histogram_portable":
+        ordered(relational.quantile_histogram_portable, "o_orderstatus", "q"),
+    "events_ewma_daily":
+        ordered(timeseries.events_ewma_daily, "event_type", "day"),
+    "salted_aggregate_events":
+        ordered(skew.salted_aggregate_events, "event_type"),
+    "join_skew_audit":
+        ordered(skew.join_skew_audit, "axis", "partition_id"),
+    "video_meta": ordered(multimodal.video_meta, "doc_id"),
+    "embedding_dim_stats": ordered(similarity.embedding_dim_stats, "dim"),
+    "benford_audit":
+        ordered(curation.benford_audit, "digit"),
+    "pagerank_dedup_graph":  # hash-paired (recursive-CTE twin)
+        ordered(dedup.pagerank_dedup_graph, "rk"),
+    "pipeline_pretrain": ordered(pipeline.pipeline_pretrain, "split"),
+    "dedup_threshold_sweep":
+        ordered(dedup.dedup_threshold_sweep, "threshold_pct"),
+    "ngram_count": ordered(_ngram_count, "ngram"),
+    "q1_pricing_summary":
+        ordered(relational.q1_pricing_summary, "l_returnflag", "l_linestatus"),
+    "q5_local_supplier_volume":
+        ordered(relational.q5_local_supplier_volume, "revenue DESC", "n_name"),
+    "dedup_exact": ordered(dedup.dedup_exact, "keep_id"),
+    "events_gap_fill": ordered(timeseries.events_gap_fill, "user_id", "hour"),
+    "events_daily_ohlc":
+        ordered(timeseries.events_daily_ohlc, "user_id", "day"),
+    "events_session":
+        ordered(timeseries.events_session, "user_id", "session_start"),
+    "token_count": ordered(textstats.token_count, "source"),
+    "text_quality": ordered(textstats.text_quality, "doc_id"),
+    "unigram_logprob_quality":
+        ordered(textstats.unigram_logprob_quality, "source"),
+    "bloom_decontaminate": ordered(datamix.bloom_decontaminate, "source"),
+    "zorder_layout": ordered(layout.zorder_layout, "file_id"),
     "recursive_monthly_spine":
         ordered(sql4.recursive_monthly_spine, "month_start"),
     "lateral_topk_orders":
         ordered(sql4.lateral_topk_orders,
                 "c_custkey", "o_totalprice DESC", "o_orderkey"),
-    # round-6 selection / decontamination ladder:
     "decontaminate_fuzzy":
         ordered(datamix.decontaminate_fuzzy, "train_id", "bench_id"),
     "decontaminate_semantic":
         ordered(datamix.decontaminate_semantic, "train_id", "bench_id"),
-    "dedup_keep_best": ordered(dedup.dedup_keep_best, "component"),
     "dedup_repeated_spans":
         ordered(dedup.dedup_repeated_spans, "doc_id", "span_start"),
     "dsir_importance_sample":
         ordered(datamix.dsir_importance_sample, "source"),
-    "pipeline_target_select":
-        ordered(pipeline.pipeline_target_select, "source"),
-    # round-6 second wave:
     "bigram_lm_quality":
         ordered(textstats.bigram_lm_quality, "bigram_lp", "doc_id"),
     "image_dhash_neardup":
@@ -206,10 +296,8 @@ QUERIES: dict[str, QueryFn] = {
         ordered(timeseries.events_anomaly_mad, "event_type", "event_id"),
     "bigram_pmi_collocations":
         ordered(textstats.bigram_pmi_collocations, "pmi DESC", "w1", "w2"),
-    "skipgram_cooccurrence":  # hash-paired r7c
+    "skipgram_cooccurrence":
         ordered(textstats.skipgram_cooccurrence, "pmi DESC", "w1", "w2"),
-    # round-6 third wave:
-    "dedup_incremental": ordered(dedup.dedup_incremental, "doc_id"),
     "sample_weighted":
         ordered(datamix.sample_weighted, "es_key DESC", "doc_id"),
     "events_twap_daily":
@@ -217,11 +305,6 @@ QUERIES: dict[str, QueryFn] = {
     "events_winsorize_stats":
         ordered(timeseries.events_winsorize_stats, "event_type"),
     "histogram_equidepth": ordered(relational.histogram_equidepth, "bucket"),
-    # never recorded in r1-r5 windows (pre-existing key):
-    "events_hierarchical_rollup":
-        ordered(timeseries.events_hierarchical_rollup,
-                "resolution", "bucket_id", "event_type"),
-    # round-6 fourth wave (new):
     "bpe_merge_step": ordered(textstats.bpe_merge_step, "cnt DESC", "pair"),
     "inverted_index_topk":
         ordered(textstats.inverted_index_topk,
@@ -231,116 +314,90 @@ QUERIES: dict[str, QueryFn] = {
         ordered(datamix.mixture_temperature_weights, "source"),
     "quantile_normalize_quality":
         ordered(datamix.quantile_normalize_quality, "source"),
-    "rrf_quality_fusion":  # hash-paired r7c
+    "rrf_quality_fusion":
         ordered(curation.rrf_quality_fusion, "source", "fused_rank"),
-    "quality_threshold_sweep":  # hash-paired r7c
+    "quality_threshold_sweep":
         ordered(curation.quality_threshold_sweep, "threshold", "source"),
-    "stopword_discovery":  # hash-paired r7c
+    "stopword_discovery":
         ordered(textstats.stopword_discovery, "lang", "rank"),
-    "source_concentration_audit":  # hash-paired r7c
+    "source_concentration_audit":
         ordered(datamix.source_concentration_audit, "axis"),
-    "token_budget_fill":  # hash-paired r7c
+    "token_budget_fill":
         ordered(datamix.token_budget_fill, "source"),
-    "curriculum_interleave":  # hash-paired r7c
+    "curriculum_interleave":
         ordered(datamix.curriculum_interleave, "position"),
-    "source_novelty_attribution":  # hash-paired r7c
+    "source_novelty_attribution":
         ordered(datamix.source_novelty_attribution, "src_rank"),
-    "quality_signal_correlation":  # hash-paired r7c
+    "quality_signal_correlation":
         ordered(curation.quality_signal_correlation, "source"),
-    "ngram_diversity_audit":  # hash-paired r7d
+    "ngram_diversity_audit":
         ordered(textstats.ngram_diversity_audit, "source", "n"),
-    "dataset_card":  # hash-paired r7d
+    "dataset_card":
         ordered(pipeline.dataset_card, "source"),
-    "badwords_filter":  # hash-paired r7d
+    "badwords_filter":
         ordered(curation.badwords_filter, "source"),
-    "lang_source_chisq":  # hash-paired r7d
+    "lang_source_chisq":
         ordered(datamix.lang_source_chisq, "lang", "source"),
-    "events_dow_hour_profile":  # hash-paired r7d
+    "events_dow_hour_profile":
         ordered(timeseries.events_dow_hour_profile, "dow", "hour"),
-    "neardup_label_conflict":  # hash-paired r7d
+    "neardup_label_conflict":
         ordered(dedup.neardup_label_conflict, "component"),
-    "lsh_band_tuning":  # hash-paired r7d
+    "lsh_band_tuning":
         ordered(dedup.lsh_band_tuning, "bands", "jbucket"),
-    "packing_boundary_audit":  # hash-paired r7d
+    "packing_boundary_audit":
         ordered(curation.packing_boundary_audit, "source"),
-    "preference_pair_build":  # hash-paired r7e
+    "preference_pair_build":
         ordered(curation.preference_pair_build, "source", "pair_rank"),
-    "bootstrap_ci_quality":  # hash-paired r7e
+    "bootstrap_ci_quality":
         ordered(curation.bootstrap_ci_quality, "source"),
-    "ks_drift_quality":  # hash-paired r7f
+    "ks_drift_quality":
         ordered(datamix.ks_drift_quality, "source"),
-    "session_gap_sweep":  # hash-paired r7f
+    "session_gap_sweep":
         ordered(timeseries.session_gap_sweep, "gap_minutes"),
-    "dedup_threshold_sweep":  # hash-paired r7f
-        ordered(dedup.dedup_threshold_sweep, "threshold_pct"),
-    "event_pair_itemsets":  # hash-paired r7f
+    "event_pair_itemsets":
         ordered(timeseries.event_pair_itemsets, "item_a", "item_b"),
-    "active_user_ratios":  # hash-paired r7g
+    "active_user_ratios":
         ordered(timeseries.active_user_ratios, "day"),
-    "customer_rfm_segments":  # hash-paired r7g
+    "customer_rfm_segments":
         ordered(relational.customer_rfm_segments,
                 "r_score", "f_score", "m_score"),
-    "watermark_lateness_audit":  # hash-paired r7h
+    "watermark_lateness_audit":
         ordered(timeseries.watermark_lateness_audit, "event_type"),
-    "join_cardinality_audit":  # hash-paired r7h
+    "join_cardinality_audit":
         ordered(skew.join_cardinality_audit, "join_name"),
-    "fightin_words":  # hash-paired r7h
+    "fightin_words":
         ordered(textstats.fightin_words, "source", "rank"),
-    "events_cusum_changepoint":  # hash-paired r7i
+    "events_cusum_changepoint":
         ordered(timeseries.events_cusum_changepoint, "event_type", "day"),
-    "kwic_concordance":  # hash-paired r7i
+    "kwic_concordance":
         ordered(textstats.kwic_concordance, "doc_id", "pos"),
-    "ivm_orders_agg":  # hash-paired r7i
+    "ivm_orders_agg":
         ordered(cdc.ivm_orders_agg, "o_orderstatus"),
-    "orders_cohort_ltv":  # hash-paired r7j
+    "orders_cohort_ltv":
         ordered(relational.orders_cohort_ltv,
                 "cohort_year", "cohort_month0", "k"),
-    "conversion_attribution":  # hash-paired r7j
+    "conversion_attribution":
         ordered(timeseries.conversion_attribution, "credit"),
-    "user_active_streaks":  # hash-paired r7k
+    "user_active_streaks":
         ordered(timeseries.user_active_streaks, "user_id"),
-    "pii_redact_audit":  # hash-paired r7l
+    "pii_redact_audit":
         ordered(textstats.pii_redact_audit, "source"),
-    "benford_audit":  # hash-paired r7l
-        ordered(curation.benford_audit, "digit"),
-    "orders_abc_pareto":  # hash-paired r7l
-        ordered(relational.orders_abc_pareto, "abc_class"),
-    "label_propagation_communities":  # hash-paired r7m
-        ordered(dedup.label_propagation_communities, "doc_id"),
-    "sax_motifs":  # hash-paired r7m
-        ordered(timeseries.sax_motifs, "event_type", "n DESC", "motif"),
-    "dedup_chain_audit":  # hash-paired r7n
-        ordered(dedup.dedup_chain_audit, "component"),
-    "vocab_growth_heaps":  # hash-paired r7n
-        ordered(textstats.vocab_growth_heaps, "checkpoint"),
-    "embedding_outlier_scores":  # hash-paired r7o
-        ordered(similarity.embedding_outlier_scores, "rank"),
-    "orders_interarrival_profile":  # hash-paired r7p
+    "orders_interarrival_profile":
         ordered(relational.orders_interarrival_profile, "o_custkey"),
-    "order_status_flow":  # hash-paired r7p
-        ordered(relational.order_status_flow, "from_status", "to_status"),
-    "events_pattern_match":  # hash-paired r7q
-        ordered(timeseries.events_pattern_match, "pattern"),
-    "quality_filter_agreement":  # hash-paired r7r
+    "quality_filter_agreement":
         ordered(curation.quality_filter_agreement, "sig_a", "sig_b"),
-    # round-7 wave s: preference / evaluation / survival statistics
     "skyline_quality_frontier":
         ordered(relational.skyline_quality_frontier, "n_chars DESC", "doc_id"),
     "auc_roc_langid": ordered(curation.auc_roc_langid, "threshold"),
     "survival_kaplan_meier": ordered(timeseries.survival_kaplan_meier, "t"),
-    # round-7 wave t: keyword extraction / decomposition / growth ledger
-    "keyphrase_rake":
-        ordered(textstats.keyphrase_rake, "rake_e6 DESC", "freq DESC", "word"),
     "events_stl_seasonal":
         ordered(timeseries.events_stl_seasonal, "event_type", "dow"),
     "user_growth_accounting": ordered(timeseries.user_growth_accounting, "wk"),
-    # round-7 wave u: basket mining / robust trend / journey paths
     "basket_part_pairs":
         ordered(relational.basket_part_pairs, "support DESC", "p1", "p2"),
     "theil_sen_trend": ordered(timeseries.theil_sen_trend, "event_type"),
     "session_path_topk":
         ordered(timeseries.session_path_topk, "n_sessions DESC", "path"),
-    # round-7 wave v: entity resolution / embedding diagnostics / sparse sim
     "customer_entity_blocking":
         ordered(relational.customer_entity_blocking,
                 "nationkey", "mktsegment", "id1", "id2"),
@@ -349,56 +406,45 @@ QUERIES: dict[str, QueryFn] = {
     "sparse_cosine_pairs_topk":
         ordered(similarity.sparse_cosine_pairs_topk,
                 "cosine DESC", "id1", "id2"),
-    # round-7 wave w: multi-touch attribution / burstiness / position bias
     "attribution_linear_credit":
         ordered(timeseries.attribution_linear_credit, "credit"),
     "term_burstiness": ordered(textstats.term_burstiness, "cf DESC", "term"),
     "doc_position_profile": ordered(textstats.doc_position_profile, "decile"),
-    # round-7 wave x: containment dedup / provenance matrix / segmentation
     "dedup_containment":
         ordered(dedup.dedup_containment, "id_small", "id_big"),
     "cross_source_duplication_matrix":
         ordered(dedup.cross_source_duplication_matrix, "src_a", "src_b"),
     "text_tiling_boundaries":
         ordered(textstats.text_tiling_boundaries, "doc_id"),
-    # round-7 wave y: trend testing / compressed sketches / sampling design
     "mann_kendall_trend": ordered(timeseries.mann_kendall_trend, "event_type"),
     "minhash_bbit_estimate":
         ordered(dedup.minhash_bbit_estimate, "jaccard_e6 DESC", "id1", "id2"),
     "neyman_allocation_plan":
         ordered(datamix.neyman_allocation_plan, "source"),
-    # round-7 wave z: forecast baseline / rank drift / randomness test
     "forecast_backtest_snaive":
         ordered(timeseries.forecast_backtest_snaive, "event_type"),
     "source_rank_correlation":
         ordered(textstats.source_rank_correlation, "src_a", "src_b"),
     "runs_test_daily": ordered(timeseries.runs_test_daily, "event_type"),
-    # round-8 wave a (r7 continuation): concordance / joint structure
     "quality_kendall_tau": ordered(curation.quality_kendall_tau, "source"),
     "lang_source_mutual_info":
         ordered(datamix.lang_source_mutual_info, "lang", "source"),
     "session_transition_entropy":
         ordered(timeseries.session_transition_entropy, "from_type"),
-    # round-8 wave b: effect sizes / QQ drift / gains table
     "quality_flag_odds_ratio":
         ordered(curation.quality_flag_odds_ratio, "flag", "source"),
     "length_qq_drift": ordered(datamix.length_qq_drift, "source", "pct"),
     "quality_decile_lift": ordered(curation.quality_decile_lift, "decile"),
-    # round-8 wave c: context diversity / seasonal shocks / tail index
-    "token_context_diversity":
-        ordered(textstats.token_context_diversity, "freq DESC", "word"),
     "events_residual_anomaly":
         ordered(timeseries.events_residual_anomaly, "event_type", "d"),
     "length_hill_tail_index":
         ordered(datamix.length_hill_tail_index, "source"),
-    # round-8 wave d: parameter sensitivity / rhythm stability / inequality
     "dedup_shingle_size_sweep":
         ordered(dedup.dedup_shingle_size_sweep, "shingle_k"),
     "dow_profile_stability":
         ordered(timeseries.dow_profile_stability, "event_type", "wk"),
     "token_mass_lorenz":
         ordered(datamix.token_mass_lorenz, "source", "decile"),
-    # round-8 wave e: supply-chain risk on the part x supplier edge
     "part_supplier_hhi":
         ordered(relational.part_supplier_hhi,
                 "hhi_e6 DESC", "n_lines DESC", "partkey"),
@@ -407,102 +453,73 @@ QUERIES: dict[str, QueryFn] = {
                 "wilson_lower DESC", "n DESC", "partkey"),
     "supply_bipartite_profile":
         ordered(relational.supply_bipartite_profile, "side", "degree"),
-    # round-8 wave f: prefix-filtered scale path for directed containment
     "dedup_containment_prefix":
         ordered(dedup.dedup_containment_prefix, "id_small", "id_big"),
-    # round-8 wave g: score calibration / bucket-layout planning /
-    # positional template detection
     "quality_calibration_bins":
         ordered(curation.quality_calibration_bins, "bin"),
     "partition_skew_plan": ordered(skew.partition_skew_plan, "bucket"),
     "token_positional_entropy":
         ordered(textstats.token_positional_entropy, "pos"),
-    # round-8 wave h: retrieval eval / quantization audit / merge
-    # governance
     "retrieval_label_precision":
         ordered(similarity.retrieval_label_precision, "qid"),
     "embedding_quant_sqnr": ordered(similarity.embedding_quant_sqnr, "dim"),
     "algebraic_merge_audit":
         ordered(relational.algebraic_merge_audit, "source"),
-    # round-8 wave i: hash-width governance / experimentation health
     "hash_width_collision_audit":
         ordered(dedup.hash_width_collision_audit, "bits DESC"),
     "experiment_srm_audit": ordered(curation.experiment_srm_audit, "arm"),
-    # round-8 wave j: dup-graph structure (triangles, assortativity)
     "graph_triangle_count":
         ordered(dedup.graph_triangle_count, "n_triangles DESC", "doc_id"),
     "graph_degree_assortativity": dedup.graph_degree_assortativity,
-    # round-8 wave k: transport-cost drift, shuffle-order audit,
-    # zone-map skipping
     "wasserstein_source_drift":
         ordered(datamix.wasserstein_source_drift, "source"),
     "shard_order_runs_audit": ordered(datamix.shard_order_runs_audit, "shard"),
     "zone_map_skipping_audit":
         ordered(layout.zone_map_skipping_audit, "layout", "probe_id"),
-    # round-8 wave l: record-linkage weights, absorbing-chain funnel
     "fellegi_sunter_weights":
         ordered(relational.fellegi_sunter_weights, "field"),
     "markov_absorption_steps":
         ordered(timeseries.markov_absorption_steps, "state"),
-    # round-8 wave m: shard-routing & CV-fold governance
     "consistent_hash_migration_audit":
         ordered(skew.consistent_hash_migration_audit, "server"),
     "kfold_strata_audit":
         ordered(curation.kfold_strata_audit, "lang", "source"),
-    # round-8 wave n: dup-graph k-core peeling, mergeable sliding
-    # distinct (rolling HLL)
     "kcore_dedup_graph": ordered(dedup.kcore_dedup_graph, "k", "peel_round"),
     "rolling_distinct_users_hll":
         ordered(timeseries.rolling_distinct_users_hll, "day"),
-    # round-8 wave o: ER survivorship merge, encoding-layout audit
     "er_survivorship_golden":
         ordered(relational.er_survivorship_golden, "golden_custkey"),
     "encoding_dictionary_audit":
         ordered(layout.encoding_dictionary_audit, "col_name"),
-    # round-8 wave p: removal-effect attribution, PSI drift gate
     "markov_attribution_removal":
         ordered(timeseries.markov_attribution_removal, "channel"),
     "psi_source_drift": ordered(datamix.psi_source_drift, "source"),
-    # round-8 wave q: peeking audit, RLE run-length layout audit
     "experiment_peeking_audit":
         ordered(curation.experiment_peeking_audit, "day"),
     "rle_run_length_audit": ordered(layout.rle_run_length_audit, "col_name"),
-    # round-8 wave r: CUPED adjustment, dedup token-savings ledger
     "ab_cuped_adjustment": ordered(curation.ab_cuped_adjustment, "arm"),
     "dedup_token_savings": ordered(dedup.dedup_token_savings, "source"),
-    # round-8 wave s: partition-quality score over the dup graph,
-    # Kleinberg burst automaton
     "graph_modularity_audit": ordered(dedup.graph_modularity_audit, "method"),
     "events_burst_kleinberg":
         ordered(timeseries.events_burst_kleinberg, "event_type", "day"),
-    # round-8 wave t: isotonic calibration fit, JL distortion audit
     "isotonic_calibration_pav":
         ordered(curation.isotonic_calibration_pav, "bin"),
     "embedding_jl_distortion_audit":
         ordered(similarity.embedding_jl_distortion_audit, "bin"),
-    # round-8 wave u: word2vec sampling table, HLL inclusion-exclusion
     "negative_sampling_table":
         ordered(textstats.negative_sampling_table, "rank"),
     "hll_intersection_audit":
         ordered(textstats.hll_intersection_audit, "s1", "s2"),
-    # round-8 wave v: runtime-filter join governance, rich-club sweep
     "bloom_join_prefilter_audit":
         ordered(relational.bloom_join_prefilter_audit, "o_orderpriority"),
     "graph_rich_club": ordered(dedup.graph_rich_club, "k"),
-    # round-8 wave w: sketch IVM, time-decay attribution
     "ivm_hll_registers": ordered(textstats.ivm_hll_registers, "source"),
     "attribution_time_decay":
         ordered(timeseries.attribution_time_decay, "channel"),
-    "readability_scores":  # hash-paired r7l
-        ordered(textstats.readability_scores, "source"),
-    "events_acf":  # hash-paired r7k
-        ordered(timeseries.events_acf, "event_type", "lag"),
-    "session_concurrency":  # hash-paired r7k
+    "session_concurrency":
         ordered(timeseries.session_concurrency, "day"),
-    "events_holt_linear":  # hash-paired r7k
+    "events_holt_linear":
         ordered(timeseries.events_holt_linear, "event_type", "day"),
-    "compression_ratio_quality":  # rows-only (DEFLATE not SQL-expressible)
-        ordered(textstats.compression_ratio_quality, "source"),
     "padding_waste_audit": ordered(curation.padding_waste_audit, "strategy"),
     "inbatch_collision_audit":
         ordered(curation.inbatch_collision_audit, "source"),
@@ -518,15 +535,7 @@ QUERIES: dict[str, QueryFn] = {
         ordered(datamix.source_overlap_matrix, "src_a", "src_b"),
     "embedding_pca_power":  # rows-only (iterative fixpoint)
         ordered(similarity.embedding_pca_power, "dim"),
-    # -- previously witnessed (r5 window), filling out the r6 window --
-    "bloom_decontaminate": ordered(datamix.bloom_decontaminate, "source"),
     "dedup_span_chunks": ordered(dedup.dedup_span_chunks, "doc_id"),
-    "unigram_logprob_quality":
-        ordered(textstats.unigram_logprob_quality, "source"),
-    "zorder_layout": ordered(layout.zorder_layout, "file_id"),
-    "shard_layout_plan":  # hash-paired r7e
-        ordered(layout.shard_layout_plan, "source"),
-    "split_leakage_guard": curation.split_leakage_guard,
     "audio_meta": ordered(multimodal.audio_meta, "doc_id"),
     "pipeline_pretrain_scale":
         ordered(pipeline.pipeline_pretrain_scale, "source"),
@@ -573,22 +582,16 @@ QUERIES: dict[str, QueryFn] = {
         ordered(datamix.global_shuffle_order, "shard", "pos"),
     "knn_join_lsh":  # rows-only (approximate kNN join)
         ordered(similarity.knn_join_lsh, "qid", "rank"),
-    "embedding_kmeans_stats":  # hash-paired r8 (portable exact Lloyd)
+    "embedding_kmeans_stats":  # hash-paired (portable exact Lloyd)
         ordered(similarity.embedding_kmeans_stats, "cluster"),
-    "seq_packing":  # hash-paired r7 (lockstep recursive first-fit twin)
+    "seq_packing":  # hash-paired (lockstep recursive first-fit twin)
         ordered(curation.seq_packing, "source", "pack_id"),
-    "dedup_components_star": ordered(dedup.dedup_components_star, "doc_id"),
-    "pipeline_pretrain": ordered(pipeline.pipeline_pretrain, "split"),
     "keyword_search":
         ordered(textstats.keyword_search, "score DESC", "doc_id"),
     "dup_ngram_rate": ordered(datamix.dup_ngram_rate, "source"),
     "sample_fixed_per_source":
         ordered(datamix.sample_fixed_per_source, "source", "rk"),
     "token_zipf_slope": textstats.token_zipf_slope,
-    # rows-only operators sit just past the 50-query driver window: the
-    # driver's rows-only check is weaker than the hash check, so window
-    # slots go to hash-comparable queries; CORRECTNESS_full.json covers
-    # these every round regardless.
     "ann_pq_adc":  # rows-only (quantized ranks)
         ordered(similarity.ann_pq_adc, "qid", "rank"),
     "ann_pq_rerank":  # rows-only (ADC shortlist)
@@ -597,49 +600,20 @@ QUERIES: dict[str, QueryFn] = {
         ordered(similarity.ann_ivfpq_rerank, "qid", "rank"),
     "hll_union_sources":  # rows-only (DataSketches HLL)
         ordered(textstats.hll_union_sources, "source"),
-    "hll_portable_union":  # hash-paired r7b (md5 registers)
-        ordered(textstats.hll_portable_union, "source"),
-    "winnowing_fingerprint":  # hash-paired r7b
+    "winnowing_fingerprint":
         ordered(textstats.winnowing_fingerprint, "doc_id"),
-    # 'head' < 'middle' < 'tail' alphabetically == tercile order
-    "ccnet_perplexity_buckets":  # hash-paired r7b
-        ordered(textstats.ccnet_perplexity_buckets, "lang", "bucket"),
-    "vocab_coverage_curve":  # hash-paired r7b
-        ordered(textstats.vocab_coverage_curve, "vocab_k"),
-    "embedding_centroid_drift":  # hash-paired r7b
-        ordered(similarity.embedding_centroid_drift, "label"),
-    "char_trigram_langid":  # hash-paired r7b
-        ordered(textstats.char_trigram_langid, "lang", "pred_lang"),
-    "minhash_accuracy_audit":  # hash-paired r7b
-        ordered(dedup.minhash_accuracy_audit, "err_decile"),
-    "quantile_histogram_portable":  # hash-paired r7b
-        ordered(relational.quantile_histogram_portable, "o_orderstatus", "q"),
-    "events_ewma_daily":  # hash-paired r7b
-        ordered(timeseries.events_ewma_daily, "event_type", "day"),
-    "salted_aggregate_events":  # hash-paired r7b
-        ordered(skew.salted_aggregate_events, "event_type"),
-    "join_skew_audit":  # hash-paired r7e
-        ordered(skew.join_skew_audit, "axis", "partition_id"),
-    "winnowing_neardup_pairs":  # hash-paired r7b
+    "winnowing_neardup_pairs":
         ordered(textstats.winnowing_neardup_pairs, "id1", "id2"),
     "events_lttb_downsample":
         ordered(timeseries.events_lttb_downsample, "event_type", "rank"),
-    "pagerank_dedup_graph":  # hash-paired r7 (recursive-CTE twin)
-        ordered(dedup.pagerank_dedup_graph, "rk"),
-    "semdedup_ivf":  # hash-paired r8 (portable Lloyd + recursive greedy twin)
+    "semdedup_ivf":  # hash-paired (portable Lloyd + recursive greedy twin)
         ordered(similarity.semdedup_ivf, "vec_id"),
-    "mmr_diversified_topk":  # hash-paired r7 (recursive greedy twin)
+    "mmr_diversified_topk":  # hash-paired (recursive greedy twin)
         ordered(similarity.mmr_diversified_topk, "qid", "rank"),
-    # --- previously driver-recorded (r1-r4 windows) ---
-    "ngram_count": ordered(_ngram_count, "ngram"),
     "ngram_topk": ordered(_ngram_topk, "cnt DESC", "ngram"),
-    "q1_pricing_summary":
-        ordered(relational.q1_pricing_summary, "l_returnflag", "l_linestatus"),
     "q3_shipping_priority":
         ordered(relational.q3_shipping_priority,
                 "revenue DESC", "o_orderdate", "o_orderkey"),
-    "q5_local_supplier_volume":
-        ordered(relational.q5_local_supplier_volume, "revenue DESC", "n_name"),
     "q6_forecast_revenue": relational.q6_forecast_revenue,
     "q18_large_volume_customer":
         ordered(relational.q18_large_volume_customer,
@@ -746,8 +720,6 @@ QUERIES: dict[str, QueryFn] = {
     "sample_stratified":  # rows-only (engine-specific subset)
         ordered(relational.sample_stratified, "o_orderstatus"),
     "pipeline_curation": ordered(pipeline.pipeline_curation, "source"),
-    "dedup_exact": ordered(dedup.dedup_exact, "keep_id"),
-    "dedup_minhash_lsh": ordered(dedup.dedup_minhash_lsh, "id1", "id2"),
     "dedup_simhash": ordered(dedup.dedup_simhash, "doc_id"),
     "dedup_ngram_jaccard": ordered(dedup.dedup_ngram_jaccard, "id1", "id2"),
     "dedup_embedding_cosine":
@@ -759,26 +731,14 @@ QUERIES: dict[str, QueryFn] = {
     "sim_search_topk": ordered(similarity.sim_search_topk, "qid", "rank"),
     "ann_ivf_topk": similarity.ann_ivf_topk,  # rows-only (approximate)
     "embedding_stats": ordered(similarity.embedding_stats, "label"),
-    "text_quality": ordered(textstats.text_quality, "doc_id"),
-    "token_count": ordered(textstats.token_count, "source"),
     "language_id": ordered(textstats.language_id, "lang", "pred_lang"),
     "doc_fingerprint": ordered(textstats.doc_fingerprint, "doc_id"),
     "tfidf_top_terms": ordered(textstats.tfidf_top_terms, "doc_id", "rnk"),
-    "heavy_hitters_cms":  # hash-paired r7 (md5 cells -> identical sketch)
+    "heavy_hitters_cms":  # hash-paired (md5 cells -> identical sketch)
         ordered(textstats.heavy_hitters_cms, "est DESC", "term"),
-    # r7: the video-modality twin of audio_meta (ISO-BMFF box walk)
-    "video_meta": ordered(multimodal.video_meta, "doc_id"),
-    # r7: the dup-n-gram half of the Gopher repetition gate
     "gopher_dup_ngrams": ordered(datamix.gopher_dup_ngrams, "source"),
-    # r7: Kneser-Ney smoothing — the standard rung above bigram_lm_quality
     "kneser_ney_quality":
         ordered(textstats.kneser_ney_quality, "kn_lp_e6", "doc_id"),
-    # r7: cluster-size histogram over the near-dup CC assignment
-    "dedup_cluster_size_histogram":
-        ordered(dedup.dedup_cluster_size_histogram, "cluster_size"),
-    # r7: per-dimension embedding audit (dead/skewed dims before ANN)
-    "embedding_dim_stats": ordered(similarity.embedding_dim_stats, "dim"),
-    # r7: nearest-direction as-of join with tolerance (merge_asof twin)
     "asof_join_nearest": ordered(timeseries.asof_join_nearest, "event_id"),
     "multimodal_decode": ordered(multimodal.multimodal_decode, "doc_id"),
     "frame_sample": ordered(multimodal.frame_sample, "doc_id"),
@@ -788,15 +748,10 @@ QUERIES: dict[str, QueryFn] = {
         ordered(timeseries.events_tumbling, "window_start", "event_type"),
     "events_sliding":
         ordered(timeseries.events_sliding, "window_start", "event_type"),
-    "events_session":
-        ordered(timeseries.events_session, "user_id", "session_start"),
     "events_dedup_first":
         ordered(timeseries.events_dedup_first, "user_id", "event_type"),
     "asof_join_events_orders":
         ordered(timeseries.asof_join_events_orders, "event_id"),
-    "events_gap_fill": ordered(timeseries.events_gap_fill, "user_id", "hour"),
-    "events_daily_ohlc":
-        ordered(timeseries.events_daily_ohlc, "user_id", "day"),
     "udf_pandas_vector_norm": ordered(udfs.udf_pandas_vector_norm, "vec_id"),
     "udf_grouped_agg_mean":
         ordered(udfs.udf_grouped_agg_mean, "o_orderstatus"),
@@ -819,6 +774,15 @@ WITH toks AS (SELECT {TOKS_SQL} AS t FROM documents),
 grams AS (SELECT unnest({ngrams_sql('t', 3)}) AS ngram FROM toks)
 SELECT ngram, count(*) AS cnt FROM grams GROUP BY ngram
 """
+
+# d0(doc_id, text, source, t): the documents that pass the quality gate
+# (functions/quality.py), with their tokens; a CTE the pipelines splice in.
+_QUALITY_KEPT = f"""d0 AS (
+  SELECT doc_id, text, source, t
+  FROM (SELECT doc_id, text, source, {TOKS_SQL} AS t FROM documents)
+  WHERE {quality_pass_sql(quality_score_sql(
+      "t", "length(text)", punct_count_sql("text")))}
+)"""
 
 # The near-dup oracle kernels. Each is a CTE list an oracle splices
 # into its own WITH, so every exact pair base, component labelling and
@@ -1188,26 +1152,8 @@ FROM (
     "distinct_dedup_rows": """
 SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
 """,
-    "pipeline_curation": rf"""
-WITH t0 AS (
-  SELECT doc_id, text, source, {TOKS_SQL} AS t,
-    length(text) AS nc,
-    length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g')) AS np
-  FROM documents
-),
-t1 AS (
-  SELECT doc_id, text, source, t, nc, np, len(t) AS ntok,
-    list_sum(list_transform(t, x -> length(x))) * 1.0 / len(t) AS awl
-  FROM t0
-),
-q AS (
-  SELECT doc_id, text, source, t,
-    round((CASE WHEN ntok >= 5 THEN 1.0 ELSE 0.0 END
-         + CASE WHEN awl >= 3 AND awl <= 10 THEN 1.0 ELSE 0.0 END
-         + CASE WHEN np * 1.0 / nc < 0.2 THEN 1.0 ELSE 0.0 END) / 3.0, 4) AS quality
-  FROM t1
-),
-d0 AS (SELECT doc_id, text, source, t FROM q WHERE quality >= 0.6),
+    "pipeline_curation": f"""
+WITH {_QUALITY_KEPT},
 keep AS (SELECT min(doc_id) AS doc_id FROM d0 GROUP BY sha256(text)),
 d1 AS (SELECT d0.* FROM d0 JOIN keep USING (doc_id)),
 j AS ({_NEAR_DUPS}),
@@ -1268,30 +1214,22 @@ SELECT label::BIGINT AS label, count(*) AS n,
 FROM (SELECT label, embedding::DOUBLE[] AS e FROM embeddings)
 GROUP BY label
 """,
-    "text_quality": rf"""
+    "text_quality": f"""
 WITH t0 AS (
-  SELECT doc_id, text, {TOKS_SQL} AS t,
-    length(text) AS nc,
-    length(text) - length(regexp_replace(text, '[^\w\t\n\x0B\f\r ]', '', 'g')) AS np
+  SELECT doc_id, {TOKS_SQL} AS t, length(text) AS nc,
+    {punct_count_sql("text")} AS np
   FROM documents
 ),
 t1 AS (
-  SELECT doc_id, t, nc, np,
-    len(t) AS ntok,
-    CASE WHEN len(t) > 0
-         THEN list_sum(list_transform(t, x -> length(x))) * 1.0 / len(t)
-         ELSE 0.0 END AS awl,
-    CASE WHEN nc > 0 THEN np * 1.0 / nc ELSE 0.0 END AS pr,
+  SELECT doc_id, t, nc, np, len(t) AS ntok,
     len(list_intersect(t, ['the','and','of','to','a','in','is','it','you','that'])) AS sh
   FROM t0
 )
 SELECT doc_id, ntok::BIGINT AS n_tokens, nc::BIGINT AS n_chars_m,
-  round(awl, 4) AS avg_word_len,
+  round({avg_word_len_sql("t")}, 4) AS avg_word_len,
   round(CASE WHEN ntok > 0 THEN sh * 1.0 / ntok ELSE 0.0 END, 4) AS stopword_ratio,
-  round(pr, 4) AS punct_ratio,
-  round((CASE WHEN ntok >= 5 THEN 1.0 ELSE 0.0 END
-       + CASE WHEN awl >= 3 AND awl <= 10 THEN 1.0 ELSE 0.0 END
-       + CASE WHEN pr < 0.2 THEN 1.0 ELSE 0.0 END) / 3.0, 4) AS quality
+  round({punct_ratio_sql("np", "nc")}, 4) AS punct_ratio,
+  {quality_score_sql("t", "nc", "np")} AS quality
 FROM t1
 """,
     "token_count": rf"""
@@ -1838,16 +1776,9 @@ SELECT doc_id, length(clean)::BIGINT AS clean_len,
 FROM s
 """,
     "dataset_split": rf"""
-WITH b AS (
-  SELECT {h60_sql("doc_id::VARCHAR")} % 100 AS bucket,
-         len({split_ws_sql("trim(text)")})::BIGINT AS n_tokens
-  FROM documents
-)
-SELECT CASE WHEN bucket < 10 THEN 'val'
-            WHEN bucket < 20 THEN 'test'
-            ELSE 'train' END AS split,
-  count(*)::BIGINT AS n_docs, sum(n_tokens)::BIGINT AS total_tokens
-FROM b GROUP BY 1
+SELECT {doc_split_sql("doc_id")} AS split, count(*)::BIGINT AS n_docs,
+  sum(len({split_ws_sql("trim(text)")}))::BIGINT AS total_tokens
+FROM documents GROUP BY 1
 """,
     "dq_checks": r"""
 WITH c AS (
@@ -1942,12 +1873,12 @@ grams AS (
   SELECT DISTINCT doc_id, unnest({ngrams_sql('t', 4)}) AS g
   FROM toks
 ),
-bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % 20 = 0),
+bench AS (SELECT DISTINCT g FROM grams WHERE {is_bench_sql('doc_id')}),
 hits AS (
   SELECT DISTINCT doc_id FROM grams
-  WHERE doc_id % 20 <> 0 AND g IN (SELECT g FROM bench)
+  WHERE NOT {is_bench_sql('doc_id')} AND g IN (SELECT g FROM bench)
 ),
-train AS (SELECT doc_id, source FROM documents WHERE doc_id % 20 <> 0)
+train AS (SELECT doc_id, source FROM documents WHERE NOT {is_bench_sql('doc_id')})
 SELECT t.source, count(*)::BIGINT AS n_train_docs,
   count(h.doc_id)::BIGINT AS n_contaminated,
   round(count(h.doc_id) * 1.0 / count(*), 4) AS contam_rate
@@ -1959,7 +1890,7 @@ WITH {_SHINGLE_SETS},
 inter AS (
   SELECT t.doc_id AS train_id, b.doc_id AS bench_id, count(*) AS c
   FROM sh t JOIN sh b ON t.s = b.s
-  WHERE t.doc_id % 20 <> 0 AND b.doc_id % 20 = 0
+  WHERE NOT {is_bench_sql('t.doc_id')} AND {is_bench_sql('b.doc_id')}
   GROUP BY 1, 2
 ),
 jac AS (
@@ -1971,10 +1902,10 @@ jac AS (
 SELECT train_id, bench_id, round(j, 6) AS jaccard FROM jac
 WHERE j >= 0.8
 """,
-    "decontaminate_semantic": """
+    "decontaminate_semantic": f"""
 WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-t AS (SELECT vec_id AS train_id, e AS tv FROM v WHERE vec_id % 20 <> 0),
-b AS (SELECT vec_id AS bench_id, e AS bv FROM v WHERE vec_id % 20 = 0),
+t AS (SELECT vec_id AS train_id, e AS tv FROM v WHERE NOT {is_bench_sql('vec_id')}),
+b AS (SELECT vec_id AS bench_id, e AS bv FROM v WHERE {is_bench_sql('vec_id')}),
 s AS (
   SELECT train_id, bench_id,
     list_dot_product(tv, bv)
@@ -2003,12 +1934,12 @@ FROM m WHERE rn = 1 AND n_members >= 2
 WITH RECURSIVE
 {_jaccard_pairs(0.8)},
 contaminated AS (
-  SELECT DISTINCT CASE WHEN id1 % 20 = 0 THEN id2 ELSE id1 END AS doc_id
-  FROM jac WHERE (id1 % 20 = 0) <> (id2 % 20 = 0)
+  SELECT DISTINCT CASE WHEN {is_bench_sql('id1')} THEN id2 ELSE id1 END AS doc_id
+  FROM jac WHERE {is_bench_sql('id1')} <> {is_bench_sql('id2')}
 ),
 surv AS (
   SELECT doc_id, source, n_chars FROM documents
-  WHERE doc_id % 20 <> 0
+  WHERE NOT {is_bench_sql('doc_id')}
     AND doc_id NOT IN (SELECT doc_id FROM contaminated)
 ),
 sedge AS (
@@ -2030,10 +1961,10 @@ tokf AS (
     {h60_sql("w")} % 10000 AS f
   FROM tok0
 ),
-ct AS (SELECT f, count(*) AS ct FROM tokf WHERE doc_id % 20 = 0 GROUP BY f),
-cr AS (SELECT f, count(*) AS cr FROM tokf WHERE doc_id % 20 <> 0 GROUP BY f),
-nt AS (SELECT count(*) AS nt FROM tokf WHERE doc_id % 20 = 0),
-nr AS (SELECT count(*) AS nr FROM tokf WHERE doc_id % 20 <> 0),
+ct AS (SELECT f, count(*) AS ct FROM tokf WHERE {is_bench_sql('doc_id')} GROUP BY f),
+cr AS (SELECT f, count(*) AS cr FROM tokf WHERE NOT {is_bench_sql('doc_id')} GROUP BY f),
+nt AS (SELECT count(*) AS nt FROM tokf WHERE {is_bench_sql('doc_id')}),
+nr AS (SELECT count(*) AS nr FROM tokf WHERE NOT {is_bench_sql('doc_id')}),
 ratio AS (
   SELECT coalesce(ct.f, cr.f) AS f,
     ln((coalesce(ct, 0) + 1) * 1.0 / (nt + 10000))
@@ -2042,11 +1973,11 @@ ratio AS (
 ),
 cdf AS (
   SELECT doc_id, f, count(*) AS c FROM tokf
-  WHERE doc_id % 20 <> 0 GROUP BY 1, 2
+  WHERE NOT {is_bench_sql('doc_id')} GROUP BY 1, 2
 ),
 lw AS (SELECT doc_id, round(sum(c * llr), 8) AS lw
        FROM cdf JOIN ratio USING (f) GROUP BY 1),
-train AS (SELECT doc_id, source FROM documents WHERE doc_id % 20 <> 0),
+train AS (SELECT doc_id, source FROM documents WHERE NOT {is_bench_sql('doc_id')}),
 flags AS (
   SELECT t.source,
     (c.doc_id IS NOT NULL) AS is_contam,
@@ -2099,10 +2030,10 @@ tok AS (
     {h60_sql("w")} % 10000 AS f
   FROM tok0
 ),
-ct AS (SELECT f, count(*) AS ct FROM tok WHERE doc_id % 20 = 0 GROUP BY f),
-cr AS (SELECT f, count(*) AS cr FROM tok WHERE doc_id % 20 <> 0 GROUP BY f),
-nt AS (SELECT count(*) AS nt FROM tok WHERE doc_id % 20 = 0),
-nr AS (SELECT count(*) AS nr FROM tok WHERE doc_id % 20 <> 0),
+ct AS (SELECT f, count(*) AS ct FROM tok WHERE {is_bench_sql('doc_id')} GROUP BY f),
+cr AS (SELECT f, count(*) AS cr FROM tok WHERE NOT {is_bench_sql('doc_id')} GROUP BY f),
+nt AS (SELECT count(*) AS nt FROM tok WHERE {is_bench_sql('doc_id')}),
+nr AS (SELECT count(*) AS nr FROM tok WHERE NOT {is_bench_sql('doc_id')}),
 ratio AS (
   SELECT coalesce(ct.f, cr.f) AS f,
     ln((coalesce(ct, 0) + 1) * 1.0 / (nt + 10000))
@@ -2111,7 +2042,7 @@ ratio AS (
 ),
 cdf AS (
   SELECT doc_id, source, f, count(*) AS c FROM tok
-  WHERE doc_id % 20 <> 0 GROUP BY 1, 2, 3
+  WHERE NOT {is_bench_sql('doc_id')} GROUP BY 1, 2, 3
 ),
 lw AS (
   SELECT doc_id, source, round(sum(c * llr), 8) AS lw
@@ -2210,28 +2141,13 @@ ORACLE["dedup_components_star"] = ORACLE["dedup_connected_components"]
 
 # Compound pretraining-assembly pipeline: quality gate -> exact dedup ->
 # 4-gram benchmark decontamination -> salted-hash domain mixture ->
-# md5-bucket split ledger. Every stage reuses the per-stage oracles'
-# expressions so the compound result stays hash-checkable end to end.
-ORACLE["pipeline_pretrain"] = rf"""
-WITH t0 AS (
-  SELECT doc_id, text, source, {TOKS_SQL} AS t,
-    length(text) AS nc,
-    length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g')) AS np
-  FROM documents
-),
-t1 AS (
-  SELECT doc_id, text, source, t, nc, np, len(t) AS ntok,
-    list_sum(list_transform(t, x -> length(x))) * 1.0 / len(t) AS awl
-  FROM t0
-),
-q AS (
-  SELECT doc_id, text, source, t,
-    round((CASE WHEN ntok >= 5 THEN 1.0 ELSE 0.0 END
-         + CASE WHEN awl >= 3 AND awl <= 10 THEN 1.0 ELSE 0.0 END
-         + CASE WHEN np * 1.0 / nc < 0.2 THEN 1.0 ELSE 0.0 END) / 3.0, 4) AS quality
-  FROM t1
-),
-d0 AS (SELECT doc_id, text, source, t FROM q WHERE quality >= 0.6),
+# md5-bucket split ledger. The stages splice the twins the per-stage
+# oracles use: the quality gate (_QUALITY_KEPT, as pipeline_curation),
+# the benchmark carve (as decontaminate_ngram), the n-gram window and
+# the split (as dataset_split); the mixture rates are
+# domain_mixture_sample's, over a salted hash.
+ORACLE["pipeline_pretrain"] = f"""
+WITH {_QUALITY_KEPT},
 keep AS (SELECT min(doc_id) AS doc_id FROM d0 GROUP BY sha256(text)),
 d1 AS (SELECT d0.* FROM d0 JOIN keep USING (doc_id)),
 toks_all AS (SELECT doc_id, {TOKS_SQL} AS t FROM documents),
@@ -2239,27 +2155,24 @@ grams AS (
   SELECT DISTINCT doc_id, unnest({ngrams_sql('t', 4)}) AS g
   FROM toks_all
 ),
-bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % 20 = 0),
+bench AS (SELECT DISTINCT g FROM grams WHERE {is_bench_sql('doc_id')}),
 hits AS (
   SELECT DISTINCT doc_id FROM grams
-  WHERE doc_id % 20 <> 0 AND g IN (SELECT g FROM bench)
+  WHERE NOT {is_bench_sql('doc_id')} AND g IN (SELECT g FROM bench)
 ),
 d2 AS (
   SELECT * FROM d1
-  WHERE doc_id % 20 <> 0 AND doc_id NOT IN (SELECT doc_id FROM hits)
+  WHERE NOT {is_bench_sql('doc_id')} AND doc_id NOT IN (SELECT doc_id FROM hits)
 ),
 d3 AS (
-  SELECT *,
-    {h60_sql("doc_id::VARCHAR")} % 100 AS sb
-  FROM d2
+  SELECT * FROM d2
   WHERE {h60_sql("'mix:' || doc_id::VARCHAR")} % 100
       < (CASE WHEN try_cast(regexp_extract(source, '([0-9]+)', 1) AS INT) < 5 THEN 100
               WHEN try_cast(regexp_extract(source, '([0-9]+)', 1) AS INT) < 10 THEN 50
               WHEN try_cast(regexp_extract(source, '([0-9]+)', 1) AS INT) < 15 THEN 25
               ELSE 10 END)
 )
-SELECT CASE WHEN sb < 10 THEN 'val' WHEN sb < 20 THEN 'test'
-            ELSE 'train' END AS split,
+SELECT {doc_split_sql("doc_id")} AS split,
   count(*)::BIGINT AS n_docs, sum(len(t))::BIGINT AS total_tokens
 FROM d3 GROUP BY 1
 """
@@ -2337,13 +2250,6 @@ FROM r WHERE r <= 500
 """
 
 
-
-# Registry order is stable and build-order-derived (Stage 0 → Wave 4 →
-# curation → CDC). It is deliberately NOT tuned to any driver recording
-# window: in-repo tests/test_oracle_parity_all.py verifies every entry
-# against its oracle each round regardless of what the driver records.
-
-
 # --- Spark-4 SQL-surface oracles (DuckDB speaks all four shapes) ---
 
 ORACLE["recursive_monthly_spine"] = """
@@ -2396,13 +2302,13 @@ grams AS (
   SELECT DISTINCT doc_id, unnest({ngrams_sql('t', 4)}) AS g
   FROM toks
 ),
-bench AS (SELECT g FROM grams WHERE doc_id % 20 = 0),
-train_grams AS (SELECT doc_id, g FROM grams WHERE doc_id % 20 <> 0),
+bench AS (SELECT g FROM grams WHERE {is_bench_sql('doc_id')}),
+train_grams AS (SELECT doc_id, g FROM grams WHERE NOT {is_bench_sql('doc_id')}),
 bitmap AS ({bloom_bitmap_sql("bench", "g", 65536)}),
 probes AS ({bloom_probes_sql("train_grams", "g", 65536, "doc_id, g")}),
 per_gram AS ({bloom_hit_sql("probes", "bitmap", "doc_id, g", "gram_hit")}),
 hits AS (SELECT doc_id, max(gram_hit) AS flagged FROM per_gram GROUP BY doc_id),
-train AS (SELECT doc_id, source FROM documents WHERE doc_id % 20 <> 0)
+train AS (SELECT doc_id, source FROM documents WHERE NOT {is_bench_sql('doc_id')})
 SELECT t.source, count(*)::BIGINT AS n_train_docs,
   sum(coalesce(h.flagged, 0))::BIGINT AS n_flagged_bloom,
   round(sum(coalesce(h.flagged, 0)) * 1.0 / count(*), 4) AS flag_rate
@@ -2558,7 +2464,7 @@ FROM b
 # Every hash is md5-derived, so the chain is hash-comparable end to end.
 ORACLE["pipeline_pretrain_scale"] = f"""
 WITH toks AS (SELECT doc_id, source, {TOKS_SQL} AS t FROM documents),
-tok AS (SELECT doc_id, source, unnest(t) AS tk FROM toks WHERE doc_id % 20 <> 0),
+tok AS (SELECT doc_id, source, unnest(t) AS tk FROM toks WHERE NOT {is_bench_sql('doc_id')}),
 vocab AS (SELECT tk, count(*) AS c FROM tok GROUP BY tk),
 total AS (SELECT sum(c) AS n_total FROM vocab),
 scored AS (
@@ -2585,7 +2491,7 @@ rebuilt AS (
 bgrams AS (
   SELECT DISTINCT doc_id, unnest({ngrams_sql('t', 4)}) AS g
   FROM toks
-  WHERE doc_id % 20 = 0
+  WHERE {is_bench_sql('doc_id')}
 ),
 bitmap AS ({bloom_bitmap_sql("bgrams", "g", 65536)}),
 rt AS (SELECT doc_id, source, n_kept, string_split(rebuilt, ' ') AS rt FROM rebuilt),
@@ -2600,7 +2506,7 @@ final AS (
   SELECT r.doc_id, r.source, len(r.rt) AS ntok, coalesce(c.cont, 0) AS cont
   FROM rt r LEFT JOIN contam c USING (doc_id)
 ),
-n_in AS (SELECT source, count(*) AS n_in FROM documents WHERE doc_id % 20 <> 0 GROUP BY source),
+n_in AS (SELECT source, count(*) AS n_in FROM documents WHERE NOT {is_bench_sql('doc_id')} GROUP BY source),
 n_q AS (SELECT source, count(*) AS n_quality FROM kept_q GROUP BY source),
 outp AS (
   SELECT source, count(*) AS n_dedup, sum((cont = 0)::BIGINT) AS n_clean,
@@ -3213,13 +3119,7 @@ ORDER BY df DESC, tf_total DESC, term LIMIT 100
 
 ORACLE["memorization_novelty"] = f"""
 WITH toks AS (
-  SELECT doc_id,
-    CASE WHEN {h60_sql("doc_id::VARCHAR")}
-              % 100 < 10 THEN 'val'
-         WHEN {h60_sql("doc_id::VARCHAR")}
-              % 100 < 20 THEN 'test'
-         ELSE 'train' END AS split,
-    {TOKS_SQL} AS t
+  SELECT doc_id, {doc_split_sql("doc_id")} AS split, {TOKS_SQL} AS t
   FROM documents),
 grams AS (
   SELECT DISTINCT doc_id, split, unnest({ngrams_sql('t', 5)}) AS g
@@ -3511,85 +3411,6 @@ SELECT qid, nid, round(rel * 1e6)::BIGINT AS relevance_e6,
   round(mmr * 1e6)::BIGINT AS mmr_e6, step::BIGINT AS rank
 FROM sel
 """
-
-# --------------------------------------------------------------------------
-# Correctness window: the round's gate records the FIRST 50 registry
-# entries, so this list sets the head of the dict order below.
-# Composition (r9):
-# (a) queries whose implementation changed THIS round — the rollup
-#     (r7/r8's standing driver-red cell, rewritten to integer epoch
-#     arithmetic on both engines; VERDICT r8 item 1 orders it kept in
-#     the window) and the star-CC/guard consumers of the r9 SQL-build
-#     rewrite;
-# (a') the two r8 operator rewrites that landed AFTER the r8 window was
-#     frozen (keyphrase_rake, token_context_diversity) plus
-#     dedup_minhash_lsh, whose shared pair-builder changed in r8 —
-#     none driver-witnessed at their current implementation;
-# (b) ALL 26 remaining never-witnessed keys — this completes
-#     witnessing of the full registry;
-# (c) fill to 50 with re-witnesses: the date_trunc-rendering timeseries
-#     family (same-signature audit as the rollup fix — OPTIMIZATION_r09
-#     item 1) and stable graded headliners.
-# Pure reordering — no key changes here.
-_WINDOW_R9 = [
-    # (a) changed this round
-    "events_hierarchical_rollup",
-    "split_leakage_guard",
-    "dedup_components_star",
-    "dedup_keep_best",
-    "dedup_incremental",
-    "dedup_cluster_size_histogram",   # also in the never-witnessed queue
-    "pipeline_target_select",
-    # (a') r8 changes never witnessed at HEAD
-    "keyphrase_rake",
-    "token_context_diversity",
-    "dedup_minhash_lsh",
-    # (b) the remaining never-witnessed keys
-    "orders_abc_pareto",
-    "label_propagation_communities",
-    "sax_motifs",
-    "dedup_chain_audit",
-    "vocab_growth_heaps",
-    "embedding_outlier_scores",
-    "order_status_flow",
-    "events_pattern_match",
-    "readability_scores",
-    "events_acf",
-    "compression_ratio_quality",
-    "shard_layout_plan",
-    "hll_portable_union",
-    "ccnet_perplexity_buckets",
-    "vocab_coverage_curve",
-    "embedding_centroid_drift",
-    "char_trigram_langid",
-    "minhash_accuracy_audit",
-    "quantile_histogram_portable",
-    "events_ewma_daily",
-    "salted_aggregate_events",
-    "join_skew_audit",
-    "video_meta",
-    "embedding_dim_stats",
-    "benford_audit",
-    # (c) re-witnesses
-    "pagerank_dedup_graph",
-    "pipeline_pretrain",
-    "dedup_threshold_sweep",
-    "ngram_count",
-    "q1_pricing_summary",
-    "q5_local_supplier_volume",
-    "dedup_exact",
-    "events_gap_fill",
-    "events_daily_ohlc",
-    "events_session",
-    "token_count",
-    "text_quality",
-    "unigram_logprob_quality",
-    "bloom_decontaminate",
-    "zorder_layout",
-]
-assert len(_WINDOW_R9) == 50 and len(set(_WINDOW_R9)) == 50
-QUERIES = {k: QUERIES[k] for k in _WINDOW_R9} | {
-    k: v for k, v in QUERIES.items() if k not in set(_WINDOW_R9)}
 
 # r7: heavy_hitters_cms converts from rows-only to hash-paired — the
 # sketch's cell hash switched from JVM-only xxhash64 to the repo's

@@ -91,8 +91,7 @@ def read_snapshot(spark: SparkSession, root: str,
 
 
 def apply_changes(spark: SparkSession, root: str, changes: DataFrame,
-                  key: str, op_col: str = "op",
-                  seq_col: str | None = None) -> int:
+                  key: str) -> int:
     """MERGE a change batch into the latest snapshot and commit the
     result as the next version; returns the new version number.
 
@@ -102,7 +101,7 @@ def apply_changes(spark: SparkSession, root: str, changes: DataFrame,
     free from immutability.
     """
     current = read_snapshot(spark, root)
-    merged = merge_apply(current, changes, key, op_col=op_col, seq_col=seq_col)
+    merged = merge_apply(current, changes, key)
     return write_snapshot(merged, root)
 
 

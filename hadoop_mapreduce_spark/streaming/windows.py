@@ -185,7 +185,7 @@ def stream_stream_interval_join(
 
 
 def stream_changes_into_snapshots(changes_stream: DataFrame, root: str,
-                                  key: str, op_col: str = "op"):
+                                  key: str):
     """Streaming CDC apply: each micro-batch of keyed changes MERGEs into
     the latest versioned snapshot and commits as the next version
     (sources/snapshots.py) — the streaming half of the lakehouse story:
@@ -203,7 +203,7 @@ def stream_changes_into_snapshots(changes_stream: DataFrame, root: str,
 
     def merge_batch(df: DataFrame, batch_id: int) -> None:
         if not df.isEmpty():
-            apply_changes(df.sparkSession, root, df, key, op_col=op_col)
+            apply_changes(df.sparkSession, root, df, key)
 
     return (
         changes_stream.writeStream.foreachBatch(merge_batch)
@@ -274,8 +274,8 @@ def running_user_totals_tws(events: DataFrame) -> DataFrame:
     )
 
 
-def stream_decontaminate(doc_stream: DataFrame, bitmap_map: DataFrame,
-                         n: int = 4, m_bits: int = 1 << 16) -> DataFrame:
+def stream_decontaminate(doc_stream: DataFrame,
+                         bitmap_map: DataFrame) -> DataFrame:
     """Streaming benchmark decontamination: incoming documents are
     flagged against a STATIC Bloom bitmap (built batch-side from the
     benchmark suites by ``functions.portable.bloom_bitmap``) via a
@@ -288,6 +288,9 @@ def stream_decontaminate(doc_stream: DataFrame, bitmap_map: DataFrame,
     benchmark bitmap changes rarely (re-broadcast per restart), while
     documents arrive forever; flagged docs route to quarantine via the
     sink's partition column rather than being dropped silently.
+
+    The bitmap is ``bloom_decontaminate``'s: benchmark 4-grams in a
+    2^16-bit filter.
     """
     from hadoop_mapreduce_spark.functions.portable import bloom_any
     from hadoop_mapreduce_spark.functions.text import (
@@ -302,6 +305,6 @@ def stream_decontaminate(doc_stream: DataFrame, bitmap_map: DataFrame,
         toks.crossJoin(F.broadcast(bitmap_map))
         .select(
             "doc_id", "source", "text",
-            bloom_any(F.array_distinct(ngrams_from_tokens(F.col("__t"), n)),
-                      F.col("bm"), m_bits).alias("contaminated"))
+            bloom_any(F.array_distinct(ngrams_from_tokens(F.col("__t"), 4)),
+                      F.col("bm"), 1 << 16).alias("contaminated"))
     )

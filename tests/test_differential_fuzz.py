@@ -89,6 +89,10 @@ FUZZ_QUERIES = [
     "sparse_cosine_pairs_topk",
     "dedup_shingle_size_sweep",
     "source_rank_correlation",
+    # the quality gate and the benchmark carve and split, copied into
+    # the pipelines' plans: the \x0B and empty-document hazards again
+    "pipeline_curation",
+    "pipeline_pretrain",
 ]
 
 # Text alphabet chosen to probe the portability hazards: ASCII, the

@@ -1,6 +1,7 @@
 """Twin parity for the engine-portable kernels (functions/portable.py and
-the tokenizer and n-gram pairs in functions/text.py), and the typed
-oracle contract.
+the tokenizer and n-gram pairs in functions/text.py) and the curation
+policies (the carve and split in functions/portable.py, the quality gate
+in functions/quality.py), and the typed oracle contract.
 
 Each kernel has a Spark form and a DuckDB SQL twin; the oracles only
 agree with the operators if the twins agree bit for bit, so they are
@@ -28,6 +29,8 @@ from hadoop_mapreduce_spark.functions.portable import (
     bloom_hit,
     bloom_hit_sql,
     bloom_probes_sql,
+    doc_split,
+    doc_split_sql,
     h60,
     h60_sql,
     hll_estimate,
@@ -36,6 +39,20 @@ from hadoop_mapreduce_spark.functions.portable import (
     hll_partials_sql,
     hll_rho,
     hll_rho_sql,
+    is_bench,
+    is_bench_sql,
+)
+from hadoop_mapreduce_spark.functions.quality import (
+    avg_word_len,
+    avg_word_len_sql,
+    punct_count,
+    punct_count_sql,
+    punct_ratio,
+    punct_ratio_sql,
+    quality_pass,
+    quality_pass_sql,
+    quality_score,
+    quality_score_sql,
 )
 from hadoop_mapreduce_spark.functions.text import (
     TOKS_SQL,
@@ -202,6 +219,120 @@ def test_bloom_twins_agree(spark, hostile, duck, m_bits):
     assert hits == {i: bool(h) for i, h in sql_hits.items()} == ref_hits
     assert all(ref_hits[i] for i in range(len(HOSTILE)))  # no false negatives
     assert not all(ref_hits.values())
+
+
+# --- curation policies -----------------------------------------------------
+
+def _py_split(i: int) -> str:
+    b = _py_h60(str(i)) % 100
+    return "val" if b < 10 else "test" if b < 20 else "train"
+
+
+def _ids_at_split_edges() -> list[int]:
+    """0, ids on both sides of the carve's multiples of 20, and, for each
+    split bucket edge (0|99, 9|10, 19|20), a positive and a negative id
+    whose bucket sits on either side of it."""
+    ids = [0, 1, -1, 19, 20, 21, -19, -20, -21, 39, 40, 41, 1 << 40,
+           (1 << 40) + 1, -(1 << 40)]
+    for b in (0, 9, 10, 19, 20, 99):
+        for r in (range(1, 3000), range(-1, -3000, -1)):
+            ids.append(next(i for i in r if _py_h60(str(i)) % 100 == b))
+    return ids
+
+
+def test_carve_and_split_twins_agree(spark, duck):
+    ids = _ids_at_split_edges()
+    df = spark.createDataFrame([(i,) for i in ids], "i long")
+    got = {r.i: (r.b, r.s) for r in df.select(
+        "i", is_bench("i").alias("b"), doc_split("i").alias("s")).collect()}
+    vals = ", ".join(f"({i}::BIGINT)" for i in ids)
+    want = {i: (b, s) for i, b, s in duck.execute(
+        f"SELECT i, {is_bench_sql('i')}, {doc_split_sql('i')} "
+        f"FROM (VALUES {vals}) v(i)").fetchall()}
+    # NOT binds the parenthesised carve, not its left operand
+    not_bench = dict(duck.execute(
+        f"SELECT i, NOT {is_bench_sql('i')} FROM (VALUES {vals}) v(i)"
+    ).fetchall())
+    ref = {i: (i % 20 == 0, _py_split(i)) for i in ids}
+    assert got == want == ref
+    assert not_bench == {i: not b for i, (b, _) in ref.items()}
+    assert {s for _, s in ref.values()} == {"val", "test", "train"}
+
+
+def _py_quality(s: str) -> tuple:
+    """Reference signals: (punct, avg_word_len, punct_ratio, score)."""
+    t = re.sub(r"[^a-zA-Z0-9\t\n\x0b\f\r ]+", "", s).lower().split()
+    punct = sum(1 for c in s if not (c.isascii() and (c.isalnum() or c == "_"))
+                and c not in "\t\n\x0b\f\r ")
+    awl = sum(map(len, t)) / len(t) if t else 0.0
+    pr = punct / len(s) if s else 0.0
+    passes = (len(t) >= 5) + (3 <= awl <= 10) + (pr < 0.2)
+    return punct, awl, pr, round(passes / 3.0, 4)
+
+
+def test_quality_twins_agree(hostile, duck):
+    toks = tokenize(normalize_text("s"))
+    n_punct = punct_count("s")
+    score = quality_score(toks, F.length("s"), n_punct)
+    got = {r.i: tuple(r)[1:] for r in hostile.select(
+        "i", n_punct, avg_word_len(toks), punct_ratio(n_punct, F.length("s")),
+        score, quality_pass(score)).collect()}
+    sc = quality_score_sql("t", "length(s)", punct_count_sql("s"))
+    want = {r[0]: r[1:] for r in duck.execute(
+        f"SELECT i, {punct_count_sql('s')}, {avg_word_len_sql('t')}, "
+        f"{punct_ratio_sql(punct_count_sql('s'), 'length(s)')}, "
+        f"{sc}, {quality_pass_sql(sc)} "
+        f"FROM (SELECT i, s, {TOKS_SQL} AS t "
+        f"FROM (SELECT i, s, s AS text FROM hostile))").fetchall()}
+    ref = {i: (*q, q[3] >= 0.6) for i, q in
+           ((i, _py_quality(s)) for i, s in enumerate(HOSTILE))}
+    assert got == want == ref
+    # \x0B is whitespace, not punctuation; empty input is defined
+    assert got[HOSTILE.index("x\x0by")][0] == 0
+    assert got[HOSTILE.index("")] == (0, 0.0, 0.0, 0.3333, False)
+
+
+# The \x0B document passes the gate on its word lengths and its (zero)
+# punctuation; the empty one exercises the empty-input guards.
+POLICY_CORPUS = [
+    "the quick brown fox jumps over the lazy dog",
+    "alpha beta gamma" + "\x0b" * 10,
+    "",
+    "the quick brown fox jumps over the lazy dog",
+    "spark joins scale well across many worker nodes today",
+    "joins scale well across many worker nodes today again",
+]
+
+
+def test_quality_gate_queries_match_oracle_on_hostile_corpus(spark, tmp_path):
+    import duckdb
+
+    from hadoop_mapreduce_spark.registry import ORACLE, QUERIES
+    from tools.oracle_check import canon
+
+    recs = [(i, t, "en", f"src{i % 3}", len(t))
+            for i, t in enumerate(POLICY_CORPUS)]
+    sf = str(tmp_path)
+    spark.createDataFrame(
+        recs, "doc_id long, text string, lang string, source string,"
+              " n_chars long",
+    ).coalesce(1).write.parquet(f"{sf}/documents.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{sf}/documents.parquet/*.parquet')")
+    try:
+        quality = {r.doc_id: r.quality for r in
+                   QUERIES["text_quality"](spark, sf).collect()}
+        assert quality[1] == 0.6667 and quality[2] == 0.3333
+        for name in ("text_quality", "pipeline_curation", "pipeline_pretrain"):
+            sdf = QUERIES[name](spark, sf)
+            srows = [tuple(r) for r in sdf.collect()]
+            cur = con.execute(ORACLE[name])
+            ocols = [d[0] for d in cur.description]
+            assert sorted(sdf.columns) == sorted(ocols), name
+            assert canon(srows, sdf.columns) == canon(cur.fetchall(), ocols), name
+    finally:
+        con.close()
 
 
 # --- typed oracle contract -------------------------------------------------

@@ -563,7 +563,7 @@ def test_stream_decontaminate_matches_batch_flags(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from hadoop_mapreduce_spark.functions.portable import bloom_bitmap
+    from hadoop_mapreduce_spark.functions.portable import bloom_bitmap, is_bench
     from hadoop_mapreduce_spark.operators.ngram import explode_ngram_set
     from hadoop_mapreduce_spark.sources.tables import load_table
     from hadoop_mapreduce_spark.streaming.windows import stream_decontaminate
@@ -572,14 +572,14 @@ def test_stream_decontaminate_matches_batch_flags(spark, tmp_path):
     docs = load_table(spark, SF_DIR, "documents")
     # batch-side bitmap build (the operator's build stage)
     bm1 = bloom_bitmap(
-        explode_ngram_set(docs.where(F.col("doc_id") % 20 == 0), "text", 4),
+        explode_ngram_set(docs.where(is_bench("doc_id")), "text", 4),
         "ngram", 1 << 16)
 
     # stream 40 training docs as two JSON micro-batches
     src = tmp_path / "docs_src"
     src.mkdir()
     sample = [r.asDict() for r in docs.where(
-        (F.col("doc_id") % 20 != 0) & (F.col("doc_id") < 45)).collect()]
+        ~is_bench("doc_id") & (F.col("doc_id") < 45)).collect()]
     half = len(sample) // 2
     for name, chunk in (("b1.json", sample[:half]), ("b2.json", sample[half:])):
         with open(src / name, "w") as f:
@@ -603,7 +603,7 @@ def test_stream_decontaminate_matches_batch_flags(spark, tmp_path):
     # batch frame (it is mode-agnostic)
     batch_flags = {r.doc_id: r.contaminated for r in
                    stream_decontaminate(
-                       docs.where((F.col("doc_id") % 20 != 0)
+                       docs.where(~is_bench("doc_id")
                                   & (F.col("doc_id") < 45)), bm1).collect()}
     assert got == batch_flags
     assert any(got.values())  # fixture dups make the check non-vacuous
