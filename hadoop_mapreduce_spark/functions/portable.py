@@ -38,6 +38,15 @@ the shared conventions, defined once per engine:
     ``is_bench`` holds out 1 id in 20 (``id % 20 == 0``); the
     train/val/test split ``doc_split`` buckets ``h60`` of the id's
     decimal string mod 100 into val (< 10), test (< 20) and train.
+    Bloom decontamination probes the benchmark's ``BENCH_BLOOM_N``-grams
+    (4) in a ``BENCH_BLOOM_BITS``-bit filter (2^16).
+
+  * the sample keep rule ``in_sample``: a row is kept when
+    ``h60(key, seed) % 100 < pct``, so membership is a function of the
+    key alone: the same at any cluster size or file layout, and stable
+    as the table grows. The domain-mixture rate ``mixture_rate`` is the
+    pct of a source by the index in its name: 100 below 5, 50 below 10,
+    25 below 15, else 10 (also when the name has no digits).
 
 The tokenizer pair lives in ``functions/text.py``; the quality gate's
 pair in ``functions/quality.py``. Hashes over other hex
@@ -80,6 +89,39 @@ def is_bench(col: str) -> Column:
 def is_bench_sql(col: str) -> str:
     """DuckDB twin of :func:`is_bench`, parenthesised for ``NOT``."""
     return f"({col} % 20 = 0)"
+
+
+BENCH_BLOOM_N = 4                     # benchmark n-gram width
+BENCH_BLOOM_BITS = 1 << 16            # filter size in bits
+
+
+def in_sample(key: Column, pct: Column | int,
+              seed: int | str | None) -> Column:
+    """Whether the row with the string ``key`` is in the ``pct`` percent
+    sample of hash family ``seed`` (see :func:`h60`)."""
+    return h60(key, seed) % 100 < pct
+
+
+def in_sample_sql(key: str, pct: str | int, seed: int | str | None) -> str:
+    """DuckDB twin of :func:`in_sample` over a VARCHAR expression."""
+    keyed = key if seed is None else f"'{seed}:' || {key}"
+    return f"({h60_sql(keyed)} % 100 < {pct})"
+
+
+def mixture_rate(col: str) -> Column:
+    """The domain-mixture keep pct of the source-name column ``col``."""
+    # no digits: '' try_casts to NULL and takes the 10% branch on both
+    # engines, where a plain cast raises (Spark under ANSI, DuckDB)
+    idx = F.regexp_extract(F.col(col), r"(\d+)", 1).try_cast("int")
+    return (F.when(idx < 5, F.lit(100)).when(idx < 10, F.lit(50))
+            .when(idx < 15, F.lit(25)).otherwise(F.lit(10)))
+
+
+def mixture_rate_sql(col: str) -> str:
+    """DuckDB twin of :func:`mixture_rate`."""
+    idx = f"try_cast(regexp_extract({col}, '([0-9]+)', 1) AS INT)"
+    return (f"CASE WHEN {idx} < 5 THEN 100 WHEN {idx} < 10 THEN 50 "
+            f"WHEN {idx} < 15 THEN 25 ELSE 10 END")
 
 
 def doc_split(col: str) -> Column:

@@ -33,10 +33,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hadoop_mapreduce_spark.functions.portable import (
+    BENCH_BLOOM_BITS,
+    BENCH_BLOOM_N,
     bloom_any,
     bloom_bitmap,
     h60,
+    in_sample,
     is_bench,
+    mixture_rate,
 )
 from hadoop_mapreduce_spark.functions.text import (
     ngrams_from_tokens,
@@ -323,10 +327,11 @@ def domain_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain mixture sampling: downsample each source to its target
     rate with a deterministic, engine-portable keep rule.
 
-    Target rates are a function of the source index (srcN): the first 5
-    sources keep 100%, the next 5 keep 50%, then 25%, then 10% — the
-    shape of a real mixture table ("books 1.0, web 0.25, ..."). The
-    keep decision is md5(doc_id) % 100 < rate so (a) any executor or
+    Target rates are a function of the source index (srcN,
+    ``mixture_rate``): the first 5 sources keep 100%, the next 5 keep
+    50%, then 25%, then 10% — the shape of a real mixture table ("books
+    1.0, web 0.25, ..."). The keep rule is ``in_sample``,
+    h60(doc_id) % 100 < rate, so (a) any executor or
     downstream loader re-derives membership from the key alone, (b)
     growing the corpus never resamples existing docs, and (c) the
     DuckDB oracle reproduces the exact subset.
@@ -335,17 +340,8 @@ def domain_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows). The sample itself never materialises driver-side.
     """
     docs = load_table(spark, sf_dir, "documents")
-    # A source with no digits yields '' → cast → NULL → the 10% branch
-    # on BOTH engines (the oracle uses try_cast for exactly this case —
-    # DuckDB's plain ''::INT would raise instead of matching).
-    idx = F.regexp_extract(F.col("source"), r"(\d+)", 1).cast("int")
-    rate = (
-        F.when(idx < 5, F.lit(100))
-        .when(idx < 10, F.lit(50))
-        .when(idx < 15, F.lit(25))
-        .otherwise(F.lit(10))
-    )
-    kept = h60(F.col("doc_id").cast("string")) % 100 < rate
+    rate = mixture_rate("source")
+    kept = in_sample(F.col("doc_id").cast("string"), rate, None)
     return (
         docs.select(
             "source", "n_chars",
@@ -658,12 +654,11 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     each partition emits at most m_bits/63 rows). The bitmap layout and
     its DuckDB twin are documented once, in ``functions/portable.py``.
     """
-    n = 4
-    m_bits = 1 << 16
     docs = load_table(spark, sf_dir, "documents")
     bench = is_bench("doc_id")
     bm1 = bloom_bitmap(
-        explode_ngram_set(docs.where(bench), "text", n), "ngram", m_bits)
+        explode_ngram_set(docs.where(bench), "text", BENCH_BLOOM_N),
+        "ngram", BENCH_BLOOM_BITS)
     per_doc = (
         docs.where(~bench)
         .select("doc_id", "source",
@@ -671,8 +666,9 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(bm1))
         .select(
             "doc_id", "source",
-            bloom_any(F.array_distinct(ngrams_from_tokens(F.col("__t"), n)),
-                      F.col("bm"), m_bits).cast("long").alias("flagged"))
+            bloom_any(F.array_distinct(
+                ngrams_from_tokens(F.col("__t"), BENCH_BLOOM_N)),
+                F.col("bm"), BENCH_BLOOM_BITS).cast("long").alias("flagged"))
     )
     return (
         per_doc.groupBy("source")

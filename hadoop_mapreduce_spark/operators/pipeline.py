@@ -18,7 +18,9 @@ from pyspark.sql import functions as F
 from hadoop_mapreduce_spark.functions.portable import (
     doc_split,
     h60,
+    in_sample,
     is_bench,
+    mixture_rate,
 )
 from hadoop_mapreduce_spark.functions.quality import (
     punct_count,
@@ -109,13 +111,8 @@ def pipeline_pretrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     d2 = d1.where(~bench).join(hits, "doc_id", "left_anti")
 
     # 4. domain mixture (salted hash — independent of the split bucket)
-    idx = F.regexp_extract(F.col("source"), r"(\d+)", 1).cast("int")
-    rate = (
-        F.when(idx < 5, F.lit(100)).when(idx < 10, F.lit(50))
-        .when(idx < 15, F.lit(25)).otherwise(F.lit(10))
-    )
-    mix_bucket = h60(F.col("doc_id").cast("string"), seed="mix") % 100
-    d3 = d2.where(mix_bucket < rate)
+    d3 = d2.where(in_sample(F.col("doc_id").cast("string"),
+                            mixture_rate("source"), "mix"))
 
     # 5. split + ledger
     return (
@@ -202,15 +199,15 @@ def pipeline_pretrain_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from hadoop_mapreduce_spark.functions.portable import (
+        BENCH_BLOOM_BITS,
+        BENCH_BLOOM_N,
         bloom_any,
         bloom_bitmap,
     )
     from hadoop_mapreduce_spark.functions.text import ngrams_from_tokens
     from hadoop_mapreduce_spark.operators.ngram import explode_ngram_set
 
-    n = 4
     chunk_tokens = 8
-    m_bits = 1 << 16
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", "source",
@@ -265,7 +262,8 @@ def pipeline_pretrain_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ---- stage C: Bloom decontamination on the REBUILT text ----
     bm1 = bloom_bitmap(
-        explode_ngram_set(docs.where(bench), "text", n), "ngram", m_bits)
+        explode_ngram_set(docs.where(bench), "text", BENCH_BLOOM_N),
+        "ngram", BENCH_BLOOM_BITS)
     final = (
         rebuilt
         .select("doc_id", "source", "n_kept",
@@ -273,8 +271,9 @@ def pipeline_pretrain_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(bm1))
         .withColumn(
             "contaminated",
-            bloom_any(F.array_distinct(ngrams_from_tokens(F.col("rt"), n)),
-                      F.col("bm"), m_bits))
+            bloom_any(F.array_distinct(
+                ngrams_from_tokens(F.col("rt"), BENCH_BLOOM_N)),
+                F.col("bm"), BENCH_BLOOM_BITS))
     )
 
     # ---- ledger ----

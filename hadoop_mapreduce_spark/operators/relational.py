@@ -24,6 +24,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hadoop_mapreduce_spark.functions.portable import (
+    hll_estimate,
+    hll_rho,
+    in_sample,
+)
 from hadoop_mapreduce_spark.sources.tables import load_table, sql_view
 
 
@@ -420,15 +425,18 @@ def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL approx count-distinct — sketch-based, mergeable, O(1) memory.
-
-    Not oracle-matched exactly (engines use different HLL constants), so
-    this is registered rows-only; the exact variant is agg_distinct."""
+    """Approximate distinct users per event type through the portable
+    HyperLogLog of functions/portable.py: registers are the max rho per
+    (event_type, bucket) over the distinct (event_type, user_id) pairs,
+    then one estimate per event type. Registers merge by bucket-wise
+    max, so partials from any split combine to the same sketch, and the
+    oracle rebuilds them bit for bit; the exact variant is
+    agg_distinct."""
     ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy("event_type")
-        .agg(F.approx_count_distinct("user_id", 0.01).alias("approx_users"))
-    )
+    du = ev.select("event_type", "user_id").distinct()
+    rb = hll_rho(du, ["event_type"], F.col("user_id").cast("string"))
+    regs = rb.groupBy("event_type", "bucket").agg(F.max("rho").alias("r"))
+    return hll_estimate(regs, ["event_type"], "approx_users")
 
 
 # --------------------------------------------------------------------------
@@ -1172,28 +1180,29 @@ def json_from_json_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sample_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seeded Bernoulli sample of orders — deterministic for a fixed
-    (seed, partitioning): each task XORs the seed with its partition
-    index, so the same data + same split layout reproduces the same
-    sample (the property tests rely on exactly that). Registered
-    rows-only: the selected subset is engine-specific by construction.
-    """
+    """Seeded 10% sample of orders by the portable keep rule
+    ``in_sample`` (h60 of the seed-42-keyed order key, mod 100, below
+    10): membership depends on the key alone, so the sample is the same
+    at any cluster size or file layout, and the oracle selects the
+    same rows."""
     orders = load_table(spark, sf_dir, "orders")
     return (
-        orders.sample(fraction=0.1, seed=42)
+        orders.where(in_sample(F.col("o_orderkey").cast("string"), 10, 42))
         .select("o_orderkey", "o_custkey", "o_totalprice")
     )
 
 
 def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stratified sample via sampleBy: per-stratum fractions (downsample
-    the dominant order status, keep the rare ones) — the class-rebalancing
-    pattern of a training-data pipeline. Rows-only for the same reason as
+    """Stratified sample with a keep rate per order status (5% of F and
+    of O, all of P, none of any other status) — the class-rebalancing
+    pattern of a training-data pipeline — by the keep rule of
     sample_seeded."""
     orders = load_table(spark, sf_dir, "orders")
-    fractions = {"F": 0.05, "O": 0.05, "P": 1.0}
+    status = F.col("o_orderstatus")
+    pct = (F.when(status.isin("F", "O"), F.lit(5))
+           .when(status == "P", F.lit(100)).otherwise(F.lit(0)))
     return (
-        orders.sampleBy("o_orderstatus", fractions, seed=42)
+        orders.where(in_sample(F.col("o_orderkey").cast("string"), pct, 42))
         .groupBy("o_orderstatus")
         .agg(F.count(F.lit(1)).alias("n_sampled"))
     )

@@ -406,35 +406,6 @@ def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def hll_union_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable distinct-token sketches via Spark 4's Apache
-    DataSketches HLL surface: one hll_sketch_agg per source, then
-    hll_union_agg rolls the per-source sketches up to a corpus-wide
-    estimate WITHOUT re-touching the token stream — the sketch algebra
-    a 100 TB engine needs (per-partition sketches merge at bytes cost;
-    approx_count_distinct can't expose its partials for reuse).
-
-    Output: one row per source plus a '__all__' row whose estimate
-    comes from UNIONING the 20 source sketches (not from rescanning).
-    Registered rows-only (sketch estimates are implementation-specific);
-    tests assert each estimate within 5% of the exact distinct count —
-    HLL register maxima are order-independent, so the estimates are
-    deterministic for a given dataset.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("source", F.explode(_tokens("text")).alias("tk"))
-    sketches = tok.groupBy("source").agg(
-        F.hll_sketch_agg("tk", F.lit(12)).alias("sk"))
-    per_source = sketches.select(
-        "source", F.hll_sketch_estimate("sk").cast("long").alias("est_distinct"))
-    union_all = (
-        sketches.agg(F.hll_union_agg("sk").alias("sk"))
-        .select(F.lit("__all__").alias("source"),
-                F.hll_sketch_estimate("sk").cast("long").alias("est_distinct"))
-    )
-    return per_source.unionByName(union_all)
-
-
 def doc_hash_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-hashing document vectors (the "hashing trick"): bucket =
     md5(token) mod 32, value = occurrence count — a dependency-free
@@ -1026,9 +997,7 @@ def hll_portable_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine-portable HyperLogLog: distinct-token estimates per source
     plus a '__all__' row whose sketch is the UNION (bucket-wise register
     max) of the per-source sketches — the merge happens on the tiny
-    register table, never re-touching the token stream. This is the
-    hash-paired twin of ``hll_union_sources`` (which uses Spark's
-    DataSketches surface and is rows-only by nature): every step here is
+    register table, never re-touching the token stream. Every step is
     md5-derived integer arithmetic, so the DuckDB oracle rebuilds the
     bit-identical registers and the estimates match exactly.
 
@@ -1064,6 +1033,13 @@ def hll_portable_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             hll_estimate_col().alias("est_distinct"),
         )
     )
+
+
+def hll_union_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distinct-token estimates of ``hll_portable_union`` alone: one
+    per source plus the '__all__' row from the union of the per-source
+    registers."""
+    return hll_portable_union(spark, sf_dir).select("source", "est_distinct")
 
 
 # Winnowing constants (shared with the oracle): positions pack into

@@ -41,9 +41,12 @@ values). Conventions that keep the two engines bit-comparable:
     (``_components``), and the graph twins of dedup.py's Spark
     kernels: degrees (``_degrees_sql``), label-propagation rounds
     (``_lpa_sql``) and degree-oriented triangles (``_triangles_sql``);
-  * approximate operators (HLL, IVF-ANN) are registered without an
-    oracle → the driver records a rows-only check, as the contract
-    allows for non-SQL-expressible ops;
+  * sketches and samples run on the portable kernels (the HLL
+    registers, the ``in_sample`` keep rule) and are hash-paired; the
+    approximate operators no SQL can replay (IVF/PQ ANN, LSH recall,
+    iterative fits, t-digest percentiles, DEFLATE) are registered
+    without an oracle → their differential check is rows-only, as the
+    contract allows for non-SQL-expressible ops;
   * output order is declared once per query, beside its operator, as
     SQL-style keys (``ordered(fn, "cnt DESC", "ngram")``, collected in
     ``ORDER_KEYS``), and operators return unordered frames.
@@ -55,10 +58,20 @@ values). Conventions that keep the two engines bit-comparable:
     oracles keep their own ``ORDER BY … LIMIT k``, because there the
     order is the computation; the declared keys re-sort the k rows.
 
-Output contract change: ``events_hierarchical_rollup`` emits the
-integer epoch bucket ``bucket_id`` (complete hours or days since
-1970-01-01 00:00, by ``resolution``) where it once emitted a rendered
-``bucket`` string.
+Output contract changes:
+
+  * ``events_hierarchical_rollup`` emits the integer epoch bucket
+    ``bucket_id`` (complete hours or days since 1970-01-01 00:00, by
+    ``resolution``) where it once emitted a rendered ``bucket`` string;
+  * ``hll_union_sources`` emits ``hll_portable_union``'s ``source`` and
+    ``est_distinct`` (portable HLL), where it once emitted DataSketches
+    estimates;
+  * ``agg_approx_distinct``'s ``approx_users`` is the portable HLL
+    estimate, where it once was Spark's native HLL estimate;
+  * ``sample_seeded`` and ``sample_stratified`` keep the orders whose
+    key passes ``in_sample`` (10%; F 5%, O 5%, P 100%), where they once
+    drew Spark's seeded Bernoulli samples: the kept rows differ, and no
+    longer depend on the file layout.
 """
 
 from __future__ import annotations
@@ -87,6 +100,8 @@ from hadoop_mapreduce_spark.operators import (
     udfs,
 )
 from hadoop_mapreduce_spark.functions.portable import (
+    BENCH_BLOOM_BITS,
+    BENCH_BLOOM_N,
     bloom_bitmap_sql,
     bloom_hit_sql,
     bloom_probes_sql,
@@ -95,7 +110,9 @@ from hadoop_mapreduce_spark.functions.portable import (
     hll_estimate_sql,
     hll_partials_sql,
     hll_rho_sql,
+    in_sample_sql,
     is_bench_sql,
+    mixture_rate_sql,
 )
 from hadoop_mapreduce_spark.functions.quality import (
     avg_word_len_sql,
@@ -598,7 +615,7 @@ QUERIES: dict[str, QueryFn] = {
         ordered(similarity.ann_pq_rerank, "qid", "rank"),
     "ann_ivfpq_rerank":  # rows-only (IVFADC)
         ordered(similarity.ann_ivfpq_rerank, "qid", "rank"),
-    "hll_union_sources":  # rows-only (DataSketches HLL)
+    "hll_union_sources":  # hash-paired (hll_portable_union's estimates)
         ordered(textstats.hll_union_sources, "source"),
     "winnowing_fingerprint":
         ordered(textstats.winnowing_fingerprint, "doc_id"),
@@ -662,7 +679,7 @@ QUERIES: dict[str, QueryFn] = {
     "agg_rollup": ordered(relational.agg_rollup, "r_name", "n_name"),
     "agg_cube": ordered(relational.agg_cube, "l_returnflag", "l_linestatus"),
     "agg_having": ordered(relational.agg_having, "l_suppkey"),
-    "agg_approx_distinct":  # rows-only (HLL)
+    "agg_approx_distinct":  # hash-paired (md5 registers)
         ordered(relational.agg_approx_distinct, "event_type"),
     "approx_percentile_stats":  # rows-only (t-digest)
         ordered(relational.approx_percentile_stats, "o_orderstatus"),
@@ -715,9 +732,9 @@ QUERIES: dict[str, QueryFn] = {
     "distinct_dedup_rows":
         ordered(relational.distinct_dedup_rows,
                 "l_returnflag", "l_linestatus"),
-    "sample_seeded":  # rows-only (engine-specific subset)
+    "sample_seeded":  # hash-paired (md5 keep rule)
         ordered(relational.sample_seeded, "o_orderkey"),
-    "sample_stratified":  # rows-only (engine-specific subset)
+    "sample_stratified":  # hash-paired (md5 keep rule)
         ordered(relational.sample_stratified, "o_orderstatus"),
     "pipeline_curation": ordered(pipeline.pipeline_curation, "source"),
     "dedup_simhash": ordered(dedup.dedup_simhash, "doc_id"),
@@ -2075,20 +2092,14 @@ SELECT source, count(*)::BIGINT AS n_docs,
   round(avg(distinct_frac), 4) AS avg_distinct_frac
 FROM d GROUP BY source
 """,
-    "domain_mixture_sample": rf"""
+    "domain_mixture_sample": f"""
 WITH s AS (
-  SELECT source, n_chars,
-    try_cast(regexp_extract(source, '([0-9]+)', 1) AS INT) AS idx,
-    {h60_sql("doc_id::VARCHAR")} % 100 AS b
+  SELECT doc_id, source, n_chars, {mixture_rate_sql("source")} AS target_pct
   FROM documents
 ),
 d AS (
-  SELECT source, n_chars,
-    CASE WHEN idx < 5 THEN 100 WHEN idx < 10 THEN 50
-         WHEN idx < 15 THEN 25 ELSE 10 END AS target_pct,
-    CASE WHEN b < (CASE WHEN idx < 5 THEN 100 WHEN idx < 10 THEN 50
-                        WHEN idx < 15 THEN 25 ELSE 10 END)
-         THEN 1 ELSE 0 END AS kept
+  SELECT source, n_chars, target_pct,
+    {in_sample_sql("doc_id::VARCHAR", "target_pct", None)}::INT AS kept
   FROM s
 )
 SELECT source, target_pct::BIGINT AS target_pct,
@@ -2144,7 +2155,7 @@ ORACLE["dedup_components_star"] = ORACLE["dedup_connected_components"]
 # md5-bucket split ledger. The stages splice the twins the per-stage
 # oracles use: the quality gate (_QUALITY_KEPT, as pipeline_curation),
 # the benchmark carve (as decontaminate_ngram), the n-gram window and
-# the split (as dataset_split); the mixture rates are
+# the split (as dataset_split); the mixture rates and keep rule are
 # domain_mixture_sample's, over a salted hash.
 ORACLE["pipeline_pretrain"] = f"""
 WITH {_QUALITY_KEPT},
@@ -2166,11 +2177,7 @@ d2 AS (
 ),
 d3 AS (
   SELECT * FROM d2
-  WHERE {h60_sql("'mix:' || doc_id::VARCHAR")} % 100
-      < (CASE WHEN try_cast(regexp_extract(source, '([0-9]+)', 1) AS INT) < 5 THEN 100
-              WHEN try_cast(regexp_extract(source, '([0-9]+)', 1) AS INT) < 10 THEN 50
-              WHEN try_cast(regexp_extract(source, '([0-9]+)', 1) AS INT) < 15 THEN 25
-              ELSE 10 END)
+  WHERE {in_sample_sql("doc_id::VARCHAR", mixture_rate_sql("source"), "mix")}
 )
 SELECT {doc_split_sql("doc_id")} AS split,
   count(*)::BIGINT AS n_docs, sum(len(t))::BIGINT AS total_tokens
@@ -2293,19 +2300,20 @@ FROM names GROUP BY lower(name)
 """
 
 # Bloom-filter decontamination: the oracle rebuilds the identical
-# m=65536-bit bitmap from the portable Bloom twin (functions/portable.py
-# documents the layout). Hash-comparable because every hash is
-# md5-derived, never engine-native.
+# BENCH_BLOOM_BITS-bit bitmap from the portable Bloom twin
+# (functions/portable.py documents the layout). Hash-comparable because
+# every hash is md5-derived, never engine-native.
 ORACLE["bloom_decontaminate"] = f"""
 WITH toks AS (SELECT doc_id, source, {TOKS_SQL} AS t FROM documents),
 grams AS (
-  SELECT DISTINCT doc_id, unnest({ngrams_sql('t', 4)}) AS g
+  SELECT DISTINCT doc_id, unnest({ngrams_sql('t', BENCH_BLOOM_N)}) AS g
   FROM toks
 ),
 bench AS (SELECT g FROM grams WHERE {is_bench_sql('doc_id')}),
 train_grams AS (SELECT doc_id, g FROM grams WHERE NOT {is_bench_sql('doc_id')}),
-bitmap AS ({bloom_bitmap_sql("bench", "g", 65536)}),
-probes AS ({bloom_probes_sql("train_grams", "g", 65536, "doc_id, g")}),
+bitmap AS ({bloom_bitmap_sql("bench", "g", BENCH_BLOOM_BITS)}),
+probes AS ({bloom_probes_sql("train_grams", "g", BENCH_BLOOM_BITS,
+                             "doc_id, g")}),
 per_gram AS ({bloom_hit_sql("probes", "bitmap", "doc_id, g", "gram_hit")}),
 hits AS (SELECT doc_id, max(gram_hit) AS flagged FROM per_gram GROUP BY doc_id),
 train AS (SELECT doc_id, source FROM documents WHERE NOT {is_bench_sql('doc_id')})
@@ -2489,17 +2497,18 @@ rebuilt AS (
   FROM keptc GROUP BY 1, 2 HAVING sum((rn = 1)::BIGINT) > 0
 ),
 bgrams AS (
-  SELECT DISTINCT doc_id, unnest({ngrams_sql('t', 4)}) AS g
+  SELECT DISTINCT doc_id, unnest({ngrams_sql('t', BENCH_BLOOM_N)}) AS g
   FROM toks
   WHERE {is_bench_sql('doc_id')}
 ),
-bitmap AS ({bloom_bitmap_sql("bgrams", "g", 65536)}),
+bitmap AS ({bloom_bitmap_sql("bgrams", "g", BENCH_BLOOM_BITS)}),
 rt AS (SELECT doc_id, source, n_kept, string_split(rebuilt, ' ') AS rt FROM rebuilt),
 rgrams AS (
-  SELECT DISTINCT doc_id, unnest({ngrams_sql('rt', 4)}) AS g
+  SELECT DISTINCT doc_id, unnest({ngrams_sql('rt', BENCH_BLOOM_N)}) AS g
   FROM rt
 ),
-rprobes AS ({bloom_probes_sql("rgrams", "g", 65536, "doc_id, g")}),
+rprobes AS ({bloom_probes_sql("rgrams", "g", BENCH_BLOOM_BITS,
+                              "doc_id, g")}),
 pg AS ({bloom_hit_sql("rprobes", "bitmap", "doc_id, g", "hit")}),
 contam AS (SELECT doc_id, max(hit) AS cont FROM pg GROUP BY 1),
 final AS (
@@ -3631,6 +3640,34 @@ est AS (
 SELECT source, n_hit::BIGINT AS n_buckets_hit,
   {hll_estimate_sql()} AS est_distinct
 FROM est
+"""
+ORACLE["hll_union_sources"] = f"""
+SELECT source, est_distinct FROM ({ORACLE["hll_portable_union"]})
+"""
+
+# Distinct users per event type by the same portable HLL, over the
+# distinct (event_type, user_id) pairs.
+ORACLE["agg_approx_distinct"] = f"""
+WITH du AS (SELECT DISTINCT event_type, user_id FROM events),
+h AS (SELECT event_type, {h60_sql("user_id::VARCHAR")} AS hv FROM du),
+rb AS (SELECT event_type, {hll_rho_sql()} FROM h),
+regs AS (SELECT event_type, bucket, max(rho) AS r FROM rb GROUP BY 1, 2),
+est AS (SELECT event_type, {hll_partials_sql()} FROM regs GROUP BY 1)
+SELECT event_type, {hll_estimate_sql()} AS approx_users FROM est
+"""
+
+# The two order samples: the md5 keep rule over the seed-42-keyed
+# order key, at 10% and at a pct per order status.
+ORACLE["sample_seeded"] = f"""
+SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+WHERE {in_sample_sql("o_orderkey::VARCHAR", 10, 42)}
+"""
+ORACLE["sample_stratified"] = f"""
+SELECT o_orderstatus, count(*)::BIGINT AS n_sampled FROM orders
+WHERE {in_sample_sql("o_orderkey::VARCHAR",
+                     "CASE WHEN o_orderstatus IN ('F', 'O') THEN 5 "
+                     "WHEN o_orderstatus = 'P' THEN 100 ELSE 0 END", 42)}
+GROUP BY 1
 """
 
 # r7b: winnowing_fingerprint — Schleimer et al. winnowing with the

@@ -17,6 +17,10 @@ from pyspark.sql.types import (
     DoubleType, LongType, StringType, StructField, StructType, TimestampType,
 )
 
+# How late an event may arrive before the watermarked operators below
+# drop it and evict the state it would update.
+WATERMARK = "2 hours"
+
 EVENT_SCHEMA = StructType([
     StructField("event_id", LongType()),
     StructField("ts", TimestampType()),
@@ -38,40 +42,40 @@ def read_event_stream(spark: SparkSession, path: str, max_files_per_trigger: int
     )
 
 
-def tumbling_counts(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
-    """Watermarked tumbling-window counts: events later than the
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """Watermarked 1-hour tumbling-window counts: events later than the
     watermark are dropped, state for closed windows is evicted — bounded
     state at any scale."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total_value"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n", "total_value")
     )
 
 
-def session_counts(events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours") -> DataFrame:
-    """Watermarked session windows per user (same expression as the batch
-    twin operators/timeseries.py::events_session)."""
+def session_counts(events: DataFrame) -> DataFrame:
+    """Watermarked session windows per user, closed by a 30-minute gap
+    (same expression as the batch twin
+    operators/timeseries.py::events_session)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("session_value"))
         .select(F.col("w.start").alias("session_start"), "user_id", "n_events", "session_value")
     )
 
 
-def streaming_dedup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def streaming_dedup(events: DataFrame) -> DataFrame:
     """Exactly-once-style dedup on event_id within the watermark horizon —
     dropDuplicates keeps first-seen; state evicted past the watermark."""
-    return events.withWatermark("ts", watermark).dropDuplicates(["event_id"])
+    return events.withWatermark("ts", WATERMARK).dropDuplicates(["event_id"])
 
 
-def streaming_dedup_within_watermark(events: DataFrame,
-                                     watermark: str = "2 hours") -> DataFrame:
+def streaming_dedup_within_watermark(events: DataFrame) -> DataFrame:
     """The Spark 3.5+ dropDuplicatesWithinWatermark variant: the dedup
     key does NOT need to include the event-time column, and state for a
-    key is evicted `watermark` after the key was FIRST seen (classic
+    key is evicted `WATERMARK` after the key was FIRST seen (classic
     dropDuplicates on a watermarked stream keys state eviction off the
     event-time column value instead, so retried events with slightly
     different timestamps are NOT collapsed). This is the semantics an
@@ -79,7 +83,7 @@ def streaming_dedup_within_watermark(events: DataFrame,
     batches) actually needs: duplicates carry the same id but jittered
     timestamps, and they still collapse as long as they arrive within
     the horizon."""
-    return events.withWatermark("ts", watermark) \
+    return events.withWatermark("ts", WATERMARK) \
         .dropDuplicatesWithinWatermark(["event_id"])
 
 
@@ -152,13 +156,11 @@ def write_stream_foreach_batch(stream: DataFrame, path: str):
     )
 
 
-def stream_stream_interval_join(
-    left: DataFrame, right: DataFrame,
-    watermark: str = "2 hours", within: str = "interval 10 minutes",
-) -> DataFrame:
+def stream_stream_interval_join(left: DataFrame,
+                                right: DataFrame) -> DataFrame:
     """Stream-stream inner join with an event-time interval condition:
     each left event pairs with right events of the SAME user whose
-    timestamp falls in [left.ts - within, left.ts] — the streaming form
+    timestamp falls in [left.ts - 10 minutes, left.ts] — the streaming form
     of the as-of/range join (click ↔ preceding impressions, trade ↔
     quote window).
 
@@ -169,11 +171,11 @@ def stream_stream_interval_join(
     this runnable on an unbounded feed; tests assert the joined output
     equals the batch join over the same files.
     """
-    l = left.withWatermark("ts", watermark).alias("l")
-    r = right.withWatermark("ts", watermark).alias("r")
+    l = left.withWatermark("ts", WATERMARK).alias("l")
+    r = right.withWatermark("ts", WATERMARK).alias("r")
     cond = F.expr(
-        f"l.user_id = r.user_id AND "
-        f"r.ts BETWEEN l.ts - {within} AND l.ts"
+        "l.user_id = r.user_id AND "
+        "r.ts BETWEEN l.ts - interval 10 minutes AND l.ts"
     )
     return l.join(r, cond, "inner").select(
         F.col("l.event_id").alias("left_id"),
@@ -289,10 +291,14 @@ def stream_decontaminate(doc_stream: DataFrame,
     documents arrive forever; flagged docs route to quarantine via the
     sink's partition column rather than being dropped silently.
 
-    The bitmap is ``bloom_decontaminate``'s: benchmark 4-grams in a
-    2^16-bit filter.
+    The bitmap is ``bloom_decontaminate``'s: benchmark
+    ``BENCH_BLOOM_N``-grams in a ``BENCH_BLOOM_BITS``-bit filter.
     """
-    from hadoop_mapreduce_spark.functions.portable import bloom_any
+    from hadoop_mapreduce_spark.functions.portable import (
+        BENCH_BLOOM_BITS,
+        BENCH_BLOOM_N,
+        bloom_any,
+    )
     from hadoop_mapreduce_spark.functions.text import (
         ngrams_from_tokens,
         normalize_text,
@@ -305,6 +311,7 @@ def stream_decontaminate(doc_stream: DataFrame,
         toks.crossJoin(F.broadcast(bitmap_map))
         .select(
             "doc_id", "source", "text",
-            bloom_any(F.array_distinct(ngrams_from_tokens(F.col("__t"), 4)),
-                      F.col("bm"), 1 << 16).alias("contaminated"))
+            bloom_any(F.array_distinct(
+                ngrams_from_tokens(F.col("__t"), BENCH_BLOOM_N)),
+                F.col("bm"), BENCH_BLOOM_BITS).alias("contaminated"))
     )

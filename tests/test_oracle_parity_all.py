@@ -8,6 +8,7 @@ tools/oracle_check.py and bench.py do, so caches do not pile up across
 the registry in one JVM.
 Queries registered without SQL (approximate/stateful) are exercised
 rows-only: they must execute and return a well-formed result.
+``ROWS_ONLY`` names them, each with its reason.
 
 Rows are compared IN EMITTED ORDER exactly when the query declares
 order keys in the registry (ORDER_KEYS), and the declared key tuple must
@@ -132,6 +133,28 @@ OPERATOR_KNOBS = {
     ("shard_layout_plan", "n_shards"),
     ("token_entropy_quality", "k"),
 }
+
+
+# Every query registered without an oracle, with the reason no SQL twin
+# replays it; only their row counts are checked. Sketches and
+# samples are not here: they run on the portable kernels and are
+# hash-paired. A new rows-only query must be added here on purpose.
+ROWS_ONLY = {
+    "compression_ratio_quality": "DEFLATE is not SQL-expressible",
+    "quality_classifier_train": "iterative gradient descent in floats",
+    "embedding_pca_power": "iterative power-method fixpoint in floats",
+    "knn_join_lsh": "kNN join over SRP-LSH buckets, recall below 1",
+    "ann_pq_adc": "ranks by quantized (ADC) distances",
+    "ann_pq_rerank": "re-ranks an ADC shortlist",
+    "ann_ivfpq_rerank": "IVFADC over float k-means centroids",
+    "approx_percentile_stats": "Spark's approx_percentile sketch",
+    "dedup_embedding_lsh": "SRP-LSH banding, recall below 1",
+    "ann_ivf_topk": "IVF probe over float k-means centroids",
+}
+
+
+def test_rows_only_set():
+    assert ROWS_ONLY.keys() == set(QUERIES) - set(ORACLE)
 
 
 def test_operator_knobs():

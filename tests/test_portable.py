@@ -39,8 +39,12 @@ from hadoop_mapreduce_spark.functions.portable import (
     hll_partials_sql,
     hll_rho,
     hll_rho_sql,
+    in_sample,
+    in_sample_sql,
     is_bench,
     is_bench_sql,
+    mixture_rate,
+    mixture_rate_sql,
 )
 from hadoop_mapreduce_spark.functions.quality import (
     avg_word_len,
@@ -259,6 +263,57 @@ def test_carve_and_split_twins_agree(spark, duck):
     assert {s for _, s in ref.values()} == {"val", "test", "train"}
 
 
+SOURCES = ["src0", "src4", "src5", "src9", "src10", "src14", "src15",
+           "src19", "web", "", "a7b20", None]
+
+
+def test_sample_and_mixture_twins_agree(spark, hostile, duck):
+    pct = F.col("i") * 5 % 101
+    got = {r.i: (r.k, r.k3) for r in hostile.select(
+        "i", in_sample(F.col("s"), pct, None).alias("k"),
+        in_sample(F.col("s"), pct, 3).alias("k3")).collect()}
+    sql_pct = "i * 5 % 101"
+    want = {i: (k, k3) for i, k, k3 in duck.execute(
+        f"SELECT i, {in_sample_sql('s', sql_pct, None)}, "
+        f"{in_sample_sql('s', sql_pct, 3)} FROM hostile").fetchall()}
+    ref = {i: (_py_h60(s) % 100 < i * 5 % 101,
+               _py_h60("3:" + s) % 100 < i * 5 % 101)
+           for i, s in enumerate(HOSTILE)}
+    assert got == want == ref
+
+    src = spark.createDataFrame([(s,) for s in SOURCES], "s string")
+    got = [r.p for r in src.select(mixture_rate("s").alias("p")).collect()]
+    vals = ", ".join("(NULL)" if s is None else f"('{s}')" for s in SOURCES)
+    want = [p for (p,) in duck.execute(
+        f"SELECT {mixture_rate_sql('s')} FROM (VALUES {vals}) v(s)").fetchall()]
+    # no digits (or no name) keeps 10%; the first digit run is the index
+    assert got == want == [100, 100, 50, 50, 25, 25, 10, 10, 10, 10, 50, 10]
+
+
+def test_samples_and_sketches_ignore_file_layout(spark, tmp_path):
+    """The same rows from the one-file fixture and from its tables split
+    into 7 files each: sample membership and HLL registers are functions
+    of the keys alone. A Bernoulli sample, seeded per partition, lacks
+    this property."""
+    import pyarrow.parquet as pq
+
+    from hadoop_mapreduce_spark.registry import QUERIES
+    from tests.conftest import SF_DIR
+
+    for table in ("orders", "events", "documents"):
+        rows = pq.read_table(f"{SF_DIR}/{table}.parquet")
+        out = tmp_path / f"{table}.parquet"
+        out.mkdir()
+        step = -(-rows.num_rows // 7)
+        for i in range(7):
+            pq.write_table(rows.slice(i * step, step), out / f"part-{i}.parquet")
+    for name in ("hll_union_sources", "agg_approx_distinct",
+                 "sample_seeded", "sample_stratified"):
+        one = [tuple(r) for r in QUERIES[name](spark, SF_DIR).collect()]
+        split = [tuple(r) for r in QUERIES[name](spark, str(tmp_path)).collect()]
+        assert split == one, name
+
+
 def _py_quality(s: str) -> tuple:
     """Reference signals: (punct, avg_word_len, punct_ratio, score)."""
     t = re.sub(r"[^a-zA-Z0-9\t\n\x0b\f\r ]+", "", s).lower().split()
@@ -293,7 +348,8 @@ def test_quality_twins_agree(hostile, duck):
 
 
 # The \x0B document passes the gate on its word lengths and its (zero)
-# punctuation; the empty one exercises the empty-input guards.
+# punctuation; the empty one exercises the empty-input guards. Document
+# 4's source has no index, so the mixture keeps it at 10%.
 POLICY_CORPUS = [
     "the quick brown fox jumps over the lazy dog",
     "alpha beta gamma" + "\x0b" * 10,
@@ -310,7 +366,7 @@ def test_quality_gate_queries_match_oracle_on_hostile_corpus(spark, tmp_path):
     from hadoop_mapreduce_spark.registry import ORACLE, QUERIES
     from tools.oracle_check import canon
 
-    recs = [(i, t, "en", f"src{i % 3}", len(t))
+    recs = [(i, t, "en", "web" if i == 4 else f"src{i % 3}", len(t))
             for i, t in enumerate(POLICY_CORPUS)]
     sf = str(tmp_path)
     spark.createDataFrame(
@@ -324,7 +380,8 @@ def test_quality_gate_queries_match_oracle_on_hostile_corpus(spark, tmp_path):
         quality = {r.doc_id: r.quality for r in
                    QUERIES["text_quality"](spark, sf).collect()}
         assert quality[1] == 0.6667 and quality[2] == 0.3333
-        for name in ("text_quality", "pipeline_curation", "pipeline_pretrain"):
+        for name in ("text_quality", "pipeline_curation", "pipeline_pretrain",
+                     "domain_mixture_sample"):
             sdf = QUERIES[name](spark, sf)
             srows = [tuple(r) for r in sdf.collect()]
             cur = con.execute(ORACLE[name])

@@ -100,7 +100,7 @@ def test_sample_seeded_deterministic_and_sized(spark):
     b = QUERIES["sample_seeded"](spark, SF_DIR).collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
     total = spark.read.parquet(f"{SF_DIR}/orders.parquet").count()
-    # Bernoulli(0.1): expect ~10%, allow wide tolerance for small N
+    # a 10% hash sample: expect ~10%, allow wide tolerance for small N
     assert 0.03 * total <= len(a) <= 0.25 * total
 
 

@@ -101,7 +101,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     ])
     stream = read_event_stream(spark, str(path), max_files_per_trigger=1)
     q = (
-        tumbling_counts(stream, window="1 hour", watermark="2 hours")
+        tumbling_counts(stream)
         .writeStream.format("memory").queryName("t_late")
         .outputMode("update").start()
     )
@@ -144,7 +144,7 @@ def test_watermark_metrics_count_drops_and_evictions(spark, tmp_path):
     ])
     stream = read_event_stream(spark, str(path), max_files_per_trigger=1)
     q = (
-        tumbling_counts(stream, window="1 hour", watermark="2 hours")
+        tumbling_counts(stream)
         .writeStream.format("memory").queryName("t_metrics")
         .outputMode("append").start()
     )
@@ -308,7 +308,7 @@ def test_session_append_equals_batch_twin(spark, tmp_path):
     ])
     stream = read_event_stream(spark, str(path), max_files_per_trigger=1)
     q = (
-        session_counts(stream, gap="30 minutes", watermark="2 hours")
+        session_counts(stream)
         .writeStream.format("memory").queryName("t_sess_diff")
         .outputMode("append").start()
     )
@@ -362,7 +362,7 @@ def test_tumbling_append_late_drop_vs_batch_twin(spark, tmp_path):
     ])
     stream = read_event_stream(spark, str(path), max_files_per_trigger=1)
     q = (
-        tumbling_counts(stream, window="1 hour", watermark="2 hours")
+        tumbling_counts(stream)
         .writeStream.format("memory").queryName("t_tumb_diff")
         .outputMode("append").start()
     )
@@ -563,7 +563,12 @@ def test_stream_decontaminate_matches_batch_flags(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from hadoop_mapreduce_spark.functions.portable import bloom_bitmap, is_bench
+    from hadoop_mapreduce_spark.functions.portable import (
+        BENCH_BLOOM_BITS,
+        BENCH_BLOOM_N,
+        bloom_bitmap,
+        is_bench,
+    )
     from hadoop_mapreduce_spark.operators.ngram import explode_ngram_set
     from hadoop_mapreduce_spark.sources.tables import load_table
     from hadoop_mapreduce_spark.streaming.windows import stream_decontaminate
@@ -572,8 +577,9 @@ def test_stream_decontaminate_matches_batch_flags(spark, tmp_path):
     docs = load_table(spark, SF_DIR, "documents")
     # batch-side bitmap build (the operator's build stage)
     bm1 = bloom_bitmap(
-        explode_ngram_set(docs.where(is_bench("doc_id")), "text", 4),
-        "ngram", 1 << 16)
+        explode_ngram_set(docs.where(is_bench("doc_id")), "text",
+                          BENCH_BLOOM_N),
+        "ngram", BENCH_BLOOM_BITS)
 
     # stream 40 training docs as two JSON micro-batches
     src = tmp_path / "docs_src"
