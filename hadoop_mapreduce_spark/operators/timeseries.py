@@ -1,10 +1,14 @@
-"""Time-series operators over events: tumbling/sliding/session windows
-(batch formulations — identical semantics to the Structured Streaming
-versions in streaming/windows.py) and the as-of join.
+"""Time-series operators over events: tumbling/sliding windows,
+sessions and the as-of join (batch formulations, with the same
+semantics as the Structured Streaming versions in streaming/windows.py).
 
-Batch and streaming share these shapes: `F.window`/`F.session_window`
-work in both modes, which is what keeps the streaming surface
-oracle-checkable (SURVEY.md §7 Stage 4).
+`F.window` works in both modes, and the tumbling and sliding queries
+use it as the streams do. Every sessionized query calls one kernel,
+``functions/timeutil.py::sessionize`` (a gap of more than 30 minutes
+starts a new session), and its oracle splices the SQL twin; the
+streams' session windows apply the same gap rule. Day indexes
+are ``day_index`` from the same module. That is what keeps the
+streaming surface oracle-checkable (SURVEY.md §7 Stage 4).
 """
 
 from __future__ import annotations
@@ -13,6 +17,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hadoop_mapreduce_spark.functions.timeutil import (
+    SESSION_GAP_US,
+    day_index,
+    index_date,
+    sessionize,
     wall_epoch_secs,
     wall_epoch_us,
 )
@@ -45,21 +53,21 @@ def events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def events_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session windows per user with a 30-minute inactivity gap.
+    """User sessions (``sessionize``: a gap of more than 30 minutes
+    starts a new one), each with its first event's ts, event count and
+    value.
 
-    Streaming twin: the same expression under readStream with a
-    watermark. Session assembly shuffles once on user_id.
+    Streaming twin: streaming/windows.py::session_counts, whose
+    session windows apply the same gap rule under a watermark. Session
+    assembly shuffles once on user_id.
     """
     ev = load_table(spark, sf_dir, "events")
     return (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("session_value"))
-        .select(
-            "user_id",
-            F.col("w.start").cast("string").alias("session_start"),
-            "n_events",
-            "session_value",
-        )
+        sessionize(ev).groupBy("user_id", "session_id")
+        .agg(F.min("ts").cast("string").alias("session_start"),
+             F.count(F.lit(1)).alias("n_events"),
+             F.round(F.sum("value"), 2).alias("session_value"))
+        .select("user_id", "session_start", "n_events", "session_value")
     )
 
 
@@ -391,31 +399,17 @@ def events_session_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     SURVEY.md §1.4's cross-line question becomes cross-session, and
     here the boundary is semantic, so bigrams never span sessions).
 
-    Sessionisation is the portable lag/cumsum formulation (session id =
-    running count of gap-exceeding steps per user) — bit-identical in
-    any SQL engine, unlike session_window whose twin events_session
-    already covers. Plan: one user-keyed window pass (lag + running
-    sum), ordered per-session type sequence via sort_array(collect_list)
-    (bounded by session length), bigram explode, count, TakeOrdered
-    top-k.
+    Sessions are ``sessionize``'s, the package's one session rule (its
+    oracle splices the SQL twin). Plan: one user-keyed window pass (lag
+    + running sum), ordered per-session type sequence via
+    sort_array(collect_list) (bounded by session length), bigram
+    explode, count, TakeOrdered top-k.
     """
     from hadoop_mapreduce_spark.functions.text import ngrams_from_tokens
 
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    stepped = ev.select(
-        "user_id", "ts", "event_id", "event_type",
-        (wall_epoch_secs("ts")
-         - wall_epoch_secs(F.lag("ts").over(w))).alias("gap"),
-    ).select(
-        "user_id", "ts", "event_id", "event_type",
-        F.sum(
-            (F.coalesce(F.col("gap"), F.lit(0)) > 30 * 60)
-            .cast("long")
-        ).over(w).alias("session_id"),
-    )
     seqs = (
-        stepped.groupBy("user_id", "session_id")
+        sessionize(ev).groupBy("user_id", "session_id")
         .agg(
             F.transform(
                 F.sort_array(F.collect_list(
@@ -1155,10 +1149,7 @@ def user_active_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     days = (
-        ev.select(
-            "user_id",
-            F.datediff(F.col("ts").cast("date"),
-                       F.lit("2024-01-01").cast("date")).alias("d"))
+        ev.select("user_id", day_index("ts").alias("d"))
         .distinct()
     )
     w = Window.partitionBy("user_id").orderBy("d")
@@ -1182,8 +1173,8 @@ def user_active_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "user_id", "n_streaks", "n_active_days", "longest_streak",
-            F.date_add(F.lit("2024-01-01").cast("date"), F.col("ls_d"))
-            .cast("string").alias("longest_streak_start"),
+            index_date(F.col("ls_d")).cast("string")
+            .alias("longest_streak_start"),
         )
     )
 
@@ -1210,10 +1201,7 @@ def events_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (type, day) table — without the persist each alias re-runs the
     # full events scan + aggregation.
     daily = scoped_persist(
-        ev.select(
-            "event_type",
-            F.datediff(F.col("ts").cast("date"),
-                       F.lit("2024-01-01").cast("date")).alias("d"))
+        ev.select("event_type", day_index("ts").alias("d"))
         .groupBy("event_type", "d")
         .agg(F.count(F.lit(1)).cast("long").alias("x"))
     )
@@ -1253,9 +1241,9 @@ def events_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def session_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Peak concurrent sessions per day — the capacity / licensing
     metric ("how many users were on AT ONCE") that a plain daily
-    session count cannot answer. Sessions are the same 30-minute-gap
-    windows as `events_session`; a session is live on [first_ts,
-    last_ts + gap), Spark's session_window interval.
+    session count cannot answer. Sessions are ``sessionize``'s, as in
+    `events_session`; a session is live on [first_ts, last_ts + gap),
+    the interval Spark's session windows give it.
 
     Distributed sweep-line, no global sort of the boundary stream:
       1. sessions collapse to ±1 boundary rows (one data-sized agg);
@@ -1275,21 +1263,14 @@ def session_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     is NOT concurrent with it; both engines order by (t_us, delta).
     """
     ev = load_table(spark, sf_dir, "events")
-    sess = (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"),
-                   "user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            # session_window bounds inherit ts's NTZ type, so the
-            # epoch extraction is pure integer arithmetic
-            wall_epoch_us(F.col("w.start")).alias("s_us"),
-            wall_epoch_us(F.col("w.end")).alias("e_us"))
-    )
+    sess = sessionize(ev).groupBy("user_id", "session_id").agg(
+        wall_epoch_us(F.min("ts")).alias("s_us"),
+        (wall_epoch_us(F.max("ts")) + SESSION_GAP_US).alias("e_us"))
     from hadoop_mapreduce_spark.session import scoped_persist
 
     # The boundary relation feeds THREE consumers (day-range probe,
     # per-hour offsets, within-hour prefix sums); persisted once so the
-    # session_window aggregation — the only data-sized stage — runs a
+    # session aggregation — the only data-sized stage — runs a
     # single time (measured 4.26 s -> see SCALE4_r7k.json).
     bounds = scoped_persist(
         sess.select(F.col("s_us").alias("t_us"),
@@ -1365,9 +1346,7 @@ def events_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     beta = 0.3
     ev = load_table(spark, sf_dir, "events")
     daily = (
-        ev.select("event_type",
-                  F.datediff(F.col("ts").cast("date"),
-                             F.lit("2024-01-01").cast("date")).alias("d"))
+        ev.select("event_type", day_index("ts").alias("d"))
         .groupBy("event_type", "d")
         .agg(F.count(F.lit(1)).cast("long").alias("x"))
     )
@@ -1403,8 +1382,7 @@ def events_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         arr.select("event_type", F.explode(F.expr(fold)).alias("r"))
         .select(
             "event_type",
-            F.date_add(F.lit("2024-01-01").cast("date"),
-                       F.col("r.d").cast("int")).cast("string")
+            index_date(F.col("r.d").cast("int")).cast("string")
             .alias("day"),
             F.col("r.x").alias("n_events"),
             r6(F.col("r.l")).alias("level"),
@@ -1440,10 +1418,7 @@ def sax_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     daily = (
-        ev.select(
-            "event_type",
-            F.datediff(F.col("ts").cast("date"),
-                       F.lit("2024-01-01").cast("date")).alias("d"))
+        ev.select("event_type", day_index("ts").alias("d"))
         .groupBy("event_type", "d")
         .agg(F.count(F.lit(1)).cast("long").alias("x"))
     )
@@ -1517,16 +1492,12 @@ def events_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("e")
     )
     sess = (
-        ev.select(
-            "user_id", "ts",
-            wall_epoch_us("ts").alias("t_us"),
-            "event_id", sym.alias("ch"))
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"),
-                 "user_id")
+        sessionize(ev.select("user_id", "ts", "event_id", sym.alias("ch")))
+        .groupBy("user_id", "session_id")
         .agg(F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(
-                    F.struct("t_us", "event_id", "ch"))),
+                    F.struct("ts", "event_id", "ch"))),
                 lambda s: s["ch"]), "").alias("seq"))
     )
     from hadoop_mapreduce_spark.session import scoped_persist
@@ -1587,8 +1558,7 @@ def survival_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln(0) = NULL poisoning the window (Spark) or -inf (DuckDB).
     """
     ev = load_table(spark, sf_dir, "events")
-    day = F.datediff(F.col("ts").cast("date"),
-                     F.lit("2024-01-01").cast("date"))
+    day = day_index("ts")
     per_user = ev.groupBy("user_id").agg(
         F.min(day).alias("first_d"), F.max(day).alias("last_d"))
     gmax = per_user.agg(F.max("last_d").alias("corpus_end"))
@@ -1662,8 +1632,7 @@ def events_stl_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     (<=366 rows/type/year at any corpus size), partitioned by type.
     """
     ev = load_table(spark, sf_dir, "events")
-    day = F.datediff(F.col("ts").cast("date"),
-                     F.lit("2024-01-01").cast("date"))
+    day = day_index("ts")
     daily = ev.groupBy(
         F.col("event_type"), day.alias("d")
     ).agg(F.count(F.lit(1)).alias("n"))
@@ -1675,7 +1644,7 @@ def events_stl_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("cnt7") == 7)
         .select(
             "event_type",
-            # Monday=0 .. Sunday=6; 2024-01-01 is a Monday, d % 7 is
+            # Monday=0 .. Sunday=6; day 0 is a Monday, d % 7 is
             # engine-portable integer arithmetic (d >= 0 always).
             (F.col("d") % 7).alias("dow"),
             (F.lit(7) * F.col("n") - F.col("sum7")).alias("d7"),
@@ -1718,8 +1687,7 @@ def user_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a week-keyed rollup bounded by the corpus week span.
     """
     ev = load_table(spark, sf_dir, "events")
-    day = F.datediff(F.col("ts").cast("date"),
-                     F.lit("2024-01-01").cast("date"))
+    day = day_index("ts")
     uw = (
         # integer week index: DIV truncation == floor for d >= 0, and
         # avoids double->int cast (truncating in Spark, ROUNDING in
@@ -1804,8 +1772,7 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_mapreduce_spark.session import scoped_persist
 
     ev = load_table(spark, sf_dir, "events")
-    day = F.datediff(F.col("ts").cast("date"),
-                     F.lit("2024-01-01").cast("date"))
+    day = day_index("ts")
     daily = scoped_persist(
         ev.groupBy("event_type", day.alias("d"))
         .agg(F.count(F.lit(1)).alias("n")))
@@ -1848,9 +1815,8 @@ def session_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     across the corpus — the whole-journey statistic
     `events_session_bigrams` only sees two steps of.
 
-    Sessionisation is the identical portable lag/cumsum formulation as
-    events_session_bigrams (session id = running count of
-    gap-exceeding steps per user), so both engines agree on session
+    Sessions are ``sessionize``'s, as in events_session_bigrams, and
+    the oracle splices its SQL twin, so both engines agree on session
     boundaries bit-for-bit.  Path assembly sorts each session's
     (ts, event_id, type) structs — ties on ts are broken by event_id,
     engine-portable — and the truncation cap bounds both the collected
@@ -1864,21 +1830,9 @@ def session_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k is TakeOrdered, no global sort.
     """
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    stepped = ev.select(
-        "user_id", "ts", "event_id", "event_type",
-        (wall_epoch_secs("ts")
-         - wall_epoch_secs(F.lag("ts").over(w))).alias("gap"),
-    ).select(
-        "user_id", "ts", "event_id", "event_type",
-        F.sum(
-            (F.coalesce(F.col("gap"), F.lit(0)) > 30 * 60)
-            .cast("long")
-        ).over(w).alias("session_id"),
-    )
     ws = Window.partitionBy("user_id", "session_id").orderBy(
         "ts", "event_id")
-    ranked = stepped.withColumn("rn", F.row_number().over(ws))
+    ranked = sessionize(ev).withColumn("rn", F.row_number().over(ws))
     # collect_list skips NULLs, so the aggregation state holds at most
     # 12 structs per session REGARDLESS of session length — the
     # truncation happens before the collect, not after
@@ -2005,8 +1959,7 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie table is value-bounded.
     """
     ev = load_table(spark, sf_dir, "events")
-    day = F.datediff(F.col("ts").cast("date"),
-                     F.lit("2024-01-01").cast("date"))
+    day = day_index("ts")
     daily = ev.groupBy("event_type", day.alias("d")).agg(
         F.count(F.lit(1)).alias("n"))
     from hadoop_mapreduce_spark.session import scoped_persist
@@ -2073,8 +2026,7 @@ def forecast_backtest_snaive(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid self-join on exact integer day keys.
     """
     ev = load_table(spark, sf_dir, "events")
-    day = F.datediff(F.col("ts").cast("date"),
-                     F.lit("2024-01-01").cast("date"))
+    day = day_index("ts")
     daily = ev.groupBy("event_type", day.alias("d")).agg(
         F.count(F.lit(1)).alias("n"))
     from hadoop_mapreduce_spark.session import scoped_persist
@@ -2125,8 +2077,7 @@ def runs_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-type partition.
     """
     ev = load_table(spark, sf_dir, "events")
-    day = F.datediff(F.col("ts").cast("date"),
-                     F.lit("2024-01-01").cast("date"))
+    day = day_index("ts")
     daily = ev.groupBy("event_type", day.alias("d")).agg(
         F.count(F.lit(1)).alias("n"))
     med = daily.groupBy("event_type").agg(
@@ -2187,8 +2138,8 @@ def session_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix for orders; `events_session_bigrams` the top event bigrams;
     this reduces the matrix to the predictability number per state).
 
-    Sessionisation is the repo's portable lag/cumsum formulation
-    (identical to events_session_bigrams / session_path_topk).
+    Sessions are ``sessionize``'s (as in events_session_bigrams /
+    session_path_topk).
     Exactness: transition counts are BIGINT; each term
     n_ft·ln(n_f/n_ft) is a smooth function of exact integers,
     floor-rounded to e6 PER CELL, summed exactly, divided by n_f —
@@ -2196,20 +2147,10 @@ def session_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     double ever sums across partitions.
     """
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    stepped = ev.select(
-        "user_id", "ts", "event_id", "event_type",
-        (wall_epoch_secs("ts")
-         - wall_epoch_secs(F.lag("ts").over(w))).alias("gap"),
-    ).select(
-        "user_id", "ts", "event_id", "event_type",
-        F.sum((F.coalesce(F.col("gap"), F.lit(0)) > 30 * 60)
-              .cast("long")).over(w).alias("session_id"),
-    )
     ws = Window.partitionBy("user_id", "session_id").orderBy(
         "ts", "event_id")
     trans = (
-        stepped.withColumn("nxt", F.lead("event_type").over(ws))
+        sessionize(ev).withColumn("nxt", F.lead("event_type").over(ws))
         .where(F.col("nxt").isNotNull())
         .groupBy(F.col("event_type").alias("from_type"),
                  F.col("nxt").alias("to_type"))
@@ -2268,27 +2209,17 @@ def markov_absorption_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(38,0)/HUGEINT) with ONE truncating division by the state's
     out-count — no float anywhere.
 
-    Scale shape: sessionisation is the portable lag/cumsum
-    formulation; ONE transition aggregation over the data; all
+    Scale shape: sessionisation is ``sessionize`` (one user-keyed
+    window pass); ONE transition aggregation over the data; all
     12 iterations run on the |event_types|^2-bounded count
     matrix (metadata-sized at any corpus scale), localCheckpoint'ed
     per round like kmeans_centroids.
     """
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    stepped = ev.select(
-        "user_id", "ts", "event_id", "event_type",
-        (wall_epoch_secs("ts")
-         - wall_epoch_secs(F.lag("ts").over(w))).alias("gap"),
-    ).select(
-        "user_id", "ts", "event_id", "event_type",
-        F.sum((F.coalesce(F.col("gap"), F.lit(0)) > 30 * 60)
-              .cast("long")).over(w).alias("session_id"),
-    )
     ws = Window.partitionBy("user_id", "session_id").orderBy(
         "ts", "event_id")
     trans = (
-        stepped.withColumn(
+        sessionize(ev).withColumn(
             "nxt", F.coalesce(F.lead("event_type").over(ws),
                               F.lit("END")))
         .where(F.col("event_type") != "purchase")  # absorbing: no exits
@@ -2361,8 +2292,7 @@ def events_residual_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     z_cut = 2
     ev = load_table(spark, sf_dir, "events")
-    day = F.datediff(F.col("ts").cast("date"),
-                     F.lit("2024-01-01").cast("date"))
+    day = day_index("ts")
     daily = ev.groupBy("event_type", day.alias("d")).agg(
         F.count(F.lit(1)).alias("n"))
     from hadoop_mapreduce_spark.session import scoped_persist
@@ -2419,17 +2349,8 @@ def dow_profile_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a grid self-join on exact integer week keys.
     """
     ev = load_table(spark, sf_dir, "events")
-    # Day index from integer wall-clock epoch-us (ts is TIMESTAMP_NTZ by
-    # the load_table contract, so timestampdiff is pure arithmetic under
-    # any session timezone). 19723 = epoch day of 2024-01-01; events all
-    # land on/after it, so truncating DIV == floor.
-    grid = ev.select(
-        "event_type",
-        F.expr(
-            "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00',"
-            " ts) DIV 86400000000 - 19723"
-        ).alias("dd"),
-    ).select(
+    # events all land on/after day 0, so truncating DIV == floor
+    grid = ev.select("event_type", day_index("ts").alias("dd")).select(
         "event_type",
         F.expr("dd DIV 7").alias("wk"),
         (F.col("dd") % 7).alias("dow"),
@@ -2576,26 +2497,16 @@ def markov_attribution_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     ALL removal worlds run in one plan. Removal can only destroy
     conversion paths, so p_removed <= p_base holds by construction.
 
-    Scale shape: sessionisation (lag/cumsum) + ONE transition
+    Scale shape: ``sessionize`` (one window pass) + ONE transition
     aggregation over the data; everything after — the scenario cross,
     the 12 iterations, the share normalisation — runs on the
     channel-bounded matrix, localCheckpoint'ed per round.
     """
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    stepped = ev.select(
-        "user_id", "ts", "event_id", "event_type",
-        (wall_epoch_secs("ts")
-         - wall_epoch_secs(F.lag("ts").over(w))).alias("gap"),
-    ).select(
-        "user_id", "ts", "event_id", "event_type",
-        F.sum((F.coalesce(F.col("gap"), F.lit(0)) > 30 * 60)
-              .cast("long")).over(w).alias("session_id"),
-    )
     ws = Window.partitionBy("user_id", "session_id").orderBy(
         "ts", "event_id")
     body = (
-        stepped.withColumn(
+        sessionize(ev).withColumn(
             "nxt", F.coalesce(F.lead("event_type").over(ws),
                               F.lit("END")))
         .withColumn("rn", F.row_number().over(ws))

@@ -33,6 +33,14 @@ values). Conventions that keep the two engines bit-comparable:
     score ``quality_score`` and the pass ``quality_pass``, each with a
     ``_sql`` twin) in ``functions/quality.py``. ``_QUALITY_KEPT`` below
     is the gated-documents CTE the pipeline oracles splice in;
+  * so do the event-time definitions in ``functions/timeutil.py``: the
+    day index (``day_index`` / ``day_index_sql`` and its inverse
+    ``index_date`` / ``index_date_sql``, day 0 ``DAY_ZERO``) and the
+    user session. ``sessionize(ev)`` adds ``session_id`` (a gap of
+    more than ``SESSION_GAP_US`` between a user's consecutive events,
+    ordered by ``(ts, event_id)``, starts a new session); every
+    sessionized query calls it, and its oracle splices the
+    ``SESSIONIZED_SQL`` CTE;
   * the near-dup oracle kernels live once, below, as CTE lists the
     oracles splice in: the shingle sets (``_SHINGLE_SETS``), the
     inverted-index pair counts (``_SHINGLE_PAIRS``), the exact
@@ -71,7 +79,13 @@ Output contract changes:
   * ``sample_seeded`` and ``sample_stratified`` keep the orders whose
     key passes ``in_sample`` (10%; F 5%, O 5%, P 100%), where they once
     drew Spark's seeded Bernoulli samples: the kept rows differ, and no
-    longer depend on the file layout.
+    longer depend on the file layout;
+  * ``events_session_bigrams``, ``session_path_topk``,
+    ``session_transition_entropy``, ``markov_absorption_steps`` and
+    ``markov_attribution_removal`` split sessions on the exact gap
+    (``sessionize``), where they once compared floored seconds: their
+    rows change only when a gap lies in (1800 s, 1801 s) and its
+    floored difference is 1800, which no fixture holds.
 """
 
 from __future__ import annotations
@@ -120,6 +134,12 @@ from hadoop_mapreduce_spark.functions.quality import (
     punct_ratio_sql,
     quality_pass_sql,
     quality_score_sql,
+)
+from hadoop_mapreduce_spark.functions.timeutil import (
+    SESSION_GAP_US,
+    SESSIONIZED_SQL,
+    day_index_sql,
+    index_date_sql,
 )
 from hadoop_mapreduce_spark.functions.text import (
     NORMALIZE_SQL,
@@ -1369,21 +1389,11 @@ WITH e2 AS (
 SELECT ws::VARCHAR AS window_start, event_type, count(*) AS n
 FROM e2 GROUP BY 1, 2
 """,
-    "events_session": """
-WITH o AS (
-  SELECT user_id, ts, value,
-    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-           OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) >= INTERVAL 30 MINUTE
-         THEN 1 ELSE 0 END AS brk
-  FROM events
-),
-s AS (
-  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
-  FROM o
-)
+    "events_session": f"""
+WITH {SESSIONIZED_SQL}
 SELECT user_id, min(ts)::VARCHAR AS session_start, count(*) AS n_events,
   round(sum(value), 2) AS session_value
-FROM s GROUP BY user_id, sid
+FROM sessionized GROUP BY user_id, session_id
 """,
     "events_dedup_first": """
 SELECT user_id, event_type, event_id, first_ts FROM (
@@ -2683,25 +2693,14 @@ WHERE date_diff('day', cohort_wk, wk) // 7 <= 4
 GROUP BY 1, 2
 """
 
-# The flagship n-gram applied to event sequences within gap-sessions:
-# sessionisation by the portable lag/cumsum formulation on both engines.
-ORACLE["events_session_bigrams"] = """
-WITH gaps AS (
-  SELECT user_id, ts, event_id, event_type,
-    date_diff('second', lag(ts) OVER w, ts) AS gap
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-stepped AS (
-  SELECT user_id, ts, event_id, event_type,
-    sum(CASE WHEN gap > 1800 THEN 1 ELSE 0 END)
-      OVER (PARTITION BY user_id ORDER BY ts, event_id) AS session_id
-  FROM gaps
-),
+# The flagship n-gram applied to event sequences within sessions
+# (SESSIONIZED_SQL, sessionize's twin).
+ORACLE["events_session_bigrams"] = f"""
+WITH {SESSIONIZED_SQL},
 seqs AS (
   SELECT user_id, session_id,
     list(event_type ORDER BY ts, event_id) AS types
-  FROM stepped GROUP BY user_id, session_id
+  FROM sessionized GROUP BY user_id, session_id
 ),
 bigrams AS (
   SELECT types[i] || ' ' || types[i + 1] AS bigram
@@ -5264,10 +5263,10 @@ FROM rk GROUP BY credit
 # r7k: user_active_streaks — gaps-and-islands on exact integer day
 # numbers; the argmax tie (earliest start among equal-longest islands)
 # is a filtered min on both engines.
-ORACLE["user_active_streaks"] = """
+ORACLE["user_active_streaks"] = f"""
 WITH days AS (
   SELECT DISTINCT user_id,
-         date_diff('day', DATE '2024-01-01', ts::DATE) AS d
+         {day_index_sql('ts')} AS d
   FROM events
 ),
 isl AS (
@@ -5288,19 +5287,19 @@ SELECT user_id,
        count(*)::BIGINT AS n_streaks,
        sum(len)::BIGINT AS n_active_days,
        max(len)::BIGINT AS longest_streak,
-       (DATE '2024-01-01'
-        + to_days(min(CASE WHEN len = mx THEN start_d END)::INTEGER)
-       )::DATE::VARCHAR AS longest_streak_start
+       {index_date_sql(
+           'min(CASE WHEN len = mx THEN start_d END)::INTEGER')
+       }::DATE::VARCHAR AS longest_streak_start
 FROM m GROUP BY user_id
 """
 
 # r7k: events_acf — Pearson sums are exact BIGINT (daily counts are
 # integers); only the final ratio divides in DOUBLE and floor-rounds at
 # 6 dp, the repo's cross-engine float convention.
-ORACLE["events_acf"] = """
+ORACLE["events_acf"] = f"""
 WITH daily AS (
   SELECT event_type,
-         date_diff('day', DATE '2024-01-01', ts::DATE) AS d,
+         {day_index_sql('ts')} AS d,
          count(*)::BIGINT AS x
   FROM events GROUP BY 1, 2
 ),
@@ -5327,27 +5326,16 @@ FROM g
 """
 
 # r7k: session_concurrency — the oracle rebuilds the same ±1 boundary
-# stream (30-min-gap sessions, live on [first, last+30min)) plus the
+# stream (sessionized's sessions, live on [first, last + gap)) plus the
 # midnight delta-0 probes, and takes one global running sum; ties order
 # by (t_us, delta) on both engines, so ends release before starts
 # acquire at the same microsecond.
-ORACLE["session_concurrency"] = """
-WITH o AS (
-  SELECT user_id, ts,
-    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-           OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) >= INTERVAL 30 MINUTE
-         THEN 1 ELSE 0 END AS brk
-  FROM events
-),
-s AS (
-  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
-  FROM o
-),
+ORACLE["session_concurrency"] = f"""
+WITH {SESSIONIZED_SQL},
 sess AS (
-  SELECT user_id, sid,
-         epoch_us(min(ts)) AS s_us,
-         epoch_us(max(ts)) + 1800000000 AS e_us
-  FROM s GROUP BY 1, 2
+  SELECT epoch_us(min(ts)) AS s_us,
+         epoch_us(max(ts)) + {SESSION_GAP_US} AS e_us
+  FROM sessionized GROUP BY user_id, session_id
 ),
 b AS (
   SELECT s_us AS t_us, 1::BIGINT AS delta FROM sess
@@ -5379,13 +5367,13 @@ FROM c GROUP BY 1
 # Holt recurrence (seed l_1 = x_1, b_1 = 0) in the same multiply-add
 # order as the Spark fold; inputs are exact BIGINT daily counts, so the
 # float chain is bit-identical and floor-rounds at 6 dp.
-ORACLE["events_holt_linear"] = """
+ORACLE["events_holt_linear"] = f"""
 WITH RECURSIVE idx AS (
   SELECT event_type, d, x,
          row_number() OVER (PARTITION BY event_type ORDER BY d) AS t
   FROM (
     SELECT event_type,
-           date_diff('day', DATE '2024-01-01', ts::DATE) AS d,
+           {day_index_sql('ts')} AS d,
            count(*)::BIGINT AS x
     FROM events GROUP BY 1, 2)
 ),
@@ -5401,7 +5389,7 @@ h AS (
   FROM h JOIN idx i ON i.event_type = h.event_type AND i.t = h.t + 1
 )
 SELECT event_type,
-       (DATE '2024-01-01' + to_days(d::INTEGER))::DATE::VARCHAR AS day,
+       {index_date_sql('d::INTEGER')}::DATE::VARCHAR AS day,
        x AS n_events,
        floor(l * 1e6 + 0.5) / 1e6 AS level,
        floor(b * 1e6 + 0.5) / 1e6 AS trend,
@@ -5561,10 +5549,10 @@ FROM lpa
 # r7m: sax_motifs — symbols from comparisons over an identically-built
 # z expression (exact BIGINT window sums -> one double expression
 # tree); breakpoint ties are measure-zero, zero-variance series -> 'b'.
-ORACLE["sax_motifs"] = """
+ORACLE["sax_motifs"] = f"""
 WITH daily AS (
   SELECT event_type,
-         date_diff('day', DATE '2024-01-01', ts::DATE) AS d,
+         {day_index_sql('ts')} AS d,
          count(*)::BIGINT AS x
   FROM events GROUP BY 1, 2
 ),
@@ -5755,25 +5743,14 @@ FROM g
 # r7q: events_pattern_match — MATCH_RECOGNIZE/CEP twin: sessions
 # symbolized to one char per event in (ts, event_id) order, patterns
 # evaluated as regexes (Java == RE2 on these explicit classes).
-ORACLE["events_pattern_match"] = """
-WITH o AS (
-  SELECT user_id, ts, event_id,
+ORACLE["events_pattern_match"] = f"""
+WITH {SESSIONIZED_SQL},
+sess AS (
+  SELECT string_agg(
     CASE event_type WHEN 'view' THEN 'v' WHEN 'click' THEN 'c'
          WHEN 'purchase' THEN 'p' WHEN 'signup' THEN 's'
-         ELSE 'e' END AS ch,
-    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-           OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) >= INTERVAL 30 MINUTE
-         THEN 1 ELSE 0 END AS brk
-  FROM events
-),
-s AS (
-  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING) AS sid
-  FROM o
-),
-sess AS (
-  SELECT user_id, sid, string_agg(ch, '' ORDER BY ts, event_id) AS seq
-  FROM s GROUP BY user_id, sid
+         ELSE 'e' END, '' ORDER BY ts, event_id) AS seq
+  FROM sessionized GROUP BY user_id, session_id
 ),
 pats AS (
   SELECT * FROM (VALUES ('browse_abandon', 'vc+$'),
@@ -5918,11 +5895,11 @@ FROM enr e CROSS JOIN tot t
 # -bounded grid; the survival product is the deterministic exp-sum-ln
 # fold over ORDER BY t (identical doubles, identical order on both
 # engines), floor-rounded 6 dp; a zero-survivor step forces exact 0.0.
-ORACLE["survival_kaplan_meier"] = """
+ORACLE["survival_kaplan_meier"] = f"""
 WITH per_user AS (
   SELECT user_id,
-         min(date_diff('day', DATE '2024-01-01', ts::DATE)) AS first_d,
-         max(date_diff('day', DATE '2024-01-01', ts::DATE)) AS last_d
+         min({day_index_sql('ts')}) AS first_d,
+         max({day_index_sql('ts')}) AS last_d
   FROM events GROUP BY user_id
 ),
 gmax AS (SELECT max(last_d) AS corpus_end FROM per_user),
@@ -6002,10 +5979,10 @@ LIMIT 100
 # r7t: events_stl_seasonal — detrended-by-7x integers (d7 = 7n - sum7)
 # summed exactly per (type, dow); one final double division, floor-
 # rounded 6 dp.  Full centered windows only (cnt7 = 7).
-ORACLE["events_stl_seasonal"] = """
+ORACLE["events_stl_seasonal"] = f"""
 WITH daily AS (
   SELECT event_type,
-         date_diff('day', DATE '2024-01-01', ts::DATE) AS d,
+         {day_index_sql('ts')} AS d,
          count(*)::BIGINT AS n
   FROM events GROUP BY 1, 2
 ),
@@ -6028,10 +6005,10 @@ GROUP BY event_type, dow
 # r7t: user_growth_accounting — lag/lead classification on per-user
 # ordered distinct weeks; churn charged to wk+1, observable weeks only;
 # quick ratio in exact micro-units (operands positive).
-ORACLE["user_growth_accounting"] = """
+ORACLE["user_growth_accounting"] = f"""
 WITH uw AS (
   SELECT DISTINCT user_id,
-         (date_diff('day', DATE '2024-01-01', ts::DATE) // 7)::INT AS wk
+         ({day_index_sql('ts')} // 7)::INT AS wk
   FROM events
 ),
 cl AS (
@@ -6098,10 +6075,10 @@ LIMIT 100
 # median = quantile_cont(0.5) == Spark percentile(0.5); the slope is
 # 6dp-floor-rounded BEFORE the intercept residual pass so both engines
 # median identical doubles.
-ORACLE["theil_sen_trend"] = """
+ORACLE["theil_sen_trend"] = f"""
 WITH daily AS (
   SELECT event_type,
-         date_diff('day', DATE '2024-01-01', ts::DATE) AS d,
+         {day_index_sql('ts')} AS d,
          count(*)::BIGINT AS n
   FROM events GROUP BY 1, 2
 ),
@@ -6126,29 +6103,16 @@ SELECT event_type, count(*)::BIGINT AS n_days, n_pairs, slope,
 FROM resid GROUP BY event_type, n_pairs, slope
 """
 
-# r7u: session_path_topk — identical lag/cumsum sessionisation as
+# r7u: session_path_topk — sessionized's sessions, as in
 # events_session_bigrams; paths are list-ordered by (ts, event_id) and
 # truncated to 12 steps on both engines.
-ORACLE["session_path_topk"] = """
-WITH gaps AS (
-  SELECT user_id, ts, event_id, event_type,
-    -- whole-second boundary count == Spark's unix_timestamp diff
-    -- (epoch() would carry fractional seconds the Spark side truncates)
-    date_diff('second', lag(ts) OVER w, ts) AS gap
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-stepped AS (
-  SELECT user_id, ts, event_id, event_type,
-    sum(CASE WHEN coalesce(gap, 0) > 1800 THEN 1 ELSE 0 END)
-      OVER (PARTITION BY user_id ORDER BY ts, event_id) AS session_id
-  FROM gaps
-),
+ORACLE["session_path_topk"] = f"""
+WITH {SESSIONIZED_SQL},
 ranked AS (
   SELECT user_id, session_id, event_type,
     row_number() OVER (PARTITION BY user_id, session_id
                        ORDER BY ts, event_id) AS rn
-  FROM stepped
+  FROM sessionized
 ),
 paths AS (
   SELECT user_id, session_id,
@@ -6428,10 +6392,10 @@ FROM scored GROUP BY doc_id
 # r7y: mann_kendall_trend — S and the tie-corrected variance numerator
 # are pure BIGINT polynomial sums on the bounded daily grid; the
 # continuity-corrected z divides exact integers, 6 dp.
-ORACLE["mann_kendall_trend"] = """
+ORACLE["mann_kendall_trend"] = f"""
 WITH daily AS (
   SELECT event_type,
-         date_diff('day', DATE '2024-01-01', ts::DATE) AS d,
+         {day_index_sql('ts')} AS d,
          count(*)::BIGINT AS n
   FROM events GROUP BY 1, 2
 ),
@@ -6541,10 +6505,10 @@ FROM w CROSS JOIN tot
 
 # r7z: forecast_backtest_snaive — exact integer error sums on the
 # bounded grid; MAE/MAPE in truncated micro-units (operands positive).
-ORACLE["forecast_backtest_snaive"] = """
+ORACLE["forecast_backtest_snaive"] = f"""
 WITH daily AS (
   SELECT event_type,
-         date_diff('day', DATE '2024-01-01', ts::DATE) AS d,
+         {day_index_sql('ts')} AS d,
          count(*)::BIGINT AS n
   FROM events GROUP BY 1, 2
 ),
@@ -6608,10 +6572,10 @@ GROUP BY 1, 2
 # r7z: runs_test_daily — median-dichotomised runs with continuity
 # correction; the median is the interpolating percentile(0.5) ==
 # quantile_cont on both engines.
-ORACLE["runs_test_daily"] = """
+ORACLE["runs_test_daily"] = f"""
 WITH daily AS (
   SELECT event_type,
-         date_diff('day', DATE '2024-01-01', ts::DATE) AS d,
+         {day_index_sql('ts')} AS d,
          count(*)::BIGINT AS n
   FROM events GROUP BY 1, 2
 ),
@@ -6721,27 +6685,16 @@ SELECT lang, source, n_ls, n_l, n_s,
 FROM cells CROSS JOIN mi
 """
 
-# r8a: session_transition_entropy — same lag/cumsum sessionisation as
-# session_path_topk (exact-second gaps); per-cell e6 terms summed as
-# BIGINT; two-level integer fold for the rate.
-ORACLE["session_transition_entropy"] = """
-WITH gaps AS (
-  SELECT user_id, ts, event_id, event_type,
-    date_diff('second', lag(ts) OVER w, ts) AS gap
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-stepped AS (
-  SELECT user_id, ts, event_id, event_type,
-    sum(CASE WHEN coalesce(gap, 0) > 1800 THEN 1 ELSE 0 END)
-      OVER (PARTITION BY user_id ORDER BY ts, event_id) AS session_id
-  FROM gaps
-),
+# r8a: session_transition_entropy — sessionized's sessions, as in
+# session_path_topk; per-cell e6 terms summed as BIGINT; two-level
+# integer fold for the rate.
+ORACLE["session_transition_entropy"] = f"""
+WITH {SESSIONIZED_SQL},
 trans AS (
   SELECT event_type AS from_type,
          lead(event_type) OVER (PARTITION BY user_id, session_id
                                 ORDER BY ts, event_id) AS to_type
-  FROM stepped
+  FROM sessionized
 ),
 tcnt AS (
   SELECT from_type, to_type, count(*)::BIGINT AS n_ft
@@ -6919,10 +6872,10 @@ LEFT JOIN rd ON f.w = rd.w
 # r8c: events_residual_anomaly — exact integer seasonal-difference
 # residuals; the anomaly flag compares squared integers so the
 # boundary can't flip on float noise.
-ORACLE["events_residual_anomaly"] = """
+ORACLE["events_residual_anomaly"] = f"""
 WITH daily AS (
   SELECT event_type,
-         date_diff('day', DATE '2024-01-01', ts::DATE) AS d,
+         {day_index_sql('ts')} AS d,
          count(*)::BIGINT AS n
   FROM events GROUP BY 1, 2
 ),
@@ -7011,14 +6964,14 @@ UNION ALL SELECT 4, n_pairs, n_id1 FROM q4
 """)
 # r8d: dow_profile_stability — consecutive-week ZERO-PADDED 7-vector
 # cosine: full-outer dow axis (a dow present in one week only adds 0 to
-# the dot but its count^2 stays in that week's norm); days derived from
-# integer epoch-us (session-timezone-proof on the Spark side). Dot and
-# norms are exact BIGINT folds, one division per pair.
-ORACLE["dow_profile_stability"] = """
+# the dot but its count^2 stays in that week's norm); days are
+# day_index values. Dot and norms are exact BIGINT folds, one division
+# per pair.
+ORACLE["dow_profile_stability"] = f"""
 WITH grid AS (
   SELECT event_type,
-         (epoch_us(ts) // 86400000000 - 19723) // 7 AS wk,
-         (epoch_us(ts) // 86400000000 - 19723) % 7 AS dow,
+         {day_index_sql('ts')} // 7 AS wk,
+         {day_index_sql('ts')} % 7 AS dow,
          count(*)::BIGINT AS n
   FROM events GROUP BY 1, 2, 3
 ),
@@ -7761,24 +7714,13 @@ v{k} AS (
 )"""
 
 ORACLE["markov_absorption_steps"] = (
-    """WITH gaps AS (
-  SELECT user_id, ts, event_id, event_type,
-    date_diff('second', lag(ts) OVER w, ts) AS gap
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-stepped AS (
-  SELECT user_id, ts, event_id, event_type,
-    sum(CASE WHEN coalesce(gap, 0) > 1800 THEN 1 ELSE 0 END)
-      OVER (PARTITION BY user_id ORDER BY ts, event_id) AS session_id
-  FROM gaps
-),
+    f"""WITH {SESSIONIZED_SQL},
 trans AS (
   SELECT event_type AS from_type,
     coalesce(lead(event_type) OVER (PARTITION BY user_id, session_id
                                     ORDER BY ts, event_id),
              'END') AS to_type
-  FROM stepped
+  FROM sessionized
 ),
 tcnt AS (
   SELECT from_type, to_type, count(*)::BIGINT AS n_ft
@@ -8082,23 +8024,12 @@ a{k} AS (
 )"""
 
 ORACLE["markov_attribution_removal"] = (
-    """WITH gaps AS (
-  SELECT user_id, ts, event_id, event_type,
-    date_diff('second', lag(ts) OVER w, ts) AS gap
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-stepped AS (
-  SELECT user_id, ts, event_id, event_type,
-    sum(CASE WHEN coalesce(gap, 0) > 1800 THEN 1 ELSE 0 END)
-      OVER (PARTITION BY user_id ORDER BY ts, event_id) AS session_id
-  FROM gaps
-),
+    f"""WITH {SESSIONIZED_SQL},
 body AS (
   SELECT event_type,
     coalesce(lead(event_type) OVER w2, 'END') AS nxt,
     row_number() OVER w2 AS rn
-  FROM stepped
+  FROM sessionized
   WINDOW w2 AS (PARTITION BY user_id, session_id ORDER BY ts, event_id)
 ),
 trans AS (

@@ -1,12 +1,16 @@
 """Structured Streaming surface (SURVEY.md §2.EXT: streaming row).
 
 The batch twins in operators/timeseries.py define the semantics (and are
-the oracle-checked versions — `F.window`/`F.session_window` evaluate
-identically in both modes). This module provides the actual readStream
-pipelines: watermarks for late-data handling, windowed/sessionized
-aggregation, streaming dedup, and a stateful custom operator via
-applyInPandasWithState. Smoke-tested with the file source over the
-events fixture re-written as JSON (tests/test_streaming.py).
+the oracle-checked versions). `F.window` evaluates identically in both
+modes; sessions are the one place the two differ in form: the stream
+keeps `F.session_window`, which splits a user's events where a gap
+exceeds ``SESSION_GAP_MINUTES``, the rule the batch kernel
+``functions/timeutil.py::sessionize`` applies with the same constant.
+This module provides the actual readStream pipelines: watermarks for
+late-data handling, windowed/sessionized aggregation, streaming dedup,
+and a stateful custom operator via applyInPandasWithState.
+Smoke-tested with the file source over the events fixture re-written as
+JSON (tests/test_streaming.py).
 """
 
 from __future__ import annotations
@@ -16,6 +20,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType, LongType, StringType, StructField, StructType, TimestampType,
 )
+
+from hadoop_mapreduce_spark.functions.timeutil import SESSION_GAP_MINUTES
 
 # How late an event may arrive before the watermarked operators below
 # drop it and evict the state it would update.
@@ -55,12 +61,14 @@ def tumbling_counts(events: DataFrame) -> DataFrame:
 
 
 def session_counts(events: DataFrame) -> DataFrame:
-    """Watermarked session windows per user, closed by a 30-minute gap
-    (same expression as the batch twin
-    operators/timeseries.py::events_session)."""
+    """Watermarked session windows per user, closed by a gap of more
+    than ``SESSION_GAP_MINUTES`` (the gap rule of the batch kernel
+    ``sessionize``, which operators/timeseries.py::events_session
+    groups by)."""
+    gap = f"{SESSION_GAP_MINUTES} minutes"
     return (
         events.withWatermark("ts", WATERMARK)
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("session_value"))
         .select(F.col("w.start").alias("session_start"), "user_id", "n_events", "session_value")
     )

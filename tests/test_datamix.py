@@ -725,3 +725,50 @@ def test_token_mass_lorenz_concentrated_source(spark, tmp_path):
     assert out[9].cum_share_e6 == 1_000_000
     for d in range(1, 10):
         assert out[d].tk_in_decile == 1
+
+
+def test_psi_exact_python_replay(spark):
+    """psi_source_drift replayed exactly in Python: decile bins,
+    smoothing and per-cell rounding."""
+    import math
+    from collections import defaultdict
+
+    from hadoop_mapreduce_spark.operators.datamix import psi_source_drift
+
+    rows = {r.source: r for r in psi_source_drift(spark, SF_DIR).collect()}
+    docs = load_table(spark, SF_DIR, "documents").select(
+        "source", "n_chars").collect()
+    by_src = defaultdict(list)
+    for d in docs:
+        by_src[d.source].append(d.n_chars)
+    allv = sorted(v for vs in by_src.values() for v in vs)
+    n_all = len(allv)
+    # decile edges: smallest value whose cumulative count reaches
+    # ceil(j*N/10), computed on the counts-of-counts cumulative
+    edges = []
+    for j in range(1, 10):
+        t = -(-j * n_all // 10)
+        edges.append(allv[t - 1])
+
+    def binof(x):
+        return sum(1 for e in edges if x >= e)
+
+    ref = defaultdict(int)
+    for v in allv:
+        ref[binof(v)] += 1
+    for src, vs in by_src.items():
+        sb = defaultdict(int)
+        for v in vs:
+            sb[binof(v)] += 1
+        psi = 0
+        for b in ref:
+            ps = (sb.get(b, 0) + 1) / (len(vs) + 10)
+            pr = (ref[b] + 1) / (n_all + 10)
+            psi += math.floor((ps - pr) * math.log(ps / pr) * 1e6 + 0.5)
+        r = rows[src]
+        assert r.n_docs == len(vs)
+        assert r.psi_e6 == psi
+        want = ("MAJOR" if psi > 250_000
+                else "MODERATE" if psi > 100_000 else "STABLE")
+        assert r.drift_flag == want
+    assert set(rows) == set(by_src)

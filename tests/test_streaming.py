@@ -291,20 +291,24 @@ def test_stream_stream_interval_join_equals_batch(spark, tmp_path):
 
 def test_session_append_equals_batch_twin(spark, tmp_path):
     """Closed session windows emitted by the stream (append mode) are
-    row-for-row identical to the batch session_window aggregation over
-    the same events. A far-future event advances the watermark past every
-    real session so all of them close and flush."""
+    row-for-row identical to the batch kernel ``sessionize`` over the
+    same events (ts as TIMESTAMP_NTZ, as load_table gives it). A
+    far-future event advances the watermark past every real session so
+    all of them close and flush."""
+    from hadoop_mapreduce_spark.functions.timeutil import sessionize
     from hadoop_mapreduce_spark.streaming.windows import session_counts
 
     path = tmp_path / "sess_events"
     path.mkdir()
     # user 1: one session (10:00,10:10), then a second after a >30m gap
     # (11:30); user 2: one session extended across micro-batches
-    # (10:05 then 10:20 — arrives in batch 2, still within the gap).
+    # (10:05 then 10:20 — arrives in batch 2, still within the gap);
+    # user 3: a gap of exactly 30m across micro-batches, one session.
     _write_json(path, "b1.json", [
         _ev(1, "2024-01-01T10:00:00Z", 1, 1.5),
         _ev(2, "2024-01-01T10:10:00Z", 1, 2.5),
         _ev(3, "2024-01-01T10:05:00Z", 2, 1.0),
+        _ev(6, "2024-01-01T10:00:00Z", 3, 0.5),
     ])
     stream = read_event_stream(spark, str(path), max_files_per_trigger=1)
     q = (
@@ -317,6 +321,7 @@ def test_session_append_equals_batch_twin(spark, tmp_path):
         _write_json(path, "b2.json", [
             _ev(4, "2024-01-01T11:30:00Z", 1, 4.0),
             _ev(5, "2024-01-01T10:20:00Z", 2, 3.0),
+            _ev(7, "2024-01-01T10:30:00Z", 3, 0.25),
         ])
         q.processAllAvailable()
         # watermark advancer: a day later → every real session closes
@@ -326,26 +331,33 @@ def test_session_append_equals_batch_twin(spark, tmp_path):
         q.stop()
 
     got = {
-        (r.user_id, str(r.session_start), r.n_events, round(r.session_value, 6))
-        for r in spark.table("t_sess_diff").collect()
+        (r.user_id, r.session_start, r.n_events, round(r.session_value, 6))
+        for r in spark.table("t_sess_diff").select(
+            "user_id", F.col("session_start").cast("string"),
+            "n_events", "session_value").collect()
         if r.user_id != 99  # the advancer's own session never closes
     }
-    batch = (
+    events = (
         spark.read.json(str(path))
-        .withColumn("ts", F.col("ts").cast("timestamp"))
+        .withColumn("ts", F.col("ts").cast("timestamp")
+                    .cast("timestamp_ntz"))
         .where(F.col("user_id") != 99)
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("session_value"))
-        .select("user_id", F.col("w.start").cast("string").alias("session_start"),
-                "n_events", "session_value")
+    )
+    batch = (
+        sessionize(events).groupBy("user_id", "session_id")
+        .agg(F.min("ts").cast("string").alias("session_start"),
+             F.count(F.lit(1)).alias("n_events"),
+             F.sum("value").alias("session_value"))
     )
     want = {
         (r.user_id, r.session_start, r.n_events, round(r.session_value, 6))
         for r in batch.collect()
     }
     assert got == want
-    # the cross-batch session really merged: user 2 has ONE session of 2 events
-    assert {(u, n) for (u, _s, n, _v) in got if u == 2} == {(2, 2)}
+    # the cross-batch sessions really merged: users 2 and 3 each have
+    # ONE session of 2 events
+    assert {(u, n) for (u, _s, n, _v) in got if u in (2, 3)} \
+        == {(2, 2), (3, 2)}
 
 
 def test_tumbling_append_late_drop_vs_batch_twin(spark, tmp_path):

@@ -997,3 +997,24 @@ def test_tokenizer_invariants_for_rake(spark):
         | F.col("tk").rlike("[^a-z0-9]")
     ).count()
     assert bad == 0
+
+
+def test_ivm_merge_identity_holds_for_every_group(spark):
+    """The HLL register monoid: merged base+delta registers estimate
+    exactly what a full recompute does, for every event type."""
+    from hadoop_mapreduce_spark.operators.textstats import ivm_hll_registers
+
+    rows = ivm_hll_registers(spark, SF_DIR).collect()
+    assert rows, "events fixture has event types"
+    for r in rows:
+        # the monoid identity — witnessed in-data, not asserted
+        assert r.merge_identity_holds == 1
+        assert r.est_merged == r.est_full_recompute
+        # merged distinct cannot exceed base+delta key counts and the
+        # linear-counting regime keeps the estimate near the truth
+        assert r.est_merged <= r.n_base_keys + r.n_delta_keys + 4
+        assert r.est_base <= r.n_base_keys + 4
+        assert r.est_delta <= r.n_delta_keys + 4
+    # base and delta are both non-trivial under the day-25 split
+    assert sum(r.n_delta_keys for r in rows) > 0
+    assert sum(r.n_base_keys for r in rows) > 0

@@ -43,17 +43,103 @@ def test_asof_join_micro(spark, tmp_path):
 
 
 def test_session_window_gap_semantics(spark):
-    """Events 29 min apart merge into one session; >= 30 min gap splits."""
+    """A gap of exactly 30:00 continues a session and one of
+    30:00.000001 starts a new one, in Spark's session_window (the
+    streams') and in sessionize (the batch queries')."""
+    from hadoop_mapreduce_spark.functions.timeutil import (
+        SESSION_GAP_MINUTES,
+        sessionize,
+    )
+
     ev = spark.createDataFrame(
-        [(1, ts(0), 5), (2, ts(29), 5), (3, ts(59 + 1), 5)],
-        ["event_id", "ts", "user_id"],
+        [(1, ts(0), 5), (2, ts(30), 5),
+         (3, ts(60) + dt.timedelta(microseconds=1), 5)],
+        "event_id long, ts timestamp_ntz, user_id long",
     )
     out = (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+        ev.groupBy(F.session_window("ts", f"{SESSION_GAP_MINUTES} minutes")
+                   .alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     )
     assert sorted(r.n for r in out) == [1, 2]
+    assert {r.event_id: r.session_id for r in sessionize(ev).collect()} \
+        == {1: 0, 2: 0, 3: 1}
+
+
+# Nine events on the three session-boundary cases. User 1: two gaps of
+# exactly 30:00 (one session). User 2: 10:00:00.900000 to
+# 10:30:00.950000, a gap of 1800.05 s that floored seconds read as 1800
+# (two sessions). User 3: a ts tie that event_id breaks (one session).
+_T0 = dt.datetime(2024, 1, 1, 10)
+SESSION_CORPUS = [
+    (1, _T0, 1, "view"),
+    (2, _T0 + dt.timedelta(minutes=30), 1, "click"),
+    (3, _T0 + dt.timedelta(minutes=60), 1, "purchase"),
+    (4, _T0 + dt.timedelta(microseconds=900_000), 2, "view"),
+    (5, _T0 + dt.timedelta(minutes=30, microseconds=950_000), 2, "click"),
+    (6, _T0 + dt.timedelta(days=1), 3, "signup"),
+    (8, _T0 + dt.timedelta(days=1, minutes=10), 3, "view"),
+    (7, _T0 + dt.timedelta(days=1, minutes=10), 3, "click"),
+    (9, _T0 + dt.timedelta(days=1, minutes=20), 3, "purchase"),
+]
+SESSIONIZED = ("events_session", "session_concurrency",
+               "events_pattern_match", "events_session_bigrams",
+               "session_path_topk", "session_transition_entropy",
+               "markov_absorption_steps", "markov_attribution_removal",
+               "session_gap_sweep")
+
+
+def test_sessionized_queries_match_oracle_on_hostile_corpus(spark, tmp_path):
+    """Every sessionized query and its oracle cut SESSION_CORPUS into
+    the same 4 sessions, and every reported session count says 4."""
+    import os
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hadoop_mapreduce_spark.registry import ORACLE, QUERIES
+    from tools.oracle_check import canon
+
+    sf = str(tmp_path)
+    cols = list(zip(*SESSION_CORPUS))
+    pq.write_table(pa.table({
+        "event_id": pa.array(cols[0], pa.int64()),
+        "ts": pa.array(cols[1], pa.timestamp("us")),
+        "user_id": pa.array(cols[2], pa.int64()),
+        "event_type": pa.array(cols[3], pa.string()),
+        "value": pa.array([1.25] * len(SESSION_CORPUS), pa.float64()),
+        "props": pa.array(["{}"] * len(SESSION_CORPUS), pa.string()),
+    }), f"{sf}/events.parquet")
+    con = duckdb.connect()
+    for t in ("region", "nation", "customer", "supplier", "part", "orders",
+              "lineitem", "events", "documents", "embeddings"):
+        if t != "events":
+            os.symlink(f"{SF_DIR}/{t}.parquet", f"{sf}/{t}.parquet")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"read_parquet('{sf}/{t}.parquet')")
+    got, failed = {}, []
+    try:
+        for name in SESSIONIZED:
+            sdf = QUERIES[name](spark, sf)
+            srows = [r.asDict() for r in sdf.collect()]
+            cur = con.execute(ORACLE[name])
+            ocols = [d[0] for d in cur.description]
+            if (sorted(sdf.columns) != sorted(ocols)
+                    or canon([tuple(r.values()) for r in srows], sdf.columns)
+                    != canon(cur.fetchall(), ocols)):
+                failed.append(name)
+            got[name] = srows
+    finally:
+        con.close()
+    assert failed == []
+    assert len(got["events_session"]) == 4
+    assert sum(r["n_sessions_started"]
+               for r in got["session_concurrency"]) == 4
+    assert sum(r["n_sessions"] for r in got["session_path_topk"]) == 4
+    assert [r["n_sessions"] for r in got["session_gap_sweep"]
+            if r["gap_minutes"] == 30] == [4]
 
 
 def test_tumbling_total_preserved(spark):
@@ -1276,3 +1362,84 @@ def test_kleinberg_path_is_min_cost_on_bruteforce(spark):
         nb = [s for s, g in zip(shares, got) if not g]
         if b and nb:
             assert sum(b) / len(b) > sum(nb) / len(nb)
+
+
+def test_attribution_removal_monotone_and_shares_normalise(spark):
+    """Removal can only destroy conversion paths, and the removal
+    effects normalise into shares that sum to 1e6 within truncation."""
+    from hadoop_mapreduce_spark.operators.timeseries import (
+        markov_attribution_removal,
+    )
+
+    rows = markov_attribution_removal(spark, SF_DIR).collect()
+    assert rows, "fixture has transient channels"
+    base = {r.p_base_e6 for r in rows}
+    assert len(base) == 1  # one base world
+    p_base = base.pop()
+    assert p_base > 0  # purchases exist in the fixture
+    for r in rows:
+        # removal can only destroy conversion paths
+        assert 0 <= r.p_removed_e6 <= p_base
+        assert r.removal_effect_e6 == \
+            (p_base - r.p_removed_e6) * 1_000_000 // p_base
+        assert 0 <= r.attribution_share_e6 <= 1_000_000
+    te = sum(r.removal_effect_e6 for r in rows)
+    if te > 0:
+        for r in rows:
+            assert r.attribution_share_e6 == \
+                r.removal_effect_e6 * 1_000_000 // te
+        # truncating shares sum to <= 1e6, within |channels| micro-units
+        s = sum(r.attribution_share_e6 for r in rows)
+        assert 1_000_000 - len(rows) < s <= 1_000_000
+    # removing 'purchase' itself is not a scenario; channels are the
+    # transient event types
+    assert "purchase" not in {r.channel for r in rows}
+    assert "START" not in {r.channel for r in rows}
+
+
+def test_time_decay_exact_replay(spark):
+    """attribution_time_decay replayed exactly in Python."""
+    from collections import defaultdict
+
+    from hadoop_mapreduce_spark.operators.timeseries import (
+        ATTR_DECAY_MAX_GAP,
+        ATTR_DECAY_W_E6,
+        attribution_time_decay,
+    )
+    from hadoop_mapreduce_spark.sources.tables import load_table
+
+    rows = {r.channel: r for r in
+            attribution_time_decay(spark, SF_DIR).collect()}
+    ev = load_table(spark, SF_DIR, "events").select(
+        "ts", "user_id", "event_type").collect()
+    epoch = ev[0].ts.__class__(1970, 1, 1)
+    recs = [(r.user_id, r.event_type,
+             int((r.ts - epoch).total_seconds() * 1_000_000)
+             // 86_400_000_000) for r in ev]
+    conv = {}
+    for u, c, d in recs:
+        if c == "purchase":
+            conv[u] = min(conv.get(u, d), d)
+    weighted = defaultdict(list)  # user -> [(channel, w)]
+    for u, c, d in recs:
+        if c != "purchase" and u in conv and d <= conv[u]:
+            gap = min(conv[u] - d, ATTR_DECAY_MAX_GAP)
+            weighted[u].append((c, ATTR_DECAY_W_E6[gap]))
+    credit = defaultdict(int)
+    ntouch = defaultdict(int)
+    for u, ws in weighted.items():
+        tw = sum(w for _, w in ws)
+        for c, w in ws:
+            credit[c] += w * 1_000_000 // tw
+            ntouch[c] += 1
+    total = sum(credit.values())
+    assert set(rows) == set(credit)
+    for c, r in rows.items():
+        assert r.n_touches == ntouch[c]
+        assert r.credit_e6 == credit[c]
+        assert r.share_e6 == credit[c] * 1_000_000 // total
+    # each conversion distributes ~1e6 micro-units (truncation slack
+    # bounded by its touch count)
+    n_convs_with_touch = len(weighted)
+    assert 0 <= n_convs_with_touch * 1_000_000 - total \
+        <= sum(len(v) for v in weighted.values())
