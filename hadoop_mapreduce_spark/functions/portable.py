@@ -18,9 +18,9 @@ the shared conventions, defined once per engine:
     alpha_m * m^2 * 2^49, precomputed once here and embedded as the same
     literal on both engines; linear counting m * ln(m / V) applies
     when V empty buckets remain and the raw estimate is at most 2.5m;
-    the result is rounded half up. The only float steps are one
-    division, one ln and the rounding, identical in any IEEE-754
-    engine.
+    the result is rounded half up (``fixed``). The only float steps
+    are one division, one ln and the rounding, identical in any
+    IEEE-754 engine.
 
   * the portable Bloom filter. A key's ``BLOOM_K`` probes come from
     one md5 digest by Kirsch–Mitzenmacher double hashing: h1 and h2 are
@@ -47,6 +47,22 @@ the shared conventions, defined once per engine:
     as the table grows. The domain-mixture rate ``mixture_rate`` is the
     pct of a source by the index in its name: 100 below 5, 50 below 10,
     25 below 15, else 10 (also when the name has no digits).
+
+  * fixed-point rounding. ``fixed(x, d)`` is x in BIGINT units of
+    10^-d, ``floor(x * 10^d + 0.5)``, and ``half_up(x, d)`` is that
+    count over 10^d, a double; the ``_sql`` twins are spelled so the
+    same string parses in Spark SQL and in DuckDB. ``round(x, d)`` is
+    not portable: Spark rounds the double's shortest decimal string
+    HALF_UP and DuckDB rounds the scaled double, so a value near a
+    decimal half can round apart. ``events_anomaly_mad``'s score
+    0.6745 * 137.87 / 24.14 (3.8522499999999997, at sf0.1) rounds to
+    3.8522 in Spark and 3.8523 in DuckDB at d = 4; an EWMA chain over
+    micro-units lands on dyadic 6-dp halves where the two engines'
+    half modes disagree (the differential fuzz found one on offsets
+    [0, 0, 1465, 0, 0, 0]). The floor form is one IEEE multiply, add
+    and floor, the same in any engine. Micro-unit totals use ``fixed``
+    too; it differs from ``round(x * 10^d)`` only on negative exact
+    halves and where adding 0.5 carries (0.49999999999999994 -> 1).
 
 The tokenizer pair lives in ``functions/text.py``; the quality gate's
 pair in ``functions/quality.py``. Hashes over other hex
@@ -79,6 +95,28 @@ def h60(col: Column | str, seed: int | str | None = None) -> Column:
 def h60_sql(expr: str) -> str:
     """DuckDB twin of :func:`h60` over a VARCHAR expression."""
     return f"('0x' || substr(md5({expr}), 1, 15))::UBIGINT::BIGINT"
+
+
+def fixed(x: Column, d: int) -> Column:
+    """``x`` in BIGINT units of 10^-d, rounded half up."""
+    scaled = x if d == 0 else x * F.lit(float(10 ** d))
+    return F.floor(scaled + F.lit(0.5)).cast("long")
+
+
+def fixed_sql(expr: str, d: int) -> str:
+    """Spark SQL and DuckDB twin of :func:`fixed`."""
+    scaled = f"({expr})" if d == 0 else f"({expr}) * 1e{d}"
+    return f"CAST(floor({scaled} + 0.5) AS BIGINT)"
+
+
+def half_up(x: Column, d: int) -> Column:
+    """``x`` rounded half up to ``d`` decimals, a double."""
+    return fixed(x, d) / F.lit(float(10 ** d))
+
+
+def half_up_sql(expr: str, d: int) -> str:
+    """Spark SQL and DuckDB twin of :func:`half_up`."""
+    return f"{fixed_sql(expr, d)} / 1e{d}"
 
 
 def is_bench(col: str) -> Column:
@@ -179,7 +217,7 @@ def hll_estimate_col() -> Column:
           * F.log(F.lit(float(HLL_M)) / v_empty.cast("double")))
     est = F.when((v_empty > 0) & (raw <= F.lit(2.5 * HLL_M)), lc) \
         .otherwise(raw)
-    return F.floor(est + F.lit(0.5)).cast("long")
+    return fixed(est, 0)
 
 
 def hll_estimate(regs: DataFrame, keys: list, alias: str = "est") -> DataFrame:
@@ -195,9 +233,9 @@ def hll_estimate_sql(rel: str | None = None) -> str:
     v_empty = f"({HLL_M} - {q}n_hit)"
     raw = (f"{HLL_ALPHA_SCALED!r} / (({q}s_part + {v_empty} * {HLL_POW49})"
            f"::DOUBLE)")
-    return (f"floor(CASE WHEN {v_empty} > 0 AND {raw} <= {2.5 * HLL_M}"
-            f" THEN {float(HLL_M)} * ln({float(HLL_M)} / {v_empty})"
-            f" ELSE {raw} END + 0.5)::BIGINT")
+    return fixed_sql(f"CASE WHEN {v_empty} > 0 AND {raw} <= {2.5 * HLL_M}"
+                     f" THEN {float(HLL_M)} * ln({float(HLL_M)} / {v_empty})"
+                     f" ELSE {raw} END", 0)
 
 
 BLOOM_K = 3                           # probes per key

@@ -13,7 +13,7 @@ exactly (reference WordCount.java:76-79):
 Everything here stays inside whole-stage codegen (no Python UDFs).
 
 The DuckDB twins (``NORMALIZE_SQL``, ``TOKS_SQL``, the whitespace
-helpers and the n-gram window ``ngrams_sql``) sit beside the Spark forms
+helpers, the raw token count and the n-gram window ``ngrams_sql``) sit beside the Spark forms
 so the registry's oracles tokenize and slide n-grams exactly as the
 operators do.
 """
@@ -46,6 +46,18 @@ def collapse_ws_sql(expr: str) -> str:
 
 # DuckDB twin of tokenize(normalize_text(text)): a list of non-empty tokens
 TOKS_SQL = f"list_filter({split_ws_sql(NORMALIZE_SQL)}, t -> t <> '')"
+
+
+def raw_token_count(col: Column | str) -> Column:
+    """Whitespace token count of raw (unnormalised) text, as a long: the
+    size of ``split(trim(col), \\s+)``. An empty or all-space string
+    counts 1 (one empty token), on both engines."""
+    return F.size(F.split(F.trim(col), r"\s+")).cast("long")
+
+
+def raw_token_count_sql(expr: str) -> str:
+    """DuckDB twin of :func:`raw_token_count`."""
+    return f"len({split_ws_sql(f'trim({expr})')})"
 
 
 def normalize_text(col: Column | str) -> Column:

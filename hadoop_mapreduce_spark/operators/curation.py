@@ -19,7 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hadoop_mapreduce_spark.functions.portable import doc_split, h60
+from hadoop_mapreduce_spark.functions.portable import (
+    doc_split, fixed, h60, half_up)
+from hadoop_mapreduce_spark.functions.text import raw_token_count
 from hadoop_mapreduce_spark.functions.timeutil import wall_epoch_us
 from hadoop_mapreduce_spark.sources.tables import load_table
 
@@ -94,7 +96,7 @@ def dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     split = doc_split("doc_id")
-    toks = F.size(F.split(F.trim("text"), r"\s+")).cast("long")
+    toks = raw_token_count("text")
     return (
         docs.select(split.alias("split"), toks.alias("n_tokens"))
         .groupBy("split")
@@ -147,7 +149,7 @@ def seq_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         (h60(F.col("doc_id").cast("string")) % n_buckets).cast("int")
         .alias("bucket"),
         F.least(
-            F.size(F.split(F.trim("text"), r"\s+")).cast("long"),
+            raw_token_count("text"),
             F.lit(max_tokens),
         ).alias("n_tokens"),
     )
@@ -426,7 +428,7 @@ def padding_waste_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     final rollup moves one row per batch.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.size(F.split(F.trim("text"), r"\s+")).cast("long")
+    toks = raw_token_count("text")
     base = docs.select(
         "doc_id", toks.alias("n"),
         F.md5(F.col("doc_id").cast("string")).alias("shuf"))
@@ -500,7 +502,7 @@ def context_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-int divisions (bit-stable doubles on both engines).
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.size(F.split(F.trim("text"), r"\s+")).cast("long")
+    toks = raw_token_count("text")
     per = docs.select(toks.alias("n")).select(
         "n", F.explode(F.array(*[F.lit(b) for b in (128, 512, 2048)])).alias("budget"))
     return (
@@ -1005,7 +1007,7 @@ def packing_boundary_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         (h60(F.col("doc_id").cast("string")) % n_buckets).cast("int")
         .alias("bucket"),
         F.least(
-            F.size(F.split(F.trim("text"), r"\s+")).cast("long"),
+            raw_token_count("text"),
             F.lit(max_tokens),
         ).alias("n_tokens"),
     )
@@ -1255,14 +1257,13 @@ def benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # implementation-defined, x*x is an IEEE operation.
     dev = F.col("n").cast("double") - exp_n
     chi = (dev * dev) / exp_n
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return (
         g.crossJoin(F.broadcast(total))
         .select(
             "digit", "n",
             F.expr("n * 1000000 DIV total").alias("share_e6"),
-            r6(p).alias("benford_share"),
-            r6(chi).alias("chi2_contrib"),
+            half_up(p, 6).alias("benford_share"),
+            half_up(chi, 6).alias("chi2_contrib"),
         )
     )
 
@@ -1338,8 +1339,7 @@ def quality_filter_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (na - both).alias("n_only_a"),
                 (nb - both).alias("n_only_b"),
                 neither.alias("n_neither"),
-                (F.floor(kappa * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
-                .alias("kappa"),
+                half_up(kappa, 6).alias("kappa"),
             ))
     out = rows[0]
     for r in rows[1:]:
@@ -1508,8 +1508,7 @@ def quality_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
             n0.alias("n0"), "tx", "ty",
             F.when((n0 - F.col("tx") <= 0) | (n0 - F.col("ty") <= 0),
                    F.lit(None).cast("double"))
-            .otherwise(F.floor(tau * F.lit(1e6) + F.lit(0.5))
-                       / F.lit(1e6)).alias("tau_b"),
+            .otherwise(half_up(tau, 6)).alias("tau_b"),
         )
     )
 
@@ -1596,8 +1595,7 @@ def quality_flag_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b").cast("long").alias("n_clean"),
             F.col("c").cast("long").alias("rest_flagged"),
             F.col("d").cast("long").alias("rest_clean"),
-            (F.floor(corrected * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
-            .alias("odds_ratio"),
+            half_up(corrected, 6).alias("odds_ratio"),
         )
     )
 
@@ -1996,7 +1994,7 @@ def ab_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     day = (wall_epoch_us("ts") / F.lit(86_400_000_000)).cast("long")
     h = h60(F.col("user_id").cast("string"))
-    v_us = F.round(F.col("value") * 1e6).cast("long")
+    v_us = fixed(F.col("value"), 6)
     base = ev.select("user_id", day.alias("day"), v_us.alias("v"))
     d0 = base.agg(F.min("day").alias("d0"))
     per_user = (
@@ -2052,12 +2050,10 @@ def ab_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         j.select(
             "arm", "n_users",
-            F.floor(mean_y + F.lit(0.5)).cast("long").alias("mean_y_e6"),
-            F.floor(adj + F.lit(0.5)).cast("long").alias("mean_y_cuped_e6"),
-            F.floor(theta * F.lit(1e6) + F.lit(0.5)).cast("long")
-            .alias("theta_e6"),
-            F.floor(rho2 * F.lit(1e6) + F.lit(0.5)).cast("long")
-            .alias("var_reduction_e6"),
+            fixed(mean_y, 0).alias("mean_y_e6"),
+            fixed(adj, 0).alias("mean_y_cuped_e6"),
+            fixed(theta, 6).alias("theta_e6"),
+            fixed(rho2, 6).alias("var_reduction_e6"),
         )
     )
 

@@ -37,7 +37,9 @@ from hadoop_mapreduce_spark.functions.portable import (
     BENCH_BLOOM_N,
     bloom_any,
     bloom_bitmap,
+    fixed,
     h60,
+    half_up,
     in_sample,
     is_bench,
     mixture_rate,
@@ -45,6 +47,7 @@ from hadoop_mapreduce_spark.functions.portable import (
 from hadoop_mapreduce_spark.functions.text import (
     ngrams_from_tokens,
     normalize_text,
+    raw_token_count,
     tokenize,
 )
 from hadoop_mapreduce_spark.operators.ngram import (
@@ -362,9 +365,8 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric int8 quantization of the embedding column with a
     reconstruction-error audit per label.
 
-    Per vector: scale = max|x| / 127; q_i = floor(x_i/scale + 0.5)
-    (explicit half-up — Spark round() and DuckDB round() disagree on
-    ties, floor(x+0.5) is identical in both); dequantized error is the
+    Per vector: scale = max|x| / 127; q_i = ``fixed(x_i / scale, 0)``
+    (portable half-up); dequantized error is the
     mean squared difference. Emits per-label vector counts, mean scale
     and mean MSE — the audit a pipeline runs before committing to a
     quantized ANN index (4x memory cut, bounded recall loss).
@@ -377,7 +379,7 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     max_abs = F.array_max(F.transform(v, F.abs))
     scale = F.greatest(max_abs, F.lit(1e-30)) / F.lit(127.0)
-    deq = F.transform(v, lambda x: F.floor(x / scale + F.lit(0.5)) * scale)
+    deq = F.transform(v, lambda x: fixed(x / scale, 0) * scale)
     sq_err = F.aggregate(
         F.zip_with(v, deq, lambda a, b: (a - b) * (a - b)),
         F.lit(0.0),
@@ -769,7 +771,7 @@ def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalise — the corpus is touched exactly once at scan speed.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.size(F.split(F.trim("text"), r"\s+")).cast("long")
+    toks = raw_token_count("text")
     per_src = docs.select("source", toks.alias("n")).groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("n").alias("n_tokens"))
     w = Window.partitionBy()
@@ -808,7 +810,7 @@ def quantile_normalize_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     once.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.size(F.split(F.trim("text"), r"\s+")).cast("long")
+    toks = raw_token_count("text")
     base = docs.select(
         "doc_id", "source",
         (toks * 1000 / F.col("n_chars")).alias("raw"),
@@ -1453,13 +1455,12 @@ def neyman_allocation_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = per.select(
         "source", "n_docs", "sx", "sx2",
-        F.floor(
+        fixed(
             F.col("n_docs")
             * F.sqrt((F.col("sx2").cast("double") * F.col("n_docs")
                       - F.col("sx").cast("double") * F.col("sx"))
-                     / (F.col("n_docs").cast("double") * F.col("n_docs")))
-            * F.lit(1e6) + F.lit(0.5)
-        ).cast("long").alias("w_e6"),
+                     / (F.col("n_docs").cast("double") * F.col("n_docs"))),
+            6).alias("w_e6"),
     )
     tot = w.agg(F.sum("w_e6").alias("tot_w_e6"))
     return (
@@ -1510,12 +1511,11 @@ def lang_source_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang", "source", "n_ls",
             F.col("n_l").cast("long").alias("n_l"),
             F.col("n_s").cast("long").alias("n_s"),
-            F.floor(
+            fixed(
                 F.col("n_ls")
                 * F.log(F.col("n_ls").cast("double") * F.col("nn")
-                        / (F.col("n_l").cast("double") * F.col("n_s")))
-                * F.lit(1e6) + F.lit(0.5)
-            ).cast("long").alias("term_e6"),
+                        / (F.col("n_l").cast("double") * F.col("n_s"))),
+                6).alias("term_e6"),
             F.col("nn").cast("long").alias("nn"),
         )
     )
@@ -1569,14 +1569,13 @@ def length_qq_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(F.arrays_zip(F.col("qs"), F.col("qc")))
         .alias("i", "pair"),
     )
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return (
         exploded.select(
             "source", "n_docs",
             ((F.col("i") + 1) * 10).cast("long").alias("pct"),
-            r6(F.col("pair.qs")).alias("q_source"),
-            r6(F.col("pair.qc")).alias("q_corpus"),
-            r6(F.col("pair.qs") - F.col("pair.qc")).alias("drift"),
+            half_up(F.col("pair.qs"), 6).alias("q_source"),
+            half_up(F.col("pair.qc"), 6).alias("q_corpus"),
+            half_up(F.col("pair.qs") - F.col("pair.qc"), 6).alias("drift"),
         )
     )
 
@@ -1620,9 +1619,7 @@ def length_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rk") < F.col("k_eff"))
         .select(
             "source", "k_eff", "x_k",
-            F.floor(F.log(F.col("n_chars").cast("double")
-                          / F.col("x_k"))
-                    * F.lit(1e6) + F.lit(0.5)).cast("long")
+            fixed(F.log(F.col("n_chars").cast("double") / F.col("x_k")), 6)
             .alias("t_e6"),
         )
     )
@@ -1634,9 +1631,8 @@ def length_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source", "k_eff", "x_k", "sum_ln_e6", "n_terms",
             F.when(F.col("sum_ln_e6") <= 0,
                    F.lit(None).cast("double")).otherwise(
-                F.floor(F.col("n_terms").cast("double") * F.lit(1e6)
-                        / F.col("sum_ln_e6") * F.lit(1e6) + F.lit(0.5))
-                / F.lit(1e6)).alias("hill_alpha"),
+                half_up(F.col("n_terms").cast("double") * F.lit(1e6)
+                        / F.col("sum_ln_e6"), 6)).alias("hill_alpha"),
         )
     )
 
@@ -1801,8 +1797,7 @@ def psi_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
            / (F.col("n_src") + n_bins).cast("double"))
     p_r = ((F.col("n_rb") + 1).cast("double")
            / (F.col("n_all") + n_bins).cast("double"))
-    term = F.floor((p_s - p_r) * F.log(p_s / p_r) * F.lit(1e6)
-                   + F.lit(0.5)).cast("long")
+    term = fixed((p_s - p_r) * F.log(p_s / p_r), 6)
     psi = grid.select("source", "n_src", term.alias("t_e6")) \
         .groupBy("source", "n_src") \
         .agg(F.sum("t_e6").cast("long").alias("psi_e6"))

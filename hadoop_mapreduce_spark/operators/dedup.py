@@ -52,7 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hadoop_mapreduce_spark.functions.portable import h60
+from hadoop_mapreduce_spark.functions.portable import fixed, h60, half_up
 from hadoop_mapreduce_spark.operators.ngram import explode_ngram_set, explode_ngrams
 from hadoop_mapreduce_spark.sources.tables import load_table
 
@@ -1456,7 +1456,7 @@ def pagerank_dedup_graph(spark: SparkSession, sf_dir: str, k: int = 50) -> DataF
     back. Lineage localCheckpoint'd per round like every iterative
     operator here. Oracle-paired since r7: fixed iteration count makes
     the fixpoint expressible as a DuckDB recursive CTE, and the rank is
-    emitted as INTEGER 1e-8 units (round(rank*1e8) as BIGINT) so the
+    emitted as INTEGER 1e-8 units (``fixed(rank, 8)``) so the
     cross-engine comparison — and the top-k ORDERING ITSELF — happens on
     integers: ordering on the raw double would let 1e-17 summation-order
     noise reorder structurally-tied documents (identical near-dup twins
@@ -1505,7 +1505,7 @@ def pagerank_dedup_graph(spark: SparkSession, sf_dir: str, k: int = 50) -> DataF
             .localCheckpoint()
         )
     scored = ranks.select(
-        "doc_id", F.expr("CAST(round(rank * 1e8) AS BIGINT)").alias("rank_e8"))
+        "doc_id", fixed(F.col("rank"), 8).alias("rank_e8"))
     w = Window.orderBy(F.desc("rank_e8"), F.asc("doc_id"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
@@ -2502,9 +2502,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         (F.col("m2") / 2).cast("long").alias("n_edges"),
         "sx", "sxx", "sxy",
-        F.when(den > 0,
-               F.floor(num.cast("double") / den.cast("double")
-                       * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
+        F.when(den > 0, half_up(num.cast("double") / den.cast("double"), 6))
         .alias("assortativity"),
     )
 

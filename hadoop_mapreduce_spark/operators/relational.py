@@ -25,6 +25,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hadoop_mapreduce_spark.functions.portable import (
+    fixed,
+    half_up,
+    half_up_sql,
     hll_estimate,
     hll_rho,
     in_sample,
@@ -181,13 +184,8 @@ def project_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.select(
             F.col("l_orderkey"),
             F.col("l_linenumber").cast("long").alias("l_linenumber"),
-            # floor(x*100+0.5)/100 instead of round(): Spark rounds the
-            # shortest decimal repr (HALF_UP) while DuckDB rounds the raw
-            # binary double, which disagree exactly on .xx5 boundaries —
-            # this formula is bit-identical in both engines.
-            (
-                F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax")) * 100 + 0.5)
-                / 100.0
+            half_up(
+                F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax")), 2
             ).alias("net_charge"),
             F.when(F.col("l_discount") >= 0.05, F.lit("HIGH")).otherwise(F.lit("LOW")).alias("disc_band"),
             F.concat_ws("-", F.col("l_returnflag"), F.col("l_linestatus")).alias("flag_status"),
@@ -872,17 +870,15 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     #     (partkey, suppkey) pair only to discard 95% of the groups;
     #   * per-part minimum via a window over the aggregate, not a second
     #     aggregate + self-join (one computation of `unit`);
-    #   * floor(x*1e4+0.5)/1e4 instead of round(): price/qty lands
-    #     exactly on .xxxx5 half-boundaries (4-decimal price / 2), where
-    #     engine round() directions disagree; floor on the binary double
-    #     is engine-identical.
-    return _sql(spark, sf_dir, """
+    #   * the unit cost is rounded with ``half_up``: price/qty lands
+    #     exactly on .xxxx5 half-boundaries (4-decimal price / 2).
+    return _sql(spark, sf_dir, f"""
         WITH unit AS (
             SELECT /*+ BROADCAST(pk) */ l_partkey, l_suppkey,
                    min(l_extendedprice / l_quantity) AS unit_cost
-            FROM {lineitem}
+            FROM {{lineitem}}
             LEFT SEMI JOIN (
-                SELECT p_partkey FROM {part}
+                SELECT p_partkey FROM {{part}}
                 WHERE p_size BETWEEN 1 AND 15 AND p_type = 'STANDARD'
             ) pk ON l_partkey = pk.p_partkey
             GROUP BY l_partkey, l_suppkey
@@ -894,11 +890,11 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT /*+ BROADCAST(p), BROADCAST(s), BROADCAST(n) */
                p_partkey, p_name, s_name, n_name,
-               floor(unit_cost * 10000 + 0.5) / 10000 AS unit_cost
+               {half_up_sql("unit_cost", 4)} AS unit_cost
         FROM best
-        JOIN {part}     p ON l_partkey = p.p_partkey
-        JOIN {supplier} s ON l_suppkey = s.s_suppkey
-        JOIN {nation}   n ON s.s_nationkey = n.n_nationkey
+        JOIN {{part}}     p ON l_partkey = p.p_partkey
+        JOIN {{supplier}} s ON l_suppkey = s.s_suppkey
+        JOIN {{nation}}   n ON s.s_nationkey = n.n_nationkey
         WHERE unit_cost = best_cost
           AND p.p_size BETWEEN 1 AND 15 AND p.p_type = 'STANDARD'
         ORDER BY unit_cost, p_partkey, s_name
@@ -1838,8 +1834,7 @@ def customer_entity_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_lev = 2
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_mktsegment",
-        F.expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)")
-        .alias("bal_cents"),
+        fixed(F.col("c_acctbal"), 2).alias("bal_cents"),
     )
     # the customer file reads as ONE split, and the (broadcast) block
     # join fans out ~n^2/|blocks| pairs from it — without spreading the
@@ -1920,8 +1915,7 @@ def fellegi_sunter_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_mktsegment",
-        F.expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)")
-        .alias("bal_cents"),
+        fixed(F.col("c_acctbal"), 2).alias("bal_cents"),
     )
     a = cust.repartition(
         spark.sparkContext.defaultParallelism).alias("a")
@@ -1972,12 +1966,10 @@ def fellegi_sunter_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         probs.select(
             "*",
-            F.floor(F.log(F.col("m_e6").cast("double") / F.col("u_e6"))
-                    * F.lit(1e6) + F.lit(0.5)).cast("long")
+            fixed(F.log(F.col("m_e6").cast("double") / F.col("u_e6")), 6)
             .alias("w_agree_e6"),
-            F.floor(F.log((F.lit(1000000) - F.col("m_e6")).cast("double")
-                          / (F.lit(1000000) - F.col("u_e6")))
-                    * F.lit(1e6) + F.lit(0.5)).cast("long")
+            fixed(F.log((F.lit(1000000) - F.col("m_e6")).cast("double")
+                        / (F.lit(1000000) - F.col("u_e6"))), 6)
             .alias("w_disagree_e6"),
         )
     )
@@ -2056,8 +2048,7 @@ def part_return_rate_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
         per.select(
             F.col("l_partkey").alias("partkey"), "n", "r",
             F.expr("r * 1000000 DIV n").alias("rate_e6"),
-            (F.floor(lower * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
-            .alias("wilson_lower"),
+            half_up(lower, 6).alias("wilson_lower"),
         )
         .orderBy(F.desc("wilson_lower"), F.desc("n"), "partkey")
         .limit(100)
@@ -2189,8 +2180,7 @@ def er_survivorship_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_mktsegment",
-        F.expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)")
-        .alias("bal_cents"),
+        fixed(F.col("c_acctbal"), 2).alias("bal_cents"),
     )
     blocked = cust.select(
         "*",

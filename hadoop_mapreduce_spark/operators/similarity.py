@@ -19,7 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hadoop_mapreduce_spark.functions.portable import h60
+from hadoop_mapreduce_spark.functions.portable import (
+    fixed, fixed_sql, h60, half_up)
 from hadoop_mapreduce_spark.functions.vectors import cosine_similarity, dot, l2_norm, l2_sq_dist
 from hadoop_mapreduce_spark.sources.tables import load_table
 
@@ -314,8 +315,7 @@ def _portable_kmeans_assign(emb: DataFrame) -> DataFrame:
     q = emb.select(
         "vec_id",
         F.expr("transform(CAST(embedding AS ARRAY<DOUBLE>),"
-               " x -> CAST(CAST(floor(x * 1000000.0 + 0.5) AS BIGINT)"
-               " AS DOUBLE))").alias("e"),
+               f" x -> CAST({fixed_sql('x', 6)} AS DOUBLE))").alias("e"),
     )
     h = h60(F.col("vec_id").cast("string"))
     centroids = (
@@ -327,10 +327,7 @@ def _portable_kmeans_assign(emb: DataFrame) -> DataFrame:
     )
     # e6-rounded cosine: exact-integer dot/norms, ONE float expression,
     # rounded to an integer before any comparison
-    cos_e6 = F.floor(
-        cosine_similarity(F.col("e"), F.col("cvec")) * F.lit(1e6)
-        + F.lit(0.5)
-    ).cast("long")
+    cos_e6 = fixed(cosine_similarity(F.col("e"), F.col("cvec")), 6)
     best = F.max_by(
         "list_id", F.struct(F.col("c"), (-F.col("list_id")).alias("nl")))
 
@@ -916,23 +913,17 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rank": np.arange(1, len(selected) + 1, dtype=np.int64),
         })
 
-    # Scores emitted as integer MICRO-units (round(x*1e6) as BIGINT),
-    # never round(double, 6): rank-1 rows have mmr = lam*rel EXACTLY,
-    # and 0.7 x (6-dp rel with odd last digit) lands ON a 6-dp decimal
-    # half-boundary SYSTEMATICALLY — Spark's exact-decimal HALF_UP and
-    # DuckDB's multiply-based round() disagree on which side the binary
-    # double sits (found by the sf0.001 parity gate, r7). Multiplying
-    # by 1e6 FIRST makes both engines round the same IEEE product, so
-    # the integer is bit-identical — the avg_value_micros convention.
+    # Scores emitted as integer MICRO-units (``fixed(x, 6)``): rank-1
+    # rows have mmr = lam*rel EXACTLY, and 0.7 x (6-dp rel with odd
+    # last digit) lands ON a 6-dp decimal half-boundary systematically.
     return (
         pool_vecs.groupBy("qid")
         .applyInPandas(greedy, "qid long, nid long, relevance double, "
                                "mmr double, rank long")
         .select(
             "qid", "nid",
-            F.expr("CAST(round(relevance * 1e6) AS BIGINT)")
-            .alias("relevance_e6"),
-            F.expr("CAST(round(mmr * 1e6) AS BIGINT)").alias("mmr_e6"),
+            fixed(F.col("relevance"), 6).alias("relevance_e6"),
+            fixed(F.col("mmr"), 6).alias("mmr_e6"),
             "rank")
     )
 
@@ -1108,8 +1099,7 @@ def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         cells.groupBy("dim")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.expr("CAST(round(sum(x) * 1e6 / count(1)) AS BIGINT)")
-            .alias("mean_e6"),
+            F.expr(fixed_sql("sum(x) * 1e6 / count(1)", 0)).alias("mean_e6"),
             F.min("x").alias("min_x"),
             F.max("x").alias("max_x"),
             F.sum((F.col("x") == 0.0).cast("long")).alias("n_zero"),
@@ -1129,7 +1119,7 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness chain (hash-paired, no FP-order hazards): float32 inputs
     sum EXACTLY in float64 (24-bit mantissas, embedding_dim_stats'
     argument), each per-(label,dim) sum is scaled once to an exact
-    BIGINT (round(s*1e6)); the global centroid is the BIGINT sum of the
+    BIGINT (``fixed(s, 6)``); the global centroid is the BIGINT sum of the
     label sums; dot products and squared norms accumulate
     BIGINT*BIGINT products in DECIMAL(38,0) (Spark) / HUGEINT (DuckDB
     oracle) — exact in both, and both cast the same exact integer to
@@ -1150,7 +1140,7 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per = cells.groupBy("label", "dim").agg(
         F.count(F.lit(1)).alias("n"),
-        F.expr("CAST(round(sum(x) * 1e6) AS BIGINT)").alias("s_e6"),
+        fixed(F.sum("x"), 6).alias("s_e6"),
     )
     glob = per.groupBy("dim").agg(F.sum("s_e6").alias("g_e6"))
     gnorm = glob.agg(
@@ -1242,8 +1232,7 @@ def embedding_outlier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda a, t: a + t).alias("score"),
         )
         .select("vec_id", F.col("label").cast("long").alias("label"),
-                F.floor(F.col("score") * F.lit(1e6) + F.lit(0.5))
-                .cast("long").alias("score_e6"))
+                fixed(F.col("score"), 6).alias("score_e6"))
     )
     # TakeOrdered top-k first (never a global window over all vectors);
     # the rank window then runs over k rows.
@@ -1290,8 +1279,7 @@ def embedding_anisotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, F.col("b.vec_id") == F.col("a.vec_id") + 1)
         .where(nz(F.col("a.e")) & nz(F.col("b.e")))
         .select(
-            F.floor(cos * F.lit(1e6) + F.lit(0.5)).cast("long")
-            .alias("cos_e6"))
+            fixed(cos, 6).alias("cos_e6"))
     )
     binned = pairs.select(
         "cos_e6",
@@ -1356,10 +1344,9 @@ def sparse_cosine_pairs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n))
         .select(
             "doc_id", "term",
-            F.floor(F.col("tf")
-                    * F.log((F.col("n") + F.lit(1.0))
-                            / (F.col("df") + F.lit(1.0)))
-                    * F.lit(1e6) + F.lit(0.5)).cast("long").alias("w_e6"),
+            fixed(F.col("tf")
+                  * F.log((F.col("n") + F.lit(1.0))
+                          / (F.col("df") + F.lit(1.0))), 6).alias("w_e6"),
         ))
     norms = weighted.groupBy("doc_id").agg(
         F.sum(F.col("w_e6") * F.col("w_e6")).alias("norm2"))
@@ -1387,10 +1374,9 @@ def sparse_cosine_pairs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             # engines (double x/0 is NULL in Spark but inf in DuckDB)
             F.when(
                 (F.col("norm1") > 0) & (F.col("norm2") > 0),
-                F.floor(F.col("dot").cast("double")
+                half_up(F.col("dot").cast("double")
                         / F.sqrt(F.col("norm1").cast("double")
-                                 * F.col("norm2").cast("double"))
-                        * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
+                                 * F.col("norm2").cast("double")), 6))
             .alias("cosine"),
         )
         .orderBy(F.desc("cosine"), "id1", "id2")
@@ -1429,8 +1415,7 @@ def retrieval_label_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "qid", "qlabel",
             F.col("vec_id").alias("nid"), F.col("label").alias("nlabel"),
-            F.floor(cosine_similarity(F.col("e"), F.col("qe"))
-                    * F.lit(1e6) + F.lit(0.5)).cast("long").alias("c"),
+            fixed(cosine_similarity(F.col("e"), F.col("qe")), 6).alias("c"),
         )
     )
     w = Window.partitionBy("qid").orderBy(F.desc("c"), F.asc("nid"))
@@ -1465,9 +1450,8 @@ def embedding_quant_sqnr(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension silently crushes every other dimension's precision).
 
     Exactness: x is float32 -> float64 (exact); per-dim maxabs and
-    scale are engine-identical; the quantized level uses explicit
-    floor(v + 0.5) (Spark round() and DuckDB round() disagree on .5
-    ties); signal/noise powers are e12-rounded per ELEMENT and summed
+    scale are engine-identical; the quantized level is ``fixed(v, 0)``;
+    signal/noise powers are e12-rounded per ELEMENT and summed
     as exact BIGINT (order-independent), and SQNR_db is ONE float
     expression on those integers, rounded 6 dp.
 
@@ -1487,17 +1471,15 @@ def embedding_quant_sqnr(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dim", "x",
             F.when(F.col("scale") > 0,
                    F.greatest(F.lit(-127.0), F.least(F.lit(127.0),
-                       F.floor(F.col("x") / F.col("scale") + F.lit(0.5))))
+                       fixed(F.col("x") / F.col("scale"), 0)))
                    * F.col("scale"))
             .otherwise(F.lit(0.0)).alias("deq"),
         )
         .select(
             "dim",
-            F.floor(F.col("x") * F.col("x") * F.lit(1e12) + F.lit(0.5))
-            .cast("long").alias("sig_e12"),
-            F.floor((F.col("x") - F.col("deq"))
-                    * (F.col("x") - F.col("deq")) * F.lit(1e12)
-                    + F.lit(0.5)).cast("long").alias("noise_e12"),
+            fixed(F.col("x") * F.col("x"), 12).alias("sig_e12"),
+            fixed((F.col("x") - F.col("deq")) * (F.col("x") - F.col("deq")),
+                  12).alias("noise_e12"),
         )
     )
     per = dq.groupBy("dim").agg(
@@ -1559,8 +1541,7 @@ def embedding_jl_distortion_audit(spark: SparkSession,
     """
     emb = load_table(spark, sf_dir, "embeddings")
     qe = F.expr("transform(embedding, x ->"
-                " CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5)"
-                " AS BIGINT))")
+                f" {fixed_sql('CAST(x AS DOUBLE)', 6)})")
     projs = [
         F.expr(
             "aggregate(zip_with(qe, array("

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hadoop_mapreduce_spark.functions.portable import h60
+from hadoop_mapreduce_spark.functions.portable import fixed, h60
 
 
 def _salt_of(*cols: Column | str, n_salts: int) -> Column:
@@ -129,7 +129,7 @@ def salted_aggregate_events(spark: SparkSession, sf_dir: str,
     spread numbers; this entry makes the pattern itself
     correctness-witnessed.
 
-    The value total is summed in micro-units: round(value*1e6) is an
+    The value total is summed in micro-units: ``fixed(value, 6)`` is an
     exact BIGINT per row, integer addition is order-independent, so
     the salted two-phase sum is bit-equal to any other grouping.
     """
@@ -137,7 +137,7 @@ def salted_aggregate_events(spark: SparkSession, sf_dir: str,
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", "event_id",
-        F.expr("CAST(round(value * 1e6) AS BIGINT)").alias("v_e6"))
+        fixed(F.col("value"), 6).alias("v_e6"))
     out = salted_aggregate(
         ev,
         ["event_type"],

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoop_mapreduce_spark.functions.portable import fixed_sql
 from hadoop_mapreduce_spark.sources.tables import load_table
 
 
@@ -53,7 +54,7 @@ def recursive_monthly_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     0 rows while the linear oracle emitted one NULL-month row).
 
     total_price is summed as exact integer cents (prices are 2-dp by
-    construction, so ROUND(p*100) is an exact BIGINT) and divided by
+    construction, so ``fixed(p, 2)`` is an exact BIGINT) and divided by
     100.0 at the end: integer addition is order-independent, so the
     output double is bit-identical run-to-run and engine-to-engine.
     The previous SUM(double)::DECIMAL form was an order-dependent FP
@@ -64,7 +65,7 @@ def recursive_monthly_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL, and exactly those two flaked at the round-5 driver gate.
     """
     _view(spark, sf_dir, "orders", "v_orders")
-    return spark.sql("""
+    return spark.sql(f"""
       WITH RECURSIVE gen(ms, k, n) AS (
         SELECT ARRAY(lo), 1,
                CAST(months_between(hi, lo) AS INT) + 1
@@ -81,7 +82,7 @@ def recursive_monthly_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
       )
       SELECT m AS month_start,
              COUNT(o_orderkey) AS n_orders,
-             CAST(COALESCE(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)), 0)
+             CAST(COALESCE(SUM({fixed_sql("o_totalprice", 2)}), 0)
                   AS DOUBLE) / 100.0 AS total_price
       FROM mon LEFT JOIN v_orders
         ON trunc(o_orderdate, 'MM') = m

@@ -13,6 +13,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hadoop_mapreduce_spark.functions.portable import (
+    fixed,
+    fixed_sql,
+    half_up,
     h60,
     hll_estimate,
     hll_estimate_col,
@@ -929,9 +932,7 @@ def kneser_ney_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     with fixed discount D = 0.75. Every observed bigram has c >= 1 > D,
     so the discounted term is positive and no backoff zero-guard is
     needed. All inputs are exact integer counts; the score is emitted
-    in integer MICRO-units (round(score * 1e6) as BIGINT — both engines
-    round the same IEEE product; see mmr_diversified_topk for the
-    half-boundary hazard this convention removes).
+    in integer MICRO-units (``fixed(score, 6)``).
 
     Plan: the same single-exchange chain as bigram_lm_quality — the
     (doc, bigram) base hash-partitioned on the bigram key alone and
@@ -988,7 +989,7 @@ def kneser_ney_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.select(
             "doc_id", F.col("nb").cast("long").alias("n_bigrams"),
-            F.expr("CAST(round(score * 1e6) AS BIGINT)").alias("kn_lp_e6"))
+            fixed(F.col("score"), 6).alias("kn_lp_e6"))
         .orderBy(F.asc("kn_lp_e6"), F.asc("doc_id")).limit(50)
     )
 
@@ -1161,8 +1162,7 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``kneser_ney_quality``) plugs into the same ranking unchanged.
 
     Determinism contract: the per-doc score is rounded to 8 dp, scaled
-    to an exact BIGINT (micro-micro units via floor(x*1e8 + 0.5) — the
-    score is non-negative), and the ntile(3) ranking orders by
+    to an exact BIGINT (``fixed(x, 8)``), and the ntile(3) ranking orders by
     (score_e8 DESC, doc_id) so ties are integer-resolved identically in
     any engine; per-bucket averages divide one exact integer sum by
     another. head = highest mean log-probability (most "in-domain").
@@ -1187,8 +1187,7 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "doc_id", "lang", "len",
-            F.floor(F.col("ar") * F.lit(1e8) + F.lit(0.5))
-            .cast("long").alias("ar_e8"),
+            fixed(F.col("ar"), 8).alias("ar_e8"),
         )
     )
     w = Window.partitionBy("lang").orderBy(F.desc("ar_e8"), F.asc("doc_id"))
@@ -1867,8 +1866,7 @@ def readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         g.select(
             "source", "n_docs", "words", "syllables", "polysyllables",
             "sentences",
-            F.when(nz, F.floor(fl * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
-            .alias("flesch"),
+            F.when(nz, half_up(fl, 6)).alias("flesch"),
             F.when(nz, F.expr("syllables * 1000000 DIV words"))
             .alias("syl_per_word_e6"),
             F.when(nz, F.expr("polysyllables * 1000000 DIV words"))
@@ -1921,7 +1919,7 @@ def vocab_growth_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cum.select(
         "checkpoint", "docs_cum", "tokens_cum", "vocab_cum",
         F.when((F.col("vocab_cum") > 1) & (F.col("tokens_cum") > 1),
-               F.floor(beta * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
+               half_up(beta, 6))
         .alias("heaps_beta"),
     )
 
@@ -2034,10 +2032,9 @@ def term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         stats.select(
             "term", "df", "cf", "s2",
-            (F.floor((F.col("s2").cast("double") * F.col("n")
-                      - F.col("cf").cast("double") * F.col("cf"))
-                     / (F.col("cf").cast("double") * F.col("n"))
-                     * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
+            half_up((F.col("s2").cast("double") * F.col("n")
+                     - F.col("cf").cast("double") * F.col("cf"))
+                    / (F.col("cf").cast("double") * F.col("n")), 6)
             .alias("burstiness"),
         )
         .orderBy(F.desc("cf"), "term")
@@ -2235,9 +2232,8 @@ def source_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "src_a", "src_b", "m", "sum_d2",
-            F.when(F.col("raw").isNotNull(),
-                   F.floor(F.col("raw") * F.lit(1e6) + F.lit(0.5))
-                   / F.lit(1e6)).alias("spearman_rho"),
+            F.when(F.col("raw").isNotNull(), half_up(F.col("raw"), 6))
+            .alias("spearman_rho"),
         )
     )
 
@@ -2403,9 +2399,7 @@ def negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     counts = docs.select(F.explode(_tokens("text")).alias("tk")) \
         .groupBy("tk").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    w_e6 = F.expr(
-        "CAST(floor(sqrt(sqrt(CAST(c AS DOUBLE) * c * c)) * 1000000"
-        " + 0.5) AS BIGINT)")
+    w_e6 = F.expr(fixed_sql("sqrt(sqrt(CAST(c AS DOUBLE) * c * c))", 6))
     from hadoop_mapreduce_spark.session import scoped_persist
 
     weighted = scoped_persist(counts.select("tk", "c", w_e6.alias("w")))

@@ -24,6 +24,8 @@ from hadoop_mapreduce_spark.functions.timeutil import (
     wall_epoch_secs,
     wall_epoch_us,
 )
+from hadoop_mapreduce_spark.functions.portable import (
+    fixed, fixed_sql, half_up)
 from hadoop_mapreduce_spark.sources.tables import load_table
 
 
@@ -180,12 +182,9 @@ def events_hierarchical_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   crossing counts from an hour-aligned origin equal the floor
     #   index for the post-1970 fixture domain.
     # * Values are summed as integer MICRO-units per row
-    #   (round(value*1e6) — both engines round doubles half-away-from-
-    #   zero, and the probe in OPTIMIZATION_r09.md shows per-row
-    #   equality with the previous DECIMAL(18,6) path on every fixture
-    #   row at all SFs). Integer partial sums are exact and associative,
-    #   so the result is shuffle-layout-independent; the derived totals
-    #   stay truncating integer division exactly as before:
+    #   (``fixed(value, 6)``). Integer partial sums are exact and
+    #   associative, so the result is shuffle-layout-independent; the
+    #   derived totals stay truncating integer division exactly as before:
     #   total_value_cents = sm DIV 10000, avg_value_micros = sm DIV n.
     #   Consumers read total_value_cents/100 and avg_value_micros/1e6.
     epoch = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
@@ -196,7 +195,7 @@ def events_hierarchical_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.expr("CAST(round(value * 1000000) AS BIGINT)")).alias("sm"),
+            F.sum(fixed(F.col("value"), 6)).alias("sm"),
         )
     )
     hourly_out = hourly.select(
@@ -259,8 +258,8 @@ def events_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded row count), not raw events.
 
     Hash-paired since r7c (was rows-only): every quantity is an exact
-    integer — x is epoch MICROseconds, y is the repo's round(value·1e6)
-    convention, triangle areas use the centroid-cleared form
+    integer — x is epoch MICROseconds, y is ``fixed(value, 6)``,
+    triangle areas use the centroid-cleared form
         |(xa·k − Σx)(y − ya) − (xa − x)(Σy − k·ya)|
     (the true area × 2k, a positive rescale that never reorders the
     argmax), and bucket bounds are integer floor divisions
@@ -277,7 +276,7 @@ def events_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ts reads as TIMESTAMP_NTZ; session zone is pinned UTC so the
         # cast preserves the instant (same pattern as asof_join_nearest)
         wall_epoch_us("ts").alias("x"),
-        F.expr("cast(round(value * 1000000.0, 0) as bigint)").alias("y"),
+        fixed(F.col("value"), 6).alias("y"),
         F.col("event_id").cast("long").alias("event_id"),
     )
     n_out = 24
@@ -498,13 +497,8 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the 4-dp-ROUNDED med/mad: rounding quantizes both engines'
     near-identical medians to the same double, after which the score
     arithmetic is bit-identical on both sides. The score's own 4-dp
-    rounding is spelled out as floor(score*1e4 + 0.5)/1e4 rather than
-    round(): a score landing exactly on a half-boundary (sf0.1 has one:
-    0.6745*137.87/24.14 = 3.85225) is broken differently by Spark's
-    exact-decimal HALF_UP and DuckDB's scale-then-nearbyint — the
-    explicit floor form is the same IEEE multiply/add/floor in both
-    engines, so the result is bit-identical by construction. Flagged
-    rows ordered by (event_type, event_id).
+    rounding is ``half_up``. Flagged rows ordered by (event_type,
+    event_id).
     """
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value")
@@ -517,7 +511,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
              F.round(F.any_value("med"), 4).alias("med"))
     )
     score = 0.6745 * (F.col("value") - F.col("med")) / F.col("mad")
-    mad_z = F.floor(score * 10000.0 + 0.5) / 10000.0
+    mad_z = half_up(score, 4)
     return (
         ev.join(F.broadcast(mad), "event_type")
         .where(F.col("mad") > 0)
@@ -701,8 +695,7 @@ def events_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                   .cast("string").alias("day"),
                   "value")
         .groupBy("event_type", "day")
-        .agg(F.expr("CAST(round(avg(value) * 1e6) AS BIGINT)")
-             .alias("v_e6"))
+        .agg(fixed(F.avg("value"), 6).alias("v_e6"))
     )
     arr = daily.groupBy("event_type").agg(
         F.sort_array(F.collect_list(F.struct("day", "v_e6"))).alias("xs"))
@@ -732,14 +725,7 @@ def events_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type", F.col("r.day").alias("day"),
             (F.col("r.v_e6").cast("double") / F.lit(1e6)).alias("day_avg"),
-            # floor(x*1e6 + 0.5)/1e6, not round(x, 6): the EWMA chain
-            # over integer-derived micro-units produces DYADIC rationals
-            # that land EXACTLY on 6-dp halves, where Spark's HALF_UP
-            # and DuckDB's half mode disagree (found by
-            # test_differential_fuzz on offsets [0,0,1465,0,0,0]).
-            # floor is mode-free and bit-identical on both engines.
-            (F.floor(F.col("r.ewma") * F.lit(1e6) + F.lit(0.5))
-             / F.lit(1e6)).alias("ewma"),
+            half_up(F.col("r.ewma"), 6).alias("ewma"),
         )
     )
 
@@ -775,8 +761,7 @@ def events_dow_hour_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("dow", "hour")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 1e6).cast("long"))
-            .alias("sv_micros"),
+            F.sum(fixed(F.col("value"), 6)).alias("sv_micros"),
         )
     )
     total = cells.agg(F.sum("n_events").alias("tot"))
@@ -1191,8 +1176,8 @@ def events_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer day numbers, and each (type, lag) cell reduces the five
     Pearson sums. All sums are exact BIGINT arithmetic (counts are
     integers); only the final correlation divides in DOUBLE, and it is
-    floor-rounded at 6 dp — the repo's cross-engine float convention
-    (see events_ewma_daily).
+    rounded with ``half_up`` at 6 dp, the repo's cross-engine float
+    convention.
     """
     from hadoop_mapreduce_spark.session import scoped_persist
 
@@ -1230,9 +1215,8 @@ def events_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
         g.select(
             "event_type", F.col("lag").cast("long").alias("lag"),
             F.col("n").alias("n_pairs"),
-            F.when(den > 0,
-                   F.floor(num.cast("double") / F.sqrt(den.cast("double"))
-                           * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
+            F.when(den > 0, half_up(
+                num.cast("double") / F.sqrt(den.cast("double")), 6))
             .alias("acf"),
         )
     )
@@ -1377,7 +1361,6 @@ def events_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
           'k', acc.k + 1),
         acc -> acc.out)
     """
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return (
         arr.select("event_type", F.explode(F.expr(fold)).alias("r"))
         .select(
@@ -1385,10 +1368,10 @@ def events_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
             index_date(F.col("r.d").cast("int")).cast("string")
             .alias("day"),
             F.col("r.x").alias("n_events"),
-            r6(F.col("r.l")).alias("level"),
-            r6(F.col("r.b")).alias("trend"),
-            r6(F.col("r.f")).alias("forecast"),
-            r6(F.abs(F.col("r.x").cast("double") - F.col("r.f")))
+            half_up(F.col("r.l"), 6).alias("level"),
+            half_up(F.col("r.b"), 6).alias("trend"),
+            half_up(F.col("r.f"), 6).alias("forecast"),
+            half_up(F.abs(F.col("r.x").cast("double") - F.col("r.f")), 6)
             .alias("abs_error"),
         )
     )
@@ -1604,8 +1587,7 @@ def survival_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("d").cast("long").alias("n_churned"),
             F.col("c").cast("long").alias("n_censored"),
             "n_at_risk",
-            (F.floor(surv * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
-            .alias("survival"),
+            half_up(surv, 6).alias("survival"),
         )
     )
 
@@ -1658,9 +1640,8 @@ def events_stl_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "event_type", "dow", "n_days", "sum_d7",
-            (F.floor(F.col("sum_d7").cast("double")
-                     / (F.lit(7.0) * F.col("n_days"))
-                     * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
+            half_up(F.col("sum_d7").cast("double")
+                    / (F.lit(7.0) * F.col("n_days")), 6)
             .alias("seasonal"),
         )
     )
@@ -1786,10 +1767,9 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
              / (F.col("b.d") - F.col("a.d")).cast("double")).alias("s"),
         )
     )
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     per_type = slopes.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        r6(F.expr("percentile(s, 0.5)")).alias("slope"),
+        half_up(F.expr("percentile(s, 0.5)"), 6).alias("slope"),
     )
     resid = (
         daily.join(F.broadcast(per_type), "event_type")
@@ -1803,7 +1783,7 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         resid.groupBy("event_type", "n_pairs", "slope")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_days"),
-            r6(F.expr("percentile(r, 0.5)")).alias("intercept"),
+            half_up(F.expr("percentile(r, 0.5)"), 6).alias("intercept"),
         )
         .select("event_type", "n_days", "n_pairs", "slope", "intercept")
     )
@@ -2004,8 +1984,7 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
              - F.coalesce(F.col("tie18"), F.lit(0))).cast("long"))
         .select(
             "event_type", "n_days", "s", "var18",
-            (F.floor(z * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
-            .alias("z"),
+            half_up(z, 6).alias("z"),
         )
     )
 
@@ -2125,7 +2104,7 @@ def runs_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         runs.select(
             "event_type", "n1", "n2", "runs",
-            (F.floor(z * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias("z"),
+            half_up(z, 6).alias("z"),
         )
     )
 
@@ -2165,9 +2144,8 @@ def session_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 Window.partitionBy("from_type")).cast("long"))
         .select(
             "from_type", "n_ft", "n_f",
-            F.floor(F.col("n_ft")
-                    * F.log(F.col("n_f").cast("double") / F.col("n_ft"))
-                    * F.lit(1e6) + F.lit(0.5)).cast("long")
+            fixed(F.col("n_ft")
+                  * F.log(F.col("n_f").cast("double") / F.col("n_ft")), 6)
             .alias("term_e6"),
         )
         .groupBy("from_type")
@@ -2322,7 +2300,7 @@ def events_residual_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type", F.col("d").cast("long").alias("d"),
             F.col("r").cast("long").alias("residual"),
             F.when(var_num <= 0, F.lit(None).cast("double")).otherwise(
-                F.floor(z * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
+                half_up(z, 6))
             .alias("z"),
             F.when(var_num <= 0, F.lit(False)).otherwise(
                 num * num * F.col("m")
@@ -2385,9 +2363,8 @@ def dow_profile_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.col("wk").cast("long").alias("wk"),
             "n_shared_dows", "dot", "na", "nb",
-            (F.floor(F.col("dot").cast("double")
-                     / F.sqrt(F.col("na").cast("double") * F.col("nb"))
-                     * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
+            half_up(F.col("dot").cast("double")
+                    / F.sqrt(F.col("na").cast("double") * F.col("nb")), 6)
             .alias("cosine"),
         )
     )
@@ -2653,9 +2630,8 @@ def events_burst_kleinberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-day state costs as exact e6 BIGINTs; p0/p1 pinned expressions
     p0 = "least(CAST(rr AS DOUBLE) / CAST(dd AS DOUBLE), 0.98)"
     p1 = f"least(2.0 * ({p0}), 0.99)"
-    cost = ("CAST(floor(-(CAST(r AS DOUBLE) * ln({p})"
-            " + CAST(n - r AS DOUBLE) * ln(1.0 - ({p})))"
-            " * 1000000 + 0.5) AS BIGINT)")
+    cost = fixed_sql("-(CAST(r AS DOUBLE) * ln({p})"
+                     " + CAST(n - r AS DOUBLE) * ln(1.0 - ({p})))", 6)
     costed = grid.select(
         "event_type", "d", "r", "n",
         F.expr(cost.format(p=p0)).alias("c0s"),
@@ -2664,8 +2640,7 @@ def events_burst_kleinberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     arr = costed.groupBy("event_type").agg(
         F.sort_array(F.collect_list(
             F.struct("d", "r", "n", "c0s", "c1s"))).alias("xs"))
-    tau = ("CAST(floor(ln(CAST(size(xs) AS DOUBLE)) * 1000000 + 0.5)"
-           " AS BIGINT)")
+    tau = fixed_sql("ln(CAST(size(xs) AS DOUBLE))", 6)
     c0n = (f"CASE WHEN acc.k = 0 THEN x.c0s"
            f" ELSE x.c0s + least(acc.c0, acc.c1) END")
     c1n = (f"CASE WHEN acc.k = 0 THEN x.c1s + {tau}"

@@ -16,6 +16,13 @@ values). Conventions that keep the two engines bit-comparable:
   * float aggregates are rounded (2dp money, 4dp ratios, 6dp scores) —
     summation-order noise is ~1e-13 relative and cannot flip a rounded
     digit except on exact half boundaries;
+  * fixed-point rounding has one definition, ``floor(x * 10^d + 0.5)``:
+    ``fixed`` (BIGINT units of 10^-d) and ``half_up`` (a double) in
+    ``functions/portable.py``, whose ``fixed_sql`` / ``half_up_sql``
+    twins parse in Spark SQL and in DuckDB alike. Every operator and
+    oracle that rounds at a decimal half, or scales to micro-units,
+    calls them; ``round(x, d)`` remains where no fixture value sits on
+    a half;
   * all hash functions are md5/sha2-derived (engine-portable), never
     engine-native hashes;
   * the portable kernels — the 60-bit md5 hash ``h60``, the portable
@@ -85,7 +92,17 @@ Output contract changes:
     ``markov_attribution_removal`` split sessions on the exact gap
     (``sessionize``), where they once compared floored seconds: their
     rows change only when a gap lies in (1800 s, 1801 s) and its
-    floored difference is 1800, which no fixture holds.
+    floored difference is 1800, which no fixture holds;
+  * the micro-unit queries that rounded with ``round(x * 10^d)``
+    (``events_hierarchical_rollup``, ``events_lttb_downsample``,
+    ``events_ewma_daily``'s ``v_e6``, ``events_dow_hour_profile``,
+    ``salted_aggregate_events``, ``ab_cuped_adjustment``,
+    ``kneser_ney_quality``, ``pagerank_dedup_graph``,
+    ``mmr_diversified_topk``, ``embedding_dim_stats``,
+    ``embedding_centroid_drift`` and ``recursive_monthly_spine``) use
+    ``fixed``: a value changes only on a negative exact half (-2.5
+    units now gives -2, not -3) or where adding 0.5 carries
+    (0.49999999999999994 units gives 1), which no fixture holds.
 """
 
 from __future__ import annotations
@@ -120,7 +137,9 @@ from hadoop_mapreduce_spark.functions.portable import (
     bloom_hit_sql,
     bloom_probes_sql,
     doc_split_sql,
+    fixed_sql,
     h60_sql,
+    half_up_sql,
     hll_estimate_sql,
     hll_partials_sql,
     hll_rho_sql,
@@ -146,7 +165,7 @@ from hadoop_mapreduce_spark.functions.text import (
     TOKS_SQL,
     collapse_ws_sql,
     ngrams_sql,
-    split_ws_sql,
+    raw_token_count_sql,
 )
 from hadoop_mapreduce_spark.operators.ngram import ngram_count, ngram_topk
 from hadoop_mapreduce_spark.sources.tables import load_table
@@ -995,9 +1014,9 @@ FROM part
 WHERE p_brand IN ('Brand#13', 'Brand#5') AND p_size BETWEEN 5 AND 25
   AND p_type LIKE 'ECONOMY%' AND p_name IS NOT NULL
 """,
-    "project_compute": """
+    "project_compute": f"""
 SELECT l_orderkey, l_linenumber::BIGINT AS l_linenumber,
-  floor(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 100 + 0.5) / 100.0 AS net_charge,
+  {half_up_sql("l_extendedprice * (1 - l_discount) * (1 + l_tax)", 2)} AS net_charge,
   CASE WHEN l_discount >= 0.05 THEN 'HIGH' ELSE 'LOW' END AS disc_band,
   l_returnflag || '-' || l_linestatus AS flag_status,
   year(l_shipdate)::BIGINT AS ship_year
@@ -1530,14 +1549,14 @@ observed AS (
 SELECT s.user_id, s.hour::VARCHAR AS hour, coalesce(o.n, 0) AS n
 FROM spine s LEFT JOIN observed o ON s.user_id = o.user_id AND s.hour = o.hour
 """,
-    "q2_min_cost_supplier": """
+    "q2_min_cost_supplier": f"""
 WITH unit AS (
   SELECT l_partkey, l_suppkey, min(l_extendedprice / l_quantity) AS unit_cost
   FROM lineitem GROUP BY 1, 2
 ),
 best AS (SELECT l_partkey, min(unit_cost) AS best_cost FROM unit GROUP BY 1)
 SELECT p_partkey, p_name, s_name, n_name,
-  floor(unit_cost * 10000 + 0.5) / 10000 AS unit_cost
+  {half_up_sql("unit_cost", 4)} AS unit_cost
 FROM unit JOIN best ON unit.l_partkey = best.l_partkey AND unit.unit_cost = best.best_cost
 JOIN part ON p_partkey = unit.l_partkey
 JOIN supplier ON s_suppkey = unit.l_suppkey
@@ -1669,10 +1688,10 @@ SELECT user_id, date_trunc('day', ts)::TIMESTAMP::VARCHAR AS day,
   count(*) AS n
 FROM events GROUP BY 1, 2
 """,
-    "events_hierarchical_rollup": """
+    "events_hierarchical_rollup": f"""
 WITH hourly AS (
   SELECT date_diff('hour', TIMESTAMP '1970-01-01 00:00:00', ts) AS bucket_id,
-    event_type, count(*) AS n, sum(round(value * 1000000)::BIGINT) AS sm
+    event_type, count(*) AS n, sum({fixed_sql("value", 6)}) AS sm
   FROM events GROUP BY 1, 2
 )
 SELECT 'hour' AS resolution, bucket_id, event_type, n,
@@ -1804,7 +1823,7 @@ FROM s
 """,
     "dataset_split": rf"""
 SELECT {doc_split_sql("doc_id")} AS split, count(*)::BIGINT AS n_docs,
-  sum(len({split_ws_sql("trim(text)")}))::BIGINT AS total_tokens
+  sum({raw_token_count_sql("text")})::BIGINT AS total_tokens
 FROM documents GROUP BY 1
 """,
     "dq_checks": r"""
@@ -1830,11 +1849,9 @@ SELECT check_name, n_violations::BIGINT AS n_violations,
   (n_violations = 0)::BIGINT AS passed
 FROM c
 """,
-    "udtf_tokens": """
+    "udtf_tokens": f"""
 WITH d AS (
-  SELECT doc_id,
-    list_filter(string_split_regex(lower(regexp_replace(text, '[^a-zA-Z0-9\\t\\n\\x0B\\f\\r ]+', '', 'g')), '[\\t\\n\\x0B\\f\\r ]+'),
-                t -> t <> '')[1:10] AS toks
+  SELECT doc_id, {TOKS_SQL}[1:10] AS toks
   FROM documents WHERE doc_id < 100
 )
 SELECT doc_id, (g.ord - 1)::INT AS pos, g.token
@@ -2117,7 +2134,7 @@ SELECT source, target_pct::BIGINT AS target_pct,
   sum(CASE WHEN kept = 1 THEN n_chars ELSE 0 END)::BIGINT AS sampled_chars
 FROM d GROUP BY 1, 2
 """,
-    "embedding_quantize": """
+    "embedding_quantize": f"""
 WITH v AS (
   SELECT label::BIGINT AS label,
     list_transform(embedding, x -> x::DOUBLE) AS ve,
@@ -2132,8 +2149,8 @@ q AS (
 e AS (
   SELECT label, scale,
     list_sum(list_transform(ve,
-      x -> (x - floor(x / scale + 0.5) * scale)
-           * (x - floor(x / scale + 0.5) * scale))) / d AS mse
+      x -> (x - {fixed_sql("x / scale", 0)} * scale)
+           * (x - {fixed_sql("x / scale", 0)} * scale))) / d AS mse
   FROM q
 )
 SELECT label, count(*)::BIGINT AS n_vecs,
@@ -2269,7 +2286,7 @@ FROM r WHERE r <= 500
 
 # --- Spark-4 SQL-surface oracles (DuckDB speaks all four shapes) ---
 
-ORACLE["recursive_monthly_spine"] = """
+ORACLE["recursive_monthly_spine"] = f"""
 WITH RECURSIVE mon(m) AS (
   SELECT date_trunc('month', (SELECT min(o_orderdate) FROM orders))
   WHERE (SELECT min(o_orderdate) FROM orders) IS NOT NULL
@@ -2278,7 +2295,7 @@ WITH RECURSIVE mon(m) AS (
   WHERE m < (SELECT date_trunc('month', max(o_orderdate)) FROM orders)
 )
 SELECT m::DATE AS month_start, count(o_orderkey)::BIGINT AS n_orders,
-  coalesce(sum(round(o_totalprice * 100)::BIGINT), 0) / 100.0 AS total_price
+  coalesce(sum({fixed_sql("o_totalprice", 2)}), 0) / 100.0 AS total_price
 FROM mon LEFT JOIN orders ON date_trunc('month', o_orderdate) = m
 GROUP BY m
 """
@@ -2949,12 +2966,9 @@ FROM ranked WHERE rank <= 3
 # percentile(0.5) and DuckDB median share linear interpolation on
 # sorted doubles, but can land ulps apart — the score is computed from
 # the 4-dp-ROUNDED med/mad so both engines start the score arithmetic
-# from identical doubles, and the score's 4-dp rounding is the explicit
-# floor(x*1e4 + 0.5)/1e4 form — pure IEEE ops, bit-identical across
-# engines even when the score lands exactly on a half-boundary (sf0.1
-# has one; Spark's HALF_UP and DuckDB's round() broke it differently) —
-# mirrors operators/timeseries.py::events_anomaly_mad.
-ORACLE["events_anomaly_mad"] = """
+# from identical doubles, and the score's 4-dp rounding is
+# ``half_up_sql`` — mirrors operators/timeseries.py::events_anomaly_mad.
+ORACLE["events_anomaly_mad"] = f"""
 WITH ev AS (SELECT event_id, event_type, value FROM events),
 med AS (SELECT event_type, median(value) AS med FROM ev GROUP BY event_type),
 mad AS (
@@ -2964,7 +2978,7 @@ mad AS (
 ),
 scored AS (
   SELECT event_type, event_id, round(value, 2) AS value, med, mad,
-         floor(0.6745 * (value - med) / mad * 10000.0 + 0.5) / 10000.0 AS mad_z
+         {half_up_sql("0.6745 * (value - med) / mad", 4)} AS mad_z
   FROM ev JOIN mad USING (event_type)
   WHERE mad > 0
 )
@@ -3146,7 +3160,7 @@ GROUP BY v.doc_id
 ORACLE["mixture_temperature_weights"] = rf"""
 WITH per_src AS (
   SELECT source, count(*)::BIGINT AS n_docs,
-         sum(len({split_ws_sql("trim(text)")}))::BIGINT AS n_tokens
+         sum({raw_token_count_sql("text")})::BIGINT AS n_tokens
   FROM documents GROUP BY source
 ),
 sh AS (
@@ -3169,7 +3183,7 @@ FROM sc
 ORACLE["quantile_normalize_quality"] = rf"""
 WITH base AS (
   SELECT doc_id, source,
-    len({split_ws_sql("trim(text)")})::BIGINT * 1000 / n_chars AS raw
+    {raw_token_count_sql("text")}::BIGINT * 1000 / n_chars AS raw
   FROM documents
 ),
 ranked AS (
@@ -3221,7 +3235,7 @@ LEFT JOIN ov ON ov.qid = f.qid
 
 ORACLE["padding_waste_audit"] = rf"""
 WITH base AS (
-  SELECT doc_id, len({split_ws_sql("trim(text)")})::BIGINT AS n,
+  SELECT doc_id, {raw_token_count_sql("text")}::BIGINT AS n,
          md5(doc_id::VARCHAR) AS shuf
   FROM documents
 ),
@@ -3274,7 +3288,7 @@ GROUP BY l_returnflag
 
 ORACLE["context_window_stats"] = rf"""
 WITH per AS (
-  SELECT len({split_ws_sql("trim(text)")})::BIGINT AS n, b.budget
+  SELECT {raw_token_count_sql("text")}::BIGINT AS n, b.budget
   FROM documents, (SELECT unnest([128, 512, 2048]) AS budget) b
 )
 SELECT budget::BIGINT AS budget, count(*)::BIGINT AS n_docs,
@@ -3353,8 +3367,8 @@ pr(it, doc_id, rank) AS (
   ) i ON d.doc_id = i.doc_id
   WHERE p.it < 10
 )
-SELECT doc_id, round(rank*1e8)::BIGINT AS rank_e8,
-  row_number() OVER (ORDER BY round(rank*1e8)::BIGINT DESC, doc_id) AS rk
+SELECT doc_id, {fixed_sql("rank", 8)} AS rank_e8,
+  row_number() OVER (ORDER BY {fixed_sql("rank", 8)} DESC, doc_id) AS rk
 FROM pr WHERE it = 10
 ORDER BY rk LIMIT 50
 """
@@ -3366,7 +3380,7 @@ ORDER BY rk LIMIT 50
 # remaining pool (ties -> lowest nid, same as the operator's numpy
 # tie-break). Pool, relevance rounding (6 dp BEFORE the greedy) and the
 # unit-vector similarity all mirror the operator's arithmetic.
-ORACLE["mmr_diversified_topk"] = """
+ORACLE["mmr_diversified_topk"] = f"""
 WITH RECURSIVE
 q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 5),
 scored AS (
@@ -3415,8 +3429,8 @@ sel(qid, step, nid, rel, mmr, picked) AS (
     WHERE s.step < 10
   ) WHERE rn = 1
 )
-SELECT qid, nid, round(rel * 1e6)::BIGINT AS relevance_e6,
-  round(mmr * 1e6)::BIGINT AS mmr_e6, step::BIGINT AS rank
+SELECT qid, nid, {fixed_sql("rel", 6)} AS relevance_e6,
+  {fixed_sql("mmr", 6)} AS mmr_e6, step::BIGINT AS rank
 FROM sel
 """
 
@@ -3527,7 +3541,7 @@ scored AS (
   SELECT doc_id, sum(cdt * lp) / sum(cdt) AS score, sum(cdt)::BIGINT AS nb
   FROM per_doc JOIN lp USING (bg) GROUP BY doc_id
 )
-SELECT doc_id, nb AS n_bigrams, round(score * 1e6)::BIGINT AS kn_lp_e6
+SELECT doc_id, nb AS n_bigrams, {fixed_sql("score", 6)} AS kn_lp_e6
 FROM scored ORDER BY kn_lp_e6, doc_id LIMIT 50
 """
 
@@ -3548,14 +3562,14 @@ FROM sizes GROUP BY k
 # (24-bit mantissas, 24 + log2(N) < 53), so sum/mean are
 # order-independent and bit-identical across engines; the mean uses the
 # same multiply-first integer emission as the rest of the fleet.
-ORACLE["embedding_dim_stats"] = """
+ORACLE["embedding_dim_stats"] = f"""
 WITH cells AS (
   SELECT g.i - 1 AS dim, embedding[g.i]::DOUBLE AS x
   FROM embeddings, LATERAL (
     SELECT unnest(generate_series(1, len(embedding))) AS i) g
 )
 SELECT dim::BIGINT AS dim, count(*)::BIGINT AS n,
-  round(sum(x) * 1e6 / count(*))::BIGINT AS mean_e6,
+  {fixed_sql("sum(x) * 1e6 / count(*)", 0)} AS mean_e6,
   min(x) AS min_x, max(x) AS max_x,
   sum((x = 0.0)::BIGINT)::BIGINT AS n_zero
 FROM cells GROUP BY dim
@@ -3571,7 +3585,7 @@ sized AS (
   SELECT source, doc_id,
     ({h60_sql("doc_id::VARCHAR")} % 8)::INT
       AS bucket,
-    least(len(string_split_regex(trim(text), '[\\t\\n\\x0B\\f\\r ]+')), 512)::BIGINT AS t
+    least({raw_token_count_sql("text")}, 512)::BIGINT AS t
   FROM documents
 ),
 ranked AS (
@@ -3712,7 +3726,7 @@ FROM fps GROUP BY doc_id
 
 # r7b: ccnet_perplexity_buckets — per-language LM-score terciles. The
 # per-doc score follows unigram_logprob_quality's proven 8-dp round,
-# then scales to an exact BIGINT (floor(x*1e8+0.5), score >= 0) so the
+# then scales to an exact BIGINT (``fixed_sql(x, 8)``) so the
 # ntile ordering and the per-bucket averages are integer-deterministic.
 ORACLE["ccnet_perplexity_buckets"] = f"""
 WITH tok AS (
@@ -3721,7 +3735,7 @@ WITH tok AS (
 vocab AS (SELECT tk, count(*) AS c FROM tok GROUP BY tk),
 per_doc AS (
   SELECT doc_id, lang,
-    floor(round(avg(ln(c * 1.0)), 8) * 1e8 + 0.5)::BIGINT AS ar_e8,
+    {fixed_sql("round(avg(ln(c * 1.0)), 8)", 8)} AS ar_e8,
     count(*) AS len
   FROM tok JOIN vocab USING (tk)
   GROUP BY doc_id, lang
@@ -3764,14 +3778,14 @@ FROM cov c, tot t
 # scaled once to BIGINT; dot/norm accumulate in HUGEINT (the oracle's
 # twin of Spark's DECIMAL(38,0)); the 1/n and 1e6 scales cancel in
 # cosine so the only float steps are the final sqrt/divide/round.
-ORACLE["embedding_centroid_drift"] = """
+ORACLE["embedding_centroid_drift"] = f"""
 WITH cells AS (
   SELECT label, i - 1 AS dim, embedding[i]::DOUBLE AS x
   FROM embeddings,
     LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS i) g
 ),
 per AS (
-  SELECT label, dim, count(*) AS n, round(sum(x) * 1e6)::BIGINT AS s_e6
+  SELECT label, dim, count(*) AS n, {fixed_sql("sum(x)", 6)} AS s_e6
   FROM cells GROUP BY 1, 2
 ),
 gctr AS (SELECT dim, sum(s_e6)::BIGINT AS g_e6 FROM per GROUP BY dim),
@@ -3946,13 +3960,13 @@ FROM picked
 # recurrence (0.3*v + 0.7*s over exact micro-unit daily means) with a
 # lockstep recursive CTE; Spark folds the same sequence with one
 # higher-order aggregate, so the float chain is bit-identical.
-ORACLE["events_ewma_daily"] = """
+ORACLE["events_ewma_daily"] = f"""
 WITH RECURSIVE idx AS (
   SELECT event_type, day, v_e6,
     row_number() OVER (PARTITION BY event_type ORDER BY day) AS t
   FROM (
     SELECT event_type, date_trunc('day', ts) AS day,
-      round(avg(value) * 1e6)::BIGINT AS v_e6
+      {fixed_sql("avg(value)", 6)} AS v_e6
     FROM events GROUP BY 1, 2)
 ),
 ew AS (
@@ -3965,7 +3979,7 @@ ew AS (
 )
 SELECT event_type, day::TIMESTAMP::VARCHAR AS day,
   v_e6 / 1000000.0 AS day_avg,
-  floor(s * 1e6 + 0.5)::BIGINT / 1e6 AS ewma
+  {half_up_sql("s", 6)} AS ewma
 FROM ew
 """
 
@@ -3973,12 +3987,12 @@ FROM ew
 # r7b: salted_aggregate_events — the oracle IS the naive GROUP BY: the
 # salted two-phase plan must be answer-identical at any skew (counts
 # and min/max are algebraic; the value total sums exact micro-units).
-ORACLE["salted_aggregate_events"] = """
+ORACLE["salted_aggregate_events"] = f"""
 SELECT event_type,
   count(*)::BIGINT AS n_events,
-  sum(round(value * 1e6)::BIGINT)::BIGINT AS total_value_e6,
-  min(round(value * 1e6)::BIGINT)::BIGINT AS min_value_e6,
-  max(round(value * 1e6)::BIGINT)::BIGINT AS max_value_e6
+  sum({fixed_sql("value", 6)})::BIGINT AS total_value_e6,
+  min({fixed_sql("value", 6)})::BIGINT AS min_value_e6,
+  max({fixed_sql("value", 6)})::BIGINT AS max_value_e6
 FROM events GROUP BY event_type
 """
 
@@ -4035,7 +4049,7 @@ JOIN nfp n2 ON n2.doc_id = p.id2
 
 # r7c: events_lttb_downsample converts from rows-only to hash-paired —
 # the kernel moved to exact integers (x = epoch microseconds, y =
-# round(value*1e6), integer floor-division bucket bounds instead of
+# fixed(value, 6), integer floor-division bucket bounds instead of
 # np.linspace, centroid-cleared area |(xa*k - Σx)(y - ya) -
 # (xa - x)(Σy - k*ya)| which is 2k × the true triangle area, a positive
 # rescale that preserves every argmax). The oracle replays the same
@@ -4046,12 +4060,12 @@ JOIN nfp n2 ON n2.doc_id = p.id2
 # first-index scan). Bounds: bnd(j) = 1 + (j*(n-2))//22; a point i in
 # [1, n-1) lives in bucket j(i) = (22*i - 1) // (n-2); step b's
 # centroid is bucket b+1 for b<=20 and the bare last point for b=21.
-ORACLE["events_lttb_downsample"] = """
+ORACLE["events_lttb_downsample"] = f"""
 WITH RECURSIVE
 base AS (
   SELECT event_type,
          epoch_us(ts)::BIGINT AS x,
-         round(value * 1e6)::BIGINT AS y,
+         {fixed_sql("value", 6)} AS y,
          event_id
   FROM events
 ),
@@ -4501,12 +4515,12 @@ FROM grid
 # r7d: events_dow_hour_profile — weekly seasonality heatmap cells;
 # dow/hour from epoch-seconds arithmetic (named dayofweek functions
 # disagree across engines), micro-unit shares and load factors.
-ORACLE["events_dow_hour_profile"] = """
+ORACLE["events_dow_hour_profile"] = f"""
 WITH cells AS (
   SELECT (((epoch_us(ts) // 1000000) // 86400) + 3) % 7 AS dow,
     ((epoch_us(ts) // 1000000) % 86400) // 3600 AS hour,
     count(*) AS n_events,
-    sum(round(value * 1e6)::BIGINT) AS sv_micros
+    sum({fixed_sql("value", 6)}) AS sv_micros
   FROM events GROUP BY 1, 2
 ),
 t AS (SELECT sum(n_events) AS tot FROM cells)
@@ -4628,7 +4642,7 @@ sized AS (
   SELECT source, doc_id,
     ({h60_sql("doc_id::VARCHAR")} % 8)::INT
       AS bucket,
-    least(len(string_split_regex(trim(text), '[\\t\\n\\x0B\\f\\r ]+')), 512)::BIGINT AS t
+    least({raw_token_count_sql("text")}, 512)::BIGINT AS t
   FROM documents
 ),
 ranked AS (
@@ -5318,9 +5332,8 @@ g AS (
 )
 SELECT event_type, lag, n AS n_pairs,
        CASE WHEN (n * sx2 - sx * sx) * (n * sy2 - sy * sy) > 0 THEN
-         floor((n * sxy - sx * sy)::DOUBLE
-               / sqrt(((n * sx2 - sx * sx) * (n * sy2 - sy * sy))::DOUBLE)
-               * 1e6 + 0.5) / 1e6
+         {half_up_sql('''(n * sxy - sx * sy)::DOUBLE
+               / sqrt(((n * sx2 - sx * sx) * (n * sy2 - sy * sy))::DOUBLE)''', 6)}
        END AS acf
 FROM g
 """
@@ -5391,10 +5404,10 @@ h AS (
 SELECT event_type,
        {index_date_sql('d::INTEGER')}::DATE::VARCHAR AS day,
        x AS n_events,
-       floor(l * 1e6 + 0.5) / 1e6 AS level,
-       floor(b * 1e6 + 0.5) / 1e6 AS trend,
-       floor(f * 1e6 + 0.5) / 1e6 AS forecast,
-       floor(abs(x::DOUBLE - f) * 1e6 + 0.5) / 1e6 AS abs_error
+       {half_up_sql("l", 6)} AS level,
+       {half_up_sql("b", 6)} AS trend,
+       {half_up_sql("f", 6)} AS forecast,
+       {half_up_sql("abs(x::DOUBLE - f)", 6)} AS abs_error
 FROM h
 """
 
@@ -5472,8 +5485,8 @@ g AS (
 )
 SELECT source, n_docs, words, syllables, polysyllables, sentences,
   CASE WHEN words > 0 THEN
-    floor((206.835 - 1.015 * (words::DOUBLE / sentences::DOUBLE)
-           - 84.6 * (syllables::DOUBLE / words::DOUBLE)) * 1e6 + 0.5) / 1e6
+    {half_up_sql('''206.835 - 1.015 * (words::DOUBLE / sentences::DOUBLE)
+           - 84.6 * (syllables::DOUBLE / words::DOUBLE)''', 6)}
   END AS flesch,
   CASE WHEN words > 0 THEN (syllables * 1000000 // words) END
     AS syl_per_word_e6,
@@ -5486,7 +5499,7 @@ FROM g
 # expectation and chi2 contribution are the only floats (per-digit
 # transcendental constants, 6-dp floor; identical expression trees —
 # the deviation is squared by plain multiplication, never pow()).
-ORACLE["benford_audit"] = """
+ORACLE["benford_audit"] = f"""
 WITH g AS (
   SELECT substr(ac::VARCHAR, 1, 1)::BIGINT AS digit,
          count(*)::BIGINT AS n
@@ -5497,12 +5510,11 @@ WITH g AS (
 t AS (SELECT sum(n)::BIGINT AS total FROM g)
 SELECT digit, n,
   (n * 1000000 // total)::BIGINT AS share_e6,
-  floor(log10(1.0 + 1.0 / digit::DOUBLE) * 1e6 + 0.5) / 1e6
-    AS benford_share,
-  floor(((n::DOUBLE - total::DOUBLE * log10(1.0 + 1.0 / digit::DOUBLE))
+  {half_up_sql("log10(1.0 + 1.0 / digit::DOUBLE)", 6)} AS benford_share,
+  {half_up_sql('''((n::DOUBLE - total::DOUBLE * log10(1.0 + 1.0 / digit::DOUBLE))
          * (n::DOUBLE - total::DOUBLE * log10(1.0 + 1.0 / digit::DOUBLE)))
-        / (total::DOUBLE * log10(1.0 + 1.0 / digit::DOUBLE))
-        * 1e6 + 0.5) / 1e6 AS chi2_contrib
+        / (total::DOUBLE * log10(1.0 + 1.0 / digit::DOUBLE))''', 6)}
+    AS chi2_contrib
 FROM g, t
 """
 
@@ -5650,8 +5662,7 @@ cum AS (
 SELECT checkpoint, docs_cum::BIGINT AS docs_cum,
        tokens_cum::BIGINT AS tokens_cum, vocab_cum::BIGINT AS vocab_cum,
        CASE WHEN vocab_cum > 1 AND tokens_cum > 1 THEN
-         floor(ln(vocab_cum::DOUBLE) / ln(tokens_cum::DOUBLE) * 1e6 + 0.5)
-           / 1e6
+         {half_up_sql("ln(vocab_cum::DOUBLE) / ln(tokens_cum::DOUBLE)", 6)}
        END AS heaps_beta
 FROM cum
 """
@@ -5660,7 +5671,7 @@ FROM cum
 # constant dimension's variance is exactly 0.0), order-fixed left fold
 # per vector (list() ORDER BY i -> list_reduce == Spark's aggregate
 # chain starting 0.0 + t1), micro-unit ranking.
-ORACLE["embedding_outlier_scores"] = """
+ORACLE["embedding_outlier_scores"] = f"""
 WITH ex AS (
   SELECT vec_id, i, e[i]::DOUBLE AS x
   FROM (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
@@ -5686,10 +5697,10 @@ scored AS (
   FROM terms t JOIN embeddings e ON e.vec_id = t.vec_id
   GROUP BY t.vec_id, e.label
 )
-SELECT row_number() OVER (ORDER BY floor(score * 1e6 + 0.5)::BIGINT DESC,
+SELECT row_number() OVER (ORDER BY {fixed_sql("score", 6)} DESC,
                           vec_id)::BIGINT AS rank,
        vec_id, label::BIGINT AS label,
-       floor(score * 1e6 + 0.5)::BIGINT AS score_e6
+       {fixed_sql("score", 6)} AS score_e6
 FROM scored
 ORDER BY rank LIMIT 20
 """
@@ -5778,21 +5789,20 @@ GROUP BY pattern
 # float division site per pair (Cohen's kappa), 6-dp floored; the six
 # pair rows are generated from the same 1-row aggregate both sides.
 _QFA_SIGS = ["f_short", "f_lowdiv", "f_longw", "f_dupbi"]
-_QFA_PAIR = """
-SELECT '{a_name}' AS sig_a, '{b_name}' AS sig_b,
-  both_{a}_{b} AS n_both,
-  {a} - both_{a}_{b} AS n_only_a,
-  {b} - both_{a}_{b} AS n_only_b,
-  n_docs - {a} - {b} + both_{a}_{b} AS n_neither,
-  CASE WHEN (({a} * {b} + (n_docs - {a}) * (n_docs - {b}))::DOUBLE
+_QFA_PAIR = f"""
+SELECT '{{a_name}}' AS sig_a, '{{b_name}}' AS sig_b,
+  both_{{a}}_{{b}} AS n_both,
+  {{a}} - both_{{a}}_{{b}} AS n_only_a,
+  {{b}} - both_{{a}}_{{b}} AS n_only_b,
+  n_docs - {{a}} - {{b}} + both_{{a}}_{{b}} AS n_neither,
+  CASE WHEN (({{a}} * {{b}} + (n_docs - {{a}}) * (n_docs - {{b}}))::DOUBLE
              / (n_docs * n_docs)::DOUBLE) < 1.0 THEN
-    floor((((both_{a}_{b} + n_docs - {a} - {b} + both_{a}_{b})::DOUBLE
+    {half_up_sql('''(((both_{a}_{b} + n_docs - {a} - {b} + both_{a}_{b})::DOUBLE
             / n_docs::DOUBLE)
            - (({a} * {b} + (n_docs - {a}) * (n_docs - {b}))::DOUBLE
               / (n_docs * n_docs)::DOUBLE))
           / (1.0 - (({a} * {b} + (n_docs - {a}) * (n_docs - {b}))::DOUBLE
-                    / (n_docs * n_docs)::DOUBLE))
-          * 1e6 + 0.5) / 1e6
+                    / (n_docs * n_docs)::DOUBLE))''', 6)}
   END AS kappa
 FROM agg"""
 ORACLE["quality_filter_agreement"] = (
@@ -5932,9 +5942,8 @@ km2 AS (
 )
 SELECT t, d AS n_churned, c AS n_censored, n_at_risk,
   CASE WHEN min_surv = 0 THEN 0.0
-       ELSE floor(exp(sum(lnf) OVER (ORDER BY t
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-            * 1e6 + 0.5) / 1e6
+       ELSE {half_up_sql('''exp(sum(lnf) OVER (ORDER BY t
+              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))''', 6)}
   END AS survival
 FROM km2
 """
@@ -5997,7 +6006,7 @@ det AS (
 SELECT event_type, dow::BIGINT AS dow,
   count(*)::BIGINT AS n_days,
   sum(d7)::BIGINT AS sum_d7,
-  floor(sum(d7)::DOUBLE / (7.0 * count(*)) * 1e6 + 0.5) / 1e6 AS seasonal
+  {half_up_sql("sum(d7)::DOUBLE / (7.0 * count(*))", 6)} AS seasonal
 FROM det WHERE cnt7 = 7
 GROUP BY event_type, dow
 """
@@ -6090,7 +6099,7 @@ slopes AS (
 ),
 per_type AS (
   SELECT event_type, count(*)::BIGINT AS n_pairs,
-         floor(quantile_cont(s, 0.5) * 1e6 + 0.5) / 1e6 AS slope
+         {half_up_sql("quantile_cont(s, 0.5)", 6)} AS slope
   FROM slopes GROUP BY event_type
 ),
 resid AS (
@@ -6099,7 +6108,7 @@ resid AS (
   FROM daily d JOIN per_type p USING (event_type)
 )
 SELECT event_type, count(*)::BIGINT AS n_days, n_pairs, slope,
-       floor(quantile_cont(r, 0.5) * 1e6 + 0.5) / 1e6 AS intercept
+       {half_up_sql("quantile_cont(r, 0.5)", 6)} AS intercept
 FROM resid GROUP BY event_type, n_pairs, slope
 """
 
@@ -6131,10 +6140,10 @@ LIMIT 50
 # r7v: customer_entity_blocking — blocked ER candidate pairs; identical
 # Wagner-Fischer levenshtein on both engines; balance proximity on
 # exact cent-scaled BIGINTs.
-ORACLE["customer_entity_blocking"] = """
+ORACLE["customer_entity_blocking"] = f"""
 WITH c AS (
   SELECT c_custkey, c_name, c_nationkey, c_mktsegment,
-         CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_cents
+         {fixed_sql("c_acctbal", 2)} AS bal_cents
   FROM customer
 )
 SELECT a.c_nationkey::BIGINT AS nationkey, a.c_mktsegment AS mktsegment,
@@ -6151,13 +6160,12 @@ WHERE levenshtein(a.c_name, b.c_name) <= 2
 # r7v: embedding_anisotropy_audit — id-adjacent pair cosines floor-
 # rounded to e6 BEFORE binning/summation, so the histogram and the
 # BIGINT mean are order-independent and engine-identical.
-ORACLE["embedding_anisotropy_audit"] = """
+ORACLE["embedding_anisotropy_audit"] = f"""
 WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
 pairs AS (
-  SELECT CAST(floor(
-    list_dot_product(a.e, b.e)
+  SELECT {fixed_sql('''list_dot_product(a.e, b.e)
       / (sqrt(list_dot_product(a.e, a.e))
-         * sqrt(list_dot_product(b.e, b.e))) * 1e6 + 0.5) AS BIGINT)
+         * sqrt(list_dot_product(b.e, b.e)))''', 6)}
     AS cos_e6
   FROM v a JOIN v b ON b.vec_id = a.vec_id + 1
   WHERE list_dot_product(a.e, a.e) > 0 AND list_dot_product(b.e, b.e) > 0
@@ -6197,8 +6205,7 @@ df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
 n AS (SELECT count(*) AS n FROM documents),
 weighted AS (
   SELECT doc_id, term,
-    CAST(floor(tf * ln((n + 1.0) / (df + 1.0)) * 1e6 + 0.5) AS BIGINT)
-      AS w_e6
+    {fixed_sql("tf * ln((n + 1.0) / (df + 1.0))", 6)} AS w_e6
   FROM tf JOIN df USING (term) CROSS JOIN n
   WHERE df <= 200
 ),
@@ -6215,8 +6222,8 @@ dots AS (
 )
 SELECT id1, id2, n_shared_terms,
   CASE WHEN n1.norm2 > 0 AND n2.norm2 > 0
-       THEN floor(dot::DOUBLE / sqrt(n1.norm2::DOUBLE * n2.norm2::DOUBLE)
-                  * 1e6 + 0.5) / 1e6
+       THEN {half_up_sql(
+           "dot::DOUBLE / sqrt(n1.norm2::DOUBLE * n2.norm2::DOUBLE)", 6)}
   END AS cosine
 FROM dots
 JOIN norms n1 ON id1 = n1.doc_id
@@ -6277,8 +6284,8 @@ stats AS (
   FROM tf GROUP BY term HAVING sum(tf) >= 20
 )
 SELECT term, df, cf, s2,
-  floor((s2::DOUBLE * n - cf::DOUBLE * cf) / (cf::DOUBLE * n)
-        * 1e6 + 0.5) / 1e6 AS burstiness
+  {half_up_sql("(s2::DOUBLE * n - cf::DOUBLE * cf) / (cf::DOUBLE * n)", 6)}
+    AS burstiness
 FROM stats CROSS JOIN n
 ORDER BY cf DESC, term
 LIMIT 200
@@ -6426,10 +6433,10 @@ j AS (
 )
 SELECT event_type, n_days, s, var18,
   CASE WHEN var18 <= 0 THEN NULL
-       WHEN s > 0 THEN floor((s - 1)::DOUBLE
-                             / sqrt(var18::DOUBLE / 18.0) * 1e6 + 0.5) / 1e6
-       WHEN s < 0 THEN floor((s + 1)::DOUBLE
-                             / sqrt(var18::DOUBLE / 18.0) * 1e6 + 0.5) / 1e6
+       WHEN s > 0 THEN {half_up_sql(
+           "(s - 1)::DOUBLE / sqrt(var18::DOUBLE / 18.0)", 6)}
+       WHEN s < 0 THEN {half_up_sql(
+           "(s + 1)::DOUBLE / sqrt(var18::DOUBLE / 18.0)", 6)}
        ELSE 0.0 END AS z
 FROM j
 """
@@ -6481,7 +6488,7 @@ LIMIT 200
 # r7y: neyman_allocation_plan — exact BIGINT moment sums; the sqrt is
 # floor-rounded into the e6 weight BEFORE the cross-strata total so
 # every downstream number is integer.
-ORACLE["neyman_allocation_plan"] = """
+ORACLE["neyman_allocation_plan"] = f"""
 WITH per AS (
   SELECT source, count(*)::BIGINT AS n_docs,
          sum(n_chars)::BIGINT AS sx,
@@ -6490,9 +6497,8 @@ WITH per AS (
 ),
 w AS (
   SELECT source, n_docs, sx, sx2,
-    CAST(floor(n_docs * sqrt((sx2::DOUBLE * n_docs - sx::DOUBLE * sx)
-                             / (n_docs::DOUBLE * n_docs))
-               * 1e6 + 0.5) AS BIGINT) AS w_e6
+    {fixed_sql('''n_docs * sqrt((sx2::DOUBLE * n_docs - sx::DOUBLE * sx)
+                             / (n_docs::DOUBLE * n_docs))''', 6)} AS w_e6
   FROM per
 ),
 tot AS (SELECT sum(w_e6)::BIGINT AS tot_w_e6 FROM w)
@@ -6560,9 +6566,8 @@ SELECT a.source AS src_a, b.source AS src_b,
   count(*)::BIGINT AS m,
   sum((a.rk - b.rk) * (a.rk - b.rk))::BIGINT AS sum_d2,
   CASE WHEN count(*) > 1
-       THEN floor((1.0 - 6.0 * sum((a.rk - b.rk) * (a.rk - b.rk))
-                   / (count(*)::DOUBLE * (count(*) * count(*) - 1)))
-                  * 1e6 + 0.5) / 1e6
+       THEN {half_up_sql('''1.0 - 6.0 * sum((a.rk - b.rk) * (a.rk - b.rk))
+                   / (count(*)::DOUBLE * (count(*) * count(*) - 1))''', 6)}
   END AS spearman_rho
 FROM fullr a JOIN fullr b
   ON a.term = b.term AND a.source < b.source
@@ -6602,13 +6607,12 @@ runs AS (
 SELECT event_type, n1, n2, runs,
   CASE WHEN n1 = 0 OR n2 = 0 OR n1 + n2 <= 1
          OR 2 * n1 * n2 = n1 + n2 THEN NULL
-       ELSE floor(
+       ELSE {half_up_sql('''
          (CASE WHEN runs >= 2.0 * n1 * n2 / (n1 + n2) + 1.0
                THEN runs - (2.0 * n1 * n2 / (n1 + n2) + 1.0) - 0.5
                ELSE runs - (2.0 * n1 * n2 / (n1 + n2) + 1.0) + 0.5 END)
          / sqrt(2.0 * n1 * n2 * (2 * n1 * n2 - (n1 + n2))
-                / ((n1 + n2)::DOUBLE * (n1 + n2) * (n1 + n2 - 1)))
-         * 1e6 + 0.5) / 1e6
+                / ((n1 + n2)::DOUBLE * (n1 + n2) * (n1 + n2 - 1)))''', 6)}
   END AS z
 FROM runs
 """
@@ -6648,9 +6652,9 @@ SELECT cd.source, nn, c, d,
   (nn * (nn - 1) // 2)::BIGINT AS n0, tx, ty,
   CASE WHEN nn * (nn - 1) // 2 - tx <= 0
          OR nn * (nn - 1) // 2 - ty <= 0 THEN NULL
-       ELSE floor((c - d)::DOUBLE
+       ELSE {half_up_sql('''(c - d)::DOUBLE
             / sqrt((nn * (nn - 1) // 2 - tx)::DOUBLE
-                   * (nn * (nn - 1) // 2 - ty)) * 1e6 + 0.5) / 1e6
+                   * (nn * (nn - 1) // 2 - ty))''', 6)}
   END AS tau_b
 FROM cd JOIN tot USING (source) JOIN tx USING (source)
 JOIN ty USING (source)
@@ -6662,7 +6666,7 @@ JOIN ty USING (source)
 # engines... except negative DIV truncates in Spark and floors in
 # DuckDB, so pmi divides term_e6 (one engine-identical BIGINT) by n_ls
 # with explicit floor semantics via the CASE below.
-ORACLE["lang_source_mutual_info"] = """
+ORACLE["lang_source_mutual_info"] = f"""
 WITH joint AS (
   SELECT lang, source, count(*)::BIGINT AS n_ls
   FROM documents GROUP BY 1, 2
@@ -6672,8 +6676,8 @@ ms AS (SELECT source, sum(n_ls)::BIGINT AS n_s FROM joint GROUP BY source),
 tot AS (SELECT sum(n_ls)::BIGINT AS nn FROM joint),
 cells AS (
   SELECT lang, source, n_ls, n_l, n_s,
-    CAST(floor(n_ls * ln(n_ls::DOUBLE * nn / (n_l::DOUBLE * n_s))
-               * 1e6 + 0.5) AS BIGINT) AS term_e6,
+    {fixed_sql("n_ls * ln(n_ls::DOUBLE * nn / (n_l::DOUBLE * n_s))", 6)}
+      AS term_e6,
     nn
   FROM joint JOIN ml USING (lang) JOIN ms USING (source) CROSS JOIN tot
 ),
@@ -6708,8 +6712,8 @@ terms AS (
 per_from AS (
   SELECT from_type, max(n_f)::BIGINT AS n_from,
     count(*)::BIGINT AS n_distinct_to,
-    (sum(CAST(floor(n_ft * ln(n_f::DOUBLE / n_ft) * 1e6 + 0.5)
-              AS BIGINT)) // max(n_f))::BIGINT AS entropy_e6
+    (sum({fixed_sql("n_ft * ln(n_f::DOUBLE / n_ft)", 6)})
+      // max(n_f))::BIGINT AS entropy_e6
   FROM terms GROUP BY from_type
 ),
 rate AS (
@@ -6754,17 +6758,17 @@ tot AS (
 )
 SELECT p.flag, p.source, a AS n_flagged, b AS n_clean,
        (ta - a)::BIGINT AS rest_flagged, (tb - b)::BIGINT AS rest_clean,
-       floor(CASE WHEN a = 0 OR b = 0 OR ta - a = 0 OR tb - b = 0
+       {half_up_sql('''CASE WHEN a = 0 OR b = 0 OR ta - a = 0 OR tb - b = 0
                   THEN (a + 0.5) * ((tb - b) + 0.5)
                        / ((b + 0.5) * ((ta - a) + 0.5))
                   ELSE (a * (tb - b))::DOUBLE / (b * (ta - a))
-             END * 1e6 + 0.5) / 1e6 AS odds_ratio
+             END''', 6)} AS odds_ratio
 FROM per p JOIN tot t USING (flag)
 """
 
 # r8b: length_qq_drift — interpolating decile vectors on both engines;
 # differences floor-rounded 6 dp.
-ORACLE["length_qq_drift"] = """
+ORACLE["length_qq_drift"] = f"""
 WITH per_src AS (
   SELECT source, count(*)::BIGINT AS n_docs,
     quantile_cont(n_chars, [0.1, 0.2, 0.3, 0.4, 0.5,
@@ -6782,9 +6786,9 @@ exploded AS (
        LATERAL (SELECT unnest(generate_series(1, 9)) AS i) g
 )
 SELECT source, n_docs, (i * 10)::BIGINT AS pct,
-  floor(q_s * 1e6 + 0.5) / 1e6 AS q_source,
-  floor(q_c * 1e6 + 0.5) / 1e6 AS q_corpus,
-  floor((q_s - q_c) * 1e6 + 0.5) / 1e6 AS drift
+  {half_up_sql("q_s", 6)} AS q_source,
+  {half_up_sql("q_c", 6)} AS q_corpus,
+  {half_up_sql("q_s - q_c", 6)} AS drift
 FROM exploded
 """
 
@@ -6891,9 +6895,8 @@ stats AS (
 )
 SELECT r.event_type, r.d::BIGINT AS d, r.r AS residual,
   CASE WHEN m * sr2 - sr * sr <= 0 THEN NULL
-       ELSE floor((r.r * m - sr)::DOUBLE
-                  / sqrt((m * sr2 - sr * sr)::DOUBLE * m)
-                  * 1e6 + 0.5) / 1e6 END AS z,
+       ELSE {half_up_sql('''(r.r * m - sr)::DOUBLE
+                  / sqrt((m * sr2 - sr * sr)::DOUBLE * m)''', 6)} END AS z,
   CASE WHEN m * sr2 - sr * sr <= 0 THEN false
        ELSE (r.r * m - sr) * (r.r * m - sr) * m
             > 4 * (m * sr2 - sr * sr) END AS is_anomaly
@@ -6903,7 +6906,7 @@ FROM resid r JOIN stats s USING (event_type)
 # r8c: length_hill_tail_index — top-k order stats on the portable
 # (n_chars DESC, doc_id) order; per-term e6 rounding before the exact
 # sum; one inversion, 6 dp.
-ORACLE["length_hill_tail_index"] = """
+ORACLE["length_hill_tail_index"] = f"""
 WITH topk AS (
   SELECT source, n_chars, doc_id,
     row_number() OVER (PARTITION BY source
@@ -6917,15 +6920,14 @@ kth AS (
 ),
 terms AS (
   SELECT l.source, k.k_eff, k.x_k,
-    CAST(floor(ln(l.n_chars::DOUBLE / k.x_k) * 1e6 + 0.5) AS BIGINT)
-      AS t_e6
+    {fixed_sql("ln(l.n_chars::DOUBLE / k.x_k)", 6)} AS t_e6
   FROM lim l JOIN kth k USING (source)
   WHERE l.rk < k.k_eff
 )
 SELECT source, k_eff, x_k,
   sum(t_e6)::BIGINT AS sum_ln_e6, count(*)::BIGINT AS n_terms,
   CASE WHEN sum(t_e6) <= 0 THEN NULL
-       ELSE floor(count(*)::DOUBLE * 1e6 / sum(t_e6) * 1e6 + 0.5) / 1e6
+       ELSE {half_up_sql("count(*)::DOUBLE * 1e6 / sum(t_e6)", 6)}
   END AS hill_alpha
 FROM terms GROUP BY source, k_eff, x_k
 """
@@ -6989,9 +6991,8 @@ SELECT event_type, wk::BIGINT AS wk,
   sum(n_a * n_b)::BIGINT AS dot,
   sum(n_a * n_a)::BIGINT AS na,
   sum(n_b * n_b)::BIGINT AS nb,
-  floor(sum(n_a * n_b)::DOUBLE
-        / sqrt(sum(n_a * n_a)::DOUBLE * sum(n_b * n_b))
-        * 1e6 + 0.5) / 1e6 AS cosine
+  {half_up_sql('''sum(n_a * n_b)::DOUBLE
+        / sqrt(sum(n_a * n_a)::DOUBLE * sum(n_b * n_b))''', 6)} AS cosine
 FROM padded GROUP BY 1, 2
 HAVING sum(n_a * n_a) > 0 AND sum(n_b * n_b) > 0
 """
@@ -7064,7 +7065,7 @@ LIMIT 100
 
 # r8e: part_return_rate_wilson — Wilson lower bound from exact integer
 # (n, r) with z in milli-units; one sqrt, 6 dp.
-ORACLE["part_return_rate_wilson"] = """
+ORACLE["part_return_rate_wilson"] = f"""
 WITH per AS (
   SELECT l_partkey AS partkey, count(*)::BIGINT AS n,
          sum((l_returnflag = 'R')::INT)::BIGINT AS r
@@ -7072,9 +7073,9 @@ WITH per AS (
 )
 SELECT partkey, n, r,
   (r * 1000000 // n)::BIGINT AS rate_e6,
-  floor(((r + 1.96 * 1.96 / 2
+  {half_up_sql('''(r + 1.96 * 1.96 / 2
           - 1.96 * sqrt(r * (n - r)::DOUBLE / n + 1.96 * 1.96 / 4))
-         / (n + 1.96 * 1.96)) * 1e6 + 0.5) / 1e6 AS wilson_lower
+         / (n + 1.96 * 1.96)''', 6)} AS wilson_lower
 FROM per ORDER BY wilson_lower DESC, n DESC, partkey
 LIMIT 100
 """
@@ -7108,10 +7109,9 @@ ORACLE["dedup_containment_prefix"] = ORACLE["dedup_containment"]
 # arg_max-able in DuckDB; max(c) is the argmax row's c by primacy);
 # means are truncating integer division (CASE emulates Spark's DIV on
 # negative sums); emptied clusters keep the previous centroid.
-_KM_COS = ("floor(list_dot_product(q.e, {c}.cvec) / "
-           "(sqrt(list_dot_product(q.e, q.e)) * "
-           "sqrt(list_dot_product({c}.cvec, {c}.cvec))) "
-           "* 1e6 + 0.5)::BIGINT")
+_KM_COS = fixed_sql("list_dot_product(q.e, {c}.cvec) / "
+                    "(sqrt(list_dot_product(q.e, q.e)) * "
+                    "sqrt(list_dot_product({c}.cvec, {c}.cvec)))", 6)
 
 _KM_ROUND = """
 a{k} AS (
@@ -7146,7 +7146,7 @@ _KM_PREFIX = (
     f"""WITH RECURSIVE q AS (
   SELECT vec_id,
     list_transform(embedding::DOUBLE[],
-                   x -> (floor(x * 1000000.0 + 0.5)::BIGINT)::DOUBLE) AS e
+                   x -> {fixed_sql("x", 6)}::DOUBLE) AS e
   FROM embeddings
 ),
 c0 AS (
@@ -7195,7 +7195,7 @@ FROM afin GROUP BY list_id
 # documents the same keep-first-by-id contract).
 ORACLE["semdedup_ivf"] = (
     _KM_PREFIX
-    + """,
+    + f""",
 members AS MATERIALIZED (
   SELECT vec_id, list_id, e FROM afin
 ),
@@ -7206,9 +7206,9 @@ seq AS MATERIALIZED (
 ),
 sims AS MATERIALIZED (
   SELECT a.list_id, a.vec_id AS i, b.vec_id AS j,
-    floor(list_dot_product(a.e, b.e) /
+    {fixed_sql('''list_dot_product(a.e, b.e) /
           (sqrt(list_dot_product(a.e, a.e)) *
-           sqrt(list_dot_product(b.e, b.e))) * 1e6 + 0.5)::BIGINT AS c
+           sqrt(list_dot_product(b.e, b.e)))''', 6)} AS c
   FROM members a JOIN members b
     ON a.list_id = b.list_id AND b.vec_id < a.vec_id
 ),
@@ -7324,15 +7324,14 @@ FROM per
 
 # r8h: retrieval_label_precision — exact top-k by e6-rounded cosine
 # (vec_id tie-break, integer total order); hits/precisions exact.
-ORACLE["retrieval_label_precision"] = """
+ORACLE["retrieval_label_precision"] = f"""
 WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e, label FROM embeddings),
 q AS (SELECT vec_id AS qid, e AS qe, label AS qlabel FROM v WHERE vec_id < 20),
 scored AS (
   SELECT q.qid, q.qlabel, v.vec_id AS nid, v.label AS nlabel,
-    floor(list_dot_product(v.e, q.qe)
+    {fixed_sql('''list_dot_product(v.e, q.qe)
           / (sqrt(list_dot_product(v.e, v.e))
-             * sqrt(list_dot_product(q.qe, q.qe)))
-          * 1e6 + 0.5)::BIGINT AS c
+             * sqrt(list_dot_product(q.qe, q.qe)))''', 6)} AS c
   FROM v CROSS JOIN q WHERE v.vec_id <> q.qid
 ),
 ranked AS (
@@ -7353,9 +7352,9 @@ GROUP BY qid, qlabel
 """
 
 # r8h: embedding_quant_sqnr — symmetric int8 per-dim quantization;
-# explicit floor(v + 0.5) level (round() half-ties differ per engine),
-# powers e12-rounded per element then exact BIGINT sums.
-ORACLE["embedding_quant_sqnr"] = """
+# the level is fixed(v, 0); powers e12-rounded per element then exact
+# BIGINT sums.
+ORACLE["embedding_quant_sqnr"] = f"""
 WITH elems AS (
   SELECT generate_subscripts(e, 1) - 1 AS dim, unnest(e) AS x
   FROM (SELECT embedding::DOUBLE[] AS e FROM embeddings)
@@ -7363,15 +7362,15 @@ WITH elems AS (
 scales AS (SELECT dim, max(abs(x)) / 127.0 AS scale FROM elems GROUP BY 1),
 dq AS (
   SELECT elems.dim,
-    floor(x * x * 1e12 + 0.5)::BIGINT AS sig_e12,
-    floor((x - CASE WHEN scale > 0
-                THEN greatest(-127.0, least(127.0, floor(x / scale + 0.5)))
+    {fixed_sql("x * x", 12)} AS sig_e12,
+    {fixed_sql(f'''(x - CASE WHEN scale > 0
+                THEN greatest(-127.0, least(127.0, {fixed_sql("x / scale", 0)}))
                      * scale
                 ELSE 0.0 END)
           * (x - CASE WHEN scale > 0
-                THEN greatest(-127.0, least(127.0, floor(x / scale + 0.5)))
+                THEN greatest(-127.0, least(127.0, {fixed_sql("x / scale", 0)}))
                      * scale
-                ELSE 0.0 END) * 1e12 + 0.5)::BIGINT AS noise_e12
+                ELSE 0.0 END)''', 12)} AS noise_e12
   FROM elems JOIN scales USING (dim)
 )
 SELECT dim::BIGINT AS dim, count(*)::BIGINT AS n,
@@ -7512,8 +7511,8 @@ agg AS (
 )
 SELECT (m2 // 2)::BIGINT AS n_edges, sx, sxx, sxy,
   CASE WHEN m2 * sxx - sx * sx > 0
-       THEN floor((m2 * sxy - sx * sx)::DOUBLE
-                  / (m2 * sxx - sx * sx) * 1e6 + 0.5) / 1e6
+       THEN {half_up_sql(
+           "(m2 * sxy - sx * sx)::DOUBLE / (m2 * sxx - sx * sx)", 6)}
   END AS assortativity
 FROM agg
 """
@@ -7644,10 +7643,10 @@ FROM marked GROUP BY 1, 2
 # truncating micro-units clamped to [1, 999999]; each weight is one ln
 # of exact-integer ratios floor-rounded to micro-nats (the
 # lang_source_mutual_info convention).
-ORACLE["fellegi_sunter_weights"] = """
+ORACLE["fellegi_sunter_weights"] = f"""
 WITH cust AS (
   SELECT c_custkey, c_name, c_nationkey, c_mktsegment,
-         floor(c_acctbal * 100 + 0.5)::BIGINT AS bal_cents
+         {fixed_sql("c_acctbal", 2)} AS bal_cents
   FROM customer
 ),
 pairs AS (
@@ -7687,9 +7686,9 @@ probs AS (
   FROM agg
 )
 SELECT field, n_m, n_u, agree_m, agree_u, m_e6, u_e6,
-  floor(ln(m_e6::DOUBLE / u_e6) * 1e6 + 0.5)::BIGINT AS w_agree_e6,
-  floor(ln((1000000 - m_e6)::DOUBLE / (1000000 - u_e6)) * 1e6 + 0.5)
-    ::BIGINT AS w_disagree_e6
+  {fixed_sql("ln(m_e6::DOUBLE / u_e6)", 6)} AS w_agree_e6,
+  {fixed_sql("ln((1000000 - m_e6)::DOUBLE / (1000000 - u_e6))", 6)}
+    AS w_disagree_e6
 FROM probs
 """
 
@@ -7917,11 +7916,11 @@ FROM est JOIN wd ON est.day = wd.day JOIN exact ON est.day = exact.day
 # customer_entity_blocking base), their exact connected components
 # (the recursive reach CTE; cluster = least reachable custkey), then the
 # survivorship rules as one rank window + one rollup.
-ORACLE["er_survivorship_golden"] = """
+ORACLE["er_survivorship_golden"] = f"""
 WITH RECURSIVE
 c AS (
   SELECT c_custkey, c_name, c_nationkey, c_mktsegment,
-         CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_cents
+         {fixed_sql("c_acctbal", 2)} AS bal_cents
   FROM customer
 ),
 p AS MATERIALIZED (
@@ -8083,7 +8082,7 @@ FROM eff CROSS JOIN tot
 # r8p: psi_source_drift — exact counts-of-counts decile edges
 # (ceil(j*N/nb) landing in (cum-cx, cum]), add-one smoothed shares,
 # per-cell e6-rounded PSI terms summed as integers.
-ORACLE["psi_source_drift"] = """
+ORACLE["psi_source_drift"] = f"""
 WITH sv AS (
   SELECT source, n_chars AS x, count(*)::BIGINT AS c
   FROM documents GROUP BY 1, 2
@@ -8122,11 +8121,10 @@ grid AS (
 ),
 terms AS (
   SELECT source, n_src,
-    floor((((n_sb + 1)::DOUBLE / (n_src + 10)::DOUBLE
+    {fixed_sql('''((n_sb + 1)::DOUBLE / (n_src + 10)::DOUBLE
             - (n_rb + 1)::DOUBLE / (n_all + 10)::DOUBLE)
            * ln(((n_sb + 1)::DOUBLE / (n_src + 10)::DOUBLE)
-                / ((n_rb + 1)::DOUBLE / (n_all + 10)::DOUBLE)))
-          * 1e6 + 0.5)::BIGINT AS t_e6
+                / ((n_rb + 1)::DOUBLE / (n_all + 10)::DOUBLE))''', 6)} AS t_e6
   FROM grid
 )
 SELECT source, n_src AS n_docs, sum(t_e6)::BIGINT AS psi_e6,
@@ -8256,7 +8254,7 @@ FROM rows_out
 ORACLE["ab_cuped_adjustment"] = f"""
 WITH base AS (
   SELECT user_id, epoch_us(ts) // 86400000000 AS day,
-    round(value * 1e6)::BIGINT AS v
+    {fixed_sql("value", 6)} AS v
   FROM events
 ),
 d0 AS (SELECT min(day) AS d0 FROM base),
@@ -8290,19 +8288,18 @@ stats AS (
   FROM arms CROSS JOIN pooled
 )
 SELECT arm, n_users,
-  floor(sy_a::DOUBLE / n_users::DOUBLE + 0.5)::BIGINT AS mean_y_e6,
-  floor(sy_a::DOUBLE / n_users::DOUBLE
+  {fixed_sql("sy_a::DOUBLE / n_users::DOUBLE", 0)} AS mean_y_e6,
+  {fixed_sql('''sy_a::DOUBLE / n_users::DOUBLE
         - (CASE WHEN var_xn = 0 THEN 0.0
                 ELSE cov_n::DOUBLE / var_xn::DOUBLE END)
-          * (sx_a::DOUBLE / n_users::DOUBLE - sx::DOUBLE / n::DOUBLE)
-        + 0.5)::BIGINT AS mean_y_cuped_e6,
-  floor((CASE WHEN var_xn = 0 THEN 0.0
-              ELSE cov_n::DOUBLE / var_xn::DOUBLE END) * 1e6
-        + 0.5)::BIGINT AS theta_e6,
-  floor((CASE WHEN var_xn = 0 OR var_yn = 0 THEN 0.0
+          * (sx_a::DOUBLE / n_users::DOUBLE - sx::DOUBLE / n::DOUBLE)''', 0)}
+    AS mean_y_cuped_e6,
+  {fixed_sql('''CASE WHEN var_xn = 0 THEN 0.0
+              ELSE cov_n::DOUBLE / var_xn::DOUBLE END''', 6)} AS theta_e6,
+  {fixed_sql('''CASE WHEN var_xn = 0 OR var_yn = 0 THEN 0.0
               ELSE (cov_n::DOUBLE * cov_n::DOUBLE)
-                   / (var_xn::DOUBLE * var_yn::DOUBLE) END) * 1e6
-        + 0.5)::BIGINT AS var_reduction_e6
+                   / (var_xn::DOUBLE * var_yn::DOUBLE) END''', 6)}
+    AS var_reduction_e6
 FROM stats
 """
 
@@ -8389,7 +8386,7 @@ FROM fin
 # exact integer min-plus: forward recursion with from-pointers and the
 # backtrace, each a lockstep recursive CTE over the per-type step
 # index; <= ties prefer the baseline state, matching Spark.
-ORACLE["events_burst_kleinberg"] = """
+ORACLE["events_burst_kleinberg"] = f"""
 WITH RECURSIVE
 counts AS (
   SELECT event_type, epoch_us(ts) // 86400000000 AS d,
@@ -8410,16 +8407,16 @@ grid AS (
 ),
 costed AS (
   SELECT event_type, d, r, n,
-    floor(-(r::DOUBLE * ln(least(rr::DOUBLE / dd::DOUBLE, 0.98))
+    {fixed_sql('''-(r::DOUBLE * ln(least(rr::DOUBLE / dd::DOUBLE, 0.98))
             + (n - r)::DOUBLE
-              * ln(1.0 - (least(rr::DOUBLE / dd::DOUBLE, 0.98))))
-          * 1000000 + 0.5)::BIGINT AS c0s,
-    floor(-(r::DOUBLE * ln(least(2.0 * (least(rr::DOUBLE / dd::DOUBLE,
+              * ln(1.0 - (least(rr::DOUBLE / dd::DOUBLE, 0.98))))''', 6)}
+      AS c0s,
+    {fixed_sql('''-(r::DOUBLE * ln(least(2.0 * (least(rr::DOUBLE / dd::DOUBLE,
                                               0.98)), 0.99))
             + (n - r)::DOUBLE
               * ln(1.0 - (least(2.0 * (least(rr::DOUBLE / dd::DOUBLE,
-                                             0.98)), 0.99))))
-          * 1000000 + 0.5)::BIGINT AS c1s
+                                             0.98)), 0.99))))''', 6)}
+      AS c1s
   FROM grid
 ),
 steps AS MATERIALIZED (
@@ -8430,7 +8427,7 @@ steps AS MATERIALIZED (
 ),
 taus AS (
   SELECT event_type,
-    floor(ln(max(t_days)::DOUBLE) * 1000000 + 0.5)::BIGINT AS tau,
+    {fixed_sql("ln(max(t_days)::DOUBLE)", 6)} AS tau,
     max(t_days)::BIGINT AS mk
   FROM steps GROUP BY event_type
 ),
@@ -8535,7 +8532,7 @@ def _jl_sql() -> str:
 WITH v AS (
   SELECT vec_id,
     list_transform(embedding,
-      x -> floor(x::DOUBLE * 1000000 + 0.5)::BIGINT) AS qe
+      x -> {fixed_sql("x::DOUBLE", 6)}) AS qe
   FROM embeddings
 ),
 comp AS (
@@ -8594,7 +8591,7 @@ WITH counts AS (
 ),
 weighted AS (
   SELECT tk, c,
-    floor(sqrt(sqrt(c::DOUBLE * c * c)) * 1000000 + 0.5)::BIGINT AS w
+    {fixed_sql("sqrt(sqrt(c::DOUBLE * c * c))", 6)} AS w
   FROM counts
 ),
 tot AS (SELECT sum(w::HUGEINT) AS tw FROM weighted),

@@ -8,9 +8,17 @@ determinism — plus chunking edge semantics.
 
 from __future__ import annotations
 
+import hashlib
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from hadoop_mapreduce_spark.operators import curation
+from hadoop_mapreduce_spark.operators.curation import (
+    isotonic_calibration_pav,
+    kfold_strata_audit,
+)
+from hadoop_mapreduce_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
 
 
@@ -757,3 +765,65 @@ def test_quality_decile_lift_top_decile_concentration(spark, tmp_path):
     assert d0.recall_e6 == 1_000_000
     assert d0.lift_e6 == 10_000_000
     assert out[9].n_pos == 0 and out[9].lift_e6 == 1_000_000
+
+
+def test_kfold_chisq_exact_replay_and_zero_fold_materialisation(spark):
+    rows = kfold_strata_audit(spark, SF_DIR).collect()
+    docs = load_table(spark, SF_DIR, "documents").select(
+        "doc_id", "lang", "source").collect()
+    folds: dict[tuple, Counter] = {}
+    for d in docs:
+        f = int(hashlib.md5(str(d.doc_id).encode()).hexdigest()[:15],
+                16) % 5
+        folds.setdefault((d.lang, d.source), Counter())[f] += 1
+    assert {(r.lang, r.source) for r in rows} == set(folds)
+    for r in rows:
+        cnt = folds[(r.lang, r.source)]
+        per = [cnt.get(f, 0) for f in range(5)]
+        n_s = sum(per)
+        assert r.n_docs == n_s
+        assert r.min_fold_n == min(per)  # zero folds must surface
+        assert r.max_fold_n == max(per)
+        chisq = sum((5 * c - n_s) ** 2 for c in per) * 1_000_000 \
+            // (5 * n_s)
+        assert r.chisq_e6 == chisq
+    # fixture strata are small, so at least one stratum MUST show an
+    # empty fold — the grid materialisation is what reveals it
+    assert any(r.min_fold_n == 0 for r in rows)
+
+
+def test_pav_monotone_and_matches_sequential_pav(spark):
+    rows = isotonic_calibration_pav(spark, SF_DIR).collect()
+    assert rows == sorted(rows, key=lambda r: r.bin)
+    # fitted rates are non-decreasing — the defining isotonic property
+    iso = [r.iso_rate_e6 for r in rows]
+    assert iso == sorted(iso)
+    # classical sequential PAV on the same e6-rounded pooled means
+    # (pool = weighted merge; compare at interval-mean granularity)
+    blocks = [[r.bin, r.n_docs, r.n_pos] for r in rows]
+    merged = []
+    for b in blocks:
+        merged.append(list(b))
+        while len(merged) >= 2:
+            (b1, n1, p1), (b2, n2, p2) = merged[-2], merged[-1]
+            if p1 * 1_000_000 // n1 > p2 * 1_000_000 // n2:
+                merged[-2:] = [[b1, n1 + n2, p1 + p2]]
+            else:
+                break
+    got = {r.bin: r.iso_rate_e6 for r in rows}
+    # expand pooled blocks in order over the row sequence: every
+    # original bin inside a block gets the block's pooled mean
+    i = 0
+    for b0, n, p in merged:
+        val = p * 1_000_000 // n
+        remaining = n
+        while remaining > 0:
+            r = rows[i]
+            assert got[r.bin] == val
+            remaining -= r.n_docs
+            i += 1
+    assert i == len(rows)
+    # corrections are consistent
+    for r in rows:
+        assert r.correction_e6 == abs(
+            r.n_pos * 1_000_000 // r.n_docs - r.iso_rate_e6)

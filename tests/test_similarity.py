@@ -8,9 +8,14 @@ import math
 from pyspark.sql import functions as F
 
 from hadoop_mapreduce_spark.operators.similarity import (
+    JL_D,
+    JL_K,
+    JL_SIGNS,
     cosine_topk,
+    embedding_jl_distortion_audit,
     ivf_assign,
 )
+from hadoop_mapreduce_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
 
 
@@ -77,3 +82,24 @@ def test_ivf_recall_reasonable(spark):
     approx = {(r.qid, r.nid) for r in ann_ivf_topk(spark, SF_DIR).collect()}
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.5, f"IVF recall {recall} suspiciously low"
+
+
+def test_jl_distortion_concentrates_near_one(spark):
+    rows = embedding_jl_distortion_audit(spark, SF_DIR).collect()
+    n_vec = load_table(spark, SF_DIR, "embeddings").count()
+    total = sum(r.n_pairs for r in rows)
+    # one pair per adjacent id (minus any zero-distance pairs)
+    assert total <= n_vec - 1
+    assert total >= (n_vec - 1) * 9 // 10
+    # sign matrix is the documented shape and ±1-valued
+    assert len(JL_SIGNS) == JL_K and all(
+        len(r) == JL_D and set(r) <= {-1, 1} for r in JL_SIGNS)
+    # E[ratio] = 1: the pair-weighted mean of bin means must sit near
+    # 1e6 (k=16 => sd of the ratio ~ sqrt(2/k) ~ 0.35; the mean over
+    # ~100+ pairs concentrates much tighter)
+    mean = sum(r.n_pairs * r.mean_ratio_e6 for r in rows) / total
+    assert 700_000 < mean < 1_300_000
+    # the central bins must hold the bulk of the mass (JL concentration)
+    central = sum(r.n_pairs for r in rows if 2 <= r.bin <= 4)
+    extreme = sum(r.n_pairs for r in rows if r.bin in (0, 6))
+    assert central > extreme

@@ -9,7 +9,10 @@ Expression ids, plan ids, RDD ids, lambda-variable suffixes
 they count up with session history, so without them two dumps of the
 same query from two commits are identical exactly when the plans are,
 and the plan-identity check of a refactor is a ``diff`` of the two
-files. One history effect is left: the attribute order of Expand and
+files. The session runs with AQE off, as bench.py runs fixtures: a
+builder that caches a relation plans it when the query is built, and
+under AQE that cached plan is adaptive and changes from run to run.
+One history effect is left: the attribute order of Expand and
 aggregate keys can still differ with what the session built before, so
 a query that differs in a many-query dump should be dumped again alone
 in a fresh session before its plan is called changed.
@@ -53,7 +56,8 @@ def main() -> None:
     from hadoop_mapreduce_spark.plans.explain import static_plan_text
     from hadoop_mapreduce_spark.registry import QUERIES
 
-    spark = get_spark("plan-dump", shuffle_partitions=32)
+    spark = get_spark("plan-dump", shuffle_partitions=32,
+                      extra_conf={"spark.sql.adaptive.enabled": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     with open(out, "w") as f:
         f.write("# Formatted Catalyst plans (generated by "
